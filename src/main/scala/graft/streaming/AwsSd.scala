@@ -1,7 +1,8 @@
 package graft.streaming
 
-/** Shared plumbing for the AWS service-discovery family (ECS / RDS / MSK /
-  * ElastiCache; EC2 and Lightsail predate this file and keep their own).
+/** Shared plumbing for the AWS service-discovery family (EC2 / Lightsail /
+  * ECS / RDS / MSK / ElastiCache): endpoints, credentials and the signed
+  * POST over [[SdHttp]].
   *
   * Region resolution is DEFERRED from config parse to provider init (ref:
   * discovery/aws/aws.go loadRegion + the reference's #19037 fix): a
@@ -22,6 +23,17 @@ object AwsSd {
       .orElse(env.get("AWS_DEFAULT_REGION").filter(_.nonEmpty))
       .getOrElse(throw new IllegalStateException(
         "could not determine AWS region: not in config or environment"))
+
+  /** (signing host, base URL) of an AWS API: `endpoint` overrides the
+    * regional host */
+  def endpointOf(endpoint: String, regionalHost: String): (String, String) =
+    if (endpoint.nonEmpty) (java.net.URI.create(endpoint).getHost, endpoint.stripSuffix("/"))
+    else (regionalHost, s"https://$regionalHost")
+
+  /** one SigV4-signed POST to `base`/ over the shared SD transport; AWS
+    * answers XML or its own JSON types, so no Accept header is sent */
+  def post(sd: String, base: String, body: String, signed: Map[String, String]): String =
+    SdHttp.post(sd, base + "/", body, signed, accept = "")
 
   // ---------------------------------------------------------- credentials
   // The reference's credential chain (ref discovery/aws/ec2.go:250-276):
@@ -102,27 +114,10 @@ object AwsSd {
   /** production STS client (regional endpoint, Query protocol) */
   final class HttpStsApi(region: String, base: CredsProvider,
       endpoint: String = "") extends StsApi {
-    private val host =
-      if (endpoint.nonEmpty) java.net.URI.create(endpoint).getHost
-      else s"sts.$region.amazonaws.com"
-    private val baseUrl =
-      if (endpoint.nonEmpty) endpoint.stripSuffix("/") else s"https://$host"
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def assumeRole(form: String): String = {
-      val hdrs = Ec2Sd.SigV4.headers(base.creds(), region, "sts", host, form,
-        java.time.Instant.now())
-      val b = java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create(baseUrl + "/"))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(form))
-      hdrs.foreach { case (k, v) => b.header(k, v) }
-      val resp = client.send(b.build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"sts assume-role: status ${resp.statusCode()}")
-      resp.body()
-    }
+    private val (host, baseUrl) = endpointOf(endpoint, s"sts.$region.amazonaws.com")
+    override def assumeRole(form: String): String =
+      post("sts", baseUrl, form, Ec2Sd.SigV4.headers(base.creds(), region, "sts",
+        host, form, java.time.Instant.now()))
   }
 
   /** AssumeRole with an expiry-refreshed cache: one STS call serves every
@@ -223,33 +218,6 @@ object AwsSd {
       }
       all.result()
     }.getOrElse(Nil)
-
-  // ----------------------------------------------------------------- JSON
-
-  /** Map accessor helpers over graft.web.JsonLite trees (ECS and MSK are
-    * JSON APIs). */
-  def jObj(v: Any): Map[String, Any] = v match {
-    case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-    case _ => Map.empty
-  }
-  def jArr(v: Any, k: String): Seq[Map[String, Any]] = jObj(v).get(k) match {
-    case Some(l: List[_]) => l.map(jObj)
-    case _ => Nil
-  }
-  def jStrArr(v: Any, k: String): Seq[String] = jObj(v).get(k) match {
-    case Some(l: List[_]) => l.collect { case s: String => s }
-    case _ => Nil
-  }
-  def jStr(m: Map[String, Any], k: String): String = m.get(k) match {
-    case Some(s: String) => s
-    case Some(d: Double) =>
-      if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
-      else d.toString
-    case Some(b: Boolean) => b.toString
-    case _ => ""
-  }
-  def jOptStr(m: Map[String, Any], k: String): Option[String] =
-    m.get(k).collect { case s: String => s }
 
   /** ISO timestamp → the reference's RFC3339 rendering (seconds precision,
     * Z offset — ref rds.go/elasticache.go `Format(time.RFC3339)`) */

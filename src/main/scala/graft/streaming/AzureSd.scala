@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.web.JsonLite
+import graft.web.{AzureAd, JsonLite}
+import SdJson._
 
 /** Azure service discovery (ref: discovery/azure/azure.go).
   *
@@ -30,52 +31,19 @@ object AzureSd {
     * return the JSON body */
   trait ApiClient { def get(path: String): String }
 
-  final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    @volatile private var token: (String, Long) = ("", 0L)
-    private def bearer(): String = {
-      if (token._2 > System.currentTimeMillis() + 60000L) return token._1
-      val body = s"grant_type=client_credentials&client_id=${cfg.clientId}" +
-        s"&client_secret=${java.net.URLEncoder.encode(cfg.clientSecret, "UTF-8")}" +
-        "&resource=" + java.net.URLEncoder.encode("https://management.azure.com/", "UTF-8")
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
-            s"https://login.microsoftonline.com/${cfg.tenantId}/oauth2/token"))
-          .header("Content-Type", "application/x-www-form-urlencoded")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      val m = JsonLite.parse(resp.body()) match {
-        case x: Map[_, _] => x.asInstanceOf[Map[String, Any]]
-        case _ => Map.empty[String, Any]
-      }
-      val t = String.valueOf(m.getOrElse("access_token", ""))
-      token = (t, System.currentTimeMillis() + 3000 * 1000L)
-      t
-    }
-    override def get(path: String): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
-            "https://management.azure.com" + path))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Authorization", "Bearer " + bearer())
-          .header("Accept", "application/json").GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"azure sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+  /** ARM over the shared SD transport; the client-credentials token comes
+    * from [[graft.web.AzureAd.TokenProvider]], which checks the token
+    * endpoint's status and caches until 5 minutes before `expires_in`.
+    * `authorityOverride`/`armBase` point both at fake endpoints in tests. */
+  final class HttpApiClient(cfg: Config, authorityOverride: Option[String] = None,
+      armBase: String = "https://management.azure.com") extends ApiClient {
+    private val tokens = new AzureAd.TokenProvider(AzureAd.Config(
+      scope = "https://management.azure.com/.default",
+      oauth = Some(AzureAd.OAuth(cfg.clientId, cfg.clientSecret, cfg.tenantId))),
+      authorityOverride, client = SdHttp.client)
+    override def get(path: String): String =
+      SdHttp.get("azure", armBase + path, SdHttp.bearer(tokens.token()))
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s; case null => ""; case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
 
   /** resource group from an ARM id:
     * /subscriptions/x/resourceGroups/RG/providers/... */
@@ -102,9 +70,9 @@ object AzureSd {
         "/providers/Microsoft.Compute/virtualMachines?api-version=2023-03-01"
       val out = List.newBuilder[J]
       while (path.nonEmpty) {
-        val page = jmap(JsonLite.parse(client.get(path)))
-        out ++= jlist(page.getOrElse("value", null))
-        val next = s(page, "nextLink")
+        val page = map(JsonLite.parse(client.get(path)))
+        out ++= list(page, "value")
+        val next = str(page, "nextLink")
         path = if (next.isEmpty) ""
           else next.stripPrefix("https://management.azure.com")
       }
@@ -113,39 +81,39 @@ object AzureSd {
 
     override def refresh(): Seq[Discovery.TargetGroup] = {
       val targets = listVMs().flatMap { vm =>
-        val id = s(vm, "id"); val props = m(vm, "properties")
-        val osProfile = m(props, "osProfile")
-        val osType = s(m(m(props, "storageProfile"), "osDisk"), "osType")
+        val id = str(vm, "id"); val props = map(vm, "properties")
+        val osProfile = map(props, "osProfile")
+        val osType = str(map(map(props, "storageProfile"), "osDisk"), "osType")
         var l = Map(
           "__meta_azure_subscription_id" -> cfg.subscriptionId,
           "__meta_azure_tenant_id" -> cfg.tenantId,
           "__meta_azure_machine_id" -> id,
-          "__meta_azure_machine_name" -> s(vm, "name"),
-          "__meta_azure_machine_computer_name" -> s(osProfile, "computerName"),
+          "__meta_azure_machine_name" -> str(vm, "name"),
+          "__meta_azure_machine_computer_name" -> str(osProfile, "computerName"),
           "__meta_azure_machine_os_type" -> osType,
-          "__meta_azure_machine_location" -> s(vm, "location"),
+          "__meta_azure_machine_location" -> str(vm, "location"),
           "__meta_azure_machine_resource_group" -> resourceGroupOf(id),
-          "__meta_azure_machine_size" -> s(m(props, "hardwareProfile"), "vmSize"))
-        jmap(vm.getOrElse("tags", null)).foreach { case (k, v) =>
-          l += "__meta_azure_machine_tag_" + KubernetesSd.sanitize(k) -> jstr(v) }
+          "__meta_azure_machine_size" -> str(map(props, "hardwareProfile"), "vmSize"))
+        map(vm, "tags").foreach { case (k, v) =>
+          l += "__meta_azure_machine_tag_" + KubernetesSd.sanitize(k) -> str(v) }
         // primary NIC → private (address) + optional public IP
-        val nics = jlist(m(props, "networkProfile").getOrElse("networkInterfaces", null))
+        val nics = list(map(props, "networkProfile"), "networkInterfaces")
         val resolved = nics.flatMap { n =>
-          val nid = s(n, "id")
+          val nid = str(n, "id")
           if (nid.isEmpty) None
-          else try Some(jmap(JsonLite.parse(
+          else try Some(map(JsonLite.parse(
             client.get(nid + "?api-version=2023-04-01"))))
           catch { case _: Exception => None }
         }
         val primary = resolved.find(n =>
-          m(n, "properties").getOrElse("primary", null) == java.lang.Boolean.TRUE)
+          bool(map(n, "properties"), "primary"))
           .orElse(resolved.headOption)
         primary.flatMap { nic =>
-          val ipcs = jlist(m(nic, "properties").getOrElse("ipConfigurations", null))
-          val priv = ipcs.map(c => s(m(c, "properties"), "privateIPAddress"))
+          val ipcs = list(map(nic, "properties"), "ipConfigurations")
+          val priv = ipcs.map(c => str(map(c, "properties"), "privateIPAddress"))
             .find(_.nonEmpty)
           val pub = ipcs.map(c =>
-            s(m(m(m(c, "properties"), "publicIPAddress"), "properties"), "ipAddress"))
+            str(map(map(map(c, "properties"), "publicIPAddress"), "properties"), "ipAddress"))
             .find(_.nonEmpty)
           priv.map { ip =>
             pub.foreach(p => l += "__meta_azure_machine_public_ip" -> p)

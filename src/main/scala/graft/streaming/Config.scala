@@ -441,6 +441,15 @@ object Config {
   private def str(n: YMap, k: String, dflt: String = ""): String =
     n.str(k).filter(_.nonEmpty).getOrElse(dflt)
 
+  /** an SD config's (token, token file): `authorization.credentials[_file]`,
+    * else the legacy `bearer_token[_file]` unless `legacy` is off */
+  private def sdToken(n: YMap, legacy: Boolean = true): (String, String) =
+    n.get("authorization") match {
+      case Some(am: YMap) => (str(am, "credentials"), str(am, "credentials_file"))
+      case _ if legacy => (str(n, "bearer_token"), str(n, "bearer_token_file"))
+      case _ => ("", "")
+    }
+
   private def kv(n: Option[YNode]): Map[String, String] = n match {
     case Some(m: YMap) => m.entries.collect { case (k, YScalar(v)) => k -> v }.toMap
     case _ => Map.empty
@@ -543,34 +552,9 @@ object Config {
       // scrape_timeout: per-job, else global, else the reference default 10s
       val timeoutMs = m.str("scrape_timeout").orElse(global.str("scrape_timeout"))
         .map(durMs).getOrElse(10000L)
-      def fileOrInline(inline: String, file: String): String =
-        if (inline.nonEmpty) inline
-        else if (file.nonEmpty)
-          try new String(java.nio.file.Files.readAllBytes(
-            jobBase.resolve(file)), "UTF-8").trim
-          catch { case _: Exception => "" }
-        else ""
       // rendered Authorization header (ref: common HTTPClientConfig —
       // exactly one of basic_auth / authorization / bearer_token*)
-      val authHeader: Option[String] = (m.get("basic_auth") match {
-        case Some(ba: YMap) =>
-          val user = str(ba, "username")
-          val pass = fileOrInline(str(ba, "password"), str(ba, "password_file"))
-          if (user.nonEmpty || pass.nonEmpty)
-            Some("Basic " + java.util.Base64.getEncoder.encodeToString(
-              s"$user:$pass".getBytes("UTF-8")))
-          else None
-        case _ => None
-      }).orElse(m.get("authorization") match {
-        case Some(az: YMap) =>
-          val typ = { val t = str(az, "type"); if (t.nonEmpty) t else "Bearer" }
-          val cred = fileOrInline(str(az, "credentials"), str(az, "credentials_file"))
-          if (cred.nonEmpty) Some(s"$typ $cred") else None
-        case _ => None
-      }).orElse {
-        val tok = fileOrInline(str(m, "bearer_token"), str(m, "bearer_token_file"))
-        if (tok.nonEmpty) Some(s"Bearer $tok") else None
-      }
+      val authHeader = authHeaderOf(m, jobBase)
       val statics = m.list("static_configs").collect { case sc: YMap =>
         val lbls = kv(sc.get("labels"))
         strList(sc.get("targets")).map(addr =>
@@ -602,10 +586,7 @@ object Config {
             (strList(nm.get("names")), nm.str("own_namespace").contains("true"))
           case _ => (Nil, false)
         }
-        val tokenFile = kc.get("authorization") match {
-          case Some(am: YMap) => str(am, "credentials_file")
-          case _ => str(kc, "bearer_token_file")
-        }
+        val tokenFile = sdToken(kc)._2
         val selectors = kc.list("selectors").collect { case sm: YMap =>
           KubernetesSd.Selector(str(sm, "role"), str(sm, "label"), str(sm, "field"))
         }
@@ -746,14 +727,7 @@ object Config {
       // digitalocean_sd_configs (ref: discovery/digitalocean/digitalocean.go
       // SDConfig; defaults role droplets, port 80, refresh 60s)
       val doSd = m.list("digitalocean_sd_configs").collect { case oc: YMap =>
-        val tokenFile = oc.get("authorization") match {
-          case Some(am: YMap) => str(am, "credentials_file")
-          case _ => str(oc, "bearer_token_file")
-        }
-        val tok = oc.get("authorization") match {
-          case Some(am: YMap) => str(am, "credentials")
-          case _ => str(oc, "bearer_token")
-        }
+        val (tok, tokenFile) = sdToken(oc)
         DigitalOceanSd.Config(
           str(oc, "role", "droplets"), tok, tokenFile,
           oc.str("port").map(_.toInt).getOrElse(80),
@@ -765,10 +739,7 @@ object Config {
           case Some(ba: YMap) => (str(ba, "username"), str(ba, "password"))
           case _ => ("", "")
         }
-        val (tok, tokFile) = hz.get("authorization") match {
-          case Some(am: YMap) => (str(am, "credentials"), str(am, "credentials_file"))
-          case _ => (str(hz, "bearer_token"), str(hz, "bearer_token_file"))
-        }
+        val (tok, tokFile) = sdToken(hz)
         HetznerSd.Config(str(hz, "role"), tok, tokFile, user, pass,
           hz.str("port").map(_.toInt).getOrElse(80),
           str(hz, "label_selector"),
@@ -820,13 +791,9 @@ object Config {
           pc.str("port").map(_.toInt).getOrElse(80),
           pc.str("refresh_interval").map(durMs).getOrElse(60000L))
       }.filter(c => c.url.nonEmpty && c.query.nonEmpty)
-      def authToken(n: YMap): (String, String) = n.get("authorization") match {
-        case Some(am: YMap) => (str(am, "credentials"), str(am, "credentials_file"))
-        case _ => (str(n, "bearer_token"), str(n, "bearer_token_file"))
-      }
       // linode_sd_configs (ref: discovery/linode/linode.go SDConfig)
       val linodeSd = m.list("linode_sd_configs").collect { case lc: YMap =>
-        val (tok, tokFile) = authToken(lc)
+        val (tok, tokFile) = sdToken(lc)
         LinodeSd.Config(tok, tokFile, str(lc, "region"),
           lc.str("port").map(_.toInt).getOrElse(80),
           str(lc, "tag_separator", ","),
@@ -834,7 +801,7 @@ object Config {
       }
       // vultr_sd_configs (ref: discovery/vultr/vultr.go SDConfig)
       val vultrSd = m.list("vultr_sd_configs").collect { case vc: YMap =>
-        val (tok, tokFile) = authToken(vc)
+        val (tok, tokFile) = sdToken(vc)
         VultrSd.Config(tok, tokFile,
           vc.str("port").map(_.toInt).getOrElse(80),
           vc.str("refresh_interval").map(durMs).getOrElse(60000L))
@@ -888,10 +855,7 @@ object Config {
       }.filter(_.service.nonEmpty)
       // ionos_sd_configs (ref: discovery/ionos/ionos.go SDConfig)
       val ionosSd = m.list("ionos_sd_configs").collect { case ic: YMap =>
-        val tok = ic.get("authorization") match {
-          case Some(am: YMap) => str(am, "credentials")
-          case _ => ""
-        }
+        val tok = sdToken(ic, legacy = false)._1
         val (user, pass) = ic.get("basic_auth") match {
           case Some(ba: YMap) => (str(ba, "username"), str(ba, "password"))
           case _ => ("", "")
@@ -902,10 +866,7 @@ object Config {
       }.filter(_.datacenterId.nonEmpty)
       // stackit_sd_configs (ref: discovery/stackit/stackit.go SDConfig)
       val stackitSd = m.list("stackit_sd_configs").collect { case sk: YMap =>
-        val tok = sk.get("authorization") match {
-          case Some(am: YMap) => str(am, "credentials")
-          case _ => ""
-        }
+        val tok = sdToken(sk, legacy = false)._1
         StackitSd.Config(str(sk, "project"), str(sk, "region"),
           str(sk, "endpoint"), tok,
           sk.str("port").map(_.toInt).getOrElse(80),

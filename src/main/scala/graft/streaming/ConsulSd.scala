@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Consul service discovery (ref: discovery/consul/consul.go).
   *
@@ -47,40 +48,15 @@ object ConsulSd {
   trait ApiClient { def get(path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def get(path: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create(s"${cfg.scheme}://${cfg.server}$path"))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      if (cfg.token.nonEmpty) b.header("X-Consul-Token", cfg.token)
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"consul sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String =
+      SdHttp.get("consul", s"${cfg.scheme}://${cfg.server}$path",
+        if (cfg.token.nonEmpty) Seq("X-Consul-Token" -> cfg.token) else Nil)
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
-  private def l(o: J, k: String): List[J] =
-    (o.getOrElse(k, null) match { case xs: List[_] => xs; case _ => Nil }).map(jmap)
 
   /** ref: consul api AggregatedStatus — any maintenance/critical → critical,
     * else any warning → warning, else passing */
   private def aggregatedStatus(checks: List[J]): String = {
-    val statuses = checks.map(c => s(c, "Status"))
+    val statuses = checks.map(c => str(c, "Status"))
     if (statuses.exists(st => st == "critical" || st == "maintenance")) "critical"
     else if (statuses.contains("warning")) "warning"
     else "passing"
@@ -93,34 +69,29 @@ object ConsulSd {
   /** one health/service entry → (address, per-target labels)
     * (ref: consul.go:535-590 watch) */
   private def buildTarget(entry: J, cfg: Config, dc: String): (String, Map[String, String]) = {
-    val node = m(entry, "Node"); val svc = m(entry, "Service")
-    val tags = (entry.getOrElse("Service", null) match {
-      case sm: Map[_, _] => sm.asInstanceOf[J].getOrElse("Tags", null) match {
-        case ts: List[_] => ts.map(jstr); case _ => Nil
-      }
-      case _ => Nil
-    })
+    val node = map(entry, "Node"); val svc = map(entry, "Service")
+    val tags = strs(svc, "Tags")
     // surrounded separator list so relabel regexes need no position cases
     val tagStr = cfg.tagSeparator + tags.mkString(cfg.tagSeparator) + cfg.tagSeparator
-    val svcAddr = s(svc, "Address"); val nodeAddr = s(node, "Address")
-    val port = s(svc, "Port")
+    val svcAddr = str(svc, "Address"); val nodeAddr = str(node, "Address")
+    val port = str(svc, "Port")
     val addr = hostPort(if (svcAddr.nonEmpty) svcAddr else nodeAddr, port)
     var tl = Map(
       "__meta_consul_address" -> nodeAddr,
-      "__meta_consul_node" -> s(node, "Node"),
-      "__meta_consul_namespace" -> s(svc, "Namespace"),
-      "__meta_consul_partition" -> s(svc, "Partition"),
+      "__meta_consul_node" -> str(node, "Node"),
+      "__meta_consul_namespace" -> str(svc, "Namespace"),
+      "__meta_consul_partition" -> str(svc, "Partition"),
       "__meta_consul_tags" -> tagStr,
       "__meta_consul_service_address" -> svcAddr,
       "__meta_consul_service_port" -> port,
-      "__meta_consul_service_id" -> s(svc, "ID"),
-      "__meta_consul_health" -> aggregatedStatus(l(entry, "Checks")))
-    m(node, "Meta").foreach { case (k, v) =>
-      tl += "__meta_consul_metadata_" + KubernetesSd.sanitize(k) -> jstr(v) }
-    m(svc, "Meta").foreach { case (k, v) =>
-      tl += "__meta_consul_service_metadata_" + KubernetesSd.sanitize(k) -> jstr(v) }
-    m(node, "TaggedAddresses").foreach { case (k, v) =>
-      tl += "__meta_consul_tagged_address_" + KubernetesSd.sanitize(k) -> jstr(v) }
+      "__meta_consul_service_id" -> str(svc, "ID"),
+      "__meta_consul_health" -> aggregatedStatus(list(entry, "Checks")))
+    map(node, "Meta").foreach { case (k, v) =>
+      tl += "__meta_consul_metadata_" + KubernetesSd.sanitize(k) -> str(v) }
+    map(svc, "Meta").foreach { case (k, v) =>
+      tl += "__meta_consul_service_metadata_" + KubernetesSd.sanitize(k) -> str(v) }
+    map(node, "TaggedAddresses").foreach { case (k, v) =>
+      tl += "__meta_consul_tagged_address_" + KubernetesSd.sanitize(k) -> str(v) }
     (addr, tl)
   }
 
@@ -153,13 +124,11 @@ object ConsulSd {
       val catalogQ = queryString(
         if (cfg.filter.nonEmpty) Seq("filter" -> cfg.filter) else Nil)
       // catalog map: service name → tags (ref: watchServices shouldWatch)
-      val catalog = jmap(JsonLite.parse(
+      val catalog = map(JsonLite.parse(
         client.get(s"/v1/catalog/services$catalogQ")))
       val watched = catalog.filter { case (svcName, svcTags) =>
         (cfg.services.isEmpty || cfg.services.contains(svcName)) &&
-        cfg.tags.forall(t => (svcTags match {
-          case ts: List[_] => ts.map(jstr); case _ => Nil
-        }).contains(t))
+        cfg.tags.forall(strs(svcTags).contains)
       }.keys.toSeq.sorted
       // health queries carry `health_filter` plus the server-side tag set
       // (ref watch:507 ServiceMultipleTags — one `tag` param per entry)
@@ -168,16 +137,12 @@ object ConsulSd {
         (if (cfg.healthFilter.nonEmpty) Seq("filter" -> cfg.healthFilter)
          else Nil))
       watched.map { svcName =>
-        val entries = (JsonLite.parse(
-            client.get(s"/v1/health/service/$svcName$healthQ")) match {
-          case xs: List[_] => xs; case _ => Nil
-        }).map(jmap)
+        val entries = list(JsonLite.parse(
+          client.get(s"/v1/health/service/$svcName$healthQ")))
         // per-target tag filter too: a node of a watched service may lack
         // the required tag (ref: ServiceMultipleTags server-side filter)
         val matching = entries.filter { e =>
-          val ts = m(e, "Service").getOrElse("Tags", null) match {
-            case x: List[_] => x.map(jstr); case _ => Nil
-          }
+          val ts = strs(map(e, "Service"), "Tags")
           cfg.tags.forall(ts.contains)
         }
         Discovery.TargetGroup(svcName,

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** DigitalOcean service discovery (ref: discovery/digitalocean/
   * digitalocean.go for the droplets role, digitalocean_db.go for the
@@ -29,43 +30,10 @@ object DigitalOceanSd {
   trait ApiClient { def get(path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    private def token(): String =
-      if (cfg.bearerToken.nonEmpty) cfg.bearerToken
-      else if (cfg.bearerTokenFile.nonEmpty)
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(cfg.bearerTokenFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      else ""
-    override def get(path: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create("https://api.digitalocean.com" + path))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      val t = token()
-      if (t.nonEmpty) b.header("Authorization", "Bearer " + t)
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"digitalocean sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String =
+      SdHttp.get("digitalocean", "https://api.digitalocean.com" + path,
+        SdHttp.bearer(cfg.bearerToken, cfg.bearerTokenFile))
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def strs(o: J, k: String): List[String] =
-    (o.getOrElse(k, null) match { case l: List[_] => l; case _ => Nil }).map(jstr)
 
   /** surrounded separator list (ref digitalocean.go:251: ",a,b," so regexes
     * need not consider positions) */
@@ -74,24 +42,24 @@ object DigitalOceanSd {
 
   /** ref digitalocean.go:214-262 — one target per droplet with a v4 network */
   private def buildDroplet(d: J, port: Int): Option[(String, Map[String, String])] = {
-    val v4 = jlist(jmap(d.getOrElse("networks", null)).getOrElse("v4", null))
+    val v4 = list(map(d, "networks"), "v4")
     if (v4.isEmpty) return None
-    val v6 = jlist(jmap(d.getOrElse("networks", null)).getOrElse("v6", null))
+    val v6 = list(map(d, "networks"), "v6")
     def ipOf(nets: List[J], typ: String): String =
-      nets.find(n => s(n, "type") == typ).map(s(_, "ip_address")).getOrElse("")
+      nets.find(n => str(n, "type") == typ).map(str(_, "ip_address")).getOrElse("")
     val publicV4 = ipOf(v4, "public")
     var l = Map(
-      "__meta_digitalocean_droplet_id" -> s(d, "id"),
-      "__meta_digitalocean_droplet_name" -> s(d, "name"),
-      "__meta_digitalocean_image" -> s(jmap(d.getOrElse("image", null)), "slug"),
-      "__meta_digitalocean_image_name" -> s(jmap(d.getOrElse("image", null)), "name"),
+      "__meta_digitalocean_droplet_id" -> str(d, "id"),
+      "__meta_digitalocean_droplet_name" -> str(d, "name"),
+      "__meta_digitalocean_image" -> str(map(d, "image"), "slug"),
+      "__meta_digitalocean_image_name" -> str(map(d, "image"), "name"),
       "__meta_digitalocean_private_ipv4" -> ipOf(v4, "private"),
       "__meta_digitalocean_public_ipv4" -> publicV4,
       "__meta_digitalocean_public_ipv6" -> ipOf(v6, "public"),
-      "__meta_digitalocean_region" -> s(jmap(d.getOrElse("region", null)), "slug"),
-      "__meta_digitalocean_size" -> s(d, "size_slug"),
-      "__meta_digitalocean_status" -> s(d, "status"),
-      "__meta_digitalocean_vpc" -> s(d, "vpc_uuid"))
+      "__meta_digitalocean_region" -> str(map(d, "region"), "slug"),
+      "__meta_digitalocean_size" -> str(d, "size_slug"),
+      "__meta_digitalocean_status" -> str(d, "status"),
+      "__meta_digitalocean_vpc" -> str(d, "vpc_uuid"))
     val features = strs(d, "features")
     if (features.nonEmpty) l += "__meta_digitalocean_features" -> surrounded(features)
     val tags = strs(d, "tags")
@@ -103,16 +71,16 @@ object DigitalOceanSd {
     * connection host is preferred for the address */
   private def buildDatabase(c: J, port: Int): Option[(String, Map[String, String])] = {
     var l = Map(
-      "__meta_digitalocean_db_id" -> s(c, "id"),
-      "__meta_digitalocean_db_name" -> s(c, "name"),
-      "__meta_digitalocean_db_engine" -> s(c, "engine"),
-      "__meta_digitalocean_db_version" -> s(c, "version"),
-      "__meta_digitalocean_db_status" -> s(c, "status"),
-      "__meta_digitalocean_db_region" -> s(c, "region"),
-      "__meta_digitalocean_db_size" -> s(c, "size"),
-      "__meta_digitalocean_db_num_nodes" -> s(c, "num_nodes"))
-    val priv = s(jmap(c.getOrElse("private_connection", null)), "host")
-    val pub = s(jmap(c.getOrElse("connection", null)), "host")
+      "__meta_digitalocean_db_id" -> str(c, "id"),
+      "__meta_digitalocean_db_name" -> str(c, "name"),
+      "__meta_digitalocean_db_engine" -> str(c, "engine"),
+      "__meta_digitalocean_db_version" -> str(c, "version"),
+      "__meta_digitalocean_db_status" -> str(c, "status"),
+      "__meta_digitalocean_db_region" -> str(c, "region"),
+      "__meta_digitalocean_db_size" -> str(c, "size"),
+      "__meta_digitalocean_db_num_nodes" -> str(c, "num_nodes"))
+    val priv = str(map(c, "private_connection"), "host")
+    val pub = str(map(c, "connection"), "host")
     if (priv.nonEmpty) l += "__meta_digitalocean_db_private_host" -> priv
     if (pub.nonEmpty) l += "__meta_digitalocean_db_host" -> pub
     strs(c, "tags").foreach(t =>
@@ -136,11 +104,11 @@ object DigitalOceanSd {
       var page = 1
       var more = true
       while (more) {
-        val body = jmap(JsonLite.parse(client.get(s"$base?page=$page&per_page=200")))
-        val items = jlist(body.getOrElse(itemsKey, null))
+        val body = map(JsonLite.parse(client.get(s"$base?page=$page&per_page=200")))
+        val items = list(body, itemsKey)
         items.foreach(i => build(i).foreach(targets += _))
         // godo pagination: stop when links.pages.next is absent
-        val next = s(jmap(jmap(body.getOrElse("links", null)).getOrElse("pages", null)), "next")
+        val next = str(map(map(body, "links"), "pages"), "next")
         more = next.nonEmpty && items.nonEmpty
         page += 1
       }

@@ -61,21 +61,13 @@ object Discovery {
     * or parse failure throws — the manager keeps the previous targets. */
   final class HttpSdProvider(override val name: String, url: String,
       override val refreshMs: Long = 60000L) extends Provider {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
     // group count of the previous successful refresh: a SHRINKING response
     // must emit empty groups for the dropped indices or the manager's
     // keep-absent-sources semantics would scrape the stale targets forever
     // (ref: discovery/http/http.go Refresh backfills [len(tgs), tgLastLength))
     private var lastLength = 0
     override def refresh(): Seq[TargetGroup] = {
-      val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-        .timeout(java.time.Duration.ofSeconds(30)) // a hung endpoint must not wedge the poll
-        .header("Accept", "application/json").GET().build()
-      val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"http sd: status ${resp.statusCode()}")
-      val groups = ScrapeManager.jsonSdGroups(resp.body(), url).zipWithIndex.map {
+      val groups = ScrapeManager.jsonSdGroups(SdHttp.get("http", url), url).zipWithIndex.map {
         case ((lbls, tgts), i) =>
           TargetGroup(s"$url:$i", lbls, tgts.map(a => (a, Map.empty[String, String])))
       }
@@ -360,160 +352,70 @@ object Discovery {
       mgr.register(job.jobName, new DnsProvider(s"dns/$i", dc, resolver)) }
     job.httpSd.zipWithIndex.foreach { case ((url, ms), i) =>
       mgr.register(job.jobName, new HttpSdProvider(s"http/$i", url, ms)) }
-    job.kubernetesSd.zipWithIndex.foreach { case (kc, i) =>
-      mgr.register(job.jobName, k8sClient match {
-        case Some(c) => new KubernetesSd.KubernetesProvider(s"kubernetes/$i", kc, c)
-        case None => new KubernetesSd.KubernetesProvider(s"kubernetes/$i", kc)
-      }) }
-    job.consulSd.zipWithIndex.foreach { case (cc, i) =>
-      mgr.register(job.jobName, consulClient match {
-        case Some(c) => new ConsulSd.ConsulProvider(s"consul/$i", cc, c)
-        case None => new ConsulSd.ConsulProvider(s"consul/$i", cc)
-      }) }
-    job.ec2Sd.zipWithIndex.foreach { case (ec, i) =>
-      mgr.register(job.jobName, ec2Client match {
-        case Some(c) => new Ec2Sd.Ec2Provider(s"ec2/$i", ec, c)
-        case None => new Ec2Sd.Ec2Provider(s"ec2/$i", ec)
-      }) }
-    job.ecsSd.zipWithIndex.foreach { case (ec, i) =>
-      mgr.register(job.jobName, ecsClient match {
-        case Some(c) => new EcsSd.EcsProvider(s"ecs/$i", ec, _ => c)
-        case None => new EcsSd.EcsProvider(s"ecs/$i", ec)
-      }) }
-    job.rdsSd.zipWithIndex.foreach { case (rc, i) =>
-      mgr.register(job.jobName, rdsClient match {
-        case Some(c) => new RdsSd.RdsProvider(s"rds/$i", rc, _ => c)
-        case None => new RdsSd.RdsProvider(s"rds/$i", rc)
-      }) }
-    job.mskSd.zipWithIndex.foreach { case (kc, i) =>
-      mgr.register(job.jobName, mskClient match {
-        case Some(c) => new MskSd.MskProvider(s"msk/$i", kc, _ => c)
-        case None => new MskSd.MskProvider(s"msk/$i", kc)
-      }) }
-    job.elasticacheSd.zipWithIndex.foreach { case (cc, i) =>
-      mgr.register(job.jobName, elasticacheClient match {
-        case Some(c) => new ElasticacheSd.ElasticacheProvider(s"elasticache/$i", cc, _ => c)
-        case None => new ElasticacheSd.ElasticacheProvider(s"elasticache/$i", cc)
-      }) }
-    job.gceSd.zipWithIndex.foreach { case (gc, i) =>
-      mgr.register(job.jobName, gceClient match {
-        case Some(c) => new GceSd.GceProvider(s"gce/$i", gc, c)
-        case None => new GceSd.GceProvider(s"gce/$i", gc)
-      }) }
-    job.azureSd.zipWithIndex.foreach { case (ac, i) =>
-      mgr.register(job.jobName, azureClient match {
-        case Some(c) => new AzureSd.AzureProvider(s"azure/$i", ac, c)
-        case None => new AzureSd.AzureProvider(s"azure/$i", ac)
-      }) }
-    job.dockerSd.zipWithIndex.foreach { case (dk, i) =>
-      mgr.register(job.jobName, dockerClient match {
-        case Some(c) => new DockerSd.DockerProvider(s"docker/$i", dk, c)
-        case None => new DockerSd.DockerProvider(s"docker/$i", dk)
-      }) }
-    job.digitaloceanSd.zipWithIndex.foreach { case (oc, i) =>
-      mgr.register(job.jobName, digitaloceanClient match {
-        case Some(c) => new DigitalOceanSd.DigitalOceanProvider(s"digitalocean/$i", oc, c)
-        case None => new DigitalOceanSd.DigitalOceanProvider(s"digitalocean/$i", oc)
-      }) }
-    job.hetznerSd.zipWithIndex.foreach { case (hz, i) =>
-      mgr.register(job.jobName, hetznerClient match {
-        case Some(c) => new HetznerSd.HetznerProvider(s"hetzner/$i", hz, c)
-        case None => new HetznerSd.HetznerProvider(s"hetzner/$i", hz)
-      }) }
-    job.openstackSd.zipWithIndex.foreach { case (os, i) =>
-      mgr.register(job.jobName, openstackClient match {
-        case Some(c) => new OpenStackSd.OpenStackProvider(s"openstack/$i", os, c)
-        case None => new OpenStackSd.OpenStackProvider(s"openstack/$i", os)
-      }) }
-    job.eurekaSd.zipWithIndex.foreach { case (ec, i) =>
-      mgr.register(job.jobName, eurekaClient match {
-        case Some(c) => new EurekaSd.EurekaProvider(s"eureka/$i", ec, c)
-        case None => new EurekaSd.EurekaProvider(s"eureka/$i", ec)
-      }) }
-    job.nomadSd.zipWithIndex.foreach { case (nc, i) =>
-      mgr.register(job.jobName, nomadClient match {
-        case Some(c) => new NomadSd.NomadProvider(s"nomad/$i", nc, c)
-        case None => new NomadSd.NomadProvider(s"nomad/$i", nc)
-      }) }
-    job.marathonSd.zipWithIndex.foreach { case (mc, i) =>
-      mgr.register(job.jobName, marathonClient match {
-        case Some(c) => new MarathonSd.MarathonProvider(s"marathon/$i", mc, c)
-        case None => new MarathonSd.MarathonProvider(s"marathon/$i", mc)
-      }) }
-    job.puppetdbSd.zipWithIndex.foreach { case (pc, i) =>
-      mgr.register(job.jobName, puppetdbClient match {
-        case Some(c) => new PuppetDbSd.PuppetDbProvider(s"puppetdb/$i", pc, c)
-        case None => new PuppetDbSd.PuppetDbProvider(s"puppetdb/$i", pc)
-      }) }
-    job.linodeSd.zipWithIndex.foreach { case (lc, i) =>
-      mgr.register(job.jobName, linodeClient match {
-        case Some(c) => new LinodeSd.LinodeProvider(s"linode/$i", lc, c)
-        case None => new LinodeSd.LinodeProvider(s"linode/$i", lc)
-      }) }
-    job.vultrSd.zipWithIndex.foreach { case (vc, i) =>
-      mgr.register(job.jobName, vultrClient match {
-        case Some(c) => new VultrSd.VultrProvider(s"vultr/$i", vc, c)
-        case None => new VultrSd.VultrProvider(s"vultr/$i", vc)
-      }) }
-    job.scalewaySd.zipWithIndex.foreach { case (sc, i) =>
-      mgr.register(job.jobName, scalewayClient match {
-        case Some(c) => new ScalewaySd.ScalewayProvider(s"scaleway/$i", sc, c)
-        case None => new ScalewaySd.ScalewayProvider(s"scaleway/$i", sc)
-      }) }
-    job.lightsailSd.zipWithIndex.foreach { case (lc, i) =>
-      mgr.register(job.jobName, lightsailClient match {
-        case Some(c) => new LightsailSd.LightsailProvider(s"lightsail/$i", lc, c)
-        case None => new LightsailSd.LightsailProvider(s"lightsail/$i", lc)
-      }) }
-    job.dockerswarmSd.zipWithIndex.foreach { case (dk, i) =>
-      mgr.register(job.jobName, dockerswarmClient match {
-        case Some(c) => new DockerSwarmSd.DockerSwarmProvider(s"dockerswarm/$i", dk, c)
-        case None => new DockerSwarmSd.DockerSwarmProvider(s"dockerswarm/$i", dk)
-      }) }
-    job.tritonSd.zipWithIndex.foreach { case (tc, i) =>
-      mgr.register(job.jobName, tritonClient match {
-        case Some(c) => new TritonSd.TritonProvider(s"triton/$i", tc, c)
-        case None => new TritonSd.TritonProvider(s"triton/$i", tc)
-      }) }
-    job.ovhcloudSd.zipWithIndex.foreach { case (oc, i) =>
-      mgr.register(job.jobName, ovhcloudClient match {
-        case Some(c) => new OvhcloudSd.OvhcloudProvider(s"ovhcloud/$i", oc, c)
-        case None => new OvhcloudSd.OvhcloudProvider(s"ovhcloud/$i", oc)
-      }) }
-    job.ionosSd.zipWithIndex.foreach { case (ic, i) =>
-      mgr.register(job.jobName, ionosClient match {
-        case Some(c) => new IonosSd.IonosProvider(s"ionos/$i", ic, c)
-        case None => new IonosSd.IonosProvider(s"ionos/$i", ic)
-      }) }
-    job.stackitSd.zipWithIndex.foreach { case (sk, i) =>
-      mgr.register(job.jobName, stackitClient match {
-        case Some(c) => new StackitSd.StackitProvider(s"stackit/$i", sk, c)
-        case None => new StackitSd.StackitProvider(s"stackit/$i", sk)
-      }) }
-    job.outscaleSd.zipWithIndex.foreach { case (oc, i) =>
-      mgr.register(job.jobName, outscaleClient match {
-        case Some(c) => new OutscaleSd.OutscaleProvider(s"outscale/$i", oc, c)
-        case None => new OutscaleSd.OutscaleProvider(s"outscale/$i", oc)
-      }) }
-    job.uyuniSd.zipWithIndex.foreach { case (uc, i) =>
-      mgr.register(job.jobName, uyuniClient match {
-        case Some(c) => new UyuniSd.UyuniProvider(s"uyuni/$i", uc, c)
-        case None => new UyuniSd.UyuniProvider(s"uyuni/$i", uc)
-      }) }
-    job.ociSd.zipWithIndex.foreach { case (oc, i) =>
-      mgr.register(job.jobName, ociClient match {
-        case Some(c) => new OciSd.OciProvider(s"oci/$i", oc, c)
-        case None => new OciSd.OciProvider(s"oci/$i", oc)
-      }) }
-    job.kumaSd.zipWithIndex.foreach { case (kc, i) =>
-      mgr.register(job.jobName, kumaClient match {
-        case Some(c) => new KumaSd.KumaProvider(s"kuma/$i", kc, c)
-        case None => new KumaSd.KumaProvider(s"kuma/$i", kc)
-      }) }
+    def add[C](cfgs: Seq[C], kind: String)(mk: (String, C) => Provider): Unit =
+      cfgs.zipWithIndex.foreach { case (c, i) => mgr.register(job.jobName, mk(s"$kind/$i", c)) }
+    add(job.kubernetesSd, "kubernetes")((n, c) => new KubernetesSd.KubernetesProvider(n, c,
+      k8sClient.getOrElse(new KubernetesSd.HttpApiClient(c.apiServer, c.bearerTokenFile))))
+    add(job.consulSd, "consul")((n, c) => new ConsulSd.ConsulProvider(n, c,
+      consulClient.getOrElse(new ConsulSd.HttpApiClient(c))))
+    add(job.ec2Sd, "ec2")((n, c) => new Ec2Sd.Ec2Provider(n, c,
+      ec2Client.getOrElse(new Ec2Sd.HttpApiClient(c))))
+    add(job.ecsSd, "ecs")((n, c) => new EcsSd.EcsProvider(n, c,
+      r => ecsClient.getOrElse(new EcsSd.HttpApiClient(c, r))))
+    add(job.rdsSd, "rds")((n, c) => new RdsSd.RdsProvider(n, c,
+      r => rdsClient.getOrElse(new RdsSd.HttpApiClient(c, r))))
+    add(job.mskSd, "msk")((n, c) => new MskSd.MskProvider(n, c,
+      r => mskClient.getOrElse(new MskSd.HttpApiClient(c, r))))
+    add(job.elasticacheSd, "elasticache")((n, c) => new ElasticacheSd.ElasticacheProvider(n, c,
+      r => elasticacheClient.getOrElse(new ElasticacheSd.HttpApiClient(c, r))))
+    add(job.gceSd, "gce")((n, c) => new GceSd.GceProvider(n, c,
+      gceClient.getOrElse(new GceSd.HttpApiClient(c))))
+    add(job.azureSd, "azure")((n, c) => new AzureSd.AzureProvider(n, c,
+      azureClient.getOrElse(new AzureSd.HttpApiClient(c))))
+    add(job.dockerSd, "docker")((n, c) => new DockerSd.DockerProvider(n, c,
+      dockerClient.getOrElse(new DockerSd.HttpApiClient(c))))
+    add(job.digitaloceanSd, "digitalocean")((n, c) => new DigitalOceanSd.DigitalOceanProvider(n, c,
+      digitaloceanClient.getOrElse(new DigitalOceanSd.HttpApiClient(c))))
+    add(job.hetznerSd, "hetzner")((n, c) => new HetznerSd.HetznerProvider(n, c,
+      hetznerClient.getOrElse(new HetznerSd.HttpApiClient(c))))
+    add(job.openstackSd, "openstack")((n, c) => new OpenStackSd.OpenStackProvider(n, c,
+      openstackClient.getOrElse(new OpenStackSd.HttpApiClient(c))))
+    add(job.eurekaSd, "eureka")((n, c) => new EurekaSd.EurekaProvider(n, c,
+      eurekaClient.getOrElse(new EurekaSd.HttpApiClient(c))))
+    add(job.nomadSd, "nomad")((n, c) => new NomadSd.NomadProvider(n, c,
+      nomadClient.getOrElse(new NomadSd.HttpApiClient(c))))
+    add(job.marathonSd, "marathon")((n, c) => new MarathonSd.MarathonProvider(n, c,
+      marathonClient.getOrElse(new MarathonSd.HttpApiClient(c))))
+    add(job.puppetdbSd, "puppetdb")((n, c) => new PuppetDbSd.PuppetDbProvider(n, c,
+      puppetdbClient.getOrElse(new PuppetDbSd.HttpApiClient)))
+    add(job.linodeSd, "linode")((n, c) => new LinodeSd.LinodeProvider(n, c,
+      linodeClient.getOrElse(new LinodeSd.HttpApiClient(c))))
+    add(job.vultrSd, "vultr")((n, c) => new VultrSd.VultrProvider(n, c,
+      vultrClient.getOrElse(new VultrSd.HttpApiClient(c))))
+    add(job.scalewaySd, "scaleway")((n, c) => new ScalewaySd.ScalewayProvider(n, c,
+      scalewayClient.getOrElse(new ScalewaySd.HttpApiClient(c))))
+    add(job.lightsailSd, "lightsail")((n, c) => new LightsailSd.LightsailProvider(n, c,
+      lightsailClient.getOrElse(new LightsailSd.HttpApiClient(c))))
+    add(job.dockerswarmSd, "dockerswarm")((n, c) => new DockerSwarmSd.DockerSwarmProvider(n, c,
+      dockerswarmClient.getOrElse(new DockerSwarmSd.HttpApiClient(c))))
+    add(job.tritonSd, "triton")((n, c) => new TritonSd.TritonProvider(n, c,
+      tritonClient.getOrElse(new TritonSd.HttpApiClient)))
+    add(job.ovhcloudSd, "ovhcloud")((n, c) => new OvhcloudSd.OvhcloudProvider(n, c,
+      ovhcloudClient.getOrElse(new OvhcloudSd.HttpApiClient(c))))
+    add(job.ionosSd, "ionos")((n, c) => new IonosSd.IonosProvider(n, c,
+      ionosClient.getOrElse(new IonosSd.HttpApiClient(c))))
+    add(job.stackitSd, "stackit")((n, c) => new StackitSd.StackitProvider(n, c,
+      stackitClient.getOrElse(new StackitSd.HttpApiClient(c))))
+    add(job.outscaleSd, "outscale")((n, c) => new OutscaleSd.OutscaleProvider(n, c,
+      outscaleClient.getOrElse(new OutscaleSd.HttpApiClient(c))))
+    add(job.uyuniSd, "uyuni")((n, c) => new UyuniSd.UyuniProvider(n, c,
+      uyuniClient.getOrElse(new UyuniSd.HttpApiClient(c))))
+    add(job.ociSd, "oci")((n, c) => new OciSd.OciProvider(n, c,
+      ociClient.getOrElse(new OciSd.HttpApiClient(c))))
+    add(job.kumaSd, "kuma")((n, c) => new KumaSd.KumaProvider(n, c,
+      kumaClient.getOrElse(new KumaSd.HttpApiClient(c))))
     job.zookeeperSd.zipWithIndex.foreach { case (zc, i) =>
-      mgr.register(job.jobName, zkClient match {
-        case Some(mk) => new ZookeeperSd.ZookeeperProvider(s"${zc.kind}/$i", zc, mk)
-        case None => new ZookeeperSd.ZookeeperProvider(s"${zc.kind}/$i", zc)
-      }) }
+      mgr.register(job.jobName, new ZookeeperSd.ZookeeperProvider(s"${zc.kind}/$i", zc,
+        zkClient.getOrElse(() => new ZookeeperSd.WireZkClient(zc.servers, zc.timeoutMs)))) }
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Docker service discovery (ref: discovery/moby/docker.go).
   *
@@ -24,33 +25,8 @@ object DockerSd {
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
     private val base = cfg.host.replaceFirst("^tcp://", "http://").stripSuffix("/")
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def get(path: String): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/json").GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"docker sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String = SdHttp.get("docker", base + path)
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
 
   private def hostPort(host: String, port: String): String =
     if (host.contains(":") && !host.startsWith("[")) s"[$host]:$port"
@@ -62,52 +38,46 @@ object DockerSd {
     override def refreshMs: Long = cfg.refreshMs
 
     override def refresh(): Seq[Discovery.TargetGroup] = {
-      val containers = (JsonLite.parse(client.get("/containers/json")) match {
-        case l: List[_] => l; case _ => Nil
-      }).map(jmap)
+      val containers = list(JsonLite.parse(client.get("/containers/json")))
       // network id → __meta_docker_network_* labels (ref: moby/network.go)
       val networkLabels: Map[String, Map[String, String]] =
-        (JsonLite.parse(client.get("/networks")) match {
-          case l: List[_] => l; case _ => Nil
-        }).map(jmap).map { n =>
-          s(n, "Id") -> (Map(
-            "__meta_docker_network_id" -> s(n, "Id"),
-            "__meta_docker_network_name" -> s(n, "Name"),
-            "__meta_docker_network_internal" -> s(n, "Internal"),
-            "__meta_docker_network_scope" -> s(n, "Scope")) ++
-            m(n, "Labels").map { case (k, v) =>
-              "__meta_docker_network_label_" + KubernetesSd.sanitize(k) -> jstr(v) })
+        list(JsonLite.parse(client.get("/networks"))).map { n =>
+          str(n, "Id") -> (Map(
+            "__meta_docker_network_id" -> str(n, "Id"),
+            "__meta_docker_network_name" -> str(n, "Name"),
+            "__meta_docker_network_internal" -> str(n, "Internal"),
+            "__meta_docker_network_scope" -> str(n, "Scope")) ++
+            map(n, "Labels").map { case (k, v) =>
+              "__meta_docker_network_label_" + KubernetesSd.sanitize(k) -> str(v) })
         }.toMap
       val targets = Seq.newBuilder[(String, Map[String, String])]
       containers.foreach { c =>
-        val names = (c.getOrElse("Names", null) match {
-          case l: List[_] => l.map(jstr); case _ => Nil
-        })
+        val names = strs(c, "Names")
         if (names.nonEmpty) {
           val common = Map(
-            "__meta_docker_container_id" -> s(c, "Id"),
+            "__meta_docker_container_id" -> str(c, "Id"),
             "__meta_docker_container_name" -> names.head,
-            "__meta_docker_container_network_mode" -> s(m(c, "HostConfig"), "NetworkMode")) ++
-            m(c, "Labels").map { case (k, v) =>
-              "__meta_docker_container_label_" + KubernetesSd.sanitize(k) -> jstr(v) }
-          val ports = jlist(c.getOrElse("Ports", null))
-          m(m(c, "NetworkSettings"), "Networks").foreach { case (_, nv) =>
-            val net = jmap(nv)
+            "__meta_docker_container_network_mode" -> str(map(c, "HostConfig"), "NetworkMode")) ++
+            map(c, "Labels").map { case (k, v) =>
+              "__meta_docker_container_label_" + KubernetesSd.sanitize(k) -> str(v) }
+          val ports = list(c, "Ports")
+          map(map(c, "NetworkSettings"), "Networks").foreach { case (_, nv) =>
+            val net = map(nv)
             val ip = {
-              val v4 = s(net, "IPAddress")
-              if (v4.nonEmpty) v4 else s(net, "GlobalIPv6Address")
+              val v4 = str(net, "IPAddress")
+              if (v4.nonEmpty) v4 else str(net, "GlobalIPv6Address")
             }
-            val netLbls = networkLabels.getOrElse(s(net, "NetworkID"), Map.empty)
-            val tcp = ports.filter(p => s(p, "Type") == "tcp")
+            val netLbls = networkLabels.getOrElse(str(net, "NetworkID"), Map.empty)
+            val tcp = ports.filter(p => str(p, "Type") == "tcp")
             if (tcp.nonEmpty) tcp.foreach { p =>
               var tl = common ++ netLbls ++ Map(
                 "__meta_docker_network_ip" -> ip,
-                "__meta_docker_port_private" -> s(p, "PrivatePort"))
-              val pub = s(p, "PublicPort")
+                "__meta_docker_port_private" -> str(p, "PrivatePort"))
+              val pub = str(p, "PublicPort")
               if (pub.nonEmpty && pub != "0")
                 tl ++= Map("__meta_docker_port_public" -> pub,
-                  "__meta_docker_port_public_ip" -> s(p, "IP"))
-              targets += ((hostPort(ip, s(p, "PrivatePort")), tl))
+                  "__meta_docker_port_public_ip" -> str(p, "IP"))
+              targets += ((hostPort(ip, str(p, "PrivatePort")), tl))
             } else {
               // no TCP ports exposed: fall back to the configured port
               targets += ((hostPort(ip, cfg.port.toString),

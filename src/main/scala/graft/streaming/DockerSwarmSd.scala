@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Docker Swarm service discovery (ref: discovery/moby/dockerswarm.go with
   * per-role builders nodes.go / services.go / tasks.go and the shared
@@ -28,90 +29,65 @@ object DockerSwarmSd {
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
     private val base = cfg.host.replaceFirst("^tcp://", "http://").stripSuffix("/")
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def get(path: String): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/json").GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"dockerswarm sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String = SdHttp.get("dockerswarm", base + path)
   }
 
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case b: java.lang.Boolean => b.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
   private def cidrIp(a: String): String = a.split("/")(0)
 
   private val P = "__meta_dockerswarm_"
 
   /** ref network.go getNetworksLabels with the swarm prefix */
   private def networkLabels(client: ApiClient): Map[String, Map[String, String]] =
-    jlist(JsonLite.parse(client.get("/networks"))).map { n =>
-      val id = s(n, "Id")
+    list(JsonLite.parse(client.get("/networks"))).map { n =>
+      val id = str(n, "Id")
       id -> (Map(
         P + "network_id" -> id,
-        P + "network_name" -> s(n, "Name"),
-        P + "network_scope" -> s(n, "Scope"),
-        P + "network_internal" -> (n.getOrElse("Internal", null) == java.lang.Boolean.TRUE).toString,
-        P + "network_ingress" -> (n.getOrElse("Ingress", null) == java.lang.Boolean.TRUE).toString) ++
-        m(n, "Labels").map { case (k, v) =>
-          P + "network_label_" + KubernetesSd.sanitize(k) -> jstr(v) })
+        P + "network_name" -> str(n, "Name"),
+        P + "network_scope" -> str(n, "Scope"),
+        P + "network_internal" -> bool(n, "Internal").toString,
+        P + "network_ingress" -> bool(n, "Ingress").toString) ++
+        map(n, "Labels").map { case (k, v) =>
+          P + "network_label_" + KubernetesSd.sanitize(k) -> str(v) })
     }.toMap
 
   /** ref nodes.go nodeLabels (shared by the nodes role and task merge) */
   private def nodeLabelSet(n: J): Map[String, String] = {
-    val spec = m(n, "Spec"); val desc = m(n, "Description"); val status = m(n, "Status")
+    val spec = map(n, "Spec"); val desc = map(n, "Description"); val status = map(n, "Status")
     var l = Map(
-      P + "node_id" -> s(n, "ID"),
-      P + "node_role" -> s(spec, "Role"),
-      P + "node_availability" -> s(spec, "Availability"),
-      P + "node_hostname" -> s(desc, "Hostname"),
-      P + "node_platform_architecture" -> s(m(desc, "Platform"), "Architecture"),
-      P + "node_platform_os" -> s(m(desc, "Platform"), "OS"),
-      P + "node_engine_version" -> s(m(desc, "Engine"), "EngineVersion"),
-      P + "node_status" -> s(status, "State"),
-      P + "node_address" -> s(status, "Addr"))
-    val mgr = m(n, "ManagerStatus")
+      P + "node_id" -> str(n, "ID"),
+      P + "node_role" -> str(spec, "Role"),
+      P + "node_availability" -> str(spec, "Availability"),
+      P + "node_hostname" -> str(desc, "Hostname"),
+      P + "node_platform_architecture" -> str(map(desc, "Platform"), "Architecture"),
+      P + "node_platform_os" -> str(map(desc, "Platform"), "OS"),
+      P + "node_engine_version" -> str(map(desc, "Engine"), "EngineVersion"),
+      P + "node_status" -> str(status, "State"),
+      P + "node_address" -> str(status, "Addr"))
+    val mgr = map(n, "ManagerStatus")
     if (mgr.nonEmpty) l ++= Map(
-      P + "node_manager_leader" -> (mgr.getOrElse("Leader", null) == java.lang.Boolean.TRUE).toString,
-      P + "node_manager_reachability" -> s(mgr, "Reachability"),
-      P + "node_manager_address" -> s(mgr, "Addr"))
-    l ++ m(spec, "Labels").map { case (k, v) =>
-      P + "node_label_" + KubernetesSd.sanitize(k) -> jstr(v) }
+      P + "node_manager_leader" -> bool(mgr, "Leader").toString,
+      P + "node_manager_reachability" -> str(mgr, "Reachability"),
+      P + "node_manager_address" -> str(mgr, "Addr"))
+    l ++ map(spec, "Labels").map { case (k, v) =>
+      P + "node_label_" + KubernetesSd.sanitize(k) -> str(v) }
   }
 
   /** ref services.go serviceLabels + getServiceValueMode */
   private def serviceLabelSet(sv: J): Map[String, String] = {
-    val spec = m(sv, "Spec")
+    val spec = map(sv, "Spec")
     // mode keys are present-but-possibly-empty objects (ref services.go
     // getServiceValueMode checks pointer nilness)
-    val modeMap = m(spec, "Mode")
+    val modeMap = map(spec, "Mode")
     val mode =
       if (modeMap.contains("Global")) "global"
       else if (modeMap.contains("Replicated")) "replicated"
       else ""
     Map(
-      P + "service_id" -> s(sv, "ID"),
-      P + "service_name" -> s(spec, "Name"),
+      P + "service_id" -> str(sv, "ID"),
+      P + "service_name" -> str(spec, "Name"),
       P + "service_mode" -> mode) ++
-      m(spec, "Labels").map { case (k, v) =>
-        P + "service_label_" + KubernetesSd.sanitize(k) -> jstr(v) }
+      map(spec, "Labels").map { case (k, v) =>
+        P + "service_label_" + KubernetesSd.sanitize(k) -> str(v) }
   }
 
   final class DockerSwarmProvider(override val name: String, cfg: Config,
@@ -120,34 +96,34 @@ object DockerSwarmSd {
     override def refreshMs: Long = cfg.refreshMs
 
     private def refreshNodes(): Seq[(String, Map[String, String])] =
-      jlist(JsonLite.parse(client.get("/nodes"))).map { n =>
-        (s"${s(m(n, "Status"), "Addr")}:${cfg.port}", nodeLabelSet(n))
+      list(JsonLite.parse(client.get("/nodes"))).map { n =>
+        (s"${str(map(n, "Status"), "Addr")}:${cfg.port}", nodeLabelSet(n))
       }
 
     /** ref services.go refreshServices — VIP × TCP published port, the
       * port-less VIP falls back to the configured port */
     private def refreshServices(): Seq[(String, Map[String, String])] = {
       val nets = networkLabels(client)
-      jlist(JsonLite.parse(client.get("/services"))).flatMap { sv =>
-        val spec = m(sv, "Spec")
+      list(JsonLite.parse(client.get("/services"))).flatMap { sv =>
+        val spec = map(sv, "Spec")
         var common = serviceLabelSet(sv)
-        val cspec = m(m(spec, "TaskTemplate"), "ContainerSpec")
+        val cspec = map(map(spec, "TaskTemplate"), "ContainerSpec")
         if (cspec.nonEmpty) common ++= Map(
-          P + "service_task_container_hostname" -> s(cspec, "Hostname"),
-          P + "service_task_container_image" -> s(cspec, "Image"))
-        val upd = m(sv, "UpdateStatus")
+          P + "service_task_container_hostname" -> str(cspec, "Hostname"),
+          P + "service_task_container_image" -> str(cspec, "Image"))
+        val upd = map(sv, "UpdateStatus")
         if (upd.nonEmpty)
-          common += P + "service_updating_status" -> s(upd, "State")
-        val endpoint = m(sv, "Endpoint")
-        val ports = jlist(endpoint.getOrElse("Ports", null))
-        jlist(endpoint.getOrElse("VirtualIPs", null)).flatMap { vip =>
-          val ip = cidrIp(s(vip, "Addr"))
-          val netl = nets.getOrElse(s(vip, "NetworkID"), Map.empty)
-          val tcp = ports.filter(p => s(p, "Protocol") == "tcp")
+          common += P + "service_updating_status" -> str(upd, "State")
+        val endpoint = map(sv, "Endpoint")
+        val ports = list(endpoint, "Ports")
+        list(endpoint, "VirtualIPs").flatMap { vip =>
+          val ip = cidrIp(str(vip, "Addr"))
+          val netl = nets.getOrElse(str(vip, "NetworkID"), Map.empty)
+          val tcp = ports.filter(p => str(p, "Protocol") == "tcp")
           if (tcp.nonEmpty) tcp.map { p =>
-            (s"$ip:${s(p, "PublishedPort")}", common ++ netl ++ Map(
-              P + "service_endpoint_port_name" -> s(p, "Name"),
-              P + "service_endpoint_port_publish_mode" -> s(p, "PublishMode")))
+            (s"$ip:${str(p, "PublishedPort")}", common ++ netl ++ Map(
+              P + "service_endpoint_port_name" -> str(p, "Name"),
+              P + "service_endpoint_port_publish_mode" -> str(p, "PublishMode")))
           } else Seq((s"$ip:${cfg.port}", common ++ netl))
         }
       }
@@ -156,44 +132,42 @@ object DockerSwarmSd {
     /** ref tasks.go refreshTasks */
     private def refreshTasks(): Seq[(String, Map[String, String])] = {
       val nets = networkLabels(client)
-      val services = jlist(JsonLite.parse(client.get("/services")))
-      val svcLabels = services.map(sv => s(sv, "ID") -> serviceLabelSet(sv)).toMap
+      val services = list(JsonLite.parse(client.get("/services")))
+      val svcLabels = services.map(sv => str(sv, "ID") -> serviceLabelSet(sv)).toMap
       val svcPorts = services.map(sv =>
-        s(sv, "ID") -> jlist(m(sv, "Endpoint").getOrElse("Ports", null))).toMap
-      val nodes = jlist(JsonLite.parse(client.get("/nodes")))
-        .map(n => s(n, "ID") -> nodeLabelSet(n)).toMap
-      jlist(JsonLite.parse(client.get("/tasks"))).flatMap { t =>
+        str(sv, "ID") -> list(map(sv, "Endpoint"), "Ports")).toMap
+      val nodes = list(JsonLite.parse(client.get("/nodes")))
+        .map(n => str(n, "ID") -> nodeLabelSet(n)).toMap
+      list(JsonLite.parse(client.get("/tasks"))).flatMap { t =>
         var common = Map(
-          P + "task_id" -> s(t, "ID"),
-          P + "task_desired_state" -> s(t, "DesiredState"),
-          P + "task_state" -> s(m(t, "Status"), "State"),
-          P + "task_slot" -> s(t, "Slot"))
-        val cstatus = m(m(t, "Status"), "ContainerStatus")
+          P + "task_id" -> str(t, "ID"),
+          P + "task_desired_state" -> str(t, "DesiredState"),
+          P + "task_state" -> str(map(t, "Status"), "State"),
+          P + "task_slot" -> str(t, "Slot"))
+        val cstatus = map(map(t, "Status"), "ContainerStatus")
         if (cstatus.nonEmpty)
-          common += P + "task_container_id" -> s(cstatus, "ContainerID")
-        common ++= m(m(m(t, "Spec"), "ContainerSpec"), "Labels").map { case (k, v) =>
-          P + "container_label_" + KubernetesSd.sanitize(k) -> jstr(v) }
-        common ++= svcLabels.getOrElse(s(t, "ServiceID"), Map.empty)
-        common ++= nodes.getOrElse(s(t, "NodeID"), Map.empty)
+          common += P + "task_container_id" -> str(cstatus, "ContainerID")
+        common ++= map(map(map(t, "Spec"), "ContainerSpec"), "Labels").map { case (k, v) =>
+          P + "container_label_" + KubernetesSd.sanitize(k) -> str(v) }
+        common ++= svcLabels.getOrElse(str(t, "ServiceID"), Map.empty)
+        common ++= nodes.getOrElse(str(t, "NodeID"), Map.empty)
         // published ports at the node address (ref tasks.go:90-106)
-        val published = jlist(m(m(t, "Status"), "PortStatus").getOrElse("Ports", null))
-          .filter(p => s(p, "Protocol") == "tcp")
+        val published = list(map(map(t, "Status"), "PortStatus"), "Ports")
+          .filter(p => str(p, "Protocol") == "tcp")
           .map { p =>
-            (s"${common.getOrElse(P + "node_address", "")}:${s(p, "PublishedPort")}",
-              common + (P + "task_port_publish_mode" -> s(p, "PublishMode")))
+            (s"${common.getOrElse(P + "node_address", "")}:${str(p, "PublishedPort")}",
+              common + (P + "task_port_publish_mode" -> str(p, "PublishMode")))
           }
         // network attachments × service ports (ref tasks.go:108-158)
-        val attached = jlist(t.getOrElse("NetworksAttachments", null)).flatMap { na =>
-          val netl = nets.getOrElse(s(m(na, "Network"), "ID"), Map.empty)
-          (na.getOrElse("Addresses", null) match {
-            case l: List[_] => l; case _ => Nil
-          }).map(jstr).flatMap { a =>
+        val attached = list(t, "NetworksAttachments").flatMap { na =>
+          val netl = nets.getOrElse(str(map(na, "Network"), "ID"), Map.empty)
+          strs(na, "Addresses").flatMap { a =>
             val ip = cidrIp(a)
-            val tcp = svcPorts.getOrElse(s(t, "ServiceID"), Nil)
-              .filter(p => s(p, "Protocol") == "tcp")
+            val tcp = svcPorts.getOrElse(str(t, "ServiceID"), Nil)
+              .filter(p => str(p, "Protocol") == "tcp")
             if (tcp.nonEmpty) tcp.map { p =>
-              (s"$ip:${s(p, "PublishedPort")}", common ++ netl +
-                (P + "task_port_publish_mode" -> s(p, "PublishMode")))
+              (s"$ip:${str(p, "PublishedPort")}", common ++ netl +
+                (P + "task_port_publish_mode" -> str(p, "PublishMode")))
             } else Seq((s"$ip:${cfg.port}", common ++ netl))
           }
         }

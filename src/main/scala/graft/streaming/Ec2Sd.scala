@@ -130,31 +130,16 @@ object Ec2Sd {
 
   /** production client: SigV4-signed DescribeInstances query calls */
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val host =
-      if (cfg.endpoint.nonEmpty) java.net.URI.create(cfg.endpoint).getHost
-      else s"ec2.${cfg.region}.amazonaws.com"
-    private val base =
-      if (cfg.endpoint.nonEmpty) cfg.endpoint.stripSuffix("/")
-      else s"https://$host"
+    private val (host, base) =
+      AwsSd.endpointOf(cfg.endpoint, s"ec2.${cfg.region}.amazonaws.com")
     private val credsProvider = AwsSd.credentials(cfg.accessKey,
       cfg.secretKey, cfg.roleArn, cfg.externalId, cfg.region, profile = cfg.profile)
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
     override def describeInstances(nextToken: Option[String]): String = {
       val body = "Action=DescribeInstances&Version=2016-11-15" +
         nextToken.map(t => "&NextToken=" +
           java.net.URLEncoder.encode(t, "UTF-8")).getOrElse("")
-      val hdrs = SigV4.headers(credsProvider.creds(), cfg.region, "ec2",
-        host, body, java.time.Instant.now())
-      val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + "/"))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-      hdrs.foreach { case (k, v) => b.header(k, v) }
-      val resp = client.send(b.build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"ec2 sd: status ${resp.statusCode()}")
-      resp.body()
+      AwsSd.post("ec2", base, body, SigV4.headers(credsProvider.creds(), cfg.region,
+        "ec2", host, body, java.time.Instant.now()))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import AwsSd._
+import SdJson._
 
 /** ECS service discovery (ref: discovery/aws/ecs.go).
   *
@@ -51,32 +52,16 @@ object EcsSd {
   /** production client: SigV4-signed JSON-1.1 calls to the ECS endpoint
     * plus Query-XML calls to EC2 for instance/ENI enrichment */
   final class HttpApiClient(cfg: Config, region: String) extends ApiClient {
-    private val ecsHost =
-      if (cfg.endpoint.nonEmpty) java.net.URI.create(cfg.endpoint).getHost
-      else s"ecs.$region.amazonaws.com"
-    private val ecsBase =
-      if (cfg.endpoint.nonEmpty) cfg.endpoint.stripSuffix("/")
-      else s"https://$ecsHost"
+    private val (ecsHost, ecsBase) =
+      AwsSd.endpointOf(cfg.endpoint, s"ecs.$region.amazonaws.com")
     private val ec2Host = s"ec2.$region.amazonaws.com"
     private val credsProvider = AwsSd.credentials(cfg.accessKey,
       cfg.secretKey, cfg.roleArn, cfg.externalId, region, profile = cfg.profile)
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
 
     private def post(base: String, host: String, service: String, body: String,
-        contentType: String, extra: Map[String, String]): String = {
-      val hdrs = Ec2Sd.SigV4.headers(credsProvider.creds(), region, service,
-        host, body, java.time.Instant.now(), contentType, extra)
-      val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + "/"))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-      hdrs.foreach { case (k, v) => b.header(k, v) }
-      val resp = client.send(b.build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"ecs sd: status ${resp.statusCode()}")
-      resp.body()
-    }
+        contentType: String, extra: Map[String, String]): String =
+      AwsSd.post("ecs", base, body, Ec2Sd.SigV4.headers(credsProvider.creds(), region,
+        service, host, body, java.time.Instant.now(), contentType, extra))
 
     private def ecs(action: String, body: String): String =
       post(ecsBase, ecsHost, "ecs", body, "application/x-amz-json-1.1",
@@ -122,8 +107,8 @@ object EcsSd {
   // ------------------------------------------------------------- provider
 
   private def tagLabels(m: Map[String, Any], prefix: String): Map[String, String] =
-    jArr(m, "tags").flatMap { t =>
-      val k = jStr(t, "key"); val v = jStr(t, "value")
+    list(m, "tags").flatMap { t =>
+      val k = str(t, "key"); val v = str(t, "value")
       if (k.nonEmpty) Some(prefix + KubernetesSd.sanitize(k) -> v) else None
     }.toMap
 
@@ -143,8 +128,8 @@ object EcsSd {
       var more = true
       while (more) {
         val resp = graft.web.JsonLite.parse(fetch(tok))
-        out ++= jStrArr(resp, key)
-        tok = jOptStr(jObj(resp), "nextToken").filter(_.nonEmpty)
+        out ++= strs(map(resp), key)
+        tok = opt(map(resp), "nextToken").filter(_.nonEmpty)
         more = tok.isDefined
       }
       out.result()
@@ -162,8 +147,8 @@ object EcsSd {
       // cluster details (DescribeClusters batches of 100, ref ecs.go)
       val clusterByArn: Map[String, Map[String, Any]] =
         clusterArns.grouped(100).flatMap { batch =>
-          jArr(graft.web.JsonLite.parse(api.describeClusters(batch)), "clusters")
-            .map(c => jStr(c, "clusterArn") -> c)
+          list(map(graft.web.JsonLite.parse(api.describeClusters(batch))), "clusters")
+            .map(c => str(c, "clusterArn") -> c)
         }.toMap
 
       val targets = Seq.newBuilder[(String, Map[String, String])]
@@ -175,32 +160,32 @@ object EcsSd {
           // services by NAME (batches of 10, ref ecs.go describeServices)
           val services: Map[String, Map[String, Any]] =
             serviceArns.grouped(10).flatMap { batch =>
-              jArr(graft.web.JsonLite.parse(api.describeServices(clusterArn, batch)),
-                "services").map(s => jStr(s, "serviceName") -> s)
+              list(map(graft.web.JsonLite.parse(api.describeServices(clusterArn, batch))),
+                "services").map(s => str(s, "serviceName") -> s)
             }.toMap
           val tasks = taskArns.grouped(100).flatMap { batch =>
-            jArr(graft.web.JsonLite.parse(api.describeTasks(clusterArn, batch)), "tasks")
+            list(map(graft.web.JsonLite.parse(api.describeTasks(clusterArn, batch))), "tasks")
           }.toSeq
 
           // container instance ARN → EC2 instance id (batches of 100)
-          val ciArns = tasks.flatMap(t => jOptStr(t, "containerInstanceArn")).distinct
+          val ciArns = tasks.flatMap(t => opt(t, "containerInstanceArn")).distinct
           val ciToEc2: Map[String, String] =
             ciArns.grouped(100).flatMap { batch =>
-              jArr(graft.web.JsonLite.parse(
-                api.describeContainerInstances(clusterArn, batch)),
+              list(map(graft.web.JsonLite.parse(
+                api.describeContainerInstances(clusterArn, batch))),
                 "containerInstances").flatMap { ci =>
-                  val arn = jStr(ci, "containerInstanceArn")
-                  val id = jStr(ci, "ec2InstanceId")
+                  val arn = str(ci, "containerInstanceArn")
+                  val id = str(ci, "ec2InstanceId")
                   if (arn.nonEmpty && id.nonEmpty) Some(arn -> id) else None
                 }
             }.toMap
 
           // ENI id → public IP for awsvpc tasks (ref describeNetworkInterfaces)
           val eniIds = tasks.flatMap { t =>
-            jArr(t, "attachments").find(a =>
-              jStr(a, "type") == "ElasticNetworkInterface").toSeq.flatMap { a =>
-              jArr(a, "details").find(d => jStr(d, "name") == "networkInterfaceId")
-                .map(d => jStr(d, "value"))
+            list(t, "attachments").find(a =>
+              str(a, "type") == "ElasticNetworkInterface").toSeq.flatMap { a =>
+              list(a, "details").find(d => str(d, "name") == "networkInterfaceId")
+                .map(d => str(d, "value"))
             }
           }.filter(_.nonEmpty).distinct
           val eniToPublicIp: Map[String, String] =
@@ -252,19 +237,19 @@ object EcsSd {
     var ipAddress = ""; var subnetId = ""; var publicIp = ""
     var networkMode = ""
     var ec2Id = ""; var ec2Type = ""; var ec2Priv = ""; var ec2Pub = ""
-    val ciArn = jOptStr(task, "containerInstanceArn")
+    val ciArn = opt(task, "containerInstanceArn")
 
-    val eni = jArr(task, "attachments").find(a =>
-      jStr(a, "type") == "ElasticNetworkInterface")
+    val eni = list(task, "attachments").find(a =>
+      str(a, "type") == "ElasticNetworkInterface")
     eni match {
       case Some(att) =>
         networkMode = "awsvpc"
         var eniId = ""
-        jArr(att, "details").foreach { d =>
-          jStr(d, "name") match {
-            case "privateIPv4Address" => ipAddress = jStr(d, "value")
-            case "subnetId" => subnetId = jStr(d, "value")
-            case "networkInterfaceId" => eniId = jStr(d, "value")
+        list(att, "details").foreach { d =>
+          str(d, "name") match {
+            case "privateIPv4Address" => ipAddress = str(d, "value")
+            case "subnetId" => subnetId = str(d, "value")
+            case "networkInterfaceId" => eniId = str(d, "value")
             case _ => ()
           }
         }
@@ -295,18 +280,18 @@ object EcsSd {
     if (ipAddress.isEmpty) return None
 
     var l = Map(
-      "__meta_ecs_cluster_arn" -> jStr(cluster, "clusterArn"),
-      "__meta_ecs_cluster" -> jStr(cluster, "clusterName"),
-      "__meta_ecs_task_group" -> jStr(task, "group"),
-      "__meta_ecs_task_arn" -> jStr(task, "taskArn"),
-      "__meta_ecs_task_definition" -> jStr(task, "taskDefinitionArn"),
+      "__meta_ecs_cluster_arn" -> str(cluster, "clusterArn"),
+      "__meta_ecs_cluster" -> str(cluster, "clusterName"),
+      "__meta_ecs_task_group" -> str(task, "group"),
+      "__meta_ecs_task_arn" -> str(task, "taskArn"),
+      "__meta_ecs_task_definition" -> str(task, "taskDefinitionArn"),
       "__meta_ecs_ip_address" -> ipAddress,
       "__meta_ecs_region" -> region,
-      "__meta_ecs_launch_type" -> jStr(task, "launchType"),
-      "__meta_ecs_availability_zone" -> jStr(task, "availabilityZone"),
-      "__meta_ecs_desired_status" -> jStr(task, "desiredStatus"),
-      "__meta_ecs_last_status" -> jStr(task, "lastStatus"),
-      "__meta_ecs_health_status" -> jStr(task, "healthStatus"),
+      "__meta_ecs_launch_type" -> str(task, "launchType"),
+      "__meta_ecs_availability_zone" -> str(task, "availabilityZone"),
+      "__meta_ecs_desired_status" -> str(task, "desiredStatus"),
+      "__meta_ecs_last_status" -> str(task, "lastStatus"),
+      "__meta_ecs_health_status" -> str(task, "healthStatus"),
       "__meta_ecs_network_mode" -> networkMode)
     if (subnetId.nonEmpty) l += "__meta_ecs_subnet_id" -> subnetId
     ciArn.foreach(arn => l += "__meta_ecs_container_instance_arn" -> arn)
@@ -315,19 +300,19 @@ object EcsSd {
     if (ec2Priv.nonEmpty) l += "__meta_ecs_ec2_instance_private_ip" -> ec2Priv
     if (ec2Pub.nonEmpty) l += "__meta_ecs_ec2_instance_public_ip" -> ec2Pub
     if (publicIp.nonEmpty) l += "__meta_ecs_public_ip" -> publicIp
-    jOptStr(task, "platformFamily").foreach(v =>
+    opt(task, "platformFamily").foreach(v =>
       l += "__meta_ecs_platform_family" -> v)
-    jOptStr(task, "platformVersion").foreach(v =>
+    opt(task, "platformVersion").foreach(v =>
       l += "__meta_ecs_platform_version" -> v)
 
     l ++= tagLabels(cluster, "__meta_ecs_tag_cluster_")
     // service:<name> task groups pull service info + tags
-    val group = jStr(task, "group")
+    val group = str(task, "group")
     if (group.startsWith("service:")) {
       val svc = services.getOrElse(group.stripPrefix("service:"), Map.empty)
-      jOptStr(svc, "serviceName").foreach(v => l += "__meta_ecs_service" -> v)
-      jOptStr(svc, "serviceArn").foreach(v => l += "__meta_ecs_service_arn" -> v)
-      jOptStr(svc, "status").foreach(v => l += "__meta_ecs_service_status" -> v)
+      opt(svc, "serviceName").foreach(v => l += "__meta_ecs_service" -> v)
+      opt(svc, "serviceArn").foreach(v => l += "__meta_ecs_service_arn" -> v)
+      opt(svc, "status").foreach(v => l += "__meta_ecs_service_status" -> v)
       l ++= tagLabels(svc, "__meta_ecs_tag_service_")
     }
     l ++= tagLabels(task, "__meta_ecs_tag_task_")

@@ -17,19 +17,8 @@ object EurekaSd {
   trait ApiClient { def apps(): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def apps(): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(
-            java.net.URI.create(cfg.server.stripSuffix("/") + "/apps"))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/xml").GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"eureka sd: ${resp.statusCode()}")
-      resp.body()
-    }
+    override def apps(): String =
+      SdHttp.get("eureka", cfg.server.stripSuffix("/") + "/apps", accept = "application/xml")
   }
 
   private def parseXml(xml: String): org.w3c.dom.Document = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** GCE service discovery (ref: discovery/gce/gce.go).
   *
@@ -33,83 +34,55 @@ object GceSd {
       (if (cfg.endpoint.nonEmpty) cfg.endpoint.stripSuffix("/")
        else "https://compute.googleapis.com/compute/v1") +
       s"/projects/${cfg.project}/zones/${cfg.zone}/instances"
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
+    private val tokenUrl = "http://metadata.google.internal/computeMetadata/v1" +
+      "/instance/service-accounts/default/token"
     /** metadata-server access token (GCE-internal default credentials) */
     private def token(): String = {
-      val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(
-          "http://metadata.google.internal/computeMetadata/v1/instance/service-accounts/default/token"))
-        .header("Metadata-Flavor", "Google")
+      val req = SdHttp.request(tokenUrl, Seq("Metadata-Flavor" -> "Google"))
         .timeout(java.time.Duration.ofSeconds(5)).GET().build()
-      val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-      JsonLite.parse(resp.body()) match {
-        case m: Map[_, _] => String.valueOf(
-          m.asInstanceOf[Map[String, Any]].getOrElse("access_token", ""))
-        case _ => ""
-      }
+      str(map(JsonLite.parse(SdHttp.exchange("gce", req).body())), "access_token")
     }
-    override def listInstances(pageToken: Option[String]): String = {
-      val url = base + pageToken.map(t =>
-        "?pageToken=" + java.net.URLEncoder.encode(t, "UTF-8")).getOrElse("")
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Authorization", "Bearer " + token())
-          .header("Accept", "application/json").GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"gce sd: status ${resp.statusCode()}")
-      resp.body()
-    }
+    override def listInstances(pageToken: Option[String]): String =
+      SdHttp.get("gce", base + pageToken.map(t =>
+        "?pageToken=" + java.net.URLEncoder.encode(t, "UTF-8")).getOrElse(""),
+        SdHttp.bearer(token()))
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[Any] = v match { case l: List[_] => l; case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
 
   private def buildInstance(inst: J, cfg: Config): Option[(String, Map[String, String])] = {
-    val ifaces = jlist(inst.getOrElse("networkInterfaces", null)).map(jmap)
+    val ifaces = list(inst, "networkInterfaces")
     if (ifaces.isEmpty) return None
     val pri = ifaces.head
     var l = Map(
       "__meta_gce_project" -> cfg.project,
-      "__meta_gce_zone" -> s(inst, "zone"),
-      "__meta_gce_instance_id" -> s(inst, "id"),
-      "__meta_gce_instance_name" -> s(inst, "name"),
-      "__meta_gce_instance_status" -> s(inst, "status"),
-      "__meta_gce_machine_type" -> s(inst, "machineType"),
-      "__meta_gce_network" -> s(pri, "network"),
-      "__meta_gce_subnetwork" -> s(pri, "subnetwork"),
-      "__meta_gce_private_ip" -> s(pri, "networkIP"))
+      "__meta_gce_zone" -> str(inst, "zone"),
+      "__meta_gce_instance_id" -> str(inst, "id"),
+      "__meta_gce_instance_name" -> str(inst, "name"),
+      "__meta_gce_instance_status" -> str(inst, "status"),
+      "__meta_gce_machine_type" -> str(inst, "machineType"),
+      "__meta_gce_network" -> str(pri, "network"),
+      "__meta_gce_subnetwork" -> str(pri, "subnetwork"),
+      "__meta_gce_private_ip" -> str(pri, "networkIP"))
     ifaces.foreach { f =>
-      l += "__meta_gce_interface_ipv4_" + KubernetesSd.sanitize(s(f, "name")) ->
-        s(f, "networkIP")
+      l += "__meta_gce_interface_ipv4_" + KubernetesSd.sanitize(str(f, "name")) ->
+        str(f, "networkIP")
     }
-    val tags = jlist(jmap(inst.getOrElse("tags", null)).getOrElse("items", null)).map(jstr)
+    val tags = strs(map(inst, "tags"), "items")
     if (tags.nonEmpty)
       l += "__meta_gce_tags" -> tags.mkString(cfg.tagSeparator,
         cfg.tagSeparator, cfg.tagSeparator)
-    jlist(jmap(inst.getOrElse("metadata", null)).getOrElse("items", null)).map(jmap)
+    list(map(inst, "metadata"), "items")
       .foreach { i =>
         val v = i.getOrElse("value", null)
         if (v != null)
-          l += "__meta_gce_metadata_" + KubernetesSd.sanitize(s(i, "key")) -> jstr(v)
+          l += "__meta_gce_metadata_" + KubernetesSd.sanitize(str(i, "key")) -> str(v)
       }
-    jmap(inst.getOrElse("labels", null)).foreach { case (k, v) =>
-      l += "__meta_gce_label_" + KubernetesSd.sanitize(k) -> jstr(v) }
-    jlist(pri.getOrElse("accessConfigs", null)).map(jmap).headOption.foreach { ac =>
-      if (s(ac, "type") == "ONE_TO_ONE_NAT")
-        l += "__meta_gce_public_ip" -> s(ac, "natIP")
+    map(inst, "labels").foreach { case (k, v) =>
+      l += "__meta_gce_label_" + KubernetesSd.sanitize(k) -> str(v) }
+    list(pri, "accessConfigs").headOption.foreach { ac =>
+      if (str(ac, "type") == "ONE_TO_ONE_NAT")
+        l += "__meta_gce_public_ip" -> str(ac, "natIP")
     }
-    Some((s"${s(pri, "networkIP")}:${cfg.port}", l))
+    Some((s"${str(pri, "networkIP")}:${cfg.port}", l))
   }
 
   final class GceProvider(override val name: String, cfg: Config,
@@ -121,10 +94,10 @@ object GceSd {
       var token: Option[String] = None
       var more = true
       while (more) {
-        val page = jmap(JsonLite.parse(client.listInstances(token)))
-        jlist(page.getOrElse("items", null)).map(jmap)
+        val page = map(JsonLite.parse(client.listInstances(token)))
+        list(page, "items")
           .foreach(inst => buildInstance(inst, cfg).foreach(targets += _))
-        val next = s(page, "nextPageToken")
+        val next = str(page, "nextPageToken")
         token = if (next.nonEmpty) Some(next) else None
         more = token.isDefined
       }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Hetzner service discovery (ref: discovery/hetzner/hetzner.go; hcloud.go
   * for the Cloud role, robot.go for the dedicated-server Robot role).
@@ -32,86 +33,52 @@ object HetznerSd {
     private val base =
       if (cfg.role == "robot") "https://robot-ws.your-server.de"
       else "https://api.hetzner.cloud/v1"
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    private def token(): String =
-      if (cfg.bearerToken.nonEmpty) cfg.bearerToken
-      else if (cfg.bearerTokenFile.nonEmpty)
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(cfg.bearerTokenFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      else ""
-    override def get(path: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      if (cfg.role == "robot")
-        b.header("Authorization", "Basic " + java.util.Base64.getEncoder.encodeToString(
-          s"${cfg.username}:${cfg.password}".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      else {
-        val t = token()
-        if (t.nonEmpty) b.header("Authorization", "Bearer " + t)
-      }
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() / 100 != 2)
-        throw new IllegalStateException(s"hetzner sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String =
+      SdHttp.get("hetzner", base + path,
+        if (cfg.role == "robot") SdHttp.basic(cfg.username, cfg.password)
+        else SdHttp.bearer(cfg.bearerToken, cfg.bearerTokenFile),
+        ok = SdHttp.any2xx)
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
 
   /** ref hcloud.go:98-142 — one target per server, address public IPv4 */
   private def buildHcloudServer(sv: J, networkNames: Map[String, String],
       port: Int): (String, Map[String, String]) = {
-    val pub = m(sv, "public_net")
-    val loc = m(sv, "location")
-    val st = m(sv, "server_type")
-    val ipv4 = s(m(pub, "ipv4"), "ip")
+    val pub = map(sv, "public_net")
+    val loc = map(sv, "location")
+    val st = map(sv, "server_type")
+    val ipv4 = str(map(pub, "ipv4"), "ip")
     var l = Map(
       "__meta_hetzner_role" -> "hcloud",
-      "__meta_hetzner_server_id" -> s(sv, "id"),
-      "__meta_hetzner_server_name" -> s(sv, "name"),
-      "__meta_hetzner_server_status" -> s(sv, "status"),
+      "__meta_hetzner_server_id" -> str(sv, "id"),
+      "__meta_hetzner_server_name" -> str(sv, "name"),
+      "__meta_hetzner_server_status" -> str(sv, "status"),
       "__meta_hetzner_public_ipv4" -> ipv4,
-      "__meta_hetzner_public_ipv6_network" -> s(m(pub, "ipv6"), "ip"),
-      "__meta_hetzner_hcloud_location" -> s(loc, "name"),
-      "__meta_hetzner_hcloud_location_network_zone" -> s(loc, "network_zone"),
+      "__meta_hetzner_public_ipv6_network" -> str(map(pub, "ipv6"), "ip"),
+      "__meta_hetzner_hcloud_location" -> str(loc, "name"),
+      "__meta_hetzner_hcloud_location_network_zone" -> str(loc, "network_zone"),
       // kept for backward compatibility in the reference (hcloud.go:109-110)
-      "__meta_hetzner_hcloud_datacenter_location" -> s(loc, "name"),
-      "__meta_hetzner_hcloud_datacenter_location_network_zone" -> s(loc, "network_zone"),
-      "__meta_hetzner_hcloud_server_type" -> s(st, "name"),
-      "__meta_hetzner_hcloud_cpu_cores" -> s(st, "cores"),
-      "__meta_hetzner_hcloud_cpu_type" -> s(st, "cpu_type"),
-      "__meta_hetzner_hcloud_memory_size_gb" -> s(st, "memory"),
-      "__meta_hetzner_hcloud_disk_size_gb" -> s(st, "disk"))
-    val img = m(sv, "image")
+      "__meta_hetzner_hcloud_datacenter_location" -> str(loc, "name"),
+      "__meta_hetzner_hcloud_datacenter_location_network_zone" -> str(loc, "network_zone"),
+      "__meta_hetzner_hcloud_server_type" -> str(st, "name"),
+      "__meta_hetzner_hcloud_cpu_cores" -> str(st, "cores"),
+      "__meta_hetzner_hcloud_cpu_type" -> str(st, "cpu_type"),
+      "__meta_hetzner_hcloud_memory_size_gb" -> str(st, "memory"),
+      "__meta_hetzner_hcloud_disk_size_gb" -> str(st, "disk"))
+    val img = map(sv, "image")
     if (img.nonEmpty) l ++= Map(
-      "__meta_hetzner_hcloud_image_name" -> s(img, "name"),
-      "__meta_hetzner_hcloud_image_description" -> s(img, "description"),
-      "__meta_hetzner_hcloud_image_os_version" -> s(img, "os_version"),
-      "__meta_hetzner_hcloud_image_os_flavor" -> s(img, "os_flavor"))
-    jlist(sv.getOrElse("private_net", null)).foreach { pn =>
-      networkNames.get(s(pn, "network")).foreach { netName =>
+      "__meta_hetzner_hcloud_image_name" -> str(img, "name"),
+      "__meta_hetzner_hcloud_image_description" -> str(img, "description"),
+      "__meta_hetzner_hcloud_image_os_version" -> str(img, "os_version"),
+      "__meta_hetzner_hcloud_image_os_flavor" -> str(img, "os_flavor"))
+    list(sv, "private_net").foreach { pn =>
+      networkNames.get(str(pn, "network")).foreach { netName =>
         l += "__meta_hetzner_hcloud_private_ipv4_" + KubernetesSd.sanitize(netName) ->
-          s(pn, "ip")
+          str(pn, "ip")
       }
     }
-    m(sv, "labels").foreach { case (k, v) =>
+    map(sv, "labels").foreach { case (k, v) =>
       val sk = KubernetesSd.sanitize(k)
-      l += "__meta_hetzner_hcloud_label_" + sk -> jstr(v)
+      l += "__meta_hetzner_hcloud_label_" + sk -> str(v)
       l += "__meta_hetzner_hcloud_labelpresent_" + sk -> "true"
     }
     (s"$ipv4:$port", l)
@@ -119,25 +86,25 @@ object HetznerSd {
 
   /** ref robot.go:107-128 — one target per dedicated server */
   private def buildRobotServer(entry: J, port: Int): (String, Map[String, String]) = {
-    val sv = m(entry, "server")
-    val ip = s(sv, "server_ip")
+    val sv = map(entry, "server")
+    val ip = str(sv, "server_ip")
     var l = Map(
       "__meta_hetzner_role" -> "robot",
-      "__meta_hetzner_server_id" -> s(sv, "server_number"),
-      "__meta_hetzner_server_name" -> s(sv, "server_name"),
+      "__meta_hetzner_server_id" -> str(sv, "server_number"),
+      "__meta_hetzner_server_name" -> str(sv, "server_name"),
       // kept for backward compatibility in the reference (robot.go:112)
-      "__meta_hetzner_datacenter" -> s(sv, "dc").toLowerCase,
+      "__meta_hetzner_datacenter" -> str(sv, "dc").toLowerCase,
       "__meta_hetzner_public_ipv4" -> ip,
-      "__meta_hetzner_server_status" -> s(sv, "status"),
-      "__meta_hetzner_robot_datacenter" -> s(sv, "dc").toLowerCase,
-      "__meta_hetzner_robot_product" -> s(sv, "product"),
+      "__meta_hetzner_server_status" -> str(sv, "status"),
+      "__meta_hetzner_robot_datacenter" -> str(sv, "dc").toLowerCase,
+      "__meta_hetzner_robot_product" -> str(sv, "product"),
       "__meta_hetzner_robot_cancelled" ->
-        (sv.getOrElse("cancelled", null) == java.lang.Boolean.TRUE).toString)
+        bool(sv, "cancelled").toString)
     // the first non-v4 subnet is the public IPv6 network (ref robot.go:121-127)
-    jlist(sv.getOrElse("subnet", null))
-      .find(sn => s(sn, "ip").contains(":"))
+    list(sv, "subnet")
+      .find(sn => str(sn, "ip").contains(":"))
       .foreach(sn =>
-        l += "__meta_hetzner_public_ipv6_network" -> s"${s(sn, "ip")}/${s(sn, "mask")}")
+        l += "__meta_hetzner_public_ipv6_network" -> s"${str(sn, "ip")}/${str(sn, "mask")}")
     (s"$ip:$port", l)
   }
 
@@ -148,11 +115,11 @@ object HetznerSd {
     override def refresh(): Seq[Discovery.TargetGroup] = {
       val targets: Seq[(String, Map[String, String])] = cfg.role match {
         case "robot" =>
-          jlist(JsonLite.parse(client.get("/server"))).map(buildRobotServer(_, cfg.port))
+          list(JsonLite.parse(client.get("/server"))).map(buildRobotServer(_, cfg.port))
         case _ =>
           // network id → name, one LIST (ref hcloud.go:93)
-          val nets = jlist(jmap(JsonLite.parse(client.get("/networks"))).getOrElse("networks", null))
-            .map(n => s(n, "id") -> s(n, "name")).toMap
+          val nets = list(map(JsonLite.parse(client.get("/networks"))), "networks")
+            .map(n => str(n, "id") -> str(n, "name")).toMap
           val out = Seq.newBuilder[(String, Map[String, String])]
           var page = 1
           var more = true
@@ -160,10 +127,10 @@ object HetznerSd {
             val sel = if (cfg.labelSelector.isEmpty) ""
               else "&label_selector=" + java.net.URLEncoder.encode(cfg.labelSelector,
                 java.nio.charset.StandardCharsets.UTF_8)
-            val body = jmap(JsonLite.parse(client.get(s"/servers?page=$page&per_page=50$sel")))
-            jlist(body.getOrElse("servers", null))
+            val body = map(JsonLite.parse(client.get(s"/servers?page=$page&per_page=50$sel")))
+            list(body, "servers")
               .foreach(sv => out += buildHcloudServer(sv, nets, cfg.port))
-            val nextPage = s(jmap(m(body, "meta").getOrElse("pagination", null)), "next_page")
+            val nextPage = str(map(map(body, "meta"), "pagination"), "next_page")
             more = nextPage.nonEmpty && nextPage != "null"
             page += 1
           }

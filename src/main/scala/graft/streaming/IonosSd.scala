@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** IONOS Cloud service discovery (ref: discovery/ionos/ionos.go +
   * server.go).
@@ -25,89 +26,58 @@ object IonosSd {
   trait ApiClient { def get(path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def get(path: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create("https://api.ionos.com" + path))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      if (cfg.bearerToken.nonEmpty)
-        b.header("Authorization", "Bearer " + cfg.bearerToken)
-      else if (cfg.username.nonEmpty)
-        b.header("Authorization", "Basic " +
-          java.util.Base64.getEncoder.encodeToString(
-            s"${cfg.username}:${cfg.password}".getBytes(
-              java.nio.charset.StandardCharsets.UTF_8)))
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"ionos sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String =
+      SdHttp.get("ionos", "https://api.ionos.com" + path,
+        if (cfg.bearerToken.nonEmpty) SdHttp.bearer(cfg.bearerToken)
+        else if (cfg.username.nonEmpty) SdHttp.basic(cfg.username, cfg.password)
+        else Nil)
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
 
   final class IonosProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
     def this(name: String, cfg: Config) = this(name, cfg, new HttpApiClient(cfg))
     override def refreshMs: Long = cfg.refreshMs
     override def refresh(): Seq[Discovery.TargetGroup] = {
-      val body = jmap(JsonLite.parse(client.get(
+      val body = map(JsonLite.parse(client.get(
         s"/cloudapi/v6/datacenters/${cfg.datacenterId}/servers?depth=3")))
-      val serversId = s(body, "id")
-      val targets = jlist(body.getOrElse("items", null)).flatMap { sv =>
+      val serversId = str(body, "id")
+      val targets = list(body, "items").flatMap { sv =>
         // NIC ips, newest-first per the reference's prepend order
         var ips = List.empty[String]
         var byNic = Map.empty[String, List[String]]
-        jlist(m(m(sv, "entities"), "nics").getOrElse("items", null)).foreach { nic =>
-          val props = m(nic, "properties")
-          val nicName = { val n = s(props, "name"); if (n.isEmpty) "unnamed" else n }
-          val nicIps = (props.getOrElse("ips", null) match {
-            case l: List[_] => l; case _ => Nil
-          }).map(jstr)
+        list(map(map(sv, "entities"), "nics"), "items").foreach { nic =>
+          val props = map(nic, "properties")
+          val nicName = { val n = str(props, "name"); if (n.isEmpty) "unnamed" else n }
+          val nicIps = strs(props, "ips")
           ips = nicIps ++ ips
           byNic += nicName -> (nicIps ++ byNic.getOrElse(nicName, Nil))
         }
         if (ips.isEmpty) None // ip-less servers are dropped
         else {
-          val props = m(sv, "properties")
+          val props = map(sv, "properties")
           var l = Map(
-            "__meta_ionos_server_availability_zone" -> s(props, "availabilityZone"),
-            "__meta_ionos_server_cpu_family" -> s(props, "cpuFamily"),
+            "__meta_ionos_server_availability_zone" -> str(props, "availabilityZone"),
+            "__meta_ionos_server_cpu_family" -> str(props, "cpuFamily"),
             "__meta_ionos_server_servers_id" -> serversId,
-            "__meta_ionos_server_id" -> s(sv, "id"),
+            "__meta_ionos_server_id" -> str(sv, "id"),
             "__meta_ionos_server_ip" -> ips.mkString(",", ",", ","),
-            "__meta_ionos_server_lifecycle" -> s(m(sv, "metadata"), "state"),
-            "__meta_ionos_server_name" -> s(props, "name"),
-            "__meta_ionos_server_state" -> s(props, "vmState"),
-            "__meta_ionos_server_type" -> s(props, "type"))
+            "__meta_ionos_server_lifecycle" -> str(map(sv, "metadata"), "state"),
+            "__meta_ionos_server_name" -> str(props, "name"),
+            "__meta_ionos_server_state" -> str(props, "vmState"),
+            "__meta_ionos_server_type" -> str(props, "type"))
           byNic.foreach { case (nicName, nicIps) =>
             l += "__meta_ionos_server_nic_ip_" + KubernetesSd.sanitize(nicName) ->
               nicIps.mkString(",", ",", ",")
           }
-          val bootCdrom = s(m(props, "bootCdrom"), "id")
+          val bootCdrom = str(map(props, "bootCdrom"), "id")
           if (bootCdrom.nonEmpty)
             l += "__meta_ionos_server_boot_cdrom_id" -> bootCdrom
-          val bootVol = s(m(props, "bootVolume"), "id")
+          val bootVol = str(map(props, "bootVolume"), "id")
           if (bootVol.nonEmpty)
             l += "__meta_ionos_server_boot_volume_id" -> bootVol
           // boot image = first attached volume's image (ref server.go:146-154)
-          jlist(m(m(sv, "entities"), "volumes").getOrElse("items", null))
-            .headOption.map(v => s(m(v, "properties"), "image"))
+          list(map(map(sv, "entities"), "volumes"), "items")
+            .headOption.map(v => str(map(v, "properties"), "image"))
             .filter(_.nonEmpty)
             .foreach(img => l += "__meta_ionos_server_boot_image_id" -> img)
           Some((s"${ips.head}:${cfg.port}", l))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 import scala.collection.concurrent.TrieMap
 
@@ -91,38 +92,22 @@ object KubernetesSd {
     private val tokenFile =
       if (bearerTokenFile.nonEmpty) bearerTokenFile
       else "/var/run/secrets/kubernetes.io/serviceaccount/token"
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def get(path: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      val tf = new java.io.File(tokenFile)
-      if (tf.exists())
-        b.header("Authorization",
-          "Bearer " + new String(java.nio.file.Files.readAllBytes(tf.toPath),
-            java.nio.charset.StandardCharsets.UTF_8).trim)
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"kubernetes sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    /** the token file is re-read per request (the kubelet rotates it) */
+    private def auth: Seq[(String, String)] =
+      if (new java.io.File(tokenFile).exists()) SdHttp.bearer("", tokenFile) else Nil
+    override def get(path: String): String = SdHttp.get("kubernetes", base + path, auth)
     /** chunked watch stream — one JSON event per line, consumed lazily so
-      * the connection stays open for the server's event dribble */
+      * the connection stays open for the server's event dribble (hence no
+      * request timeout) */
     override def watch(path: String, onLine: String => Unit, stopped: () => Boolean): Unit = {
       val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
         .header("Accept", "application/json")
-      val tf = new java.io.File(tokenFile)
-      if (tf.exists())
-        b.header("Authorization",
-          "Bearer " + new String(java.nio.file.Files.readAllBytes(tf.toPath),
-            java.nio.charset.StandardCharsets.UTF_8).trim)
-      val resp = client.send(b.GET().build(),
+      auth.foreach { case (k, v) => b.header(k, v) }
+      val resp = SdHttp.client.send(b.GET().build(),
         java.net.http.HttpResponse.BodyHandlers.ofLines())
       if (resp.statusCode() != 200) {
         resp.body().close()
-        throw new IllegalStateException(s"kubernetes sd watch: ${resp.statusCode()} for $path")
+        throw new SdHttp.StatusError("kubernetes", resp.statusCode(), path)
       }
       val it = resp.body().iterator()
       try while (!stopped() && it.hasNext) {
@@ -133,21 +118,6 @@ object KubernetesSd {
   }
 
   // ------------------------------------------------------------- JSON views
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[Any] = v match { case l: List[_] => l; case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def fld(o: J, k: String): Any = o.getOrElse(k, null)
-  private def s(o: J, k: String): String = jstr(fld(o, k))
-  private def m(o: J, k: String): J = jmap(fld(o, k))
-  private def l(o: J, k: String): List[J] = jlist(fld(o, k)).map(jmap)
 
   // --------------------------------------------------------------- labeling
 
@@ -163,28 +133,28 @@ object KubernetesSd {
     * presence markers */
   private def objectMetaLabels(meta: J, role: String): Map[String, String] = {
     val p = s"__meta_kubernetes_${role}_"
-    val base = Map(p + "name" -> s(meta, "name"))
-    val lbls = m(meta, "labels").flatMap { case (k, v) =>
+    val base = Map(p + "name" -> str(meta, "name"))
+    val lbls = map(meta, "labels").flatMap { case (k, v) =>
       val sk = sanitize(k)
-      Seq(p + "label_" + sk -> jstr(v), p + "labelpresent_" + sk -> "true")
+      Seq(p + "label_" + sk -> str(v), p + "labelpresent_" + sk -> "true")
     }
-    val anns = m(meta, "annotations").flatMap { case (k, v) =>
+    val anns = map(meta, "annotations").flatMap { case (k, v) =>
       val sk = sanitize(k)
-      Seq(p + "annotation_" + sk -> jstr(v), p + "annotationpresent_" + sk -> "true")
+      Seq(p + "annotation_" + sk -> str(v), p + "annotationpresent_" + sk -> "true")
     }
     base ++ lbls ++ anns
   }
 
   /** controller owner reference (ref: pod.go GetControllerOf) */
   private def controllerOf(meta: J): Option[J] =
-    l(meta, "ownerReferences").find(r => fld(r, "controller") == java.lang.Boolean.TRUE)
+    list(meta, "ownerReferences").find(bool(_, "controller"))
 
   /** attach_metadata.node — the node's full objectMeta label set (ref:
     * endpoints.go addNodeLabels merges addObjectMetaLabels(node, RoleNode)) */
   private def nodeMetaLabels(nodesByName: Map[String, J], nodeName: String): Map[String, String] =
     if (nodeName.isEmpty) Map.empty
     else nodesByName.get(nodeName)
-      .map(n => objectMetaLabels(m(n, "metadata"), "node"))
+      .map(n => objectMetaLabels(map(n, "metadata"), "node"))
       .getOrElse(Map.empty)
 
   /** attach_metadata.namespace — labels/annotations only, the name is already
@@ -192,7 +162,7 @@ object KubernetesSd {
     * addNamespaceMetaLabels) */
   private def namespaceMetaLabels(nsByName: Map[String, J], ns: String): Map[String, String] =
     nsByName.get(ns).map { nsObj =>
-      objectMetaLabels(m(nsObj, "metadata"), "namespace") - "__meta_kubernetes_namespace_name"
+      objectMetaLabels(map(nsObj, "metadata"), "namespace") - "__meta_kubernetes_namespace_name"
     }.getOrElse(Map.empty)
 
   // ------------------------------------------------------------------- pod
@@ -207,16 +177,16 @@ object KubernetesSd {
 
   /** ref: pod.go podLabels + buildPod */
   private def podSharedLabels(pod: J, podMeta: PodMeta = PodMeta()): Map[String, String] = {
-    val meta = m(pod, "metadata"); val spec = m(pod, "spec"); val status = m(pod, "status")
-    val ready = l(status, "conditions")
-      .find(c => s(c, "type") == "Ready")
-      .map(c => s(c, "status").toLowerCase == "true").getOrElse(false)
+    val meta = map(pod, "metadata"); val spec = map(pod, "spec"); val status = map(pod, "status")
+    val ready = list(status, "conditions")
+      .find(c => str(c, "type") == "Ready")
+      .map(c => str(c, "status").toLowerCase == "true").getOrElse(false)
     val ctrl = controllerOf(meta).toSeq.flatMap { o =>
-      val kind = s(o, "kind"); val cname = s(o, "name")
+      val kind = str(o, "kind"); val cname = str(o, "name")
       val base = Seq("__meta_kubernetes_pod_controller_kind" -> kind,
           "__meta_kubernetes_pod_controller_name" -> cname)
         .filter(_._2.nonEmpty)
-      val key = s(meta, "namespace") + "/" + cname
+      val key = str(meta, "namespace") + "/" + cname
       val extra = kind match {
         case "ReplicaSet" =>
           podMeta.deploymentByRs.flatMap(_.get(key))
@@ -230,13 +200,13 @@ object KubernetesSd {
       base ++ extra
     }
     Map(
-      "__meta_kubernetes_namespace" -> s(meta, "namespace"),
-      "__meta_kubernetes_pod_ip" -> s(status, "podIP"),
+      "__meta_kubernetes_namespace" -> str(meta, "namespace"),
+      "__meta_kubernetes_pod_ip" -> str(status, "podIP"),
       "__meta_kubernetes_pod_ready" -> ready.toString,
-      "__meta_kubernetes_pod_phase" -> s(status, "phase"),
-      "__meta_kubernetes_pod_node_name" -> s(spec, "nodeName"),
-      "__meta_kubernetes_pod_host_ip" -> s(status, "hostIP"),
-      "__meta_kubernetes_pod_uid" -> s(meta, "uid")) ++
+      "__meta_kubernetes_pod_phase" -> str(status, "phase"),
+      "__meta_kubernetes_pod_node_name" -> str(spec, "nodeName"),
+      "__meta_kubernetes_pod_host_ip" -> str(status, "hostIP"),
+      "__meta_kubernetes_pod_uid" -> str(meta, "uid")) ++
       objectMetaLabels(meta, "pod") ++ ctrl
   }
 
@@ -246,33 +216,33 @@ object KubernetesSd {
     * the node's objectMeta labels into the group's shared labels). */
   private def buildPod(pod: J, nodesByName: Map[String, J],
       podMeta: PodMeta = PodMeta()): TargetGroup = {
-    val meta = m(pod, "metadata"); val spec = m(pod, "spec"); val status = m(pod, "status")
-    val source = s"pod/${s(meta, "namespace")}/${s(meta, "name")}"
-    val podIP = s(status, "podIP")
+    val meta = map(pod, "metadata"); val spec = map(pod, "spec"); val status = map(pod, "status")
+    val source = s"pod/${str(meta, "namespace")}/${str(meta, "name")}"
+    val podIP = str(status, "podIP")
     if (podIP.isEmpty) return TargetGroup(source, Map.empty, Nil)
-    val statuses = (l(status, "containerStatuses") ++ l(status, "initContainerStatuses"))
-      .map(cs => s(cs, "name") -> s(cs, "containerID")).toMap
-    val containers = l(spec, "containers").map((_, false)) ++
-      l(spec, "initContainers").map((_, true))
+    val statuses = (list(status, "containerStatuses") ++ list(status, "initContainerStatuses"))
+      .map(cs => str(cs, "name") -> str(cs, "containerID")).toMap
+    val containers = list(spec, "containers").map((_, false)) ++
+      list(spec, "initContainers").map((_, true))
     val targets = containers.flatMap { case (c, isInit) =>
-      val cname = s(c, "name")
+      val cname = str(c, "name")
       val common = Map(
         "__meta_kubernetes_pod_container_name" -> cname,
         "__meta_kubernetes_pod_container_id" -> statuses.getOrElse(cname, ""),
-        "__meta_kubernetes_pod_container_image" -> s(c, "image"),
+        "__meta_kubernetes_pod_container_image" -> str(c, "image"),
         "__meta_kubernetes_pod_container_init" -> isInit.toString)
-      val ports = l(c, "ports")
+      val ports = list(c, "ports")
       if (ports.isEmpty) Seq((podIP, common))
       else ports.map { p =>
-        val num = s(p, "containerPort")
+        val num = str(p, "containerPort")
         (hostPort(podIP, num), common ++ Map(
-          "__meta_kubernetes_pod_container_port_name" -> s(p, "name"),
+          "__meta_kubernetes_pod_container_port_name" -> str(p, "name"),
           "__meta_kubernetes_pod_container_port_number" -> num,
-          "__meta_kubernetes_pod_container_port_protocol" -> s(p, "protocol")))
+          "__meta_kubernetes_pod_container_port_protocol" -> str(p, "protocol")))
       }
     }
     TargetGroup(source,
-      podSharedLabels(pod, podMeta) ++ nodeMetaLabels(nodesByName, s(spec, "nodeName")),
+      podSharedLabels(pod, podMeta) ++ nodeMetaLabels(nodesByName, str(spec, "nodeName")),
       targets)
   }
 
@@ -284,24 +254,24 @@ object KubernetesSd {
     Seq("InternalIP", "InternalDNS", "ExternalIP", "ExternalDNS", "LegacyHostIP", "Hostname")
 
   private def buildNode(node: J): Option[TargetGroup] = {
-    val meta = m(node, "metadata"); val spec = m(node, "spec"); val status = m(node, "status")
-    val source = s"node/${s(meta, "name")}"
-    val addrs = l(status, "addresses")
-    val byType = addrs.groupBy(a => s(a, "type"))
+    val meta = map(node, "metadata"); val spec = map(node, "spec"); val status = map(node, "status")
+    val source = s"node/${str(meta, "name")}"
+    val addrs = list(status, "addresses")
+    val byType = addrs.groupBy(a => str(a, "type"))
     val primary = nodeAddrPriority.iterator
-      .flatMap(t => byType.getOrElse(t, Nil).headOption).map(a => s(a, "address"))
+      .flatMap(t => byType.getOrElse(t, Nil).headOption).map(a => str(a, "address"))
       .toSeq.headOption
     primary.map { addr =>
-      val port = s(m(m(status, "daemonEndpoints"), "kubeletEndpoint"), "Port")
-      val conditions = l(status, "conditions").map(c =>
-        "__meta_kubernetes_node_condition_" + sanitize(s(c, "type").toLowerCase) ->
-          s(c, "status").toLowerCase).toMap
+      val port = str(map(map(status, "daemonEndpoints"), "kubeletEndpoint"), "Port")
+      val conditions = list(status, "conditions").map(c =>
+        "__meta_kubernetes_node_condition_" + sanitize(str(c, "type").toLowerCase) ->
+          str(c, "status").toLowerCase).toMap
       val addrLabels = byType.collect { case (t, as) if as.nonEmpty =>
-        sanitize("__meta_kubernetes_node_address_" + t) -> s(as.head, "address")
+        sanitize("__meta_kubernetes_node_address_" + t) -> str(as.head, "address")
       }
-      val shared = Map("__meta_kubernetes_node_provider_id" -> s(spec, "providerID")) ++
+      val shared = Map("__meta_kubernetes_node_provider_id" -> str(spec, "providerID")) ++
         conditions ++ objectMetaLabels(meta, "node")
-      val tl = addrLabels ++ Map("instance" -> s(meta, "name"))
+      val tl = addrLabels ++ Map("instance" -> str(meta, "name"))
       TargetGroup(source, shared,
         Seq((hostPort(addr, if (port.isEmpty) "10250" else port), tl)))
     }
@@ -312,26 +282,26 @@ object KubernetesSd {
   /** ref: service.go buildService — one target per port at
     * name.namespace.svc:port */
   private def buildService(svc: J): TargetGroup = {
-    val meta = m(svc, "metadata"); val spec = m(svc, "spec")
-    val ns = s(meta, "namespace"); val name = s(meta, "name")
+    val meta = map(svc, "metadata"); val spec = map(svc, "spec")
+    val ns = str(meta, "namespace"); val name = str(meta, "name")
     val source = s"svc/$ns/$name"
-    val svcType = s(spec, "type")
+    val svcType = str(spec, "type")
     val shared = Map("__meta_kubernetes_namespace" -> ns) ++
       objectMetaLabels(meta, "service")
-    val targets = l(spec, "ports").map { p =>
-      val port = s(p, "port")
+    val targets = list(spec, "ports").map { p =>
+      val port = str(p, "port")
       val tl0 = Map(
-        "__meta_kubernetes_service_port_name" -> s(p, "name"),
+        "__meta_kubernetes_service_port_name" -> str(p, "name"),
         "__meta_kubernetes_service_port_number" -> port,
-        "__meta_kubernetes_service_port_protocol" -> s(p, "protocol"),
+        "__meta_kubernetes_service_port_protocol" -> str(p, "protocol"),
         "__meta_kubernetes_service_type" -> svcType)
       val tl1 =
         if (svcType == "ExternalName")
-          tl0 + ("__meta_kubernetes_service_external_name" -> s(spec, "externalName"))
-        else tl0 + ("__meta_kubernetes_service_cluster_ip" -> s(spec, "clusterIP"))
+          tl0 + ("__meta_kubernetes_service_external_name" -> str(spec, "externalName"))
+        else tl0 + ("__meta_kubernetes_service_cluster_ip" -> str(spec, "clusterIP"))
       val tl2 =
         if (svcType == "LoadBalancer")
-          tl1 + ("__meta_kubernetes_service_loadbalancer_ip" -> s(spec, "loadBalancerIP"))
+          tl1 + ("__meta_kubernetes_service_loadbalancer_ip" -> str(spec, "loadBalancerIP"))
         else tl1
       (hostPort(s"$name.$ns.svc", port), tl2)
     }
@@ -345,68 +315,68 @@ object KubernetesSd {
     * merge the pod's shared labels and the matching container port labels */
   private def buildEndpoints(eps: J, podsByKey: Map[String, J],
       nodesByName: Map[String, J], podMeta: PodMeta): TargetGroup = {
-    val meta = m(eps, "metadata")
-    val ns = s(meta, "namespace"); val name = s(meta, "name")
+    val meta = map(eps, "metadata")
+    val ns = str(meta, "namespace"); val name = str(meta, "name")
     val source = s"endpoints/$ns/$name"
     val shared = Map(
       "__meta_kubernetes_namespace" -> ns,
       "__meta_kubernetes_service_name" -> name) ++ // service of the same name
       objectMetaLabels(meta, "endpoints")
     val targets = Seq.newBuilder[(String, Map[String, String])]
-    for (ss <- l(eps, "subsets"); port <- l(ss, "ports")) {
-      val portNum = s(port, "port")
+    for (ss <- list(eps, "subsets"); port <- list(ss, "ports")) {
+      val portNum = str(port, "port")
       def add(addr: J, ready: String): Unit = {
-        val ip = s(addr, "ip")
+        val ip = str(addr, "ip")
         var tl = Map(
-          "__meta_kubernetes_endpoint_port_name" -> s(port, "name"),
-          "__meta_kubernetes_endpoint_port_protocol" -> s(port, "protocol"),
+          "__meta_kubernetes_endpoint_port_name" -> str(port, "name"),
+          "__meta_kubernetes_endpoint_port_protocol" -> str(port, "protocol"),
           "__meta_kubernetes_endpoint_ready" -> ready)
-        val ref = m(addr, "targetRef")
+        val ref = map(addr, "targetRef")
         if (ref.nonEmpty)
           tl ++= Map(
-            "__meta_kubernetes_endpoint_address_target_kind" -> s(ref, "kind"),
-            "__meta_kubernetes_endpoint_address_target_name" -> s(ref, "name"))
-        val nodeName = s(addr, "nodeName")
+            "__meta_kubernetes_endpoint_address_target_kind" -> str(ref, "kind"),
+            "__meta_kubernetes_endpoint_address_target_name" -> str(ref, "name"))
+        val nodeName = str(addr, "nodeName")
         if (nodeName.nonEmpty) tl += "__meta_kubernetes_endpoint_node_name" -> nodeName
-        val hostname = s(addr, "hostname")
+        val hostname = str(addr, "hostname")
         if (hostname.nonEmpty) tl += "__meta_kubernetes_endpoint_hostname" -> hostname
         // attach_metadata.node (ref: endpoints.go:390-395 — the address's
         // node if set, else a Node-kind targetRef)
         if (nodesByName.nonEmpty) {
           val nn = if (nodeName.nonEmpty) nodeName
-            else if (s(ref, "kind") == "Node") s(ref, "name") else ""
+            else if (str(ref, "kind") == "Node") str(ref, "name") else ""
           tl ++= nodeMetaLabels(nodesByName, nn)
         }
         // pod-backed address: merge the pod's standard labels + container port
-        if (s(ref, "kind") == "Pod") {
-          podsByKey.get(s(ref, "namespace") + "/" + s(ref, "name")).foreach { pod =>
+        if (str(ref, "kind") == "Pod") {
+          podsByKey.get(str(ref, "namespace") + "/" + str(ref, "name")).foreach { pod =>
             tl ++= podSharedLabels(pod, podMeta) - "__meta_kubernetes_namespace"
-            val spec = m(pod, "spec")
-            val containers = l(spec, "containers").map((_, false)) ++
-              l(spec, "initContainers").map((_, true))
+            val spec = map(pod, "spec")
+            val containers = list(spec, "containers").map((_, false)) ++
+              list(spec, "initContainers").map((_, true))
             containers.iterator.flatMap { case (c, isInit) =>
-              l(c, "ports").find(p => s(p, "containerPort") == portNum)
+              list(c, "ports").find(p => str(p, "containerPort") == portNum)
                 .map(p => (c, isInit, p))
             }.take(1).foreach { case (c, isInit, p) =>
-              val cname = s(c, "name")
-              val statuses = (l(m(pod, "status"), "containerStatuses") ++
-                l(m(pod, "status"), "initContainerStatuses"))
-                .map(cs => s(cs, "name") -> s(cs, "containerID")).toMap
+              val cname = str(c, "name")
+              val statuses = (list(map(pod, "status"), "containerStatuses") ++
+                list(map(pod, "status"), "initContainerStatuses"))
+                .map(cs => str(cs, "name") -> str(cs, "containerID")).toMap
               tl ++= Map(
                 "__meta_kubernetes_pod_container_name" -> cname,
                 "__meta_kubernetes_pod_container_id" -> statuses.getOrElse(cname, ""),
-                "__meta_kubernetes_pod_container_image" -> s(c, "image"),
-                "__meta_kubernetes_pod_container_port_name" -> s(p, "name"),
+                "__meta_kubernetes_pod_container_image" -> str(c, "image"),
+                "__meta_kubernetes_pod_container_port_name" -> str(p, "name"),
                 "__meta_kubernetes_pod_container_port_number" -> portNum,
-                "__meta_kubernetes_pod_container_port_protocol" -> s(port, "protocol"),
+                "__meta_kubernetes_pod_container_port_protocol" -> str(port, "protocol"),
                 "__meta_kubernetes_pod_container_init" -> isInit.toString)
             }
           }
         }
         targets += ((hostPort(ip, portNum), tl))
       }
-      l(ss, "addresses").foreach(add(_, "true"))
-      l(ss, "notReadyAddresses").foreach(add(_, "false"))
+      list(ss, "addresses").foreach(add(_, "true"))
+      list(ss, "notReadyAddresses").foreach(add(_, "false"))
     }
     TargetGroup(source, shared, targets.result())
   }
@@ -415,43 +385,43 @@ object KubernetesSd {
     * endpoints with the endpointslice meta prefix + conditions */
   private def buildEndpointSlice(es: J, podsByKey: Map[String, J],
       nodesByName: Map[String, J], podMeta: PodMeta): TargetGroup = {
-    val meta = m(es, "metadata")
-    val ns = s(meta, "namespace"); val name = s(meta, "name")
+    val meta = map(es, "metadata")
+    val ns = str(meta, "namespace"); val name = str(meta, "name")
     val source = s"endpointslice/$ns/$name"
-    val svcName = m(meta, "labels").get("kubernetes.io/service-name").map(jstr).getOrElse("")
+    val svcName = str(map(meta, "labels"), "kubernetes.io/service-name")
     val shared = Map(
       "__meta_kubernetes_namespace" -> ns,
       "__meta_kubernetes_endpointslice_name" -> name,
-      "__meta_kubernetes_endpointslice_address_type" -> s(es, "addressType")) ++
+      "__meta_kubernetes_endpointslice_address_type" -> str(es, "addressType")) ++
       (if (svcName.nonEmpty) Map("__meta_kubernetes_service_name" -> svcName) else Map.empty)
     val targets = Seq.newBuilder[(String, Map[String, String])]
-    for (port <- l(es, "ports"); ep <- l(es, "endpoints")) {
-      val portNum = s(port, "port")
-      val cond = m(ep, "conditions")
-      val ready = fld(cond, "ready") != java.lang.Boolean.FALSE
-      jlist(fld(ep, "addresses")).map(jstr).headOption.foreach { ip =>
+    for (port <- list(es, "ports"); ep <- list(es, "endpoints")) {
+      val portNum = str(port, "port")
+      val cond = map(ep, "conditions")
+      val ready = cond.getOrElse("ready", null) != java.lang.Boolean.FALSE
+      strs(ep, "addresses").headOption.foreach { ip =>
         var tl = Map(
           "__meta_kubernetes_endpointslice_port" -> portNum,
-          "__meta_kubernetes_endpointslice_port_name" -> s(port, "name"),
-          "__meta_kubernetes_endpointslice_port_protocol" -> s(port, "protocol"),
+          "__meta_kubernetes_endpointslice_port_name" -> str(port, "name"),
+          "__meta_kubernetes_endpointslice_port_protocol" -> str(port, "protocol"),
           "__meta_kubernetes_endpointslice_endpoint_conditions_ready" -> ready.toString)
-        val ref = m(ep, "targetRef")
+        val ref = map(ep, "targetRef")
         if (ref.nonEmpty)
           tl ++= Map(
-            "__meta_kubernetes_endpointslice_address_target_kind" -> s(ref, "kind"),
-            "__meta_kubernetes_endpointslice_address_target_name" -> s(ref, "name"))
-        val nodeName = s(ep, "nodeName")
+            "__meta_kubernetes_endpointslice_address_target_kind" -> str(ref, "kind"),
+            "__meta_kubernetes_endpointslice_address_target_name" -> str(ref, "name"))
+        val nodeName = str(ep, "nodeName")
         if (nodeName.nonEmpty)
           tl += "__meta_kubernetes_endpointslice_endpoint_topology_kubernetes_io_hostname" -> nodeName
         // attach_metadata.node (ref: endpointslice.go — endpoint nodeName,
         // else a Node-kind targetRef)
         if (nodesByName.nonEmpty) {
           val nn = if (nodeName.nonEmpty) nodeName
-            else if (s(ref, "kind") == "Node") s(ref, "name") else ""
+            else if (str(ref, "kind") == "Node") str(ref, "name") else ""
           tl ++= nodeMetaLabels(nodesByName, nn)
         }
-        if (s(ref, "kind") == "Pod")
-          podsByKey.get(s(ref, "namespace") + "/" + s(ref, "name")).foreach { pod =>
+        if (str(ref, "kind") == "Pod")
+          podsByKey.get(str(ref, "namespace") + "/" + str(ref, "name")).foreach { pod =>
             tl ++= podSharedLabels(pod, podMeta) - "__meta_kubernetes_namespace"
           }
         targets += ((hostPort(ip, portNum), tl))
@@ -465,24 +435,24 @@ object KubernetesSd {
   /** ref: ingress.go buildIngress — one target per rule host × path; scheme
     * https when a TLS host pattern matches the rule host */
   private def buildIngress(ing: J): TargetGroup = {
-    val meta = m(ing, "metadata"); val spec = m(ing, "spec")
-    val ns = s(meta, "namespace"); val name = s(meta, "name")
+    val meta = map(ing, "metadata"); val spec = map(ing, "spec")
+    val ns = str(meta, "namespace"); val name = str(meta, "name")
     val source = s"ingress/$ns/$name"
-    val cls = s(spec, "ingressClassName")
+    val cls = str(spec, "ingressClassName")
     val shared = Map("__meta_kubernetes_namespace" -> ns) ++
       objectMetaLabels(meta, "ingress") ++
       (if (cls.nonEmpty) Map("__meta_kubernetes_ingress_class_name" -> cls) else Map.empty)
-    val tlsHosts = l(spec, "tls").flatMap(t => jlist(fld(t, "hosts")).map(jstr))
+    val tlsHosts = list(spec, "tls").flatMap(strs(_, "hosts"))
     def matchesPattern(pattern: String, host: String): Boolean = {
       if (pattern == host) return true
       val pp = pattern.split('.'); val hp = host.split('.')
       pp.headOption.contains("*") && pp.length == hp.length &&
         pp.tail.sameElements(hp.tail)
     }
-    val targets = l(spec, "rules").flatMap { rule =>
-      val host = s(rule, "host")
+    val targets = list(spec, "rules").flatMap { rule =>
+      val host = str(rule, "host")
       val scheme = if (tlsHosts.exists(matchesPattern(_, host))) "https" else "http"
-      val paths0 = l(m(rule, "http"), "paths").map(p => s(p, "path")).filter(_.nonEmpty)
+      val paths0 = list(map(rule, "http"), "paths").map(p => str(p, "path")).filter(_.nonEmpty)
       val paths = if (paths0.isEmpty) Seq("/") else paths0
       paths.map(path => (host, Map(
         "__meta_kubernetes_ingress_scheme" -> scheme,
@@ -526,7 +496,7 @@ object KubernetesSd {
       query: String = ""): List[J] = {
     val nss = if (namespaces.isEmpty) Seq("") else namespaces
     nss.flatMap(ns =>
-      l(jmap(JsonLite.parse(client.get(listPath(role, ns) + query))), "items")).toList
+      list(map(JsonLite.parse(client.get(listPath(role, ns) + query))), "items")).toList
   }
 
   // -------------------------------------------------------------- informers
@@ -566,30 +536,30 @@ object KubernetesSd {
     @volatile private[streaming] var events = 0L
 
     private def path = listPath(resource, namespace)
-    private def okey(meta: J): String = s(meta, "namespace") + "/" + s(meta, "name")
+    private def okey(meta: J): String = str(meta, "namespace") + "/" + str(meta, "name")
 
     private[streaming] def relist(): Unit = {
-      val body = jmap(JsonLite.parse(client.get(path + query)))
+      val body = map(JsonLite.parse(client.get(path + query)))
       // populate a LOCAL map and publish it with one volatile write:
       // snapshot() reads concurrently from the manager poll thread, and the
       // "previous objects while a relist is pending" contract requires it
       // to see either the complete old or the complete new state
       val fresh = new java.util.concurrent.ConcurrentHashMap[String, J]()
-      l(body, "items").foreach(o => fresh.put(okey(m(o, "metadata")), o))
-      rv = s(m(body, "metadata"), "resourceVersion")
+      list(body, "items").foreach(o => fresh.put(okey(map(o, "metadata")), o))
+      rv = str(map(body, "metadata"), "resourceVersion")
       byKey = fresh
       lists += 1
       valid = true
     }
 
     private def handle(line: String): Unit = {
-      val ev = jmap(JsonLite.parse(line))
-      val obj = m(ev, "object")
-      val orv = s(m(obj, "metadata"), "resourceVersion")
+      val ev = map(JsonLite.parse(line))
+      val obj = map(ev, "object")
+      val orv = str(map(obj, "metadata"), "resourceVersion")
       events += 1
-      s(ev, "type") match {
-        case "ADDED" | "MODIFIED" => byKey.put(okey(m(obj, "metadata")), obj)
-        case "DELETED" => byKey.remove(okey(m(obj, "metadata")))
+      str(ev, "type") match {
+        case "ADDED" | "MODIFIED" => byKey.put(okey(map(obj, "metadata")), obj)
+        case "DELETED" => byKey.remove(okey(map(obj, "metadata")))
         case "BOOKMARK" => ()
         case "ERROR" => valid = false // 410 Gone etc → relist from scratch
         case _ => ()
@@ -700,21 +670,21 @@ object KubernetesSd {
       val nodes: Map[String, J] =
         if (cfg.attachMetadata.node && cfg.role != "node")
           objs("node", Nil, q("node"))
-            .map(n => s(m(n, "metadata"), "name") -> n).toMap
+            .map(n => str(map(n, "metadata"), "name") -> n).toMap
         else Map.empty
       val nsMeta: Map[String, J] =
         if (cfg.attachMetadata.namespace && cfg.role != "node")
           objs("namespace", Nil)
-            .map(n => s(m(n, "metadata"), "name") -> n).toMap
+            .map(n => str(map(n, "metadata"), "name") -> n).toMap
         else Map.empty
       // attach_metadata.{deployment,cronjob}: owner-name lookup tables from
       // one ReplicaSet / Job LIST (ref pod.go podLabels owner-chain walk)
       val podRoles = Set("pod", "endpoints", "endpointslice")
       def ownerIndex(resource: String, ownerKind: String): Map[String, String] =
         objs(resource, nss).flatMap { o =>
-          val meta = m(o, "metadata")
-          controllerOf(meta).filter(r => s(r, "kind") == ownerKind)
-            .map(r => s(meta, "namespace") + "/" + s(meta, "name") -> s(r, "name"))
+          val meta = map(o, "metadata")
+          controllerOf(meta).filter(r => str(r, "kind") == ownerKind)
+            .map(r => str(meta, "namespace") + "/" + str(meta, "name") -> str(r, "name"))
         }.toMap
       val podMeta = PodMeta(
         jobName = cfg.attachMetadata.job,
@@ -761,7 +731,7 @@ object KubernetesSd {
     private var lastSources: Set[String] = Set.empty
     private def podIndex(namespaces: Seq[String]): Map[String, J] =
       objs("pod", namespaces, selQuery(cfg.selectors, "pod"))
-        .map(p => s(m(p, "metadata"), "namespace") + "/" + s(m(p, "metadata"), "name") -> p)
+        .map(p => str(map(p, "metadata"), "namespace") + "/" + str(map(p, "metadata"), "name") -> p)
         .toMap
   }
 

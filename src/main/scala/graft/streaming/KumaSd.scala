@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.{Json, JsonLite}
+import SdJson._
 
 /** Kuma MADS (xDS v3) service discovery (ref: discovery/xds/xds.go,
   * client.go, kuma.go).
@@ -34,34 +35,21 @@ object KumaSd {
       "/v3/discovery:monitoringassignments?fetch-timeout=" +
       java.net.URLEncoder.encode(s"${cfg.fetchTimeoutMs / 1000}s",
         java.nio.charset.StandardCharsets.UTF_8)
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
+    /** a long poll: the server holds the request up to the fetch timeout */
     override def fetch(body: String): Option[String] = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+      val resp = SdHttp.exchange("kuma",
+        SdHttp.request(url, Seq("Content-Type" -> "application/json"))
           .timeout(java.time.Duration.ofMillis(cfg.fetchTimeoutMs + 15000))
-          .header("Content-Type", "application/json")
-          .header("Accept", "application/json")
           .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() == 304) None
-      else if (resp.statusCode() != 200)
-        throw new IllegalStateException(
-          s"non 200 status '${resp.statusCode()}' response during xDS fetch")
-      else Some(resp.body())
+        ok = s => s == 200 || s == 304)
+      if (resp.statusCode() == 304) None else Some(resp.body())
     }
   }
 
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s; case null => ""; case other => String.valueOf(other) }
   /** protoJSON emits lowerCamel but accepts original names — read both */
   private def s(o: J, camel: String, snake: String = ""): String = {
-    val v = jstr(o.getOrElse(camel, null))
-    if (v.nonEmpty || snake.isEmpty) v else jstr(o.getOrElse(snake, null))
+    val v = str(o, camel)
+    if (v.nonEmpty || snake.isEmpty) v else str(o, snake)
   }
 
   final class KumaProvider(override val name: String, cfg: Config,
@@ -82,21 +70,21 @@ object KumaSd {
       client.fetch(req) match {
         case None => () // 304: keep the previous target set
         case Some(body) =>
-          val resp = jmap(JsonLite.parse(body))
+          val resp = map(JsonLite.parse(body))
           val typeUrl = s(resp, "typeUrl", "type_url")
           if (typeUrl.nonEmpty && typeUrl != resourceTypeUrl)
             throw new IllegalStateException(
               s"received invalid typeURL for Kuma MADS v1 Resource: $typeUrl")
           latestNonce = s(resp, "nonce")
           latestVersion = s(resp, "versionInfo", "version_info")
-          lastTargets = jlist(resp.getOrElse("resources", null)).flatMap { res =>
+          lastTargets = list(resp, "resources").flatMap { res =>
             def userLabels(o: J): Map[String, String] =
-              jmap(o.getOrElse("labels", null)).map { case (k, v) =>
-                "__meta_kuma_label_" + KubernetesSd.sanitize(k) -> jstr(v) }
+              map(o, "labels").map { case (k, v) =>
+                "__meta_kuma_label_" + KubernetesSd.sanitize(k) -> str(v) }
             val common = userLabels(res) ++ Map(
               "__meta_kuma_mesh" -> s(res, "mesh"),
               "__meta_kuma_service" -> s(res, "service"))
-            jlist(res.getOrElse("targets", null)).map { t =>
+            list(res, "targets").map { t =>
               // assignment-level user labels win over target-level ones
               // (ref kuma.go:118 target.Merge(commonLabels))
               val l = userLabels(t) ++ common ++ Map(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** AWS Lightsail service discovery (ref: discovery/aws/lightsail.go).
   *
@@ -29,47 +30,20 @@ object LightsailSd {
   trait ApiClient { def getInstances(pageToken: Option[String]): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val host =
-      if (cfg.endpoint.nonEmpty) java.net.URI.create(cfg.endpoint).getHost
-      else s"lightsail.${cfg.region}.amazonaws.com"
-    private val base =
-      if (cfg.endpoint.nonEmpty) cfg.endpoint.stripSuffix("/")
-      else s"https://$host"
+    private val (host, base) =
+      AwsSd.endpointOf(cfg.endpoint, s"lightsail.${cfg.region}.amazonaws.com")
     private val credsProvider = AwsSd.credentials(cfg.accessKey,
       cfg.secretKey, cfg.roleArn, cfg.externalId, cfg.region, profile = cfg.profile)
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
     override def getInstances(pageToken: Option[String]): String = {
       val body = pageToken
         .map(t => s"""{"pageToken":"${graft.web.Json.escape(t)}"}""")
         .getOrElse("{}")
-      val hdrs = Ec2Sd.SigV4.headers(credsProvider.creds(), cfg.region,
-        "lightsail", host, body, java.time.Instant.now(),
+      AwsSd.post("lightsail", base, body, Ec2Sd.SigV4.headers(credsProvider.creds(),
+        cfg.region, "lightsail", host, body, java.time.Instant.now(),
         contentType = "application/x-amz-json-1.1",
-        extraSigned = Map("x-amz-target" -> "Lightsail_20161128.GetInstances"))
-      val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + "/"))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-      hdrs.foreach { case (k, v) => b.header(k, v) }
-      val resp = client.send(b.build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"lightsail sd: status ${resp.statusCode()}")
-      resp.body()
+        extraSigned = Map("x-amz-target" -> "Lightsail_20161128.GetInstances")))
     }
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
 
   final class LightsailProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
@@ -80,39 +54,37 @@ object LightsailSd {
       var token: Option[String] = None
       var more = true
       while (more) {
-        val body = jmap(JsonLite.parse(client.getInstances(token)))
-        jlist(body.getOrElse("instances", null)).foreach { inst =>
-          val priv = s(inst, "privateIpAddress")
+        val body = map(JsonLite.parse(client.getInstances(token)))
+        list(body, "instances").foreach { inst =>
+          val priv = str(inst, "privateIpAddress")
           if (priv.nonEmpty) {
             var l = Map(
               "__meta_lightsail_private_ip" -> priv,
               "__meta_lightsail_region" -> cfg.region)
-            val az = s(jmap(inst.getOrElse("location", null)), "availabilityZone")
+            val az = str(map(inst, "location"), "availabilityZone")
             if (az.nonEmpty) l += "__meta_lightsail_availability_zone" -> az
             def opt(key: String, label: String): Unit = {
-              val v = s(inst, key); if (v.nonEmpty) l += label -> v
+              val v = str(inst, key); if (v.nonEmpty) l += label -> v
             }
             opt("blueprintId", "__meta_lightsail_blueprint_id")
             opt("bundleId", "__meta_lightsail_bundle_id")
             opt("name", "__meta_lightsail_instance_name")
             opt("supportCode", "__meta_lightsail_instance_support_code")
             opt("publicIpAddress", "__meta_lightsail_public_ip")
-            val state = s(jmap(inst.getOrElse("state", null)), "name")
+            val state = str(map(inst, "state"), "name")
             if (state.nonEmpty) l += "__meta_lightsail_instance_state" -> state
-            val v6 = (inst.getOrElse("ipv6Addresses", null) match {
-              case x: List[_] => x; case _ => Nil
-            }).map(jstr)
+            val v6 = strs(inst, "ipv6Addresses")
             if (v6.nonEmpty)
               l += "__meta_lightsail_ipv6_addresses" -> v6.mkString(",", ",", ",")
-            jlist(inst.getOrElse("tags", null)).foreach { t =>
-              val k = s(t, "key"); val v = s(t, "value")
+            list(inst, "tags").foreach { t =>
+              val k = str(t, "key"); val v = str(t, "value")
               if (k.nonEmpty && v.nonEmpty)
                 l += "__meta_lightsail_tag_" + KubernetesSd.sanitize(k) -> v
             }
             targets += ((s"$priv:${cfg.port}", l))
           }
         }
-        token = Some(s(body, "nextPageToken")).filter(_.nonEmpty)
+        token = Some(str(body, "nextPageToken")).filter(_.nonEmpty)
         more = token.isDefined
       }
       Seq(Discovery.TargetGroup(cfg.region, Map.empty, targets.result()))

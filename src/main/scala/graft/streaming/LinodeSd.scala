@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Linode service discovery (ref: discovery/linode/linode.go).
   *
@@ -28,45 +29,10 @@ object LinodeSd {
   trait ApiClient { def get(path: String, filter: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    private def token(): String =
-      if (cfg.bearerToken.nonEmpty) cfg.bearerToken
-      else if (cfg.bearerTokenFile.nonEmpty)
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(cfg.bearerTokenFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      else ""
-    override def get(path: String, filter: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create("https://api.linode.com" + path))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      if (filter.nonEmpty) b.header("X-Filter", filter)
-      val t = token()
-      if (t.nonEmpty) b.header("Authorization", "Bearer " + t)
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"linode sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
-  }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def jlong(o: J, k: String): Long = o.getOrElse(k, null) match {
-    case d: java.lang.Double => d.longValue
-    case _ => 0L
+    override def get(path: String, filter: String): String =
+      SdHttp.get("linode", "https://api.linode.com" + path,
+        (if (filter.nonEmpty) Seq("X-Filter" -> filter) else Nil) ++
+          SdHttp.bearer(cfg.bearerToken, cfg.bearerTokenFile))
   }
 
   /** page through a Linode v4 collection ({data, page, pages}) */
@@ -75,10 +41,10 @@ object LinodeSd {
     var page = 1
     var pages = 1
     while (page <= pages) {
-      val body = jmap(JsonLite.parse(
+      val body = map(JsonLite.parse(
         client.get(s"$path?page=$page&page_size=500", filter)))
-      out ++= jlist(body.getOrElse("data", null))
-      pages = math.max(1, jlong(body, "pages").toInt)
+      out ++= list(body, "data")
+      pages = math.max(1, long(body, "pages").toInt)
       page += 1
     }
     out.result()
@@ -93,13 +59,11 @@ object LinodeSd {
         else s"""{"region":"${cfg.region}"}"""
       val instances = listAll(client, "/v4/linode/instances", filter)
       val ips = listAll(client, "/v4/networking/ips", filter)
-      val ipByAddr = ips.map(ip => s(ip, "address") -> ip).toMap
+      val ipByAddr = ips.map(ip => str(ip, "address") -> ip).toMap
       val v6Ranges = listAll(client, "/v4/networking/ipv6/ranges", filter)
       val sep = cfg.tagSeparator
       val targets = instances.flatMap { inst =>
-        val ipv4 = (inst.getOrElse("ipv4", null) match {
-          case l: List[_] => l; case _ => Nil
-        }).map(jstr)
+        val ipv4 = strs(inst, "ipv4")
         if (ipv4.isEmpty) None
         else {
           var privateV4 = ""; var publicV4 = ""
@@ -107,8 +71,8 @@ object LinodeSd {
           val extra = List.newBuilder[String]
           ipv4.foreach { addr =>
             ipByAddr.get(addr).foreach { det =>
-              val rdns = s(det, "rdns")
-              val pub = det.getOrElse("public", null) == java.lang.Boolean.TRUE
+              val rdns = str(det, "rdns")
+              val pub = bool(det, "public")
               if (pub && publicV4.isEmpty) {
                 publicV4 = addr
                 if (rdns.nonEmpty && rdns != "null") publicRdns = rdns
@@ -120,47 +84,44 @@ object LinodeSd {
           }
           var publicV6 = ""; var publicV6Rdns = ""
           val ranges = List.newBuilder[String]
-          val ipv6 = s(inst, "ipv6")
+          val ipv6 = str(inst, "ipv6")
           if (ipv6.nonEmpty) {
             val slaac = ipv6.split("/")(0)
             ipByAddr.get(slaac).foreach { det =>
-              publicV6 = s(det, "address")
-              val rdns = s(det, "rdns")
+              publicV6 = str(det, "address")
+              val rdns = str(det, "rdns")
               if (rdns.nonEmpty && rdns != "null") publicV6Rdns = rdns
             }
             v6Ranges.foreach { r =>
-              if (s(r, "route_target") == slaac)
-                ranges += s"${s(r, "range")}/${s(r, "prefix")}"
+              if (str(r, "route_target") == slaac)
+                ranges += s"${str(r, "range")}/${str(r, "prefix")}"
             }
           }
-          val specs = jmap(inst.getOrElse("specs", null))
-          val backups = jmap(inst.getOrElse("backups", null))
-            .getOrElse("enabled", null) == java.lang.Boolean.TRUE
+          val specs = map(inst, "specs")
+          val backups = bool(map(inst, "backups"), "enabled")
           var l = Map(
-            "__meta_linode_instance_id" -> s(inst, "id"),
-            "__meta_linode_instance_label" -> s(inst, "label"),
-            "__meta_linode_image" -> s(inst, "image"),
+            "__meta_linode_instance_id" -> str(inst, "id"),
+            "__meta_linode_instance_label" -> str(inst, "label"),
+            "__meta_linode_image" -> str(inst, "image"),
             "__meta_linode_private_ipv4" -> privateV4,
             "__meta_linode_public_ipv4" -> publicV4,
             "__meta_linode_public_ipv6" -> publicV6,
             "__meta_linode_private_ipv4_rdns" -> privateRdns,
             "__meta_linode_public_ipv4_rdns" -> publicRdns,
             "__meta_linode_public_ipv6_rdns" -> publicV6Rdns,
-            "__meta_linode_region" -> s(inst, "region"),
-            "__meta_linode_type" -> s(inst, "type"),
-            "__meta_linode_status" -> s(inst, "status"),
-            "__meta_linode_group" -> s(inst, "group"),
-            "__meta_linode_gpus" -> s(specs, "gpus"),
-            "__meta_linode_hypervisor" -> s(inst, "hypervisor"),
+            "__meta_linode_region" -> str(inst, "region"),
+            "__meta_linode_type" -> str(inst, "type"),
+            "__meta_linode_status" -> str(inst, "status"),
+            "__meta_linode_group" -> str(inst, "group"),
+            "__meta_linode_gpus" -> str(specs, "gpus"),
+            "__meta_linode_hypervisor" -> str(inst, "hypervisor"),
             "__meta_linode_backups" -> (if (backups) "enabled" else "disabled"),
             // specs are MiB/GiB-scaled in the API; labels carry bytes
-            "__meta_linode_specs_disk_bytes" -> (jlong(specs, "disk") << 20).toString,
-            "__meta_linode_specs_memory_bytes" -> (jlong(specs, "memory") << 20).toString,
-            "__meta_linode_specs_vcpus" -> s(specs, "vcpus"),
-            "__meta_linode_specs_transfer_bytes" -> (jlong(specs, "transfer") << 20).toString)
-          val tags = (inst.getOrElse("tags", null) match {
-            case t: List[_] => t; case _ => Nil
-          }).map(jstr)
+            "__meta_linode_specs_disk_bytes" -> (long(specs, "disk") << 20).toString,
+            "__meta_linode_specs_memory_bytes" -> (long(specs, "memory") << 20).toString,
+            "__meta_linode_specs_vcpus" -> str(specs, "vcpus"),
+            "__meta_linode_specs_transfer_bytes" -> (long(specs, "transfer") << 20).toString)
+          val tags = strs(inst, "tags")
           if (tags.nonEmpty)
             l += "__meta_linode_tags" -> tags.mkString(sep, sep, sep)
           val extras = extra.result()

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Marathon service discovery (ref: discovery/marathon/marathon.go).
   *
@@ -26,85 +27,52 @@ object MarathonSd {
   trait ApiClient { def get(url: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    private def token(): String =
-      if (cfg.authToken.nonEmpty) cfg.authToken
-      else if (cfg.authTokenFile.nonEmpty)
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(cfg.authTokenFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      else ""
     override def get(url: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      val t = token()
-      if (t.nonEmpty) b.header("Authorization", "token=" + t)
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"marathon sd: ${resp.statusCode()}")
-      resp.body()
+      val t = SdHttp.secret(cfg.authToken, cfg.authTokenFile)
+      SdHttp.get("marathon", url, if (t.nonEmpty) Seq("Authorization" -> s"token=$t") else Nil)
     }
   }
 
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
-  private def jint(o: J, k: String): Int = o.getOrElse(k, null) match {
-    case d: java.lang.Double => d.intValue
-    case _ => 0
-  }
   private def strMap(o: J, k: String): Map[String, String] =
-    m(o, k).map { case (kk, v) => kk -> jstr(v) }
+    map(o, k).map { case (kk, v) => kk -> str(v) }
 
   /** ref marathon.go:393-412 createTargetGroup */
   private def buildApp(app: J): Discovery.TargetGroup = {
-    val appId = s(app, "id")
-    val container = m(app, "container")
-    val containerNet = jlist(app.getOrElse("networks", null)).headOption
-      .exists(n => s(n, "mode") == "container")
+    val appId = str(app, "id")
+    val container = map(app, "container")
+    val containerNet = list(app, "networks").headOption
+      .exists(n => str(n, "mode") == "container")
     // port resolution ladder (ref marathon.go:419-452)
     val (ports0, portLabels, prefix): (List[Int], List[Map[String, String]], String) = {
-      val pm15 = jlist(container.getOrElse("portMappings", null))
-      val pmDocker = jlist(m(container, "docker").getOrElse("portMappings", null))
-      val defs = jlist(app.getOrElse("portDefinitions", null))
+      val pm15 = list(container, "portMappings")
+      val pmDocker = list(map(container, "docker"), "portMappings")
+      val defs = list(app, "portDefinitions")
       if (pm15.nonEmpty || pmDocker.nonEmpty) {
         val pms = if (pm15.nonEmpty) pm15 else pmDocker
-        (pms.map(p => if (containerNet) jint(p, "containerPort") else jint(p, "hostPort")),
+        (pms.map(p => long(p, if (containerNet) "containerPort" else "hostPort").toInt),
           pms.map(strMap(_, "labels")), "__meta_marathon_port_mapping_label_")
       } else if (defs.nonEmpty) {
-        val requirePorts = app.getOrElse("requirePorts", null) == java.lang.Boolean.TRUE
-        (defs.map(d => if (requirePorts) jint(d, "port") else 0),
+        val requirePorts = bool(app, "requirePorts")
+        (defs.map(d => if (requirePorts) long(d, "port").toInt else 0),
           defs.map(strMap(_, "labels")), "__meta_marathon_port_definition_label_")
       } else (Nil, Nil, "")
     }
-    val targets = jlist(app.getOrElse("tasks", null)).flatMap { task =>
+    val targets = list(app, "tasks").flatMap { task =>
       val taskPorts = (task.getOrElse("ports", null) match {
         case l: List[_] => l; case _ => Nil
-      }).map { case d: java.lang.Double => d.intValue; case other => jstr(other).toInt }
+      }).map { case d: java.lang.Double => d.intValue; case other => str(other).toInt }
       // host-networking apps with only `ports`: take the task's own list
       val ports = if (ports0.isEmpty) taskPorts else ports0
       val host =
         if (containerNet)
-          jlist(task.getOrElse("ipAddresses", null)).headOption
-            .map(s(_, "ipAddress")).getOrElse(s(task, "host"))
-        else s(task, "host")
+          list(task, "ipAddresses").headOption
+            .map(str(_, "ipAddress")).getOrElse(str(task, "host"))
+        else str(task, "host")
       ports.zipWithIndex.map { case (p0, i) =>
         // a zero port is Mesos-allocated — look it up in the task
         val p = if (p0 == 0 && taskPorts.length == ports.length) taskPorts(i) else p0
         var tl = Map(
-          "__meta_marathon_task" -> s(task, "id"),
+          "__meta_marathon_task" -> str(task, "id"),
           "__meta_marathon_port_index" -> i.toString)
         if (portLabels.nonEmpty)
           portLabels(i).foreach { case (ln, lv) =>
@@ -114,7 +82,7 @@ object MarathonSd {
     }
     val shared = Map(
       "__meta_marathon_app" -> appId,
-      "__meta_marathon_image" -> s(m(container, "docker"), "image")) ++
+      "__meta_marathon_image" -> str(map(container, "docker"), "image")) ++
       strMap(app, "labels").map { case (k, v) =>
         "__meta_marathon_app_label_" + KubernetesSd.sanitize(k) -> v }
     Discovery.TargetGroup(appId, shared, targets)
@@ -131,7 +99,7 @@ object MarathonSd {
         catch { case _: Exception => None }
       }.collectFirst { case Some(b) => b }
         .getOrElse(throw new IllegalStateException("marathon sd: all servers failed"))
-      jlist(jmap(JsonLite.parse(body)).getOrElse("apps", null)).map(buildApp)
+      list(map(JsonLite.parse(body)), "apps").map(buildApp)
     }
   }
 }

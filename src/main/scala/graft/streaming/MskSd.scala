@@ -1,6 +1,7 @@
 package graft.streaming
 
 import AwsSd._
+import SdJson._
 
 /** MSK (Managed Streaming for Kafka) service discovery (ref:
   * discovery/aws/msk.go).
@@ -44,33 +45,18 @@ object MskSd {
 
   /** production client: SigV4-signed GETs against the kafka REST API */
   final class HttpApiClient(cfg: Config, region: String) extends ApiClient {
-    private val host =
-      if (cfg.endpoint.nonEmpty) java.net.URI.create(cfg.endpoint).getHost
-      else s"kafka.$region.amazonaws.com"
-    private val base =
-      if (cfg.endpoint.nonEmpty) cfg.endpoint.stripSuffix("/")
-      else s"https://$host"
+    private val (host, base) =
+      AwsSd.endpointOf(cfg.endpoint, s"kafka.$region.amazonaws.com")
     private val credsProvider = AwsSd.credentials(cfg.accessKey,
       cfg.secretKey, cfg.roleArn, cfg.externalId, region, profile = cfg.profile)
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
 
+    /** SigV4 over a GET: signs the exact path and query with an empty
+      * payload hash */
     private def get(pathAndQuery: String): String = {
-      // SigV4 over GET with empty body; the signing helper canonicalizes a
-      // POST to "/", which differs from GET paths — sign manually here via
-      // the same header chain with an empty payload hash and exact path.
       val uri = java.net.URI.create(base + pathAndQuery)
-      val hdrs = Ec2Sd.SigV4.headersFor(credsProvider.creds(), region, "kafka",
-        host, "GET", uri.getRawPath,
-        Option(uri.getRawQuery).getOrElse(""), "", java.time.Instant.now())
-      val b = java.net.http.HttpRequest.newBuilder(uri)
-        .timeout(java.time.Duration.ofSeconds(30)).GET()
-      hdrs.foreach { case (k, v) => b.header(k, v) }
-      val resp = client.send(b.build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"msk sd: status ${resp.statusCode()}")
-      resp.body()
+      SdHttp.get("msk", uri.toString, Ec2Sd.SigV4.headersFor(credsProvider.creds(),
+        region, "kafka", host, "GET", uri.getRawPath,
+        Option(uri.getRawQuery).getOrElse(""), "", java.time.Instant.now()), accept = "")
     }
 
     private def enc(s: String): String =
@@ -102,9 +88,9 @@ object MskSd {
           // DescribeClusterV2 per configured ARN; skip non-provisioned
           // (ref msk.go describeClusters warns and drops serverless)
           cfg.clusters.flatMap { arn =>
-            val info = jObj(jObj(graft.web.JsonLite.parse(
+            val info = map(map(graft.web.JsonLite.parse(
               api.describeClusterV2(arn))).getOrElse("clusterInfo", Map.empty))
-            if (jStr(info, "clusterType") == "PROVISIONED") Some(info) else None
+            if (str(info, "clusterType") == "PROVISIONED") Some(info) else None
           }
         else {
           val out = Seq.newBuilder[Map[String, Any]]
@@ -112,8 +98,8 @@ object MskSd {
           var more = true
           while (more) {
             val resp = graft.web.JsonLite.parse(api.listClustersV2(tok))
-            out ++= jArr(resp, "clusterInfoList")
-            tok = jOptStr(jObj(resp), "nextToken").filter(_.nonEmpty)
+            out ++= list(map(resp), "clusterInfoList")
+            tok = opt(map(resp), "nextToken").filter(_.nonEmpty)
             more = tok.isDefined
           }
           out.result()
@@ -121,65 +107,65 @@ object MskSd {
 
       val targets = Seq.newBuilder[(String, Map[String, String])]
       clusters.foreach { cluster =>
-        val clusterArn = jStr(cluster, "clusterArn")
+        val clusterArn = str(cluster, "clusterArn")
         val nodes = {
           val out = Seq.newBuilder[Map[String, Any]]
           var tok: Option[String] = None
           var more = true
           while (more) {
             val resp = graft.web.JsonLite.parse(api.listNodes(clusterArn, tok))
-            out ++= jArr(resp, "nodeInfoList")
-            tok = jOptStr(jObj(resp), "nextToken").filter(_.nonEmpty)
+            out ++= list(map(resp), "nodeInfoList")
+            tok = opt(map(resp), "nextToken").filter(_.nonEmpty)
             more = tok.isDefined
           }
           out.result()
         }
-        val prov = jObj(cluster.getOrElse("provisioned", Map.empty))
-        val swInfo = jObj(prov.getOrElse("currentBrokerSoftwareInfo", Map.empty))
-        val openMon = jObj(prov.getOrElse("openMonitoring", Map.empty))
-        val promMon = jObj(openMon.getOrElse("prometheus", Map.empty))
+        val prov = map(cluster.getOrElse("provisioned", Map.empty))
+        val swInfo = map(prov.getOrElse("currentBrokerSoftwareInfo", Map.empty))
+        val openMon = map(prov.getOrElse("openMonitoring", Map.empty))
+        val promMon = map(openMon.getOrElse("prometheus", Map.empty))
 
         nodes.foreach { node =>
           var l = Map(
-            "__meta_msk_cluster_name" -> jStr(cluster, "clusterName"),
+            "__meta_msk_cluster_name" -> str(cluster, "clusterName"),
             "__meta_msk_cluster_arn" -> clusterArn,
-            "__meta_msk_cluster_state" -> jStr(cluster, "state"),
-            "__meta_msk_cluster_type" -> jStr(cluster, "clusterType"),
-            "__meta_msk_cluster_version" -> jStr(cluster, "currentVersion"),
-            "__meta_msk_node_arn" -> jStr(node, "nodeARN"),
-            "__meta_msk_node_added_time" -> jStr(node, "addedToClusterTime"),
-            "__meta_msk_node_instance_type" -> jStr(node, "instanceType"),
-            "__meta_msk_cluster_configuration_arn" -> jStr(swInfo, "configurationArn"),
+            "__meta_msk_cluster_state" -> str(cluster, "state"),
+            "__meta_msk_cluster_type" -> str(cluster, "clusterType"),
+            "__meta_msk_cluster_version" -> str(cluster, "currentVersion"),
+            "__meta_msk_node_arn" -> str(node, "nodeARN"),
+            "__meta_msk_node_added_time" -> str(node, "addedToClusterTime"),
+            "__meta_msk_node_instance_type" -> str(node, "instanceType"),
+            "__meta_msk_cluster_configuration_arn" -> str(swInfo, "configurationArn"),
             "__meta_msk_cluster_configuration_revision" ->
-              (if (jStr(swInfo, "configurationRevision").nonEmpty)
-                jStr(swInfo, "configurationRevision") else "0"),
-            "__meta_msk_cluster_kafka_version" -> jStr(swInfo, "kafkaVersion"))
+              (if (str(swInfo, "configurationRevision").nonEmpty)
+                str(swInfo, "configurationRevision") else "0"),
+            "__meta_msk_cluster_kafka_version" -> str(swInfo, "kafkaVersion"))
           // omitted when Open Monitoring is off (ref msk.go)
-          jObj(promMon.getOrElse("jmxExporter", Map.empty))
+          map(promMon.getOrElse("jmxExporter", Map.empty))
             .get("enabledInBroker").foreach(v =>
               l += "__meta_msk_cluster_jmx_exporter_enabled" -> v.toString)
-          jObj(cluster.getOrElse("tags", Map.empty)).foreach { case (k, v) =>
+          map(cluster.getOrElse("tags", Map.empty)).foreach { case (k, v) =>
             l += "__meta_msk_cluster_tag_" + KubernetesSd.sanitize(k) ->
               String.valueOf(v)
           }
-          val broker = jObj(node.getOrElse("brokerNodeInfo", Map.empty))
-          val controller = jObj(node.getOrElse("controllerNodeInfo", Map.empty))
+          val broker = map(node.getOrElse("brokerNodeInfo", Map.empty))
+          val controller = map(node.getOrElse("controllerNodeInfo", Map.empty))
           if (broker.nonEmpty) {
             l += "__meta_msk_node_type" -> "BROKER"
-            l += "__meta_msk_node_attached_eni" -> jStr(broker, "attachedENIId")
-            l += "__meta_msk_broker_id" -> jStr(broker, "brokerId")
-            l += "__meta_msk_broker_client_subnet" -> jStr(broker, "clientSubnet")
-            l += "__meta_msk_broker_client_vpc_ip" -> jStr(broker, "clientVpcIpAddress")
-            jObj(promMon.getOrElse("nodeExporter", Map.empty))
+            l += "__meta_msk_node_attached_eni" -> str(broker, "attachedENIId")
+            l += "__meta_msk_broker_id" -> str(broker, "brokerId")
+            l += "__meta_msk_broker_client_subnet" -> str(broker, "clientSubnet")
+            l += "__meta_msk_broker_client_vpc_ip" -> str(broker, "clientVpcIpAddress")
+            map(promMon.getOrElse("nodeExporter", Map.empty))
               .get("enabledInBroker").foreach(v =>
                 l += "__meta_msk_broker_node_exporter_enabled" -> v.toString)
-            jStrArr(broker, "endpoints").zipWithIndex.foreach { case (ep, idx) =>
+            strs(broker, "endpoints").zipWithIndex.foreach { case (ep, idx) =>
               targets += ((hostPort(ep, cfg.port),
                 l + ("__meta_msk_broker_endpoint_index" -> idx.toString)))
             }
           } else if (controller.nonEmpty) {
             l += "__meta_msk_node_type" -> "CONTROLLER"
-            jStrArr(controller, "endpoints").zipWithIndex.foreach { case (ep, idx) =>
+            strs(controller, "endpoints").zipWithIndex.foreach { case (ep, idx) =>
               targets += ((hostPort(ep, cfg.port),
                 l + ("__meta_msk_controller_endpoint_index" -> idx.toString)))
             }

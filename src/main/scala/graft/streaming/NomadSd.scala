@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Nomad service discovery (ref: discovery/nomad/nomad.go).
   *
@@ -25,32 +26,9 @@ object NomadSd {
   trait ApiClient { def get(path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def get(path: String): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(
-            java.net.URI.create(cfg.server.stripSuffix("/") + path))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/json").GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"nomad sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String =
+      SdHttp.get("nomad", cfg.server.stripSuffix("/") + path)
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
 
   final class NomadProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
@@ -65,27 +43,25 @@ object NomadSd {
       if (ps.isEmpty) "" else "?" + ps.mkString("&")
     }
     override def refresh(): Seq[Discovery.TargetGroup] = {
-      val stubs = jlist(JsonLite.parse(client.get("/v1/services" + query)))
+      val stubs = list(JsonLite.parse(client.get("/v1/services" + query)))
       val targets = for {
         stub <- stubs
-        svc <- jlist(stub.getOrElse("Services", null))
-        reg <- jlist(JsonLite.parse(client.get(
-          "/v1/service/" + java.net.URLEncoder.encode(s(svc, "ServiceName"),
+        svc <- list(stub, "Services")
+        reg <- list(JsonLite.parse(client.get(
+          "/v1/service/" + java.net.URLEncoder.encode(str(svc, "ServiceName"),
             java.nio.charset.StandardCharsets.UTF_8) + query)))
       } yield {
-        val addr = s(reg, "Address"); val port = s(reg, "Port")
+        val addr = str(reg, "Address"); val port = str(reg, "Port")
         var l = Map(
           "__meta_nomad_address" -> addr,
-          "__meta_nomad_dc" -> s(reg, "Datacenter"),
-          "__meta_nomad_node_id" -> s(reg, "NodeID"),
-          "__meta_nomad_namespace" -> s(reg, "Namespace"),
-          "__meta_nomad_service" -> s(reg, "ServiceName"),
+          "__meta_nomad_dc" -> str(reg, "Datacenter"),
+          "__meta_nomad_node_id" -> str(reg, "NodeID"),
+          "__meta_nomad_namespace" -> str(reg, "Namespace"),
+          "__meta_nomad_service" -> str(reg, "ServiceName"),
           "__meta_nomad_service_address" -> addr,
-          "__meta_nomad_service_id" -> s(reg, "ID"),
+          "__meta_nomad_service_id" -> str(reg, "ID"),
           "__meta_nomad_service_port" -> port)
-        val tags = (reg.getOrElse("Tags", null) match {
-          case t: List[_] => t; case _ => Nil
-        }).map(jstr)
+        val tags = strs(reg, "Tags")
         if (tags.nonEmpty)
           l += "__meta_nomad_tags" -> tags.mkString(cfg.tagSeparator,
             cfg.tagSeparator, cfg.tagSeparator)

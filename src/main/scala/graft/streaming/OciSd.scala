@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Oracle Cloud Infrastructure service discovery (ref: discovery/oci/
   * oci.go).
@@ -34,8 +35,6 @@ object OciSd {
   trait ApiClient { def get(service: String, path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
     private lazy val privateKey: java.security.PrivateKey = {
       val pem = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(cfg.keyFile)),
@@ -45,10 +44,8 @@ object OciSd {
       java.security.KeyFactory.getInstance("RSA")
         .generatePrivate(new java.security.spec.PKCS8EncodedKeySpec(der))
     }
-    private def host(service: String): String =
-      s"$service.${cfg.region}.oraclecloud.com"
     override def get(service: String, path: String): String = {
-      val h = host(service)
+      val h = s"$service.${cfg.region}.oraclecloud.com"
       val date = java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME
         .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
       // draft-cavage signing string over date, (request-target), host
@@ -59,41 +56,18 @@ object OciSd {
       sig.update(signingString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val signature = java.util.Base64.getEncoder.encodeToString(sig.sign())
       val keyId = s"${cfg.tenancy}/${cfg.user}/${cfg.fingerprint}"
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"https://$h$path"))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/json")
-          .header("Date", date)
-          .header("Authorization",
-            "Signature version=\"1\",keyId=\"" + keyId + "\"," +
-            "algorithm=\"rsa-sha256\",headers=\"date (request-target) host\"," +
-            "signature=\"" + signature + "\"").GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"oci sd: ${resp.statusCode()} for $path")
-      resp.body()
+      SdHttp.get("oci", s"https://$h$path", Seq(
+        "Date" -> date,
+        "Authorization" -> ("Signature version=\"1\",keyId=\"" + keyId + "\"," +
+          "algorithm=\"rsa-sha256\",headers=\"date (request-target) host\"," +
+          "signature=\"" + signature + "\"")))
     }
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
 
   /** scalar defined-tag values stringify; non-scalars are skipped
     * (ref oci.go stringifyDefinedTag) */
   private def definedTagValue(v: Any): Option[String] = v match {
-    case s: String => Some(s)
-    case b: java.lang.Boolean => Some(b.toString)
-    case d: java.lang.Double =>
-      Some(if (d.doubleValue.isWhole) d.longValue.toString
-        else graft.promql.RangeUdfs.goFormat(d.doubleValue))
+    case _: String | _: java.lang.Boolean | _: java.lang.Double => Some(str(v))
     case _ => None
   }
 
@@ -104,34 +78,32 @@ object OciSd {
 
     private def compartments(): Seq[String] =
       if (cfg.compartments.nonEmpty) cfg.compartments
-      else jlist(JsonLite.parse(client.get("identity",
+      else list(JsonLite.parse(client.get("identity",
           s"/20160918/compartments?compartmentId=${cfg.tenancy}" +
             "&compartmentIdInSubtree=true&lifecycleState=ACTIVE")))
-        .map(s(_, "id")).filter(_.nonEmpty)
+        .map(str(_, "id")).filter(_.nonEmpty)
 
     /** primary VNIC via attachments (ref oci.go resolveVnics) */
     private def primaryVnic(compartment: String, instanceId: String): Option[J] = {
-      val atts = jlist(JsonLite.parse(client.get("iaas",
+      val atts = list(JsonLite.parse(client.get("iaas",
         s"/20160918/vnicAttachments?compartmentId=$compartment&instanceId=$instanceId")))
       atts.iterator
-        .filter(a => s(a, "vnicId").nonEmpty && s(a, "lifecycleState") == "ATTACHED")
-        .map(a => jmap(JsonLite.parse(client.get("iaas",
-          s"/20160918/vnics/${s(a, "vnicId")}"))))
-        .find(v => v.getOrElse("isPrimary", null) == java.lang.Boolean.TRUE)
+        .filter(a => str(a, "vnicId").nonEmpty && str(a, "lifecycleState") == "ATTACHED")
+        .map(a => map(JsonLite.parse(client.get("iaas",
+          s"/20160918/vnics/${str(a, "vnicId")}"))))
+        .find(bool(_, "isPrimary"))
     }
 
     override def refresh(): Seq[Discovery.TargetGroup] = {
       val targets = Seq.newBuilder[(String, Map[String, String])]
       compartments().foreach { comp =>
-        jlist(JsonLite.parse(client.get("iaas",
+        list(JsonLite.parse(client.get("iaas",
             s"/20160918/instances?compartmentId=$comp"))).foreach { inst =>
-          val id = s(inst, "id")
+          val id = str(inst, "id")
           if (id.nonEmpty) {
             primaryVnic(comp, id).foreach { vnic =>
-              val priv = s(vnic, "privateIp"); val pub = s(vnic, "publicIp")
-              val ipv6 = (vnic.getOrElse("ipv6Addresses", null) match {
-                case l: List[_] => l; case _ => Nil
-              }).map(jstr).sorted
+              val priv = str(vnic, "privateIp"); val pub = str(vnic, "publicIp")
+              val ipv6 = strs(vnic, "ipv6Addresses").sorted
               val addr =
                 if (priv.nonEmpty) priv
                 else if (pub.nonEmpty) pub
@@ -139,25 +111,25 @@ object OciSd {
               if (addr.nonEmpty) {
                 var l = Map(
                   "__meta_oci_instance_id" -> id,
-                  "__meta_oci_instance_name" -> s(inst, "displayName"),
-                  "__meta_oci_instance_state" -> s(inst, "lifecycleState"),
-                  "__meta_oci_instance_shape" -> s(inst, "shape"),
-                  "__meta_oci_availability_domain" -> s(inst, "availabilityDomain"),
-                  "__meta_oci_fault_domain" -> s(inst, "faultDomain"),
-                  "__meta_oci_region" -> s(inst, "region"),
+                  "__meta_oci_instance_name" -> str(inst, "displayName"),
+                  "__meta_oci_instance_state" -> str(inst, "lifecycleState"),
+                  "__meta_oci_instance_shape" -> str(inst, "shape"),
+                  "__meta_oci_availability_domain" -> str(inst, "availabilityDomain"),
+                  "__meta_oci_fault_domain" -> str(inst, "faultDomain"),
+                  "__meta_oci_region" -> str(inst, "region"),
                   "__meta_oci_tenancy_id" -> cfg.tenancy,
-                  "__meta_oci_compartment_id" -> s(inst, "compartmentId"),
-                  "__meta_oci_image_id" -> s(inst, "imageId"),
-                  "__meta_oci_vnic_id" -> s(vnic, "id"),
+                  "__meta_oci_compartment_id" -> str(inst, "compartmentId"),
+                  "__meta_oci_image_id" -> str(inst, "imageId"),
+                  "__meta_oci_vnic_id" -> str(vnic, "id"),
                   "__meta_oci_private_ip" -> priv,
                   "__meta_oci_public_ip" -> pub,
-                  "__meta_oci_hostname_label" -> s(vnic, "hostnameLabel"),
+                  "__meta_oci_hostname_label" -> str(vnic, "hostnameLabel"),
                   "__meta_oci_ipv6_addresses" ->
                     (if (ipv6.isEmpty) "" else ipv6.mkString(",", ",", ",")))
-                jmap(inst.getOrElse("freeformTags", null)).foreach { case (k, v) =>
-                  l += "__meta_oci_tag_" + KubernetesSd.sanitize(k) -> jstr(v) }
-                jmap(inst.getOrElse("definedTags", null)).foreach { case (ns, tags) =>
-                  jmap(tags).foreach { case (k, v) =>
+                map(inst, "freeformTags").foreach { case (k, v) =>
+                  l += "__meta_oci_tag_" + KubernetesSd.sanitize(k) -> str(v) }
+                map(inst, "definedTags").foreach { case (ns, tags) =>
+                  map(tags).foreach { case (k, v) =>
                     definedTagValue(v).foreach(sv =>
                       l += "__meta_oci_defined_tag_" + KubernetesSd.sanitize(ns) +
                         "_" + KubernetesSd.sanitize(k) -> sv)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.{Json, JsonLite}
+import SdJson._
 
 /** OpenStack service discovery (ref: discovery/openstack/openstack.go;
   * hypervisor.go, instance.go, loadbalancer.go per role).
@@ -48,8 +49,6 @@ object OpenStackSd {
   trait ApiClient { def get(service: String, path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
     @volatile private var token: String = ""
     @volatile private var catalog: Map[String, String] = Map.empty
 
@@ -84,70 +83,40 @@ object OpenStackSd {
       s"""{"auth":{"identity":$identity$scope}}"""
     }
 
-    private def jm(v: Any): Map[String, Any] =
-      v match { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]; case _ => Map.empty }
-    private def jl(v: Any): List[Any] = v match { case l: List[_] => l; case _ => Nil }
-
     private def authenticate(): Unit = {
       val url = cfg.identityEndpoint.stripSuffix("/") match {
         case u if u.endsWith("/v3") => u + "/auth/tokens"
         case u => u + "/v3/auth/tokens"
       }
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Content-Type", "application/json")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(authBody())).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() / 100 != 2)
-        throw new IllegalStateException(s"openstack sd: keystone auth ${resp.statusCode()}")
+      val resp = SdHttp.exchange("openstack", SdHttp.request(url,
+          Seq("Content-Type" -> "application/json"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(authBody())).build(),
+        ok = SdHttp.any2xx)
       token = resp.headers().firstValue("X-Subject-Token").orElse("")
       // catalog: service type → endpoint url for (region, interface)
-      catalog = jl(jm(jm(JsonLite.parse(resp.body())).getOrElse("token", null))
-          .getOrElse("catalog", null)).map(jm)
+      catalog = list(map(map(JsonLite.parse(resp.body())), "token"), "catalog")
         .flatMap { svc =>
-          val typ = String.valueOf(svc.getOrElse("type", ""))
-          jl(svc.getOrElse("endpoints", null)).map(jm)
-            .find(e =>
-              String.valueOf(e.getOrElse("interface", "")) == cfg.availability &&
-              (cfg.region.isEmpty ||
-                String.valueOf(e.getOrElse("region", "")) == cfg.region))
-            .map(e => typ -> String.valueOf(e.getOrElse("url", "")))
+          list(svc, "endpoints")
+            .find(e => str(e, "interface") == cfg.availability &&
+              (cfg.region.isEmpty || str(e, "region") == cfg.region))
+            .map(e => str(svc, "type") -> str(e, "url"))
         }.toMap
     }
 
     override def get(service: String, path: String): String = {
       if (token.isEmpty) authenticate()
-      def once(): java.net.http.HttpResponse[String] = {
+      def once(): String = {
         val base = catalog.getOrElse(service, throw new IllegalStateException(
           s"openstack sd: no '$service' endpoint for region '${cfg.region}' in the catalog"))
-        client.send(
-          java.net.http.HttpRequest.newBuilder(java.net.URI.create(base.stripSuffix("/") + path))
-            .timeout(java.time.Duration.ofSeconds(30))
-            .header("Accept", "application/json")
-            .header("X-Auth-Token", token).GET().build(),
-          java.net.http.HttpResponse.BodyHandlers.ofString())
+        SdHttp.get("openstack", base.stripSuffix("/") + path,
+          Seq("X-Auth-Token" -> token), ok = SdHttp.any2xx)
       }
-      var resp = once()
-      if (resp.statusCode() == 401) { authenticate(); resp = once() } // token expired
-      if (resp.statusCode() / 100 != 2)
-        throw new IllegalStateException(s"openstack sd: ${resp.statusCode()} for $path")
-      resp.body()
+      try once()
+      catch { // token expired: authenticate again, once
+        case e: SdHttp.StatusError if e.status == 401 => authenticate(); once()
+      }
     }
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
 
   /** accumulate `key` items across `key_links` rel=next pages */
   private def listAll(client: ApiClient, service: String, path: String,
@@ -155,12 +124,12 @@ object OpenStackSd {
     val out = List.newBuilder[J]
     var next = path
     while (next.nonEmpty) {
-      val body = jmap(JsonLite.parse(client.get(service, next)))
-      out ++= jlist(body.getOrElse(key, null))
-      next = jlist(body.getOrElse(key + "_links", null))
-        .find(l => s(l, "rel") == "next")
+      val body = map(JsonLite.parse(client.get(service, next)))
+      out ++= list(body, key)
+      next = list(body, key + "_links")
+        .find(l => str(l, "rel") == "next")
         .map { l =>
-          val u = java.net.URI.create(s(l, "href"))
+          val u = java.net.URI.create(str(l, "href"))
           u.getRawPath + Option(u.getRawQuery).map("?" + _).getOrElse("")
         }.getOrElse("")
     }
@@ -170,13 +139,13 @@ object OpenStackSd {
   /** ref hypervisor.go:73-97 */
   private def hypervisorTargets(client: ApiClient, port: Int): Seq[(String, Map[String, String])] =
     listAll(client, "compute", "/os-hypervisors/detail", "hypervisors").map { h =>
-      (s"${s(h, "host_ip")}:$port", Map(
-        "__meta_openstack_hypervisor_id" -> s(h, "id"),
-        "__meta_openstack_hypervisor_hostname" -> s(h, "hypervisor_hostname"),
-        "__meta_openstack_hypervisor_host_ip" -> s(h, "host_ip"),
-        "__meta_openstack_hypervisor_status" -> s(h, "status"),
-        "__meta_openstack_hypervisor_state" -> s(h, "state"),
-        "__meta_openstack_hypervisor_type" -> s(h, "hypervisor_type")))
+      (s"${str(h, "host_ip")}:$port", Map(
+        "__meta_openstack_hypervisor_id" -> str(h, "id"),
+        "__meta_openstack_hypervisor_hostname" -> str(h, "hypervisor_hostname"),
+        "__meta_openstack_hypervisor_host_ip" -> str(h, "host_ip"),
+        "__meta_openstack_hypervisor_status" -> str(h, "status"),
+        "__meta_openstack_hypervisor_state" -> str(h, "state"),
+        "__meta_openstack_hypervisor_type" -> str(h, "hypervisor_type")))
     }
 
   /** ref instance.go:103-240 */
@@ -184,46 +153,46 @@ object OpenStackSd {
       allTenants: Boolean): Seq[(String, Map[String, String])] = {
     // port id → device id, then (device, fixed ip) → floating ip
     val devByPort = listAll(client, "network", "/v2.0/ports", "ports")
-      .map(p => s(p, "id") -> s(p, "device_id")).toMap
+      .map(p => str(p, "id") -> str(p, "device_id")).toMap
     val fips = listAll(client, "network", "/v2.0/floatingips", "floatingips")
     val floatingByFixed = fips.flatMap { f =>
-      val portId = s(f, "port_id"); val fixed = s(f, "fixed_ip_address")
+      val portId = str(f, "port_id"); val fixed = str(f, "fixed_ip_address")
       if (portId.isEmpty || fixed.isEmpty) None
-      else devByPort.get(portId).map(dev => (dev, fixed) -> s(f, "floating_ip_address"))
+      else devByPort.get(portId).map(dev => (dev, fixed) -> str(f, "floating_ip_address"))
     }.toMap
-    val floatingPresent = fips.map(s(_, "floating_ip_address")).filter(_.nonEmpty).toSet
+    val floatingPresent = fips.map(str(_, "floating_ip_address")).filter(_.nonEmpty).toSet
     val query = if (allTenants) "?all_tenants=true" else ""
     listAll(client, "compute", s"/servers/detail$query", "servers").flatMap { sv =>
-      val addresses = m(sv, "addresses")
+      val addresses = map(sv, "addresses")
       if (addresses.isEmpty) Nil
       else {
-        val flavor = m(sv, "flavor")
+        val flavor = map(sv, "flavor")
         // original_name for microversion >= 2.47, else id (ref instance.go:187-198)
         val flavorName =
-          if (s(flavor, "original_name").nonEmpty) s(flavor, "original_name")
-          else s(flavor, "id")
+          if (str(flavor, "original_name").nonEmpty) str(flavor, "original_name")
+          else str(flavor, "id")
         if (flavorName.isEmpty) Nil
         else {
           var base = Map(
-            "__meta_openstack_instance_id" -> s(sv, "id"),
-            "__meta_openstack_instance_status" -> s(sv, "status"),
-            "__meta_openstack_instance_name" -> s(sv, "name"),
-            "__meta_openstack_project_id" -> s(sv, "tenant_id"),
-            "__meta_openstack_user_id" -> s(sv, "user_id"),
+            "__meta_openstack_instance_id" -> str(sv, "id"),
+            "__meta_openstack_instance_status" -> str(sv, "status"),
+            "__meta_openstack_instance_name" -> str(sv, "name"),
+            "__meta_openstack_project_id" -> str(sv, "tenant_id"),
+            "__meta_openstack_user_id" -> str(sv, "user_id"),
             "__meta_openstack_instance_flavor" -> flavorName)
-          val imageId = s(m(sv, "image"), "id")
+          val imageId = str(map(sv, "image"), "id")
           if (imageId.nonEmpty) base += "__meta_openstack_instance_image" -> imageId
-          m(sv, "metadata").foreach { case (k, v) =>
-            base += "__meta_openstack_tag_" + KubernetesSd.sanitize(k) -> jstr(v) }
+          map(sv, "metadata").foreach { case (k, v) =>
+            base += "__meta_openstack_tag_" + KubernetesSd.sanitize(k) -> str(v) }
           addresses.toSeq.flatMap { case (pool, poolAddrs) =>
-            jlist(poolAddrs).flatMap { a =>
-              val addr = s(a, "addr")
+            list(poolAddrs).flatMap { a =>
+              val addr = str(a, "addr")
               if (addr.isEmpty || floatingPresent.contains(addr)) None
               else {
                 var l = base +
                   ("__meta_openstack_address_pool" -> pool) +
                   ("__meta_openstack_private_ip" -> addr)
-                floatingByFixed.get((s(sv, "id"), addr))
+                floatingByFixed.get((str(sv, "id"), addr))
                   .foreach(f => l += "__meta_openstack_public_ip" -> f)
                 Some((s"$addr:$port", l))
               }
@@ -237,35 +206,32 @@ object OpenStackSd {
   /** ref loadbalancer.go:93-193 — only LBs with a PROMETHEUS listener */
   private def loadbalancerTargets(client: ApiClient): Seq[(String, Map[String, String])] = {
     val listenersByLb = listAll(client, "load-balancer", "/v2.0/lbaas/listeners", "listeners")
-      .flatMap(li => jlist(li.getOrElse("loadbalancers", null)).map(lb => s(lb, "id") -> li))
+      .flatMap(li => list(li, "loadbalancers").map(lb => str(lb, "id") -> li))
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val floatingByPort = listAll(client, "network", "/v2.0/floatingips", "floatingips")
-      .filter(f => s(f, "port_id").nonEmpty)
-      .map(f => s(f, "port_id") -> s(f, "floating_ip_address")).toMap
+      .filter(f => str(f, "port_id").nonEmpty)
+      .map(f => str(f, "port_id") -> str(f, "floating_ip_address")).toMap
     listAll(client, "load-balancer", "/v2.0/lbaas/loadbalancers", "loadbalancers").flatMap { lb =>
-      listenersByLb.getOrElse(s(lb, "id"), Nil)
-        .find(li => s(li, "protocol") == "PROMETHEUS")
+      listenersByLb.getOrElse(str(lb, "id"), Nil)
+        .find(li => str(li, "protocol") == "PROMETHEUS")
         .map { li =>
           var l = Map(
-            "__meta_openstack_loadbalancer_id" -> s(lb, "id"),
-            "__meta_openstack_loadbalancer_name" -> s(lb, "name"),
-            "__meta_openstack_loadbalancer_operating_status" -> s(lb, "operating_status"),
-            "__meta_openstack_loadbalancer_provisioning_status" -> s(lb, "provisioning_status"),
-            "__meta_openstack_loadbalancer_availability_zone" -> s(lb, "availability_zone"),
-            "__meta_openstack_loadbalancer_vip" -> s(lb, "vip_address"),
-            "__meta_openstack_loadbalancer_provider" -> s(lb, "provider"),
-            "__meta_openstack_project_id" -> s(lb, "project_id"))
-          val tags = jl2(lb.getOrElse("tags", null))
+            "__meta_openstack_loadbalancer_id" -> str(lb, "id"),
+            "__meta_openstack_loadbalancer_name" -> str(lb, "name"),
+            "__meta_openstack_loadbalancer_operating_status" -> str(lb, "operating_status"),
+            "__meta_openstack_loadbalancer_provisioning_status" -> str(lb, "provisioning_status"),
+            "__meta_openstack_loadbalancer_availability_zone" -> str(lb, "availability_zone"),
+            "__meta_openstack_loadbalancer_vip" -> str(lb, "vip_address"),
+            "__meta_openstack_loadbalancer_provider" -> str(lb, "provider"),
+            "__meta_openstack_project_id" -> str(lb, "project_id"))
+          val tags = strs(lb, "tags")
           if (tags.nonEmpty) l += "__meta_openstack_loadbalancer_tags" -> tags.mkString(",")
-          floatingByPort.get(s(lb, "vip_port_id"))
+          floatingByPort.get(str(lb, "vip_port_id"))
             .foreach(f => l += "__meta_openstack_loadbalancer_floating_ip" -> f)
-          (s"${s(lb, "vip_address")}:${s(li, "protocol_port")}", l)
+          (s"${str(lb, "vip_address")}:${str(li, "protocol_port")}", l)
         }
     }
   }
-
-  private def jl2(v: Any): List[String] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jstr)
 
   final class OpenStackProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {

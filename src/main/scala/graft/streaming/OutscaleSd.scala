@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.{Json, JsonLite}
+import SdJson._
 
 /** Outscale (3DS OUTSCALE) service discovery (ref: discovery/outscale/
   * outscale.go + vm.go).
@@ -32,45 +33,17 @@ object OutscaleSd {
     private val base =
       if (cfg.endpoint.nonEmpty) cfg.endpoint.stripSuffix("/")
       else s"https://$host/api/v1"
-    private def secret(): String =
-      if (cfg.secretKey.nonEmpty) cfg.secretKey
-      else if (cfg.secretKeyFile.nonEmpty)
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(cfg.secretKeyFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      else ""
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
     override def readVms(nextPageToken: Option[String]): String = {
       val body = nextPageToken
         .map(t => s"""{"NextPageToken":"${Json.escape(t)}"}""")
         .getOrElse("{}")
-      val hdrs = Ec2Sd.SigV4.headers(cfg.accessKey, secret(), cfg.region,
-        "oapi", host, body, java.time.Instant.now(),
-        contentType = "application/json")
-      val b = java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create(base + "/ReadVms"))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-      hdrs.foreach { case (k, v) => b.header(k, v) }
-      val resp = client.send(b.build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"outscale sd: status ${resp.statusCode()}")
-      resp.body()
+      SdHttp.post("outscale", base + "/ReadVms", body,
+        Ec2Sd.SigV4.headers(cfg.accessKey, SdHttp.secret(cfg.secretKey, cfg.secretKeyFile),
+          cfg.region, "oapi", host, body, java.time.Instant.now(),
+          contentType = "application/json"),
+        accept = "")
     }
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
 
   final class OutscaleProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
@@ -81,29 +54,29 @@ object OutscaleSd {
       var token: Option[String] = None
       var more = true
       while (more) {
-        val body = jmap(JsonLite.parse(client.readVms(token)))
-        jlist(body.getOrElse("Vms", null)).foreach { vm =>
+        val body = map(JsonLite.parse(client.readVms(token)))
+        list(body, "Vms").foreach { vm =>
           // private ip first, public fallback; neither → skip (ref vm.go:95-103)
-          val priv = s(vm, "PrivateIp"); val pub = s(vm, "PublicIp")
+          val priv = str(vm, "PrivateIp"); val pub = str(vm, "PublicIp")
           val host = if (priv.nonEmpty) priv else pub
           if (host.nonEmpty) {
             var l = Map(
-              "__meta_outscale_vm_instance_id" -> s(vm, "VmId"),
+              "__meta_outscale_vm_instance_id" -> str(vm, "VmId"),
               "__meta_outscale_vm_region" -> cfg.region,
-              "__meta_outscale_vm_state" -> s(vm, "State"))
-            val sub = s(jmap(vm.getOrElse("Placement", null)), "SubregionName")
+              "__meta_outscale_vm_state" -> str(vm, "State"))
+            val sub = str(map(vm, "Placement"), "SubregionName")
             if (sub.nonEmpty) l += "__meta_outscale_vm_subregion" -> sub
             if (priv.nonEmpty) l += "__meta_outscale_vm_private_ip" -> priv
             if (pub.nonEmpty) l += "__meta_outscale_vm_public_ip" -> pub
-            jlist(vm.getOrElse("Tags", null)).foreach { t =>
-              val k = s(t, "Key")
+            list(vm, "Tags").foreach { t =>
+              val k = str(t, "Key")
               if (k.nonEmpty)
-                l += "__meta_outscale_vm_tag_" + KubernetesSd.sanitize(k) -> s(t, "Value")
+                l += "__meta_outscale_vm_tag_" + KubernetesSd.sanitize(k) -> str(t, "Value")
             }
             targets += ((s"$host:${cfg.port}", l))
           }
         }
-        token = Some(s(body, "NextPageToken")).filter(_.nonEmpty)
+        token = Some(str(body, "NextPageToken")).filter(_.nonEmpty)
         more = token.isDefined
       }
       Seq(Discovery.TargetGroup("outscale", Map.empty, targets.result()))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** OVHcloud service discovery (ref: discovery/ovhcloud/ovhcloud.go; vps.go
   * and dedicated_server.go per service).
@@ -36,8 +37,6 @@ object OvhcloudSd {
   final class HttpApiClient(cfg: Config) extends ApiClient {
     private val base = endpoints.getOrElse(cfg.endpoint,
       cfg.endpoint.stripSuffix("/"))
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
     private def sha1Hex(s: String): String =
       java.security.MessageDigest.getInstance("SHA-1")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -46,35 +45,13 @@ object OvhcloudSd {
       val ts = (System.currentTimeMillis() / 1000L).toString
       val sig = "$1$" + sha1Hex(Seq(cfg.applicationSecret, cfg.consumerKey,
         "GET", url, "", ts).mkString("+"))
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/json")
-          .header("X-Ovh-Application", cfg.applicationKey)
-          .header("X-Ovh-Consumer", cfg.consumerKey)
-          .header("X-Ovh-Timestamp", ts)
-          .header("X-Ovh-Signature", sig).GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"ovhcloud sd: ${resp.statusCode()} for $path")
-      resp.body()
+      SdHttp.get("ovhcloud", url, Seq(
+        "X-Ovh-Application" -> cfg.applicationKey,
+        "X-Ovh-Consumer" -> cfg.consumerKey,
+        "X-Ovh-Timestamp" -> ts,
+        "X-Ovh-Signature" -> sig))
     }
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jstrs(v: Any): List[String] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jstr)
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case b: java.lang.Boolean => b.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
 
   private def ipSplit(ips: List[String]): (String, String) = {
     var v4 = ""; var v6 = ""
@@ -93,63 +70,63 @@ object OvhcloudSd {
     override def refreshMs: Long = cfg.refreshMs
 
     private def vpsTargets(): Seq[(String, Map[String, String])] =
-      jstrs(JsonLite.parse(client.get("/vps"))).flatMap { vpsName =>
+      strs(JsonLite.parse(client.get("/vps"))).flatMap { vpsName =>
         try {
           val enc = java.net.URLEncoder.encode(vpsName,
             java.nio.charset.StandardCharsets.UTF_8)
-          val d = jmap(JsonLite.parse(client.get(s"/vps/$enc")))
-          val (ipv4, ipv6) = ipSplit(jstrs(JsonLite.parse(client.get(s"/vps/$enc/ips"))))
+          val d = map(JsonLite.parse(client.get(s"/vps/$enc")))
+          val (ipv4, ipv6) = ipSplit(strs(JsonLite.parse(client.get(s"/vps/$enc/ips"))))
           val addr = if (ipv4.nonEmpty) ipv4 else ipv6
-          val model = m(d, "model")
+          val model = map(d, "model")
           Some((addr, Map(
-            "instance" -> s(d, "name"),
-            "__meta_ovhcloud_vps_offer" -> s(model, "offer"),
+            "instance" -> str(d, "name"),
+            "__meta_ovhcloud_vps_offer" -> str(model, "offer"),
             // the reference renders the datacenter list with Go's %+v
             "__meta_ovhcloud_vps_datacenter" ->
-              jstrs(model.getOrElse("datacenter", null)).mkString("[", " ", "]"),
-            "__meta_ovhcloud_vps_model_vcore" -> s(model, "vcore"),
-            "__meta_ovhcloud_vps_maximum_additional_ip" -> s(model, "maximumAdditionnalIp"),
-            "__meta_ovhcloud_vps_version" -> s(model, "version"),
-            "__meta_ovhcloud_vps_model_name" -> s(model, "name"),
-            "__meta_ovhcloud_vps_disk" -> s(model, "disk"),
-            "__meta_ovhcloud_vps_memory" -> s(model, "memory"),
-            "__meta_ovhcloud_vps_zone" -> s(d, "zone"),
-            "__meta_ovhcloud_vps_display_name" -> s(d, "displayName"),
-            "__meta_ovhcloud_vps_cluster" -> s(d, "cluster"),
-            "__meta_ovhcloud_vps_state" -> s(d, "state"),
-            "__meta_ovhcloud_vps_name" -> s(d, "name"),
-            "__meta_ovhcloud_vps_netboot_mode" -> s(d, "netbootMode"),
-            "__meta_ovhcloud_vps_memory_limit" -> s(d, "memoryLimit"),
-            "__meta_ovhcloud_vps_offer_type" -> s(d, "offerType"),
-            "__meta_ovhcloud_vps_vcore" -> s(d, "vcore"),
+              strs(model, "datacenter").mkString("[", " ", "]"),
+            "__meta_ovhcloud_vps_model_vcore" -> str(model, "vcore"),
+            "__meta_ovhcloud_vps_maximum_additional_ip" -> str(model, "maximumAdditionnalIp"),
+            "__meta_ovhcloud_vps_version" -> str(model, "version"),
+            "__meta_ovhcloud_vps_model_name" -> str(model, "name"),
+            "__meta_ovhcloud_vps_disk" -> str(model, "disk"),
+            "__meta_ovhcloud_vps_memory" -> str(model, "memory"),
+            "__meta_ovhcloud_vps_zone" -> str(d, "zone"),
+            "__meta_ovhcloud_vps_display_name" -> str(d, "displayName"),
+            "__meta_ovhcloud_vps_cluster" -> str(d, "cluster"),
+            "__meta_ovhcloud_vps_state" -> str(d, "state"),
+            "__meta_ovhcloud_vps_name" -> str(d, "name"),
+            "__meta_ovhcloud_vps_netboot_mode" -> str(d, "netbootMode"),
+            "__meta_ovhcloud_vps_memory_limit" -> str(d, "memoryLimit"),
+            "__meta_ovhcloud_vps_offer_type" -> str(d, "offerType"),
+            "__meta_ovhcloud_vps_vcore" -> str(d, "vcore"),
             "__meta_ovhcloud_vps_ipv4" -> ipv4,
             "__meta_ovhcloud_vps_ipv6" -> ipv6)))
         } catch { case _: Exception => None } // detail failure skips the server
       }
 
     private def dedicatedTargets(): Seq[(String, Map[String, String])] =
-      jstrs(JsonLite.parse(client.get("/dedicated/server"))).flatMap { sn =>
+      strs(JsonLite.parse(client.get("/dedicated/server"))).flatMap { sn =>
         try {
           val enc = java.net.URLEncoder.encode(sn,
             java.nio.charset.StandardCharsets.UTF_8)
-          val d = jmap(JsonLite.parse(client.get(s"/dedicated/server/$enc")))
-          val (ipv4, ipv6) = ipSplit(jstrs(JsonLite.parse(
+          val d = map(JsonLite.parse(client.get(s"/dedicated/server/$enc")))
+          val (ipv4, ipv6) = ipSplit(strs(JsonLite.parse(
             client.get(s"/dedicated/server/$enc/ips"))))
           val addr = if (ipv4.nonEmpty) ipv4 else ipv6
           Some((addr, Map(
-            "instance" -> s(d, "name"),
-            "__meta_ovhcloud_dedicated_server_state" -> s(d, "state"),
-            "__meta_ovhcloud_dedicated_server_commercial_range" -> s(d, "commercialRange"),
-            "__meta_ovhcloud_dedicated_server_link_speed" -> s(d, "linkSpeed"),
-            "__meta_ovhcloud_dedicated_server_rack" -> s(d, "rack"),
+            "instance" -> str(d, "name"),
+            "__meta_ovhcloud_dedicated_server_state" -> str(d, "state"),
+            "__meta_ovhcloud_dedicated_server_commercial_range" -> str(d, "commercialRange"),
+            "__meta_ovhcloud_dedicated_server_link_speed" -> str(d, "linkSpeed"),
+            "__meta_ovhcloud_dedicated_server_rack" -> str(d, "rack"),
             "__meta_ovhcloud_dedicated_server_no_intervention" ->
-              (d.getOrElse("noIntervention", null) == java.lang.Boolean.TRUE).toString,
-            "__meta_ovhcloud_dedicated_server_os" -> s(d, "os"),
-            "__meta_ovhcloud_dedicated_server_support_level" -> s(d, "supportLevel"),
-            "__meta_ovhcloud_dedicated_server_server_id" -> s(d, "serverId"),
-            "__meta_ovhcloud_dedicated_server_reverse" -> s(d, "reverse"),
-            "__meta_ovhcloud_dedicated_server_datacenter" -> s(d, "datacenter"),
-            "__meta_ovhcloud_dedicated_server_name" -> s(d, "name"),
+              bool(d, "noIntervention").toString,
+            "__meta_ovhcloud_dedicated_server_os" -> str(d, "os"),
+            "__meta_ovhcloud_dedicated_server_support_level" -> str(d, "supportLevel"),
+            "__meta_ovhcloud_dedicated_server_server_id" -> str(d, "serverId"),
+            "__meta_ovhcloud_dedicated_server_reverse" -> str(d, "reverse"),
+            "__meta_ovhcloud_dedicated_server_datacenter" -> str(d, "datacenter"),
+            "__meta_ovhcloud_dedicated_server_name" -> str(d, "name"),
             "__meta_ovhcloud_dedicated_server_ipv4" -> ipv4,
             "__meta_ovhcloud_dedicated_server_ipv6" -> ipv6)))
         } catch { case _: Exception => None }

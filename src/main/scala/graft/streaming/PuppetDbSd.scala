@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.{Json, JsonLite}
+import SdJson._
 
 /** PuppetDB service discovery (ref: discovery/puppetdb/puppetdb.go +
   * resources.go).
@@ -26,37 +27,9 @@ object PuppetDbSd {
   trait ApiClient { def post(url: String, body: String): String }
 
   final class HttpApiClient extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def post(url: String, body: String): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/json")
-          .header("Content-Type", "application/json")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"puppetdb sd: ${resp.statusCode()}")
-      resp.body()
-    }
+    override def post(url: String, body: String): String =
+      SdHttp.post("puppetdb", url, body, Seq("Content-Type" -> "application/json"))
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[Any] = v match { case l: List[_] => l; case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case d: java.lang.Double =>
-      // strconv.FormatFloat(v, 'g', -1, 64) parity for non-integers
-      graft.promql.RangeUdfs.goFormat(d.doubleValue)
-    case b: java.lang.Boolean => b.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
 
   /** ref resources.go:39-90 Parameters.toLabels — nested maps flatten with
     * '_'; JSON lists plain-join with ','; empty values and anything
@@ -68,11 +41,11 @@ object PuppetDbSd {
         case m: Map[_, _] => flattenParams(m.asInstanceOf[J], key + "_")
         case l: List[_] if l.nonEmpty =>
           Map(key -> l.collect {
-            case x @ (_: String | _: java.lang.Boolean | _: java.lang.Double) => jstr(x)
+            case x @ (_: String | _: java.lang.Boolean | _: java.lang.Double) => str(x)
           }.mkString(","))
         case _: List[_] => Map.empty
         case null => Map.empty
-        case other => Map(key -> jstr(other))
+        case other => Map(key -> str(other))
       }
       flat.filter(_._2.nonEmpty)
     }
@@ -84,24 +57,24 @@ object PuppetDbSd {
     override def refresh(): Seq[Discovery.TargetGroup] = {
       val url = cfg.url.stripSuffix("/") + "/pdb/query/v4"
       val body = s"""{"query":"${Json.escape(cfg.query)}"}"""
-      val resources = jlist(JsonLite.parse(client.post(url, body))).map(jmap)
+      val resources = list(JsonLite.parse(client.post(url, body)))
       val targets = resources.map { r =>
         var l = Map(
           "__meta_puppetdb_query" -> cfg.query,
-          "__meta_puppetdb_certname" -> s(r, "certname"),
-          "__meta_puppetdb_resource" -> s(r, "resource"),
-          "__meta_puppetdb_type" -> s(r, "type"),
-          "__meta_puppetdb_title" -> s(r, "title"),
+          "__meta_puppetdb_certname" -> str(r, "certname"),
+          "__meta_puppetdb_resource" -> str(r, "resource"),
+          "__meta_puppetdb_type" -> str(r, "type"),
+          "__meta_puppetdb_title" -> str(r, "title"),
           "__meta_puppetdb_exported" ->
-            (r.getOrElse("exported", null) == java.lang.Boolean.TRUE).toString,
-          "__meta_puppetdb_file" -> s(r, "file"),
-          "__meta_puppetdb_environment" -> s(r, "environment"))
-        val tags = jlist(r.getOrElse("tags", null)).map(jstr)
+            bool(r, "exported").toString,
+          "__meta_puppetdb_file" -> str(r, "file"),
+          "__meta_puppetdb_environment" -> str(r, "environment"))
+        val tags = strs(r, "tags")
         if (tags.nonEmpty) l += "__meta_puppetdb_tags" -> tags.mkString(",", ",", ",")
         if (cfg.includeParameters)
-          l ++= flattenParams(jmap(r.getOrElse("parameters", null)),
+          l ++= flattenParams(map(r, "parameters"),
             "__meta_puppetdb_parameter_")
-        (s"${s(r, "certname")}:${cfg.port}", l)
+        (s"${str(r, "certname")}:${cfg.port}", l)
       }
       Seq(Discovery.TargetGroup(url + "?query=" + cfg.query, Map.empty, targets))
     }

@@ -45,31 +45,16 @@ object RdsSd {
 
   /** production client: SigV4-signed Query-API calls (Version 2014-10-31) */
   final class HttpApiClient(cfg: Config, region: String) extends ApiClient {
-    private val host =
-      if (cfg.endpoint.nonEmpty) java.net.URI.create(cfg.endpoint).getHost
-      else s"rds.$region.amazonaws.com"
-    private val base =
-      if (cfg.endpoint.nonEmpty) cfg.endpoint.stripSuffix("/")
-      else s"https://$host"
+    private val (host, base) =
+      AwsSd.endpointOf(cfg.endpoint, s"rds.$region.amazonaws.com")
     private val credsProvider = AwsSd.credentials(cfg.accessKey,
       cfg.secretKey, cfg.roleArn, cfg.externalId, region, profile = cfg.profile)
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
 
     private def query(params: Seq[(String, String)]): String = {
       val body = params.map { case (k, v) =>
         k + "=" + java.net.URLEncoder.encode(v, "UTF-8") }.mkString("&")
-      val hdrs = Ec2Sd.SigV4.headers(credsProvider.creds(), region, "rds",
-        host, body, java.time.Instant.now())
-      val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + "/"))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-      hdrs.foreach { case (k, v) => b.header(k, v) }
-      val resp = client.send(b.build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"rds sd: status ${resp.statusCode()}")
-      resp.body()
+      AwsSd.post("rds", base, body, Ec2Sd.SigV4.headers(credsProvider.creds(), region,
+        "rds", host, body, java.time.Instant.now()))
     }
 
     override def describeDBClusters(identifier: Option[String],

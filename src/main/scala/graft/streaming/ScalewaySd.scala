@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Scaleway service discovery (ref: discovery/scaleway/scaleway.go;
   * instance.go for the instance role, baremetal.go for baremetal).
@@ -33,43 +34,10 @@ object ScalewaySd {
   trait ApiClient { def get(path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    private def secret(): String =
-      if (cfg.secretKey.nonEmpty) cfg.secretKey
-      else if (cfg.secretKeyFile.nonEmpty)
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(cfg.secretKeyFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      else ""
-    override def get(path: String): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(
-            java.net.URI.create(cfg.apiUrl.stripSuffix("/") + path))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/json")
-          .header("X-Auth-Token", secret()).GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"scaleway sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String =
+      SdHttp.get("scaleway", cfg.apiUrl.stripSuffix("/") + path,
+        Seq("X-Auth-Token" -> SdHttp.secret(cfg.secretKey, cfg.secretKeyFile)))
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def m(o: J, k: String): J = jmap(o.getOrElse(k, null))
-  private def strs(o: J, k: String): List[String] =
-    (o.getOrElse(k, null) match { case l: List[_] => l; case _ => Nil }).map(jstr)
 
   /** zone → region (ref scw.Zone.Region: strip the trailing -N) */
   private def regionOf(zone: String): String =
@@ -90,8 +58,8 @@ object ScalewaySd {
     var page = 1
     var more = true
     while (more) {
-      val items = jlist(jmap(JsonLite.parse(
-        client.get(s"$base?page=$page&per_page=50$extraQuery"))).getOrElse(key, null))
+      val items = list(map(JsonLite.parse(
+        client.get(s"$base?page=$page&per_page=50$extraQuery"))), key)
       out ++= items
       more = items.size == 50
       page += 1
@@ -105,9 +73,9 @@ object ScalewaySd {
   private def privateNicIps(client: ApiClient, cfg: Config,
       servers: List[J]): Map[String, String] = {
     val nicIds = servers.filter { sv =>
-      m(sv, "public_ip").isEmpty && m(sv, "ipv6").isEmpty &&
-        { val p = s(sv, "private_ip"); p.isEmpty || p == "null" }
-    }.flatMap(sv => jlist(sv.getOrElse("private_nics", null)).map(s(_, "id")))
+      map(sv, "public_ip").isEmpty && map(sv, "ipv6").isEmpty &&
+        { val p = str(sv, "private_ip"); p.isEmpty || p == "null" }
+    }.flatMap(sv => list(sv, "private_nics").map(str(_, "id")))
       .filter(_.nonEmpty)
     if (nicIds.isEmpty) Map.empty
     else {
@@ -116,10 +84,10 @@ object ScalewaySd {
         "&resource_type=instance_private_nic"
       listAll(client, s"/ipam/v1/regions/${regionOf(cfg.zone)}/ips", "ips", q)
         .flatMap { ip =>
-          val addr = s(ip, "address").split("/")(0)
-          val rid = s(m(ip, "resource"), "id")
+          val addr = str(ip, "address").split("/")(0)
+          val rid = str(map(ip, "resource"), "id")
           if (rid.nonEmpty && addr.nonEmpty && !addr.contains(":") &&
-              ip.getOrElse("is_ipv6", null) != java.lang.Boolean.TRUE)
+              !bool(ip, "is_ipv6"))
             Some(rid -> addr)
           else None
         }.toMap
@@ -133,57 +101,57 @@ object ScalewaySd {
     val nicIp = privateNicIps(client, cfg, servers)
     servers.flatMap { sv =>
       var l = Map(
-        "__meta_scaleway_instance_boot_type" -> s(sv, "boot_type"),
-        "__meta_scaleway_instance_hostname" -> s(sv, "hostname"),
-        "__meta_scaleway_instance_id" -> s(sv, "id"),
-        "__meta_scaleway_instance_name" -> s(sv, "name"),
-        "__meta_scaleway_instance_organization_id" -> s(sv, "organization"),
-        "__meta_scaleway_instance_project_id" -> s(sv, "project"),
-        "__meta_scaleway_instance_status" -> s(sv, "state"),
-        "__meta_scaleway_instance_type" -> s(sv, "commercial_type"),
+        "__meta_scaleway_instance_boot_type" -> str(sv, "boot_type"),
+        "__meta_scaleway_instance_hostname" -> str(sv, "hostname"),
+        "__meta_scaleway_instance_id" -> str(sv, "id"),
+        "__meta_scaleway_instance_name" -> str(sv, "name"),
+        "__meta_scaleway_instance_organization_id" -> str(sv, "organization"),
+        "__meta_scaleway_instance_project_id" -> str(sv, "project"),
+        "__meta_scaleway_instance_status" -> str(sv, "state"),
+        "__meta_scaleway_instance_type" -> str(sv, "commercial_type"),
         "__meta_scaleway_instance_zone" -> cfg.zone,
         "__meta_scaleway_instance_region" -> regionOf(cfg.zone))
-      val img = m(sv, "image")
+      val img = map(sv, "image")
       if (img.nonEmpty) l ++= Map(
-        "__meta_scaleway_instance_image_arch" -> s(img, "arch"),
-        "__meta_scaleway_instance_image_id" -> s(img, "id"),
-        "__meta_scaleway_instance_image_name" -> s(img, "name"))
-      val loc = m(sv, "location")
+        "__meta_scaleway_instance_image_arch" -> str(img, "arch"),
+        "__meta_scaleway_instance_image_id" -> str(img, "id"),
+        "__meta_scaleway_instance_image_name" -> str(img, "name"))
+      val loc = map(sv, "location")
       if (loc.nonEmpty) l ++= Map(
-        "__meta_scaleway_instance_location_cluster_id" -> s(loc, "cluster_id"),
-        "__meta_scaleway_instance_location_hypervisor_id" -> s(loc, "hypervisor_id"),
-        "__meta_scaleway_instance_location_node_id" -> s(loc, "node_id"))
-      val sg = m(sv, "security_group")
+        "__meta_scaleway_instance_location_cluster_id" -> str(loc, "cluster_id"),
+        "__meta_scaleway_instance_location_hypervisor_id" -> str(loc, "hypervisor_id"),
+        "__meta_scaleway_instance_location_node_id" -> str(loc, "node_id"))
+      val sg = map(sv, "security_group")
       if (sg.nonEmpty) l ++= Map(
-        "__meta_scaleway_instance_security_group_id" -> s(sg, "id"),
-        "__meta_scaleway_instance_security_group_name" -> s(sg, "name"))
+        "__meta_scaleway_instance_security_group_id" -> str(sg, "id"),
+        "__meta_scaleway_instance_security_group_name" -> str(sg, "name"))
       val tags = strs(sv, "tags")
       if (tags.nonEmpty)
         l += "__meta_scaleway_instance_tags" -> tags.mkString(",", ",", ",")
       // public ip address lists (ref instance.go:174-199)
-      val pubIps = jlist(sv.getOrElse("public_ips", null))
-      val (v4s, v6s) = pubIps.partition(ip => s(ip, "family") != "inet6")
+      val pubIps = list(sv, "public_ips")
+      val (v4s, v6s) = pubIps.partition(ip => str(ip, "family") != "inet6")
       if (v4s.nonEmpty)
         l += "__meta_scaleway_instance_public_ipv4_addresses" ->
-          v4s.map(s(_, "address")).mkString(",", ",", ",")
+          v4s.map(str(_, "address")).mkString(",", ",", ",")
       if (v6s.nonEmpty)
         l += "__meta_scaleway_instance_public_ipv6_addresses" ->
-          v6s.map(s(_, "address")).mkString(",", ",", ",")
+          v6s.map(str(_, "address")).mkString(",", ",", ",")
       // address ladder: ipv6 → public_ip (v4 label only when not inet6) →
       // private_ip; last assignment wins (ref instance.go:201-216)
       var addr = ""
-      val ipv6 = m(sv, "ipv6")
-      if (ipv6.nonEmpty && s(ipv6, "address").nonEmpty) {
-        l += "__meta_scaleway_instance_public_ipv6" -> s(ipv6, "address")
-        addr = s(ipv6, "address")
+      val ipv6 = map(sv, "ipv6")
+      if (ipv6.nonEmpty && str(ipv6, "address").nonEmpty) {
+        l += "__meta_scaleway_instance_public_ipv6" -> str(ipv6, "address")
+        addr = str(ipv6, "address")
       }
-      val pubIp = m(sv, "public_ip")
-      if (pubIp.nonEmpty && s(pubIp, "address").nonEmpty) {
-        if (s(pubIp, "family") != "inet6")
-          l += "__meta_scaleway_instance_public_ipv4" -> s(pubIp, "address")
-        addr = s(pubIp, "address")
+      val pubIp = map(sv, "public_ip")
+      if (pubIp.nonEmpty && str(pubIp, "address").nonEmpty) {
+        if (str(pubIp, "family") != "inet6")
+          l += "__meta_scaleway_instance_public_ipv4" -> str(pubIp, "address")
+        addr = str(pubIp, "address")
       }
-      val privIp = s(sv, "private_ip")
+      val privIp = str(sv, "private_ip")
       if (privIp.nonEmpty && privIp != "null") {
         l += "__meta_scaleway_instance_private_ipv4" -> privIp
         addr = privIp
@@ -191,8 +159,8 @@ object ScalewaySd {
       // fully-private server: first private NIC with an IPAM-resolved IP
       // (ref instance.go:218-229)
       if (addr.isEmpty)
-        jlist(sv.getOrElse("private_nics", null)).iterator
-          .flatMap(nic => nicIp.get(s(nic, "id")))
+        list(sv, "private_nics").iterator
+          .flatMap(nic => nicIp.get(str(nic, "id")))
           .nextOption().foreach { ip =>
             l += "__meta_scaleway_instance_private_ipv4" -> ip
             addr = ip
@@ -207,31 +175,31 @@ object ScalewaySd {
     val servers = listAll(client, s"/baremetal/v1/zones/${cfg.zone}/servers",
       "servers", filterQuery(cfg))
     val offers = listAll(client, s"/baremetal/v1/zones/${cfg.zone}/offers", "offers", "")
-      .map(o => s(o, "id") -> s(o, "name")).toMap
+      .map(o => str(o, "id") -> str(o, "name")).toMap
     val osList = listAll(client, s"/baremetal/v1/zones/${cfg.zone}/os", "os", "")
-      .map(o => s(o, "id") -> o).toMap
+      .map(o => str(o, "id") -> o).toMap
     servers.flatMap { sv =>
       var l = Map(
-        "__meta_scaleway_baremetal_id" -> s(sv, "id"),
-        "__meta_scaleway_baremetal_name" -> s(sv, "name"),
+        "__meta_scaleway_baremetal_id" -> str(sv, "id"),
+        "__meta_scaleway_baremetal_name" -> str(sv, "name"),
         "__meta_scaleway_baremetal_zone" -> cfg.zone,
-        "__meta_scaleway_baremetal_status" -> s(sv, "status"),
-        "__meta_scaleway_baremetal_project_id" -> s(sv, "project_id"))
-      offers.get(s(sv, "offer_id")).foreach(n =>
+        "__meta_scaleway_baremetal_status" -> str(sv, "status"),
+        "__meta_scaleway_baremetal_project_id" -> str(sv, "project_id"))
+      offers.get(str(sv, "offer_id")).foreach(n =>
         l += "__meta_scaleway_baremetal_type" -> n)
-      val install = m(sv, "install")
+      val install = map(sv, "install")
       if (install.nonEmpty)
-        osList.get(s(install, "os_id")).foreach { os =>
-          l += "__meta_scaleway_baremetal_os_name" -> s(os, "name")
-          l += "__meta_scaleway_baremetal_os_version" -> s(os, "version")
+        osList.get(str(install, "os_id")).foreach { os =>
+          l += "__meta_scaleway_baremetal_os_name" -> str(os, "name")
+          l += "__meta_scaleway_baremetal_os_version" -> str(os, "version")
         }
       val tags = strs(sv, "tags")
       if (tags.nonEmpty)
         l += "__meta_scaleway_baremetal_tags" -> tags.mkString(",", ",", ",")
       var addr = ""
-      jlist(sv.getOrElse("ips", null)).foreach { ip =>
-        val a = s(ip, "address")
-        s(ip, "version") match {
+      list(sv, "ips").foreach { ip =>
+        val a = str(ip, "address")
+        str(ip, "version") match {
           case "IPv4" if !l.contains("__meta_scaleway_baremetal_public_ipv4") =>
             l += "__meta_scaleway_baremetal_public_ipv4" -> a
             addr = a

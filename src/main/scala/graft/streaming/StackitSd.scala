@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** STACKIT Cloud service discovery (ref: discovery/stackit/stackit.go +
   * server.go).
@@ -30,68 +31,44 @@ object StackitSd {
   trait ApiClient { def get(path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def get(path: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create(cfg.apiEndpoint + path))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      if (cfg.bearerToken.nonEmpty)
-        b.header("Authorization", "Bearer " + cfg.bearerToken)
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"stackit sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String =
+      SdHttp.get("stackit", cfg.apiEndpoint + path, SdHttp.bearer(cfg.bearerToken))
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
 
   final class StackitProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
     def this(name: String, cfg: Config) = this(name, cfg, new HttpApiClient(cfg))
     override def refreshMs: Long = cfg.refreshMs
     override def refresh(): Seq[Discovery.TargetGroup] = {
-      val body = jmap(JsonLite.parse(client.get(
+      val body = map(JsonLite.parse(client.get(
         s"/v1/projects/${cfg.project}/servers")))
-      val targets = jlist(body.getOrElse("items", null)).flatMap { sv =>
-        val nics = jlist(sv.getOrElse("nics", null))
+      val targets = list(body, "items").flatMap { sv =>
+        val nics = list(sv, "nics")
         if (nics.isEmpty) None // NIC-less servers are skipped
         else {
           var l = Map(
             "__meta_stackit_project" -> cfg.project,
-            "__meta_stackit_id" -> s(sv, "id"),
-            "__meta_stackit_name" -> s(sv, "name"),
-            "__meta_stackit_availability_zone" -> s(sv, "availabilityZone"),
-            "__meta_stackit_status" -> s(sv, "status"),
-            "__meta_stackit_power_status" -> s(sv, "powerStatus"),
-            "__meta_stackit_type" -> s(sv, "machineType"))
+            "__meta_stackit_id" -> str(sv, "id"),
+            "__meta_stackit_name" -> str(sv, "name"),
+            "__meta_stackit_availability_zone" -> str(sv, "availabilityZone"),
+            "__meta_stackit_status" -> str(sv, "status"),
+            "__meta_stackit_power_status" -> str(sv, "powerStatus"),
+            "__meta_stackit_type" -> str(sv, "machineType"))
           var addr = ""; var publicIp = ""
           nics.foreach { nic =>
-            val pub = s(nic, "publicIp")
+            val pub = str(nic, "publicIp")
             if (pub.nonEmpty && publicIp.isEmpty) { publicIp = pub; addr = pub }
-            val v4 = s(nic, "ipv4")
+            val v4 = str(nic, "ipv4")
             if (v4.nonEmpty) {
               l += "__meta_stackit_private_ipv4_" +
-                KubernetesSd.sanitize(s(nic, "networkName")) -> v4
+                KubernetesSd.sanitize(str(nic, "networkName")) -> v4
               if (addr.isEmpty) addr = v4
             }
           }
           if (addr.isEmpty) None // IP-less servers are skipped
           else {
             if (publicIp.nonEmpty) l += "__meta_stackit_public_ipv4" -> publicIp
-            jmap(sv.getOrElse("labels", null)).foreach {
+            map(sv, "labels").foreach {
               case (k, v: String) =>
                 val sk = KubernetesSd.sanitize(k)
                 l += "__meta_stackit_label_" + sk -> v

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Triton (triton-cmon) service discovery (ref: discovery/triton/triton.go).
   *
@@ -26,30 +27,8 @@ object TritonSd {
   trait ApiClient { def get(url: String): String }
 
   final class HttpApiClient extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def get(url: String): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Accept", "application/json").GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"triton sd: ${resp.statusCode()}")
-      resp.body()
-    }
+    override def get(url: String): String = SdHttp.get("triton", url)
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] =
-    (v match { case l: List[_] => l; case _ => Nil }).map(jmap)
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
 
   final class TritonProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
@@ -61,28 +40,26 @@ object TritonSd {
       if (cfg.groups.nonEmpty)
         url += "?groups=" + java.net.URLEncoder.encode(cfg.groups.mkString(","),
           java.nio.charset.StandardCharsets.UTF_8)
-      val body = jmap(JsonLite.parse(client.get(url)))
+      val body = map(JsonLite.parse(client.get(url)))
       val targets: Seq[(String, Map[String, String])] =
         if (cfg.role == "cn")
-          jlist(body.getOrElse("cns", null)).map { cn =>
-            (s"${s(cn, "server_uuid")}.${cfg.dnsSuffix}:${cfg.port}", Map(
-              "__meta_triton_machine_id" -> s(cn, "server_uuid"),
-              "__meta_triton_machine_alias" -> s(cn, "server_hostname")))
+          list(body, "cns").map { cn =>
+            (s"${str(cn, "server_uuid")}.${cfg.dnsSuffix}:${cfg.port}", Map(
+              "__meta_triton_machine_id" -> str(cn, "server_uuid"),
+              "__meta_triton_machine_alias" -> str(cn, "server_hostname")))
           }
         else
-          jlist(body.getOrElse("containers", null)).map { c =>
+          list(body, "containers").map { c =>
             var l = Map(
-              "__meta_triton_machine_id" -> s(c, "vm_uuid"),
-              "__meta_triton_machine_alias" -> s(c, "vm_alias"),
-              "__meta_triton_machine_brand" -> s(c, "vm_brand"),
-              "__meta_triton_machine_image" -> s(c, "vm_image_uuid"),
-              "__meta_triton_server_id" -> s(c, "server_uuid"))
-            val groups = (c.getOrElse("groups", null) match {
-              case g: List[_] => g; case _ => Nil
-            }).map(jstr)
+              "__meta_triton_machine_id" -> str(c, "vm_uuid"),
+              "__meta_triton_machine_alias" -> str(c, "vm_alias"),
+              "__meta_triton_machine_brand" -> str(c, "vm_brand"),
+              "__meta_triton_machine_image" -> str(c, "vm_image_uuid"),
+              "__meta_triton_server_id" -> str(c, "server_uuid"))
+            val groups = strs(c, "groups")
             if (groups.nonEmpty)
               l += "__meta_triton_groups" -> groups.mkString(",", ",", ",")
-            (s"${s(c, "vm_uuid")}.${cfg.dnsSuffix}:${cfg.port}", l)
+            (s"${str(c, "vm_uuid")}.${cfg.dnsSuffix}:${cfg.port}", l)
           }
       Seq(Discovery.TargetGroup(url, Map.empty, targets))
     }

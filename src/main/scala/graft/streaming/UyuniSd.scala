@@ -1,5 +1,7 @@
 package graft.streaming
 
+import SdJson._
+
 /** Uyuni / SUSE Manager service discovery (ref: discovery/uyuni/uyuni.go).
   *
   * The Uyuni API is XML-RPC over HTTP POST to `{server}/rpc/api`. Per
@@ -115,34 +117,12 @@ object UyuniSd {
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
     private val url = cfg.server.stripSuffix("/") + "/rpc/api"
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    override def call(method: String, params: Seq[Any]): Any = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Content-Type", "text/xml")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-            encodeCall(method, params))).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"uyuni sd: ${resp.statusCode()} for $method")
-      decodeResponse(resp.body())
-    }
+    override def call(method: String, params: Seq[Any]): Any =
+      decodeResponse(SdHttp.post("uyuni", url, encodeCall(method, params),
+        Seq("Content-Type" -> "text/xml"), accept = ""))
   }
 
   // ------------------------------------------------------------ provider
-
-  private def jmap(v: Any): Map[String, Any] =
-    v match { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]; case _ => Map.empty }
-  private def jlist(v: Any): List[Any] = v match { case l: List[_] => l; case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s; case null => ""; case other => String.valueOf(other) }
-  private def s(o: Map[String, Any], k: String): String = jstr(o.getOrElse(k, null))
-  private def jlong(o: Map[String, Any], k: String): Long = o.getOrElse(k, null) match {
-    case l: Long => l; case d: java.lang.Double => d.longValue
-    case i: Integer => i.longValue; case _ => 0L
-  }
 
   /** the reference's 12h API token, re-logged-in at half-life */
   private val tokenDurationMs = 12L * 3600 * 1000
@@ -157,40 +137,38 @@ object UyuniSd {
     override def refresh(): Seq[Discovery.TargetGroup] = {
       val now = System.currentTimeMillis()
       if (token.isEmpty || now >= tokenExpiresAt) {
-        token = jstr(client.call("auth.login",
+        token = str(client.call("auth.login",
           Seq(cfg.username, cfg.password, (tokenDurationMs / 1000).toInt)))
         tokenExpiresAt = now + tokenDurationMs / 2
       }
       try {
-        val groupsBySystem = jlist(client.call(
+        val groupsBySystem = list(client.call(
             "system.listSystemGroupsForSystemsWithEntitlement",
-            Seq(token, cfg.entitlement))).map(jmap)
-          .map(g => jlong(g, "id") ->
-            jlist(g.getOrElse("system_groups", null)).map(jmap).map(s(_, "name")))
+            Seq(token, cfg.entitlement)))
+          .map(g => long(g, "id") -> list(g, "system_groups").map(str(_, "name")))
           .toMap
         val systemIds = groupsBySystem.keys.toList.sorted
         if (systemIds.isEmpty)
           return Seq(Discovery.TargetGroup(cfg.server, Map.empty, Nil))
-        val endpoints = jlist(client.call("system.monitoring.listEndpoints",
-          Seq(token, systemIds))).map(jmap)
-        val netBySystem = jlist(client.call("system.getNetworkForSystems",
-          Seq(token, systemIds))).map(jmap)
-          .map(n => jlong(n, "system_id") -> n).toMap
+        val endpoints = list(client.call("system.monitoring.listEndpoints",
+          Seq(token, systemIds)))
+        val netBySystem = list(client.call("system.getNetworkForSystems",
+          Seq(token, systemIds)))
+          .map(n => long(n, "system_id") -> n).toMap
         val targets = endpoints.map { ep =>
-          val sid = jlong(ep, "system_id")
+          val sid = long(ep, "system_id")
           val net = netBySystem.getOrElse(sid, Map.empty[String, Any])
-          val scheme = if (ep.getOrElse("tls_enabled", null) == java.lang.Boolean.TRUE ||
-            ep.getOrElse("tls_enabled", null) == true) "https" else "http"
-          (s"${s(net, "hostname")}:${jlong(ep, "port")}", Map(
-            "__meta_uyuni_minion_hostname" -> s(net, "hostname"),
-            "__meta_uyuni_primary_fqdn" -> s(net, "primary_fqdn"),
+          val scheme = if (bool(ep, "tls_enabled")) "https" else "http"
+          (s"${str(net, "hostname")}:${long(ep, "port")}", Map(
+            "__meta_uyuni_minion_hostname" -> str(net, "hostname"),
+            "__meta_uyuni_primary_fqdn" -> str(net, "primary_fqdn"),
             "__meta_uyuni_system_id" -> sid.toString,
             "__meta_uyuni_groups" ->
               groupsBySystem.getOrElse(sid, Nil).mkString(cfg.separator),
-            "__meta_uyuni_endpoint_name" -> s(ep, "endpoint_name"),
-            "__meta_uyuni_exporter" -> s(ep, "exporter_name"),
-            "__meta_uyuni_proxy_module" -> s(ep, "module"),
-            "__meta_uyuni_metrics_path" -> s(ep, "path"),
+            "__meta_uyuni_endpoint_name" -> str(ep, "endpoint_name"),
+            "__meta_uyuni_exporter" -> str(ep, "exporter_name"),
+            "__meta_uyuni_proxy_module" -> str(ep, "module"),
+            "__meta_uyuni_metrics_path" -> str(ep, "path"),
             "__meta_uyuni_scheme" -> scheme))
         }
         Seq(Discovery.TargetGroup(cfg.server, Map.empty, targets))

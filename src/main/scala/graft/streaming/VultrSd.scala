@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** Vultr service discovery (ref: discovery/vultr/vultr.go).
   *
@@ -20,43 +21,10 @@ object VultrSd {
   trait ApiClient { def get(path: String): String }
 
   final class HttpApiClient(cfg: Config) extends ApiClient {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    private def token(): String =
-      if (cfg.bearerToken.nonEmpty) cfg.bearerToken
-      else if (cfg.bearerTokenFile.nonEmpty)
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(cfg.bearerTokenFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      else ""
-    override def get(path: String): String = {
-      val b = java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create("https://api.vultr.com" + path))
-        .timeout(java.time.Duration.ofSeconds(30))
-        .header("Accept", "application/json")
-      val t = token()
-      if (t.nonEmpty) b.header("Authorization", "Bearer " + t)
-      val resp = client.send(b.GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"vultr sd: ${resp.statusCode()} for $path")
-      resp.body()
-    }
+    override def get(path: String): String =
+      SdHttp.get("vultr", "https://api.vultr.com" + path,
+        SdHttp.bearer(cfg.bearerToken, cfg.bearerTokenFile))
   }
-
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jlist(v: Any): List[J] = v match { case l: List[_] => l.map(jmap); case _ => Nil }
-  private def jstr(v: Any): String = v match {
-    case s: String => s
-    case d: java.lang.Double if d.doubleValue.isWhole && math.abs(d.doubleValue) < 1e15 =>
-      d.longValue.toString
-    case null => ""
-    case other => String.valueOf(other)
-  }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def strs(o: J, k: String): List[String] =
-    (o.getOrElse(k, null) match { case l: List[_] => l; case _ => Nil }).map(jstr)
 
   final class VultrProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
@@ -70,33 +38,33 @@ object VultrSd {
         val q = "?per_page=100" + (if (cursor.isEmpty) "" else
           "&cursor=" + java.net.URLEncoder.encode(cursor,
             java.nio.charset.StandardCharsets.UTF_8))
-        val body = jmap(JsonLite.parse(client.get("/v2/instances" + q)))
-        jlist(body.getOrElse("instances", null)).foreach { inst =>
+        val body = map(JsonLite.parse(client.get("/v2/instances" + q)))
+        list(body, "instances").foreach { inst =>
           var l = Map(
-            "__meta_vultr_instance_id" -> s(inst, "id"),
-            "__meta_vultr_instance_label" -> s(inst, "label"),
-            "__meta_vultr_instance_os" -> s(inst, "os"),
-            "__meta_vultr_instance_os_id" -> s(inst, "os_id"),
-            "__meta_vultr_instance_region" -> s(inst, "region"),
-            "__meta_vultr_instance_plan" -> s(inst, "plan"),
-            "__meta_vultr_instance_vcpu_count" -> s(inst, "vcpu_count"),
-            "__meta_vultr_instance_ram_mb" -> s(inst, "ram"),
-            "__meta_vultr_instance_allowed_bandwidth_gb" -> s(inst, "allowed_bandwidth"),
-            "__meta_vultr_instance_disk_gb" -> s(inst, "disk"),
-            "__meta_vultr_instance_main_ip" -> s(inst, "main_ip"),
-            "__meta_vultr_instance_main_ipv6" -> s(inst, "v6_main_ip"),
-            "__meta_vultr_instance_internal_ip" -> s(inst, "internal_ip"),
-            "__meta_vultr_instance_hostname" -> s(inst, "hostname"),
-            "__meta_vultr_instance_server_status" -> s(inst, "server_status"))
+            "__meta_vultr_instance_id" -> str(inst, "id"),
+            "__meta_vultr_instance_label" -> str(inst, "label"),
+            "__meta_vultr_instance_os" -> str(inst, "os"),
+            "__meta_vultr_instance_os_id" -> str(inst, "os_id"),
+            "__meta_vultr_instance_region" -> str(inst, "region"),
+            "__meta_vultr_instance_plan" -> str(inst, "plan"),
+            "__meta_vultr_instance_vcpu_count" -> str(inst, "vcpu_count"),
+            "__meta_vultr_instance_ram_mb" -> str(inst, "ram"),
+            "__meta_vultr_instance_allowed_bandwidth_gb" -> str(inst, "allowed_bandwidth"),
+            "__meta_vultr_instance_disk_gb" -> str(inst, "disk"),
+            "__meta_vultr_instance_main_ip" -> str(inst, "main_ip"),
+            "__meta_vultr_instance_main_ipv6" -> str(inst, "v6_main_ip"),
+            "__meta_vultr_instance_internal_ip" -> str(inst, "internal_ip"),
+            "__meta_vultr_instance_hostname" -> str(inst, "hostname"),
+            "__meta_vultr_instance_server_status" -> str(inst, "server_status"))
           val features = strs(inst, "features")
           if (features.nonEmpty)
             l += "__meta_vultr_instance_features" -> features.mkString(",", ",", ",")
           val tags = strs(inst, "tags")
           if (tags.nonEmpty)
             l += "__meta_vultr_instance_tags" -> tags.mkString(",", ",", ",")
-          targets += ((s"${s(inst, "main_ip")}:${cfg.port}", l))
+          targets += ((s"${str(inst, "main_ip")}:${cfg.port}", l))
         }
-        cursor = s(jmap(jmap(body.getOrElse("meta", null)).getOrElse("links", null)), "next")
+        cursor = str(map(map(body, "meta"), "links"), "next")
         more = cursor.nonEmpty
       }
       Seq(Discovery.TargetGroup("Vultr", Map.empty, targets.result()))

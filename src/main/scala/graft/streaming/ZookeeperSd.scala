@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.web.JsonLite
+import SdJson._
 
 /** ZooKeeper-backed service discovery — Twitter serversets and AirBnB Nerve
   * (ref: discovery/zookeeper/zookeeper.go; the treecache machinery in
@@ -135,45 +136,37 @@ object ZookeeperSd {
 
   // ----------------------------------------------------- member parsing
 
-  private type J = Map[String, Any]
-  private def jmap(v: Any): J = v match { case m: Map[_, _] => m.asInstanceOf[J]; case _ => Map.empty }
-  private def jstr(v: Any): String = v match {
-    case s: String => s; case null => ""; case other => String.valueOf(other) }
-  private def s(o: J, k: String): String = jstr(o.getOrElse(k, null))
-  private def jint(o: J, k: String): Int = o.getOrElse(k, null) match {
-    case d: java.lang.Double => d.intValue; case _ => 0 }
-
   /** ref zookeeper.go parseServersetMember */
   private[streaming] def parseServerset(data: String, path: String):
       Option[(String, Map[String, String])] = {
-    val m = jmap(JsonLite.parse(data))
-    val se = jmap(m.getOrElse("serviceEndpoint", null))
+    val m = map(JsonLite.parse(data))
+    val se = map(m, "serviceEndpoint")
     if (se.isEmpty) return None
     var l = Map(
       "__meta_serverset_path" -> path,
-      "__meta_serverset_endpoint_host" -> s(se, "host"),
-      "__meta_serverset_endpoint_port" -> jint(se, "port").toString,
-      "__meta_serverset_status" -> s(m, "status"),
-      "__meta_serverset_shard" -> jint(m, "shard").toString)
-    jmap(m.getOrElse("additionalEndpoints", null)).foreach { case (name, ep) =>
-      val e = jmap(ep)
+      "__meta_serverset_endpoint_host" -> str(se, "host"),
+      "__meta_serverset_endpoint_port" -> long(se, "port").toString,
+      "__meta_serverset_status" -> str(m, "status"),
+      "__meta_serverset_shard" -> long(m, "shard").toString)
+    map(m, "additionalEndpoints").foreach { case (name, ep) =>
+      val e = map(ep)
       val cn = KubernetesSd.sanitize(name)
-      l += "__meta_serverset_endpoint_host_" + cn -> s(e, "host")
-      l += "__meta_serverset_endpoint_port_" + cn -> jint(e, "port").toString
+      l += "__meta_serverset_endpoint_host_" + cn -> str(e, "host")
+      l += "__meta_serverset_endpoint_port_" + cn -> long(e, "port").toString
     }
-    Some((s"${s(se, "host")}:${jint(se, "port")}", l))
+    Some((s"${str(se, "host")}:${long(se, "port")}", l))
   }
 
   /** ref zookeeper.go parseNerveMember */
   private[streaming] def parseNerve(data: String, path: String):
       Option[(String, Map[String, String])] = {
-    val m = jmap(JsonLite.parse(data))
-    if (s(m, "host").isEmpty) return None
-    Some((s"${s(m, "host")}:${jint(m, "port")}", Map(
+    val m = map(JsonLite.parse(data))
+    if (str(m, "host").isEmpty) return None
+    Some((s"${str(m, "host")}:${long(m, "port")}", Map(
       "__meta_nerve_path" -> path,
-      "__meta_nerve_endpoint_host" -> s(m, "host"),
-      "__meta_nerve_endpoint_port" -> jint(m, "port").toString,
-      "__meta_nerve_endpoint_name" -> s(m, "name"))))
+      "__meta_nerve_endpoint_host" -> str(m, "host"),
+      "__meta_nerve_endpoint_port" -> long(m, "port").toString,
+      "__meta_nerve_endpoint_name" -> str(m, "name"))))
   }
 
   // ------------------------------------------------------------ provider

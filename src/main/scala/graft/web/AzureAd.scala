@@ -216,14 +216,15 @@ object AzureAd {
 
   /** bearer tokens with an expiry-refreshed cache; `authorityOverride` /
     * `imdsOverride` point the flows at fake endpoints in tests, `env`
-    * feeds the sdk chain's environment probing */
+    * feeds the sdk chain's environment probing; `client` lets service
+    * discovery fetch its tokens over its one shared client */
   final class TokenProvider(cfg: Config,
       authorityOverride: Option[String] = None,
       imdsOverride: Option[String] = None,
       nowMs: () => Long = () => System.currentTimeMillis(),
-      env: Map[String, String] = sys.env) {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
+      env: Map[String, String] = sys.env,
+      client: java.net.http.HttpClient = java.net.http.HttpClient.newBuilder()
+        .connectTimeout(java.time.Duration.ofSeconds(10)).build()) {
     private var cached: String = null
     private var expiresAtMs: Long = Long.MinValue
 
