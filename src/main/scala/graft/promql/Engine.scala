@@ -72,7 +72,7 @@ object Engine {
     * anti-joins, histogram branches) from plans over float-only stores — the
     * common case at 100 TB, where those legs would each re-scan the input. */
   private[promql] val storeAbsentKey = "graft.store_absent"
-  private val storeAbsent: Metadata =
+  private[graft] val storeAbsent: Metadata =
     new MetadataBuilder().putBoolean(storeAbsentKey, true).build()
 
   /** accept samples tables without the optional columns */

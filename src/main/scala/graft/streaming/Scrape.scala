@@ -420,9 +420,7 @@ final class ScrapeManager(
           ("scrape_samples_post_metric_relabeling", 0.0)).map { case (n, v) =>
           Row(ScrapeManager.decorate(tgt, Map("__name__" -> n)), t0, v, false, null, 0L) }
       }
-      if (rows.nonEmpty)
-        store.append(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), Engine.samplesSchema))
+      store.appendRows(rows)
       return rows.size.toLong
     }
     // prune series caches of departed targets — SD churn must not grow
@@ -438,9 +436,7 @@ final class ScrapeManager(
         seriesSeen.getOrElse(k, Map.empty).valuesIterator.collect {
           case (l, explicit) if !explicit || trackTimestampsStaleness => l
         }).map(l => Row(l, tMark, Double.NaN, true, null, 0L))
-      if (rows.nonEmpty)
-        store.append(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), Engine.samplesSchema))
+      store.appendRows(rows)
       departed.foreach(seriesSeen.remove)
     }
     stSynthState.keys.filterNot(liveKeys).foreach(stSynthState.remove)
@@ -566,8 +562,7 @@ final class ScrapeManager(
             graft.web.RemoteWrite.Sample(l, t, v, stt) } ++
           synthesizeHistSt(tgtKey, hists, famTypes)
       }
-    val rows = stamped.map(s =>
-      Row(s.labels, s.t, s.v, false, s.h.map(FHist.toRow).orNull, s.stt))
+    val rows = stamped.map(_.toRow)
     val df0 = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, math.max(1, rows.size / 10000)),
       Engine.samplesSchema)
@@ -603,10 +598,8 @@ final class ScrapeManager(
       Row(decorate(Map("__name__" -> n)), t0, v, false, null, 0L)
     }
     val markerRows = staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L))
-    val reportDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(report ++ markerRows, 1), Engine.samplesSchema)
-    store.append(scraped.filter(_ => violation.isEmpty)
-      .map(_.unionByName(reportDf)).getOrElse(reportDf))
+    scraped.filter(_ => violation.isEmpty).foreach(store.append)
+    store.appendRows(report ++ markerRows)
     if (parsed.meta.nonEmpty && violation.isEmpty) store.mergeMetadata(parsed.meta)
     // exemplars ride the accepted scrape only, attached to the decorated,
     // POST-metric-relabel series (same contract as the OpenMetrics path);
@@ -822,19 +815,10 @@ final class ScrapeManager(
         ("scrape_timeout_seconds", timeoutMs / 1000.0),
         ("scrape_sample_limit", limits.sampleLimit.toDouble),
         ("scrape_body_size_bytes", bodyLen.toDouble)) else Nil))
-      .map { case (n, v) => (decorate(Map("__name__" -> n)), t0, v, 0L) }
+      .map { case (n, v) => Row(decorate(Map("__name__" -> n)), t0, v, false, null, 0L) }
     // a violated limit drops the WHOLE scraped batch (append rollback)
-    val batch0 = scraped.filter(_ => violation.isEmpty) match {
-      case Some(df) => df.unionByName(toDf(report))
-      case None => toDf(report)
-    }
-    val batch =
-      if (staleLabels.isEmpty) batch0
-      else batch0.unionByName(spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L)), 1),
-        Engine.samplesSchema))
-    store.append(batch)
+    scraped.filter(_ => violation.isEmpty).foreach(store.append)
+    store.appendRows(report ++ staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L)))
     // exemplars ride the accepted scrape only, attached to the decorated,
     // POST-metric-relabel series — an exemplar of a relabel-dropped series
     // is dropped with it (ref: scrape.go exemplars append after the sample's

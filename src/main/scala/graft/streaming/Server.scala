@@ -352,8 +352,16 @@ final class PromServer(
       // ts - offset, trading recency for slow-ingest slack (ref:
       // rules/group.go Eval restoreStartTime/queryOffset)
       val ets = tsMs - g.queryOffsetMs
+      // a rule whose query or append fails goes unhealthy with the error;
+      // the tick goes on with the group's other rules (ref: rules/group.go
+      // Eval — a failed rule sets its health and lastError)
+      def guarded(rule: String)(body: => Unit): Unit =
+        try body catch { case e: Exception =>
+          api.ruleErrors = api.ruleErrors.updated((g.name, rule),
+            Option(e.getMessage).getOrElse(e.getClass.getName))
+        }
       Rules.recordingLevels(g.recording).foreach { level =>
-        level.foreach { r =>
+        level.foreach { r => guarded(r.record) {
           val out = Rules.evalRecording(spark, store.samples, r, ets)
           // group limit: a recording rule producing more series than the
           // group allows DROPS its output and goes unhealthy (ref:
@@ -363,8 +371,8 @@ final class PromServer(
             api.ruleErrors = api.ruleErrors.updated((g.name, r.record),
               s"exceeded limit of ${g.limit} with $n series")
           } else {
-            api.ruleErrors -= ((g.name, r.record))
             store.append(out)
+            api.ruleErrors -= ((g.name, r.record))
             // a failing sink must not abort the evaluation tick: the
             // reference's queue manager is async — send failures drop/retry
             // on their own clock and never stall rule evaluation
@@ -374,9 +382,9 @@ final class PromServer(
                 System.err.println(s"[remote-write] forward failed: ${e.getMessage}") }
             }
           }
-        }
+        } }
       }
-      g.alerting.foreach { a =>
+      g.alerting.foreach { a => guarded(a.alert) {
         val prevAll = alertStates.getOrElse(g.name, Map.empty)
         val prev = prevAll.filter(
           _._2.labels.getOrElse("alertname", "") == a.alert)
@@ -386,14 +394,14 @@ final class PromServer(
           api.ruleErrors = api.ruleErrors.updated((g.name, a.alert),
             s"exceeded limit of ${g.limit} with ${next.size} alerts")
         } else {
-          api.ruleErrors -= ((g.name, a.alert))
           store.append(df)
+          api.ruleErrors -= ((g.name, a.alert))
           val others = prevAll -- prev.keys
           alertStates = alertStates.updated(g.name, others ++ next)
           api.alertState = alertStates
           notifier.foreach(_.sendFromState(a, next, ets))
         }
-      }
+      } }
       api.ruleEvalStats = api.ruleEvalStats
         .updated(g.name, (tsMs, (System.nanoTime() - g0) / 1e9))
     }

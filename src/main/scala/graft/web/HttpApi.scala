@@ -643,13 +643,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
       val snappyOn = Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
         .forall(_.equalsIgnoreCase("snappy")) // PRW mandates snappy; absent ⇒ assume snappy
       val (samples, meta) = RemoteWrite.decodeFull(body, isV2, snappyOn)
-      if (samples.nonEmpty) {
-        val rows = samples.map(s =>
-          Row(s.labels, s.t, s.v, false, s.h.map(FHist.toRow).orNull, s.stt))
-        store.append(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, math.max(1, samples.length / 10000)),
-          Engine.samplesSchema))
-      }
+      store.appendRows(samples.map(_.toRow))
       if (meta.nonEmpty) store.mergeMetadata(meta)
       ex.sendResponseHeaders(204, -1)
     })
@@ -1397,13 +1391,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         .exists(_.contains("gzip"))
       val dec = Otlp.decode(ex.getRequestBody.readAllBytes(), gz, Some(otlpDelta),
         otlpCfg)
-      if (dec.samples.nonEmpty) {
-        val rows = dec.samples.map(s =>
-          Row(s.labels, s.t, s.v, false, s.h.map(FHist.toRow).orNull, s.stt))
-        store.append(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, math.max(1, rows.length / 10000)),
-          Engine.samplesSchema))
-      }
+      store.appendRows(dec.samples.map(_.toRow))
       if (dec.metadata.nonEmpty) store.mergeMetadata(dec.metadata)
       if (dec.exemplars.nonEmpty) {
         // exemplar rows: (series labels, exemplar{labels, v, t}) — the same

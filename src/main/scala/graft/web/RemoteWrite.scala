@@ -23,7 +23,11 @@ object RemoteWrite {
   import graft.promql.FHist
 
   final case class Sample(labels: Map[String, String], t: Long, v: Double,
-      stt: Long = 0L, h: Option[FHist] = None)
+      stt: Long = 0L, h: Option[FHist] = None) {
+    /** this sample as a row of [[graft.promql.Engine.samplesSchema]] */
+    def toRow: org.apache.spark.sql.Row =
+      org.apache.spark.sql.Row(labels, t, v, false, h.map(FHist.toRow).orNull, stt)
+  }
 
   /** family → (type, unit, help), from PRW 2.0 per-series metadata */
   type Meta = Map[String, (String, String, String)]

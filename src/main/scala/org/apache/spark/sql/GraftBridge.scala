@@ -1,8 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.types.{AbstractDataType, DoubleType}
+import org.apache.spark.sql.types.{AbstractDataType, DoubleType, StructType}
 
 /** Bridge into Spark's private[sql] Column↔Expression converters (Spark 4
   * moved them behind `classic.ExpressionUtils`). Lets the engine build
@@ -11,6 +13,12 @@ import org.apache.spark.sql.types.{AbstractDataType, DoubleType}
 object GraftBridge {
   def toExpr(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def toCol(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** a DataFrame whose one leaf (a LogicalRDD) scans `rows`, which are
+    * already in `schema`'s internal row layout */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** java.lang.Math static call on double args, whole-stage-codegen friendly */
   def mathInvoke(fn: String, args: Seq[Column]): Column =
