@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,15 +24,7 @@ object Bench {
         Thread.sleep(5000L)
     }
     val loadBefore = loadavg.mkString(",")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.promql.Engine.tunedConf.foldLeft(new org.apache.spark.SparkConf()){case (c,(k,v))=>c.set(k,v)})
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val prof = if (sys.env.get("SPARK_GRAFT_PROF").contains("1")) {
       val p = new graft.bench.PromBench.StageProf
       spark.sparkContext.addSparkListener(p); Some(p)
@@ -56,38 +47,51 @@ object Bench {
     def timed(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
-    val results = SparkEntry.queries.filter(q => keep(q._1)).map { case (name, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () } // warm
-      val secs = (1 to 2).map { i =>
-        prof.foreach(_.stages.clear())
-        val s = timed {
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L } }
-        if (i == 2) prof.foreach { p => System.err.println(s"== $name $s"); p.report() }
-        s
+    // a query that throws fails the run and names itself: timing it would
+    // record a failure as a fast run
+    def orFail[T](name: String)(body: => T): T =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        e.printStackTrace()
+        spark.stop()
+        sys.exit(1)
       }
-      name -> secs.min
+    val results = SparkEntry.queries.filter(q => keep(q._1)).map { case (name, fn) =>
+      orFail(name) {
+        fn(spark, sfDir).count() // warm
+        val secs = (1 to 2).map { i =>
+          prof.foreach(_.stages.clear())
+          val s = timed { fn(spark, sfDir).count() }
+          if (i == 2) prof.foreach { p => System.err.println(s"== $name $s"); p.report() }
+          s
+        }
+        name -> secs.min
+      }
     }
     // PromQL engine headline set over the bench_test.go replica dataset
     // (hundred scale, 1000 steps @10s) — the BASELINE anchor
     val pbCases = graft.bench.PromBench.headline.filter(c => keep(s"pb:${c.expr}"))
     val pb: Map[String, Double] =
       if (pbCases.isEmpty) Map.empty
-      else try {
-        val data = graft.bench.PromBench.dataset(spark,
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/tmp/graft_bench")).cache()
-        data.count()
+      else {
+        val data = orFail("pb dataset") {
+          val d = graft.bench.PromBench.dataset(spark,
+            sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/tmp/graft_bench")).cache()
+          d.count()
+          d
+        }
         pbCases.map { c =>
-          // two untimed warm passes: the plan's Janino codegen compiles on
-          // the first, and the series-at-once UDF loops need ~2k invocations
-          // before C2 takes them (the Go reference harness's b.N loop
-          // likewise reports post-warmup per-iteration steady state)
-          graft.bench.PromBench.run(spark, data, c)
-          graft.bench.PromBench.run(spark, data, c)
-          val sec = (1 to 2).map(_ => graft.bench.PromBench.run(spark, data, c)._1).min
-          s"pb:${c.expr}" -> sec
+          val name = s"pb:${c.expr}"
+          orFail(name) {
+            // two untimed warm passes: the plan's Janino codegen compiles on
+            // the first, and the series-at-once UDF loops need ~2k invocations
+            // before C2 takes them (the Go reference harness's b.N loop
+            // likewise reports post-warmup per-iteration steady state)
+            graft.bench.PromBench.run(spark, data, c)
+            graft.bench.PromBench.run(spark, data, c)
+            name -> (1 to 2).map(_ => graft.bench.PromBench.run(spark, data, c)._1).min
+          }
         }.toMap
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] prombench failed: ${e.getMessage}"); Map.empty
       }
     val all = results ++ pb
     // millisecond-rounded values keep the ONE output line well inside the

@@ -63,13 +63,7 @@ object IngestBench {
     val numMetrics = if (args.length > 0) args(0).toInt else 10000
     val numScrapes = if (args.length > 1) args(1).toInt else 100
     val out = if (args.length > 2) args(2) else "/tmp/graft_ingest_bench"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val (total, planSec, ingestSec) = run(spark, numMetrics, numScrapes, out)
     println(f" > total samples: $total")
     println(f" > ingestion time: $ingestSec%.3fs")

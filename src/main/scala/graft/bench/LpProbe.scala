@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** one-off per-query timing split for gate queries: DataFrame BUILD time
   * (operator-fn call, incl. any eager collects inside iterative trainers) vs
   * the count() action, plus Catalyst phase timings of the counted plan.
@@ -13,15 +11,7 @@ object LpProbe {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.promql.Engine.tunedConf.foldLeft(new org.apache.spark.SparkConf()){case (c,(k,v))=>c.set(k,v)})
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val fn = graft.SparkEntry.queries(name)
     (0 until reps).foreach { i =>
       val t0 = System.nanoTime()

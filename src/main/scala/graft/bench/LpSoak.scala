@@ -1,6 +1,6 @@
 package graft.bench
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 
 /** Scaled pipeline soak: replicate the sf0.1 documents/embeddings corpus
   * REPL× (deterministic doc_id/vec_id offsets — every text becomes an
@@ -21,20 +21,11 @@ object LpSoak {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("/tmp/graft_soak")
     val repl = sys.env.getOrElse("SPARK_GRAFT_SOAK_REPL", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     def loadavg: String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(",")
       catch { case _: Exception => "" }
     val loadBefore = loadavg
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.promql.Engine.tunedConf.foldLeft(new org.apache.spark.SparkConf()) {
-        case (c, (k, v)) => c.set(k, v) })
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     // ---- build the replicated corpus (idempotent on the scratch dir) ----
     val outPath = java.nio.file.Paths.get(out)
@@ -45,7 +36,7 @@ object LpSoak {
         (0 until repl).map(i =>
             df.withColumn(idCol, F.col(idCol) + F.lit(i.toLong * IdOffset)))
           .reduce(_ unionByName _)
-          .repartition(cpus.toInt)
+          .repartition(graft.GraftSession.cpus)
           .write.mode("overwrite").parquet(s"$out/$table.parquet")
       }
       replicate("documents", "doc_id")

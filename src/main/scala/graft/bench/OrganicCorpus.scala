@@ -1,6 +1,6 @@
 package graft.bench
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Deterministic ORGANIC corpus generator for the sf1.0 pipeline soak.
@@ -86,14 +86,7 @@ object OrganicCorpus {
     val out = args.headOption.getOrElse("/tmp/graft_organic_sf1")
     val nDocs = args.drop(1).headOption.map(_.toLong).getOrElse(50000L)
     val nVecs = args.drop(2).headOption.map(_.toLong).getOrElse(20000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
@@ -101,7 +94,7 @@ object OrganicCorpus {
       StructField("lang", StringType, nullable = false),
       StructField("source", StringType, nullable = false),
       StructField("n_chars", LongType, nullable = false)))
-    val docRows = spark.range(0L, nDocs, 1L, cpus.toInt).rdd.map { d =>
+    val docRows = spark.range(0L, nDocs, 1L, graft.GraftSession.cpus).rdd.map { d =>
       val family = d / 20
       val rid = (d % 20).toInt
       val fr = new java.util.Random(family * 31 + 7)
@@ -132,7 +125,7 @@ object OrganicCorpus {
     // 16 latent centers; center coords derive from the center id, vectors
     // get gaussian noise around their center — ANN/k-means/semantic dedup
     // see real cluster structure at organic occupancy
-    val vecRows = spark.range(0L, nVecs, 1L, cpus.toInt).rdd.map { v =>
+    val vecRows = spark.range(0L, nVecs, 1L, graft.GraftSession.cpus).rdd.map { v =>
       val r = new java.util.Random(v * 2862933555777941757L + 3037000493L)
       val center = r.nextInt(16)
       val cr = new java.util.Random(center * 7919L + 1)

@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan of gate queries — the review loop for
   * "is this the plan you'd want at 100 TB" (exchange count, pushdown,
   * codegen spans, WindowGroupLimit rewrites).
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val names = if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

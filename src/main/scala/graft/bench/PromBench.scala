@@ -246,14 +246,7 @@ object PromBench {
 
   /** standalone full-bench main: one JSON line per case + total */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.promql.Engine.tunedConf.foldLeft(new org.apache.spark.SparkConf()){case (c,(k,v))=>c.set(k,v)})
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val data = dataset(spark, sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/tmp/graft_bench")).cache()
     data.count()
     val full = args.contains("full")

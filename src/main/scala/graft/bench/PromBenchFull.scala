@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round soak over the FULL reference benchmark expansion — every
   * rangeQueryCases() template at one/hundred scale and 1/100/1000/10000
   * steps (ref: promql/bench_test.go:159-334) — recorded as a side artifact
@@ -16,15 +14,7 @@ object PromBenchFull {
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(",")
       catch { case _: Exception => "" }
     val loadBefore = loadavg
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.promql.Engine.tunedConf.foldLeft(new org.apache.spark.SparkConf()){case (c,(k,v))=>c.set(k,v)})
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val data = PromBench.dataset(spark,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/tmp/graft_bench")).cache()
     data.count()

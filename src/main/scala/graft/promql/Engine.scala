@@ -153,15 +153,32 @@ object Engine {
     go(e)
   }
 
+  private def instantParams(tsMs: Long, lookbackMs: Long, defaultSubqueryStepMs: Long) =
+    EvalParams(tsMs, tsMs, 1000L, lookbackMs, defaultSubqueryStepMs, isInstant = true)
+
+  /** The one evaluation step behind every entry point: parse, plan over the
+    * normalized samples, shape the output. Lazy: it runs no Spark job. The
+    * planner is returned for its scan log (sample budget and stats). */
+  private def evaluate(spark: SparkSession, samples: DataFrame, q: String,
+      p: EvalParams): (PValue, Planner) = {
+    val e = if (p.isInstant) parse(q) else parse(q, p.stepMs, p.endMs - p.startMs)
+    if (!p.isInstant) e.valueType match {
+      case ValueType.InstantVector | ValueType.Scalar => ()
+      case t => throw PromQLError(s"range query expression must be scalar or instant vector, got $t")
+    }
+    val pl = new Planner(spark, normalize(samples), p)
+    (finalShape(pl.eval(resolveAtModifiers(e, p.startMs, p.endMs))), pl)
+  }
+
   def instantQuery(spark: SparkSession, samples: DataFrame, q: String, tsMs: Long,
       lookbackMs: Long = 300000L, defaultSubqueryStepMs: Long = 60000L): PValue =
-    instantQueryCounted(spark, samples, q, tsMs, lookbackMs, defaultSubqueryStepMs, 0L)._1
+    evaluate(spark, samples, q, instantParams(tsMs, lookbackMs, defaultSubqueryStepMs))._1
 
   def rangeQuery(spark: SparkSession, samples: DataFrame, q: String,
       startMs: Long, endMs: Long, stepMs: Long, lookbackMs: Long = 300000L,
       defaultSubqueryStepMs: Long = 60000L): PValue =
-    rangeQueryCounted(spark, samples, q, startMs, endMs, stepMs, lookbackMs,
-      defaultSubqueryStepMs, 0L)._1
+    evaluate(spark, samples, q,
+      EvalParams(startMs, endMs, stepMs, lookbackMs, defaultSubqueryStepMs))._1
 
   /** Sum of the planner's time-pruned selector scan counts — the engine's
     * sample accounting (ref: promql/engine.go MaxSamples; an upper bound on
@@ -272,21 +289,9 @@ object Engine {
   def instantQueryWithStats(spark: SparkSession, samples: DataFrame, q: String,
       tsMs: Long, lookbackMs: Long = 300000L, defaultSubqueryStepMs: Long = 60000L,
       maxSamples: Long = 0L, wantStats: Boolean = false,
-      wantPerStep: Boolean = false): (PValue, Option[SampleStats]) = {
-    val pl = new Planner(spark, normalize(samples),
-      EvalParams(tsMs, tsMs, 1000L, lookbackMs, defaultSubqueryStepMs, isInstant = true))
-    val v = pl.eval(resolveAtModifiers(parse(q), tsMs, tsMs))
-    // the budget count doubles as the self-metric's per-query samplesRead
-    // on EVERY query, stats or not — one counter, one semantic (ref
-    // #18081: the reference's counter moves on every query). Cost note:
-    // with a sample budget configured (the server default,
-    // --query.max-samples 5e7) the scan counts were ALWAYS computed here —
-    // the metric rides along free; only an explicitly unlimited engine
-    // (maxSamples=0) pays the extra count-aggregation jobs.
-    val n = budget(pl, maxSamples, wantCount = true)
-    samplesReadTotal.addAndGet(math.max(0L, n))
-    (finalShape(v), if (wantStats) Some(sampleStats(pl, wantPerStep)) else None)
-  }
+      wantPerStep: Boolean = false): (PValue, Option[SampleStats]) =
+    withStats(evaluate(spark, samples, q, instantParams(tsMs, lookbackMs, defaultSubqueryStepMs)),
+      maxSamples, wantStats, wantPerStep)
 
   /** [[rangeQuery]] with budget enforcement and stats — see
     * [[instantQueryWithStats]]. */
@@ -294,54 +299,25 @@ object Engine {
       startMs: Long, endMs: Long, stepMs: Long, lookbackMs: Long = 300000L,
       defaultSubqueryStepMs: Long = 60000L, maxSamples: Long = 0L,
       wantStats: Boolean = false, wantPerStep: Boolean = false)
-      : (PValue, Option[SampleStats]) = {
-    val e = parse(q, stepMs, endMs - startMs)
-    e.valueType match {
-      case ValueType.InstantVector | ValueType.Scalar => ()
-      case t => throw PromQLError(s"range query expression must be scalar or instant vector, got $t")
-    }
-    val pl = new Planner(spark, normalize(samples),
-      EvalParams(startMs, endMs, stepMs, lookbackMs, defaultSubqueryStepMs))
-    val v = pl.eval(resolveAtModifiers(e, startMs, endMs))
-    val n = budget(pl, maxSamples, wantCount = true)
-    samplesReadTotal.addAndGet(math.max(0L, n))
-    (finalShape(v), if (wantStats) Some(sampleStats(pl, wantPerStep)) else None)
-  }
+      : (PValue, Option[SampleStats]) =
+    withStats(evaluate(spark, samples, q,
+      EvalParams(startMs, endMs, stepMs, lookbackMs, defaultSubqueryStepMs)),
+      maxSamples, wantStats, wantPerStep)
 
-  private def budget(pl: Planner, maxSamples: Long, wantCount: Boolean): Long =
-    if (maxSamples <= 0 && !wantCount) -1L
-    else {
-      val n = countScans(pl)
-      if (maxSamples > 0 && n > maxSamples) throw TooManySamplesError("query execution")
-      n
-    }
-
-  /** [[instantQuery]] plus sample accounting: returns (value, sampleCount).
-    * sampleCount is −1 unless a budget is set (maxSamples > 0) or
-    * wantCount requests stats counting; throws [[TooManySamplesError]]
-    * when the budget is exceeded. */
-  def instantQueryCounted(spark: SparkSession, samples: DataFrame, q: String, tsMs: Long,
-      lookbackMs: Long = 300000L, defaultSubqueryStepMs: Long = 60000L,
-      maxSamples: Long = 0L, wantCount: Boolean = false): (PValue, Long) = {
-    val pl = new Planner(spark, normalize(samples),
-      EvalParams(tsMs, tsMs, 1000L, lookbackMs, defaultSubqueryStepMs, isInstant = true))
-    val v = pl.eval(resolveAtModifiers(parse(q), tsMs, tsMs))
-    (finalShape(v), budget(pl, maxSamples, wantCount))
-  }
-
-  /** [[rangeQuery]] plus sample accounting — see [[instantQueryCounted]]. */
-  def rangeQueryCounted(spark: SparkSession, samples: DataFrame, q: String,
-      startMs: Long, endMs: Long, stepMs: Long, lookbackMs: Long = 300000L,
-      defaultSubqueryStepMs: Long = 60000L, maxSamples: Long = 0L,
-      wantCount: Boolean = false): (PValue, Long) = {
-    val e = parse(q, stepMs, endMs - startMs)
-    e.valueType match {
-      case ValueType.InstantVector | ValueType.Scalar => ()
-      case t => throw PromQLError(s"range query expression must be scalar or instant vector, got $t")
-    }
-    val pl = new Planner(spark, normalize(samples),
-      EvalParams(startMs, endMs, stepMs, lookbackMs, defaultSubqueryStepMs))
-    val v = pl.eval(resolveAtModifiers(e, startMs, endMs))
-    (finalShape(v), budget(pl, maxSamples, wantCount))
+  /** The scan count is both the sample budget and the self-metric's
+    * per-query samplesRead, on EVERY query, stats or not — one counter, one
+    * semantic (ref #18081: the reference's counter moves on every query).
+    * Cost note: with a sample budget configured (the server default,
+    * --query.max-samples 5e7) the scan counts are computed anyway — the
+    * metric rides along free; only an explicitly unlimited engine
+    * (maxSamples=0) pays the extra count-aggregation jobs. Throws
+    * [[TooManySamplesError]] when the budget is exceeded. */
+  private def withStats(evaluated: (PValue, Planner), maxSamples: Long,
+      wantStats: Boolean, wantPerStep: Boolean): (PValue, Option[SampleStats]) = {
+    val (v, pl) = evaluated
+    val n = countScans(pl)
+    if (maxSamples > 0 && n > maxSamples) throw TooManySamplesError("query execution")
+    samplesReadTotal.addAndGet(n)
+    (v, if (wantStats) Some(sampleStats(pl, wantPerStep)) else None)
   }
 }

@@ -4,12 +4,43 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Evaluation parameters for one query (instant = start==end, one step). */
+/** Evaluation parameters for one query (instant = start==end, one step).
+  *
+  * The four ratios are the planner's regime thresholds: an amplification at
+  * or above one switches that operator from the coverage explode to its
+  * linear pass. A subquery's planner inherits them, so a regime forced on a
+  * query (the path-equivalence tests force 1.0 or 1e18) holds inside its
+  * subqueries too.
+  *  - `linearSelectRatio`: lookback amplification of an instant selector
+  *    above which it takes the linear as-of lookup.
+  *  - `linearPathRatio`: coverage amplification (min(window/step, numSteps))
+  *    above which `*_over_time` takes the series-at-once pass
+  *    (`Planner.seriesAtOnceFast`). Low crossover: that pass is one sorted
+  *    fold with a tiny output struct (measured on the bench replica:
+  *    sum_over_time(a_hundred[10m]) amp 60 is 20× cheaper CPU than the
+  *    explode, and the explode spills GBs at day-scale windows).
+  *  - `rateLinearRatio`: the separate crossover of the rate/changes family
+  *    (`Planner.linearRangeStats`): its per-series stats UDF pays a
+  *    row-boundary cost per (series, step) output, while the explode's
+  *    hash-agg cost grows linearly in amplification. Re-measured after the
+  *    AQE coalescing floor fix (which had been starving the linear path's
+  *    agg stage of parallelism and inflated the apparent crossover to
+  *    ~440): explode CPU ≈ linear CPU at amp ≈ 6 (rate(a_hundred[1m])) and
+  *    ≈ 11 (rate(h_hundred[2m]), 1100 series); at amp 30 the linear path is
+  *    2× cheaper CPU and wins wall (rate(h_hundred[5m]) 8.2→6.0 s inside
+  *    histogram_quantile). Below 16 the fused Generate→HashAggregate
+  *    explode stays faster AND bit-exact with the reference's fold order.
+  *  - `linearExtPathRatio`: explode amplification above which the
+  *    anchored/smoothed rate family takes its linear path. */
 final case class EvalParams(
     startMs: Long, endMs: Long, stepMs: Long,
     lookbackMs: Long = 300000L,           // ref: promql/engine.go:64 (5m default)
     defaultSubqueryStepMs: Long = 60000L,
-    isInstant: Boolean = false) {         // instant ⇒ step()/range() = 0 (engine.go:4472-4478)
+    isInstant: Boolean = false,           // instant ⇒ step()/range() = 0 (engine.go:4472-4478)
+    linearSelectRatio: Double = 8.0,
+    linearPathRatio: Double = 6.0,
+    rateLinearRatio: Double = 6.0,
+    linearExtPathRatio: Double = 32.0) {
   def numSteps: Long = (endMs - startMs) / stepMs + 1
 }
 
@@ -297,7 +328,7 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
         // along as nullable struct fields (minority column; decoded only
         // where present).
         val amp = math.min(P.lookbackMs.toDouble / P.stepMs, P.numSteps.toDouble)
-        if (amp >= linearSelectRatio && P.numSteps > 1 && noHist) {
+        if (amp >= P.linearSelectRatio && P.numSteps > 1 && noHist) {
           // float-only stores (the static capability flag): the whole pick
           // rides primitive arrays across the UDF boundary (RangeUdfs
           // .instantPickAllSteps) — no Row boxing, no FHist codec
@@ -315,7 +346,7 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
             .select(col("labels"), explode(pickC).as("o"))
             .select(col("labels"), col("o.t").as("t"), col("o.v").as("v"),
               col("o.st").as("st"), nullH.as("h"), col("o.stt").as("stt")))
-        } else if (amp >= linearSelectRatio && P.numSteps > 1) {
+        } else if (amp >= P.linearSelectRatio && P.numSteps > 1) {
           val agged = shifted.groupBy(col("__sg"))
             .agg(first(col("labels")).as("labels"),
               collect_list(struct(col("wt"), col("t").as("st"), col("v"),
@@ -338,10 +369,6 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
             .filter(!col("stale")).drop("stale"))
     }
   }
-
-  /** lookback amplification above which instant selection switches to the
-    * linear as-of lookup; overridable for path-equivalence tests */
-  private[promql] var linearSelectRatio: Double = 8.0
 
   // ---------- range inputs (matrix selectors & subqueries) ----------
 
@@ -400,7 +427,8 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
             .select(col("labels"), col("t"), col("v"), col("h"), lit(false).as("dn"),
                     lit(0L).as("stt"), lit(0L).as("__sg")),
           range, offset, at)
-      val innerParams = EvalParams(k1 * istep, k2 * istep, istep, P.lookbackMs, P.defaultSubqueryStepMs)
+      val innerParams = P.copy(startMs = k1 * istep, endMs = k2 * istep, stepMs = istep,
+        isInstant = false)
       val innerPlanner = new Planner(spark, samples, innerParams)
       // subquery outputs neutralize explicit counter-reset hints: a high-res
       // subquery re-emits the same histogram sample at several inner steps, so
@@ -559,28 +587,6 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
         col("o.nChanges").as("nChanges"))
   }
 
-  /** coverage-explode amplification (min(window/step, numSteps)) above which
-    * the explode path switches to the series-at-once `*_over_time` pass
-    * ([[seriesAtOnceFast]]). Low crossover: that pass is one sorted fold with
-    * a tiny output struct (measured on the bench replica:
-    * sum_over_time(a_hundred[10m]) amp 60 is 20× cheaper CPU than the
-    * explode, and the explode spills GBs at day-scale windows).
-    * Overridable for path-equivalence tests. */
-  private[promql] var linearPathRatio: Double = Planner.defaultLinearPathRatio
-
-  /** separate crossover for the rate/changes family ([[linearRangeStats]]):
-    * its per-series stats UDF pays a row-boundary cost per (series, step)
-    * output, while the explode's hash-agg cost grows linearly in
-    * amplification. Re-measured after the AQE coalescing floor fix (which
-    * had been starving the linear path's agg stage of parallelism and
-    * inflated the apparent crossover to ~440): explode CPU ≈ linear CPU at
-    * amp ≈ 6 (rate(a_hundred[1m])) and ≈ 11 (rate(h_hundred[2m]), 1100
-    * series); at amp 30 the linear path is 2× cheaper CPU and wins wall
-    * (rate(h_hundred[5m]) 8.2→6.0 s inside histogram_quantile). Below 16
-    * the fused Generate→HashAggregate explode stays faster AND bit-exact
-    * with the reference's fold order. */
-  private[promql] var rateLinearRatio: Double = Planner.defaultRateLinearRatio
-
   /** After aggregating a pinned (@) range: fan the per-series constant back out
     * to every grid step. */
   private def fanOut(df: DataFrame, fixed: Boolean): DataFrame =
@@ -623,7 +629,7 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
     // bit-identical in every regime — unlike the rate family's corr prefix
     // sums, whose gate keeps the min(·, numSteps) amplification form.
     if (ri.ext != 0 || ri.at.isDefined ||
-        ri.rangeMs.toDouble / P.stepMs < linearPathRatio)
+        ri.rangeMs.toDouble / P.stepMs < P.linearPathRatio)
       return None
     // (op, p1, p2); None = not eligible (e.g. non-constant parameters)
     val spec: Option[(String, Double, Double)] = name match {
@@ -788,14 +794,14 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
     // coverage explode (regime switch; see linearRangeStats). Amplification
     // is min(window/step, numSteps) — a sample covers at most numSteps steps.
     val useLinear = !fixed && ri.at.isEmpty &&
-      math.min(ri.rangeMs.toDouble / P.stepMs, P.numSteps.toDouble) >= rateLinearRatio
+      math.min(ri.rangeMs.toDouble / P.stepMs, P.numSteps.toDouble) >= P.rateLinearRatio
     // changes/resets consume only the INTEGER prefix counts (nChanges,
     // nResets, dn) of linearRangeStats — prefix differences of ints are
     // exact, so the wider window/step-only crossover is safe for them even
     // at few steps (where the rate family stays on the explode to keep its
     // float corr sums bit-identical to the reference's per-window fold).
     val useLinearExact = !fixed && ri.at.isEmpty &&
-      ri.rangeMs.toDouble / P.stepMs >= rateLinearRatio
+      ri.rangeMs.toDouble / P.stepMs >= P.rateLinearRatio
 
     def extrapolated(isCounter: Boolean, isRate: Boolean, isDelta: Boolean): DataFrame = {
       // counter resets: value decrease OR a start-timestamp reset (PROM-60)
@@ -1066,10 +1072,6 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
     }
   }
 
-  /** explode amplification threshold for the extended-selector linear path
-    * (overridable for path-equivalence tests) */
-  private[promql] var linearExtPathRatio: Double = Planner.defaultLinearExtPathRatio
-
   /** Linear-regime anchored/smoothed rate/increase/delta over FLOAT samples:
     * boundary as-of rows + per-series prefix reset sums instead of the
     * (range+2·lookback)/step coverage explode. Column twin of
@@ -1238,7 +1240,7 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
     val extAmp = math.min(
       (ri.rangeMs + P.lookbackMs * (if (ri.ext == 2) 2 else 1)).toDouble / P.stepMs,
       P.numSteps.toDouble)
-    val useLinearExt = !fixed && extAmp >= linearExtPathRatio
+    val useLinearExt = !fixed && extAmp >= P.linearExtPathRatio
     val floatRes =
       if (useLinearExt)
         excl(linearExtRate(name, ri), hpts)
@@ -1471,12 +1473,6 @@ object Planner {
   final case class ScanRec(df: org.apache.spark.sql.DataFrame,
       windowMs: Long, lookbackMs: Long, offsetMs: Long,
       gridLo: Long, gridHi: Long, stepMs: Long)
-
-  /** process-wide defaults for the regime-switch thresholds (per-instance
-    * overridable); exposed for benchmark A/B runs within one JVM */
-  @volatile var defaultLinearPathRatio: Double = 6.0
-  @volatile var defaultRateLinearRatio: Double = 6.0
-  @volatile var defaultLinearExtPathRatio: Double = 32.0
 
   private val regexMeta = ".*+?()[]{}|^$\\".toSet
 

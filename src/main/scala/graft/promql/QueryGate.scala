@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   *    stage of the distributed plan stops, not just the driver-side wait
   *    (the analog of the reference's per-step ctx.Done() checks)
   *  - samples: the budget itself is enforced by
-  *    [[Engine.rangeQueryCounted]]/[[Engine.instantQueryCounted]] from the
-  *    planner's pruned selector scans; run those inside [[exec]] so the
+  *    [[Engine.rangeQueryWithStats]]/[[Engine.instantQueryWithStats]] from
+  *    the planner's pruned selector scans; run those inside [[exec]] so the
   *    counting jobs are cancellable too.
   */
 final case class QueryLimits(

@@ -1,6 +1,7 @@
 package graft.promql
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{toCol, toExpr}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -23,13 +24,6 @@ import org.apache.spark.sql.types._
   * (after a collect_list), not once per sample, so interpreted dispatch is
   * noise while the fold body stays plain JIT-compiled Scala. */
 object StepFoldExprs {
-
-  /** Column wrapper for a raw Catalyst expression (classic session only). */
-  def toCol(e: Expression): Column =
-    org.apache.spark.sql.GraftSqlBridge.toColumn(e)
-
-  def toExpr(c: Column): Expression =
-    org.apache.spark.sql.GraftSqlBridge.toExpression(c)
 
   val rangeStatType: StructType = StructType(Seq(
     StructField("t", LongType, nullable = false),

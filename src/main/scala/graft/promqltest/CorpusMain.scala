@@ -1,7 +1,5 @@
 package graft.promqltest
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev loop: run reference .test corpus files against the engine.
   * Usage: runMain graft.promqltest.CorpusMain [file|all] [-v]
   */
@@ -16,14 +14,7 @@ object CorpusMain {
           .map(_.getPath).sorted.toList
       case fs => fs.map(f => if (f.contains("/")) f else s"$corpusDir/$f")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.promql.Engine.tunedConf.foldLeft(new org.apache.spark.SparkConf()){case (c,(k,v))=>c.set(k,v)})
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     var tp = 0; var tf = 0; var ts = 0
     files.foreach { f =>

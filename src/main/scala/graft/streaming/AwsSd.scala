@@ -1,5 +1,7 @@
 package graft.streaming
 
+import SdJson.{children, elements, parseXml, text}
+
 /** Shared plumbing for the AWS service-discovery family (EC2 / Lightsail /
   * ECS / RDS / MSK / ElastiCache): endpoints, credentials and the signed
   * POST over [[SdHttp]].
@@ -174,50 +176,13 @@ object AwsSd {
   // (older shapes, e.g. <DBClusters><DBCluster>) or as <member> (newer
   // shapes); both are accepted.
 
-  def parseXml(xml: String): org.w3c.dom.Document = {
-    val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-    f.setExpandEntityReferences(false)
-    f.newDocumentBuilder().parse(
-      new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
-  }
-
-  def children(n: org.w3c.dom.Node, name: String): Seq[org.w3c.dom.Element] = {
-    val out = Seq.newBuilder[org.w3c.dom.Element]
-    val kids = n.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      kids.item(i) match {
-        case e: org.w3c.dom.Element if e.getTagName == name => out += e
-        case _ => ()
-      }
-      i += 1
-    }
-    out.result()
-  }
-
   def child(n: org.w3c.dom.Node, name: String): Option[org.w3c.dom.Element] =
     children(n, name).headOption
-
-  def text(n: org.w3c.dom.Node, name: String): String =
-    children(n, name).headOption.map(_.getTextContent.trim).getOrElse("")
 
   /** members of wrapper `set`: named `item` children, or `member`, or any
     * element child (covers <DBClusters><DBCluster> and <.. ><member>) */
   def items(n: org.w3c.dom.Node, set: String): Seq[org.w3c.dom.Element] =
-    children(n, set).headOption.map { w =>
-      val all = Seq.newBuilder[org.w3c.dom.Element]
-      val kids = w.getChildNodes
-      var i = 0
-      while (i < kids.getLength) {
-        kids.item(i) match {
-          case e: org.w3c.dom.Element => all += e
-          case _ => ()
-        }
-        i += 1
-      }
-      all.result()
-    }.getOrElse(Nil)
+    children(n, set).headOption.map(elements).getOrElse(Nil)
 
   /** ISO timestamp → the reference's RFC3339 rendering (seconds precision,
     * Z offset — ref rds.go/elasticache.go `Format(time.RFC3339)`) */
@@ -230,9 +195,4 @@ object AwsSd {
       java.time.format.DateTimeFormatter.ISO_INSTANT.format(
         inst.truncatedTo(java.time.temporal.ChronoUnit.SECONDS))
     } catch { case _: Exception => v }
-
-  /** host:port with IPv6 bracketing (the reference's net.JoinHostPort) */
-  def hostPort(host: String, port: Int): String =
-    if (host.contains(":") && !host.startsWith("[")) s"[$host]:$port"
-    else s"$host:$port"
 }

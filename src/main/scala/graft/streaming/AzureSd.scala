@@ -53,10 +53,6 @@ object AzureSd {
     if (i >= 0 && i + 1 < parts.length) parts(i + 1) else ""
   }
 
-  private def hostPort(host: String, port: Int): String =
-    if (host.contains(":") && !host.startsWith("[")) s"[$host]:$port"
-    else s"$host:$port"
-
   final class AzureProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
     def this(name: String, cfg: Config) = this(name, cfg, new HttpApiClient(cfg))

@@ -62,10 +62,6 @@ object ConsulSd {
     else "passing"
   }
 
-  private def hostPort(host: String, port: String): String =
-    if (host.contains(":") && !host.startsWith("[")) s"[$host]:$port"
-    else s"$host:$port"
-
   /** one health/service entry → (address, per-target labels)
     * (ref: consul.go:535-590 watch) */
   private def buildTarget(entry: J, cfg: Config, dc: String): (String, Map[String, String]) = {

@@ -129,28 +129,27 @@ object Discovery {
     final case class Config(names: Seq[String], recordType: String = "SRV",
         port: Int = 0, refreshMs: Long = 30000L)
 
-    private def hostPort(host: String, port: Int): String = {
-      val h = host.stripSuffix(".")
-      if (h.contains(":") && !h.startsWith("[")) s"[$h]:$port" else s"$h:$port"
-    }
+    /** a record's host:port, its trailing root dot dropped */
+    private def address(host: String, port: Int): String =
+      SdJson.hostPort(host.stripSuffix("."), port)
 
     /** one name → one target group with per-record targets and the
       * reference's meta labels (ref: dns.go:255 refreshOne) */
     def resolveName(name: String, cfg: Config, resolver: Resolver): TargetGroup = {
       val targets = resolver.lookup(name, cfg.recordType).map {
         case SRV(target, port) =>
-          (hostPort(target, port), Map(
+          (address(target, port), Map(
             "__meta_dns_name" -> name,
             "__meta_dns_srv_record_target" -> target,
             "__meta_dns_srv_record_port" -> port.toString))
-        case A(ip) => (hostPort(ip, cfg.port), Map("__meta_dns_name" -> name))
-        case AAAA(ip) => (hostPort(ip, cfg.port), Map("__meta_dns_name" -> name))
+        case A(ip) => (address(ip, cfg.port), Map("__meta_dns_name" -> name))
+        case AAAA(ip) => (address(ip, cfg.port), Map("__meta_dns_name" -> name))
         case MX(target) =>
-          (hostPort(target, cfg.port), Map(
+          (address(target, cfg.port), Map(
             "__meta_dns_name" -> name,
             "__meta_dns_mx_record_target" -> target))
         case NS(target) =>
-          (hostPort(target, cfg.port), Map(
+          (address(target, cfg.port), Map(
             "__meta_dns_name" -> name,
             "__meta_dns_ns_record_target" -> target))
       }

@@ -28,10 +28,6 @@ object DockerSd {
     override def get(path: String): String = SdHttp.get("docker", base + path)
   }
 
-  private def hostPort(host: String, port: String): String =
-    if (host.contains(":") && !host.startsWith("[")) s"[$host]:$port"
-    else s"$host:$port"
-
   final class DockerProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
     def this(name: String, cfg: Config) = this(name, cfg, new HttpApiClient(cfg))

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import SdJson.{children, hostPort, parseXml, text}
+
 /** EC2 service discovery (ref: discovery/aws/ec2.go).
   *
   * Same poll-based shape as [[KubernetesSd]]: each manager refresh runs one
@@ -145,37 +147,10 @@ object Ec2Sd {
 
   // ------------------------------------------------------------------- XML
 
-  private def parseXml(xml: String): org.w3c.dom.Document = {
-    val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-    f.setExpandEntityReferences(false)
-    f.newDocumentBuilder().parse(
-      new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
-  }
-
-  private def children(n: org.w3c.dom.Node, name: String): Seq[org.w3c.dom.Element] = {
-    val out = Seq.newBuilder[org.w3c.dom.Element]
-    val kids = n.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      kids.item(i) match {
-        case e: org.w3c.dom.Element if e.getTagName == name => out += e
-        case _ => ()
-      }
-      i += 1
-    }
-    out.result()
-  }
-  private def text(n: org.w3c.dom.Node, name: String): String =
-    children(n, name).headOption.map(_.getTextContent.trim).getOrElse("")
   private def items(n: org.w3c.dom.Node, set: String): Seq[org.w3c.dom.Element] =
     children(n, set).headOption.map(children(_, "item")).getOrElse(Nil)
 
   // --------------------------------------------------------------- builder
-
-  private def hostPort(host: String, port: Int): String =
-    if (host.contains(":") && !host.startsWith("[")) s"[$host]:$port"
-    else s"$host:$port"
 
   /** ENI sweep → (default ipv6, primary-per-device-index list, all list)
     * (ref: ec2.go getInstanceIPv6Addresses:460-494). Primary addresses sit

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import SdJson.{children, elements, parseXml}
+
 /** Eureka service discovery (ref: discovery/eureka/eureka.go + client.go).
   *
   * One `GET {server}/apps` per refresh — the Eureka REST registry returns an
@@ -21,58 +23,30 @@ object EurekaSd {
       SdHttp.get("eureka", cfg.server.stripSuffix("/") + "/apps", accept = "application/xml")
   }
 
-  private def parseXml(xml: String): org.w3c.dom.Document = {
-    val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-    f.newDocumentBuilder().parse(
-      new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
-  }
-
-  private def children(n: org.w3c.dom.Node, name: String): Seq[org.w3c.dom.Element] = {
-    val out = Seq.newBuilder[org.w3c.dom.Element]
-    val kids = n.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      kids.item(i) match {
-        case e: org.w3c.dom.Element if e.getTagName == name => out += e
-        case _ => ()
-      }
-      i += 1
-    }
-    out.result()
-  }
-  private def childElems(n: org.w3c.dom.Node): Seq[org.w3c.dom.Element] = {
-    val out = Seq.newBuilder[org.w3c.dom.Element]
-    val kids = n.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      kids.item(i) match { case e: org.w3c.dom.Element => out += e; case _ => () }
-      i += 1
-    }
-    out.result()
-  }
-  private def text(n: org.w3c.dom.Node, name: String): String =
+  /** the untrimmed text of the first child `name` (Go's xml decoding keeps
+    * surrounding whitespace) */
+  private def rawText(n: org.w3c.dom.Node, name: String): String =
     children(n, name).headOption.map(_.getTextContent).getOrElse("")
 
   /** ref eureka.go:172-233 targetsForApp */
   private def buildInstance(appName: String, inst: org.w3c.dom.Element):
       (String, Map[String, String]) = {
-    val host = text(inst, "hostName")
+    val host = rawText(inst, "hostName")
     val portE = children(inst, "port").headOption
     val port = portE.map(_.getTextContent.trim).filter(_.nonEmpty).getOrElse("80")
-    val instanceId = text(inst, "instanceId")
+    val instanceId = rawText(inst, "instanceId")
     var l = Map(
       "instance" -> instanceId,
       "__meta_eureka_app_name" -> appName,
       "__meta_eureka_app_instance_hostname" -> host,
-      "__meta_eureka_app_instance_homepage_url" -> text(inst, "homePageUrl"),
-      "__meta_eureka_app_instance_statuspage_url" -> text(inst, "statusPageUrl"),
-      "__meta_eureka_app_instance_healthcheck_url" -> text(inst, "healthCheckUrl"),
-      "__meta_eureka_app_instance_ip_addr" -> text(inst, "ipAddr"),
-      "__meta_eureka_app_instance_vip_address" -> text(inst, "vipAddress"),
-      "__meta_eureka_app_instance_secure_vip_address" -> text(inst, "secureVipAddress"),
-      "__meta_eureka_app_instance_status" -> text(inst, "status"),
-      "__meta_eureka_app_instance_country_id" -> text(inst, "countryId"),
+      "__meta_eureka_app_instance_homepage_url" -> rawText(inst, "homePageUrl"),
+      "__meta_eureka_app_instance_statuspage_url" -> rawText(inst, "statusPageUrl"),
+      "__meta_eureka_app_instance_healthcheck_url" -> rawText(inst, "healthCheckUrl"),
+      "__meta_eureka_app_instance_ip_addr" -> rawText(inst, "ipAddr"),
+      "__meta_eureka_app_instance_vip_address" -> rawText(inst, "vipAddress"),
+      "__meta_eureka_app_instance_secure_vip_address" -> rawText(inst, "secureVipAddress"),
+      "__meta_eureka_app_instance_status" -> rawText(inst, "status"),
+      "__meta_eureka_app_instance_country_id" -> rawText(inst, "countryId"),
       "__meta_eureka_app_instance_id" -> instanceId)
     portE.foreach { p =>
       l += "__meta_eureka_app_instance_port" -> p.getTextContent.trim
@@ -83,14 +57,14 @@ object EurekaSd {
       l += "__meta_eureka_app_instance_secure_port_enabled" -> p.getAttribute("enabled")
     }
     children(inst, "dataCenterInfo").headOption.foreach { dci =>
-      l += "__meta_eureka_app_instance_datacenterinfo_name" -> text(dci, "name")
+      l += "__meta_eureka_app_instance_datacenterinfo_name" -> rawText(dci, "name")
       children(dci, "metadata").headOption.foreach(md =>
-        childElems(md).foreach(e =>
+        elements(md).foreach(e =>
           l += "__meta_eureka_app_instance_datacenterinfo_metadata_" +
             KubernetesSd.sanitize(e.getTagName) -> e.getTextContent))
     }
     children(inst, "metadata").headOption.foreach(md =>
-      childElems(md).foreach(e =>
+      elements(md).foreach(e =>
         l += "__meta_eureka_app_instance_metadata_" +
           KubernetesSd.sanitize(e.getTagName) -> e.getTextContent))
     (s"$host:$port", l)
@@ -103,7 +77,7 @@ object EurekaSd {
     override def refresh(): Seq[Discovery.TargetGroup] = {
       val doc = parseXml(client.apps())
       val targets = children(doc.getDocumentElement, "application").flatMap { app =>
-        val appName = text(app, "name")
+        val appName = rawText(app, "name")
         children(app, "instance").map(buildInstance(appName, _))
       }
       Seq(Discovery.TargetGroup("eureka", Map.empty, targets))

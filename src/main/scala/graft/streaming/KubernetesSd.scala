@@ -125,10 +125,6 @@ object KubernetesSd {
   private[streaming] def sanitize(name: String): String =
     name.map(c => if (c.isLetterOrDigit && c < 128 || c == '_') c else '_')
 
-  private def hostPort(host: String, port: String): String =
-    if (host.contains(":") && !host.startsWith("[")) s"[$host]:$port"
-    else s"$host:$port"
-
   /** ref: kubernetes.go addObjectMetaLabels — name + labels/annotations with
     * presence markers */
   private def objectMetaLabels(meta: J, role: String): Map[String, String] = {

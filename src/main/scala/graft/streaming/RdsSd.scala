@@ -1,6 +1,7 @@
 package graft.streaming
 
 import AwsSd._
+import SdJson.{hostPort, parseXml, text}
 
 /** RDS service discovery (ref: discovery/aws/rds.go).
   *

@@ -213,9 +213,6 @@ object ScalewaySd {
     }
   }
 
-  private def hostPort(host: String, port: Int): String =
-    if (host.contains(":")) s"[$host]:$port" else s"$host:$port"
-
   final class ScalewayProvider(override val name: String, cfg: Config,
       client: ApiClient) extends Discovery.Provider {
     def this(name: String, cfg: Config) = this(name, cfg, new HttpApiClient(cfg))

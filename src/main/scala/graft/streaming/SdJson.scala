@@ -1,8 +1,9 @@
 package graft.streaming
 
-/** The JSON accessors of the service-discovery providers, over the
-  * `Map`/`List`/`String`/`Double`/`Boolean`/null trees of
-  * [[graft.web.JsonLite]]. A missing or mistyped value reads as empty, the
+/** The response accessors of the service-discovery providers: JSON over
+  * the `Map`/`List`/`String`/`Double`/`Boolean`/null trees of
+  * [[graft.web.JsonLite]], XML over a DOM, and the `host:port` rendering of
+  * a target address. A missing or mistyped JSON value reads as empty, the
   * way Go's zero values do in the reference's decoded structs. */
 object SdJson {
   type J = Map[String, Any]
@@ -39,4 +40,37 @@ object SdJson {
     case n: java.lang.Number => n.longValue
     case _ => 0L
   }
+
+  // ------------------------------------------------------------------ XML
+
+  /** an XML body parsed with DOCTYPEs refused and entities unexpanded */
+  def parseXml(xml: String): org.w3c.dom.Document = {
+    val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
+    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
+    f.setExpandEntityReferences(false)
+    f.newDocumentBuilder().parse(
+      new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
+  }
+
+  /** the element children of `n` */
+  def elements(n: org.w3c.dom.Node): Seq[org.w3c.dom.Element] = {
+    val kids = n.getChildNodes
+    (0 until kids.getLength).map(kids.item).collect { case e: org.w3c.dom.Element => e }
+  }
+
+  def children(n: org.w3c.dom.Node, name: String): Seq[org.w3c.dom.Element] =
+    elements(n).filter(_.getTagName == name)
+
+  /** the trimmed text of the first child `name`; "" when there is none */
+  def text(n: org.w3c.dom.Node, name: String): String =
+    children(n, name).headOption.map(_.getTextContent.trim).getOrElse("")
+
+  // -------------------------------------------------------------- address
+
+  /** host:port with IPv6 bracketing (the reference's net.JoinHostPort) */
+  def hostPort(host: String, port: String): String =
+    if (host.contains(":") && !host.startsWith("[")) s"[$host]:$port"
+    else s"$host:$port"
+
+  def hostPort(host: String, port: Int): String = hostPort(host, port.toString)
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** The `prometheus` binary analog (ref: cmd/prometheus/main.go flag surface
   * + run loop): boots a local Spark session, assembles [[PromServer]] from
   * --config.file, serves the HTTP API (TLS/auth via --web.config.file),
@@ -43,17 +41,8 @@ object ServerMain {
       maxSamples = flag("query.max-samples", "50000000").toLong,
       timeoutMs = graft.promqltest.TestScript.parseTime(flag("query.timeout", "2m")))
 
-    val spark = SparkSession.builder()
-      .master(flag("spark.master", s"local[${Runtime.getRuntime.availableProcessors}]"))
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.promql.Engine.tunedConf.foldLeft(
-        new org.apache.spark.SparkConf()) { case (c, (k, v)) => c.set(k, v) })
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(flag("log.level", "WARN").toUpperCase)
+    val spark = graft.GraftSession(flag("spark.master", graft.GraftSession.localMaster),
+      flag("log.level", graft.GraftSession.logLevel).toUpperCase)
 
     val features = flag("enable-feature").split(",").map(_.trim).toSet
     val server = new PromServer(spark, configFile, port,

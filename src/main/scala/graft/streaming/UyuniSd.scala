@@ -61,19 +61,8 @@ object UyuniSd {
     sb.toString
   }
 
-  private def childElems(n: org.w3c.dom.Node): Seq[org.w3c.dom.Element] = {
-    val out = Seq.newBuilder[org.w3c.dom.Element]
-    val kids = n.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      kids.item(i) match { case e: org.w3c.dom.Element => out += e; case _ => () }
-      i += 1
-    }
-    out.result()
-  }
-
   private def decodeValue(v: org.w3c.dom.Element): Any = {
-    val typed = childElems(v)
+    val typed = elements(v)
     if (typed.isEmpty) return v.getTextContent // bare <value>text</value> = string
     val t = typed.head
     t.getTagName match {
@@ -82,13 +71,12 @@ object UyuniSd {
       case "boolean" => t.getTextContent.trim == "1"
       case "double" => t.getTextContent.trim.toDouble
       case "array" =>
-        childElems(t).find(_.getTagName == "data").toList
-          .flatMap(childElems(_)).filter(_.getTagName == "value").map(decodeValue)
+        children(t, "data").take(1).flatMap(children(_, "value")).map(decodeValue).toList
       case "struct" =>
-        childElems(t).filter(_.getTagName == "member").map { mem =>
-          val name = childElems(mem).find(_.getTagName == "name")
+        children(t, "member").map { mem =>
+          val name = elements(mem).find(_.getTagName == "name")
             .map(_.getTextContent).getOrElse("")
-          val value = childElems(mem).find(_.getTagName == "value")
+          val value = elements(mem).find(_.getTagName == "value")
             .map(decodeValue).orNull
           name -> value
         }.toMap
@@ -97,19 +85,15 @@ object UyuniSd {
   }
 
   private[streaming] def decodeResponse(xml: String): Any = {
-    val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-    val doc = f.newDocumentBuilder().parse(
-      new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
-    val root = doc.getDocumentElement // methodResponse
-    childElems(root).headOption match {
+    val root = parseXml(xml).getDocumentElement // methodResponse
+    elements(root).headOption match {
       case Some(fault) if fault.getTagName == "fault" =>
-        val detail = childElems(fault).find(_.getTagName == "value")
+        val detail = elements(fault).find(_.getTagName == "value")
           .map(decodeValue).getOrElse(Map.empty)
         throw new IllegalStateException(s"uyuni sd: xml-rpc fault $detail")
       case Some(params) if params.getTagName == "params" =>
-        childElems(params).find(_.getTagName == "param").toList
-          .flatMap(childElems(_)).find(_.getTagName == "value")
+        elements(params).find(_.getTagName == "param").toList
+          .flatMap(elements(_)).find(_.getTagName == "value")
           .map(decodeValue).orNull
       case _ => null
     }

@@ -122,12 +122,7 @@ object TsdbAnalyze {
       System.err.println("usage: TsdbAnalyze <samples.parquet> [limit]")
       sys.exit(2)
     }
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_MASTER", graft.GraftSession.localMaster))
     val limit = if (args.length > 1) args(1).toInt else 20
     print(render(analyze(spark.read.parquet(args(0)), limit),
       blockId = args(0)))

@@ -1,7 +1,7 @@
 package graft.web
 
 import graft.promql.Engine
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 
 /** Dev harness for the built-in UI: boots an [[HttpApi]] on a fixed port
   * with a few synthetic series so /graph, /targets, /rules and /status can
@@ -10,12 +10,7 @@ import org.apache.spark.sql.{Row, SparkSession}
 object UiDemo {
   def main(args: Array[String]): Unit = {
     val port = if (args.nonEmpty) args(0).toInt else 9090
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val now = System.currentTimeMillis()
     val rows = for {
       (m, amp) <- Seq(("http_requests_total", 100.0), ("node_load1", 2.0),

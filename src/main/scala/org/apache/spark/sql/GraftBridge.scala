@@ -6,10 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{AbstractDataType, DoubleType, StructType}
 
-/** Bridge into Spark's private[sql] Column↔Expression converters (Spark 4
-  * moved them behind `classic.ExpressionUtils`). Lets the engine build
-  * codegen'd `StaticInvoke` columns for exact Go-math semantics without the
-  * UDF serialization penalty. */
+/** The one bridge into Spark's private[sql] API. The Column↔Expression
+  * converters (Spark 4 moved them behind `classic.ExpressionUtils`) let the
+  * engine use its own Catalyst expressions (`StepFoldExprs`) as Columns and
+  * build codegen'd `StaticInvoke` columns for exact Go-math semantics without
+  * the UDF serialization penalty. Lives in the org.apache.spark.sql package
+  * solely for access; no Spark internals are modified. */
 object GraftBridge {
   def toExpr(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def toCol(e: Expression): Column = classic.ExpressionUtils.column(e)

@@ -166,9 +166,9 @@ class LinearPathSpec extends AnyFunSuite {
       def results(q: String, forceLinear: Boolean): Map[(Map[String, String], Long), Double] = {
         val pl = new Planner(spark, df.withColumn("h",
             org.apache.spark.sql.functions.lit(null).cast(FHist.schemaType)),
-          EvalParams(3600000L, 4790000L, 10000L))
-        pl.linearPathRatio = if (forceLinear) 1.0 else 1e18
-        pl.rateLinearRatio = if (forceLinear) 1.0 else 1e18
+          EvalParams(3600000L, 4790000L, 10000L,
+            linearPathRatio = if (forceLinear) 1.0 else 1e18,
+            rateLinearRatio = if (forceLinear) 1.0 else 1e18))
         pl.eval(Engine.parse(q, 10000L)) match {
           case VectorVal(r) =>
             r.select("labels", "t", "v").collect()
@@ -186,7 +186,9 @@ class LinearPathSpec extends AnyFunSuite {
                     "min_over_time(m[30m])", "max_over_time(m[30m])",
                     "stddev_over_time(m[30m])", "stdvar_over_time(m[30m])",
                     "quantile_over_time(0.9, m[30m])",
-                    "deriv(m[30m])", "predict_linear(m[30m], 600)")) {
+                    "deriv(m[30m])", "predict_linear(m[30m], 600)",
+                    // subquery: the inner planner inherits the forced regime
+                    "max_over_time(rate(m[10m])[30m:10s])")) {
         val a = results(q, forceLinear = false)
         val b = results(q, forceLinear = true)
         assert(a.keySet == b.keySet, s"$q: key sets differ (${a.size} vs ${b.size})")
@@ -194,6 +196,23 @@ class LinearPathSpec extends AnyFunSuite {
           assert(Runner_almost(v, b(k)), s"$q at $k: explode=$v linear=${b(k)}")
         }
       }
+      // the forced regime reaches the subquery's inner planner: its rate
+      // takes a series-at-once pass only when the query forces linear
+      def innerRateLinear(forceLinear: Boolean): Boolean = {
+        val pl = new Planner(spark, df.withColumn("h",
+            org.apache.spark.sql.functions.lit(null).cast(FHist.schemaType)),
+          EvalParams(3600000L, 4790000L, 10000L,
+            linearPathRatio = if (forceLinear) 1.0 else 1e18,
+            rateLinearRatio = if (forceLinear) 1.0 else 1e18))
+        pl.eval(Engine.parse("max_over_time(rate(m[10m])[30m:10s])", 10000L)) match {
+          case VectorVal(r) =>
+            "rate\\w*steps".r.findFirstIn(r.queryExecution.optimizedPlan.toString.toLowerCase).isDefined
+          case other => fail(s"unexpected $other")
+        }
+      }
+      assert(innerRateLinear(forceLinear = true), "forced linear did not reach the subquery")
+      assert(!innerRateLinear(forceLinear = false), "forced explode did not reach the subquery")
+
       // histogram series: the series-at-once hist fold vs the coverage
       // explode (hist-pure series `hh` with a counter reset; mixed-type
       // series `mx` keeps the restricted explode)
@@ -214,9 +233,9 @@ class LinearPathSpec extends AnyFunSuite {
       val hdf = spark.createDataFrame(
         spark.sparkContext.parallelize(histRows, 4), Engine.samplesSchema)
       def histResults(q: String, forceLinear: Boolean): Map[(Map[String, String], Long), String] = {
-        val pl = new Planner(spark, hdf, EvalParams(3600000L, 4790000L, 10000L))
-        pl.linearPathRatio = if (forceLinear) 1.0 else 1e18
-        pl.rateLinearRatio = if (forceLinear) 1.0 else 1e18
+        val pl = new Planner(spark, hdf, EvalParams(3600000L, 4790000L, 10000L,
+          linearPathRatio = if (forceLinear) 1.0 else 1e18,
+          rateLinearRatio = if (forceLinear) 1.0 else 1e18))
         pl.eval(Engine.parse(q, 10000L)) match {
           case VectorVal(r) =>
             r.select("labels", "t", "v", "h").collect()
@@ -245,8 +264,8 @@ class LinearPathSpec extends AnyFunSuite {
       def selResults(forceLinear: Boolean) = {
         val pl = new Planner(spark, df.withColumn("h",
             org.apache.spark.sql.functions.lit(null).cast(FHist.schemaType)),
-          EvalParams(3600000L, 4790000L, 10000L))
-        pl.linearSelectRatio = if (forceLinear) 1.0 else 1e18
+          EvalParams(3600000L, 4790000L, 10000L,
+            linearSelectRatio = if (forceLinear) 1.0 else 1e18))
         pl.eval(Engine.parse("m")) match {
           case VectorVal(r) =>
             r.select("labels", "t", "v", "st").collect()
@@ -273,8 +292,8 @@ class LinearPathSpec extends AnyFunSuite {
         spark.sparkContext.parallelize(staleRows, 4),
         org.apache.spark.sql.types.StructType(Engine.samplesSchema.fields.take(4))))
       def floatSel(forceLinear: Boolean) = {
-        val pl = new Planner(spark, floatDf, EvalParams(3600000L, 4790000L, 10000L))
-        pl.linearSelectRatio = if (forceLinear) 1.0 else 1e18
+        val pl = new Planner(spark, floatDf, EvalParams(3600000L, 4790000L, 10000L,
+          linearSelectRatio = if (forceLinear) 1.0 else 1e18))
         pl.eval(Engine.parse("m")) match {
           case VectorVal(r) =>
             r.select("labels", "t", "v", "st").collect()
@@ -335,8 +354,8 @@ class ExtLinearPathSpec extends AnyFunSuite {
       def results(q: String, forceLinear: Boolean): Map[(Map[String, String], Long), Double] = {
         val pl = new Planner(spark, df.withColumn("h",
             org.apache.spark.sql.functions.lit(null).cast(FHist.schemaType)),
-          EvalParams(3600000L, 4790000L, 10000L))
-        pl.linearExtPathRatio = if (forceLinear) 1.0 else 1e18
+          EvalParams(3600000L, 4790000L, 10000L,
+            linearExtPathRatio = if (forceLinear) 1.0 else 1e18))
         pl.eval(Engine.parse(q, 10000L)) match {
           case VectorVal(r) =>
             r.select("labels", "t", "v").collect()

@@ -3,11 +3,12 @@ package graft.streaming
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared service-discovery transport and JSON accessors ([[SdHttp]],
+/** The shared service-discovery transport and accessors ([[SdHttp]],
   * [[SdJson]]): value rendering, the label values that changed when the
   * providers that printed whole numbers as `80.0` moved onto [[SdJson.str]],
   * Azure's token fetch through [[graft.web.AzureAd]], and a guard that no
-  * provider grows its own HTTP client or accessor copies back. */
+  * provider grows its own HTTP client, JSON or XML accessor or `hostPort`
+  * copy back. */
 class SdSharedSpec extends AnyFunSuite {
   import SdJson._
 
@@ -35,6 +36,17 @@ class SdSharedSpec extends AnyFunSuite {
     assert(bool(o, "t") && !bool(o, "x") && !bool(o, "missing"))
     assert(long(o, "n") == 9L && long(o, "x") == 0L)
     assert(opt(o, "x").contains("str") && opt(o, "n").isEmpty && opt(o, "missing").isEmpty)
+  }
+
+  test("hostPort brackets a bare IPv6 host once; XML parses without DOCTYPEs") {
+    assert(hostPort("10.0.0.1", 80) == "10.0.0.1:80")
+    assert(hostPort("::1", "9100") == "[::1]:9100")
+    assert(hostPort("[::1]", 80) == "[::1]:80")
+    val doc = parseXml("<a><b> x </b><c/><b>y</b></a>").getDocumentElement
+    assert(elements(doc).map(_.getTagName) == Seq("b", "c", "b"))
+    assert(children(doc, "b").size == 2 && text(doc, "b") == "x" && text(doc, "z") == "")
+    intercept[org.xml.sax.SAXParseException](
+      parseXml("""<!DOCTYPE a [<!ENTITY e "x">]><a>&e;</a>"""))
   }
 
   // Of the eight providers that rendered with String.valueOf, only OCI's
@@ -134,10 +146,12 @@ class SdSharedSpec extends AnyFunSuite {
     assert(files.length > 30, s"SD sources not found under ${dir.getAbsolutePath}")
     val client = """HttpClient\s*\.\s*new(Builder|HttpClient)""".r
     val accessor = """def\s+j(map|list|str)\b""".r
+    val xmlOrAddress = """def\s+(hostPort|parseXml)\b|DocumentBuilderFactory""".r
     val offenders = files.toSeq.flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      (client.findFirstIn(src) ++ accessor.findFirstIn(src)).map(m => s"${f.getName}: $m")
+      (client.findFirstIn(src) ++ accessor.findFirstIn(src) ++ xmlOrAddress.findFirstIn(src))
+        .map(m => s"${f.getName}: $m")
     }
-    assert(offenders.isEmpty, "use SdHttp / SdJson instead")
+    assert(offenders.isEmpty, s"use SdHttp / SdJson instead: $offenders")
   }
 }
