@@ -56,27 +56,14 @@ object Config {
       ociSd: Seq[OciSd.Config] = Nil,
       kumaSd: Seq[KumaSd.Config] = Nil,
       zookeeperSd: Seq[ZookeeperSd.Config] = Nil, // serverset + nerve
-      // per-scrape HTTP client config (ref: config/config.go ScrapeConfig
-      // ScrapeTimeout + HTTPClientConfig): request timeout, rendered
-      // Authorization header value (basic_auth / authorization /
-      // bearer_token), URL query params (also exposed as __param_<name>
-      // labels to relabeling, ref scrape/target.go PopulateDiscoveredLabels)
+      // scrape_timeout: the per-scrape request timeout (ref: config.go
+      // ScrapeConfig.ScrapeTimeout)
       timeoutMs: Long = 10000L,
-      authHeader: Option[String] = None,
       // honor_timestamps default true (ref: config.go DefaultScrapeConfig)
       honorTimestamps: Boolean = true,
       // cap on relabel-dropped targets kept for /api/v1/targets
       // (0 = unlimited; ref: config.go KeepDroppedTargets)
       keepDroppedTargets: Long = 0L,
-      // HTTP proxy + client TLS (ref: common HTTPClientConfig proxy_url /
-      // no_proxy / proxy_from_environment / tls_config {ca_file,
-      // insecure_skip_verify} / enable_http2)
-      proxyUrl: String = "",
-      tlsCaFile: String = "",
-      tlsInsecureSkipVerify: Boolean = false,
-      noProxy: String = "",
-      proxyFromEnvironment: Boolean = false,
-      enableHttp2: Boolean = true,
       // negotiation order + unrecognized-Content-Type parser (ref:
       // config.go ScrapeProtocols / ScrapeFallbackProtocol)
       scrapeProtocols: Seq[String] = Nil,
@@ -96,17 +83,9 @@ object Config {
       // proto-first protocol negotiation). Pool default for the per-target
       // __scrape_native_histograms__ relabel override.
       scrapeNativeHistograms: Boolean = false,
-      // follow HTTP 3xx redirects on scrapes (ref: common HTTPClientConfig
-      // FollowRedirects, default true; cross-host hops drop credentials)
-      followRedirects: Boolean = true,
-      // oauth2 block of the common HTTP client config (ref:
-      // configuration.md:706 <oauth2>) — the server builds one refreshing
-      // TokenProvider per pool; mutually exclusive with authHeader (checker)
-      oauth2: Option[graft.web.OAuth2.Config] = None,
-      // http_headers of the common HTTP client config (ref:
-      // configuration.md:733 — values/secrets/files merged per name;
-      // file contents resolve at config load like the *_file auth fields)
-      httpHeaders: Map[String, Seq[String]] = Map.empty,
+      // the job's common HTTP client config (auth, oauth2, http_headers,
+      // TLS, proxy, follow_redirects, enable_http2)
+      client: HttpClientCfg = HttpClientCfg(),
       // scrape_failure_log_file (per-job override of the global; resolved
       // against the config dir — ref ScrapeConfig.ScrapeFailureLogFile)
       failureLogFile: Option[String] = None,
@@ -129,8 +108,8 @@ object Config {
       alertRelabel: Seq[Relabel.Rule],
       // sigv4 request signing for Amazon Managed Prometheus alertmanager
       // endpoints (ref config.go:1369 AlertmanagerConfig.SigV4Config,
-      // notifier/alertmanagerset.go:58); basic/bearer/oauth2 ride the
-      // embedded [[ScrapeJob]]'s HTTP client config
+      // notifier/alertmanagerset.go:58); the rest of the group's HTTP
+      // client config is the embedded [[ScrapeJob]]'s `client`
       sigv4: Option[SigV4Cfg] = None)
 
   final case class PromConfig(
@@ -172,13 +151,11 @@ object Config {
   }
 
   /** one remote_write entry (ref: config/config.go RemoteWriteConfig —
-    * the subset the forwarder acts on: url, rendered auth header, custom
-    * headers, protobuf_message selecting PRW 1.0 vs 2.0, display name) */
+    * the subset the forwarder acts on: url, HTTP client config,
+    * protobuf_message selecting PRW 1.0 vs 2.0, display name) */
   final case class RemoteWriteEntry(
       url: String,
       name: String = "",
-      authHeader: Option[String] = None,
-      headers: Map[String, String] = Map.empty,
       protoVersion: Int = 1,
       // write_relabel_configs: applied to every outgoing batch before the
       // send (ref: storage/remote/queue_manager.go processExternalLabels →
@@ -190,9 +167,6 @@ object Config {
       // sigv4 auth block (ref config.go:1502 SigV4Config; configuration.md
       // :3715 — Amazon Managed Prometheus sinks, service "aps")
       sigv4: Option[SigV4Cfg] = None,
-      // oauth2 client-credentials / jwt-bearer block (ref common
-      // HTTPClientConfig OAuth2; configuration.md:3034)
-      oauth2: Option[graft.web.OAuth2.Config] = None,
       // google_iam: service-account → Bearer for Google Cloud Monitoring
       // sinks (ref config.go:1504; storage/remote/googleiam)
       googleIam: Option[graft.web.GoogleIam.Config] = None,
@@ -209,14 +183,15 @@ object Config {
       // max_samples_per_send are 1.0 separate-RPC pacing knobs — parsed
       // and validated, inert here (documented divergence)
       metadataSend: Boolean = true,
-      // transport knobs — remote_write default pins HTTP/1.1
+      // HTTP client config — remote_write's default pins HTTP/1.1
       client: HttpClientCfg = HttpClientCfg(enableHttp2 = false))
 
-  /** common HTTP-client TRANSPORT knobs shared by remote_write/remote_read
-    * entries (ref common HTTPClientConfig). enable_http2 defaults differ:
-    * remote_write ships HTTP/1.1 (config.go:221
-    * DefaultRemoteWriteHTTPClientConfig), remote_read the common HTTP/2
-    * default (config.go:265). */
+  /** the common HTTP client config (ref: prometheus/common HTTPClientConfig)
+    * of scrape jobs, alertmanager groups and remote_write/remote_read
+    * entries; [[graft.web.OutboundHttp]] builds the client and decorates
+    * the requests. enable_http2 defaults differ: remote_write ships
+    * HTTP/1.1 (config.go:221 DefaultRemoteWriteHTTPClientConfig), the
+    * others the common HTTP/2 default (config.go:265). */
   final case class HttpClientCfg(
       followRedirects: Boolean = true,
       enableHttp2: Boolean = true,
@@ -224,8 +199,19 @@ object Config {
       tlsInsecureSkipVerify: Boolean = false,
       proxyUrl: String = "",
       noProxy: String = "",
-      proxyFromEnvironment: Boolean = false)
+      proxyFromEnvironment: Boolean = false,
+      // rendered Authorization value of basic_auth / authorization /
+      // bearer_token* (mutually exclusive with oauth2 — checker)
+      authHeader: Option[String] = None,
+      // oauth2 block (ref configuration.md:706 <oauth2>): each consumer
+      // runs one refreshing token provider
+      oauth2: Option[graft.web.OAuth2.Config] = None,
+      // http_headers (ref configuration.md:733): values, secrets and file
+      // contents per name, in that order
+      headers: Map[String, Seq[String]] = Map.empty)
 
+  /** the one HTTP client config parser; relative *_file paths resolve
+    * against `base` */
   private def clientCfgOf(m: YMap, base: java.nio.file.Path,
       http2Default: Boolean): HttpClientCfg = HttpClientCfg(
     followRedirects = !m.str("follow_redirects").contains("false"),
@@ -246,7 +232,20 @@ object Config {
     },
     proxyUrl = m.str("proxy_url").filter(_.nonEmpty).getOrElse(""),
     noProxy = m.str("no_proxy").filter(_.nonEmpty).getOrElse(""),
-    proxyFromEnvironment = m.str("proxy_from_environment").contains("true"))
+    proxyFromEnvironment = m.str("proxy_from_environment").contains("true"),
+    authHeader = authHeaderOf(m, base),
+    oauth2 = m.get("oauth2").collect { case o: YMap => oauth2Of(o, base) },
+    headers = httpHeadersOf(m, base))
+
+  /** a remote_write/remote_read entry's client config: the legacy
+    * `headers:` map goes ahead of the http_headers values of a name */
+  private def remoteClientCfgOf(m: YMap, base: java.nio.file.Path,
+      http2Default: Boolean): HttpClientCfg = {
+    val c = clientCfgOf(m, base, http2Default)
+    val legacy = kv(m.get("headers")).map { case (k, v) => k -> Seq(v) }
+    c.copy(headers = legacy ++ c.headers.map { case (k, vs) =>
+      k -> (legacy.getOrElse(k, Nil) ++ vs) })
+  }
 
   /** sigv4 block (ref: the prometheus/sigv4 library's SigV4Config as
     * documented at configuration.md:3715; access/secret keys, named
@@ -282,9 +281,6 @@ object Config {
   final case class RemoteReadEntry(
       url: String,
       name: String = "",
-      authHeader: Option[String] = None,
-      headers: Map[String, String] = Map.empty,
-      oauth2: Option[graft.web.OAuth2.Config] = None,
       // fanout routing policy (ref config.go:1679 RemoteReadConfig:
       // ReadRecent default false, FilterExternalLabels default true,
       // RequiredMatchers as equality pairs) — see FanoutStore.Secondary
@@ -293,7 +289,7 @@ object Config {
       filterExternalLabels: Boolean = true,
       // remote_timeout (ref DefaultRemoteReadConfig 1m)
       remoteTimeoutMs: Long = 60000L,
-      // transport knobs — remote_read keeps the common HTTP/2 default
+      // HTTP client config — remote_read keeps the common HTTP/2 default
       client: HttpClientCfg = HttpClientCfg())
 
   /** rendered Authorization header from basic_auth / authorization /
@@ -356,32 +352,30 @@ object Config {
     }
 
   /** oauth2 block → [[graft.web.OAuth2.Config]] (ref configuration.md:706
-    * <oauth2>; *_file paths resolve against the config dir) */
-  private def oauth2Of(m: YMap, base: java.nio.file.Path)
-      : Option[graft.web.OAuth2.Config] =
-    m.get("oauth2") match {
-      case Some(o: YMap) =>
-        def resolved(k: String): String = {
-          val f = str(o, k)
-          if (f.nonEmpty) base.resolve(f).toString else ""
-        }
-        Some(graft.web.OAuth2.Config(
-          clientId = str(o, "client_id"),
-          tokenUrl = str(o, "token_url"),
-          clientSecret = str(o, "client_secret"),
-          clientSecretFile = resolved("client_secret_file"),
-          scopes = strList(o.get("scopes")),
-          endpointParams = kv(o.get("endpoint_params")),
-          grantType = str(o, "grant_type"),
-          clientCertificateKey = str(o, "client_certificate_key"),
-          clientCertificateKeyFile = resolved("client_certificate_key_file"),
-          clientCertificateKeyId = str(o, "client_certificate_key_id"),
-          signatureAlgorithm = str(o, "signature_algorithm"),
-          iss = str(o, "iss"),
-          audience = str(o, "audience"),
-          claims = kv(o.get("claims"))))
-      case _ => None
+    * <oauth2>; *_file paths resolve against `base`, so a resolved path is
+    * non-empty exactly when the raw one is — the checker relies on that) */
+  private[streaming] def oauth2Of(o: YMap, base: java.nio.file.Path)
+      : graft.web.OAuth2.Config = {
+    def resolved(k: String): String = {
+      val f = str(o, k)
+      if (f.nonEmpty) base.resolve(f).toString else ""
     }
+    graft.web.OAuth2.Config(
+      clientId = str(o, "client_id"),
+      tokenUrl = str(o, "token_url"),
+      clientSecret = str(o, "client_secret"),
+      clientSecretFile = resolved("client_secret_file"),
+      scopes = strList(o.get("scopes")),
+      endpointParams = kv(o.get("endpoint_params")),
+      grantType = str(o, "grant_type"),
+      clientCertificateKey = str(o, "client_certificate_key"),
+      clientCertificateKeyFile = resolved("client_certificate_key_file"),
+      clientCertificateKeyId = str(o, "client_certificate_key_id"),
+      signatureAlgorithm = str(o, "signature_algorithm"),
+      iss = str(o, "iss"),
+      audience = str(o, "audience"),
+      claims = kv(o.get("claims")))
+  }
 
   /** http_headers block → per-name value lists (ref configuration.md:733:
     * `values` inline, `secrets` inline-but-redacted-in-UI, `files` read
@@ -552,9 +546,6 @@ object Config {
       // scrape_timeout: per-job, else global, else the reference default 10s
       val timeoutMs = m.str("scrape_timeout").orElse(global.str("scrape_timeout"))
         .map(durMs).getOrElse(10000L)
-      // rendered Authorization header (ref: common HTTPClientConfig —
-      // exactly one of basic_auth / authorization / bearer_token*)
-      val authHeader = authHeaderOf(m, jobBase)
       val statics = m.list("static_configs").collect { case sc: YMap =>
         val lbls = kv(sc.get("labels"))
         strList(sc.get("targets")).map(addr =>
@@ -936,24 +927,10 @@ object Config {
         linodeSd, vultrSd, scalewaySd, lightsailSd,
         dockerswarmSd, tritonSd, ovhcloudSd, ionosSd,
         stackitSd, outscaleSd, uyuniSd, ociSd, kumaSd, zookeeperSd,
-        timeoutMs, authHeader,
+        timeoutMs,
         honorTimestamps = !m.str("honor_timestamps").contains("false"),
         keepDroppedTargets = m.str("keep_dropped_targets")
           .orElse(global.str("keep_dropped_targets")).map(_.toLong).getOrElse(0L),
-        proxyUrl = str(m, "proxy_url"),
-        noProxy = str(m, "no_proxy"),
-        proxyFromEnvironment = m.str("proxy_from_environment").contains("true"),
-        enableHttp2 = !m.str("enable_http2").contains("false"),
-        tlsCaFile = m.get("tls_config") match {
-          case Some(tc: YMap) =>
-            val f = str(tc, "ca_file")
-            if (f.nonEmpty) jobBase.resolve(f).toString else ""
-          case _ => ""
-        },
-        tlsInsecureSkipVerify = m.get("tls_config") match {
-          case Some(tc: YMap) => tc.str("insecure_skip_verify").contains("true")
-          case _ => false
-        },
         scrapeProtocols = (strList(m.get("scrape_protocols")) match {
           case Nil => strList(global.get("scrape_protocols"))
           case l => l
@@ -966,8 +943,6 @@ object Config {
           case l => l
         },
         fallbackProtocol = str(m, "fallback_scrape_protocol"),
-        oauth2 = oauth2Of(m, jobBase),
-        httpHeaders = httpHeadersOf(m, jobBase),
         failureLogFile = m.str("scrape_failure_log_file")
           .orElse(global.str("scrape_failure_log_file"))
           .filter(_.nonEmpty).map(f => jobBase.resolve(f).toString),
@@ -982,7 +957,7 @@ object Config {
         scrapeNativeHistograms = m.str("scrape_native_histograms")
           .orElse(global.str("scrape_native_histograms"))
           .contains("true"),
-        followRedirects = !m.str("follow_redirects").contains("false"))
+        client = clientCfgOf(m, jobBase, http2Default = true))
     }
     // scrape_config_files: globbed side files each carrying their own
     // scrape_configs list (ref config.go:296 ScrapeConfigFiles +
@@ -1010,22 +985,19 @@ object Config {
       parseScrapeJob(m) } ++ fileJobs
     def urlsOf(key: String): Seq[String] =
       root.list(key).collect { case m: YMap => str(m, "url") }.filter(_.nonEmpty)
-    // full remote_write entries (ref: config.go RemoteWriteConfig): auth
-    // renders to one Authorization value, custom headers ride each request
-    // (reserved protocol headers win — validated by ConfigCheck), and
+    // full remote_write entries (ref: config.go RemoteWriteConfig): the
+    // HTTP client config (custom headers ride each request; reserved
+    // protocol headers win — validated by ConfigCheck), and
     // protobuf_message io.prometheus.write.v2.Request selects PRW 2.0
     val remoteWrites = root.list("remote_write").collect { case m: YMap =>
       RemoteWriteEntry(
         str(m, "url"),
         str(m, "name"),
-        authHeaderOf(m, base),
-        kv(m.get("headers")),
         if (str(m, "protobuf_message") == "io.prometheus.write.v2.Request") 2
         else 1,
         relabelChain(m.get("write_relabel_configs")),
         azureAdOf(m),
         sigv4Of(m),
-        oauth2Of(m, base),
         m.get("google_iam") match {
           case Some(g: YMap) =>
             Some(graft.web.GoogleIam.Config({
@@ -1042,16 +1014,15 @@ object Config {
           case Some(mc: YMap) => !mc.str("send").contains("false")
           case _ => true
         },
-        client = clientCfgOf(m, base, http2Default = false))
+        client = remoteClientCfgOf(m, base, http2Default = false))
     }.filter(_.url.nonEmpty)
     val remoteReads = root.list("remote_read").collect { case m: YMap =>
       RemoteReadEntry(str(m, "url"), str(m, "name"),
-        authHeaderOf(m, base), kv(m.get("headers")), oauth2Of(m, base),
         readRecent = m.str("read_recent").contains("true"),
         requiredMatchers = kv(m.get("required_matchers")),
         filterExternalLabels = !m.str("filter_external_labels").contains("false"),
         remoteTimeoutMs = m.str("remote_timeout").map(durMs).getOrElse(60000L),
-        client = clientCfgOf(m, base, http2Default = true))
+        client = remoteClientCfgOf(m, base, http2Default = true))
     }.filter(_.url.nonEmpty)
     // alerting: — per-group service discovery via the scrape-job machinery
     // plus alert relabeling (ref: config/config.go:1274 AlertingConfig

@@ -63,21 +63,6 @@ object ConfigCheck {
     "claims", "scopes", "token_url", "endpoint_params", "tls_config",
     "proxy_url", "no_proxy", "proxy_from_environment", "proxy_connect_header")
 
-  /** oauth2 YAML block → the validation-relevant [[graft.web.OAuth2.Config]]
-    * subset (file paths stay unresolved — only presence matters here) */
-  private def oauth2Shape(o: YMap): graft.web.OAuth2.Config = {
-    def s(k: String): String = o.str(k).filter(_.nonEmpty).getOrElse("")
-    graft.web.OAuth2.Config(
-      clientId = s("client_id"),
-      tokenUrl = s("token_url"),
-      clientSecret = s("client_secret"),
-      clientSecretFile = s("client_secret_file"),
-      grantType = s("grant_type"),
-      clientCertificateKey = s("client_certificate_key"),
-      clientCertificateKeyFile = s("client_certificate_key_file"),
-      signatureAlgorithm = s("signature_algorithm"))
-  }
-
   private def unknownKeys(m: YMap, known: Set[String],
       where: String, alsoOk: String => Boolean = _ => false): Seq[String] =
     m.keys.filterNot(k => known(k) || alsoOk(k))
@@ -325,7 +310,7 @@ object ConfigCheck {
           m.get("oauth2") match {
             case Some(o: YMap) =>
               errs ++= unknownKeys(o, oauth2Fields, s"$path $section oauth2")
-              graft.web.OAuth2.validate(oauth2Shape(o)).foreach(e =>
+              graft.web.OAuth2.validate(Config.oauth2Of(o, p)).foreach(e =>
                 errs += s"$path: $section: $e")
             case _ => ()
           }
@@ -759,7 +744,7 @@ object ConfigCheck {
         sc.get("oauth2") match {
           case Some(o: YMap) =>
             errs ++= unknownKeys(o, oauth2Fields, s"""$path job "$jobName" oauth2""")
-            graft.web.OAuth2.validate(oauth2Shape(o)).foreach(e =>
+            graft.web.OAuth2.validate(Config.oauth2Of(o, p)).foreach(e =>
               errs += s"""$path: job "$jobName": $e""")
             if (sc.get("basic_auth").isDefined || sc.get("authorization").isDefined ||
                 sc.str("bearer_token").exists(_.nonEmpty) ||
@@ -862,7 +847,7 @@ object ConfigCheck {
             m.get("oauth2") match {
               case Some(o: YMap) =>
                 errs ++= unknownKeys(o, oauth2Fields, s"$path alertmanager config oauth2")
-                graft.web.OAuth2.validate(oauth2Shape(o)).foreach(e =>
+                graft.web.OAuth2.validate(Config.oauth2Of(o, p)).foreach(e =>
                   errs += s"$path: alertmanager config: $e")
               case _ => ()
             }

@@ -29,23 +29,11 @@ final class ScrapeManager(
     // timestamped series also receive staleness markers when they
     // disappear; without it only implicit-ts series are tracked
     trackTimestampsStaleness: Boolean = false,
-    client: java.net.http.HttpClient = java.net.http.HttpClient.newHttpClient(),
     nowMs: () => Long = () => System.currentTimeMillis(),
     limits: ScrapeManager.ScrapeLimits = ScrapeManager.ScrapeLimits(),
-    // per-scrape HTTP client config (ref: ScrapeConfig.ScrapeTimeout +
-    // HTTPClientConfig): request timeout — a hung exporter reports up=0
-    // after timeoutMs instead of wedging the pool — and the rendered
-    // Authorization header value
+    // scrape_timeout (ref: ScrapeConfig.ScrapeTimeout): a hung exporter
+    // reports up=0 after timeoutMs instead of wedging the pool
     timeoutMs: Long = 10000L,
-    authHeader: Option[String] = None,
-    // refreshing Authorization source (oauth2 token provider): evaluated
-    // per request against its own expiry cache; wins over authHeader
-    // (the checker enforces mutual exclusion at config load)
-    authProvider: Option[() => String] = None,
-    // http_headers custom per-request headers (ref common HTTPClientConfig
-    // headers: multiple values per name allowed); protocol headers below
-    // use setHeader and so always win a same-name collision
-    httpHeaders: Map[String, Seq[String]] = Map.empty,
     // scrape_failure_log_file (ref ScrapeConfig.ScrapeFailureLogFile):
     // one JSON line per failed scrape, slog-shaped fields
     failureLogFile: Option[String] = None,
@@ -86,13 +74,16 @@ final class ScrapeManager(
     // reportExtraMetrics): scrape_timeout_seconds / scrape_sample_limit /
     // scrape_body_size_bytes report series
     extraScrapeMetrics: Boolean = false,
-    // follow_redirects (ref: common HTTPClientConfig FollowRedirects,
-    // default true). Redirects are followed manually (≤10 hops, no
+    // the pool's HTTP client config (ref: ScrapeConfig.HTTPClientConfig).
+    // follow_redirects is honoured by a manual loop (≤10 hops, no
     // https→http downgrade) because the reference's security semantics
     // need per-hop control: credentials are NOT forwarded when a redirect
     // leaves the original host (ref changelog #18949 / CVE-2025-4673 via
-    // prometheus/common v0.69.0)
-    followRedirects: Boolean = true) {
+    // prometheus/common v0.69.0) — so the client itself never follows
+    clientCfg: Config.HttpClientCfg = Config.HttpClientCfg()) {
+
+  private val http = new graft.web.OutboundHttp.Sender(
+    clientCfg.copy(followRedirects = false))
 
   // per-target post-relabel series cache from the LAST successful scrape:
   // sig -> (labels, had-explicit-timestamp) — feeds scrape_series_added
@@ -271,20 +262,14 @@ final class ScrapeManager(
     * cross-host redirect */
   private def scrapeRequest(url: String,
       withAuth: Boolean = true): java.net.http.HttpRequest.Builder = {
-    val b0 = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-      .timeout(java.time.Duration.ofMillis(timeoutMs))
-      .header("X-Prometheus-Scrape-Timeout-Seconds",
+    // http_headers and credentials are request decoration, re-applied per
+    // redirect hop by the caller; the protocol headers after them win
+    val b = http.decorate(java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+      .timeout(java.time.Duration.ofMillis(timeoutMs)), withAuth)
+      .setHeader("X-Prometheus-Scrape-Timeout-Seconds",
         graft.web.Json.goFloat(timeoutMs / 1000.0))
     // ref: scrape.go acceptEncodingHeader — gzip unless enable_compression=false
-    val b1 = if (enableCompression) b0.header("Accept-Encoding", "gzip") else b0
-    // http_headers: custom headers ride every request (multi-value via
-    // repeated header() calls); like credentials they are treated as
-    // request decoration and re-applied per redirect hop by the caller
-    val b = httpHeaders.foldLeft(b1) { case (bb, (k, vs)) =>
-      vs.foldLeft(bb)((b2, v) => b2.header(k, v)) }
-    if (withAuth) authProvider.map(_()).orElse(authHeader)
-      .fold(b)(v => b.header("Authorization", v))
-    else b
+    if (enableCompression) b.setHeader("Accept-Encoding", "gzip") else b
   }
 
   /** Send with manual redirect following (follow_redirects semantics): at
@@ -300,8 +285,8 @@ final class ScrapeManager(
     var url = url0
     var auth = true
     var hops = 0
-    var resp = client.send(mk(url, auth), handler)
-    while (followRedirects && hops < 10 &&
+    var resp = http.client.send(mk(url, auth), handler)
+    while (clientCfg.followRedirects && hops < 10 &&
         Set(301, 302, 303, 307, 308)(resp.statusCode()) &&
         resp.headers().firstValue("Location").isPresent) {
       val cur = java.net.URI.create(url)
@@ -310,7 +295,7 @@ final class ScrapeManager(
       if (next.getHost != origHost) auth = false
       url = next.toString
       hops += 1
-      resp = client.send(mk(url, auth), handler)
+      resp = http.client.send(mk(url, auth), handler)
     }
     resp
   }
@@ -390,7 +375,7 @@ final class ScrapeManager(
             val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
               .header("Accept", "application/json")
               .GET().build()
-            val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+            val resp = http.client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
             if (resp.statusCode() != 200)
               throw new IllegalStateException(s"http sd: status ${resp.statusCode()}")
             ScrapeManager.groupsToTargets(
@@ -471,7 +456,7 @@ final class ScrapeManager(
       try {
         val resp = sendFollow((u, a) =>
           scrapeRequest(u, a)
-            .header("Accept", "application/vnd.google.protobuf;" +
+            .setHeader("Accept", "application/vnd.google.protobuf;" +
               "proto=io.prometheus.client.MetricFamily;encodings=delimited").GET().build(),
           tgt.url, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
         if (resp.statusCode() != 200) (ProtoExposition.Parsed(Nil, Map.empty), 0L, false)
@@ -680,7 +665,7 @@ final class ScrapeManager(
            else ScrapeManager.defaultScrapeProtocols)
             .filterNot(_ == "PrometheusProto")
         val resp = sendFollow((u, a) => scrapeRequest(u, a)
-            .header("Accept", ScrapeManager.acceptHeader(textProtocols))
+            .setHeader("Accept", ScrapeManager.acceptHeader(textProtocols))
             .GET().build(),
           tgt.url, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
         lazy val bodyBytes = inflate(resp)
@@ -908,123 +893,6 @@ object ScrapeManager {
       val v = s"$h;q=0.$weight"; weight -= 1; v
     }
     (vals :+ s"*/*;q=0.$weight").mkString(",")
-  }
-
-  /** Build the per-pool HTTP client from the job's client config (ref:
-    * common HTTPClientConfig → NewClientFromConfig): `proxy_url` routes
-    * requests through an HTTP proxy; `tls_config.ca_file` trusts a custom
-    * PEM CA; `insecure_skip_verify` trusts any chain. Falls back to the
-    * shared default client when nothing is configured. */
-  /** no_proxy matcher (ref golang.org/x/net/http/httpproxy, the library
-    * behind the common ProxyConfig): comma-separated entries — "*" matches
-    * everything; an IP or CIDR matches literal request IPs; a domain
-    * matches itself AND subdomains; a leading-dot domain matches
-    * subdomains only. */
-  private[streaming] def noProxyMatches(noProxy: String, host0: String): Boolean = {
-    if (noProxy.trim.isEmpty || host0 == null || host0.isEmpty) return false
-    val host = host0.toLowerCase.stripPrefix("[").stripSuffix("]")
-    val isIp = host.forall(c => c.isDigit || c == '.') || host.contains(":")
-    noProxy.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).exists { e0 =>
-      if (e0 == "*") true
-      else {
-        // strip a :port from the entry (Go allows host:port entries)
-        val e = if (e0.count(_ == ':') == 1 && !e0.contains("/"))
-          e0.substring(0, e0.indexOf(':')) else e0
-        if (e.contains("/") && isIp && !host.contains(":")) {
-          // CIDR vs dotted-quad
-          try {
-            val Array(net, bits) = e.split("/")
-            def ip(x: String): Long =
-              x.split("\\.").foldLeft(0L)((a, p) => (a << 8) | p.toLong)
-            val mask = if (bits.toInt == 0) 0L else -1L << (32 - bits.toInt)
-            (ip(host) & mask) == (ip(net) & mask)
-          } catch { case _: Exception => false }
-        }
-        else if (e.startsWith(".")) host.endsWith(e)
-        else host == e || host.endsWith("." + e)
-      }
-    }
-  }
-
-  /** proxy selection per request host (ref common ProxyConfig: explicit
-    * proxy_url + no_proxy, or proxy_from_environment reading HTTP_PROXY /
-    * HTTPS_PROXY / NO_PROXY — request scheme picks the variable) */
-  private[streaming] def proxySelectorFor(proxyUrl: String, noProxy: String,
-      proxyFromEnvironment: Boolean,
-      env: Map[String, String] = sys.env): Option[java.net.ProxySelector] = {
-    def envAny(k: String): String =
-      env.getOrElse(k, env.getOrElse(k.toLowerCase, ""))
-    val noP = if (proxyFromEnvironment) envAny("NO_PROXY") else noProxy
-    def proxyFor(scheme: String): String =
-      if (!proxyFromEnvironment) proxyUrl
-      else if (scheme == "https") envAny("HTTPS_PROXY")
-      else envAny("HTTP_PROXY")
-    if (!proxyFromEnvironment && proxyUrl.isEmpty) return None
-    Some(new java.net.ProxySelector {
-      override def select(uri: java.net.URI): java.util.List[java.net.Proxy] = {
-        val p = proxyFor(Option(uri.getScheme).getOrElse("http").toLowerCase)
-        if (p.isEmpty || noProxyMatches(noP, uri.getHost))
-          java.util.List.of(java.net.Proxy.NO_PROXY)
-        else {
-          val u = java.net.URI.create(p)
-          val port = if (u.getPort != -1) u.getPort else 80
-          java.util.List.of(new java.net.Proxy(java.net.Proxy.Type.HTTP,
-            new java.net.InetSocketAddress(u.getHost, port)))
-        }
-      }
-      override def connectFailed(uri: java.net.URI,
-          sa: java.net.SocketAddress, ioe: java.io.IOException): Unit = ()
-    })
-  }
-
-  def buildClient(proxyUrl: String = "", tlsCaFile: String = "",
-      tlsInsecureSkipVerify: Boolean = false, noProxy: String = "",
-      proxyFromEnvironment: Boolean = false,
-      enableHttp2: Boolean = true,
-      env: Map[String, String] = sys.env,
-      // scrape keeps NEVER (sendFollow implements follow_redirects with
-      // the cross-host credential drop itself); remote write/read pass
-      // NORMAL for the common follow_redirects=true default
-      redirects: java.net.http.HttpClient.Redirect =
-        java.net.http.HttpClient.Redirect.NEVER): java.net.http.HttpClient = {
-    val b = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10))
-      .followRedirects(redirects)
-    // enable_http2=false pins HTTP/1.1 (the JDK default is 2-with-fallback)
-    if (!enableHttp2) b.version(java.net.http.HttpClient.Version.HTTP_1_1)
-    proxySelectorFor(proxyUrl, noProxy, proxyFromEnvironment, env)
-      .foreach(b.proxy)
-    if (tlsInsecureSkipVerify) {
-      val trustAll: Array[javax.net.ssl.TrustManager] = Array(
-        new javax.net.ssl.X509TrustManager {
-          override def checkClientTrusted(
-              c: Array[java.security.cert.X509Certificate], a: String): Unit = ()
-          override def checkServerTrusted(
-              c: Array[java.security.cert.X509Certificate], a: String): Unit = ()
-          override def getAcceptedIssuers: Array[java.security.cert.X509Certificate] =
-            Array.empty
-        })
-      val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
-      ctx.init(null, trustAll, new java.security.SecureRandom())
-      b.sslContext(ctx)
-    } else if (tlsCaFile.nonEmpty) {
-      val cf = java.security.cert.CertificateFactory.getInstance("X.509")
-      val in = new java.io.FileInputStream(tlsCaFile)
-      val certs = try cf.generateCertificates(in) finally in.close()
-      val ks = java.security.KeyStore.getInstance(
-        java.security.KeyStore.getDefaultType)
-      ks.load(null, null)
-      val it = certs.iterator()
-      var i = 0
-      while (it.hasNext) { ks.setCertificateEntry(s"ca$i", it.next()); i += 1 }
-      val tmf = javax.net.ssl.TrustManagerFactory.getInstance(
-        javax.net.ssl.TrustManagerFactory.getDefaultAlgorithm)
-      tmf.init(ks)
-      val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
-      ctx.init(null, tmf.getTrustManagers, new java.security.SecureRandom())
-      b.sslContext(ctx)
-    }
-    b.build()
   }
 
   /** Go units size string ("512MB", "64KiB", "10240B", bare bytes) → bytes

@@ -15,9 +15,8 @@ import java.time.Duration
   * and refreshes. */
 object SdHttp {
 
-  /** the shared client (10 s connect timeout) */
-  val client: HttpClient =
-    HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
+  /** the shared default client of [[graft.web.OutboundHttp]] */
+  val client: HttpClient = graft.web.OutboundHttp.default
 
   /** a non-accepted status; the message names provider, status and path */
   final class StatusError(val provider: String, val status: Int, val path: String)

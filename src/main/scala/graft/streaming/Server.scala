@@ -93,28 +93,6 @@ final class PromServer(
   def config: Option[Config.PromConfig] = configOpt
   def currentRuleGroups: Seq[Rules.Group] = ruleGroups
 
-  /** sigv4 config → a supplier of (resolved credentials, region). The
-    * credential chain is the one the AWS SD family runs (static keys →
-    * shared-config profile → env, wrapped in STS AssumeRole when role_arn
-    * is set, FIPS STS endpoint honored); the STS result is expiry-cached
-    * inside AssumeRoleCreds so each call is cheap. Region resolves config →
-    * AWS_REGION / AWS_DEFAULT_REGION eagerly, failing the reload with a
-    * clear error like the reference's NewSigV4RoundTripper. */
-  private def sigv4CredsSupplier(s4: Config.SigV4Cfg)
-      : () => (AwsSd.Creds, String) = {
-    val region = AwsSd.resolveRegion(s4.region)
-    val baseCreds = new AwsSd.StaticCreds(s4.accessKey, s4.secretKey, s4.profile)
-    val cp: AwsSd.CredsProvider =
-      if (s4.roleArn.isEmpty) baseCreds
-      else new AwsSd.AssumeRoleCreds(
-        new AwsSd.HttpStsApi(region, baseCreds,
-          endpoint =
-            if (s4.useFipsStsEndpoint) s"https://sts-fips.$region.amazonaws.com"
-            else ""),
-        s4.roleArn, s4.externalId)
-    () => (cp.creds(), region)
-  }
-
   /** (re)load the configuration; Left(error) leaves the old state running */
   def reload(): Either[String, Unit] = synchronized {
     try {
@@ -158,21 +136,7 @@ final class PromServer(
         else Some(new graft.web.Notifier(Nil,
           externalLabels = cfg.externalLabels,
           alertRelabel = cfg.alertRelabel,
-          sets = cfg.alertmanagerGroups.map { g =>
-            // per-group HTTP client auth (ref alertmanagerset.go:45-60):
-            // oauth2 builds a refreshing provider, fixed-header otherwise;
-            // sigv4 resolves the AWS credential chain per send
-            val oa = g.sd.oauth2.map(new graft.web.OAuth2.TokenProvider(_))
-            graft.web.Notifier.AmSet(
-              () => {
-                discovery.poll()
-                Discovery.alertmanagerEndpoints(discovery, g)
-              },
-              g.alertRelabel, g.timeoutMs,
-              authHeader = oa.map[() => String](tp => () => tp.header())
-                .orElse(g.sd.authHeader.map(h => () => h)),
-              sigv4 = g.sigv4.map(sigv4CredsSupplier))
-          },
+          sets = cfg.alertmanagerGroups.map(PromServer.amSetOf(_, discovery)),
           // per-AM bounded queues: the rules tick never blocks on a slow
           // AM; live queues survive a reload (process-wide loop map)
           async = true))
@@ -186,21 +150,20 @@ final class PromServer(
         queryLogPath = newLog
       }
       forwarders = cfg.remoteWrites.map { e =>
-        // dynamic auth: azuread / oauth2 / google_iam each build ONE
-        // refreshing token provider per entry; fixed-header auth otherwise
-        // (the checker enforces at-most-one auth shape per entry)
-        val azProvider = e.azureAd.map(new graft.web.AzureAd.TokenProvider(_))
-        val oaProvider = e.oauth2.map(new graft.web.OAuth2.TokenProvider(_))
-        val giProvider = e.googleIam.map(new graft.web.GoogleIam.TokenProvider(_))
+        // the remote-write-only auth shapes: azuread / google_iam each
+        // build ONE refreshing token provider per entry (oauth2 and the
+        // fixed header ride the entry's client config; the checker
+        // enforces at-most-one auth shape per entry)
         val dynAuth: Option[() => String] =
-          azProvider.map[() => String](tp => () => "Bearer " + tp.token())
-            .orElse(oaProvider.map(tp => () => tp.header()))
-            .orElse(giProvider.map(tp => () => tp.header()))
+          e.azureAd.map(new graft.web.AzureAd.TokenProvider(_))
+            .map[() => String](tp => () => "Bearer " + tp.token())
+            .orElse(e.googleIam.map(new graft.web.GoogleIam.TokenProvider(_))
+              .map(tp => () => tp.header()))
         // sigv4: the driver resolves the credential chain once per
         // forward() call; executors sign each batch body (ref
         // storage/remote/client.go:199)
         val signerProvider = e.sigv4.map { s4 =>
-          val sup = sigv4CredsSupplier(s4)
+          val sup = PromServer.sigv4CredsSupplier(s4)
           val uri = java.net.URI.create(e.url)
           () => {
             val (creds, region) = sup()
@@ -213,7 +176,6 @@ final class PromServer(
            maxBatch = e.queue.maxSamplesPerSend,
            backoffMs = e.queue.minBackoffMs,
            protoVersion = e.protoVersion,
-           authHeader = e.authHeader, headers = e.headers,
            authProvider = dynAuth,
            signerProvider = signerProvider,
            maxBackoffMs = e.queue.maxBackoffMs,
@@ -227,20 +189,8 @@ final class PromServer(
            clientCfg = e.client))
       }
       remoteReadSecondaries = cfg.remoteReads.map { e =>
-        val oaProvider = e.oauth2.map(new graft.web.OAuth2.TokenProvider(_))
         graft.web.FanoutStore.Secondary(
-          new graft.web.RemoteReadClient(e.url,
-            client = ScrapeManager.buildClient(
-              e.client.proxyUrl, e.client.tlsCaFile,
-              e.client.tlsInsecureSkipVerify, e.client.noProxy,
-              e.client.proxyFromEnvironment, e.client.enableHttp2,
-              redirects =
-                if (e.client.followRedirects)
-                  java.net.http.HttpClient.Redirect.NORMAL
-                else java.net.http.HttpClient.Redirect.NEVER),
-            authHeader = e.authHeader, headers = e.headers,
-            authProvider = oaProvider.map(tp => () => tp.header()),
-            remoteTimeoutMs = e.remoteTimeoutMs),
+          new graft.web.RemoteReadClient(e.url, e.client, e.remoteTimeoutMs),
           readRecent = e.readRecent,
           requiredMatchers = e.requiredMatchers,
           filterExternalLabels = e.filterExternalLabels)
@@ -266,12 +216,7 @@ final class PromServer(
         val m = new ScrapeManager(spark, store, Nil,
           intervalMs = if (job.intervalMs > 0) job.intervalMs else cfg.scrapeIntervalMs,
           metricRelabel = job.metricRelabel, nowMs = nowMs, limits = job.limits,
-          timeoutMs = job.timeoutMs, authHeader = job.authHeader,
-          // oauth2: one refreshing token provider per pool (fetch once,
-          // cached across scrapes, refreshed inside the expiry window)
-          authProvider = job.oauth2.map(new graft.web.OAuth2.TokenProvider(_))
-            .map(tp => () => tp.header()),
-          httpHeaders = job.httpHeaders,
+          timeoutMs = job.timeoutMs,
           failureLogFile = job.failureLogFile,
           honorTimestamps = job.honorTimestamps,
           trackTimestampsStaleness = job.trackTimestampsStaleness,
@@ -283,15 +228,9 @@ final class PromServer(
           stZeroIngestion = stZeroIngestion,
           stSynthesis = stSynthesis,
           extraScrapeMetrics = extraScrapeMetrics,
-          followRedirects = job.followRedirects,
-          client =
-            if (job.proxyUrl.nonEmpty || job.tlsCaFile.nonEmpty ||
-                job.tlsInsecureSkipVerify || job.proxyFromEnvironment ||
-                !job.enableHttp2)
-              ScrapeManager.buildClient(job.proxyUrl, job.tlsCaFile,
-                job.tlsInsecureSkipVerify, job.noProxy,
-                job.proxyFromEnvironment, job.enableHttp2)
-            else java.net.http.HttpClient.newHttpClient())
+          // oauth2: one refreshing token provider per pool (fetch once,
+          // cached across scrapes, refreshed inside the expiry window)
+          clientCfg = job.client)
         m.setTargetProvider { () =>
           discovery.poll()
           val discovered = discovery
@@ -494,4 +433,44 @@ final class PromServer(
     tracker.foreach(_.close())
     api.stop()
   }
+}
+
+object PromServer {
+
+  /** sigv4 config → a supplier of (resolved credentials, region). The
+    * credential chain is the one the AWS SD family runs (static keys →
+    * shared-config profile → env, wrapped in STS AssumeRole when role_arn
+    * is set, FIPS STS endpoint honored); the STS result is expiry-cached
+    * inside AssumeRoleCreds so each call is cheap. Region resolves config →
+    * AWS_REGION / AWS_DEFAULT_REGION eagerly, failing the reload with a
+    * clear error like the reference's NewSigV4RoundTripper. */
+  private[streaming] def sigv4CredsSupplier(s4: Config.SigV4Cfg)
+      : () => (AwsSd.Creds, String) = {
+    val region = AwsSd.resolveRegion(s4.region)
+    val baseCreds = new AwsSd.StaticCreds(s4.accessKey, s4.secretKey, s4.profile)
+    val cp: AwsSd.CredsProvider =
+      if (s4.roleArn.isEmpty) baseCreds
+      else new AwsSd.AssumeRoleCreds(
+        new AwsSd.HttpStsApi(region, baseCreds,
+          endpoint =
+            if (s4.useFipsStsEndpoint) s"https://sts-fips.$region.amazonaws.com"
+            else ""),
+        s4.roleArn, s4.externalId)
+    () => (cp.creds(), region)
+  }
+
+  /** one `alerting.alertmanagers` group's notifier set: push endpoints
+    * resolve live from the discovery manager, alerts post through the
+    * client the group's HTTP client config builds, with its headers and
+    * auth (ref alertmanagerset.go:45-60), and sigv4 resolves the AWS
+    * credential chain per send */
+  def amSetOf(g: Config.AlertmanagerGroup, discovery: Discovery.Manager)
+      : graft.web.Notifier.AmSet =
+    graft.web.Notifier.AmSet(
+      () => {
+        discovery.poll()
+        Discovery.alertmanagerEndpoints(discovery, g)
+      },
+      g.alertRelabel, g.timeoutMs, g.sd.client,
+      g.sigv4.map(sigv4CredsSupplier))
 }

@@ -223,44 +223,14 @@ object AzureAd {
       imdsOverride: Option[String] = None,
       nowMs: () => Long = () => System.currentTimeMillis(),
       env: Map[String, String] = sys.env,
-      client: java.net.http.HttpClient = java.net.http.HttpClient.newBuilder()
-        .connectTimeout(java.time.Duration.ofSeconds(10)).build()) {
-    private var cached: String = null
-    private var expiresAtMs: Long = Long.MinValue
-
+      client: java.net.http.HttpClient = OutboundHttp.default) {
     private def authority = authorityOverride.getOrElse(authorityHost(cfg.cloud))
     private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
 
-    private def parseToken(body: String): (String, Long) = {
-      val m = JsonLite.parse(body) match {
-        case mm: Map[_, _] => mm.asInstanceOf[Map[String, Any]]
-        case _ => Map.empty[String, Any]
-      }
-      val tok = m.get("access_token") match {
-        case Some(s: String) => s
-        case _ => throw new IllegalStateException("azuread: response missing access_token")
-      }
-      val expSec = m.get("expires_in") match {
-        case Some(d: Double) => d.toLong
-        case Some(s: String) => try s.toLong catch { case _: Exception => 3600L }
-        case _ => 3600L
-      }
-      (tok, expSec)
+    private def post(url: String, form: String): (String, Long) = {
+      val t = OutboundHttp.fetchToken(client, OutboundHttp.formPost(url, form), "azuread")
+      (t.accessToken, t.expiresInSec)
     }
-
-    private def post(url: String, form: String): String = {
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Content-Type", "application/x-www-form-urlencoded")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(form)).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"azuread token: status ${resp.statusCode()}")
-      resp.body()
-    }
-
-    private def fetch(): (String, Long) = fetchFor(cfg)
 
     private def fetchFor(cfg: Config): (String, Long) = {
       val scope = cfg.effectiveScope
@@ -269,7 +239,7 @@ object AzureAd {
         val o = cfg.oauth.get
         val form = s"client_id=${enc(o.clientId)}&client_secret=${enc(o.clientSecret)}" +
           s"&grant_type=client_credentials&scope=${enc(scope)}"
-        parseToken(post(tokenUrl(o.tenantId), form))
+        post(tokenUrl(o.tenantId), form)
       } else if (cfg.certificate.isDefined) {
         val ct = cfg.certificate.get
         val url = tokenUrl(ct.tenantId)
@@ -280,7 +250,7 @@ object AzureAd {
           enc("urn:ietf:params:oauth:client-assertion-type:jwt-bearer") +
           s"&client_assertion=${enc(assertion)}" +
           s"&grant_type=client_credentials&scope=${enc(scope)}"
-        parseToken(post(url, form))
+        post(url, form)
       } else if (cfg.workloadIdentity.isDefined) {
         val wi = cfg.workloadIdentity.get
         val path =
@@ -294,7 +264,7 @@ object AzureAd {
           enc("urn:ietf:params:oauth:client-assertion-type:jwt-bearer") +
           s"&client_assertion=${enc(fedToken)}" +
           s"&grant_type=client_credentials&scope=${enc(scope)}"
-        parseToken(post(tokenUrl(wi.tenantId), form))
+        post(tokenUrl(wi.tenantId), form)
       } else if (cfg.managedIdentity.isDefined) {
         val mi = cfg.managedIdentity.get
         // IMDS takes a RESOURCE (the audience without the /.default suffix)
@@ -303,14 +273,12 @@ object AzureAd {
         val url = s"$base/metadata/identity/oauth2/token?api-version=2018-02-01" +
           s"&resource=${enc(resource)}" +
           (if (mi.clientId.nonEmpty) s"&client_id=${enc(mi.clientId)}" else "")
-        val resp = client.send(
+        val t = OutboundHttp.fetchToken(client,
           java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
             .timeout(java.time.Duration.ofSeconds(30))
             .header("Metadata", "true").GET().build(),
-          java.net.http.HttpResponse.BodyHandlers.ofString())
-        if (resp.statusCode() != 200)
-          throw new IllegalStateException(s"azuread imds: status ${resp.statusCode()}")
-        parseToken(resp.body())
+          "azuread", "imds")
+        (t.accessToken, t.expiresInSec)
       } else {
         // `sdk`: the DefaultAzureCredential chain SUBSET this engine runs
         // (ref azuread.go → azidentity.NewDefaultAzureCredential's probe
@@ -346,15 +314,9 @@ object AzureAd {
       }
     }
 
+    private val cache = new OutboundHttp.TokenCache(nowMs, () => fetchFor(cfg))
+
     /** cached bearer token; refreshed inside the 5-minute expiry window */
-    def token(): String = synchronized {
-      val t = nowMs()
-      if (cached == null || t + 300000L >= expiresAtMs) {
-        val (tok, expSec) = fetch()
-        cached = tok
-        expiresAtMs = t + expSec * 1000L
-      }
-      cached
-    }
+    def token(): String = cache.get()
   }
 }

@@ -82,7 +82,7 @@ object DebugTool {
 
   // ---- debug collection ------------------------------------------------
 
-  private lazy val client = java.net.http.HttpClient.newHttpClient()
+  private def client = OutboundHttp.default
 
   private def fetch(url: String): Array[Byte] =
     client.send(

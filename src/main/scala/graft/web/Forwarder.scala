@@ -62,17 +62,11 @@ final class RemoteWriteForwarder(
     maxRetries: Int = 3,
     backoffMs: Long = 100L,
     protoVersion: Int = 1,
-    // rendered Authorization value (basic_auth/authorization/bearer_token)
-    // and custom per-request headers from the remote_write config; the
-    // PROTOCOL headers below always win over a custom header of the same
-    // name (the reference rejects reserved names at config load — see
-    // ConfigCheck — and this ordering is the runtime backstop)
-    authHeader: Option[String] = None,
-    headers: Map[String, String] = Map.empty,
-    // dynamic auth (azuread/oauth2/google_iam bearer tokens): evaluated
-    // ONCE per forward() call on the driver — tokens outlive a batch by
-    // construction (providers refresh inside their 5-minute expiry
-    // window), so executors see a plain string and never need the provider
+    // remote-write-only dynamic auth (azuread / google_iam bearer tokens);
+    // wins over the client config's oauth2 / rendered header. Auth is
+    // resolved ONCE per forward() call on the driver — tokens outlive a
+    // batch by construction (providers refresh inside their 5-minute
+    // expiry window), so executors see a plain string, never a provider
     authProvider: Option[() => String] = None,
     // per-request body signer (sigv4): built ONCE per forward() call on
     // the driver (resolving the credential chain), applied per batch on
@@ -96,12 +90,19 @@ final class RemoteWriteForwarder(
     // driver — rides the batch encode; the 1.0 separate-RPC metadata path
     // is not implemented (documented divergence)
     metadataProvider: Option[() => RemoteWrite.Meta] = None,
-    // transport knobs (ref config.go:221 DefaultRemoteWriteHTTPClientConfig:
-    // redirects followed, HTTP/2 OFF for remote write) — executors build
-    // their per-partition client from this serializable config
+    // the remote_write HTTP client config (ref config.go:221
+    // DefaultRemoteWriteHTTPClientConfig: redirects followed, HTTP/2 OFF).
+    // Executors build their per-partition client from this serializable
+    // value; its custom headers go first and the PROTOCOL headers last, so
+    // those always win a same-name collision (the reference rejects
+    // reserved names at config load — see ConfigCheck — and this ordering
+    // is the runtime backstop)
     clientCfg: graft.streaming.Config.HttpClientCfg =
       graft.streaming.Config.HttpClientCfg(enableHttp2 = false),
     nowMs: () => Long = () => System.currentTimeMillis()) extends Serializable {
+
+  // driver-side Authorization source (never shipped to executors)
+  @transient private lazy val authorization = OutboundHttp.authorization(clientCfg)
 
   /** forward samples; v2 endpoints also carry NATIVE HISTOGRAMS (PRW 1.0
     * send stays float-only — encodeV1 has no histogram payload). Returns
@@ -113,11 +114,10 @@ final class RemoteWriteForwarder(
     val maxBo = math.max(maxBackoffMs, backoffMs)
     val retry429 = retryOn429
     val v2 = protoVersion >= 2
-    val auth = authProvider.map(p => p()).orElse(authHeader)
+    val auth = authProvider.map(p => p()).orElse(authorization())
     val signer = signerProvider.map(p => p())
     val meta: RemoteWrite.Meta =
       if (v2) metadataProvider.map(p => p()).getOrElse(Map.empty) else Map.empty
-    val extraHeaders = headers
     val shipped = samples.sparkSession.sparkContext.longAccumulator("rw_forwarded")
     val base0 = samples.filter(!col("stale"))
     // sample_age_limit: rows older than the limit are dropped before the
@@ -142,12 +142,7 @@ final class RemoteWriteForwarder(
     val cc = clientCfg
     projected
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val client = graft.streaming.ScrapeManager.buildClient(
-          cc.proxyUrl, cc.tlsCaFile, cc.tlsInsecureSkipVerify, cc.noProxy,
-          cc.proxyFromEnvironment, cc.enableHttp2,
-          redirects =
-            if (cc.followRedirects) java.net.http.HttpClient.Redirect.NORMAL
-            else java.net.http.HttpClient.Redirect.NEVER)
+        val client = OutboundHttp.client(cc)
         def send(batch: Seq[RemoteWrite.Sample]): Unit = {
           if (batch.isEmpty) return
           val body =
@@ -159,19 +154,14 @@ final class RemoteWriteForwarder(
           var done = false
           while (!done && attempt <= mr) {
             try {
-              val rb = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-                .timeout(java.time.Duration.ofMillis(timeoutMs))
-              // custom headers first, protocol headers after (same-name
-              // protocol values overwrite via setHeader)
-              extraHeaders.foreach { case (k, vv) => rb.header(k, vv) }
-              auth.foreach(a => rb.setHeader("Authorization", a))
               // sigv4: signature over THIS body at THIS instant (host and
-              // content-type join the signed set; the JDK fills Host
-              // itself and refuses an explicit one)
-              signer.foreach(s => s.headers(body, contentType).foreach {
-                case (k, v) if k.equalsIgnoreCase("host") => ()
-                case (k, v) => rb.setHeader(k, v)
-              })
+              // content-type join the signed set)
+              val rb = OutboundHttp.decorate(
+                java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+                  .timeout(java.time.Duration.ofMillis(timeoutMs)),
+                cc.headers, auth,
+                signer.fold(Map.empty[String, String])(_.headers(body, contentType)))
+              // protocol headers after the decoration: setHeader wins
               val resp = client.send(
                 rb.setHeader("Content-Encoding", "snappy")
                   .setHeader("Content-Type", contentType)

@@ -78,11 +78,6 @@ object GoogleIam {
   final class TokenProvider(cfg: Config,
       env: Map[String, String] = sys.env,
       nowMs: () => Long = () => System.currentTimeMillis()) {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    private var cached: String = null
-    private var expiresAtMs: Long = Long.MinValue
-
     private lazy val sa: ServiceAccount = {
       val path =
         if (cfg.credentialsFile.nonEmpty) cfg.credentialsFile
@@ -94,43 +89,16 @@ object GoogleIam {
       loadServiceAccount(path)
     }
 
-    private def fetch(): (String, Long) = {
+    private val cache = new OutboundHttp.TokenCache(nowMs, () => {
       def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
       val form = "grant_type=" + enc(OAuth2.JwtBearerGrant) +
         "&assertion=" + enc(assertion(sa, nowMs()))
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(sa.tokenUri))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Content-Type", "application/x-www-form-urlencoded")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(form)).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"google_iam token: status ${resp.statusCode()}")
-      val m = JsonLite.parse(resp.body()) match {
-        case mm: Map[_, _] => mm.asInstanceOf[Map[String, Any]]
-        case _ => Map.empty[String, Any]
-      }
-      val tok = m.get("access_token") match {
-        case Some(s: String) => s
-        case _ => throw new IllegalStateException("google_iam: response missing access_token")
-      }
-      val expSec = m.get("expires_in") match {
-        case Some(d: Double) => d.toLong
-        case Some(s: String) => try s.toLong catch { case _: Exception => 3600L }
-        case _ => 3600L
-      }
-      (tok, expSec)
-    }
+      val t = OutboundHttp.fetchToken(OutboundHttp.default,
+        OutboundHttp.formPost(sa.tokenUri, form), "google_iam")
+      ("Bearer " + t.accessToken, t.expiresInSec)
+    })
 
     /** rendered Authorization value; refreshed inside the 5-minute window */
-    def header(): String = synchronized {
-      val t = nowMs()
-      if (cached == null || t + 300000L >= expiresAtMs) {
-        val (tok, expSec) = fetch()
-        cached = "Bearer " + tok
-        expiresAtMs = t + expSec * 1000L
-      }
-      cached
-    }
+    def header(): String = cache.get()
   }
 }

@@ -12,11 +12,12 @@ object Notifier {
       endpoints: () => Seq[String],
       alertRelabel: Seq[Relabel.Rule] = Nil,
       timeoutMs: Long = 10000L,
-      // per-group HTTP client auth (ref notifier/alertmanagerset.go:45-60 —
-      // the AM group's HTTPClientConfig, incl. oauth2 via a refreshing
-      // supplier) …
-      authHeader: Option[() => String] = None,
-      // … or SigV4 request signing (alertmanagerset.go:58 — Amazon Managed
+      // the group's HTTP client config (ref notifier/alertmanagerset.go:45-60
+      // — the AM group's HTTPClientConfig: transport, headers, auth incl.
+      // oauth2) …
+      clientCfg: graft.streaming.Config.HttpClientCfg =
+        graft.streaming.Config.HttpClientCfg(),
+      // … plus SigV4 request signing (alertmanagerset.go:58 — Amazon Managed
       // Prometheus alertmanager endpoints): a supplier of resolved
       // (credentials, region), signed per request over the JSON body
       sigv4: Option[() => (graft.streaming.AwsSd.Creds, String)] = None)
@@ -106,7 +107,6 @@ object Notifier {
 final class Notifier(
     alertmanagerUrls: Seq[String],
     externalUrl: String = "http://localhost:9090",
-    client: java.net.http.HttpClient = java.net.http.HttpClient.newHttpClient(),
     externalLabels: Map[String, String] = Map.empty,
     alertRelabel: Seq[Relabel.Rule] = Nil,
     sets: Seq[Notifier.AmSet] = Nil,
@@ -116,16 +116,21 @@ final class Notifier(
     async: Boolean = false,
     queueCapacity: Int = 10000) {
 
+  // one sender per set (its client and token cache span sends); the
+  // static-URL list uses the default config
+  private lazy val staticSender =
+    new OutboundHttp.Sender(graft.streaming.Config.HttpClientCfg())
+  private val setSenders = sets.map(s => new OutboundHttp.Sender(s.clientCfg))
+
   // per-AM send loops, shared process-wide so a config reload "transfers"
   // a live queue to the new Notifier instance instead of dropping it
   // (ref: notifier/manager.go:166 sendLoops transfer on ApplyConfig)
-  private def loopFor(url: String, timeoutMs: Long,
-      authHeader: Option[() => String] = None,
-      sigv4: Option[() => (graft.streaming.AwsSd.Creds, String)] = None)
+  private def loopFor(url: String, timeoutMs: Long, sender: OutboundHttp.Sender,
+      sigv4: Option[() => (graft.streaming.AwsSd.Creds, String)])
       : Notifier.SendLoop =
     Notifier.sendLoops.getOrElseUpdate(url,
       new Notifier.SendLoop(url,
-        body => post(url, body, timeoutMs, authHeader, sigv4), queueCapacity))
+        body => post(url, body, timeoutMs, sender, sigv4), queueCapacity))
 
   final case class Alert(
       labels: Map[String, String],
@@ -161,24 +166,20 @@ final class Notifier(
     }
 
   private def post(url: String, body: String, timeoutMs: Long,
-      authHeader: Option[() => String] = None,
-      sigv4: Option[() => (graft.streaming.AwsSd.Creds, String)] = None): Boolean =
+      sender: OutboundHttp.Sender,
+      sigv4: Option[() => (graft.streaming.AwsSd.Creds, String)]): Boolean =
     try {
-      val rb = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-        .timeout(java.time.Duration.ofMillis(timeoutMs))
-        .header("Content-Type", "application/json")
-      authHeader.foreach(h => rb.setHeader("Authorization", h()))
-      sigv4.foreach { sup =>
+      val signed = sigv4.fold(Map.empty[String, String]) { sup =>
         val (creds, region) = sup()
         val uri = java.net.URI.create(url)
         RemoteWriteForwarder.SigV4Signer(creds, region, uri.getAuthority,
-          uri.getRawPath)
-          .headers(body.getBytes("UTF-8"), "application/json").foreach {
-            case (k, _) if k.equalsIgnoreCase("host") => ()
-            case (k, v) => rb.setHeader(k, v)
-          }
+          uri.getRawPath).headers(body.getBytes("UTF-8"), "application/json")
       }
-      val resp = client.send(
+      val rb = sender.decorate(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+          .timeout(java.time.Duration.ofMillis(timeoutMs)), signed = signed)
+        .setHeader("Content-Type", "application/json")
+      val resp = sender.client.send(
         rb.POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
         java.net.http.HttpResponse.BodyHandlers.ofString())
       resp.statusCode() / 100 == 2
@@ -192,17 +193,18 @@ final class Notifier(
     if (alerts.isEmpty) return alertmanagerUrls.map(_ => true)
     val ga = relabelAlerts(alerts, externalLabels, alertRelabel)
     def deliver(url: String, jsons: Seq[String], timeoutMs: Long,
-        authHeader: Option[() => String] = None,
-        sigv4: Option[() => (graft.streaming.AwsSd.Creds, String)] = None): Boolean =
+        sender: OutboundHttp.Sender,
+        sigv4: Option[() => (graft.streaming.AwsSd.Creds, String)]): Boolean =
       if (jsons.isEmpty) true
-      else if (async) { loopFor(url, timeoutMs, authHeader, sigv4).add(jsons); true }
-      else post(url, Json.arr(jsons), timeoutMs, authHeader, sigv4)
+      else if (async) { loopFor(url, timeoutMs, sender, sigv4).add(jsons); true }
+      else post(url, Json.arr(jsons), timeoutMs, sender, sigv4)
     val gaJsons = ga.map(alertJson)
     alertmanagerUrls.map { base =>
-      deliver(base.stripSuffix("/") + "/api/v2/alerts", gaJsons, 10000L)
-    } ++ sets.flatMap { s =>
+      deliver(base.stripSuffix("/") + "/api/v2/alerts", gaJsons, 10000L,
+        staticSender, None)
+    } ++ sets.zip(setSenders).flatMap { case (s, sender) =>
       val saJsons = relabelAlerts(ga, Map.empty, s.alertRelabel).map(alertJson)
-      s.endpoints().map(u => deliver(u, saJsons, s.timeoutMs, s.authHeader, s.sigv4))
+      s.endpoints().map(u => deliver(u, saJsons, s.timeoutMs, sender, s.sigv4))
     }
   }
 

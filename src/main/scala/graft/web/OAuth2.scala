@@ -143,12 +143,7 @@ object OAuth2 {
     * Authorization value (`<token_type> <access_token>`) */
   final class TokenProvider(cfg: Config,
       nowMs: () => Long = () => System.currentTimeMillis()) {
-    private val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-    private var cached: String = null
-    private var expiresAtMs: Long = Long.MinValue
-
-    private def fetch(): (String, Long) = {
+    private def form(): String = {
       val form = new StringBuilder
       def add(k: String, v: String): Unit = {
         if (form.nonEmpty) form += '&'
@@ -172,47 +167,16 @@ object OAuth2 {
       // endpoint_params last so an explicit grant_type (the documented
       // password-grant recipe) overrides per urlencoded-form semantics
       cfg.endpointParams.toSeq.sortBy(_._1).foreach { case (k, v) => add(k, v) }
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(cfg.tokenUrl))
-          .timeout(java.time.Duration.ofSeconds(30))
-          .header("Content-Type", "application/x-www-form-urlencoded")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(form.result()))
-          .build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200)
-        throw new IllegalStateException(s"oauth2 token: status ${resp.statusCode()}")
-      val m = JsonLite.parse(resp.body()) match {
-        case mm: Map[_, _] => mm.asInstanceOf[Map[String, Any]]
-        case _ => Map.empty[String, Any]
-      }
-      val tok = m.get("access_token") match {
-        case Some(s: String) => s
-        case _ => throw new IllegalStateException("oauth2: response missing access_token")
-      }
-      val typ = m.get("token_type") match {
-        case Some(s: String) if s.nonEmpty =>
-          // normalize the common lowercase "bearer" (RFC 6749 says the
-          // token_type is case-insensitive; headers render canonical)
-          if (s.equalsIgnoreCase("bearer")) "Bearer" else s
-        case _ => "Bearer"
-      }
-      val expSec = m.get("expires_in") match {
-        case Some(d: Double) => d.toLong
-        case Some(s: String) => try s.toLong catch { case _: Exception => 3600L }
-        case _ => 3600L
-      }
-      (s"$typ $tok", expSec)
+      form.result()
     }
 
+    private val cache = new OutboundHttp.TokenCache(nowMs, () => {
+      val t = OutboundHttp.fetchToken(OutboundHttp.default,
+        OutboundHttp.formPost(cfg.tokenUrl, form()), "oauth2")
+      (s"${t.tokenType} ${t.accessToken}", t.expiresInSec)
+    })
+
     /** rendered Authorization value; refreshed inside the 5-minute window */
-    def header(): String = synchronized {
-      val t = nowMs()
-      if (cached == null || t + 300000L >= expiresAtMs) {
-        val (h, expSec) = fetch()
-        cached = h
-        expiresAtMs = t + expSec * 1000L
-      }
-      cached
-    }
+    def header(): String = cache.get()
   }
 }

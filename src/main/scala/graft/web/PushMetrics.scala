@@ -27,7 +27,7 @@ object PushMetrics {
     val body =
       if (v2) RemoteWrite.encodeV2(samples) else RemoteWrite.encodeV1(samples)
     try {
-      val resp = java.net.http.HttpClient.newHttpClient().send(
+      val resp = OutboundHttp.default.send(
         java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
           .header("Content-Encoding", "snappy")
           .header("Content-Type",

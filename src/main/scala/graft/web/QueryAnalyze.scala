@@ -47,7 +47,7 @@ object QueryAnalyze {
         (if (maxPop.toString == total.toString) "" else s"\n- total: $total")
   }
 
-  private lazy val client = java.net.http.HttpClient.newHttpClient()
+  private def client = OutboundHttp.default
 
   private def asMap(a: Any) = a match {
     case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]; case _ => Map.empty[String, Any]

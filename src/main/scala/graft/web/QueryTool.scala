@@ -121,7 +121,7 @@ object QueryTool {
 
   // ---- HTTP client ----------------------------------------------------
 
-  private lazy val client = java.net.http.HttpClient.newHttpClient()
+  private def client = OutboundHttp.default
 
   private def call(url: String): Either[String, Map[String, Any]] = {
     val resp = client.send(

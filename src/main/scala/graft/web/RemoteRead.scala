@@ -384,16 +384,14 @@ object RemoteRead {
   * same volume the reference's fanout pulls; at 100 TB the remote side does
   * the heavy filtering and this edge carries only matched series. */
 final class RemoteReadClient(endpoint: String,
-    client: java.net.http.HttpClient = java.net.http.HttpClient.newHttpClient(),
-    // remote_read config auth/headers (same contract as the forwarder:
+    // the remote_read HTTP client config (same contract as the forwarder:
     // protocol headers always win over a same-named custom header)
-    authHeader: Option[String] = None,
-    headers: Map[String, String] = Map.empty,
-    // refreshing Authorization source (oauth2); wins over authHeader —
-    // the checker enforces at-most-one auth shape per entry
-    authProvider: Option[() => String] = None,
+    clientCfg: graft.streaming.Config.HttpClientCfg =
+      graft.streaming.Config.HttpClientCfg(),
     // remote_timeout (ref config.go DefaultRemoteReadConfig 1m)
     remoteTimeoutMs: Long = 60000L) {
+
+  private val http = new OutboundHttp.Sender(clientCfg)
 
   def read(q: RemoteRead.Query): Seq[RemoteRead.Series] = read(q, streamed = false)
 
@@ -404,19 +402,16 @@ final class RemoteReadClient(endpoint: String,
     val accepted =
       if (streamed) Seq(RemoteRead.RespStreamedXorChunks, RemoteRead.RespSamples)
       else Nil
-    val rb = java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
-      .timeout(java.time.Duration.ofMillis(remoteTimeoutMs))
-    headers.foreach { case (k, v) => rb.header(k, v) }
-    authProvider.map(_()).orElse(authHeader)
-      .foreach(a => rb.setHeader("Authorization", a))
-    val req = rb
+    val req = http.decorate(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
+          .timeout(java.time.Duration.ofMillis(remoteTimeoutMs)))
       .setHeader("Content-Type", "application/x-protobuf")
       .setHeader("Content-Encoding", "snappy")
       .setHeader("X-Prometheus-Remote-Read-Version", "0.1.0")
       .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(
         RemoteRead.encodeRequest(Seq(q), accepted)))
       .build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
+    val resp = http.client.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
     if (resp.statusCode() != 200)
       throw new RuntimeException(s"remote read failed: HTTP ${resp.statusCode()}")
     val ct = resp.headers().firstValue("Content-Type").orElse("")

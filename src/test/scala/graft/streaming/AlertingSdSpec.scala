@@ -182,4 +182,63 @@ class AlertingSdSpec extends AnyFunSuite {
       assert(got().size == 1)
     } finally am.stop(0)
   }
+
+  test("an alertmanagers group posts through its own client config: tls_config and http_headers") {
+    // self-signed HTTPS alertmanager (SAN=IP:127.0.0.1); its certificate
+    // is the group's tls_config.ca_file
+    val dir = java.nio.file.Files.createTempDirectory("graft_amtls")
+    val ksPath = dir.resolve("ks.p12").toString
+    val keytool = System.getProperty("java.home") + "/bin/keytool"
+    def run(args: String*): Unit = {
+      val p = new ProcessBuilder((keytool +: args): _*)
+        .redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+      assert(p.waitFor() == 0, out)
+    }
+    run("-genkeypair", "-alias", "t", "-keyalg", "RSA", "-keysize", "2048",
+      "-storetype", "PKCS12", "-keystore", ksPath, "-storepass", "changeit",
+      "-dname", "CN=127.0.0.1", "-ext", "SAN=IP:127.0.0.1", "-validity", "2")
+    run("-exportcert", "-rfc", "-alias", "t", "-keystore", ksPath,
+      "-storepass", "changeit", "-file", dir.resolve("ca.pem").toString)
+    val ks = java.security.KeyStore.getInstance("PKCS12")
+    val in = new java.io.FileInputStream(ksPath)
+    try ks.load(in, "changeit".toCharArray) finally in.close()
+    val kmf = javax.net.ssl.KeyManagerFactory.getInstance(
+      javax.net.ssl.KeyManagerFactory.getDefaultAlgorithm)
+    kmf.init(ks, "changeit".toCharArray)
+    val sctx = javax.net.ssl.SSLContext.getInstance("TLS")
+    sctx.init(kmf.getKeyManagers, null, null)
+    val am = com.sun.net.httpserver.HttpsServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    am.setHttpsConfigurator(new com.sun.net.httpserver.HttpsConfigurator(sctx))
+    val tenants = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    am.createContext("/api/v2/alerts", ex => {
+      ex.getRequestBody.readAllBytes()
+      tenants.add(String.valueOf(ex.getRequestHeaders.getFirst("X-Tenant")))
+      ex.sendResponseHeaders(200, -1); ex.close()
+    })
+    am.start()
+    try {
+      val cfg = Config.parse(
+        s"""alerting:
+           |  alertmanagers:
+           |    - scheme: https
+           |      tls_config:
+           |        ca_file: ca.pem
+           |      http_headers:
+           |        X-Tenant:
+           |          values: [t-1]
+           |      static_configs:
+           |        - targets: ['127.0.0.1:${am.getAddress.getPort}']
+           |""".stripMargin, dir.toString)
+      val g = cfg.alertmanagerGroups.head
+      val mgr = new Discovery.Manager()
+      Discovery.registerJob(mgr, g.sd)
+      // the set the server builds for this group
+      val n = new graft.web.Notifier(Nil, sets = Seq(PromServer.amSetOf(g, mgr)))
+      assert(n.send(Seq(n.Alert(Map("alertname" -> "Tls"), startsAtMs = 1L)))
+        == Seq(true))
+      assert(tenants.size == 1 && tenants.get(0) == "t-1", tenants.toString)
+    } finally am.stop(0)
+  }
 }

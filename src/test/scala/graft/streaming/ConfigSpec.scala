@@ -62,11 +62,11 @@ class ConfigSpec extends AnyFunSuite {
         |    authorization:
         |      credentials: tok123
         |""".stripMargin, "/tmp")
-    assert(cfg.remoteWrites.head.authHeader ==
+    assert(cfg.remoteWrites.head.client.authHeader ==
       Some("Basic " + java.util.Base64.getEncoder.encodeToString(
         "user:pw".getBytes("UTF-8"))))
-    assert(cfg.remoteWrites.head.headers == Map("X-Scope-OrgID" -> "tenant-7"))
-    assert(cfg.remoteWrites(1).authHeader == Some("Bearer tok123"))
+    assert(cfg.remoteWrites.head.client.headers == Map("X-Scope-OrgID" -> Seq("tenant-7")))
+    assert(cfg.remoteWrites(1).client.authHeader == Some("Bearer tok123"))
     // checker: a reserved protocol header in remote_write/read is an error
     // (ref config.go reservedHeaders)
     val dir = java.nio.file.Files.createTempDirectory("rwcheck").toFile
@@ -201,15 +201,15 @@ class ConfigSpec extends AnyFunSuite {
     assert(cc.enableHttp2 && !cc.followRedirects &&
       cc.proxyUrl == "http://p:3128" && cc.noProxy == "internal" &&
       cc.tlsCaFile == "/cfgdir/ca.pem" && cc.tlsInsecureSkipVerify)
-    val oa = cfg.remoteWrites(1).oauth2.get
+    val oa = cfg.remoteWrites(1).client.oauth2.get
     assert(oa.clientId == "cid" && oa.grantType == graft.web.OAuth2.JwtBearerGrant)
     assert(oa.clientCertificateKeyFile == "/cfgdir/key.pem") // config-dir relative
     assert(oa.signatureAlgorithm == "RS512" && oa.iss == "who" && oa.audience == "aud")
     assert(oa.claims == Map("dept" -> "eng") && oa.endpointParams == Map("resource" -> "r1"))
     assert(cfg.remoteWrites(2).googleIam.get ==
       graft.web.GoogleIam.Config("/cfgdir/sa.json"))
-    assert(cfg.remoteReads.head.oauth2.get.clientId == "rcid")
-    val so = cfg.scrapeJobs.head.oauth2.get
+    assert(cfg.remoteReads.head.client.oauth2.get.clientId == "rcid")
+    val so = cfg.scrapeJobs.head.client.oauth2.get
     assert(so.clientId == "scrape-cid" && so.scopes == Seq("read") &&
       so.tokenUrl == "http://t/token")
     // `sigv4: {}` (default credential chain) parses to the all-defaults cfg
@@ -232,7 +232,7 @@ class ConfigSpec extends AnyFunSuite {
         |""".stripMargin, "/tmp")
     val g = cfg3.alertmanagerGroups.head
     assert(g.sigv4.contains(Config.SigV4Cfg(region = "us-east-2")))
-    assert(g.sd.oauth2.get.clientId == "amcid")
+    assert(g.sd.client.oauth2.get.clientId == "amcid")
   }
 
   test("scrape_config_files: globbed includes, per-file dirs, duplicate job names") {
@@ -297,7 +297,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("no_proxy matching, proxy_from_environment, enable_http2") {
-    import ScrapeManager.{noProxyMatches, proxySelectorFor}
+    import graft.web.OutboundHttp.{noProxyMatches, proxySelectorFor}
     // domain entries match self + subdomains; leading dot = subdomains only
     assert(noProxyMatches("example.com", "example.com"))
     assert(noProxyMatches("example.com", "api.example.com"))
@@ -328,9 +328,9 @@ class ConfigSpec extends AnyFunSuite {
     // no proxy configured at all → None (the shared default client is used)
     assert(proxySelectorFor("", "", false).isEmpty)
     // enable_http2=false pins the client to HTTP/1.1
-    assert(ScrapeManager.buildClient(enableHttp2 = false).version() ==
-      java.net.http.HttpClient.Version.HTTP_1_1)
-    assert(ScrapeManager.buildClient().version() ==
+    assert(graft.web.OutboundHttp.client(Config.HttpClientCfg(enableHttp2 = false))
+      .version() == java.net.http.HttpClient.Version.HTTP_1_1)
+    assert(graft.web.OutboundHttp.client(Config.HttpClientCfg()).version() ==
       java.net.http.HttpClient.Version.HTTP_2)
     // config parse carries the three fields
     val cfg = Config.parse(
@@ -342,9 +342,65 @@ class ConfigSpec extends AnyFunSuite {
         |  - job_name: k
         |    proxy_from_environment: true
         |""".stripMargin, "/tmp")
-    val j = cfg.scrapeJobs.head
+    val j = cfg.scrapeJobs.head.client
     assert(j.noProxy == "internal.local" && !j.enableHttp2 && !j.proxyFromEnvironment)
-    assert(cfg.scrapeJobs(1).proxyFromEnvironment && cfg.scrapeJobs(1).enableHttp2)
+    assert(cfg.scrapeJobs(1).client.proxyFromEnvironment &&
+      cfg.scrapeJobs(1).client.enableHttp2)
+    // one parser: the same HTTP client block parses to the same
+    // HttpClientCfg in every section (remote_write keeps its HTTP/1.1
+    // default)
+    def block(indent: String): String =
+      """basic_auth:
+        |  username: u
+        |  password: p
+        |oauth2:
+        |  client_id: cid
+        |  client_secret_file: secret.txt
+        |  token_url: http://t/token
+        |http_headers:
+        |  X-Tenant:
+        |    values: [a, b]
+        |tls_config:
+        |  ca_file: ca.pem
+        |proxy_url: http://proxy:3128
+        |no_proxy: internal.local
+        |follow_redirects: false
+        |""".stripMargin.linesIterator.map(indent + _ + "\n").mkString
+    val all = Config.parse(
+      "scrape_configs:\n  - job_name: s\n" + block("    ") +
+      "remote_write:\n  - url: http://w\n" + block("    ") +
+      "remote_read:\n  - url: http://r\n" + block("    ") +
+      "alerting:\n  alertmanagers:\n    - scheme: http\n" + block("      "),
+      "/cfgdir")
+    val scrapeClient = all.scrapeJobs.head.client
+    assert(scrapeClient == Config.HttpClientCfg(
+      followRedirects = false, tlsCaFile = "/cfgdir/ca.pem",
+      proxyUrl = "http://proxy:3128", noProxy = "internal.local",
+      authHeader = Some("Basic " + java.util.Base64.getEncoder.encodeToString(
+        "u:p".getBytes("UTF-8"))),
+      oauth2 = Some(graft.web.OAuth2.Config("cid", "http://t/token",
+        clientSecretFile = "/cfgdir/secret.txt")),
+      headers = Map("X-Tenant" -> Seq("a", "b"))))
+    assert(!all.remoteWrites.head.client.enableHttp2)
+    assert(all.remoteWrites.head.client.copy(enableHttp2 = true) == scrapeClient)
+    assert(all.remoteReads.head.client == scrapeClient)
+    assert(all.alertmanagerGroups.head.sd.client == scrapeClient)
+  }
+
+  test("only the outbound HTTP factory builds an HttpClient in src/main") {
+    val root = new java.io.File("src/main/scala")
+    def sources(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(f =>
+        if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil)
+    val files = sources(root)
+    assert(files.length > 100, s"sources not found under ${root.getAbsolutePath}")
+    val builds = """HttpClient\s*\.\s*new(Builder|HttpClient)|\bnewHttpClient\b""".r
+    val offenders = files.filter(_.getName != "OutboundHttp.scala").flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      builds.findFirstIn(src).map(m => s"${f.getPath}: $m")
+    }
+    assert(offenders.isEmpty, s"use graft.web.OutboundHttp instead: $offenders")
   }
 
   test("file-SD wiring: targetsOf merges static and discovered targets") {

@@ -837,8 +837,8 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
         val store = emptyStoreS()
         new ScrapeManager(spark, store,
           Seq(ScrapeManager.ScrapeTarget(frontUrl, "t", "i1")),
-          nowMs = () => 60000L, authHeader = Some("Bearer s3cr3t"),
-          followRedirects = follow).scrapeOnce()
+          nowMs = () => 60000L, clientCfg = Config.HttpClientCfg(
+            authHeader = Some("Bearer s3cr3t"), followRedirects = follow)).scrapeOnce()
         store.samples.collect().collectFirst {
           case r if r.getMap[String, String](0)("__name__") == "up" => r.getDouble(2)
         }.get

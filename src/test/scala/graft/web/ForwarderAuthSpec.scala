@@ -204,9 +204,10 @@ class ForwarderAuthSpec extends AnyFunSuite {
     val (srv, captured) = receiver()
     try {
       val url = s"http://127.0.0.1:${srv.getAddress.getPort}/api/v2/alerts"
-      // rendered/refreshing Authorization supplier (the oauth2 path)
+      // the rendered Authorization header of the group's client config
       val n1 = new Notifier(Nil, sets = Seq(Notifier.AmSet(
-        () => Seq(url), authHeader = Some(() => "Bearer amtok"))))
+        () => Seq(url), clientCfg = graft.streaming.Config.HttpClientCfg(
+          authHeader = Some("Bearer amtok")))))
       val ok = n1.send(Seq(n1.Alert(Map("alertname" -> "A"), startsAtMs = 1000L)))
       assert(ok == Seq(true))
       assert(captured.size() == 1)

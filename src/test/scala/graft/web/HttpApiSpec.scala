@@ -219,11 +219,12 @@ class HttpApiSpec extends AnyFunSuite {
         Engine.samplesSchema)
       val n = new RemoteWriteForwarder(
         s"http://127.0.0.1:${server.getAddress.getPort}/w",
-        authHeader = Some("Basic dXNlcjpwdw=="),
-        headers = Map("X-Scope-OrgID" -> "tenant-7",
-          // a reserved name slipping past config validation must NOT
-          // shadow the protocol value at runtime
-          "Content-Type" -> "text/evil"))
+        clientCfg = graft.streaming.Config.HttpClientCfg(enableHttp2 = false,
+          authHeader = Some("Basic dXNlcjpwdw=="),
+          headers = Map("X-Scope-OrgID" -> Seq("tenant-7"),
+            // a reserved name slipping past config validation must NOT
+            // shadow the protocol value at runtime
+            "Content-Type" -> Seq("text/evil"))))
         .forward(src)
       assert(n == 1L)
       val h = seen.get()
@@ -242,8 +243,8 @@ class HttpApiSpec extends AnyFunSuite {
       })
       val rr = new RemoteReadClient(
         s"http://127.0.0.1:${server.getAddress.getPort}/r",
-        authHeader = Some("Bearer tok"),
-        headers = Map("X-Scope-OrgID" -> "t9", "Content-Type" -> "text/evil"))
+        graft.streaming.Config.HttpClientCfg(authHeader = Some("Bearer tok"),
+          headers = Map("X-Scope-OrgID" -> Seq("t9"), "Content-Type" -> Seq("text/evil"))))
       intercept[RuntimeException](rr.read(RemoteRead.Query(0L, 1000L,
         List(graft.promql.LabelMatcher("__name__", graft.promql.MatchOp.Eq, "m")))))
       val h2 = seen.get()

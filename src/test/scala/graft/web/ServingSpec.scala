@@ -495,7 +495,7 @@ class ServingSpec extends AnyFunSuite {
            |""".stripMargin)
       val job = cfg.scrapeJobs.head
       assert(job.timeoutMs == 2000L)
-      assert(job.authHeader.contains(
+      assert(job.client.authHeader.contains(
         "Basic " + java.util.Base64.getEncoder.encodeToString("user:pass".getBytes)))
       val tgt0 = job.staticTargets.head
       assert(tgt0.url == s"http://127.0.0.1:$port/probe?module=http_2xx&extra=a&extra=b")
@@ -508,9 +508,9 @@ class ServingSpec extends AnyFunSuite {
 
       val store = emptyStore()
       val mgr = new ScrapeManager(spark, store, Seq(tgt), nowMs = () => 50000L,
-        timeoutMs = job.timeoutMs, authHeader = job.authHeader)
+        timeoutMs = job.timeoutMs, clientCfg = job.client)
       mgr.scrapeOnce()
-      assert(seenAuth == job.authHeader.get)
+      assert(seenAuth == job.client.authHeader.get)
       assert(seenQuery == "module=icmp&extra=a&extra=b")
       val rows = store.samples.collect().map(r =>
         (r.getMap[String, String](0).toMap, r.getDouble(2)))
@@ -656,11 +656,11 @@ class ServingSpec extends AnyFunSuite {
            |      - targets: ['127.0.0.1:${server.getAddress.getPort}']
            |""".stripMargin, dir.toString)
       val job = cfg.scrapeJobs.head
-      assert(job.httpHeaders == Map(
+      assert(job.client.headers == Map(
         "X-Multi" -> Seq("one", "two"), "X-Secret" -> Seq("shh"),
         "X-Tenant" -> Seq("t-42")))
       val mgr = new ScrapeManager(spark, emptyStore(), job.staticTargets,
-        nowMs = () => 50000L, httpHeaders = job.httpHeaders)
+        nowMs = () => 50000L, clientCfg = job.client)
       mgr.scrapeOnce()
       assert(seen("X-multi") == Seq("one", "two") ||
         seen.getOrElse("X-Multi", Nil) == Seq("one", "two"), seen.toString)
@@ -878,12 +878,12 @@ class ServingSpec extends AnyFunSuite {
     })
     proxy.start()
     try {
-      val client = ScrapeManager.buildClient(
+      val client = graft.streaming.Config.HttpClientCfg(
         proxyUrl = s"http://127.0.0.1:${proxy.getAddress.getPort}")
       val store = emptyStore()
       new ScrapeManager(spark, store,
         Seq(ScrapeTarget("http://graft-proxy-test.invalid/metrics", "pj", "p1")),
-        client = client, nowMs = () => 50000L).scrapeOnce()
+        clientCfg = client, nowMs = () => 50000L).scrapeOnce()
       assert(upOf(store) == 1.0)
       val viaProxy = store.samples.collect().find(
         _.getMap[String, String](0)("__name__") == "via_proxy").get
@@ -934,13 +934,13 @@ class ServingSpec extends AnyFunSuite {
       // insecure_skip_verify trusts anything → up=1
       val s1 = emptyStore()
       new ScrapeManager(spark, s1, Seq(ScrapeTarget(url, "tj", "t1")),
-        client = ScrapeManager.buildClient(tlsInsecureSkipVerify = true),
+        clientCfg = graft.streaming.Config.HttpClientCfg(tlsInsecureSkipVerify = true),
         nowMs = () => 50000L).scrapeOnce()
       assert(upOf(s1) == 1.0)
       // ca_file pins the custom CA → up=1 without trusting everything
       val s2 = emptyStore()
       new ScrapeManager(spark, s2, Seq(ScrapeTarget(url, "tj", "t1")),
-        client = ScrapeManager.buildClient(tlsCaFile = caPem),
+        clientCfg = graft.streaming.Config.HttpClientCfg(tlsCaFile = caPem),
         nowMs = () => 50000L).scrapeOnce()
       assert(upOf(s2) == 1.0)
       assert(s2.samples.collect().exists(
@@ -958,7 +958,7 @@ class ServingSpec extends AnyFunSuite {
          |    static_configs:
          |      - targets: ['example.com:443']
          |""".stripMargin, dir.toString)
-    val j = cfg.scrapeJobs.head
+    val j = cfg.scrapeJobs.head.client
     assert(j.proxyUrl == "http://proxy.local:3128")
     assert(j.tlsCaFile == caPem && !j.tlsInsecureSkipVerify)
   }
