@@ -32,9 +32,13 @@ object Bench {
     // optional regex filter for perf iteration, e.g. SPARK_GRAFT_ONLY='lp.*'
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     def keep(name: String): Boolean = only.forall(_.findFirstIn(name).isDefined)
-    // Steady-state timing: run each query once untimed (JVM warmup + the
-    // per-plan Janino codegen compile, 1-4s per unique plan), then time the
-    // second run. The reference's Go benchmarks loop b.N times and report
+    // Steady-state timing: run each query once untimed (JVM warmup and the
+    // Janino compiles of its generated classes, about 12 per gate query),
+    // then time two more runs. A timed run reuses the warm run's classes
+    // only while Spark's codegen cache still holds them (Engine.tunedConf
+    // sizes it to the gate's working set), and a plan whose generated code
+    // inlines a per-run value, such as an evaluation time, compiles again
+    // on every run. The reference's Go benchmarks loop b.N times and report
     // per-iteration steady state — this is the comparable number; cold
     // single-shot timing would mostly measure the JIT, not the plan.
     try {

@@ -28,9 +28,22 @@ object Engine {
     * partitions carrying 30×+ that in generated rows (measured: the
     * histogram_quantile∘rate bench stage ran 20 s of CPU in 13 tasks on 32
     * cores). A small floor keeps amplifying stages at full parallelism;
-    * correctness is unaffected. */
+    * correctness is unaffected.
+    *
+    * Spark keeps the classes it generates in one JVM-wide LRU cache of
+    * `spark.sql.codegen.cache.maxEntries` classes (default 100). One pass
+    * of the 79-query gate generates about 940 distinct classes, so at the
+    * default every warm pass recompiled most of them (about 1450 Janino
+    * compiles and 102-122 s of CPU per pass, sf0.01 on 4 cores); at 2000,
+    * about twice that working set, a warm pass compiles 10-44 classes and
+    * takes 70-89 s, for about 30 MiB more heap after the pass. Recording and
+    * alerting rules re-run the same plans every tick, so the same holds for
+    * serving. It is a STATIC conf: Spark reads it once per JVM, when code is
+    * first generated, so it only takes effect if it is set before the first
+    * session runs a query. */
   val tunedConf: Map[String, String] = Map(
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k") ++
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+    "spark.sql.codegen.cache.maxEntries" -> "2000") ++
     // ad-hoc A/B overrides, e.g. SPARK_GRAFT_CONF='spark.sql.adaptive.enabled=false;k=v'
     sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';')).flatMap { kv =>
       kv.split("=", 2) match { case Array(k, v) => Some(k.trim -> v.trim); case _ => None }

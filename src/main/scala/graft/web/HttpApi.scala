@@ -2,6 +2,7 @@ package graft.web
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.promql._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -784,7 +785,14 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         ("prometheus_engine_query_samples_read_total",
           "Total count of samples read by queries.",
           "counter", Seq(Map.empty[String, String] ->
-            graft.promql.Engine.samplesReadTotal.get().toDouble)))
+            graft.promql.Engine.samplesReadTotal.get().toDouble)),
+        // Janino compiles of generated classes in this JVM: under a steady
+        // query mix it stays flat once the codegen cache holds the working
+        // set (see Engine.tunedConf)
+        ("graft_codegen_compilations_total",
+          "Total count of classes compiled by Spark's code generator.",
+          "counter", Seq(Map.empty[String, String] ->
+            CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toDouble)))
     }
 
     server.createContext("/metrics", handler { ex =>

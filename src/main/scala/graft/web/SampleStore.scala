@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{Metadata, StructType}
 import org.apache.spark.unsafe.Platform
@@ -40,8 +42,9 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
 
   final case class Tombstone(matchers: List[LabelMatcher], minT: Long, maxT: Long)
 
-  /** what a read sees: the constructor's frame (until [[cleanTombstones]]
-    * seals it), the sealed chunks in append order, and the tombstones */
+  /** what a read sees: the constructor's frame (unless it is provably
+    * empty, and until [[cleanTombstones]] seals it), the sealed chunks in
+    * append order, and the tombstones */
   private case class State(head: Option[DataFrame], chunks: Vector[Chunk],
       tombs: List[Tombstone])
 
@@ -49,9 +52,13 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   // the chunks hold the six canonical columns, so samples derives the same
   // columns over the chunk scan once
   private val sinkCols = Seq("__sg", "metric").filter(initial.columns.contains)
-  private val headHas = Optional.filter(initial.columns.contains)
+  // a provably empty constructor frame (the server's) is no head: its full
+  // schema would count h/stt as present, and the planner would keep the
+  // histogram and start-timestamp legs over a float-only store
+  private val head = Some(initial).filterNot(provablyEmpty)
+  private val headHas = head.fold(Set.empty[String])(h => Optional.filter(h.columns.contains))
 
-  @volatile private var state = State(Some(Engine.canonical(initial)), Vector.empty, Nil)
+  @volatile private var state = State(head.map(Engine.canonical), Vector.empty, Nil)
 
   private def matcherCond(m: LabelMatcher): org.apache.spark.sql.Column = {
     val c = coalesce(element_at(col("labels"), m.name), lit(""))
@@ -257,6 +264,19 @@ object SampleStore {
   private val NumFields = Engine.samplesSchema.size
   private val H = Engine.samplesSchema.fieldIndex("h")
   private val Stt = Engine.samplesSchema.fieldIndex("stt")
+
+  /** whether a frame has no rows, read off its plan without running a job:
+    * projections and filters over an empty local relation or over an RDD
+    * with no partitions */
+  private def provablyEmpty(df: DataFrame): Boolean = {
+    def empty(p: LogicalPlan): Boolean = p match {
+      case l: LocalRelation => l.data.isEmpty
+      case r: LogicalRDD => r.rdd.partitions.isEmpty
+      case _: Project | _: Filter => empty(p.children.head)
+      case _ => false
+    }
+    empty(df.queryExecution.analyzed)
+  }
 
   /** one job: the batch's partitions, each sealed into one chunk */
   private def seal(batch: DataFrame): Seq[Chunk] = {

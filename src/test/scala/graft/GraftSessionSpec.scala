@@ -20,6 +20,12 @@ class GraftSessionSpec extends AnyFunSuite {
     graft.promql.Engine.tunedConf.foreach { case (k, v) => assert(c.get(k) == v, k) }
   }
 
+  test("the codegen cache holds the full gate's working set") {
+    // measured: a first pass of the 79 gate queries (sf0.01) compiles 942 classes
+    val entries = GraftSession.conf().get("spark.sql.codegen.cache.maxEntries").toInt
+    assert(entries >= 942, entries)
+  }
+
   test("a deployment's master string keeps every other setting") {
     val c = GraftSession.conf("spark://host:7077")
     assert(c.get("spark.master") == "spark://host:7077")

@@ -407,6 +407,21 @@ class HttpApiSpec extends AnyFunSuite {
     } finally api.stop()
   }
 
+  test("/metrics counts codegen compilations, and a query never lowers the count") {
+    withApi { (port, _) =>
+      def compiles(): Double = {
+        val (c, b) = get(port, "/metrics")
+        assert(c == 200 && b.contains("# TYPE graft_codegen_compilations_total counter"), b.take(400))
+        b.linesIterator.find(_.startsWith("graft_codegen_compilations_total "))
+          .get.split(" ").last.toDouble
+      }
+      val before = compiles()
+      val (c, b) = get(port, "/api/v1/query?query=sum(rate(http_requests_total%5B2m%5D))&time=600")
+      assert(c == 200, b)
+      assert(compiles() >= before)
+    }
+  }
+
   test("federation attaches external labels; series labels win conflicts") {
     val api = new HttpApi(spark, fixtureStore(), 0, () => 600000L)
     api.externalLabels = Map("site" -> "eu1", "job" -> "xjob")

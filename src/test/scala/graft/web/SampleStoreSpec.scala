@@ -1,7 +1,9 @@
 package graft.web
 
 import graft.promql._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.functions.{col, element_at, lit, raise_error}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -132,6 +134,40 @@ class SampleStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.appendRows(Seq(
       Row(Map("__name__" -> "m", "job" -> "c", "inst" -> "0"), evalMs, 1.0, false, null, 0L)))
     assert(answer(store.samples, "count(m)") == Seq((Nil, evalMs, 7.0).toString))
+  }
+
+  test("over a provably empty frame, float appends leave h and stt store-absent") {
+    def absent(store: SampleStore, c: String) = store.samples.schema(c).metadata == Engine.storeAbsent
+    def unions(store: SampleStore) =
+      store.samples.queryExecution.logical.collect { case u: Union => u }.size
+    val h = FHist(0, 0.0, 0.0, 4.0, 10.0, Seq(0, 1), Seq(1.0, 3.0), Nil, Nil, Nil, 0)
+    val nh = RemoteWrite.Sample(Map("__name__" -> "nh"), evalMs, 0.0, h = Some(h)).toRow
+    // the server's empty frame (an RDD without partitions) and a local one
+    Seq(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Engine.samplesSchema),
+        spark.createDataFrame(java.util.Collections.emptyList[Row], Engine.samplesSchema))
+      .foreach { empty =>
+        val store = new SampleStore(spark, empty)
+        store.appendRows(rows.take(200))
+        store.append(frame(rows.drop(200)))
+        assert(absent(store, "h") && absent(store, "stt"))
+        assert(unions(store) == 0)
+        sameAnswers(store, rows)
+        store.appendRows(Seq(nh))
+        assert(!absent(store, "h") && absent(store, "stt"))
+        assert(answer(store.samples, "histogram_count(nh)") == Seq((Nil, evalMs, 4.0).toString))
+      }
+  }
+
+  test("re-evaluating a query at the same time compiles no class") {
+    val store = new SampleStore(spark, frame(rows.take(100)))
+    store.appendRows(rows.drop(100))
+    def compiles(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val counts = (1 to 3).map(_ => compiles(answer(store.samples, "sum(count_over_time(m[5m]))")))
+    assert(counts.tail == Seq(0L, 0L), counts)
   }
 
   test("native histograms appended to a float-only base are visible") {
