@@ -28,7 +28,28 @@ object MatchOp {
   case object Re extends MatchOp      // =~  (fully anchored)
   case object NotRe extends MatchOp   // !~
 }
-final case class LabelMatcher(name: String, op: MatchOp, value: String)
+final case class LabelMatcher(name: String, op: MatchOp, value: String) {
+  /** does a label value (absent = "") satisfy this matcher, outside any
+    * DataFrame; regexes are fully anchored */
+  def matches(v: String): Boolean = op match {
+    case MatchOp.Eq => v == value
+    case MatchOp.Neq => v != value
+    case MatchOp.Re => java.util.regex.Pattern.matches("(?:" + value + ")", v)
+    case MatchOp.NotRe => !java.util.regex.Pattern.matches("(?:" + value + ")", v)
+  }
+
+  /** the same test as a Spark predicate over a `labels` map column */
+  def cond(labels: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{coalesce, element_at, lit}
+    val c = coalesce(element_at(labels, name), lit(""))
+    op match {
+      case MatchOp.Eq => c === value
+      case MatchOp.Neq => c =!= value
+      case MatchOp.Re => c.rlike("^(?:" + value + ")$")
+      case MatchOp.NotRe => !c.rlike("^(?:" + value + ")$")
+    }
+  }
+}
 
 /** `@` modifier target (ref: promql/parser/ast.go AtModifier). */
 sealed trait AtModifier

@@ -377,37 +377,21 @@ object CallEval {
       else if (nameMs.nonEmpty) LabelMatcher("__name__", MatchOp.Re, ".+_info") :: nameMs
       else List(LabelMatcher("__name__", MatchOp.Eq, "target_info"))
 
-    def matches(m: LabelMatcher, v: String): Boolean = m.op match {
-      case MatchOp.Eq => v == m.value
-      case MatchOp.Neq => v != m.value
-      case MatchOp.Re => java.util.regex.Pattern.matches("(?:" + m.value + ")", v)
-      case MatchOp.NotRe => !java.util.regex.Pattern.matches("(?:" + m.value + ")", v)
-    }
     // does an absent info match still satisfy every data matcher?
-    val emptyOk = dataMs.forall(m => matches(m, ""))
-
-    def matcherCond(labels: Column, m: LabelMatcher): Column = {
-      val v = coalesce(element_at(labels, m.name), lit(""))
-      m.op match {
-        case MatchOp.Eq => v === m.value
-        case MatchOp.Neq => v =!= m.value
-        case MatchOp.Re => v.rlike("^(?:" + m.value + ")$")
-        case MatchOp.NotRe => !v.rlike("^(?:" + m.value + ")$")
-      }
-    }
+    val emptyOk = dataMs.forall(_.matches(""))
 
     val ids = Seq("instance", "job")
     def idCol(labels: Column, l: String): Column = coalesce(element_at(labels, l), lit(""))
 
     // base series that ARE info series pass through unchanged (info.go:61)
-    val isInfoSeries = effNameMs.map(m => matcherCond(col("labels"), m)).reduce(_ && _)
+    val isInfoSeries = effNameMs.map(_.cond(col("labels"))).reduce(_ && _)
     val passThrough = base.filter(isInfoSeries)
     val toEnrich = base.filter(!isInfoSeries)
 
     // info side: instant selection, data matchers applied, deduped per
     // (identifying labels, step)
     val infoRaw = pl.instantSelect(VectorSelector(None, effNameMs))
-    val infoOk = dataMs.foldLeft(infoRaw)((df, m) => df.filter(matcherCond(col("labels"), m)))
+    val infoOk = dataMs.foldLeft(infoRaw)((df, m) => df.filter(m.cond(col("labels"))))
     // info samples must be floats (ref: info.go:384) — lazy runtime error
     // embedded in the label dataflow so it fires iff the sample is selected
     val iLabelsChecked =

@@ -3,15 +3,28 @@ package graft.streaming
 import graft.promqltest.YamlLite
 import graft.promqltest.YamlLite.{YList, YMap, YNode, YScalar}
 
-/** prometheus.yml configuration loader (ref: config/config.go) — the subset
+/** prometheus.yml and rule-file loader (ref: config/config.go LoadFile,
+  * model/rulefmt/rulefmt.go ParseFile) — the one reader of both files: the
+  * server's load and reload, CheckSd and promtool's `check config` /
+  * `check rules` ([[ConfigCheck]]) all go through [[parse]] and
+  * [[loadRuleGroups]].
+  *
+  * Validation follows the reference's strict unmarshal plus each section's
+  * Validate: unknown fields, per-provider SD required fields and enums,
+  * remote_write/remote_read shapes, scrape timeout vs interval and
+  * duplicate job names are errors. One parse collects every error and
+  * throws one [[ConfigError]] that names them all. The model is the subset
   * this engine acts on: global intervals + external labels, rule_files
-  * (glob-expanded), scrape_configs (static + file SD targets, paths/schemes,
-  * relabel chains), remote_write/remote_read URLs, alertmanager targets.
-  * Unknown fields are intentionally IGNORED (auth/TLS/SD mechanisms outside
-  * the engine's scope) — `load` is lenient where promtool's checker is
-  * strict, because its job is to boot the stack from an existing config, not
-  * to lint it. */
+  * (glob-expanded), scrape_configs (static + SD targets, paths/schemes,
+  * relabel chains, HTTP client config), remote_write/remote_read entries,
+  * alertmanager groups and the otlp receiver. */
 object Config {
+
+  /** every error one read of a config or rule file found, in file order */
+  final class ConfigError(val errors: Seq[String])
+      extends IllegalArgumentException(errors.mkString("\n"))
+
+  private type Errs = scala.collection.mutable.ArrayBuffer[String]
 
   final case class ScrapeJob(
       jobName: String,
@@ -210,42 +223,170 @@ object Config {
       // contents per name, in that order
       headers: Map[String, Seq[String]] = Map.empty)
 
-  /** the one HTTP client config parser; relative *_file paths resolve
-    * against `base` */
+  private val topLevelFields = Set(
+    "global", "runtime", "rule_files", "scrape_config_files", "scrape_configs",
+    "alerting", "remote_write", "remote_read", "storage", "tracing", "otlp")
+
+  private val globalFields = Set(
+    "scrape_interval", "scrape_timeout", "scrape_protocols",
+    "evaluation_interval", "rule_query_offset", "query_log_file",
+    "scrape_failure_log_file", "external_labels", "body_size_limit",
+    "sample_limit", "label_limit", "label_name_length_limit",
+    "label_value_length_limit", "target_limit", "keep_dropped_targets",
+    "metric_name_validation_scheme", "metric_name_escaping_scheme",
+    "always_scrape_classic_histograms", "convert_classic_histograms_to_nhcb",
+    "scrape_native_histograms")
+
+  // ref: common HTTPClientConfig yaml tags, inlined into every section
+  // that sends HTTP requests
+  private val httpClientFields = Set(
+    "basic_auth", "authorization", "oauth2", "bearer_token",
+    "bearer_token_file", "tls_config", "proxy_url", "no_proxy",
+    "proxy_from_environment", "proxy_connect_header", "follow_redirects",
+    "enable_http2", "http_headers")
+
+  private val scrapeFields = Set(
+    "job_name", "scrape_interval", "scrape_timeout", "scrape_protocols",
+    "scrape_failure_log_file",
+    "metrics_path", "scheme", "honor_labels", "honor_timestamps",
+    "track_timestamps_staleness", "params",
+    "relabel_configs", "metric_relabel_configs", "body_size_limit",
+    "sample_limit", "label_limit", "label_name_length_limit",
+    "label_value_length_limit", "target_limit", "keep_dropped_targets",
+    "native_histogram_bucket_limit", "native_histogram_min_bucket_factor",
+    "always_scrape_classic_histograms", "convert_classic_histograms_to_nhcb",
+    "scrape_native_histograms", "fallback_scrape_protocol",
+    "enable_compression", "static_configs", "metric_name_validation_scheme",
+    "metric_name_escaping_scheme") ++ httpClientFields
+
+  // ref: config/config.go:1330 AlertmanagerConfig yaml fields
+  private val alertmanagerFields = Set(
+    "timeout", "api_version", "path_prefix", "scheme", "static_configs",
+    "relabel_configs", "alert_relabel_configs", "sigv4") ++ httpClientFields
+
+  // ref: config.go:1482 RemoteWriteConfig / :1679 RemoteReadConfig yaml tags
+  private val remoteWriteFields = Set(
+    "url", "remote_timeout", "headers", "write_relabel_configs", "name",
+    "send_exemplars", "send_native_histograms", "round_robin_dns",
+    "protobuf_message", "failed_request_logging", "queue_config",
+    "metadata_config", "sigv4", "azuread", "google_iam") ++ httpClientFields
+  private val remoteReadFields = Set(
+    "url", "remote_timeout", "chunked_read_limit", "headers",
+    "read_recent", "name", "required_matchers",
+    "filter_external_labels") ++ httpClientFields
+
+  // ref: common HTTPClientConfig OAuth2 yaml tags (configuration.md:3034)
+  private val oauth2Fields = Set(
+    "client_id", "client_secret", "client_secret_file", "grant_type",
+    "client_certificate_key", "client_certificate_key_file",
+    "client_certificate_key_id", "signature_algorithm", "iss", "audience",
+    "claims", "scopes", "token_url", "endpoint_params", "tls_config",
+    "proxy_url", "no_proxy", "proxy_from_environment", "proxy_connect_header")
+
+  // custom headers must not shadow the protocol's own (ref: config.go
+  // reservedHeaders + common Headers.Validate)
+  private val reservedHeaders = Set("authorization", "host", "content-encoding",
+    "content-length", "content-type", "user-agent", "connection",
+    "keep-alive", "proxy-authenticate", "proxy-authorization",
+    "www-authenticate", "accept-encoding",
+    "x-prometheus-remote-write-version", "x-prometheus-remote-read-version",
+    "x-amz-date", "x-amz-security-token", "x-amz-content-sha256",
+    // JDK HttpRequest.Builder refuses these outright — accepting them at
+    // config time would surface as per-batch send failures instead of a
+    // load error (java.net.http restricted header set)
+    "expect", "upgrade", "trailer", "transfer-encoding", "te")
+
+  /** a field outside `known` is an error, as under the reference's
+    * yaml.UnmarshalStrict; with `sd`, every `*_sd_configs` key passes
+    * (unimplemented providers' options are not re-validated). `where`
+    * names the section; empty at the top level. */
+  private def unknownKeys(m: YMap, known: Set[String], where: String,
+      errs: Errs, sd: Boolean = false): Unit =
+    m.keys.filterNot(k => known(k) || sd && k.endsWith("_sd_configs"))
+      .foreach(k => errs += (if (where.isEmpty) "" else s"$where: ") +
+        s"field $k not found in type config")
+
+  /** the one HTTP client config parser and validator (ref: common
+    * HTTPClientConfig Validate); relative *_file paths resolve against
+    * `base`, and `where` names the section in error messages */
   private def clientCfgOf(m: YMap, base: java.nio.file.Path,
-      http2Default: Boolean): HttpClientCfg = HttpClientCfg(
-    followRedirects = !m.str("follow_redirects").contains("false"),
-    enableHttp2 = m.str("enable_http2") match {
-      case Some("true") => true
-      case Some("false") => false
-      case _ => http2Default
-    },
-    tlsCaFile = m.get("tls_config") match {
-      case Some(tc: YMap) =>
-        val f = tc.str("ca_file").filter(_.nonEmpty).getOrElse("")
-        if (f.nonEmpty) base.resolve(f).toString else ""
-      case _ => ""
-    },
-    tlsInsecureSkipVerify = m.get("tls_config") match {
-      case Some(tc: YMap) => tc.str("insecure_skip_verify").contains("true")
-      case _ => false
-    },
-    proxyUrl = m.str("proxy_url").filter(_.nonEmpty).getOrElse(""),
-    noProxy = m.str("no_proxy").filter(_.nonEmpty).getOrElse(""),
-    proxyFromEnvironment = m.str("proxy_from_environment").contains("true"),
-    authHeader = authHeaderOf(m, base),
-    oauth2 = m.get("oauth2").collect { case o: YMap => oauth2Of(o, base) },
-    headers = httpHeadersOf(m, base))
+      http2Default: Boolean, where: String, errs: Errs): HttpClientCfg = {
+    val oauth2 = m.get("oauth2").collect { case o: YMap =>
+      unknownKeys(o, oauth2Fields, s"$where oauth2", errs)
+      oauth2Of(o, base)
+    }
+    oauth2.foreach(graft.web.OAuth2.validate(_).foreach(e => errs += s"$where: $e"))
+    // proxy_connect_header: valid upstream (headers on the CONNECT to the
+    // proxy) but the JDK HTTP client cannot set CONNECT headers — rejected
+    // at load instead of silently dropped
+    if (m.get("proxy_connect_header").isDefined)
+      errs += s"$where: proxy_connect_header is not supported by this engine"
+    m.get("http_headers").collect { case h: YMap => h.entries }.getOrElse(Nil)
+      .foreach { case (name, spec) =>
+        if (reservedHeaders(name.toLowerCase))
+          errs += s"""$where: setting header "$name" is not allowed"""
+        spec match {
+          case sm: YMap => unknownKeys(sm, Set("values", "secrets", "files"),
+            s"$where http_headers $name", errs)
+          case _ => ()
+        }
+      }
+    HttpClientCfg(
+      followRedirects = !m.str("follow_redirects").contains("false"),
+      enableHttp2 = m.str("enable_http2") match {
+        case Some("true") => true
+        case Some("false") => false
+        case _ => http2Default
+      },
+      tlsCaFile = m.get("tls_config") match {
+        case Some(tc: YMap) =>
+          val f = tc.str("ca_file").filter(_.nonEmpty).getOrElse("")
+          if (f.nonEmpty) base.resolve(f).toString else ""
+        case _ => ""
+      },
+      tlsInsecureSkipVerify = m.get("tls_config") match {
+        case Some(tc: YMap) => tc.str("insecure_skip_verify").contains("true")
+        case _ => false
+      },
+      proxyUrl = m.str("proxy_url").filter(_.nonEmpty).getOrElse(""),
+      noProxy = m.str("no_proxy").filter(_.nonEmpty).getOrElse(""),
+      proxyFromEnvironment = m.str("proxy_from_environment").contains("true"),
+      authHeader = authHeaderOf(m, base),
+      oauth2 = oauth2,
+      headers = httpHeadersOf(m, base))
+  }
 
   /** a remote_write/remote_read entry's client config: the legacy
-    * `headers:` map goes ahead of the http_headers values of a name */
+    * `headers:` map goes ahead of the http_headers values of a name, and
+    * must not set a reserved header (ref config.go validateHeaders) */
   private def remoteClientCfgOf(m: YMap, base: java.nio.file.Path,
-      http2Default: Boolean): HttpClientCfg = {
-    val c = clientCfgOf(m, base, http2Default)
+      http2Default: Boolean, section: String, errs: Errs): HttpClientCfg = {
+    val c = clientCfgOf(m, base, http2Default, section, errs)
     val legacy = kv(m.get("headers")).map { case (k, v) => k -> Seq(v) }
+    legacy.keys.foreach { k =>
+      // authorization gets its own message pointing at the auth shapes
+      if (k.equalsIgnoreCase("authorization"))
+        errs += s"$section: authorization header must be changed via the " +
+          "basic_auth, authorization, oauth2, sigv4, azuread or google_iam parameter"
+      else if (reservedHeaders(k.toLowerCase))
+        errs += s"$section: $k is a reserved header. It must not be changed"
+    }
     c.copy(headers = legacy ++ c.headers.map { case (k, vs) =>
       k -> (legacy.getOrElse(k, Nil) ++ vs) })
   }
+
+  /** the auth shapes an entry configures, in the reference's order (ref
+    * config.go:1559 validateAuthConfigs; bearer_token* is the legacy
+    * spelling of `authorization`) */
+  private def authShapes(m: YMap): Seq[String] = Seq(
+    "basic_auth" -> m.get("basic_auth").isDefined,
+    "authorization" -> (m.get("authorization").isDefined ||
+      m.str("bearer_token").exists(_.nonEmpty) ||
+      m.str("bearer_token_file").exists(_.nonEmpty)),
+    "oauth2" -> m.get("oauth2").isDefined,
+    "sigv4" -> m.get("sigv4").isDefined,
+    "azuread" -> m.get("azuread").isDefined,
+    "google_iam" -> m.get("google_iam").isDefined).collect { case (n, true) => n }
 
   /** sigv4 block (ref: the prometheus/sigv4 library's SigV4Config as
     * documented at configuration.md:3715; access/secret keys, named
@@ -324,37 +465,39 @@ object Config {
     }
   }
 
-  /** azuread block → [[graft.web.AzureAd.Config]] (ref azuread.go
-    * AzureADConfig; validation lives in ConfigCheck — load stays lenient) */
-  private def azureAdOf(m: YMap): Option[graft.web.AzureAd.Config] =
-    m.get("azuread") match {
-      case Some(az: YMap) =>
-        import graft.web.AzureAd
-        Some(AzureAd.Config(
-          cloud = str(az, "cloud", AzureAd.AzurePublic),
-          scope = str(az, "scope"),
-          managedIdentity = az.get("managed_identity").collect { case mi: YMap =>
-            AzureAd.ManagedIdentity(str(mi, "client_id")) },
-          workloadIdentity = az.get("workload_identity").collect { case wi: YMap =>
-            AzureAd.WorkloadIdentity(str(wi, "client_id"), str(wi, "tenant_id"),
-              str(wi, "token_file_path")) },
-          oauth = az.get("oauth").collect { case o: YMap =>
-            AzureAd.OAuth(str(o, "client_id"), str(o, "client_secret"),
-              str(o, "tenant_id")) },
-          sdk = az.get("sdk").collect { case s: YMap =>
-            AzureAd.Sdk(str(s, "tenant_id")) },
-          certificate = az.get("certificate").collect { case c: YMap =>
-            AzureAd.Certificate(str(c, "client_id"), str(c, "tenant_id"),
-              str(c, "certificate_path"), str(c, "certificate_key_path"),
-              str(c, "certificate_password"),
-              c.str("send_certificate_chain").contains("true")) }))
-      case _ => None
+  /** azuread block → [[graft.web.AzureAd.Config]], validated (ref
+    * azuread.go AzureADConfig + Validate) */
+  private def azureAdOf(m: YMap, section: String, errs: Errs)
+      : Option[graft.web.AzureAd.Config] = {
+    import graft.web.AzureAd
+    val cfg = m.get("azuread").collect { case az: YMap =>
+      AzureAd.Config(
+        cloud = str(az, "cloud", AzureAd.AzurePublic),
+        scope = str(az, "scope"),
+        managedIdentity = az.get("managed_identity").collect { case mi: YMap =>
+          AzureAd.ManagedIdentity(str(mi, "client_id")) },
+        workloadIdentity = az.get("workload_identity").collect { case wi: YMap =>
+          AzureAd.WorkloadIdentity(str(wi, "client_id"), str(wi, "tenant_id"),
+            str(wi, "token_file_path")) },
+        oauth = az.get("oauth").collect { case o: YMap =>
+          AzureAd.OAuth(str(o, "client_id"), str(o, "client_secret"),
+            str(o, "tenant_id")) },
+        sdk = az.get("sdk").collect { case s: YMap =>
+          AzureAd.Sdk(str(s, "tenant_id")) },
+        certificate = az.get("certificate").collect { case c: YMap =>
+          AzureAd.Certificate(str(c, "client_id"), str(c, "tenant_id"),
+            str(c, "certificate_path"), str(c, "certificate_key_path"),
+            str(c, "certificate_password"),
+            c.str("send_certificate_chain").contains("true")) })
     }
+    cfg.foreach(AzureAd.validate(_).foreach(e => errs += s"$section: $e"))
+    cfg
+  }
 
   /** oauth2 block → [[graft.web.OAuth2.Config]] (ref configuration.md:706
     * <oauth2>; *_file paths resolve against `base`, so a resolved path is
-    * non-empty exactly when the raw one is — the checker relies on that) */
-  private[streaming] def oauth2Of(o: YMap, base: java.nio.file.Path)
+    * non-empty exactly when the raw one is — validation relies on that) */
+  private def oauth2Of(o: YMap, base: java.nio.file.Path)
       : graft.web.OAuth2.Config = {
     def resolved(k: String): String = {
       val f = str(o, k)
@@ -397,37 +540,69 @@ object Config {
       case _ => Map.empty
     }
 
-  /** sigv4 block → [[SigV4Cfg]]; `sigv4: {}` (the documented "use the
-    * default AWS credential chain" shape) yields the all-defaults config */
-  private def sigv4Of(m: YMap): Option[SigV4Cfg] =
-    m.get("sigv4") match {
-      case Some(s4: YMap) => Some(SigV4Cfg(
-        region = str(s4, "region"),
-        accessKey = str(s4, "access_key"),
-        secretKey = str(s4, "secret_key"),
-        profile = str(s4, "profile"),
-        roleArn = str(s4, "role_arn"),
-        externalId = str(s4, "external_id"),
-        useFipsStsEndpoint = s4.str("use_fips_sts_endpoint").contains("true")))
+  /** sigv4 block → [[SigV4Cfg]], validated (ref: the prometheus/sigv4
+    * library's Validate); `sigv4: {}` (the documented "use the default AWS
+    * credential chain" shape) yields the all-defaults config */
+  private def sigv4Of(m: YMap, section: String, errs: Errs): Option[SigV4Cfg] = {
+    val cfg = m.get("sigv4") match {
+      case Some(s4: YMap) =>
+        unknownKeys(s4, Set("region", "access_key", "secret_key", "profile",
+          "role_arn", "external_id", "use_fips_sts_endpoint"), s"$section sigv4", errs)
+        Some(SigV4Cfg(
+          region = str(s4, "region"),
+          accessKey = str(s4, "access_key"),
+          secretKey = str(s4, "secret_key"),
+          profile = str(s4, "profile"),
+          roleArn = str(s4, "role_arn"),
+          externalId = str(s4, "external_id"),
+          useFipsStsEndpoint = s4.str("use_fips_sts_endpoint").contains("true")))
       case Some(YScalar(s)) if s.trim.isEmpty => Some(SigV4Cfg())
       case _ => None
     }
+    cfg.foreach { c =>
+      if (c.accessKey.nonEmpty != c.secretKey.nonEmpty)
+        errs += s"$section: must provide a AWS SigV4 Access key and Secret Key " +
+          "if credentials are specified in the SigV4 config"
+      if (c.externalId.nonEmpty && c.roleArn.isEmpty)
+        errs += s"$section: sigv4 external_id can only be used with role_arn"
+    }
+    cfg
+  }
 
-  /** queue_config block → [[QueueCfg]] with the reference's defaults */
-  private def queueOf(m: YMap): QueueCfg = m.get("queue_config") match {
-    case Some(q: YMap) => QueueCfg(
-      capacity = q.str("capacity").map(_.trim.toInt).getOrElse(10000),
-      maxShards = q.str("max_shards").map(_.trim.toInt).getOrElse(50),
-      minShards = q.str("min_shards").map(_.trim.toInt).getOrElse(1),
-      maxSamplesPerSend =
-        q.str("max_samples_per_send").map(_.trim.toInt).getOrElse(2000),
-      batchSendDeadlineMs =
-        q.str("batch_send_deadline").map(durMs).getOrElse(5000L),
-      minBackoffMs = q.str("min_backoff").map(durMs).getOrElse(30L),
-      maxBackoffMs = q.str("max_backoff").map(durMs).getOrElse(5000L),
-      retryOnHttp429 = q.str("retry_on_http_429").contains("true"),
-      sampleAgeLimitMs = q.str("sample_age_limit").map(durMs).getOrElse(0L))
-    case _ => QueueCfg()
+  /** queue_config block → [[QueueCfg]] with the reference's defaults,
+    * validated (ref config.go:1639 QueueConfig.Validate) */
+  private def queueOf(m: YMap, section: String, errs: Errs): QueueCfg = {
+    val q = m.get("queue_config") match {
+      case Some(q: YMap) =>
+        unknownKeys(q, Set("capacity", "max_shards", "min_shards",
+          "max_samples_per_send", "batch_send_deadline", "min_backoff",
+          "max_backoff", "retry_on_http_429", "sample_age_limit"),
+          s"$section queue_config", errs)
+        QueueCfg(
+          capacity = q.str("capacity").map(_.trim.toInt).getOrElse(10000),
+          maxShards = q.str("max_shards").map(_.trim.toInt).getOrElse(50),
+          minShards = q.str("min_shards").map(_.trim.toInt).getOrElse(1),
+          maxSamplesPerSend =
+            q.str("max_samples_per_send").map(_.trim.toInt).getOrElse(2000),
+          batchSendDeadlineMs =
+            q.str("batch_send_deadline").map(durMs).getOrElse(5000L),
+          minBackoffMs = q.str("min_backoff").map(durMs).getOrElse(30L),
+          maxBackoffMs = q.str("max_backoff").map(durMs).getOrElse(5000L),
+          retryOnHttp429 = q.str("retry_on_http_429").contains("true"),
+          sampleAgeLimitMs = q.str("sample_age_limit").map(durMs).getOrElse(0L))
+      case _ => QueueCfg()
+    }
+    def positive(v: Int, k: String): Unit =
+      if (v <= 0) errs += s"$section: remote write queue $k must be positive"
+    positive(q.maxShards, "max_shards")
+    positive(q.minShards, "min_shards")
+    if (q.minShards > q.maxShards && q.maxShards > 0)
+      errs += s"$section: remote write queue min_shards must not be greater than max_shards"
+    positive(q.maxSamplesPerSend, "max_samples_per_send")
+    positive(q.capacity, "capacity")
+    if (q.maxBackoffMs < q.minBackoffMs)
+      errs += s"$section: remote write queue max_backoff must not be less than min_backoff"
+    q
   }
 
   private def durMs(s: String): Long = graft.promqltest.TestScript.parseTime(s)
@@ -489,11 +664,10 @@ object Config {
 
   /** expand a rule_files pattern (globs supported) relative to baseDir;
     * non-matching patterns contribute nothing (the reference warns) */
-  private[streaming] def expandGlob(baseDir: java.nio.file.Path, pattern: String): Seq[String] = {
+  private def expandGlob(baseDir: java.nio.file.Path, pattern: String): Seq[String] = {
     val p = if (pattern.startsWith("/")) pattern else baseDir.resolve(pattern).toString
-    // filepath.Glob metacharacters are * ? and [...] (ref: Go path/filepath
-    // Match) — a pattern like `rules-?.yml` must glob, not literal-match
-    if (!p.exists(c => c == '*' || c == '?' || c == '[')) {
+    // a pattern like `rules-?.yml` must glob, not literal-match
+    if (!isGlob(p)) {
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(p))) Seq(p) else Nil
     } else {
       val dir = java.nio.file.Paths.get(p).getParent
@@ -508,25 +682,78 @@ object Config {
     }
   }
 
-  def parse(text: String, baseDir: String = "."): PromConfig = {
+  private[streaming] def message(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+
+  /** filepath.Glob metacharacters (ref: Go path/filepath Match) */
+  private def isGlob(pattern: String): Boolean =
+    pattern.exists(c => c == '*' || c == '?' || c == '[')
+
+  def parse(text: String, baseDir: String = "."): PromConfig = read(text, baseDir)._1
+
+  /** [[parse]] plus the auth-shape conflicts it tolerates: an entry that
+    * configures more than one of basic_auth / authorization / oauth2 /
+    * sigv4 / azuread / google_iam (ref config.go:1559 validateAuthConfigs,
+    * common HTTPClientConfig Validate). The reference rejects them; here
+    * only `check config` does, because the serving load still has to take
+    * ConfigSpec's shared HTTP client block, which sets basic_auth and
+    * oauth2 together in every section. */
+  def read(text: String, baseDir: String = "."): (PromConfig, Seq[String]) = {
+    val errs = new Errs
+    val conflicts = new Errs
+    val cfg =
+      try Some(build(text, java.nio.file.Paths.get(baseDir), errs, conflicts))
+      catch { case e: Exception => errs += message(e); None }
+    if (errs.nonEmpty) throw new ConfigError(errs.toList)
+    (cfg.get, conflicts.toList)
+  }
+
+  private def build(text: String, base: java.nio.file.Path, errs: Errs,
+      conflicts: Errs): PromConfig = {
     val root = YamlLite.parse(text) match {
       case m: YMap => m
+      case YScalar("") => YMap(Nil) // an empty config is valid
       case other => throw new IllegalArgumentException(s"expected a mapping, got $other")
     }
-    val base = java.nio.file.Paths.get(baseDir)
-    val global = root.get("global") match { case Some(m: YMap) => m; case _ => YMap(Nil) }
-    // defaults ref: config/config.go DefaultGlobalConfig (1m scrape, 1m eval)
+    unknownKeys(root, topLevelFields, "", errs)
+    def section(k: String): YMap = root.get(k) match {
+      case Some(m: YMap) => m
+      case _ => YMap(Nil)
+    }
+    // one entry of a list section: an exception (a malformed number or
+    // duration, an unknown relabel action) becomes one error and the parse
+    // goes on with the next entry
+    def guarded[T](prefix: String)(body: => T): Option[T] =
+      try Some(body) catch { case e: Exception => errs += prefix + message(e); None }
+    // a pattern's matches; a literal path must exist
+    def expand(pattern: String)(missing: => String): Seq[String] = {
+      val fs = expandGlob(base, pattern)
+      if (fs.isEmpty && !isGlob(pattern)) errs += missing
+      fs
+    }
+    val global = section("global")
+    unknownKeys(global, globalFields, "global", errs)
+    // defaults ref: config/config.go DefaultGlobalConfig (1m scrape, 1m
+    // eval, 10s scrape timeout capped at the scrape interval)
     val scrapeMs = global.str("scrape_interval").map(durMs).getOrElse(60000L)
     val evalMs = global.str("evaluation_interval").map(durMs).getOrElse(60000L)
-    // one scrape_config body → ScrapeJob; the alertmanagers groups reuse the
-    // full SD-config surface through the same parser (ref: config/config.go:846
-    // AlertmanagerConfig.ServiceDiscoveryConfigs is the same
-    // discovery.Configs type scrape configs use)
-    def parseScrapeJob(m: YMap, nameDefault: String = "",
+    val scrapeTimeoutMs = global.str("scrape_timeout").map(durMs)
+      .getOrElse(math.min(10000L, scrapeMs))
+    if (scrapeTimeoutMs > scrapeMs)
+      errs += "global scrape timeout greater than scrape interval"
+    // one scrape_config body → ScrapeJob, with each SD provider's required
+    // fields and enums checked (ref: each SDConfig's Validate/UnmarshalYAML);
+    // the alertmanagers groups reuse the full SD-config surface through the
+    // same parser (ref: config/config.go:846 AlertmanagerConfig.
+    // ServiceDiscoveryConfigs is the same discovery.Configs type scrape
+    // configs use). `clientWhere` names the job in HTTP client errors.
+    def parseScrapeJob(m: YMap, name: String, clientWhere: String,
         // files included via scrape_config_files resolve their relative
         // paths against THEIR OWN directory (ref config.go SetDirectory)
         jobBase: java.nio.file.Path = base): ScrapeJob = {
-      val name = { val n = str(m, "job_name"); if (n.nonEmpty) n else nameDefault }
+      val label = if (name.nonEmpty) name else "<no job_name>"
+      def bad(msg: String): Unit = errs += s"""job "$label": $msg"""
+      def need(ok: Boolean, msg: String): Unit = if (!ok) bad(msg)
       val scheme = str(m, "scheme", "http")
       // params ride the metrics path as a query string; relabeling sees
       // them as __param_<name> labels (ref: scrape/target.go URL())
@@ -543,9 +770,11 @@ object Config {
         .mkString("&")
       val path = str(m, "metrics_path", "/metrics") +
         (if (query.nonEmpty) s"?$query" else "")
-      // scrape_timeout: per-job, else global, else the reference default 10s
-      val timeoutMs = m.str("scrape_timeout").orElse(global.str("scrape_timeout"))
-        .map(durMs).getOrElse(10000L)
+      val intervalMs = m.str("scrape_interval").map(durMs).getOrElse(scrapeMs)
+      // scrape_timeout: per-job, else the global one capped at the job's
+      // interval (ref config.go ScrapeConfig.Validate)
+      val timeoutMs = m.str("scrape_timeout").map(durMs)
+        .getOrElse(math.min(scrapeTimeoutMs, intervalMs))
       val statics = m.list("static_configs").collect { case sc: YMap =>
         val lbls = kv(sc.get("labels"))
         strList(sc.get("targets")).map(addr =>
@@ -558,11 +787,17 @@ object Config {
       // dns_sd_configs (ref: discovery/dns/dns.go SDConfig; defaults
       // type=SRV, refresh_interval=30s)
       val dnsSd = m.list("dns_sd_configs").collect { case dc: YMap =>
-        Discovery.DnsSd.Config(
+        val c = Discovery.DnsSd.Config(
           strList(dc.get("names")),
           str(dc, "type", "SRV"),
           dc.str("port").map(_.toInt).getOrElse(0),
           dc.str("refresh_interval").map(durMs).getOrElse(30000L))
+        need(c.names.nonEmpty, "DNS-SD config must contain at least one SRV record name")
+        if (!Set("SRV", "A", "AAAA", "MX", "NS")(c.recordType))
+          bad(s"invalid DNS-SD records type ${c.recordType}")
+        else need(c.recordType == "SRV" || c.port != 0,
+          "relevant DNS-SD configs require a port defined")
+        c
       }
       // http_sd_configs (ref: discovery/http/http.go; default refresh 60s)
       val httpSd = m.list("http_sd_configs").collect { case hc: YMap =>
@@ -571,6 +806,8 @@ object Config {
       }.filter(_._1.nonEmpty)
       // kubernetes_sd_configs (ref: discovery/kubernetes/kubernetes.go
       // SDConfig: role required; api_server empty = in-cluster)
+      val k8sRoles = Set("node", "pod", "service", "endpoints",
+        "endpointslice", "ingress")
       val k8sSd = m.list("kubernetes_sd_configs").collect { case kc: YMap =>
         val (nss, ownNs) = kc.get("namespaces") match {
           case Some(nm: YMap) =>
@@ -590,10 +827,26 @@ object Config {
             cronjob = am.str("cronjob").contains("true"))
           case _ => KubernetesSd.AttachMetadata()
         }
-        KubernetesSd.Config(str(kc, "role"), str(kc, "api_server"), nss,
+        val c = KubernetesSd.Config(str(kc, "role"), str(kc, "api_server"), nss,
           tokenFile, kc.str("refresh_interval").map(durMs).getOrElse(30000L),
           ownNamespace = ownNs, selectors = selectors, attachMetadata = attach)
-      }.filter(_.role.nonEmpty)
+        need(k8sRoles(c.role), s"""role "${c.role}" (must be one of """ +
+          k8sRoles.toSeq.sorted.mkString(", ") + ")")
+        // selectors: one per role, each allowed for the main role (ref:
+        // kubernetes.go UnmarshalYAML allowedSelectors); own_namespace
+        // needs the in-cluster mount
+        val seen = scala.collection.mutable.Set.empty[String]
+        c.selectors.foreach { s =>
+          need(seen.add(s.role), s"duplicated selector role: ${s.role}")
+          KubernetesSd.allowedSelectors.get(c.role).foreach { ok =>
+            need(ok.contains(s.role),
+              s"${c.role} role supports only ${ok.mkString(", ")} selectors")
+          }
+        }
+        need(!(c.ownNamespace && c.apiServer.nonEmpty),
+          "cannot use 'api_server' and 'namespaces.own_namespace' simultaneously")
+        c
+      }
       // consul_sd_configs (ref: discovery/consul/consul.go SDConfig)
       val consulSd = m.list("consul_sd_configs").collect { case cc: YMap =>
         ConsulSd.Config(
@@ -612,6 +865,11 @@ object Config {
           str(cc, "token"),
           cc.str("refresh_interval").map(durMs).getOrElse(30000L))
       }
+      // An omitted EC2/Lightsail region is VALID — the reference resolves
+      // it from the instance metadata at runtime, and promtool's own
+      // corpus pins that (prometheus-aws-sd-empty-region.good.yml). Same
+      // for ecs/rds/msk/elasticache: their UnmarshalYAML defers region
+      // resolution to SD init (ref #19037), so a load makes no network call.
       // ec2_sd_configs (ref: discovery/aws/ec2.go EC2SDConfig)
       val ec2Sd = m.list("ec2_sd_configs").collect { case ec: YMap =>
         Ec2Sd.Config(
@@ -625,10 +883,10 @@ object Config {
           str(ec, "profile"),
           ec.str("refresh_interval").map(durMs).getOrElse(60000L))
       }.filter(_.region.nonEmpty)
-      // ecs_sd_configs (ref: discovery/aws/ecs.go ECSSDConfig; region may be
-      // omitted — resolution deferred to SD init per reference #19037)
+      // ecs_sd_configs (ref: discovery/aws/ecs.go ECSSDConfig);
+      // request_concurrency bounds the provider's API fan-out
       val ecsSd = m.list("ecs_sd_configs").collect { case ec: YMap =>
-        EcsSd.Config(
+        val c = EcsSd.Config(
           str(ec, "region"),
           ec.str("port").map(_.toInt).getOrElse(80),
           str(ec, "access_key"),
@@ -640,11 +898,14 @@ object Config {
           strList(ec.get("clusters")),
           ec.str("request_concurrency").map(_.toInt).getOrElse(20),
           ec.str("refresh_interval").map(durMs).getOrElse(60000L))
+        need(c.requestConcurrency > 0,
+          "ecs_sd: request_concurrency must be a positive integer")
+        c
       }
       // rds_sd_configs (ref: discovery/aws/rds.go RDSSDConfig; `filters`
-      // forward to DescribeDBInstances, reference feature #18859)
+      // forward verbatim to DescribeDBInstances, reference feature #18859)
       val rdsSd = m.list("rds_sd_configs").collect { case rc: YMap =>
-        RdsSd.Config(
+        val c = RdsSd.Config(
           str(rc, "region"),
           rc.str("port").map(_.toInt).getOrElse(80),
           str(rc, "access_key"),
@@ -658,6 +919,11 @@ object Config {
             (str(f, "name"), strList(f.get("values")))
           },
           rc.str("refresh_interval").map(durMs).getOrElse(60000L))
+        c.filters.foreach { case (n, vs) =>
+          need(n.nonEmpty, "rds_sd: filter missing a name")
+          need(vs.nonEmpty, "rds_sd: filter requires at least one value")
+        }
+        c
       }
       // msk_sd_configs (ref: discovery/aws/msk.go MSKSDConfig)
       val mskSd = m.list("msk_sd_configs").collect { case kc: YMap =>
@@ -689,17 +955,20 @@ object Config {
       }
       // gce_sd_configs (ref: discovery/gce/gce.go SDConfig)
       val gceSd = m.list("gce_sd_configs").collect { case gc: YMap =>
-        GceSd.Config(
+        val c = GceSd.Config(
           str(gc, "project"),
           str(gc, "zone"),
           gc.str("port").map(_.toInt).getOrElse(80),
           str(gc, "tag_separator", ","),
           str(gc, "endpoint"),
           gc.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(c => c.project.nonEmpty && c.zone.nonEmpty)
+        need(c.project.nonEmpty, "GCE SD configuration requires a project")
+        need(c.zone.nonEmpty, "GCE SD configuration requires a zone")
+        c
+      }
       // azure_sd_configs (ref: discovery/azure/azure.go SDConfig)
       val azureSd = m.list("azure_sd_configs").collect { case ac: YMap =>
-        AzureSd.Config(
+        val c = AzureSd.Config(
           str(ac, "subscription_id"),
           str(ac, "tenant_id"),
           str(ac, "client_id"),
@@ -707,22 +976,32 @@ object Config {
           ac.str("port").map(_.toInt).getOrElse(80),
           str(ac, "resource_group"),
           ac.str("refresh_interval").map(durMs).getOrElse(300000L))
-      }.filter(_.subscriptionId.nonEmpty)
+        need(c.subscriptionId.nonEmpty,
+          "Azure SD configuration requires a subscription_id")
+        c
+      }
       // docker_sd_configs (ref: discovery/moby/docker.go DockerSDConfig)
+      def hostUrl(host: String): Boolean = host.matches("^(tcp|http|https|unix)://.*")
       val dockerSd = m.list("docker_sd_configs").collect { case dk: YMap =>
-        DockerSd.Config(
+        val c = DockerSd.Config(
           str(dk, "host"),
           dk.str("port").map(_.toInt).getOrElse(80),
           dk.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.host.nonEmpty)
+        if (c.host.isEmpty) bad("Docker SD configuration requires a host")
+        else need(hostUrl(c.host), s"""Docker SD host "${c.host}" must be a url""")
+        c
+      }
       // digitalocean_sd_configs (ref: discovery/digitalocean/digitalocean.go
       // SDConfig; defaults role droplets, port 80, refresh 60s)
       val doSd = m.list("digitalocean_sd_configs").collect { case oc: YMap =>
         val (tok, tokenFile) = sdToken(oc)
-        DigitalOceanSd.Config(
+        val c = DigitalOceanSd.Config(
           str(oc, "role", "droplets"), tok, tokenFile,
           oc.str("port").map(_.toInt).getOrElse(80),
           oc.str("refresh_interval").map(durMs).getOrElse(60000L))
+        need(c.role == "droplets" || c.role == "databases",
+          s"""unknown DigitalOcean SD role "${c.role}"""")
+        c
       }
       // hetzner_sd_configs (ref: discovery/hetzner/hetzner.go SDConfig)
       val hetznerSd = m.list("hetzner_sd_configs").collect { case hz: YMap =>
@@ -731,14 +1010,18 @@ object Config {
           case _ => ("", "")
         }
         val (tok, tokFile) = sdToken(hz)
-        HetznerSd.Config(str(hz, "role"), tok, tokFile, user, pass,
+        val c = HetznerSd.Config(str(hz, "role"), tok, tokFile, user, pass,
           hz.str("port").map(_.toInt).getOrElse(80),
           str(hz, "label_selector"),
           hz.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.role.nonEmpty)
+        if (c.role.isEmpty) bad("role missing (one of: robot, hcloud)")
+        else need(c.role == "robot" || c.role == "hcloud",
+          s"""unknown role "${c.role}" (one of: robot, hcloud)""")
+        c
+      }
       // openstack_sd_configs (ref: discovery/openstack/openstack.go SDConfig)
       val openstackSd = m.list("openstack_sd_configs").collect { case os: YMap =>
-        OpenStackSd.Config(
+        val c = OpenStackSd.Config(
           str(os, "role"), str(os, "region"),
           str(os, "identity_endpoint"),
           str(os, "username"), str(os, "userid"), str(os, "password"),
@@ -751,12 +1034,21 @@ object Config {
           str(os, "availability", "public"),
           os.str("port").map(_.toInt).getOrElse(80),
           os.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.role.nonEmpty)
+        if (c.role.isEmpty)
+          bad("role missing (one of: instance, hypervisor, loadbalancer)")
+        else need(Set("instance", "hypervisor", "loadbalancer")(c.role),
+          s"""unknown OpenStack SD role "${c.role}"""")
+        need(c.region.nonEmpty, "openstack SD configuration requires a region")
+        c
+      }
       // eureka_sd_configs (ref: discovery/eureka/eureka.go SDConfig)
       val eurekaSd = m.list("eureka_sd_configs").collect { case ec: YMap =>
-        EurekaSd.Config(str(ec, "server"),
+        val c = EurekaSd.Config(str(ec, "server"),
           ec.str("refresh_interval").map(durMs).getOrElse(30000L))
-      }.filter(_.server.nonEmpty)
+        if (c.server.isEmpty) bad("empty or null eureka server")
+        else need(c.server.matches("^https?://[^/]+.*"), "invalid eureka server URL")
+        c
+      }
       // nomad_sd_configs (ref: discovery/nomad/nomad.go DefaultSDConfig)
       val nomadSd = m.list("nomad_sd_configs").collect { case nc: YMap =>
         NomadSd.Config(
@@ -769,19 +1061,30 @@ object Config {
       }
       // marathon_sd_configs (ref: discovery/marathon/marathon.go SDConfig)
       val marathonSd = m.list("marathon_sd_configs").collect { case mc: YMap =>
-        MarathonSd.Config(
+        val c = MarathonSd.Config(
           strList(mc.get("servers")),
           str(mc, "auth_token"), str(mc, "auth_token_file"),
           mc.str("refresh_interval").map(durMs).getOrElse(30000L))
-      }.filter(_.servers.nonEmpty)
+        need(c.servers.nonEmpty,
+          "marathon_sd: must contain at least one Marathon server")
+        need(c.authToken.isEmpty || c.authTokenFile.isEmpty,
+          "marathon_sd: at most one of auth_token & auth_token_file must be configured")
+        c
+      }
       // puppetdb_sd_configs (ref: discovery/puppetdb/puppetdb.go SDConfig)
       val puppetdbSd = m.list("puppetdb_sd_configs").collect { case pc: YMap =>
-        PuppetDbSd.Config(
+        val c = PuppetDbSd.Config(
           str(pc, "url"), str(pc, "query"),
           pc.str("include_parameters").contains("true"),
           pc.str("port").map(_.toInt).getOrElse(80),
           pc.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(c => c.url.nonEmpty && c.query.nonEmpty)
+        if (c.url.isEmpty) bad("URL is missing")
+        else if (!c.url.matches("^https?://.*"))
+          bad("URL scheme must be 'http' or 'https'")
+        else need(!c.url.matches("^https?://(/.*)?$"), "host is missing in URL")
+        need(c.query.nonEmpty, "query missing")
+        c
+      }
       // linode_sd_configs (ref: discovery/linode/linode.go SDConfig)
       val linodeSd = m.list("linode_sd_configs").collect { case lc: YMap =>
         val (tok, tokFile) = sdToken(lc)
@@ -799,7 +1102,7 @@ object Config {
       }
       // scaleway_sd_configs (ref: discovery/scaleway/scaleway.go SDConfig)
       val scalewaySd = m.list("scaleway_sd_configs").collect { case sc: YMap =>
-        ScalewaySd.Config(
+        val c = ScalewaySd.Config(
           str(sc, "role"), str(sc, "project_id"),
           str(sc, "secret_key"), str(sc, "secret_key_file"),
           str(sc, "zone", "fr-par-1"),
@@ -807,7 +1110,17 @@ object Config {
           str(sc, "name_filter"), strList(sc.get("tags_filter")),
           str(sc, "api_url", "https://api.scaleway.com"),
           sc.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.role.nonEmpty)
+        if (c.role.isEmpty) bad("role missing (one of: instance, baremetal)")
+        else need(c.role == "instance" || c.role == "baremetal",
+          s"""unknown role "${c.role}"""")
+        need(c.projectId.nonEmpty, "project_id is mandatory")
+        need(c.secretKey.nonEmpty || c.secretKeyFile.nonEmpty,
+          "one of secret_key & secret_key_file must be configured")
+        need(c.secretKey.isEmpty || c.secretKeyFile.isEmpty,
+          "at most one of secret_key & secret_key_file must be configured")
+        need(str(sc, "access_key").nonEmpty, "access_key is mandatory")
+        c
+      }
       // lightsail_sd_configs (ref: discovery/aws/lightsail.go)
       val lightsailSd = m.list("lightsail_sd_configs").collect { case lc: YMap =>
         LightsailSd.Config(str(lc, "region"),
@@ -820,30 +1133,47 @@ object Config {
       }
       // dockerswarm_sd_configs (ref: discovery/moby/dockerswarm.go)
       val dockerswarmSd = m.list("dockerswarm_sd_configs").collect { case dk: YMap =>
-        DockerSwarmSd.Config(
+        val c = DockerSwarmSd.Config(
           str(dk, "host"), str(dk, "role"),
           dk.str("port").map(_.toInt).getOrElse(80),
           dk.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(c => c.host.nonEmpty && c.role.nonEmpty)
+        if (c.host.isEmpty) bad("host missing")
+        else need(hostUrl(c.host), s"""Docker Swarm SD host "${c.host}" must be a url""")
+        need(Set("services", "tasks", "nodes")(c.role),
+          s"invalid role ${c.role}, expected tasks, services, or nodes")
+        c
+      }
       // triton_sd_configs (ref: discovery/triton/triton.go SDConfig)
       val tritonSd = m.list("triton_sd_configs").collect { case tc: YMap =>
-        TritonSd.Config(
+        val c = TritonSd.Config(
           str(tc, "account"), str(tc, "dns_suffix"), str(tc, "endpoint"),
           str(tc, "role", "container"),
           strList(tc.get("groups")),
           tc.str("port").map(_.toInt).getOrElse(9163),
           tc.str("version").map(_.toInt).getOrElse(1),
           tc.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.endpoint.nonEmpty)
+        need(c.role == "container" || c.role == "cn",
+          "triton SD configuration requires role to be 'container' or 'cn'")
+        need(c.account.nonEmpty, "triton SD configuration requires an account")
+        need(c.dnsSuffix.nonEmpty, "triton SD configuration requires a dns_suffix")
+        need(c.endpoint.nonEmpty, "triton SD configuration requires an endpoint")
+        c
+      }
       // ovhcloud_sd_configs (ref: discovery/ovhcloud/ovhcloud.go SDConfig)
       val ovhcloudSd = m.list("ovhcloud_sd_configs").collect { case oc: YMap =>
-        OvhcloudSd.Config(
+        val c = OvhcloudSd.Config(
           str(oc, "service"),
           str(oc, "application_key"), str(oc, "application_secret"),
           str(oc, "consumer_key"),
           str(oc, "endpoint", "ovh-eu"),
           oc.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.service.nonEmpty)
+        need(c.applicationKey.nonEmpty, "application key can not be empty")
+        need(c.applicationSecret.nonEmpty, "application secret can not be empty")
+        need(c.consumerKey.nonEmpty, "consumer key can not be empty")
+        need(c.service == "vps" || c.service == "dedicated_server",
+          s"unknown service: ${c.service}")
+        c
+      }
       // ionos_sd_configs (ref: discovery/ionos/ionos.go SDConfig)
       val ionosSd = m.list("ionos_sd_configs").collect { case ic: YMap =>
         val tok = sdToken(ic, legacy = false)._1
@@ -851,62 +1181,93 @@ object Config {
           case Some(ba: YMap) => (str(ba, "username"), str(ba, "password"))
           case _ => ("", "")
         }
-        IonosSd.Config(str(ic, "datacenter_id"), tok, user, pass,
+        val c = IonosSd.Config(str(ic, "datacenter_id"), tok, user, pass,
           ic.str("port").map(_.toInt).getOrElse(80),
           ic.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.datacenterId.nonEmpty)
+        need(c.datacenterId.nonEmpty, "datacenter id can't be empty")
+        c
+      }
       // stackit_sd_configs (ref: discovery/stackit/stackit.go SDConfig)
       val stackitSd = m.list("stackit_sd_configs").collect { case sk: YMap =>
         val tok = sdToken(sk, legacy = false)._1
-        StackitSd.Config(str(sk, "project"), str(sk, "region"),
+        val c = StackitSd.Config(str(sk, "project"), str(sk, "region"),
           str(sk, "endpoint"), tok,
           sk.str("port").map(_.toInt).getOrElse(80),
           sk.str("refresh_interval").map(durMs).getOrElse(60000L))
+        need(c.endpoint.nonEmpty || c.region.nonEmpty,
+          "stackit_sd: endpoint and region missing")
+        c
       }.filter(_.project.nonEmpty)
       // outscale_sd_configs (ref: discovery/outscale/outscale.go SDConfig)
       val outscaleSd = m.list("outscale_sd_configs").collect { case oc: YMap =>
-        OutscaleSd.Config(str(oc, "region"),
+        val c = OutscaleSd.Config(str(oc, "region"),
           str(oc, "access_key"), str(oc, "secret_key"),
           str(oc, "secret_key_file"), str(oc, "endpoint"),
           oc.str("port").map(_.toInt).getOrElse(80),
           oc.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.region.nonEmpty)
+        need(c.region.nonEmpty, "outscale SD configuration requires a region")
+        need(c.accessKey.nonEmpty, "outscale SD configuration requires access_key")
+        need(c.secretKey.nonEmpty || c.secretKeyFile.nonEmpty,
+          "one of secret_key & secret_key_file must be configured")
+        c
+      }
       // uyuni_sd_configs (ref: discovery/uyuni/uyuni.go SDConfig)
       val uyuniSd = m.list("uyuni_sd_configs").collect { case uc: YMap =>
-        UyuniSd.Config(str(uc, "server"),
+        val c = UyuniSd.Config(str(uc, "server"),
           str(uc, "username"), str(uc, "password"),
           str(uc, "entitlement", "monitoring_entitled"),
           str(uc, "separator", ","),
           uc.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.server.nonEmpty)
-      // oci_sd_configs (ref: discovery/oci/oci.go SDConfig)
+        need(c.server.nonEmpty, "Uyuni SD configuration requires server host")
+        need(c.username.nonEmpty, "Uyuni SD configuration requires a username")
+        need(c.password.nonEmpty, "Uyuni SD configuration requires a password")
+        c
+      }
+      // oci_sd_configs (ref: discovery/oci/oci.go SDConfig; api_key auth
+      // needs the four key fields)
       val ociSd = m.list("oci_sd_configs").collect { case oc: YMap =>
-        OciSd.Config(str(oc, "region"),
+        val c = OciSd.Config(str(oc, "region"),
           str(oc, "tenancy"), str(oc, "user"), str(oc, "fingerprint"),
           str(oc, "key_file"), strList(oc.get("compartments")),
           oc.str("port").map(_.toInt).getOrElse(80),
           oc.str("refresh_interval").map(durMs).getOrElse(60000L))
-      }.filter(_.region.nonEmpty)
+        need(c.region.nonEmpty, "oci_sd: region is required")
+        if (str(oc, "auth", "api_key") == "api_key")
+          Seq("tenancy" -> c.tenancy, "user" -> c.user,
+            "fingerprint" -> c.fingerprint, "key_file" -> c.keyFile).foreach {
+            case (f, v) => need(v.nonEmpty, s"oci_sd: api_key auth requires $f")
+          }
+        c
+      }
       // kuma_sd_configs (ref: discovery/xds/kuma.go KumaSDConfig)
       val kumaSd = m.list("kuma_sd_configs").collect { case kc: YMap =>
-        KumaSd.Config(str(kc, "server"), str(kc, "client_id"),
+        val c = KumaSd.Config(str(kc, "server"), str(kc, "client_id"),
           kc.str("fetch_timeout").map(durMs).getOrElse(120000L),
           kc.str("refresh_interval").map(durMs).getOrElse(15000L))
-      }.filter(_.server.nonEmpty)
+        if (c.server.isEmpty) bad("empty xDS server URL")
+        else need(c.server.matches("^https?://.*"),
+          "invalid xDS server URL protocol. must be either 'http' or 'https'")
+        c
+      }
       // serverset_sd_configs + nerve_sd_configs (ref: discovery/zookeeper/
       // zookeeper.go ServersetSDConfig / NerveSDConfig)
       val zookeeperSd =
         Seq("serverset" -> "serverset_sd_configs", "nerve" -> "nerve_sd_configs")
           .flatMap { case (kind, key) =>
             m.list(key).collect { case zc: YMap =>
-              ZookeeperSd.Config(kind,
+              val c = ZookeeperSd.Config(kind,
                 strList(zc.get("servers")), strList(zc.get("paths")),
                 zc.str("timeout").map(durMs).getOrElse(10000L),
                 zc.str("refresh_interval").map(durMs).getOrElse(30000L))
+              need(c.servers.nonEmpty,
+                s"$kind SD config must contain at least one Zookeeper server")
+              need(c.paths.nonEmpty, s"$kind SD config must contain at least one path")
+              c.paths.filterNot(_.startsWith("/")).foreach(p =>
+                bad(s"$kind SD config paths must begin with '/': $p"))
+              c
             }
-          }.filter(c => c.servers.nonEmpty && c.paths.nonEmpty)
-      ScrapeJob(name, statics, sdFiles,
-        m.str("scrape_interval").map(durMs).getOrElse(scrapeMs),
+          }
+      ScrapeJob(name, statics, sdFiles, intervalMs,
         relabelChain(m.get("relabel_configs")),
         relabelChain(m.get("metric_relabel_configs")),
         scheme, path,
@@ -957,7 +1318,30 @@ object Config {
         scrapeNativeHistograms = m.str("scrape_native_histograms")
           .orElse(global.str("scrape_native_histograms"))
           .contains("true"),
-        client = clientCfgOf(m, jobBase, http2Default = true))
+        client = clientCfgOf(m, jobBase, http2Default = true, clientWhere, errs))
+    }
+    // one scrape_configs entry of the main file or of an include (`src`
+    // names the include in field errors)
+    def scrapeConfig(m: YMap, src: String, jobBase: java.nio.file.Path): ScrapeJob = {
+      unknownKeys(m, scrapeFields, s"${src}scrape_config", errs, sd = true)
+      val name = str(m, "job_name")
+      val label = if (name.nonEmpty) name else "<no job_name>"
+      val where = s"""job "$label""""
+      val job = parseScrapeJob(m, name, where, jobBase)
+      if (job.timeoutMs > job.intervalMs)
+        errs += "scrape timeout greater than scrape interval for scrape " +
+          s"""config with job name "$label""""
+      // scrape_protocols / fallback values must be known (ref: config.go
+      // ScrapeProtocol.Validate)
+      val known = ScrapeManager.protocolHeaders.keySet
+      (strList(m.get("scrape_protocols")) ++
+        Some(job.fallbackProtocol).filter(_.nonEmpty)).filterNot(known).foreach(p =>
+        errs += s"$where: unknown scrape protocol $p, supported: " +
+          known.toSeq.sorted.mkString("[", ", ", "]"))
+      if (authShapes(m).size > 1)
+        conflicts += s"$where: at most one of basic_auth, authorization, " +
+          "oauth2, bearer_token & bearer_token_file must be configured"
+      job
     }
     // scrape_config_files: globbed side files each carrying their own
     // scrape_configs list (ref config.go:296 ScrapeConfigFiles +
@@ -965,112 +1349,132 @@ object Config {
     // included file's directory)
     val scrapeConfigPaths = root.list("scrape_config_files")
       .collect { case YScalar(pat) => pat }
-      .flatMap(expandGlob(base, _))
-    val fileJobs = scrapeConfigPaths
-      .flatMap { f =>
-        try {
-          val fp = java.nio.file.Paths.get(f)
-          val sub = graft.promqltest.YamlLite.parse(
-            new String(java.nio.file.Files.readAllBytes(fp), "UTF-8")) match {
-            case mm: YMap => mm
-            case _ => YMap(Nil)
-          }
-          val fb = Option(fp.getParent)
-            .getOrElse(java.nio.file.Paths.get("."))
-          sub.list("scrape_configs").collect {
-            case jm: YMap => parseScrapeJob(jm, jobBase = fb) }
-        } catch { case _: Exception => Nil }
+      .flatMap(pat => expand(pat)(s"scrape config file $pat: no such file or directory"))
+    val fileJobs = scrapeConfigPaths.flatMap { f =>
+      guarded(s"$f: ") {
+        val fp = java.nio.file.Paths.get(f)
+        val sub = YamlLite.parse(
+          new String(java.nio.file.Files.readAllBytes(fp), "UTF-8")) match {
+          case mm: YMap => mm
+          case _ => YMap(Nil)
+        }
+        unknownKeys(sub, Set("scrape_configs"), f, errs)
+        val fb = Option(fp.getParent).getOrElse(java.nio.file.Paths.get("."))
+        sub.list("scrape_configs").flatMap {
+          case jm: YMap => guarded(s"$f: ")(scrapeConfig(jm, s"$f ", fb))
+          case _ => errs += s"$f: bad scrape_config node"; None
+        }
+      }.getOrElse(Nil)
+    }
+    val jobs = root.list("scrape_configs").flatMap {
+      case m: YMap => guarded("")(scrapeConfig(m, "", base))
+      case _ => errs += "bad scrape_config node"; None
+    } ++ fileJobs
+    // job_name is unique across the main file AND every included file (ref
+    // config.go GetScrapeConfigs)
+    val seenJobs = scala.collection.mutable.Set[String]()
+    jobs.map(_.jobName).filter(_.nonEmpty).filterNot(seenJobs.add).foreach(j =>
+      errs += s"""found multiple scrape configs with job name "$j"""")
+    // remote_write / remote_read entries: url required, one auth shape,
+    // the entry's own fields (ref: config.go RemoteWriteConfig /
+    // RemoteReadConfig)
+    def remote[T](section: String, known: Set[String])(entry: YMap => T): Seq[T] =
+      root.list(section).flatMap {
+        case m: YMap =>
+          unknownKeys(m, known, section, errs)
+          if (str(m, "url").isEmpty) errs += s"$section: url is required"
+          val shapes = authShapes(m)
+          if (shapes.size > 1)
+            conflicts += s"$section: at most one of basic_auth, authorization, " +
+              "oauth2, sigv4, azuread or google_iam must be configured. " +
+              s"Currently configured: [${shapes.mkString(", ")}]"
+          guarded("")(entry(m))
+        case _ => None
       }
-    val jobs = root.list("scrape_configs").collect { case m: YMap =>
-      parseScrapeJob(m) } ++ fileJobs
-    def urlsOf(key: String): Seq[String] =
-      root.list(key).collect { case m: YMap => str(m, "url") }.filter(_.nonEmpty)
-    // full remote_write entries (ref: config.go RemoteWriteConfig): the
-    // HTTP client config (custom headers ride each request; reserved
-    // protocol headers win — validated by ConfigCheck), and
     // protobuf_message io.prometheus.write.v2.Request selects PRW 2.0
-    val remoteWrites = root.list("remote_write").collect { case m: YMap =>
+    val remoteWrites = remote("remote_write", remoteWriteFields) { m =>
       RemoteWriteEntry(
         str(m, "url"),
         str(m, "name"),
         if (str(m, "protobuf_message") == "io.prometheus.write.v2.Request") 2
         else 1,
         relabelChain(m.get("write_relabel_configs")),
-        azureAdOf(m),
-        sigv4Of(m),
-        m.get("google_iam") match {
-          case Some(g: YMap) =>
-            Some(graft.web.GoogleIam.Config({
-              val f = str(g, "credentials_file")
-              if (f.nonEmpty) base.resolve(f).toString else ""
-            }))
-          case _ => None
+        azureAdOf(m, "remote_write", errs),
+        sigv4Of(m, "remote_write", errs),
+        m.get("google_iam").collect { case g: YMap =>
+          unknownKeys(g, Set("credentials_file"), "remote_write google_iam", errs)
+          val f = str(g, "credentials_file")
+          graft.web.GoogleIam.Config(if (f.nonEmpty) base.resolve(f).toString else "")
         },
-        queueOf(m),
+        queueOf(m, "remote_write", errs),
         remoteTimeoutMs = m.str("remote_timeout").map(durMs).getOrElse(30000L),
         sendNativeHistograms =
           m.str("send_native_histograms").contains("true"),
+        // metadata_config (ref config.go:1664 MetadataConfig)
         metadataSend = m.get("metadata_config") match {
-          case Some(mc: YMap) => !mc.str("send").contains("false")
+          case Some(mc: YMap) =>
+            unknownKeys(mc, Set("send", "send_interval", "max_samples_per_send"),
+              "remote_write metadata_config", errs)
+            !mc.str("send").contains("false")
           case _ => true
         },
-        client = remoteClientCfgOf(m, base, http2Default = false))
-    }.filter(_.url.nonEmpty)
-    val remoteReads = root.list("remote_read").collect { case m: YMap =>
+        client = remoteClientCfgOf(m, base, http2Default = false, "remote_write", errs))
+    }
+    val remoteReads = remote("remote_read", remoteReadFields) { m =>
       RemoteReadEntry(str(m, "url"), str(m, "name"),
         readRecent = m.str("read_recent").contains("true"),
         requiredMatchers = kv(m.get("required_matchers")),
         filterExternalLabels = !m.str("filter_external_labels").contains("false"),
         remoteTimeoutMs = m.str("remote_timeout").map(durMs).getOrElse(60000L),
-        client = remoteClientCfgOf(m, base, http2Default = true))
-    }.filter(_.url.nonEmpty)
+        client = remoteClientCfgOf(m, base, http2Default = true, "remote_read", errs))
+    }
     // alerting: — per-group service discovery via the scrape-job machinery
     // plus alert relabeling (ref: config/config.go:1274 AlertingConfig
     // {alert_relabel_configs, alertmanagers}; each group carries the full
-    // *_sd_configs surface, relabel_configs for AM-target selection, and
-    // its own alert_relabel_configs)
-    val alertingYaml = root.get("alerting") match {
-      case Some(a: YMap) => a
-      case _ => YMap(Nil)
-    }
-    val alertRelabel = relabelChain(alertingYaml.get("alert_relabel_configs"))
-    val amGroups = alertingYaml.list("alertmanagers").zipWithIndex.collect {
+    // *_sd_configs surface, relabel_configs for AM-target selection, its
+    // own alert_relabel_configs, and at most one of basic_auth,
+    // authorization, oauth2 & sigv4 — config.go:1410; api_version v1 is
+    // no longer supported)
+    val alerting = section("alerting")
+    unknownKeys(alerting, Set("alert_relabel_configs", "alertmanagers"), "alerting", errs)
+    val alertRelabel = relabelChain(alerting.get("alert_relabel_configs"))
+    val amGroups = alerting.list("alertmanagers").zipWithIndex.flatMap {
       case (m: YMap, i) =>
-        AlertmanagerGroup(
-          parseScrapeJob(m, nameDefault = s"alertmanager/$i"),
+        val where = "alertmanager config"
+        unknownKeys(m, alertmanagerFields, where, errs, sd = true)
+        if (authShapes(m).size > 1)
+          conflicts += s"$where: at most one of basic_auth, authorization, " +
+            "oauth2, & sigv4 must be configured"
+        val v = str(m, "api_version", "v2")
+        if (v != "v2")
+          errs += s"""$where: invalid api_version "$v" (only "v2" is supported)"""
+        guarded("")(AlertmanagerGroup(
+          parseScrapeJob(m, s"alertmanager/$i", where),
           str(m, "scheme", "http"),
           str(m, "path_prefix"),
-          str(m, "api_version", "v2"),
+          v,
           m.str("timeout").map(durMs).getOrElse(10000L),
           relabelChain(m.get("alert_relabel_configs")),
-          sigv4Of(m))
+          sigv4Of(m, where, errs)))
+      case _ => errs += "bad alertmanager config node"; None
     }
     // static AM base URLs (display surface + legacy notifier path); live
     // push endpoints resolve from the groups incl. SD + target relabeling
     val ams = amGroups.flatMap(g =>
       g.sd.staticTargets.map(t => s"${g.scheme}://${t.instance}${g.pathPrefix}"))
-    PromConfig(scrapeMs, evalMs, kv(global.get("external_labels")),
-      root.list("rule_files").collect { case YScalar(s) => s }.flatMap(expandGlob(base, _)),
-      jobs, urlsOf("remote_write"), urlsOf("remote_read"), ams,
-      // --query.log-file analog: global.query_log_file (relative to the
-      // config file's directory, like rule_files)
-      global.str("query_log_file").filter(_.nonEmpty)
-        .map(f => base.resolve(f).toString),
-      alertRelabel = alertRelabel,
-      alertmanagerGroups = amGroups,
-      maxExemplars = (root.get("storage") match {
-        case Some(s: YMap) => s.get("exemplars") match {
-          case Some(e: YMap) => e.str("max_exemplars").map(_.toLong)
-          case _ => None
-        }
-        case _ => None
-      }).getOrElse(100000L),
-      ruleQueryOffsetMs = global.str("rule_query_offset").map(durMs).getOrElse(0L),
-      remoteWrites = remoteWrites,
-      remoteReads = remoteReads,
-      scrapeConfigPaths = scrapeConfigPaths,
-      otlp = root.get("otlp") match {
-        case Some(o: YMap) => graft.web.Otlp.OtlpCfg(
+    // otlp: receiver block (ref config.go:1785 OTLPConfig UnmarshalYAML —
+    // promote-all/promote exclusivity, ignore only with promote-all,
+    // attribute sanity; translation_strategy limited to the
+    // underscore-escaping default this engine implements)
+    val otlp = root.get("otlp") match {
+      case Some(o: YMap) =>
+        unknownKeys(o, Set("promote_all_resource_attributes",
+          "promote_resource_attributes", "ignore_resource_attributes",
+          "translation_strategy", "keep_identifying_resource_attributes",
+          "convert_histograms_to_nhcb", "promote_scope_metadata",
+          "label_name_underscore_sanitization",
+          "label_name_preserve_multiple_underscores"), "otlp", errs)
+        val c = graft.web.Otlp.OtlpCfg(
           promoteAll = o.str("promote_all_resource_attributes").contains("true"),
           promote = strList(o.get("promote_resource_attributes")),
           ignore = strList(o.get("ignore_resource_attributes")),
@@ -1080,8 +1484,53 @@ object Config {
             o.str("convert_histograms_to_nhcb").contains("true"),
           promoteScopeMetadata =
             o.str("promote_scope_metadata").contains("true"))
-        case _ => graft.web.Otlp.OtlpCfg()
-      })
+        if (c.promoteAll && c.promote.nonEmpty)
+          errs += "'promote_all_resource_attributes' and " +
+            "'promote_resource_attributes' cannot be configured simultaneously"
+        if (!c.promoteAll && c.ignore.nonEmpty)
+          errs += "'ignore_resource_attributes' cannot be configured " +
+            "unless 'promote_all_resource_attributes' is true"
+        val (attrs, what) =
+          if (c.promoteAll) (c.ignore, "ignored") else (c.promote, "promoted")
+        val seenAttr = scala.collection.mutable.Set[String]()
+        attrs.foreach { a =>
+          if (a.trim.isEmpty) errs += s"empty $what OTLP resource attribute"
+          else if (!seenAttr.add(a))
+            errs += s"""duplicated $what OTLP resource attribute "$a""""
+        }
+        o.str("translation_strategy").foreach {
+          case "UnderscoreEscapingWithSuffixes" => ()
+          case v @ ("NoUTF8EscapingWithSuffixes" | "NoTranslation" |
+                    "UnderscoreEscapingWithoutSuffixes") =>
+            errs += s"otlp translation_strategy $v is not supported " +
+              "by this engine (UnderscoreEscapingWithSuffixes only)"
+          case v => errs += s"""unsupported OTLP translation strategy "$v""""
+        }
+        c
+      case _ => graft.web.Otlp.OtlpCfg()
+    }
+    // rule_files: a glob may match nothing, a literal path must exist (as
+    // promtool checks it)
+    val ruleFiles = root.list("rule_files").collect { case YScalar(rf) => rf }
+      .flatMap(rf => expand(rf)(
+        s"${if (rf.startsWith("/")) rf else base.resolve(rf)}: no such file or directory"))
+    PromConfig(scrapeMs, evalMs, kv(global.get("external_labels")), ruleFiles,
+      jobs, remoteWrites.map(_.url), remoteReads.map(_.url), ams,
+      // --query.log-file analog: global.query_log_file (relative to the
+      // config file's directory, like rule_files)
+      global.str("query_log_file").filter(_.nonEmpty)
+        .map(f => base.resolve(f).toString),
+      alertRelabel = alertRelabel,
+      alertmanagerGroups = amGroups,
+      maxExemplars = (section("storage").get("exemplars") match {
+        case Some(e: YMap) => e.str("max_exemplars").map(_.toLong)
+        case _ => None
+      }).getOrElse(100000L),
+      ruleQueryOffsetMs = global.str("rule_query_offset").map(durMs).getOrElse(0L),
+      remoteWrites = remoteWrites,
+      remoteReads = remoteReads,
+      scrapeConfigPaths = scrapeConfigPaths,
+      otlp = otlp)
   }
 
   def load(path: String): PromConfig = {
@@ -1090,51 +1539,90 @@ object Config {
       Option(p.getParent).map(_.toString).getOrElse("."))
   }
 
-  /** Load a rule file (ref: model/rulefmt/rulefmt.go — groups of recording/
-    * alerting rules with per-group intervals) into evaluable [[Rules.Group]]s.
-    * Rule expressions must parse at load time, exactly-one-of record/alert
-    * is enforced, and a group without an interval inherits the global
+  /** template variables the reference's AlertTemplateData exposes — an
+    * unknown `$x` fails template execution in promtool's test-expansion.
+    * Only `$identifier` occurrences INSIDE `{{ ... }}` template actions are
+    * variables (text/template evaluates actions only); a literal
+    * "check $HOSTNAME in the runbook" outside an action passes. */
+  private def templateErrors(text: String, where: String): Seq[String] = {
+    // syntax check through the real template parser (ref: rulefmt testTemplateParsing
+    // via template.Expander.ParseTest)
+    val parseErr =
+      if (!text.contains("{{")) None
+      else new graft.template.GoTemplate.Expander(text, "__alert_", null, 0L, _ => Nil)
+        .parseTest().map(e => s"$where: template parse error: $e")
+    // variables declared inside the template (`$x :=`, `range $i, $v :=`)
+    // are defined; everything else must come from AlertTemplateData
+    val declared = "((?:\\$[A-Za-z_][A-Za-z0-9_]*\\s*,\\s*)*\\$[A-Za-z_][A-Za-z0-9_]*)\\s*:?=".r
+      .findAllMatchIn(text).flatMap(m =>
+        "\\$([A-Za-z_][A-Za-z0-9_]*)".r.findAllMatchIn(m.group(1)).map(_.group(1))).toSet
+    val undef = "(?s)\\{\\{(.*?)\\}\\}".r.findAllMatchIn(text).toSeq.flatMap(a =>
+      "\\$([A-Za-z_][A-Za-z0-9_]*)".r.findAllMatchIn(a.group(1)).map(_.group(1)))
+      .filterNot(declared ++ Set("labels", "value", "externalLabels", "externalURL"))
+      .map(v => s"$where: undefined variable \"$$$v\" in template")
+    parseErr.toSeq ++ undef
+  }
+
+  /** Load a rule file (ref: model/rulefmt/rulefmt.go ParseFile — groups of
+    * recording/alerting rules with per-group intervals) into evaluable
+    * [[Rules.Group]]s. Each rule needs exactly one of record/alert and an
+    * expression that parses, and its label and annotation templates may
+    * only use known variables; every error in the file is collected into
+    * one [[ConfigError]]. A group without an interval inherits the global
     * evaluation interval. */
   def loadRuleGroups(path: String, defaultIntervalMs: Long,
       defaultQueryOffsetMs: Long = 0L): Seq[Rules.Group] = {
-    import graft.promqltest.YamlLite
-    import graft.promqltest.YamlLite.{YMap, YScalar}
-    val text = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-    val root = YamlLite.parse(text) match {
-      case m: YMap => m
-      case other => throw new IllegalArgumentException(s"$path: expected mapping, got $other")
-    }
-    root.list("groups").collect { case g: YMap =>
-      val gname = g.str("name").getOrElse("")
-      val interval = g.str("interval").map(durMs).getOrElse(defaultIntervalMs)
-      var rec = Seq.empty[Rules.RecordingRule]
-      var al = Seq.empty[Rules.AlertingRule]
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(p))
+      throw new ConfigError(Seq(s"$path: no such file or directory"))
+    val errs = new Errs
+    def guarded[T](body: => T): Option[T] =
+      try Some(body) catch { case e: Exception => errs += s"$path: ${message(e)}"; None }
+    def group(g: YMap): Rules.Group = {
+      val rec = Seq.newBuilder[Rules.RecordingRule]
+      val al = Seq.newBuilder[Rules.AlertingRule]
       g.list("rules").foreach {
         case r: YMap =>
-          val record = r.str("record").getOrElse("")
-          val alert = r.str("alert").getOrElse("")
+          val record = str(r, "record")
+          val alert = str(r, "alert")
           if (record.nonEmpty == alert.nonEmpty)
-            throw new IllegalArgumentException(
-              s"$path: rule must have exactly one of 'record' and 'alert'")
-          val expr = r.str("expr").getOrElse(
-            throw new IllegalArgumentException(s"$path: rule missing expr"))
-          try graft.promql.Engine.parse(expr)
-          catch { case e: Throwable =>
-            throw new IllegalArgumentException(s"$path: invalid expr '$expr': ${e.getMessage}") }
+            errs += s"$path: rule must have exactly one of 'record' and 'alert'"
+          val expr = r.str("expr")
+          expr match {
+            case None => errs += s"$path: rule missing expr"
+            case Some(e) =>
+              try graft.promql.Engine.parse(e)
+              catch { case ex: Throwable =>
+                errs += s"$path: could not parse expression: ${ex.getMessage}" }
+          }
           val lbls = kv(r.get("labels"))
-          if (record.nonEmpty) rec :+= Rules.RecordingRule(record, expr, lbls)
-          else al :+= Rules.AlertingRule(alert, expr,
+          val anns = kv(r.get("annotations"))
+          (lbls.values ++ anns.values).foreach(v => errs ++= templateErrors(v, path))
+          if (record.nonEmpty) rec += Rules.RecordingRule(record, expr.getOrElse(""), lbls)
+          else al += Rules.AlertingRule(alert, expr.getOrElse(""),
             r.str("for").map(durMs).getOrElse(0L),
             r.str("keep_firing_for").map(durMs).getOrElse(0L),
-            lbls, kv(r.get("annotations")))
-        case other => throw new IllegalArgumentException(s"$path: bad rule node $other")
+            lbls, anns)
+        case other => errs += s"$path: bad rule node $other"
       }
-      Rules.Group(gname, interval, rec, al,
+      Rules.Group(str(g, "name"),
+        g.str("interval").map(durMs).getOrElse(defaultIntervalMs),
+        rec.result(), al.result(),
         queryOffsetMs = g.str("query_offset").map(durMs)
           .getOrElse(defaultQueryOffsetMs),
         limit = g.str("limit").map(_.toInt).getOrElse(0))
     }
+    val groups = guarded {
+      YamlLite.parse(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")) match {
+        case root: YMap => root.list("groups").flatMap {
+          case g: YMap => guarded(group(g))
+          case _ => errs += s"$path: bad group node"; None
+        }
+        case other => throw new IllegalArgumentException(s"expected mapping, got $other")
+      }
+    }.getOrElse(Nil)
+    if (errs.nonEmpty) throw new ConfigError(errs.toList)
+    groups
   }
 
   private implicit class JIter[T](it: java.util.Iterator[T]) {

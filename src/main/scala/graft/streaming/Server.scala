@@ -11,9 +11,12 @@ import org.apache.spark.sql.SparkSession
   * api.go wrapAgent; ref tsdb/agent/db.go).
   *
   * Reload semantics follow the reference's ApplyConfig chain: the new
-  * config is parsed and validated FIRST; only on success are components
-  * swapped (a bad file leaves the running config untouched and /-/reload
-  * returns 500 with the parse error).
+  * config and its rule files are loaded FIRST, through the same strict
+  * loader as `check config` ([[Config.parse]], [[Config.loadRuleGroups]]);
+  * only on success are components swapped. A bad file leaves the running
+  * config untouched, and /-/reload returns 500 naming every error the
+  * loader collected from it (the config's, or the first failing rule
+  * file's).
   */
 final class PromServer(
     spark: SparkSession,

@@ -41,16 +41,6 @@ final class FanoutStore(
     secondaries: Seq[FanoutStore.Secondary],
     externalLabels: Map[String, String] = Map.empty) {
 
-  private def matcherCond(m: LabelMatcher): org.apache.spark.sql.Column = {
-    val c = coalesce(element_at(col("labels"), m.name), lit(""))
-    m.op match {
-      case MatchOp.Eq => c === m.value
-      case MatchOp.Neq => c =!= m.value
-      case MatchOp.Re => c.rlike("^(?:" + m.value + ")$")
-      case MatchOp.NotRe => !c.rlike("^(?:" + m.value + ")$")
-    }
-  }
-
   /** the local store's first-sample time, the read_recent boundary (ref:
     * main.go localStorage.StartTime feeding remote/read.go). One min-agg
     * over the pruned scan, cached — the store is append-mostly and a
@@ -69,7 +59,7 @@ final class FanoutStore(
   def fetch(matchers: List[LabelMatcher], startMs: Long, endMs: Long): DataFrame = {
     val local = matchers.foldLeft(
       primary.samples.filter(col("t") >= startMs && col("t") <= endMs))(
-      (df, m) => df.filter(matcherCond(m)))
+      (df, m) => df.filter(m.cond(col("labels"))))
     val remote = secondaries.flatMap { s =>
       // required_matchers: route to this endpoint only when the selector
       // carries every required equality (ref read.go requiredMatchersQuerier)

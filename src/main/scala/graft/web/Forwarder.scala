@@ -95,7 +95,7 @@ final class RemoteWriteForwarder(
     // Executors build their per-partition client from this serializable
     // value; its custom headers go first and the PROTOCOL headers last, so
     // those always win a same-name collision (the reference rejects
-    // reserved names at config load — see ConfigCheck — and this ordering
+    // reserved names at config load — see Config — and this ordering
     // is the runtime backstop)
     clientCfg: graft.streaming.Config.HttpClientCfg =
       graft.streaming.Config.HttpClientCfg(enableHttp2 = false),

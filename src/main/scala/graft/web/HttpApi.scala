@@ -397,15 +397,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
     }
 
   private def matcherFilter(df: DataFrame, ms: List[LabelMatcher]): DataFrame =
-    ms.foldLeft(df) { (d, m) =>
-      val c = coalesce(element_at(col("labels"), m.name), lit(""))
-      d.filter(m.op match {
-        case MatchOp.Eq => c === m.value
-        case MatchOp.Neq => c =!= m.value
-        case MatchOp.Re => c.rlike("^(?:" + m.value + ")$")
-        case MatchOp.NotRe => !c.rlike("^(?:" + m.value + ")$")
-      })
-    }
+    ms.foldLeft(df)((d, m) => d.filter(m.cond(col("labels"))))
 
   /** union of match[] selectors over [start, end] */
   private def seriesSet(p: Map[String, List[String]]): DataFrame = {
@@ -1152,15 +1144,8 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
       }
       val matcherSets = p.getOrElse("match[]", Nil).map(parseMatch)
       def labelsMatch(lbls: Map[String, String]): Boolean =
-        matcherSets.isEmpty || matcherSets.exists(_.forall { m =>
-          val v = lbls.getOrElse(m.name, "")
-          m.op match {
-            case MatchOp.Eq => v == m.value
-            case MatchOp.Neq => v != m.value
-            case MatchOp.Re => v.matches("(?:" + m.value + ")")
-            case MatchOp.NotRe => !v.matches("(?:" + m.value + ")")
-          }
-        })
+        matcherSets.isEmpty || matcherSets.exists(_.forall(m =>
+          m.matches(lbls.getOrElse(m.name, ""))))
       val groupLimit = p.get("group_limit").flatMap(_.headOption) match {
         case None => -1
         case Some(s) =>
@@ -1353,15 +1338,8 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
       val matchers = p.get("match_target").flatMap(_.headOption)
         .map(parseMatch).getOrElse(Nil)
       val metricFilter = p.get("metric").flatMap(_.headOption)
-      def matches(lbls: Map[String, String]): Boolean = matchers.forall { m =>
-        val v = lbls.getOrElse(m.name, "")
-        m.op match {
-          case MatchOp.Eq => v == m.value
-          case MatchOp.Neq => v != m.value
-          case MatchOp.Re => v.matches("(?:" + m.value + ")")
-          case MatchOp.NotRe => !v.matches("(?:" + m.value + ")")
-        }
-      }
+      def matches(lbls: Map[String, String]): Boolean =
+        matchers.forall(m => m.matches(lbls.getOrElse(m.name, "")))
       val meta = store.metadata
       val items = for {
         t <- scrapeTargets

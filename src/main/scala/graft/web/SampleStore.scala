@@ -1,6 +1,6 @@
 package graft.web
 
-import graft.promql.{Engine, LabelMatcher, MatchOp}
+import graft.promql.{Engine, LabelMatcher}
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
@@ -60,16 +60,6 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
 
   @volatile private var state = State(head.map(Engine.canonical), Vector.empty, Nil)
 
-  private def matcherCond(m: LabelMatcher): org.apache.spark.sql.Column = {
-    val c = coalesce(element_at(col("labels"), m.name), lit(""))
-    m.op match {
-      case MatchOp.Eq => c === m.value
-      case MatchOp.Neq => c =!= m.value
-      case MatchOp.Re => c.rlike("^(?:" + m.value + ")$")
-      case MatchOp.NotRe => !c.rlike("^(?:" + m.value + ")$")
-    }
-  }
-
   /** the scan over `chunks`, in canonical schema plus the sink columns. A
     * column is nullable if it was in any chunk's source; `h`/`stt` stay
     * marked store-absent while neither the constructor's frame nor any
@@ -101,7 +91,7 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
       case None => scan(s.chunks, absent)
     }
     s.tombs.foldLeft(all) { (df, ts) =>
-      val hit = ts.matchers.map(matcherCond).reduce(_ && _) &&
+      val hit = ts.matchers.map(_.cond(col("labels"))).reduce(_ && _) &&
         col("t") >= ts.minT && col("t") <= ts.maxT
       df.filter(!hit)
     }

@@ -21,15 +21,7 @@ object TsdbDump {
     }
 
   private def cond(ms: List[LabelMatcher]): Column =
-    ms.map { m =>
-      val c = coalesce(element_at(col("labels"), m.name), lit(""))
-      m.op match {
-        case MatchOp.Eq => c === m.value
-        case MatchOp.Neq => c =!= m.value
-        case MatchOp.Re => c.rlike("^(?:" + m.value + ")$")
-        case MatchOp.NotRe => !c.rlike("^(?:" + m.value + ")$")
-      }
-    }.reduce(_ && _)
+    ms.map(_.cond(col("labels"))).reduce(_ && _)
 
   private def selected(samples: DataFrame, mintMs: Long, maxtMs: Long,
       matchers: Seq[String]): DataFrame = {

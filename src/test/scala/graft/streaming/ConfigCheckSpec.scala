@@ -331,6 +331,53 @@ class ConfigCheckSpec extends AnyFunSuite {
     assert(amOk.exitCode == 0, amOk.toString)
   }
 
+
+  test("one reader: the loader throws exactly what check config reports, per section") {
+    val dir = java.nio.file.Files.createTempDirectory("cfgone")
+    java.nio.file.Files.write(dir.resolve("inc.yml"),
+      "scrape_configs:\n  - job_name: j\n".getBytes("UTF-8"))
+    val job = "scrape_configs:\n  - job_name: j\n"
+    val table = Seq(
+      "bogus: 1\n" -> "field bogus not found in type config",
+      job + "    scrape_interval: 5s\n    scrape_timeout: 10s\n" ->
+        "scrape timeout greater than scrape interval for scrape config with job name \"j\"",
+      job + "    kubernetes_sd_configs:\n      - role: podz\n" ->
+        ("job \"j\": role \"podz\" (must be one of endpoints, endpointslice, " +
+          "ingress, node, pod, service)"),
+      "remote_write:\n  - url: http://x/w\n    queue_config:\n      max_shards: 0\n" ->
+        "remote_write: remote write queue max_shards must be positive",
+      "remote_read:\n  - url: http://x/r\n    queue_config:\n      capacity: 1\n" ->
+        "remote_read: field queue_config not found in type config",
+      "alerting:\n  alertmanagers:\n    - api_version: v1\n" ->
+        "alertmanager config: invalid api_version \"v1\" (only \"v2\" is supported)",
+      "otlp:\n  promote_all_resource_attributes: true\n  promote_resource_attributes: [a]\n" ->
+        ("'promote_all_resource_attributes' and 'promote_resource_attributes' " +
+          "cannot be configured simultaneously"),
+      job + "scrape_config_files:\n  - inc.yml\n" ->
+        "found multiple scrape configs with job name \"j\"")
+    table.zipWithIndex.foreach { case ((body, expected), i) =>
+      val f = dir.resolve(s"c$i.yml")
+      java.nio.file.Files.write(f, body.getBytes("UTF-8"))
+      val thrown = intercept[Config.ConfigError](Config.load(f.toString)).errors
+      assert(thrown.contains(expected), s"$body: $thrown")
+      val checked = ConfigCheck.checkConfig(f.toString)
+      assert(checked.exitCode == 1 && checked.errors == thrown.map(e => s"$f: $e"),
+        s"$body: $checked")
+    }
+  }
+
+  test("ConfigCheck reads prometheus.yml only through the loader") {
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/scala/graft/streaming/ConfigCheck.scala")), "UTF-8")
+    // the ConfigCheck object only: WebConfigCheck reads web-config.yml
+    val start = src.indexOf("object ConfigCheck {")
+    assert(start >= 0, "object ConfigCheck not found")
+    val end = src.indexOf("\nobject ", start + 1) match { case -1 => src.length; case e => e }
+    val body = src.substring(start, end)
+    val offenders = Seq("YamlLite.parse", "scrape_configs", "_sd_configs",
+      "remote_write", "queue_config").filter(body.contains)
+    assert(offenders.isEmpty, s"parse prometheus.yml in Config, not ConfigCheck: $offenders")
+  }
 }
 
 /** `promtool check web-config` analog (ref: exporter-toolkit web.Validate);

@@ -150,6 +150,59 @@ class PromServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally { srv.stop(); }
   }
 
+  /** a server over `prometheus.yml` + `rules.yml` in a fresh directory */
+  private def strictServer(body: (java.nio.file.Path, String, PromServer) => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-strict")
+    writeFile(dir, "rules.yml",
+      "groups:\n  - name: g1\n    rules:\n      - record: r1\n        expr: count(up)\n")
+    val cfgPath = writeFile(dir, "prometheus.yml",
+      "global:\n  evaluation_interval: 30s\nrule_files:\n  - rules.yml\n")
+    val srv = new PromServer(spark, cfgPath)
+    srv.start()
+    try body(dir, cfgPath, srv) finally srv.stop()
+  }
+
+  test("reload refuses a config check config refuses, naming every error") {
+    strictServer { (dir, cfgPath, srv) =>
+      val port = srv.api.boundPort
+      // valid YAML with two errors; the old config keeps serving
+      writeFile(dir, "prometheus.yml",
+        """global:
+          |  evaluation_interval: 10s
+          |not_a_section: 1
+          |remote_write:
+          |  - url: http://127.0.0.1:1/w
+          |    queue_config:
+          |      max_shards: 0
+          |""".stripMargin)
+      assert(ConfigCheck.checkConfig(cfgPath).exitCode == 1)
+      val (code, body) = post(port, "/-/reload")
+      assert(code == 500 && body.contains("field not_a_section not found") &&
+        body.contains("max_shards must be positive"), body)
+      assert(srv.config.exists(c => c.evaluationIntervalMs == 30000L &&
+        c.remoteWrites.isEmpty))
+      assert(!get(port, "/api/v1/status/config")._2.contains("not_a_section"))
+    }
+  }
+
+  test("reload refuses a rule file check config refuses") {
+    strictServer { (dir, cfgPath, srv) =>
+      writeFile(dir, "rules.yml",
+        """groups:
+          |  - name: g2
+          |    rules:
+          |      - alert: A
+          |        expr: up == 0
+          |        annotations:
+          |          summary: "{{ $label.foo }}"
+          |""".stripMargin)
+      assert(ConfigCheck.checkConfig(cfgPath).exitCode == 1)
+      val (code, body) = post(srv.api.boundPort, "/-/reload")
+      assert(code == 500 && body.contains("undefined variable \"$label\""), body)
+      assert(srv.currentRuleGroups.map(_.name) == Seq("g1"))
+    }
+  }
+
   test("config.auto-reload: config AND watched rule-file changes apply without /-/reload") {
     val dir = java.nio.file.Files.createTempDirectory("graft-auto")
     writeFile(dir, "rules.yml",
