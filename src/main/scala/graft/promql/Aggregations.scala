@@ -145,9 +145,10 @@ object Aggregations {
         if (paramConst.exists(_.isNaN))
           throw PromQLError("ratio value should be a number, got NaN")
         val (df, r) = paramCol(pre)
-        val enc = expr(
-          "aggregate(array_sort(map_entries(labels)), cast(x'' AS BINARY), " +
-          "(acc, e) -> concat(acc, encode(e.key, 'UTF-8'), x'FF', encode(e.value, 'UTF-8'), x'FF'))")
+        val ff = lit(Array(0xFF.toByte))
+        val enc = aggregate(Engine.sortedLabels(col("labels")), lit(Array.emptyByteArray),
+          (acc, e) => concat(acc, encode(e.getField("key"), "UTF-8"), ff,
+            encode(e.getField("value"), "UTF-8"), ff))
         val hh = org.apache.spark.sql.GraftBridge.xxhash64WithSeed(enc, 0L)
         val frac = (shiftrightunsigned(hh, 1).cast("double") * 2.0 +
           hh.bitwiseAND(lit(1L)).cast("double")) / lit(1.8446744073709552E19)

@@ -262,7 +262,7 @@ object CallEval {
           val desc = name == "sort_by_label_desc"
           val keys = args.tail.map(a =>
             MathCols.natSortKeyUdf(pl.lvalCol(col("labels"), strArg(a)))) :+
-            array_join(transform(sort_array(map_entries(col("labels"))),
+            array_join(transform(Engine.sortedLabels(col("labels")),
               e => concat(e.getField("key"), lit("\u0000"), e.getField("value"))), "\u0001")
           val dir = if (desc) keys.map(_.desc) else keys.map(_.asc)
           val w = org.apache.spark.sql.expressions.Window

@@ -1,6 +1,7 @@
 package graft.promql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, map_entries, sort_array, xxhash64}
 import org.apache.spark.sql.types._
 
 /** Public API of the PromQL-on-Spark engine.
@@ -64,18 +65,25 @@ object Engine {
   /** public form of [[normalize]] for store/serving layers */
   def canonical(samples: DataFrame): DataFrame = normalize(samples)
 
-  /** Materialize the 8-byte series signature at ingest/write time:
-    * `__sg = xxhash64(array_sort(map_entries(labels)), 42)` — the engine's
-    * series identity (the analog of the reference's TSDB series ref,
-    * tsdb/index/postings.go). Stores that persist this column save the
-    * planner one hash+sort pass per sample per selector, and the scan-side
-    * projection stays inside whole-stage codegen (array_sort's lambda
-    * comparator is a CodegenFallback expression). The column is OPTIONAL and
-    * must be exactly this function of `labels` — the planner trusts it. */
-  def withSeriesSig(samples: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{array_sort, col, map_entries, xxhash64}
-    samples.withColumn("__sg", xxhash64(array_sort(map_entries(col("labels")))))
-  }
+  /** a label map's entries in key order: the canonical label-set form
+    * wherever a deterministic label order matters. `sort_array` is
+    * generated code; `array_sort`'s default comparator is an interpreted
+    * lambda (a CodegenFallback). The two give the same array, since map
+    * keys are unique and entries never null. */
+  def sortedLabels(labels: Column): Column = sort_array(map_entries(labels))
+
+  /** the 8-byte series signature `xxhash64(sortedLabels(labels))` (seed 42):
+    * the engine's series identity (the analog of the reference's TSDB
+    * series ref, tsdb/index/postings.go) and its equality key for every
+    * group, join and window over label sets */
+  def seriesSig(labels: Column): Column = xxhash64(sortedLabels(labels))
+
+  /** Materialize the series signature at ingest/write time as `__sg`.
+    * Stores that persist this column save the planner one hash+sort pass
+    * per sample per selector. The column is OPTIONAL and must be exactly
+    * [[seriesSig]] of `labels` — the planner trusts it. */
+  def withSeriesSig(samples: DataFrame): DataFrame =
+    samples.withColumn("__sg", seriesSig(col("labels")))
 
   /** Column metadata marking an optional column that the STORE did not
     * provide (synthesized all-null/zero by [[normalize]]). The planner reads
@@ -123,7 +131,7 @@ object Engine {
       // (ref engine.go:4254); merging disjoint-timestamp series is implicit
       // in the flat (labels, t, v) representation
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(xxhash64(array_sort(map_entries(col("labels")))), col("t"))
+        .partitionBy(seriesSig(col("labels")), col("t"))
       df.select(df.columns.map {
         case "v" => when(count(lit(1)).over(w) > 1,
             raise_error(lit("vector cannot contain metrics with the same labelset")).cast("double"))
@@ -276,7 +284,7 @@ object Engine {
       } else {
         // instant selector: one per selected (series, step) in BOTH figures
         val fan = marked
-          .select(xxhash64(array_sort(map_entries(col("labels")))).as("__sg"),
+          .select(seriesSig(col("labels")).as("__sg"),
             explode(sequence(col("__kf"), col("__kl"))).as("k"))
           .distinct()
         if (wantPerStep) {

@@ -139,21 +139,20 @@ final class Planner(spark: SparkSession, samples: DataFrame, params: EvalParams)
 
   /** canonical ORDERING signature of a label map (wide; used only where a
     * deterministic label order matters — tiebreaks, sorted folds) */
-  private def sigOf(m: Column): Column = array_sort(map_entries(m))
+  private def sigOf(m: Column): Column = Engine.sortedLabels(m)
 
   /** 8-byte shuffle/join key: xxhash64 of the canonical signature. Every
     * groupBy/join/window that only needs EQUALITY keys on this instead of
     * shuffling the wide array<struct> signature (SURVEY §1.5 series_id;
     * collision probability ~2^-64 per pair). */
-  private def hsig(m: Column): Column = xxhash64(array_sort(map_entries(m)))
+  private def hsig(m: Column): Column = Engine.seriesSig(m)
 
   /** Stored-or-computed series signature: a store may materialize
-    * `__sg = xxhash64(array_sort(map_entries(labels)), 42)` at ingest
+    * `__sg` = [[Engine.seriesSig]] of `labels` at ingest
     * ([[Engine.withSeriesSig]] — the analog of the reference's series ID in
     * the TSDB index, tsdb/index/postings.go). When present, every selector
-    * skips one hash+sort pass per sample AND the scan→exchange projection
-    * stays fully codegen'd (array_sort's lambda is a CodegenFallback). When
-    * absent, the hash is computed once here, after time pruning. */
+    * skips one hash+sort pass per sample. When absent, the hash is computed
+    * once here, after time pruning. */
   private def withSg(df: DataFrame): DataFrame =
     if (df.columns.contains("__sg")) df else df.withColumn("__sg", hsig(col("labels")))
 

@@ -65,7 +65,7 @@ object Ingest {
     val spark = samples.sparkSession
     import spark.implicits._
     val keyed = samples
-      .select(to_json(map_from_entries(array_sort(map_entries(col("labels"))))).as("sig"),
+      .select(to_json(map_from_entries(Engine.sortedLabels(col("labels")))).as("sig"),
         col("labels"), col("t"), col("v"))
       .as[SeriesEvent]
       .groupByKey(_.sig)
@@ -106,8 +106,8 @@ object Ingest {
         .when(l === "-Inf", lit(Double.NegativeInfinity))
         .otherwise(l.cast("double"))
     }
-    def sig(c: org.apache.spark.sql.Column) = xxhash64(to_json(
-      map_from_entries(array_sort(map_entries(c)))))
+    def sig(c: org.apache.spark.sql.Column) =
+      xxhash64(to_json(map_from_entries(Engine.sortedLabels(c))))
     val b = floats.filter(name.endsWith("_bucket") && map_contains_key(col("labels"), "le"))
       .withColumn("le", leVal).filter(col("le").isNotNull)
       .withColumn("base", strip("_bucket"))

@@ -95,6 +95,13 @@ final class FanoutStore(
         } catch { case _: Exception => None } // degrade: skip failing secondary
       }
     }
-    remote.foldLeft(Engine.canonical(local))(_ unionByName _)
+    // a remote frame gains the columns the store derives from labels
+    val localDf = Engine.canonical(local)
+    def likeLocal(r: DataFrame): DataFrame = localDf.columns.foldLeft(r) {
+      case (d, "__sg") => Engine.withSeriesSig(d)
+      case (d, "metric") => d.withColumn("metric", element_at(col("labels"), "__name__"))
+      case (d, _) => d
+    }
+    remote.foldLeft(localDf)((acc, r) => acc.unionByName(likeLocal(r)))
   }
 }

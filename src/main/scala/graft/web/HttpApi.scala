@@ -572,7 +572,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
       // full series set — at real cardinality (millions of matched series)
       // the un-limited collect is a driver OOM, not a slowdown.
       val rows = planLimit(seriesSet(p)
-        .groupBy(xxhash64(array_sort(map_entries(col("labels")))).as("__sg"))
+        .groupBy(Engine.seriesSig(col("labels")).as("__sg"))
         .agg(first(col("labels")).as("labels"))
         .select(col("labels")), p).collect().toSeq
       val (kept, warns) = applyLimit(
@@ -648,7 +648,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
       val ts = nowMs()
       val rows = seriesSet(p)
         .filter(col("t") > ts - 300000L && col("t") <= ts && col("h").isNull)
-        .groupBy(xxhash64(array_sort(map_entries(col("labels")))).as("__sg"))
+        .groupBy(Engine.seriesSig(col("labels")).as("__sg"))
         .agg(max_by(struct(col("labels"), col("t"), col("v")), col("t")).as("p"))
         .select(col("p.labels"), col("p.t"), col("p.v")).collect().toSeq
       val sb = new StringBuilder
@@ -772,6 +772,9 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
           "gauge", Seq(Map.empty[String, String] -> notifications.active.size.toDouble)),
         ("prometheus_engine_queries_concurrent_max", "Max concurrent queries.",
           "gauge", Seq(Map.empty[String, String] -> limits.maxConcurrent.toDouble)),
+        // the series dictionary's size, read without a Spark job
+        ("prometheus_tsdb_head_series", "Total number of series in the head block.",
+          "gauge", Seq(Map.empty[String, String] -> store.numSeries.toDouble)),
         // ref #18081 — samples read (storage I/O) across queries; moves on
         // every API query (see Engine.samplesReadTotal)
         ("prometheus_engine_query_samples_read_total",
@@ -911,7 +914,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
           // the raw map would hash the same series differently per ingest
           // path's map ordering)
           approx_count_distinct(
-            xxhash64(array_sort(map_entries(col("labels"))))).as("numSeries"),
+            Engine.seriesSig(col("labels"))).as("numSeries"),
           min(col("t")).as("minT"), max(col("t")).as("maxT"))
         .orderBy(col("block")).collect().toSeq
       val blocks = rows.map { r =>
@@ -1077,7 +1080,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
           n
       }
       val s = store.samples
-      val sl = s.select(array_sort(map_entries(col("labels"))).as("sl"))
+      val sl = s.select(Engine.sortedLabels(col("labels")).as("sl"))
         .distinct().cache()
       try {
         val numSeries = sl.count()
@@ -1417,7 +1420,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
           matcherFilter(
               store.samples.filter(col("t") >= q.startMs && col("t") <= q.endMs &&
                 !col("stale") && col("h").isNull), q.matchers)
-            .groupBy(xxhash64(array_sort(map_entries(col("labels")))).as("__sg"))
+            .groupBy(Engine.seriesSig(col("labels")).as("__sg"))
             .agg(first(col("labels")).as("labels"),
               sort_array(collect_list(struct(col("t"), col("v")))).as("pts"))
             .select(col("labels"), col("pts"))
@@ -1518,7 +1521,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         case Some(df) =>
           matcherFilter(df.filter(col("exemplar.t") >= start && col("exemplar.t") <= end),
               parseMatch(q))
-            .groupBy(xxhash64(array_sort(map_entries(col("labels")))).as("__sg"))
+            .groupBy(Engine.seriesSig(col("labels")).as("__sg"))
             // sort_array can't order structs containing MAPs — sort driver-side
             .agg(first(col("labels")).as("labels"),
               collect_list(struct(col("exemplar.t").as("t"),

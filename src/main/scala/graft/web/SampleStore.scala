@@ -1,32 +1,45 @@
 package graft.web
 
 import graft.promql.{Engine, LabelMatcher}
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression,
+  UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{Metadata, StructType}
+import org.apache.spark.sql.types.{LongType, Metadata, StructField, StructType}
 import org.apache.spark.unsafe.Platform
+import scala.collection.{immutable, mutable}
 
 /** Mutable sample store backing the serving layer (HTTP API, remote write,
   * federation).
   *
-  * Appended data is SEALED once: an append encodes its rows into `UnsafeRow`
-  * bytes exactly once and keeps them as an immutable chunk (the analog of
-  * the reference's head-block chunks, tsdb/head.go:71). Rows that originate
-  * on the driver ([[appendRows]]: remote-write/OTLP decode, scrape reports
-  * and staleness markers) are encoded without a Spark job; a DataFrame
-  * ([[append]]: rule output, scraped frames) is evaluated by one job at
-  * append time, so a failure throws from `append` and leaves the store as
-  * it was, and no later read re-runs the batch's plan. [[samples]] is the
-  * constructor's frame ∪ ONE scan over a snapshot of the chunk vector, with
-  * tombstone filters on top: its plan has a fixed size however many batches
-  * were appended.
+  * The store keeps each series' labels ONCE, in a series dictionary keyed
+  * by the series signature `__sg` ([[Engine.seriesSig]]), and the samples
+  * in narrow chunks of `(__sg, t, v, stale, h, stt)` rows (the analog of the
+  * reference's head block: `memSeries` in `stripeSeries`, and the chunks
+  * that refer to a series by its ref, tsdb/head.go:71). Appended data is
+  * SEALED once: an append encodes its rows into `UnsafeRow` bytes exactly
+  * once and keeps them as an immutable chunk. Rows that originate on the
+  * driver ([[appendRows]]: remote-write/OTLP decode, scrape reports and
+  * staleness markers) are encoded without a Spark job, each label set
+  * interned on the driver; a DataFrame ([[append]]: rule output, scraped
+  * frames) is evaluated by one job at append time, which also returns the
+  * series the dictionary lacks, so a failure throws from `append` and
+  * leaves the store as it was, and no later read re-runs the batch's plan.
+  * A batch's new series and its chunks are committed in one swap, so no
+  * read sees a chunk whose series is missing.
+  *
+  * [[samples]] is the constructor's frame ∪ ONE scan over a snapshot of the
+  * chunk vector joined to the series dictionary by broadcast, with
+  * tombstone filters on top: its plan has a fixed size however many
+  * batches were appended, and a selector's label matchers run on the
+  * series side, once per series rather than once per sample.
   *
   * Deletions are recorded as TOMBSTONES — (matchers, interval) pairs applied
   * as filters at read time, exactly the reference's model
@@ -43,42 +56,64 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   final case class Tombstone(matchers: List[LabelMatcher], minT: Long, maxT: Long)
 
   /** what a read sees: the constructor's frame (unless it is provably
-    * empty, and until [[cleanTombstones]] seals it), the sealed chunks in
-    * append order, and the tombstones */
-  private case class State(head: Option[DataFrame], chunks: Vector[Chunk],
+    * empty, and until [[cleanTombstones]] seals it), the series dictionary,
+    * the sealed chunks in append order, and the tombstones */
+  private case class State(head: Option[DataFrame], series: Series, chunks: Vector[Chunk],
       tombs: List[Tombstone])
 
-  // a base loaded from the block sink carries __sg/metric (Ingest.sink);
-  // the chunks hold the six canonical columns, so samples derives the same
-  // columns over the chunk scan once
-  private val sinkCols = Seq("__sg", "metric").filter(initial.columns.contains)
+  /** the series dictionary: `__sg` → the series' ([[SeriesSchema]]) row.
+    * It only grows: a deleted series keeps its entry, and no chunk refers
+    * to it any more. The frame over it is built once per dictionary. */
+  private final class Series(val rows: Map[Long, InternalRow]) {
+    def ++(fresh: Iterable[InternalRow]): Series = {
+      val add = fresh.filterNot(r => rows.contains(r.getLong(0)))
+      if (add.isEmpty) this else new Series(rows ++ add.map(r => r.getLong(0) -> r))
+    }
+
+    lazy val frame: DataFrame = {
+      val df = broadcast(GraftBridge.localFrame(spark, SeriesSchema, rows.values.toSeq))
+      if (withMetric) df.withColumn("metric", element_at(col("labels"), "__name__")) else df
+    }
+  }
+
+  // a base loaded from the block sink carries `metric` (Ingest.sink); the
+  // series frame then derives it, once per series
+  private val withMetric = initial.columns.contains("metric")
   // a provably empty constructor frame (the server's) is no head: its full
   // schema would count h/stt as present, and the planner would keep the
   // histogram and start-timestamp legs over a float-only store
   private val head = Some(initial).filterNot(provablyEmpty)
   private val headHas = head.fold(Set.empty[String])(h => Optional.filter(h.columns.contains))
 
-  @volatile private var state = State(head.map(Engine.canonical), Vector.empty, Nil)
+  @volatile private var state = State(
+    head.map { h =>
+      val c = Engine.canonical(h)
+      if (c.columns.contains("__sg")) c else Engine.withSeriesSig(c)
+    },
+    new Series(Map.empty), Vector.empty, Nil)
 
-  /** the scan over `chunks`, in canonical schema plus the sink columns. A
-    * column is nullable if it was in any chunk's source; `h`/`stt` stay
-    * marked store-absent while neither the constructor's frame nor any
-    * chunk has one (the union below keeps its first child's metadata, so
-    * the head drops the mark once a chunk brings the column) */
-  private def scan(chunks: Vector[Chunk], absent: Set[String]): DataFrame = {
-    val schema = StructType(Engine.samplesSchema.fields.map { f =>
-      f.copy(nullable = f.nullable || chunks.exists(_.nullable(f.name)),
+  /** labels → `__sg` of every label set [[appendRows]] has seen; bounded by
+    * the dictionary, since the signature is a function of the labels */
+  private val sigs = new ConcurrentHashMap[AnyRef, java.lang.Long]()
+
+  /** the chunk scan joined to the series: the canonical columns, `__sg`
+    * and, over a block-sink base, `metric`. A column is nullable if it was
+    * in any chunk's source; `h`/`stt` stay marked store-absent while
+    * neither the constructor's frame nor any chunk has one (the union below
+    * keeps its first child's metadata, so the head drops the mark once a
+    * chunk brings the column) */
+  private def scan(s: State, absent: Set[String]): DataFrame = {
+    val schema = StructType(ChunkSchema.fields.map { f =>
+      f.copy(nullable = f.nullable || s.chunks.exists(_.nullable(f.name)),
         metadata = if (absent(f.name)) Engine.storeAbsent else Metadata.empty)
     })
-    val df = GraftBridge.internalCreateDataFrame(spark,
-      new ChunkRDD(spark.sparkContext, chunks), schema)
-    sinkCols.foldLeft(df) {
-      case (d, "__sg") => Engine.withSeriesSig(d)
-      case (d, _) => d.withColumn("metric", element_at(col("labels"), "__name__"))
-    }
+    GraftBridge.internalCreateDataFrame(spark, new ChunkRDD(spark.sparkContext, s.chunks), schema)
+      .join(s.series.frame, "__sg")
+      .select((Engine.samplesSchema.fieldNames.toSeq ++ Seq("__sg") ++
+        (if (withMetric) Seq("metric") else Nil)).map(col): _*)
   }
 
-  /** canonical samples view with tombstones applied */
+  /** canonical samples view, with `__sg`, tombstones applied */
   def samples: DataFrame = {
     val s = state
     val absent = Optional.filterNot(c => headHas(c) || s.chunks.exists(_.has(c)))
@@ -87,8 +122,8 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
       case Some(h) =>
         (Optional -- headHas -- absent)
           .foldLeft(h)((d, c) => d.withMetadata(c, Metadata.empty))
-          .unionByName(scan(s.chunks, absent))
-      case None => scan(s.chunks, absent)
+          .unionByName(scan(s, absent))
+      case None => scan(s, absent)
     }
     s.tombs.foldLeft(all) { (df, ts) =>
       val hit = ts.matchers.map(_.cond(col("labels"))).reduce(_ && _) &&
@@ -97,21 +132,42 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
     }
   }
 
-  private def commit(chunks: Seq[Chunk]): Unit =
-    if (chunks.nonEmpty) synchronized { state = state.copy(chunks = state.chunks ++ chunks) }
+  /** the number of series in the dictionary: every series appended since
+    * the store was made (the constructor's frame is not counted until
+    * [[cleanTombstones]] seals it) */
+  def numSeries: Int = state.series.rows.size
+
+  /** bytes the sealed chunks hold: rows and row ends */
+  private[web] def chunkBytes: Long =
+    state.chunks.iterator.map(c => c.bytes.length + 4L * c.rows).sum
+
+  private def commit(batch: Sealed): Unit =
+    if (batch.chunks.nonEmpty) synchronized {
+      state = state.copy(series = state.series ++ batch.series,
+        chunks = state.chunks ++ batch.chunks)
+    }
 
   /** append a batch in canonical schema (e.g. rule output or a scraped
     * frame): one job evaluates it and seals its rows; if that job fails,
     * the exception propagates and the store is unchanged */
-  def append(batch: DataFrame): Unit = commit(seal(batch))
+  def append(batch: DataFrame): Unit = commit(seal(batch, state.series.rows.keySet))
 
   /** append driver-side rows in [[Engine.samplesSchema]] (e.g. a decoded
-    * remote-write request): encoded on the driver, no Spark job */
+    * remote-write request): encoded on the driver, no Spark job. A label
+    * set seen before costs one hash-map lookup. */
   def appendRows(rows: Iterable[Row]): Unit = {
     val toRow = rowSerializer.get()
-    val w = new ChunkWriter(Set.empty)
-    rows.foreach(r => w.add(toRow(r).asInstanceOf[UnsafeRow]))
-    commit(w.result().toSeq)
+    val known = state.series.rows
+    val fresh = mutable.LongMap.empty[InternalRow]
+    val w = new ChunkWriter(ChunkSchema.size, Set.empty)
+    rows.foreach { r =>
+      val labels = r.getAs[AnyRef](0)
+      val sg: Long = sigs.computeIfAbsent(labels, l => seriesRow(l).getLong(0))
+      if (!known.contains(sg) && !fresh.contains(sg)) fresh(sg) = seriesRow(labels)
+      w.addSample(toRow(Row(sg, r.get(1), r.get(2), r.get(3), r.get(4), r.get(5)))
+        .asInstanceOf[UnsafeRow])
+    }
+    commit(Sealed(fresh.values.toSeq, w.result().toSeq))
   }
 
   /** /api/v1/admin/tsdb/delete_series (ref: web/api/v1/api.go:498) */
@@ -164,8 +220,8 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   def appendExemplars(batch: DataFrame): Unit = synchronized {
     exemplarAppendCalls += 1
     if (maxExemplars <= 0L) { exemplarDf = None; exemplarCount = 0L; return }
-    import org.apache.spark.sql.functions.{array_sort, desc, lit, map_entries,
-      monotonically_increasing_id, struct, xxhash64, max => smax}
+    import org.apache.spark.sql.functions.{desc, lit, monotonically_increasing_id, struct,
+      max => smax}
     val cleaned0 = batch.filter(col("exemplar").isNotNull)
       .select(col("labels"), col("exemplar"))
     // per-series OOO/duplicate rejection (ref: tsdb/exemplar.go:231
@@ -175,15 +231,14 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
     // (the exporter exposes it unchanged until new events), older arrivals
     // are out-of-order drops. Spark struct comparison is lexicographic, so
     // the reference's three-way ordering is one column comparison.
-    def sKey(c: org.apache.spark.sql.Column) = xxhash64(array_sort(map_entries(c)))
     def ordKey(ex: org.apache.spark.sql.Column) = struct(ex.getField("t"), ex.getField("v"),
-      xxhash64(array_sort(map_entries(ex.getField("labels")))))
+      Engine.seriesSig(ex.getField("labels")))
     val cleaned = exemplarDf match {
       case Some(df) =>
         val newest = df
-          .select(sKey(col("labels")).as("__sk"), ordKey(col("exemplar")).as("__n"))
+          .select(Engine.seriesSig(col("labels")).as("__sk"), ordKey(col("exemplar")).as("__n"))
           .groupBy(col("__sk")).agg(smax(col("__n")).as("__n"))
-        cleaned0.withColumn("__sk", sKey(col("labels")))
+        cleaned0.withColumn("__sk", Engine.seriesSig(col("labels")))
           .withColumn("__c", ordKey(col("exemplar")))
           .join(newest, Seq("__sk"), "left")
           .filter(col("__n").isNull || col("__c") > col("__n"))
@@ -209,19 +264,19 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
         // first (per-series fairness), then newest-by-arrival — a burst on
         // one series evicts its OWN older exemplars before touching another
         // series' last one (ref exemplar.go per-series circular index)
-        import org.apache.spark.sql.functions.{array_sort, map_entries,
-          row_number, when, xxhash64}
+        import org.apache.spark.sql.functions.{row_number, when}
         import org.apache.spark.sql.expressions.Window
         exemplarCount = maxExemplars
-        val w = Window
-          .partitionBy(xxhash64(array_sort(map_entries(col("labels")))))
-          .orderBy(desc("__seq"))
+        val w = Window.partitionBy(Engine.seriesSig(col("labels"))).orderBy(desc("__seq"))
         merged.withColumn("__rk", row_number().over(w))
           .orderBy(when(col("__rk") === 1, 1).otherwise(0).desc, col("__seq").desc)
           .limit(math.min(maxExemplars, Int.MaxValue).toInt)
           .drop("__rk")
       }
-    exemplarDf = Some(bounded.localCheckpoint(true))
+    // sealed like the samples: one job, and the next append reads the
+    // chunks rather than re-running this append's plan
+    exemplarDf = Some(GraftBridge.internalCreateDataFrame(spark,
+      new ChunkRDD(spark.sparkContext, sealRows(bounded).toVector), bounded.schema))
   }
 
   def exemplars: Option[DataFrame] = exemplarDf.map(_.drop("__seq"))
@@ -230,30 +285,54 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
     * tombstone-applied view is sealed into chunks that replace the store's
     * contents */
   def cleanTombstones(): Unit = synchronized {
-    state = State(None, seal(samples).toVector, Nil)
+    val all = seal(samples, state.series.rows.keySet)
+    state = State(None, state.series ++ all.series, all.chunks.toVector, Nil)
   }
 
   /** /api/v1/admin/tsdb/snapshot — persist the current (tombstone-applied)
-    * view as parquet (ref: web/api/v1/api.go snapshot → tsdb Snapshot);
-    * returns the snapshot name */
+    * view as parquet (ref: web/api/v1/api.go snapshot → tsdb Snapshot), in
+    * the constructor frame's columns; returns the snapshot name */
   def snapshot(baseDir: String): String = {
     val name = s"${System.currentTimeMillis()}-${java.util.UUID.randomUUID.toString.take(8)}"
-    samples.write.mode("overwrite").parquet(s"$baseDir/$name")
+    val view = if (initial.columns.contains("__sg")) samples else samples.drop("__sg")
+    view.write.mode("overwrite").parquet(s"$baseDir/$name")
     name
   }
 }
 
 object SampleStore {
 
-  private lazy val rowEncoder = ExpressionEncoder(Engine.samplesSchema)
-  // one per thread: a serializer is not thread-safe, and making one
-  // generates code (about 6 ms, ten times the encoding of 1000 rows)
-  private val rowSerializer = ThreadLocal.withInitial(() => rowEncoder.createSerializer())
+  /** a chunk row: the series signature in place of the labels */
+  private val ChunkSchema = StructType(
+    StructField("__sg", LongType, nullable = false) +: Engine.samplesSchema.fields.tail)
+  /** a dictionary row */
+  private val SeriesSchema = StructType(Seq(
+    StructField("__sg", LongType, nullable = false), Engine.samplesSchema("labels")))
+  private val LabelsType = Engine.samplesSchema("labels").dataType
   /** the canonical columns a store may lack (see `Engine.canonical`) */
   private val Optional = Set("h", "stt")
-  private val NumFields = Engine.samplesSchema.size
-  private val H = Engine.samplesSchema.fieldIndex("h")
-  private val Stt = Engine.samplesSchema.fieldIndex("stt")
+  private val H = ChunkSchema.fieldIndex("h")
+  private val Stt = ChunkSchema.fieldIndex("stt")
+
+  private lazy val chunkEncoder = ExpressionEncoder(ChunkSchema)
+  // one per thread: a serializer is not thread-safe, and making one
+  // generates code (about 6 ms, ten times the encoding of 1000 rows)
+  private val rowSerializer = ThreadLocal.withInitial(() => chunkEncoder.createSerializer())
+  private val toCatalystLabels = CatalystTypeConverters.createToCatalystConverter(LabelsType)
+  /** [[Engine.seriesSig]] over a row of one column, `labels` */
+  private lazy val sigOfLabels: Expression = {
+    val labels = StructType(Seq(SeriesSchema("labels")))
+    val plan = SparkSession.active.createDataFrame(java.util.Collections.emptyList[Row], labels)
+      .select(Engine.seriesSig(col("labels"))).queryExecution.analyzed
+    BindReferences.bindReference(plan.expressions.head.children.head, plan.children.head.output)
+  }
+
+  /** a label set's dictionary row, its signature computed without
+    * generated code (a new series is rare next to its samples) */
+  private def seriesRow(labels: Any): InternalRow = {
+    val m = toCatalystLabels(labels)
+    InternalRow(sigOfLabels.eval(InternalRow(m)), m)
+  }
 
   /** whether a frame has no rows, read off its plan without running a job:
     * projections and filters over an empty local relation or over an RDD
@@ -268,19 +347,53 @@ object SampleStore {
     empty(df.queryExecution.analyzed)
   }
 
-  /** one job: the batch's partitions, each sealed into one chunk */
-  private def seal(batch: DataFrame): Seq[Chunk] = {
+  /** what an append commits: the series the dictionary lacked, and the
+    * chunks */
+  private final case class Sealed(series: Seq[InternalRow], chunks: Seq[Chunk])
+
+  /** one job: each of the batch's partitions sealed into one chunk, with
+    * the series in it that are not `known` */
+  private def seal(batch: DataFrame, known: collection.Set[Long]): Sealed = {
     val canon = Engine.canonical(batch)
+    val sg = if (canon.columns.contains("__sg")) col("__sg") else Engine.seriesSig(col("labels"))
     // a column already of the canonical type (nullability aside) has the
     // canonical row layout; a cast could not narrow its nullability anyway
-    val df = canon.select(Engine.samplesSchema.fields.toIndexedSeq.map { f =>
-      if (canon.schema(f.name).dataType.catalogString == f.dataType.catalogString) col(f.name)
-      else col(f.name).cast(f.dataType)
-    }: _*)
+    val df = canon.select(sg.as("__sg") +: (ChunkSchema.fields.tail :+ SeriesSchema("labels"))
+      .toIndexedSeq.map { f =>
+        if (canon.schema(f.name).dataType.catalogString == f.dataType.catalogString) col(f.name)
+        else col(f.name).cast(f.dataType)
+      }: _*)
     val nullable = df.schema.filter(_.nullable).map(_.name).toSet
+    val schema = df.schema
+    val labels = schema.size - 1
+    val chunkCols = ChunkSchema.fields.indices
+      .map(i => BoundReference(i, schema(i).dataType, schema(i).nullable))
+    val seriesCols = Seq(BoundReference(0, LongType, nullable = false),
+      BoundReference(labels, schema(labels).dataType, nullable = false))
+    val known0 = immutable.HashSet.from(known)
+    val parts = df.queryExecution.toRdd.mapPartitions { it =>
+      val toChunk = UnsafeProjection.create(chunkCols)
+      val toSeries = UnsafeProjection.create(seriesCols)
+      val w = new ChunkWriter(ChunkSchema.size, nullable)
+      val fresh = mutable.LongMap.empty[InternalRow]
+      it.foreach { r =>
+        val sg = r.getLong(0)
+        if (!known0(sg) && !fresh.contains(sg)) fresh(sg) = toSeries(r).copy()
+        w.addSample(toChunk(r))
+      }
+      Iterator((fresh.values.toSeq, w.result()))
+    }.collect()
+    Sealed(parts.flatMap(_._1).toSeq, parts.flatMap(_._2).toSeq)
+  }
+
+  /** one job: each of the frame's partitions sealed into one chunk of its
+    * schema's rows */
+  private def sealRows(df: DataFrame): Seq[Chunk] = {
+    val schema = df.schema
+    val nullable = schema.filter(_.nullable).map(_.name).toSet
     df.queryExecution.toRdd.mapPartitions { it =>
-      lazy val toUnsafe = UnsafeProjection.create(Engine.samplesSchema)
-      val w = new ChunkWriter(nullable)
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      val w = new ChunkWriter(schema.size, nullable)
       it.foreach {
         case u: UnsafeRow => w.add(u)
         case r => w.add(toUnsafe(r))
@@ -289,11 +402,11 @@ object SampleStore {
     }.collect().toSeq
   }
 
-  /** sealed rows in [[Engine.samplesSchema]]'s `UnsafeRow` layout, packed
-    * back to back in one array; `ends(i)` is where row i ends. Also kept:
-    * the columns that were nullable in the rows' source, and whether any
-    * row has a native histogram or a start timestamp. */
-  private final class Chunk(val bytes: Array[Byte], val ends: Array[Int],
+  /** sealed rows of one schema in `UnsafeRow` layout, packed back to back
+    * in one array; `ends(i)` is where row i ends. Also kept: the columns
+    * that were nullable in the rows' source, and whether any sample row
+    * has a native histogram or a start timestamp. */
+  private final class Chunk(val bytes: Array[Byte], val ends: Array[Int], numFields: Int,
       val nullable: Set[String], hasH: Boolean, hasStt: Boolean) extends Serializable {
     def rows: Int = ends.length
 
@@ -304,7 +417,7 @@ object SampleStore {
 
     /** the rows through one reused `UnsafeRow` */
     def iterator: Iterator[InternalRow] = new Iterator[InternalRow] {
-      private val row = new UnsafeRow(NumFields)
+      private val row = new UnsafeRow(numFields)
       private var i = 0
       def hasNext: Boolean = i < ends.length
       def next(): InternalRow = {
@@ -316,7 +429,7 @@ object SampleStore {
     }
   }
 
-  private final class ChunkWriter(nullable: Set[String]) {
+  private final class ChunkWriter(numFields: Int, nullable: Set[String]) {
     private var buf = new Array[Byte](1 << 12)
     private var n = 0
     private val ends = Array.newBuilder[Int]
@@ -324,13 +437,18 @@ object SampleStore {
     private var hasStt = false
 
     def add(r: UnsafeRow): Unit = {
-      // the canonical form of an absent start timestamp is 0
-      if (r.isNullAt(Stt)) r.setLong(Stt, 0L)
       val len = r.getSizeInBytes
       if (n + len > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, n + len))
       Platform.copyMemory(r.getBaseObject, r.getBaseOffset, buf, Platform.BYTE_ARRAY_OFFSET + n, len)
       n += len
       ends += n
+    }
+
+    /** a row in [[ChunkSchema]] */
+    def addSample(r: UnsafeRow): Unit = {
+      // the canonical form of an absent start timestamp is 0
+      if (r.isNullAt(Stt)) r.setLong(Stt, 0L)
+      add(r)
       hasH ||= !r.isNullAt(H)
       hasStt ||= r.getLong(Stt) != 0L
     }
@@ -339,7 +457,7 @@ object SampleStore {
     def result(): Option[Chunk] = {
       val e = ends.result()
       if (e.isEmpty) None
-      else Some(new Chunk(java.util.Arrays.copyOf(buf, n), e, nullable, hasH, hasStt))
+      else Some(new Chunk(java.util.Arrays.copyOf(buf, n), e, numFields, nullable, hasH, hasStt))
     }
   }
 

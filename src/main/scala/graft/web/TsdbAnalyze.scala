@@ -1,5 +1,6 @@
 package graft.web
 
+import graft.promql.Engine
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,7 @@ object TsdbAnalyze {
 
     // series-level pass: one row per series with its time coverage
     val series = samples
-      .groupBy(array_sort(map_entries(col("labels"))).as("sl"))
+      .groupBy(Engine.sortedLabels(col("labels")).as("sl"))
       .agg(min(col("t")).as("t0"), max(col("t")).as("t1"))
       .cache()
     try {

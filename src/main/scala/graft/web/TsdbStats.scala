@@ -1,5 +1,6 @@
 package graft.web
 
+import graft.promql.Engine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,7 +18,7 @@ object TsdbStats {
   /** one row per label name: distinct value count + series carrying it */
   def labelStats(samples: DataFrame): DataFrame =
     samples
-      .select(array_sort(map_entries(col("labels"))).as("sl"))
+      .select(Engine.sortedLabels(col("labels")).as("sl"))
       .distinct()
       .select(explode(col("sl")).as("e"))
       .groupBy(col("e.key").as("label"))
@@ -28,7 +29,7 @@ object TsdbStats {
   /** series count per metric name (seriesCountByMetricName) */
   def metricStats(samples: DataFrame): DataFrame =
     samples
-      .select(array_sort(map_entries(col("labels"))).as("sl"))
+      .select(Engine.sortedLabels(col("labels")).as("sl"))
       .distinct()
       .select(explode(col("sl")).as("e"))
       .filter(col("e.key") === "__name__")

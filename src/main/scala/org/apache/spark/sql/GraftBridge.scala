@@ -22,6 +22,13 @@ object GraftBridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
+  /** a DataFrame over a local relation of `rows`, which are already in
+    * `schema`'s internal row layout: a scan of it, or a broadcast of it,
+    * runs no Spark job */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** java.lang.Math static call on double args, whole-stage-codegen friendly */
   def mathInvoke(fn: String, args: Seq[Column]): Column =
     staticInvoke(classOf[java.lang.Math], fn, args)

@@ -583,6 +583,49 @@ class StoredSigSpec extends AnyFunSuite {
   }
 }
 
+/** [[Engine.seriesSig]] sorts with `sort_array`; stored `__sg` columns
+  * (the block sink's parquet) were written with `array_sort`, so the two
+  * must hash every label map to the same value. */
+class SeriesSigSpec extends AnyFunSuite {
+
+  test("seriesSig equals xxhash64(array_sort(map_entries(labels))) bit for bit") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{array_sort, col, map_entries, xxhash64}
+    import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val rnd = new scala.util.Random(11)
+    val alphabet = "abzAZ09_:.-é日本\u00ff \"\\"
+    def word(n: Int) = Seq.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    val maps: Seq[Map[String, String]] =
+      Seq(Map.empty[String, String], Map("" -> ""), Map("__name__" -> "m"),
+        Map("ключ" -> "значение", "名前" -> "値", "emoji" -> "\ud83d\ude00"),
+        (0 until 200).map(i => s"k$i" -> s"v${199 - i}").toMap,
+        Map("b" -> null, "a" -> "x"), Map("only" -> null)) ++
+      (0 until 500).map(_ => Seq.fill(rnd.nextInt(12))(word(1 + rnd.nextInt(6)) ->
+        (if (rnd.nextInt(10) == 0) null else word(rnd.nextInt(8)))).toMap)
+    val schema = StructType(Seq(StructField("labels",
+      MapType(StringType, StringType, valueContainsNull = true), nullable = false)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(maps.map(Row(_)), 3), schema)
+    val pairs = df.select(xxhash64(array_sort(map_entries(col("labels")))),
+      Engine.seriesSig(col("labels"))).collect()
+    assert(pairs.length == maps.size)
+    pairs.foreach(r => assert(r.getLong(0) == r.getLong(1), r))
+    // the same for the ordering form, and through the __sg column a store persists
+    assert(df.select(array_sort(map_entries(col("labels"))) === Engine.sortedLabels(col("labels")))
+      .collect().forall(_.getBoolean(0)))
+    val canon = maps.filterNot(_.values.exists(_ == null)).map(Row(_, 0L, 0.0, false, null, 0L))
+    val stored = Engine.withSeriesSig(spark.createDataFrame(
+      spark.sparkContext.parallelize(canon, 2), Engine.samplesSchema))
+    assert(stored.filter(col("__sg") =!= xxhash64(array_sort(map_entries(col("labels")))))
+      .count() == 0)
+  }
+}
+
 /** Eval-order parity of the k-variant aggregations above 2²⁰ series: the
   * reference's limitk keeps a deterministic subset and limit_ratio's
   * hash-sampled complements partition exactly (engine.go aggregationK

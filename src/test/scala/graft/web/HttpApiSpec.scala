@@ -545,4 +545,32 @@ class HttpApiSpec extends AnyFunSuite {
       assert(secondAt.get() - firstAt.get() >= 900L * 1000 * 1000)
     } finally server.stop(0)
   }
+
+  test("prometheus_tsdb_head_series counts the series dictionary") {
+    val store = new SampleStore(spark,
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Engine.samplesSchema))
+    val api = new HttpApi(spark, store, 0, () => 600000L)
+    api.start()
+    try {
+      val port = api.boundPort
+      def write(samples: Seq[RemoteWrite.Sample]): Unit = {
+        val resp = client.send(
+          HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/api/v1/write"))
+            .header("Content-Encoding", "snappy")
+            .header("Content-Type", "application/x-protobuf")
+            .POST(HttpRequest.BodyPublishers.ofByteArray(RemoteWrite.encodeV1(samples))).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 204)
+      }
+      def series(i: Int) = Map("__name__" -> "hs", "i" -> i.toString)
+      write((0 until 3).map(i => RemoteWrite.Sample(series(i), 1000L, i.toDouble)))
+      write((0 until 3).map(i => RemoteWrite.Sample(series(i), 2000L, i.toDouble)))
+      write(Seq(RemoteWrite.Sample(series(3), 2000L, 3.0)))
+      val (c, b) = get(port, "/metrics")
+      assert(c == 200)
+      assert(b.contains("# HELP prometheus_tsdb_head_series Total number of series in the head block.\n" +
+        "# TYPE prometheus_tsdb_head_series gauge\n"), b)
+      assert(b.linesIterator.contains("prometheus_tsdb_head_series 4"), b)
+    } finally api.stop()
+  }
 }

@@ -187,4 +187,106 @@ class SampleStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(one("f") == Seq(1.0))
     }
   }
+
+  // ---------- the series dictionary ----------
+
+  /** the i-th of ten label sets */
+  private def labelSet(i: Int) = Map("__name__" -> s"d_${i % 3}", "k" -> i.toString)
+
+  test("200 mixed batches over the same 10 label sets leave exactly 10 series") {
+    val store = emptyStore
+    (0 until 200).foreach { b =>
+      val batch = (0 until 5).map(j => Row(labelSet((b + j) % 10), b * 1000L + j, j.toDouble,
+        false, null, 0L))
+      if (b % 3 == 0) store.append(frame(batch)) else store.appendRows(batch)
+    }
+    assert(store.numSeries == 10)
+    assert(store.samples.count() == 1000)
+    assert(store.samples.select(Engine.sortedLabels(col("labels"))).distinct().count() == 10)
+  }
+
+  test("every chunk row's __sg is Engine.withSeriesSig of its labels") {
+    val store = emptyStore
+    store.appendRows(rows.take(200))
+    store.append(frame(rows.drop(200)))
+    val withSg = store.samples
+    assert(withSg.count() == rows.size)
+    val recomputed = Engine.withSeriesSig(withSg.drop("__sg"))
+      .select("__sg", "labels", "t").collect().map(_.toString).sorted.toSeq
+    assert(withSg.select("__sg", "labels", "t").collect().map(_.toString).sorted.toSeq ==
+      recomputed)
+  }
+
+  test("a sealed float sample takes at most 64 bytes") {
+    val store = emptyStore
+    store.appendRows(rows.take(300))
+    store.append(frame(rows.drop(300)))
+    assert(store.chunkBytes.toDouble / rows.size <= 64.0, store.chunkBytes)
+  }
+
+  test("a reader between appends never sees fewer rows than were committed before it began") {
+    val store = emptyStore
+    val committed = new java.util.concurrent.atomic.AtomicLong()
+    val done = new java.util.concurrent.atomic.AtomicBoolean()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread(() => {
+      while (!done.get) {
+        val before = committed.get
+        val n = store.samples.count()
+        if (n < before) seen.add(s"saw $n after $before were committed")
+      }
+    })
+    reader.start()
+    try (0 until 60).foreach { b =>
+      // every batch brings a new series, so each commit grows the dictionary too
+      val batch = (0 until 5).map(j => Row(Map("__name__" -> "r", "b" -> b.toString),
+        b * 1000L + j, j.toDouble, false, null, 0L))
+      if (b % 4 == 0) store.append(frame(batch)) else store.appendRows(batch)
+      committed.addAndGet(batch.size)
+    } finally { done.set(true); reader.join() }
+    assert(seen.isEmpty, seen)
+    assert(store.samples.count() == 300 && store.numSeries == 60)
+  }
+
+  test("a selector's label matchers run on the series, not on every sample") {
+    val store = new SampleStore(spark,
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Engine.samplesSchema))
+    def plan() = Engine.instantQuery(spark, store.samples,
+      """sum(count_over_time({__name__=~"m.*", job!="c"}[5m]))""", evalMs) match {
+      case VectorVal(df) => df.queryExecution
+      case other => fail(s"unexpected $other")
+    }
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort, Expression, RLike, SortArray,
+      XxHash64}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.LogicalRDD
+    def perSample(e: Expression) = e.exists {
+      case _: RLike | _: XxHash64 | _: ArraySort | _: SortArray => true
+      case _ => false
+    }
+    def chunkSide(p: LogicalPlan) = p.exists(_.isInstanceOf[LogicalRDD]) &&
+      !p.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    store.appendRows(rows.take(100))
+    val first = plan()
+    (1 until 20).foreach(i => store.appendRows(rows.slice(100 + i * 10, 110 + i * 10)))
+    val qe = plan()
+    val opt = qe.optimizedPlan
+    // below the join, the chunk scan's side has no matcher and no hash
+    val joins = opt.collect { case j: Join => j }
+    assert(joins.nonEmpty, opt)
+    opt.foreach { p =>
+      if (chunkSide(p)) assert(!p.expressions.exists(perSample), p)
+    }
+    // above the join, no label matcher runs per sample
+    opt.foreach { p =>
+      if (p.exists(_.isInstanceOf[Join]))
+        assert(!p.expressions.exists(_.exists(_.isInstanceOf[RLike])), p)
+    }
+    assert(qe.executedPlan.toString.contains("BroadcastHashJoin"))
+    def nodes(q: org.apache.spark.sql.execution.QueryExecution) =
+      q.optimizedPlan.collect { case p => p }.size
+    assert(nodes(qe) == nodes(first))
+    assert(answer(store.samples, "count(m)") == answer(frame(rows.take(100) ++
+      (1 until 20).flatMap(i => rows.slice(100 + i * 10, 110 + i * 10))), "count(m)"))
+  }
 }
