@@ -1,7 +1,9 @@
 package graft.promqltest
 
 import graft.promql._
+import graft.streaming.{Config, ConfigCheck, Rules}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import scala.collection.mutable
 import YamlLite.{YList, YMap, YNode, YScalar}
 
@@ -11,19 +13,19 @@ import YamlLite.{YList, YMap, YNode, YScalar}
   * grid, then check `promql_expr_test` samples and `alert_rule_test` firing
   * alerts.
   *
+  * Rule files load through the server's loader ([[Config.loadRuleGroups]])
+  * and every tick goes through the server's rule step ([[Rules.step]]).
   * Execution twist: the reference loops tick-by-tick (`unittest.go:330`),
   * re-running every rule at every `evaluation_interval` — fine in-process,
   * hopeless when each rule eval is a distributed query. Here each rule is ONE
   * all-steps-at-once RANGE query over the whole grid (the engine's range
-  * semantics are exactly per-step instant evaluation), and only the driver-side
-  * post-processing walks ticks: recording outputs append with per-tick
-  * staleness markers (ref: rules/group.go seriesInPreviousEval), and the alert
-  * state machine (pending → for → firing → keep_firing_for,
-  * rules/alerting.go:387 Eval) folds over the collected per-tick results.
-  * Rules therefore must not read their own (or a later rule's) output at an
-  * EARLIER tick — same-tick visibility, the common case, is preserved by
-  * evaluating rules in dependency file order; the divergent case is detected
-  * and reported as unsupported.
+  * semantics are exactly per-step instant evaluation), and [[Rules.step]]
+  * folds over the collected per-tick results, appending recorded samples,
+  * ALERTS and staleness markers as the live tick does. Rules therefore must
+  * not read their own (or a later rule's) output at an EARLIER tick —
+  * same-tick visibility, the common case, is preserved by evaluating rules
+  * in file order; the divergent case is detected and reported as
+  * unsupported.
   */
 object RuleUnitTest {
 
@@ -43,19 +45,8 @@ object RuleUnitTest {
       name: String, intervalMs: Long, startMs: Long,
       input: List[(Map[String, String], Vector[TestScript.SeriesValue])],
       promql: List[PromqlCase], alertCases: List[AlertCase],
-      externalLabels: Map[String, String])
-  private final case class RRule(
-      record: String, alert: String, expr: String,
-      forMs: Long, keepFiringMs: Long,
-      labels: Map[String, String], annotations: Map[String, String]) {
-    def isAlert: Boolean = alert.nonEmpty
-    def name: String = if (isAlert) alert else record
-  }
-  private final case class RGroup(name: String, rules: List[RRule])
-
+      externalLabels: Map[String, String], externalUrl: String)
   private final case class TestError(msg: String) extends RuntimeException(msg)
-
-  private val ResolvedRetentionMs = 15L * 60 * 1000 // rules/alerting.go resolvedRetention
 
   // ---------- YAML → structures ----------
 
@@ -78,44 +69,6 @@ object RuleUnitTest {
       case (k, other) => throw TestError(s"$where: label '$k' must be a scalar, got $other")
     }.toMap
     case Some(other) => throw TestError(s"$where: expected a map, got $other")
-  }
-
-  private def parseRuleFile(path: String, ignoreUnknown: Boolean): List[RGroup] = {
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
-    val root = YamlLite.parse(text) match {
-      case m: YMap => m
-      case other => throw TestError(s"$path: expected mapping at top level, got $other")
-    }
-    if (!ignoreUnknown) strict(root, Set("groups"), path)
-    root.list("groups").map {
-      case g: YMap =>
-        if (!ignoreUnknown)
-          strict(g, Set("name", "interval", "limit", "rules", "labels", "query_offset"), s"$path group")
-        val gname = g.str("name").getOrElse("")
-        val rules = g.list("rules").map {
-          case r: YMap =>
-            if (!ignoreUnknown)
-              strict(r, Set("record", "alert", "expr", "for", "keep_firing_for",
-                "labels", "annotations"), s"$path rule")
-            val record = r.str("record").getOrElse("")
-            val alert = r.str("alert").getOrElse("")
-            if ((record.nonEmpty) == (alert.nonEmpty))
-              throw TestError(s"$path: rule must have exactly one of 'record' and 'alert'")
-            val expr = r.str("expr").getOrElse(
-              throw TestError(s"$path: rule '${if (alert.nonEmpty) alert else record}' missing expr"))
-            // rule expressions must parse at load time (ref rulefmt validation)
-            try Engine.parse(expr)
-            catch { case e: Throwable =>
-              throw TestError(s"$path: invalid expr '$expr': ${e.getMessage}") }
-            RRule(record, alert, expr,
-              r.str("for").map(durMs).getOrElse(0L),
-              r.str("keep_firing_for").map(durMs).getOrElse(0L),
-              kvMap(r.get("labels"), path), kvMap(r.get("annotations"), path))
-          case other => throw TestError(s"$path: bad rule node $other")
-        }
-        RGroup(gname, rules)
-      case other => throw TestError(s"$path: bad group node $other")
-    }
   }
 
   private def parseSampleList(n: Option[YNode]): List[PSample] = n match {
@@ -180,32 +133,17 @@ object RuleUnitTest {
         case other => throw TestError(s"bad alert_rule_test node $other")
       }
       TG(m.str("name").getOrElse(""), interval, start, input, promql, alerts,
-        kvMap(m.get("external_labels"), "external_labels"))
+        kvMap(m.get("external_labels"), "external_labels"),
+        m.str("external_url").getOrElse(""))
     case other => throw TestError(s"bad test group node $other")
   }
 
   // ---------- feature-flag + dependency checks ----------
 
-  private def walk(e: Expr)(f: Expr => Unit): Unit = {
-    f(e)
-    e match {
-      case ms: MatrixSelector => walk(ms.vs)(f)
-      case sv: SmoothedVector => walk(sv.vs)(f)
-      case sq: SubqueryExpr => walk(sq.expr)(f)
-      case c: Call => c.args.foreach(walk(_)(f))
-      case a: AggregateExpr => walk(a.expr)(f); a.param.foreach(walk(_)(f))
-      case b: BinaryExpr => walk(b.lhs)(f); walk(b.rhs)(f)
-      case u: UnaryExpr => walk(u.expr)(f)
-      case p: ParenExpr => walk(p.expr)(f)
-      case _ => ()
-    }
-  }
-
   /** engine feature gates (ref: promql/engine.go:318,325 EnableAtModifier /
     * EnableNegativeOffset — validated per query, not at parse) */
   private def checkFeatures(exprText: String, opts: Opts): Unit = {
-    val e = Engine.parse(exprText)
-    walk(e) {
+    Rules.walk(Engine.parse(exprText)) {
       case vs: VectorSelector =>
         if (!opts.enableAtModifier && vs.at.nonEmpty)
           throw TestError("@ modifier is disabled")
@@ -220,56 +158,13 @@ object RuleUnitTest {
     }
   }
 
-  /** Which of `produced` could a selector in the expression read?
-    * CONSERVATIVE: regex / negative / name-less __name__ constraints count
-    * every produced name their matcher set could admit — a rule reading its
-    * own output through `{__name__=~"ALERTS.*"}` must trip the cross-tick
-    * feedback guard, not silently return wrong per-tick results. */
-  private def referencedProduced(exprText: String, produced: Set[String]): Set[String] = {
-    val out = mutable.Set[String]()
-    try walk(Engine.parse(exprText)) {
-      case vs: VectorSelector =>
-        val nameMs = vs.matchers.filter(_.name == "__name__")
-        if (vs.metricName.isEmpty && nameMs.isEmpty) out ++= produced
-        else {
-          out ++= vs.metricName.filter(produced)
-          nameMs.foreach { m =>
-            def re = ("^(?:" + m.value + ")$").r
-            m.op match {
-              case MatchOp.Eq => if (produced(m.value)) out += m.value
-              case MatchOp.Neq => out ++= produced - m.value
-              case MatchOp.Re => out ++= produced.filter(n => re.findFirstIn(n).isDefined)
-              case MatchOp.NotRe => out ++= produced.filter(n => re.findFirstIn(n).isEmpty)
-            }
-          }
-        }
-      case _ => ()
-    } catch { case _: Throwable => () }
-    out.toSet
-  }
-
   // ---------- evaluation ----------
-
-  private def hRowOf(h: FHist): Row = Runner.hRow(h)
-
-  /** template mini-expander: `{{ $labels.x }}`, `{{ $value }}`,
-    * `{{ $externalLabels.x }}` (ref: template/template.go AlertTemplateData —
-    * the corpus uses only these forms) */
-  private def expand(text: String, labels: Map[String, String], value: Double,
-      external: Map[String, String]): String = {
-    val re = "\\{\\{\\s*\\$(labels|externalLabels)\\.([A-Za-z_][A-Za-z0-9_]*)\\s*\\}\\}|\\{\\{\\s*\\$value\\s*\\}\\}".r
-    re.replaceAllIn(text, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (m.group(1) == null) RangeUdfs.goFormat(value)
-        else if (m.group(1) == "labels") labels.getOrElse(m.group(2), "")
-        else external.getOrElse(m.group(2), "")))
-  }
 
   private def canon(l: Map[String, String]): String =
     l.toSeq.sorted.map { case (k, v) => s"$k\u0000$v" }.mkString("\u0001")
 
   /** run one test group; returns error strings (empty = pass) */
-  private def runGroup(spark: SparkSession, tg: TG, groups: List[RGroup],
+  private def runGroup(spark: SparkSession, tg: TG, groups: Seq[Rules.Group],
       evalIntervalMs: Long, fuzzy: Boolean, opts: Opts): List[String] = {
     val errs = mutable.ArrayBuffer[String]()
 
@@ -295,7 +190,7 @@ object RuleUnitTest {
                 case None => h0
               }
             prevH = Some(h0)
-            store += Row(labels, t, Double.NaN, false, hRowOf(h), 0L)
+            store += Row(labels, t, Double.NaN, false, Runner.hRow(h), 0L)
           case TestScript.Gap => ()
           case TestScript.Unsupported =>
             throw TestError(s"unsupported series notation for ${labels.getOrElse("__name__", "?")}")
@@ -303,30 +198,11 @@ object RuleUnitTest {
         t += tg.intervalMs
       }
     }
-    def storeDf(): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(store.toList.asJava, Engine.samplesSchema)
-    }
-
     val maxEvalMs = (tg.promql.map(_.evalMs) ++ tg.alertCases.map(_.evalMs) :+ 0L).max
     val mint = tg.startMs
     val maxt = mint + maxEvalMs
     val nTicks = ((maxt - mint) / evalIntervalMs + 1).toInt
     val ticks: Vector[Long] = Vector.iterate(mint, nTicks)(_ + evalIntervalMs)
-
-    // ---- rule order sanity: range-eval requires producers-before-consumers
-    // across ticks (see object scaladoc) ----
-    val flat = groups.flatMap(_.rules)
-    val producedAfter: Array[Set[String]] = flat.indices.toArray.map { i =>
-      flat.drop(i).flatMap(r =>
-        if (r.isAlert) Seq("ALERTS", "ALERTS_FOR_STATE") else Seq(r.record)).toSet
-    }
-    flat.zipWithIndex.foreach { case (r, i) =>
-      val refs = referencedProduced(r.expr, producedAfter(i))
-      if (refs.nonEmpty)
-        throw TestError(s"rule '${r.name}' reads ${refs.mkString(",")} produced by itself or a " +
-          "later rule — cross-tick feedback is unsupported in range-evaluated rule testing")
-    }
 
     // per-alertname snapshots of FIRING alerts at each tick we must report on
     val alertTickOf: Map[Long, Long] = tg.alertCases.map { c =>
@@ -336,34 +212,11 @@ object RuleUnitTest {
       .map(c => (alertTickOf(c.evalMs), c.alertname)).toSet
     val firingSnapshots = mutable.Map[(Long, String), List[ExpAlert]]().withDefaultValue(Nil)
 
-    // ---- evaluate every rule as one range query ----
-    groups.foreach { g =>
-      g.rules.foreach { r =>
-        checkFeatures(r.expr, opts)
-        val value =
-          try Engine.rangeQuery(spark, storeDf(), r.expr, mint, ticks.last, evalIntervalMs,
-            defaultSubqueryStepMs = evalIntervalMs)
-          catch { case e: Throwable =>
-            throw TestError(s"rule: ${r.name}, err: ${e.getMessage}") }
-        // collect per-tick results: (labels, v, h)
-        val byTick: Map[Long, Seq[(Map[String, String], Double, Option[FHist])]] =
-          try {
-            val rows = value match {
-              case VectorVal(df) => df.select(df("labels"), df("t"), df("v"), df("h")).collect()
-                .map(r0 => (r0.getMap[String, String](0).toMap, r0.getLong(1), r0.getDouble(2),
-                  if (r0.isNullAt(3)) None else Some(Runner.fhistFromRow(r0.getStruct(3)))))
-              case ScalarVal(df, _) => df.collect()
-                .map(r0 => (Map.empty[String, String], r0.getLong(0), r0.getDouble(1), None))
-              case other => throw TestError(s"rule result is not a vector or scalar")
-            }
-            rows.groupBy(_._2).map { case (t, rs) =>
-              t -> rs.toSeq.map(x => (x._1, x._3, x._4)) }
-          } catch { case e: Throwable =>
-            throw TestError(s"rule: ${r.name}, err: ${Option(e.getMessage).getOrElse(e.toString).take(300)}") }
-
-        if (!r.isAlert) evalRecordingRule(r, byTick, ticks, store)
-        else evalAlertingRule(r, byTick, ticks, tg, store, neededTicks, firingSnapshots)
-      }
+    foldRules(spark, groups, ticks, evalIntervalMs, store, tg.externalLabels,
+      tg.externalUrl, opts) { (r, ts, st) =>
+      if (neededTicks.contains((ts, r.name)))
+        firingSnapshots((ts, r.name)) ++= st.alerts.values
+          .filter(_.firingSinceMs >= 0L).map(a => ExpAlert(a.labels, a.annotations))
     }
 
     // ---- alert expectations ----
@@ -378,7 +231,7 @@ object RuleUnitTest {
     }
 
     // ---- promql expectations ----
-    val finalDf = storeDf()
+    val finalDf = samplesOf(spark, store)
     tg.promql.foreach { c =>
       try {
         checkFeatures(c.expr, opts)
@@ -420,125 +273,59 @@ object RuleUnitTest {
     errs.toList
   }
 
-  /** recording rule: rewrite __name__, merge static labels, per-tick staleness
-    * (ref: rules/recording.go:85 Eval + rules/group.go vanished-series
-    * markers) */
-  private def evalRecordingRule(r: RRule,
-      byTick: Map[Long, Seq[(Map[String, String], Double, Option[FHist])]],
-      ticks: Vector[Long], store: mutable.ArrayBuffer[Row]): Unit = {
-    var prev = Set.empty[Map[String, String]]
-    ticks.foreach { ts =>
-      val outs = byTick.getOrElse(ts, Nil).map { case (labels, v, h) =>
-        val lbls = (labels - "__name__") ++ r.labels + ("__name__" -> r.record)
-        (lbls, v, h)
-      }
-      val dup = outs.groupBy(_._1).collectFirst { case (l, rs) if rs.size > 1 => l }
-      dup.foreach(l => throw TestError(
-        s"rule: ${r.record}, err: vector contains metrics with the same labelset after applying rule labels"))
-      val cur = outs.map(_._1).toSet
-      outs.foreach { case (lbls, v, h) =>
-        store += Row(lbls, ts, if (h.isEmpty) v else Double.NaN, false, h.map(hRowOf).orNull, 0L)
-      }
-      (prev -- cur).foreach(lbls => store += Row(lbls, ts, Double.NaN, true, null, 0L))
-      prev = cur
+  private def samplesOf(spark: SparkSession, rows: Iterable[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.toList.asJava, Engine.samplesSchema)
+  }
+
+  /** Every rule of `groups` in file order: one range query over `ticks`,
+    * then [[Rules.step]] folded over the ticks, each tick's rows appended to
+    * `store`, and `atTick` called with the rule's state after each step. A
+    * rule's query sees every earlier rule's rows; the guard refuses a rule
+    * that reads its own or a later rule's output (see object scaladoc). */
+  private[promqltest] def foldRules(spark: SparkSession, groups: Seq[Rules.Group],
+      ticks: Vector[Long], stepMs: Long, store: mutable.ArrayBuffer[Row],
+      external: Map[String, String] = Map.empty, externalUrl: String = "",
+      opts: Opts = Opts())
+      (atTick: (Rules.Rule, Long, Rules.RuleState) => Unit = (_, _, _) => ()): Unit = {
+    val flat = groups.flatMap(_.rules)
+    flat.indices.foreach { i =>
+      val produced = flat.drop(i).flatMap(Rules.outputNames).toSet
+      val refs = Rules.reads(flat(i).expr, produced)
+      if (refs.nonEmpty)
+        throw TestError(s"rule '${flat(i).name}' reads ${refs.mkString(",")} produced by itself or a " +
+          "later rule — cross-tick feedback is unsupported in range-evaluated rule testing")
     }
-  }
-
-  private object St { val Pending = 0; val Firing = 1; val Inactive = 2 }
-  private final class AAlert(
-      var labels: Map[String, String], var annotations: Map[String, String],
-      var value: Double, var activeAt: Long) {
-    var state: Int = St.Pending
-    var resolvedAt: Long = -1L
-    var keepFiringSince: Long = -1L
-  }
-
-  /** alerting rule: the reference's per-tick state machine
-    * (rules/alerting.go:387 Eval) folded over the range-query results; emits
-    * ALERTS / ALERTS_FOR_STATE samples with vanish-staleness and records
-    * firing-alert snapshots for the ticks the test asks about */
-  private def evalAlertingRule(r: RRule,
-      byTick: Map[Long, Seq[(Map[String, String], Double, Option[FHist])]],
-      ticks: Vector[Long], tg: TG, store: mutable.ArrayBuffer[Row],
-      neededTicks: Set[(Long, String)],
-      snapshots: mutable.Map[(Long, String), List[ExpAlert]]): Unit = {
-    val active = mutable.Map[String, AAlert]()
-    var prevSeries = Set.empty[Map[String, String]]
-    ticks.foreach { ts =>
-      // build this tick's alerts from the expr results (template-expanded)
-      val resAlerts = mutable.Map[String, AAlert]()
-      byTick.getOrElse(ts, Nil).foreach { case (series, v, _) =>
-        val tmplLabels = series
-        val expandedRuleLabels = r.labels.map { case (k, tv) =>
-          k -> expand(tv, tmplLabels, v, tg.externalLabels) }
-        val annotations = r.annotations.map { case (k, tv) =>
-          k -> expand(tv, tmplLabels, v, tg.externalLabels) }
-        val lbls = (series - "__name__") ++ expandedRuleLabels + ("alertname" -> r.alert)
-        val key = canon(lbls)
-        if (resAlerts.contains(key))
-          throw TestError(s"rule: ${r.alert}, err: vector contains metrics with the same labelset")
-        resAlerts(key) = new AAlert(lbls, annotations, v, ts)
-      }
-      // merge into active state
-      resAlerts.foreach { case (key, a) =>
-        active.get(key) match {
-          case Some(al) if al.state != St.Inactive =>
-            al.value = a.value; al.annotations = a.annotations
-          case _ => active(key) = a
-        }
-      }
-      val curSeries = mutable.Set[Map[String, String]]()
-      active.toSeq.foreach { case (key, a) =>
-        var skip = false
-        if (!resAlerts.contains(key)) {
-          var keepFiring = false
-          if (a.state == St.Firing && r.keepFiringMs > 0) {
-            if (a.keepFiringSince < 0) a.keepFiringSince = ts
-            if (ts - a.keepFiringSince < r.keepFiringMs) keepFiring = true
-          }
-          if (a.state == St.Pending || (a.resolvedAt >= 0 && ts - a.resolvedAt > ResolvedRetentionMs))
-            active.remove(key)
-          if (a.state != St.Inactive && !keepFiring) {
-            a.state = St.Inactive; a.resolvedAt = ts
-          }
-          if (!keepFiring) skip = true
-        } else a.keepFiringSince = -1L
-        if (!skip) {
-          if (a.state == St.Pending && ts - a.activeAt >= r.forMs) a.state = St.Firing
-          // ALERTS + ALERTS_FOR_STATE samples (rules/alerting.go:237,258)
-          val stateName = if (a.state == St.Firing) "firing" else "pending"
-          val alertsLbls = a.labels + ("__name__" -> "ALERTS", "alertstate" -> stateName)
-          val forLbls = a.labels + ("__name__" -> "ALERTS_FOR_STATE")
-          store += Row(alertsLbls, ts, 1.0, false, null, 0L)
-          store += Row(forLbls, ts, (a.activeAt / 1000L).toDouble, false, null, 0L)
-          curSeries += alertsLbls
-          curSeries += forLbls
-        }
-      }
-      (prevSeries -- curSeries).foreach(lbls =>
-        store += Row(lbls, ts, Double.NaN, true, null, 0L))
-      prevSeries = curSeries.toSet
-      // snapshot firing alerts if a test case looks at this (tick, alertname)
-      if (neededTicks.contains((ts, r.alert))) {
-        val firing = active.values.toList
-          .filter(a => a.state == St.Firing && a.resolvedAt < 0)
-          .map(a => ExpAlert(a.labels, a.annotations))
-        snapshots((ts, r.alert)) = snapshots.getOrElse((ts, r.alert), Nil) ++ firing
+    def fail(r: Rules.Rule, e: Throwable) =
+      TestError(s"rule: ${r.name}, err: ${Option(e.getMessage).getOrElse(e.toString).take(300)}")
+    for (g <- groups; r <- g.rules) {
+      checkFeatures(r.expr, opts)
+      val byTick: Map[Long, Seq[Rules.Point]] =
+        try Rules.asVector(Engine.rangeQuery(spark, samplesOf(spark, store), r.expr,
+            ticks.head, ticks.last, stepMs, defaultSubqueryStepMs = stepMs), r.name)
+          .select(Rules.resultLabels(r), col("v"), col("h"), col("t")).collect().toSeq
+          .groupBy(_.getLong(3)).map { case (t, rows) => t -> rows.map(Rules.point) }
+        catch { case e: Throwable => throw fail(r, e) }
+      var state = Rules.RuleState()
+      ticks.foreach { ts =>
+        val templates = Rules.Templates(external, externalUrl,
+          expr => Rules.templateQuery(spark, samplesOf(spark, store), ts)(expr))
+        val (rows, next) =
+          try Rules.step(r, ts, byTick.getOrElse(ts, Nil), state, g.limit, templates)
+          catch { case e: Throwable => throw fail(r, e) }
+        store ++= rows
+        state = next
+        atTick(r, ts, next)
       }
     }
   }
 
-  /** promtool `check rules` duplicate detection (cmd/promtool/main.go:1006
-    * checkDuplicates): rules with the same name AND the same static labels
-    * are flagged, across all groups of the file. Also validates the file
-    * (syntax + expr grammar — features.yml's experimental forms must parse). */
+  /** promtool `check rules` duplicate detection ([[ConfigCheck.duplicates]])
+    * over a file read by [[Config.loadRuleGroups]] */
   def duplicateRules(path: String, ignoreUnknownFields: Boolean = false)
-      : List[(String, Map[String, String])] = {
-    val rules = parseRuleFile(path, ignoreUnknownFields).flatMap(_.rules)
-    rules.groupBy(r => (r.name, r.labels)).collect {
-      case ((n, lbls), rs) if rs.size > 1 => (n, lbls)
-    }.toList.sortBy(_._1)
-  }
+      : List[(String, Map[String, String])] =
+    ConfigCheck.duplicates(Config.loadRuleGroups(path, 60000L,
+      ignoreUnknownFields = ignoreUnknownFields))
 
   // ---------- file driver ----------
 
@@ -561,9 +348,8 @@ object RuleUnitTest {
         case other => throw TestError(s"bad rule_files entry $other")
       }
       val orderNames = root.list("group_eval_order").collect { case YScalar(s) => s }
-      val groups0 = ruleFiles.flatMap(parseRuleFile(_, opts.ignoreUnknownFields))
-      // rule exprs must satisfy the session's feature flags (engine-level in
-      // the reference; checked up front so a bad rule fails the file)
+      val groups0 = ruleFiles.flatMap(Config.loadRuleGroups(_, evalIntervalMs,
+        ignoreUnknownFields = opts.ignoreUnknownFields))
       val groups = {
         val orderIdx = orderNames.zipWithIndex.toMap
         groups0.sortBy(g => orderIdx.getOrElse(g.name, 0))  // stable: file order within ties

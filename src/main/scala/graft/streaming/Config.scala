@@ -1565,62 +1565,75 @@ object Config {
 
   /** Load a rule file (ref: model/rulefmt/rulefmt.go ParseFile — groups of
     * recording/alerting rules with per-group intervals) into evaluable
-    * [[Rules.Group]]s. Each rule needs exactly one of record/alert and an
-    * expression that parses, and its label and annotation templates may
-    * only use known variables; every error in the file is collected into
-    * one [[ConfigError]]. A group without an interval inherits the global
-    * evaluation interval. */
+    * [[Rules.Group]]s, each keeping the file's rule order. Each rule needs
+    * exactly one of record/alert and an expression that parses, no
+    * `__name__` label, and its label and annotation templates may only use
+    * known variables; a group name may appear once per file; a field
+    * rulefmt does not know is an error unless `ignoreUnknownFields` (ref:
+    * promtool test rules --ignore-unknown-fields). Every error in the file is
+    * collected into one [[ConfigError]]. A group without an interval
+    * inherits the global evaluation interval. */
   def loadRuleGroups(path: String, defaultIntervalMs: Long,
-      defaultQueryOffsetMs: Long = 0L): Seq[Rules.Group] = {
+      defaultQueryOffsetMs: Long = 0L,
+      ignoreUnknownFields: Boolean = false): Seq[Rules.Group] = {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p))
       throw new ConfigError(Seq(s"$path: no such file or directory"))
     val errs = new Errs
     def guarded[T](body: => T): Option[T] =
       try Some(body) catch { case e: Exception => errs += s"$path: ${message(e)}"; None }
-    def group(g: YMap): Rules.Group = {
-      val rec = Seq.newBuilder[Rules.RecordingRule]
-      val al = Seq.newBuilder[Rules.AlertingRule]
-      g.list("rules").foreach {
-        case r: YMap =>
-          val record = str(r, "record")
-          val alert = str(r, "alert")
-          if (record.nonEmpty == alert.nonEmpty)
-            errs += s"$path: rule must have exactly one of 'record' and 'alert'"
-          val expr = r.str("expr")
-          expr match {
-            case None => errs += s"$path: rule missing expr"
-            case Some(e) =>
-              try graft.promql.Engine.parse(e)
-              catch { case ex: Throwable =>
-                errs += s"$path: could not parse expression: ${ex.getMessage}" }
-          }
-          val lbls = kv(r.get("labels"))
-          val anns = kv(r.get("annotations"))
-          (lbls.values ++ anns.values).foreach(v => errs ++= templateErrors(v, path))
-          if (record.nonEmpty) rec += Rules.RecordingRule(record, expr.getOrElse(""), lbls)
-          else al += Rules.AlertingRule(alert, expr.getOrElse(""),
-            r.str("for").map(durMs).getOrElse(0L),
-            r.str("keep_firing_for").map(durMs).getOrElse(0L),
-            lbls, anns)
-        case other => errs += s"$path: bad rule node $other"
+    def fields(m: YMap, known: Set[String], where: String): Unit =
+      if (!ignoreUnknownFields) unknownKeys(m, known, s"$path: $where", errs)
+    def rule(r: YMap): Rules.Rule = {
+      fields(r, Set("record", "alert", "expr", "for", "keep_firing_for", "labels",
+        "annotations"), "rule")
+      val record = str(r, "record")
+      val alert = str(r, "alert")
+      if (record.nonEmpty == alert.nonEmpty)
+        errs += s"$path: rule must have exactly one of 'record' and 'alert'"
+      val expr = r.str("expr")
+      expr match {
+        case None => errs += s"$path: rule missing expr"
+        case Some(e) =>
+          try graft.promql.Engine.parse(e)
+          catch { case ex: Throwable =>
+            errs += s"$path: could not parse expression: ${ex.getMessage}" }
       }
+      val lbls = kv(r.get("labels"))
+      val anns = kv(r.get("annotations"))
+      if (lbls.contains("__name__")) errs += s"$path: invalid label name: __name__"
+      (lbls.values ++ anns.values).foreach(v => errs ++= templateErrors(v, path))
+      if (record.nonEmpty) Rules.RecordingRule(record, expr.getOrElse(""), lbls)
+      else Rules.AlertingRule(alert, expr.getOrElse(""),
+        r.str("for").map(durMs).getOrElse(0L),
+        r.str("keep_firing_for").map(durMs).getOrElse(0L),
+        lbls, anns)
+    }
+    def group(g: YMap): Rules.Group = {
+      fields(g, Set("name", "interval", "query_offset", "limit", "rules", "labels"), "group")
       Rules.Group(str(g, "name"),
         g.str("interval").map(durMs).getOrElse(defaultIntervalMs),
-        rec.result(), al.result(),
+        g.list("rules").flatMap {
+          case r: YMap => Some(rule(r))
+          case other => errs += s"$path: bad rule node $other"; None
+        },
         queryOffsetMs = g.str("query_offset").map(durMs)
           .getOrElse(defaultQueryOffsetMs),
-        limit = g.str("limit").map(_.toInt).getOrElse(0))
+        limit = g.str("limit").map(_.toInt).getOrElse(0), file = path)
     }
     val groups = guarded {
       YamlLite.parse(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")) match {
-        case root: YMap => root.list("groups").flatMap {
-          case g: YMap => guarded(group(g))
-          case _ => errs += s"$path: bad group node"; None
-        }
+        case root: YMap =>
+          fields(root, Set("groups"), "rule file")
+          root.list("groups").flatMap {
+            case g: YMap => guarded(group(g))
+            case _ => errs += s"$path: bad group node"; None
+          }
         case other => throw new IllegalArgumentException(s"expected mapping, got $other")
       }
     }.getOrElse(Nil)
+    groups.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n }.toSeq.sorted
+      .foreach(n => errs += s"$path: groupname: \"$n\" is repeated in the same file")
     if (errs.nonEmpty) throw new ConfigError(errs.toList)
     groups
   }

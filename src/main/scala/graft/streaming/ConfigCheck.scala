@@ -20,16 +20,19 @@ object ConfigCheck {
     else if (lint.nonEmpty) Result(3, Nil, lint)
     else Result(0, Nil, Nil)
 
+  /** promtool's duplicate-rule lint (main.go:1006 checkDuplicates): the
+    * (name, labels) of rules that share both, across all groups of a file,
+    * by name */
+  def duplicates(groups: Seq[Rules.Group]): List[(String, Map[String, String])] =
+    groups.flatMap(_.rules).groupBy(r => (r.name, r.labels)).collect {
+      case (key, same) if same.size > 1 => key
+    }.toList.sortBy(_._1)
+
   /** one rule file: (errors, duplicate-rule lint) */
   private def ruleFile(path: String, intervalMs: Long): (Seq[String], Seq[String]) =
-    try {
-      val rules = Config.loadRuleGroups(path, intervalMs).flatMap(g =>
-        g.recording.map(r => (r.record, r.labels)) ++
-          g.alerting.map(a => (a.alert, a.labels)))
-      (Nil, rules.groupBy(identity).collect {
-        case ((name, _), same) if same.size > 1 => s"$path: duplicate rule $name"
-      }.toSeq)
-    } catch { case e: Config.ConfigError => (e.errors, Nil) }
+    try (Nil, duplicates(Config.loadRuleGroups(path, intervalMs)).map {
+      case (name, _) => s"$path: duplicate rule $name" })
+    catch { case e: Config.ConfigError => (e.errors, Nil) }
 
   /** promtool `check rules <file>` */
   def checkRules(path: String): Result = {

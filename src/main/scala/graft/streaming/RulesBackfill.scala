@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.promql.{Engine, FHist, MatrixVal, PromQLError, ScalarVal, VectorVal}
+import graft.promql.Engine
 
 /** `promtool tsdb create-blocks-from rules` analog — evaluate recording
   * rules over a historical range and write the results as block-partitioned
@@ -61,27 +61,11 @@ object RulesBackfill {
     if (t0 > endMs)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Engine.samplesSchema)
-    val res = Engine.rangeQuery(spark, samples, rule.expr, t0, endMs, g.intervalMs) match {
-      case VectorVal(df) => df
-      case ScalarVal(df, _) =>
-        df.select(map_filter(map(lit("x"), lit("x")), (_, _) => lit(false)).as("labels"),
-          col("t"), col("v"), lit(null).cast(FHist.schemaType).as("h"))
-      case MatrixVal(_) | _ =>
-        throw PromQLError(s"recording rule must produce a vector: ${rule.record}")
-    }
-    val static = rule.labels.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }
-    val withStatics =
-      if (static.isEmpty) col("labels")
-      else map_concat(
-        map_filter(col("labels"), (k, _) => !k.isInCollection(rule.labels.keys.toSeq)),
-        map(static: _*))
-    res.filter(col("h").isNull)
-      .select(
-        map_concat(
-          map_filter(withStatics, (k, _) => k =!= "__name__"),
-          map(lit("__name__"), lit(rule.record))).as("labels"),
-        col("t"), col("v"), lit(false).as("stale"),
-        lit(null).cast(FHist.schemaType).as("h"), lit(0L).as("stt"))
+    Rules.asVector(Engine.rangeQuery(spark, samples, rule.expr, t0, endMs, g.intervalMs),
+      rule.record)
+      .filter(col("h").isNull)
+      .select(Rules.recordedLabels(rule).as("labels"), col("t"), col("v"),
+        lit(false).as("stale"), col("h"), lit(0L).as("stt"))
   }
 
   /** backfill every recording rule of every group into `outDir` as

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.promql.{Engine, QueryLimits}
 import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Success, Try}
 
 /** Whole-server assembly (ref: cmd/prometheus/main.go component wiring +
   * web/web.go lifecycle): prometheus.yml → scrape manager + rule groups +
@@ -72,7 +73,8 @@ final class PromServer(
 
   @volatile private var configOpt: Option[Config.PromConfig] = None
   @volatile private var ruleGroups: Seq[Rules.Group] = Nil
-  @volatile private var alertStates: Map[String, Map[String, Rules.AlertState]] = Map.empty
+  // per group (its file and name), each rule's state, aligned with its rules
+  @volatile private var ruleStates: Map[Rules.Group, Vector[Rules.RuleState]] = Map.empty
   @volatile private var notifier: Option[graft.web.Notifier] = None
   // (write_relabel rules, sender) per remote_write entry — the rules run on
   // every outgoing batch before the send (ref: queue_manager.go)
@@ -105,15 +107,24 @@ final class PromServer(
         .map(_.toString).getOrElse(".")
       val cfg = Config.parse(text, base)
       // rule files must load cleanly BEFORE anything is swapped
-      val groups = cfg.ruleFiles.map(f =>
+      val groups = cfg.ruleFiles.distinct.flatMap(f =>
         Config.loadRuleGroups(f, cfg.evaluationIntervalMs, cfg.ruleQueryOffsetMs))
       // ---- commit point: swap components ----
       configOpt = Some(cfg)
-      ruleGroups = groups.flatten
+      // a reloaded group's rules keep the state of the rules they match in
+      // the running group of the same file and name
+      ruleStates = groups.map { g =>
+        g -> ruleGroups.find(o => o.file == g.file && o.name == g.name)
+          .fold(Vector.empty[Rules.RuleState])(old =>
+            Rules.carryState(old, ruleStates.getOrElse(old, Vector.empty), g))
+      }.toMap
+      ruleGroups = groups
       api.ruleGroups = ruleGroups
+      api.ruleStates = ruleStates
       // rule health resets with the registry — stale (group, rule) error
       // entries must not outlive a reload that renamed or removed them
       api.ruleErrors = Map.empty
+      api.ruleEvalStats = api.ruleEvalStats.filter { case (g, _) => groups.contains(g) }
       api.alertmanagerUrls = cfg.alertmanagerUrls
       // /api/v1/alertmanagers serves the LIVE discovery view (active +
       // relabel-dropped) aggregated across the alertmanagers groups
@@ -282,71 +293,52 @@ final class PromServer(
   }
 
   /** One rule-evaluation tick over every group (the reference's
-    * rules/manager.go eval loop body): recording rules run in topological
-    * LEVELS (producers land in the store before consumers read), then
-    * alerting rules advance their state machines, append ALERTS /
-    * ALERTS_FOR_STATE, forward to remote write, and notify. Driver work is
-    * scheduling only — each rule is one distributed instant query. */
+    * rules/manager.go eval loop body), through [[Rules.tick]]: each rule's
+    * rows land in the store before the next dependency level reads it;
+    * recorded samples forward to remote write, and firing alerts go to the
+    * notifier. A rule whose query, step or append fails goes unhealthy with
+    * the error, keeps its state and appends nothing; the tick goes on with
+    * the group's other rules (ref: rules/group.go Eval). A failed send to
+    * remote write or the notifier leaves the appended rows and the state. */
   def evalRulesOnce(tsMs: Long): Unit = synchronized {
+    import scala.jdk.CollectionConverters._
+    val external = configOpt.map(_.externalLabels).getOrElse(Map.empty)
     ruleGroups.foreach { g =>
       val g0 = System.nanoTime()
       // query_offset: the group evaluates (and stamps its output) at
       // ts - offset, trading recency for slow-ingest slack (ref:
       // rules/group.go Eval restoreStartTime/queryOffset)
       val ets = tsMs - g.queryOffsetMs
-      // a rule whose query or append fails goes unhealthy with the error;
-      // the tick goes on with the group's other rules (ref: rules/group.go
-      // Eval — a failed rule sets its health and lastError)
-      def guarded(rule: String)(body: => Unit): Unit =
-        try body catch { case e: Exception =>
-          api.ruleErrors = api.ruleErrors.updated((g.name, rule),
-            Option(e.getMessage).getOrElse(e.getClass.getName))
-        }
-      Rules.recordingLevels(g.recording).foreach { level =>
-        level.foreach { r => guarded(r.record) {
-          val out = Rules.evalRecording(spark, store.samples, r, ets)
-          // group limit: a recording rule producing more series than the
-          // group allows DROPS its output and goes unhealthy (ref:
-          // rules/group.go Eval "exceeded limit %d with %d series")
-          val n = if (g.limit > 0) out.count() else -1L
-          if (g.limit > 0 && n > g.limit) {
-            api.ruleErrors = api.ruleErrors.updated((g.name, r.record),
-              s"exceeded limit of ${g.limit} with $n series")
-          } else {
-            store.append(out)
-            api.ruleErrors -= ((g.name, r.record))
-            // a failing sink must not abort the evaluation tick: the
-            // reference's queue manager is async — send failures drop/retry
-            // on their own clock and never stall rule evaluation
-            forwarders.foreach { case (rules, f) =>
-              try f.forward(if (rules.isEmpty) out else Relabel(out, rules))
-              catch { case e: Exception =>
-                System.err.println(s"[remote-write] forward failed: ${e.getMessage}") }
-            }
+      val next = Rules.tick(spark, g, ets, ruleStates.getOrElse(g, Vector.empty),
+        () => store.samples, external, externalUrl) { (i, result) =>
+        val key = (g.name, g.rules(i).name)
+        val appended = result.flatMap { case (rows, _) => Try(store.appendRows(rows)) }
+        appended.flatMap(_ => result).flatMap { case (rows, st) => Try {
+          g.rules(i) match {
+            case _: Rules.RecordingRule =>
+              // a failing sink must not abort the evaluation tick: the
+              // reference's queue manager is async — send failures
+              // drop/retry on their own clock and never stall rule evaluation
+              lazy val out = spark.createDataFrame(rows.asJava, Engine.samplesSchema)
+              forwarders.foreach { case (rules, f) =>
+                try f.forward(if (rules.isEmpty) out else Relabel(out, rules))
+                catch { case e: Exception =>
+                  System.err.println(s"[remote-write] forward failed: ${e.getMessage}") }
+              }
+            case a: Rules.AlertingRule =>
+              notifier.foreach(_.sendFromState(a, st.alerts, ets))
           }
-        } }
-      }
-      g.alerting.foreach { a => guarded(a.alert) {
-        val prevAll = alertStates.getOrElse(g.name, Map.empty)
-        val prev = prevAll.filter(
-          _._2.labels.getOrElse("alertname", "") == a.alert)
-        val (df, next) = Rules.evalAlerting(spark, store.samples, a, ets, prev,
-          externalLabels = configOpt.map(_.externalLabels).getOrElse(Map.empty))
-        if (g.limit > 0 && next.size > g.limit) {
-          api.ruleErrors = api.ruleErrors.updated((g.name, a.alert),
-            s"exceeded limit of ${g.limit} with ${next.size} alerts")
-        } else {
-          store.append(df)
-          api.ruleErrors -= ((g.name, a.alert))
-          val others = prevAll -- prev.keys
-          alertStates = alertStates.updated(g.name, others ++ next)
-          api.alertState = alertStates
-          notifier.foreach(_.sendFromState(a, next, ets))
+        } } match {
+          case Failure(e) => api.ruleErrors = api.ruleErrors.updated(key, Config.message(e))
+          case Success(_) => api.ruleErrors -= key
         }
-      } }
+        appended.isSuccess
+      }
+      ruleStates = ruleStates.updated(g, next)
       api.ruleEvalStats = api.ruleEvalStats
-        .updated(g.name, (tsMs, (System.nanoTime() - g0) / 1e9))
+        .updated(g, (tsMs, (System.nanoTime() - g0) / 1e9))
     }
+    api.ruleStates = ruleStates
   }
 
   /** one synchronous scrape pass (agent and server modes share the path);

@@ -108,10 +108,11 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
 
   private val startedMs = nowMs()
 
-  /** rule registry + evaluated alert state, wired in by the host
-    * (group name → signature → state); rendered by /rules and /alerts */
+  /** rule registry + each group's rule states (aligned with its `rules`),
+    * wired in by the host; rendered by /rules and /alerts */
   @volatile var ruleGroups: Seq[graft.streaming.Rules.Group] = Nil
-  @volatile var alertState: Map[String, Map[String, graft.streaming.Rules.AlertState]] = Map.empty
+  @volatile var ruleStates
+      : Map[graft.streaming.Rules.Group, Vector[graft.streaming.Rules.RuleState]] = Map.empty
   @volatile var scrapeTargets: Seq[graft.streaming.ScrapeManager.ScrapeTarget] = Nil
   /** notifier fan-out endpoints, rendered by /api/v1/alertmanagers */
   @volatile var alertmanagerUrls: Seq[String] = Nil
@@ -120,9 +121,9 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
   @volatile var alertmanagerDiscovery: () => (Seq[String], Seq[String]) =
     () => (alertmanagerUrls, Nil)
 
-  /** group name → (last evaluation wall time ms, duration sec), maintained
-    * by the rule-eval loop; rendered by /api/v1/rules */
-  @volatile var ruleEvalStats: Map[String, (Long, Double)] = Map.empty
+  /** group → (last evaluation wall time ms, duration sec), maintained by
+    * the rule-eval loop; rendered by /api/v1/rules */
+  @volatile var ruleEvalStats: Map[graft.streaming.Rules.Group, (Long, Double)] = Map.empty
 
   /** (group, rule) → last evaluation error (group-limit violations etc.),
     * set by the rule-eval loop; renders health=err + lastError */
@@ -159,11 +160,13 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
   /** rendered by /api/v1/status/config (ref: api.go serveConfig) */
   @volatile var configYaml: String = "# graft-spark serving configuration"
 
-  /** (rendered alert JSON, state string) for one alerting rule */
-  private def activeAlertsOf(group: String,
-      a: graft.streaming.Rules.AlertingRule): Seq[(String, String)] =
-    alertState.getOrElse(group, Map.empty).toSeq.collect {
-      case (_, st) if st.labels.getOrElse("alertname", "") == a.alert =>
+  /** a group's alerting rules, each with its alerts as (rendered alert
+    * JSON, state string) */
+  private def alertingRulesOf(g: graft.streaming.Rules.Group)
+      : Seq[(graft.streaming.Rules.AlertingRule, Seq[(String, String)])] = {
+    val states = ruleStates.getOrElse(g, Vector.empty)
+    g.rules.zipWithIndex.collect { case (a: graft.streaming.Rules.AlertingRule, i) =>
+      a -> states.lift(i).toSeq.flatMap(_.alerts.values).map { st =>
         val state = if (st.firingSinceMs >= 0) "firing" else "pending"
         (Json.obj(
           "labels" -> Json.metric(st.labels),
@@ -172,7 +175,9 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
           "state" -> Json.str(state),
           "activeAt" -> Json.str(java.time.Instant.ofEpochMilli(st.activeSinceMs).toString),
           "value" -> Json.value(st.value)), state)
-    }.sortBy(_._1)
+      }.sortBy(_._1)
+    }
+  }
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -1124,7 +1129,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
     })
 
     // rule registry + live alerts (ref: api.go rules/alerts handlers) —
-    // the host wires evaluated state in via `ruleGroups`/`alertState`
+    // the host wires evaluated state in via `ruleGroups`/`ruleStates`
     server.createContext("/api/v1/rules", qHandler { ex =>
       // ref: api.go rules handler — type=, rule_name[]/rule_group[]/file[]
       // sets, exclude_alerts, match[] label filters, group_limit +
@@ -1177,14 +1182,14 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
       val it = ruleGroups.iterator
       while (it.hasNext && nextToken.isEmpty) {
         val g = it.next()
-        val skipToToken = !foundToken && tokenOf("", g.name) != nextTokenParam
+        val skipToToken = !foundToken && tokenOf(g.file, g.name) != nextTokenParam
         if (!skipToToken) {
           foundToken = true
           val groupKept =
             (rgSet.isEmpty || rgSet.contains(g.name)) &&
-            (fSet.isEmpty || fSet.contains(""))
+            (fSet.isEmpty || fSet.contains(g.file))
           if (groupKept) {
-            val (lastMs, durS) = ruleEvalStats.getOrElse(g.name, (0L, 0.0))
+            val (lastMs, durS) = ruleEvalStats.getOrElse(g, (0L, 0.0))
             val evalFields = Seq(
               "evaluationTime" -> durS.toString,
               "lastEvaluation" -> Json.str(
@@ -1208,11 +1213,10 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
                   healthFields(r.record) ++ evalFields: _*))
             val alr =
               if (typeFilter == "record") Nil
-              else g.alerting
-                .filter(a => (rnSet.isEmpty || rnSet.contains(a.alert)) &&
-                  labelsMatch(a.labels))
-                .map { a =>
-                  val alerts = activeAlertsOf(g.name, a)
+              else alertingRulesOf(g)
+                .filter { case (a, _) => (rnSet.isEmpty || rnSet.contains(a.alert)) &&
+                  labelsMatch(a.labels) }
+                .map { case (a, alerts) =>
                   Json.obj(Seq(
                     "type" -> Json.str("alerting"), "name" -> Json.str(a.alert),
                     "query" -> Json.str(a.expr),
@@ -1230,9 +1234,9 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
             // a group whose rules all filtered away is skipped (ref comment)
             if ((rec ++ alr).nonEmpty) {
               if (groupLimit > 0 && rendered.size == groupLimit) {
-                nextToken = tokenOf("", g.name)
+                nextToken = tokenOf(g.file, g.name)
               } else rendered += Json.obj(
-                "name" -> Json.str(g.name), "file" -> Json.str(""),
+                "name" -> Json.str(g.name), "file" -> Json.str(g.file),
                 "rules" -> Json.arr(rec ++ alr),
                 "interval" -> (g.intervalMs / 1000.0).toString,
                 "limit" -> g.limit.toString,
@@ -1253,7 +1257,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
     })
 
     server.createContext("/api/v1/alerts", qHandler { ex =>
-      val all = ruleGroups.flatMap(g => g.alerting.flatMap(a => activeAlertsOf(g.name, a)))
+      val all = ruleGroups.flatMap(alertingRulesOf(_).flatMap(_._2))
       ok(ex, Json.obj("alerts" -> Json.arr(all.map(_._1))))
     })
 

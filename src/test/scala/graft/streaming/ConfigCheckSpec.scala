@@ -121,6 +121,26 @@ class ConfigCheckSpec extends AnyFunSuite {
       dup.lintIssues.exists(_.contains("HighRequestLatency")), dup.toString)
   }
 
+  test("check rules: a repeated group name and a __name__ rule label are errors") {
+    val f = java.nio.file.Files.createTempFile("rules", ".yml")
+    java.nio.file.Files.write(f,
+      """groups:
+        |  - name: g
+        |    rules:
+        |      - record: r
+        |        expr: up
+        |        labels:
+        |          __name__: other
+        |  - name: g
+        |    rules:
+        |      - alert: A
+        |        expr: up == 0
+        |""".stripMargin.getBytes("UTF-8"))
+    val res = ConfigCheck.checkRules(f.toString)
+    assert(res == ConfigCheck.Result(1, Seq(s"$f: invalid label name: __name__",
+      s"$f: groupname: \"g\" is repeated in the same file"), Nil), res.toString)
+  }
+
   test("remote_write/remote_read: strict fields, auth shapes, queue_config") {
     val dir = java.nio.file.Files.createTempDirectory("cfgrw")
     def check(body: String): ConfigCheck.Result = {

@@ -86,7 +86,7 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (Map("__name__" -> "reqs", "job" -> "b"), 0L, 20.0)))
     val out = Rules.evalGroup(spark, df,
       Rules.Group("g", intervalMs = 60000,
-        recording = Seq(
+        rules = Seq(
           Rules.RecordingRule("job:reqs:sum", "sum by (job) (reqs)"),
           Rules.RecordingRule("total:reqs", "sum(job:reqs:sum)"))),
       fromMs = 0L, toMs = 0L)
@@ -448,7 +448,7 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
     val input = samplesOf((0 to 8).map(i =>
       (Map("__name__" -> "errors", "job" -> "a"), i * 60000L, 5.0)))
     val g = Rules.Group("g", intervalMs = 60000,
-      alerting = Seq(Rules.AlertingRule("Slow", "errors > 1", forMs = 180000)))
+      rules = Seq(Rules.AlertingRule("Slow", "errors > 1", forMs = 180000)))
     // pre-restart ticks 0..2m: pending, ALERTS_FOR_STATE persisted (v = 0s)
     val before = Rules.evalGroup(spark, input, g, fromMs = 0L, toMs = 120000L)
     assert(before.filter(element_at(col("labels"), "__name__") === "ALERTS_FOR_STATE")
@@ -474,7 +474,7 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
     // condition true only while the lone sample is inside the 5m lookback
     val input = samplesOf(Seq((Map("__name__" -> "errors", "job" -> "a"), 0L, 5.0)))
     val g = Rules.Group("g", intervalMs = 60000,
-      alerting = Seq(Rules.AlertingRule("Hot", "errors > 1", forMs = 0L)))
+      rules = Seq(Rules.AlertingRule("Hot", "errors > 1", forMs = 0L)))
     val out = Rules.evalGroup(spark, input, g, fromMs = 0L, toMs = 360000L)
     // fresh firing rows at 0..4m; a stale marker lands at 5m when it resolves
     val stale = out.filter(element_at(col("labels"), "__name__") === "ALERTS" && col("stale"))
@@ -497,7 +497,7 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
     // dependency listed in reverse: total reads job:sum — topo sort must flip
     val out = Rules.evalGroup(spark, df,
       Rules.Group("g", intervalMs = 1000,
-        recording = Seq(
+        rules = Seq(
           Rules.RecordingRule("total:reqs", "sum(job:reqs:sum)"),
           Rules.RecordingRule("job:reqs:sum", "sum by (job) (reqs)"))),
       fromMs = 0L, toMs = 99000L)
@@ -731,7 +731,7 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (Map("__name__" -> "reqs", "job" -> "b"), t, t / 500.0)))
     val store = samplesOf(rows)
     val g = Rules.Group("bf", intervalMs = 60000L,
-      recording = Seq(Rules.RecordingRule("job:reqs:rate5m", "rate(reqs[5m])",
+      rules = Seq(Rules.RecordingRule("job:reqs:rate5m", "rate(reqs[5m])",
         labels = Map("team" -> "core"))))
     val outDir = java.nio.file.Files.createTempDirectory("graft_bf").toString
     val errs = RulesBackfill.importAll(spark, store, Seq(g), 600000L, endMs, outDir)

@@ -1787,11 +1787,12 @@ class ServingSpec extends AnyFunSuite {
       Engine.samplesSchema))
     val api = new HttpApi(spark, store, 0, () => 99000L)
     api.ruleGroups = Seq(graft.streaming.Rules.Group("g1", 60000L,
-      recording = Seq(graft.streaming.Rules.RecordingRule("rec:m1", "sum(m1)")),
-      alerting = Seq(graft.streaming.Rules.AlertingRule("HighM1", "m1 > 10", forMs = 60000L))))
-    api.alertState = Map("g1" -> Map(
-      "sig1" -> graft.streaming.Rules.AlertState(50000L, 70000L, 90000L,
-        Map("alertname" -> "HighM1", "job" -> "a"))))
+      rules = Seq(graft.streaming.Rules.RecordingRule("rec:m1", "sum(m1)"),
+        graft.streaming.Rules.AlertingRule("HighM1", "m1 > 10", forMs = 60000L))))
+    api.ruleStates = Map(api.ruleGroups.head -> Vector(graft.streaming.Rules.RuleState(),
+      graft.streaming.Rules.RuleState(alerts = Map(
+        "sig1" -> graft.streaming.Rules.AlertState(50000L, 70000L, 90000L,
+          Map("alertname" -> "HighM1", "job" -> "a"))))))
     api.scrapeTargets = Seq(graft.streaming.ScrapeManager.ScrapeTarget(
       "http://x:1/metrics", "j1", "i1"))
     api.start()
