@@ -114,7 +114,7 @@ object OpenMetrics {
     } catch { case _: Exception => None }
   }
 
-  val exemplarType: StructType = StructType(Seq(
+  private val exemplarType: StructType = StructType(Seq(
     StructField("labels", MapType(StringType, StringType, valueContainsNull = false)),
     StructField("v", DoubleType), StructField("t", LongType)))
 

@@ -1,16 +1,18 @@
 package graft.streaming
 
-import graft.promql.Engine
-import graft.web.SampleStore
+import graft.promql.{Engine, FHist}
+import graft.web.{ProtoExposition, SampleStore}
+import graft.web.RemoteWrite.{Meta, Sample}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Pull-model scrape manager: HTTP-poll a target set on an interval, parse
-  * the exposition body (Prometheus text or OpenMetrics), apply relabeling,
-  * attach `instance`/`job`, synthesize the per-scrape report series
-  * (`up`, `scrape_duration_seconds`, `scrape_samples_scraped`) and append
-  * micro-batches to the store (ref: scrape/scrape.go:1264 scrapeLoop.run,
-  * report series :1788 report()).
+  * the exposition body (Prometheus text, OpenMetrics or protobuf) into one
+  * batch, and append it through one path that attaches `instance`/`job`,
+  * relabels, enforces the limits, stale-marks, synthesizes the per-scrape
+  * report series (`up`, `scrape_duration_seconds`,
+  * `scrape_samples_scraped`, ...) and stores the micro-batch (ref:
+  * scrape/scrape.go:1264 scrapeLoop.run, report series :1788 report()).
   *
   * The poller is a driver-side edge by design — the same shape as the
   * reference's scrape manager (one process polls its shard of targets). At
@@ -52,8 +54,9 @@ final class ScrapeManager(
     // always_scrape_classic_histograms)
     convertNhcb: Boolean = false,
     // created-timestamp-zero-ingestion feature flag (ref: scrape.go
-    // enableSTZeroIngestion): OpenMetrics `_created` lines inject synthetic
-    // zeros at the family's creation time instead of being ingested as series
+    // enableSTZeroIngestion): a sample's start timestamp (an OpenMetrics
+    // `_created` line, consumed instead of ingested, or a protobuf
+    // created_timestamp) injects a synthetic zero at that time
     stZeroIngestion: Boolean = false,
     // --enable-feature=st-synthesis (ref: scrape.go Options.SynthesizeST,
     // reference #18279): synthesize a start timestamp for cumulative
@@ -63,11 +66,11 @@ final class ScrapeManager(
     // establishes the anchor (st = its scrape ts) and is NOT appended;
     // later samples append rebased (v − anchor value) with that st; a
     // counter reset re-anchors at 0 with st = t−1 ("least risky guess").
-    // Applies on all three parse paths (text, OM, proto — samples with an
-    // inline/parsed created timestamp keep it and never synthesize):
+    // Applies to every format (samples with an inline/parsed created
+    // timestamp keep it and never synthesize):
     // classic histogram _bucket/_count/_sum series each synthesize
     // independently like the reference's float path, and proto-scraped
-    // NATIVE histograms synthesize via FHist detectReset/sub
+    // native histograms synthesize via FHist detectReset/sub
     // (ref synthesizeFloatHistogram). Gauge histograms pass through.
     stSynthesis: Boolean = false,
     // --enable-feature=extra-scrape-metrics (ref: scrape.go
@@ -130,13 +133,16 @@ final class ScrapeManager(
 
   // ------------------------------------------------------------ st-synthesis
   // per-target per-series synthesis anchors (ref scrape/st_synthesis.go
-  // stCache: st + floatSynthesis{prev, starting}); state lives only while
-  // the series keeps appearing — a series absent from a scrape loses its
-  // anchor (the reference clears stCache through staleness tracking), and
-  // departed targets drop their whole map alongside seriesSeen
-  private final class StSynth(var st: Long, var prev: Double, var starting: Double)
-  private val stSynthState = scala.collection.concurrent.TrieMap[
-    String, scala.collection.mutable.HashMap[Long, StSynth]]()
+  // stCache: st + floatSynthesis{prev, starting}, histogramSynthesis for
+  // native histograms, where startingH == null marks the post-reset state
+  // that adjusts nothing); state lives only while the series keeps
+  // appearing — a series absent from a scrape loses its anchor (the
+  // reference clears stCache through staleness tracking), and departed
+  // targets drop their whole map alongside seriesSeen
+  private final class Anchor(var st: Long, var prev: Double, var starting: Double,
+      var prevH: FHist, var startingH: FHist)
+  private val anchors = scala.collection.concurrent.TrieMap[
+    String, scala.collection.mutable.HashMap[Long, Anchor]]()
 
   /** is `name` a cumulative member of a typed family? (ref
     * checkAndSynthesizeStartTime: counter + histogram families wholesale,
@@ -153,86 +159,45 @@ final class ScrapeManager(
     } else false
   }
 
-  /** native-histogram synthesis anchors (ref st_synthesis.go
-    * histogramSynthesis{prev, starting}); starting == null marks the
-    * post-reset state where nothing is adjusted */
-  private final class HistSynth(var st: Long, var prev: graft.promql.FHist,
-      var starting: graft.promql.FHist)
-  private val stSynthHistState = scala.collection.concurrent.TrieMap[
-    String, scala.collection.mutable.HashMap[Long, HistSynth]]()
-
-  /** native-histogram st-synthesis (ref synthesizeFloatHistogram): first
-    * sample anchors (st = its ts) and is dropped; later samples append
-    * `fh − anchor` (Compact'd, incoming reset hint preserved) with that st;
-    * a detected reset clears the anchor and re-stamps st = t−1. Gauge
-    * histograms and typed-non-histogram families pass through untouched. */
-  private def synthesizeHistSt(tgtKey: String,
-      rows: Seq[graft.web.RemoteWrite.Sample],
-      famTypes: Map[String, String]): Seq[graft.web.RemoteWrite.Sample] = {
-    val state = stSynthHistState.getOrElseUpdate(tgtKey,
-      new scala.collection.mutable.HashMap[Long, HistSynth]())
+  /** rewrite one scrape's samples under st-synthesis: only samples with NO
+    * explicit/created start timestamp (stt == 0) of a cumulative family are
+    * touched. The first sample anchors (st = its ts) and is dropped; later
+    * samples append rebased (v − anchor, or fh − anchor Compact'd with the
+    * incoming reset hint) with that st; a reset re-anchors at 0 (natives:
+    * nothing subtracted) with st = t−1. Gauge histograms pass through (ref
+    * synthesizeFloat / synthesizeFloatHistogram). */
+  private def synthesizeSt(tgtKey: String, rows: Seq[Sample],
+      famTypes: Map[String, String]): Seq[Sample] = {
+    val state = anchors.getOrElseUpdate(tgtKey,
+      new scala.collection.mutable.HashMap[Long, Anchor]())
     val seen = scala.collection.mutable.HashSet[Long]()
-    val out = Seq.newBuilder[graft.web.RemoteWrite.Sample]
-    rows.foreach { s =>
+    val out = rows.flatMap { s =>
       val name = s.labels.getOrElse("__name__", "")
-      val fh = s.h.get
-      if (s.stt != 0L || famTypes.getOrElse(name, "") != "histogram" || fh.isGauge)
-        out += s
+      val eligible = s.stt == 0L && s.h.fold(stSynthEligible(name, famTypes))(fh =>
+        famTypes.getOrElse(name, "") == "histogram" && !fh.isGauge)
+      if (!eligible) Some(s)
       else {
-        val key = series64(s.labels.toSeq.sorted.mkString(" "))
+        val key = series64(s.h.fold("")(_ => "h ") + s.labels.toSeq.sorted.mkString(" "))
         seen += key
-        state.get(key) match {
-          case None =>
-            state(key) = new HistSynth(s.t, fh, fh) // anchor + skip append
-          case Some(hs) =>
-            if (fh.detectReset(hs.prev)) {
-              hs.starting = null; hs.st = s.t - 1; hs.prev = fh
-              out += s.copy(stt = hs.st)
-            } else {
-              hs.prev = fh
-              val adj =
-                if (hs.starting == null) fh
-                else fh.sub(hs.starting).compact.copy(crh = fh.crh)
-              out += s.copy(h = Some(adj), stt = hs.st)
-            }
-        }
-      }
-    }
-    state.filterInPlace((k, _) => seen(k))
-    out.result()
-  }
-
-  /** rewrite one scrape's (labels, t, v, stt) rows under st-synthesis:
-    * only rows with NO explicit/created start timestamp (stt == 0) and a
-    * cumulative family type are touched */
-  private def synthesizeSt(tgtKey: String,
-      rows: Seq[(Map[String, String], Long, Double, Long)],
-      famTypes: Map[String, String])
-      : Seq[(Map[String, String], Long, Double, Long)] = {
-    val state = stSynthState.getOrElseUpdate(tgtKey,
-      new scala.collection.mutable.HashMap[Long, StSynth]())
-    val seen = scala.collection.mutable.HashSet[Long]()
-    val out = Seq.newBuilder[(Map[String, String], Long, Double, Long)]
-    rows.foreach { case row @ (l, t, v, stt) =>
-      val name = l.getOrElse("__name__", "")
-      if (stt != 0L || !stSynthEligible(name, famTypes)) out += row
-      else {
-        val key = series64(l.toSeq.sorted.mkString(" "))
-        seen += key
-        state.get(key) match {
-          case None =>
-            // first sample: establish the anchor, skip the append
-            state(key) = new StSynth(t, v, v)
-          case Some(s) =>
-            if (v < s.prev) { s.starting = 0.0; s.st = t - 1 } // reset
-            s.prev = v
-            out += ((l, t, v - s.starting, s.st))
+        (state.get(key), s.h) match {
+          case (None, h) => // first sample: establish the anchor, skip the append
+            state(key) = new Anchor(s.t, s.v, s.v, h.orNull, h.orNull)
+            None
+          case (Some(a), Some(fh)) =>
+            if (fh.detectReset(a.prevH)) { a.startingH = null; a.st = s.t - 1 }
+            val adj = if (a.startingH == null) fh else fh.sub(a.startingH).compact.copy(crh = fh.crh)
+            a.prevH = fh
+            Some(s.copy(h = Some(adj), stt = a.st))
+          case (Some(a), None) =>
+            if (s.v < a.prev) { a.starting = 0.0; a.st = s.t - 1 } // reset
+            a.prev = s.v
+            Some(s.copy(v = s.v - a.starting, stt = a.st))
         }
       }
     }
     // vanished cumulative series lose their anchor (re-anchored on return)
     state.filterInPlace((k, _) => seen(k))
-    out.result()
+    out
   }
 
   import ScrapeManager.ScrapeTarget
@@ -424,16 +389,8 @@ final class ScrapeManager(
       store.appendRows(rows)
       departed.foreach(seriesSeen.remove)
     }
-    stSynthState.keys.filterNot(liveKeys).foreach(stSynthState.remove)
-    stSynthHistState.keys.filterNot(liveKeys).foreach(stSynthHistState.remove)
-    // PrometheusProto first in scrape_protocols → protobuf negotiation for
-    // the pool (ref: DefaultProtoFirstScrapeProtocols — how
-    // scrape_native_histograms selects the proto path); per-target flags
-    // (tests, explicit pools) still win
-    val protoFirst = scrapeProtocols.headOption.contains("PrometheusProto")
-    val results = tgts.map(t =>
-      if (t.proto || (protoFirst && !t.openMetrics)) scrapeProto(t)
-      else scrapeTarget(t))
+    anchors.keys.filterNot(liveKeys).foreach(anchors.remove)
+    val results = tgts.map(scrapeTarget)
     val exRows = results.flatMap(_._2)
     if (exRows.nonEmpty)
       store.appendExemplars(spark.createDataFrame(
@@ -442,355 +399,231 @@ final class ScrapeManager(
     results.map(_._1).sum
   }
 
-  /** protobuf-negotiated scrape (content type io.prometheus.client.MetricFamily,
-    * delimited) — the only text-free scrape path; carries native histograms,
-    * family metadata, and exemplars on counters / classic buckets / native
-    * histograms (ref: scrape/scrape.go accept header negotiation,
-    * model/textparse/protobufparse.go:329 Exemplar). Returns (appended rows,
-    * exemplar rows for the pool's per-cycle batch). */
-  private def scrapeProto(tgt: ScrapeTarget): (Long, Seq[Row]) = {
-    import graft.promql.FHist
-    import graft.web.ProtoExposition
-    val t0 = nowMs()
-    val (parsed, bodyLen, ok) =
-      try {
-        val resp = sendFollow((u, a) =>
-          scrapeRequest(u, a)
-            .setHeader("Accept", "application/vnd.google.protobuf;" +
-              "proto=io.prometheus.client.MetricFamily;encodings=delimited").GET().build(),
-          tgt.url, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-        if (resp.statusCode() != 200) (ProtoExposition.Parsed(Nil, Map.empty), 0L, false)
-        else {
-          val bytes = inflate(resp) // body_size_limit is on UNCOMPRESSED bytes
-          if (limits.bodySizeLimit > 0 && bytes.length > limits.bodySizeLimit)
-            (ProtoExposition.Parsed(Nil, Map.empty), -1L, false)
-          else {
-            // per-target overrides win over pool config (ref: scrape.go
-            // newScrapeLoop opts via target.boolLabel — #18929/#18840)
-            val effAlwaysClassic =
-              tgt.alwaysClassicOverride.getOrElse(alwaysClassicHist)
-            val keepNative = tgt.nativeHistOverride.getOrElse(true)
-            // __scrape_native_histograms__=false on a proto target keeps
-            // the classic representation and drops native samples (ref:
-            // scrape.go IgnoreNativeHistograms = !enableNativeHistogram
-            // Scraping — classic series still scrape as before)
-            val p0 = ProtoExposition.parse(bytes, t0,
-              alwaysClassic = effAlwaysClassic || !keepNative)
-            val p1 =
-              if (keepNative) p0
-              else p0.copy(samples = p0.samples.filter(_.h.isEmpty))
-            // native-histogram shaping (ref scrape.go maxSchemaAppender +
-            // bucketLimitAppender): min_bucket_factor caps the schema,
-            // then the bucket limit keeps reducing resolution; a histogram
-            // still over the limit at schema −4 (or an irreducible custom-
-            // bounds NHCB) fails the WHOLE scrape like the reference's
-            // errBucketLimit → up=0, nothing appended
-            val minFactorCap =
-              if (limits.nativeHistogramMinBucketFactor > 1.0)
-                ScrapeManager.pickSchema(limits.nativeHistogramMinBucketFactor)
-              else Int.MaxValue
-            val bucketLim = limits.nativeHistogramBucketLimit
-            var bucketLimitHit = false
-            val p =
-              if (bucketLim <= 0 && minFactorCap == Int.MaxValue) p1
-              else p1.copy(samples = p1.samples.map { sm =>
-                sm.h match {
-                  case Some(h0) if !h0.isCustom =>
-                    var h =
-                      if (minFactorCap < h0.schema) h0.reduceTo(minFactorCap)
-                      else h0
-                    if (bucketLim > 0) {
-                      while (h.pcnt.length + h.ncnt.length > bucketLim &&
-                             h.schema > -4)
-                        h = h.reduceTo(h.schema - 1)
-                      if (h.pcnt.length + h.ncnt.length > bucketLim)
-                        bucketLimitHit = true
-                    }
-                    sm.copy(h = Some(h))
-                  case Some(h0) =>
-                    if (bucketLim > 0 && h0.cv.length > bucketLim)
-                      bucketLimitHit = true
-                    sm
-                  case None => sm
-                }
-              })
-            if (bucketLimitHit)
-              (ProtoExposition.Parsed(Nil, Map.empty), bytes.length.toLong, false)
-            else (p, bytes.length.toLong, true)
-          }
-        }
-      } catch { case _: Exception => (ProtoExposition.Parsed(Nil, Map.empty), 0L, false) }
-    val dur = (nowMs() - t0) / 1000.0
-    def decorate(labels: Map[String, String]): Map[String, String] =
-      ScrapeManager.decorate(tgt, labels)
-    val stamped0 = parsed.samples.map { s =>
-      s.copy(labels = decorate(s.labels), t = if (honorTimestamps && s.t != 0L) s.t else t0)
-    }
-    // st-synthesis on the proto path: FLOAT series without a proto
-    // created_timestamp synthesize like the text path (family TYPE comes
-    // from the proto metadata); NATIVE-HISTOGRAM series synthesize via the
-    // FHist detectReset/sub machinery (ref synthesizeFloatHistogram).
-    // GUARD on `ok`: a failed scrape (non-200/timeout/body-size) parses to
-    // zero samples, and running synthesis then would prune EVERY anchor for
-    // the target — the next good scrape would re-anchor (drop) all series
-    // and rebase against post-failure values, a permanent level shift. The
-    // reference only clears stCache through genuine staleness.
-    val stamped =
-      if (!stSynthesis || !ok || stamped0.isEmpty) stamped0
-      else {
-        val famTypes = parsed.meta.map { case (n, (t, _, _)) => n -> t }
-        val tgtKey = seriesKey(tgt.job, tgt.url)
-        val (floats, hists) = stamped0.partition(_.h.isEmpty)
-        synthesizeSt(tgtKey,
-          floats.map(s => (s.labels, s.t, s.v, s.stt)), famTypes)
-          .map { case (l, t, v, stt) =>
-            graft.web.RemoteWrite.Sample(l, t, v, stt) } ++
-          synthesizeHistSt(tgtKey, hists, famTypes)
-      }
-    val rows = stamped.map(_.toRow)
-    val df0 = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 10000)),
-      Engine.samplesSchema)
-    val scraped = if (rows.isEmpty) None else Some(Relabel(df0, metricRelabel))
-    // limits run on the POST-metric-relabel label sets (ref: append-time
-    // verifyLabelLimits — a relabel rule that drops the offending label must
-    // let the scrape pass); one collect replaces the former count (the batch
-    // is driver-origin and ≤ scrape size)
-    val postPairs = scraped.map(_.select("labels", "t").collect()
-      .map(r => (r.getAs[scala.collection.Map[String, String]](0).toMap,
-        r.getLong(1) != t0))).getOrElse(Array.empty)
-    val postLabels = postPairs.map(_._1)
-    val postN = postLabels.length.toLong
-    val violation = if (!ok) None else limitViolation(postLabels.iterator, postN)
-    val effOk = ok && violation.isEmpty
-    if (!effOk) logFailure(tgt, violation.getOrElse("scrape failed"))
-    val tgtKey = seriesKey(tgt.job, tgt.url)
-    val nowMap: Map[Long, (Map[String, String], Boolean)] =
-      postPairs.iterator.map { case (ls, explicit) =>
-        series64(ls.toSeq.sorted.mkString("\u0001")) -> ((ls, explicit)) }.toMap
-    val (seriesAdded, staleLabels) = staleDiff(tgtKey, nowMap, effOk)
-    val report = (Seq(
-      ("up", if (effOk) 1.0 else 0.0),
-      ("scrape_duration_seconds", dur),
-      ("scrape_samples_scraped", parsed.samples.size.toDouble),
-      ("scrape_samples_post_metric_relabeling", postN.toDouble),
-      ("scrape_series_added", seriesAdded.toDouble)) ++
-      (if (extraScrapeMetrics) Seq(
-        ("scrape_timeout_seconds", timeoutMs / 1000.0),
-        ("scrape_sample_limit", limits.sampleLimit.toDouble),
-        ("scrape_body_size_bytes", bodyLen.toDouble)) else Nil))
-      .map { case (n, v) =>
-      Row(decorate(Map("__name__" -> n)), t0, v, false, null, 0L)
-    }
-    val markerRows = staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L))
-    scraped.filter(_ => violation.isEmpty).foreach(store.append)
-    store.appendRows(report ++ markerRows)
-    if (parsed.meta.nonEmpty && violation.isEmpty) store.mergeMetadata(parsed.meta)
-    // exemplars ride the accepted scrape only, attached to the decorated,
-    // POST-metric-relabel series (same contract as the OpenMetrics path);
-    // a ts-less exemplar gets the scrape timestamp (ref: scrape.go — no-ts
-    // exemplars default to the sample's timestamp)
-    val exRows =
-      if (!effOk) Nil
-      else parsed.exemplars.flatMap { case (l, e) =>
-        Relabel.applyToMap(decorate(l), metricRelabel).map { sl =>
-          Row(sl, Row(e.labels, e.v,
-            if (e.t == ProtoExposition.NoTs) t0 else e.t))
-        }
-      }
-    ((if (violation.isEmpty) stamped.size.toLong else 0L) + report.size, exRows)
+  /** the negotiation order a target's Accept header lists: the pool's
+    * scrape_protocols (the reference's DefaultScrapeProtocols when unset),
+    * with protobuf first for a target flagged `proto` */
+  private def protocolsOf(tgt: ScrapeTarget): Seq[String] = {
+    val pool =
+      if (scrapeProtocols.nonEmpty) scrapeProtocols else ScrapeManager.defaultScrapeProtocols
+    if (tgt.proto) "PrometheusProto" +: pool.filterNot(_ == "PrometheusProto") else pool
   }
 
-  /** ST(created)-timestamp zero injection (ref: scrape.go
-    * AppendSTZeroSample under the created-timestamp-zero-ingestion feature
-    * flag): every OpenMetrics `<base>_created` line yields a synthetic 0 at
-    * the created timestamp for each matching series of the family
-    * (counter `_total`, summary/histogram `_count`/`_sum`/`_bucket` and
-    * bare quantile samples — matched on labels minus le/quantile), so
-    * rate/increase see the counter's birth instead of extrapolating. The
-    * `_created` series themselves are consumed, not ingested (the
-    * reference's WithOMParserSTSeriesSkipped). Zeros only inject when
-    * 0 < ct < sample ts. */
-  private def stZeroRows(recs: Seq[OpenMetrics.OMRow],
-      famTypes: Map[String, String])
-      : (Seq[(OpenMetrics.OMRow, Long)], Seq[(Map[String, String], Long, Double)]) = {
-    // `_created` consumption is gated on the family's parsed TYPE — only
-    // counter/summary/histogram families carry created timestamps in OM, so
-    // a genuine metric that merely ends in _created (unknown/gauge TYPE)
-    // stays an ordinary ingested series (ref: the OM parser's CreatedTimestamp
-    // resolves created lines against typed metric families, not by suffix)
-    val createdTyped = Set("counter", "summary", "histogram", "gaugehistogram")
-    def isCreatedLine(name: String): Boolean =
-      name.endsWith("_created") && {
-        val base = name.stripSuffix("_created")
-        famTypes.get(base).exists(createdTyped)
-      }
-    val (created, rest) = recs.partition(r =>
-      isCreatedLine(r.labels.getOrElse("__name__", "")))
-    if (created.isEmpty) return (rest.map((_, 0L)), Nil)
-    // (family base, identity labels) → created ms; OM created values are
-    // unix SECONDS (possibly fractional)
-    val ctByKey = created.map { r =>
-      val base = r.labels("__name__").stripSuffix("_created")
-      (base, r.labels - "__name__") -> math.round(r.v * 1000.0)
-    }.toMap
-    def baseOf(name: String): String = {
-      val i = Seq("_total", "_count", "_sum", "_bucket")
-        .find(name.endsWith)
-      i.map(s => name.stripSuffix(s)).getOrElse(name)
-    }
-    val zeros = rest.flatMap { r =>
-      val key = (baseOf(r.labels.getOrElse("__name__", "")),
-        r.labels - "__name__" - "le" - "quantile")
-      ctByKey.get(key).filter(ct => ct > 0 && ct < r.t)
-        .map(ct => (r.labels, ct, 0.0))
-    }.distinct
-    // family samples also carry ct in the stt column — the same threading
-    // the protobuf path does unconditionally (Sample.stt), so downstream
-    // start-timestamp semantics see text and proto scrapes identically
-    val withStt = rest.map { r =>
-      val key = (baseOf(r.labels.getOrElse("__name__", "")),
-        r.labels - "__name__" - "le" - "quantile")
-      (r, ctByKey.getOrElse(key, 0L))
-    }
-    (withStt, zeros)
-  }
-
+  /** One scrape of one target (ref: scrape/scrape.go:1347 scrapeAndReport):
+    * one request, one [[parse]] of the answer into a batch, one [[append]].
+    * Returns (appended rows, exemplar rows for the pool's per-cycle batch). */
   private def scrapeTarget(tgt: ScrapeTarget): (Long, Seq[Row]) = {
     val t0 = nowMs()
-    val (samples, exemplars, stZeros, bodyLen, ok, famTypesForSynth) =
+    val none = ProtoExposition.Parsed(Nil, Map.empty)
+    // (batch, uncompressed body bytes — -1 when body_size_limit fails the
+    // scrape, the reference's errBodySizeLimit — and whether it succeeded)
+    val (batch, bodyLen, ok) =
       try {
-        val textProtocols =
-          (if (scrapeProtocols.nonEmpty) scrapeProtocols
-           else ScrapeManager.defaultScrapeProtocols)
-            .filterNot(_ == "PrometheusProto")
         val resp = sendFollow((u, a) => scrapeRequest(u, a)
-            .setHeader("Accept", ScrapeManager.acceptHeader(textProtocols))
+            .setHeader("Accept", ScrapeManager.acceptHeader(protocolsOf(tgt)))
             .GET().build(),
           tgt.url, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-        lazy val bodyBytes = inflate(resp)
-        if (resp.statusCode() != 200)
-          (Nil, Nil, Nil, 0L, false, Map.empty[String, String])
-        else if (limits.bodySizeLimit > 0 && bodyBytes.length > limits.bodySizeLimit)
-          // ref: errBodySizeLimit — the scrape fails whole; the extra
-          // scrape_body_size_bytes metric reports -1 for exactly this case
-          (Nil, Nil, Nil, -1L, false, Map.empty[String, String])
+        if (resp.statusCode() != 200) (none, 0L, false)
         else {
-          val lines = new String(bodyBytes, "UTF-8").split("\n").toSeq
-          val defaultTs = t0
-          // parser selection follows the RESPONSE Content-Type (ref:
-          // scrape.go → textparse.New by media type), with
-          // fallback_scrape_protocol deciding unrecognized/absent types
-          val ct = resp.headers().firstValue("Content-Type").orElse("")
-          val openMetrics = tgt.openMetrics ||
-            ct.startsWith("application/openmetrics-text") ||
-            (!ct.startsWith("text/plain") && !ct.startsWith("application/") &&
-              fallbackProtocol.startsWith("OpenMetricsText"))
-          if (openMetrics) {
-            val all = lines.flatMap(OpenMetrics.parseLine(_, defaultTs))
-            val recs0 = all.filter(_.kind == 0)
-            lazy val famTypes = all.filter(r => r.kind != 0 && r.metaKey == "type")
-              .map(r => r.family -> r.metaVal).toMap
-            // st-synthesis needs the parsed created timestamps too (ref
-            // parseST = synthesizeST || enableSTZeroIngestion): a series
-            // with an explicit _created keeps it and is never synthesized.
-            // The zero INJECTION stays the created-timestamp flag's job.
-            val (recs, zeros0) =
-              if (stZeroIngestion || stSynthesis) stZeroRows(recs0, famTypes)
-              else (recs0.map((_, 0L)), Nil)
-            val zeros = if (stZeroIngestion) zeros0 else Nil
-            (recs.map { case (r, stt) => (r.labels, r.t, r.v, stt) },
-              // scrape-time exemplar ingestion (ref: scrape/scrape.go append
-              // → appender.AppendExemplar keyed on the sample's series)
-              recs.flatMap { case (r, _) => r.ex.map(e => (r.labels, e)) },
-              zeros,
-              bodyBytes.length.toLong,
-              true,
-              if (stSynthesis) famTypes else Map.empty[String, String])
-          } else {
-            // Prometheus text format: TYPE lines name the metric as exposed
-            // (counters keep their _total), so the eligibility check's bare
-            // name lookup matches directly
-            val famTypes =
-              if (stSynthesis)
-                lines.iterator.filter(_.startsWith("# TYPE ")).flatMap { ln =>
-                  ln.substring(7).trim.split("\\s+") match {
-                    case Array(n, t) => Some(n -> t)
-                    case _ => None
-                  }
-                }.toMap
-              else Map.empty[String, String]
-            (lines.flatMap(Exposition.parseLine(_, defaultTs))
-               .map { case (l, t, v) => (l, t, v, 0L) }, Nil, Nil,
-               bodyBytes.length.toLong, true, famTypes)
-          }
+          val body = inflate(resp) // body_size_limit is on UNCOMPRESSED bytes
+          if (limits.bodySizeLimit > 0 && body.length > limits.bodySizeLimit) (none, -1L, false)
+          else parse(tgt, resp.headers().firstValue("Content-Type").orElse(""), body, t0)
+            .fold((none, body.length.toLong, false))((_, body.length.toLong, true))
         }
-      } catch { case _: Exception =>
-        (Nil, Nil, Nil, 0L, false, Map.empty[String, String]) }
+      } catch { case _: Exception => (none, 0L, false) }
+    append(tgt, t0, batch, bodyLen, ok)
+  }
+
+  /** One scrape body → one batch: samples with their start timestamp (stt)
+    * and native histogram, family metadata, and exemplars whose missing
+    * timestamp is set to the scrape time (ref: scrape.go — exemplars
+    * without a timestamp default to the sample's). The parser follows the
+    * target's `proto`/`openMetrics` flag, else the response Content-Type
+    * (ref: scrape.go → textparse.New by media type), else
+    * fallback_scrape_protocol, else the Prometheus text format. None when a
+    * native histogram stays over the bucket limit: the whole scrape fails. */
+  private def parse(tgt: ScrapeTarget, contentType: String, body: Array[Byte],
+      t0: Long): Option[ProtoExposition.Parsed] = {
+    val protocol =
+      if (tgt.proto) "PrometheusProto"
+      else if (tgt.openMetrics) "OpenMetricsText"
+      else contentType.takeWhile(_ != ';').trim.toLowerCase match {
+        case "application/vnd.google.protobuf" => "PrometheusProto"
+        case "application/openmetrics-text" => "OpenMetricsText"
+        case "text/plain" => "PrometheusText"
+        case _ => fallbackProtocol
+      }
+    // per-target overrides win over pool config (ref: scrape.go
+    // newScrapeLoop opts via target.boolLabel — #18929/#18840);
+    // __scrape_native_histograms__=false keeps the classic representation
+    // and drops native samples (ref: IgnoreNativeHistograms)
+    val keepNative = tgt.nativeHistOverride.getOrElse(true)
+    val p =
+      if (protocol == "PrometheusProto")
+        ProtoExposition.parse(body, t0,
+          alwaysClassic = tgt.alwaysClassicOverride.getOrElse(alwaysClassicHist) || !keepNative)
+      else {
+        val lines = new String(body, "UTF-8").split("\n").toSeq
+        if (protocol.startsWith("OpenMetricsText")) parseOpenMetrics(lines, t0)
+        else parsePromText(lines, t0)
+      }
+    shapeNative(if (keepNative) p.samples else p.samples.filter(_.h.isEmpty)).map(s =>
+      p.copy(samples = s, exemplars = p.exemplars.map { case (l, e) =>
+        (l, if (e.t == ProtoExposition.NoTs) e.copy(t = t0) else e) }))
+  }
+
+  /** native-histogram shaping (ref scrape.go maxSchemaAppender +
+    * bucketLimitAppender): min_bucket_factor caps the schema, then the
+    * bucket limit keeps reducing resolution; a histogram still over the
+    * limit at schema −4 (or an irreducible custom-bounds NHCB) gives None,
+    * like the reference's errBucketLimit */
+  private def shapeNative(samples: Seq[Sample]): Option[Seq[Sample]] = {
+    val minFactorCap =
+      if (limits.nativeHistogramMinBucketFactor > 1.0)
+        ScrapeManager.pickSchema(limits.nativeHistogramMinBucketFactor)
+      else Int.MaxValue
+    val bucketLim = limits.nativeHistogramBucketLimit
+    if (bucketLim <= 0 && minFactorCap == Int.MaxValue) return Some(samples)
+    var bucketLimitHit = false
+    val out = samples.map { sm =>
+      sm.h match {
+        case Some(h0) if !h0.isCustom =>
+          var h = if (minFactorCap < h0.schema) h0.reduceTo(minFactorCap) else h0
+          if (bucketLim > 0) {
+            while (h.pcnt.length + h.ncnt.length > bucketLim && h.schema > -4)
+              h = h.reduceTo(h.schema - 1)
+            if (h.pcnt.length + h.ncnt.length > bucketLim) bucketLimitHit = true
+          }
+          sm.copy(h = Some(h))
+        case Some(h0) =>
+          if (bucketLim > 0 && h0.cv.length > bucketLim) bucketLimitHit = true
+          sm
+        case None => sm
+      }
+    }
+    if (bucketLimitHit) None else Some(out)
+  }
+
+  /** OpenMetrics lines → batch; the `_created` lines set their family's stt
+    * when created-timestamp-zero-ingestion or st-synthesis needs it (ref
+    * parseST = synthesizeST || enableSTZeroIngestion) */
+  private def parseOpenMetrics(lines: Seq[String], t0: Long): ProtoExposition.Parsed = {
+    val all = lines.flatMap(OpenMetrics.parseLine(_, t0))
+    val meta = familyMeta(all)
+    val recs0 = all.filter(_.kind == 0)
+    val recs =
+      if (stZeroIngestion || stSynthesis) withCreated(recs0, meta) else recs0.map((_, 0L))
+    ProtoExposition.Parsed(recs.map { case (r, stt) => Sample(r.labels, r.t, r.v, stt) }, meta,
+      // scrape-time exemplar ingestion (ref: scrape/scrape.go append →
+      // appender.AppendExemplar keyed on the sample's series)
+      recs.flatMap { case (r, _) => r.ex.map(e => (r.labels, e)) })
+  }
+
+  /** Prometheus text lines → batch; TYPE and HELP comments name the family
+    * as exposed (counters keep their _total), and the format has no UNIT */
+  private def parsePromText(lines: Seq[String], t0: Long): ProtoExposition.Parsed =
+    ProtoExposition.Parsed(
+      lines.flatMap(Exposition.parseLine(_, t0)).map { case (l, t, v) => Sample(l, t, v) },
+      familyMeta(lines.filter(_.trim.startsWith("#")).flatMap(OpenMetrics.parseLine(_, t0))
+        .filter(_.metaKey != "unit")))
+
+  /** TYPE/UNIT/HELP rows → family → (type, unit, help); a repeated key's
+    * last line wins */
+  private def familyMeta(rows: Seq[OpenMetrics.OMRow]): Meta =
+    rows.filter(_.kind == 1).groupBy(_.family).map { case (fam, ms) =>
+      def last(key: String) = ms.reverseIterator.find(_.metaKey == key).fold("")(_.metaVal)
+      fam -> ((last("type"), last("unit"), last("help")))
+    }
+
+  /** OpenMetrics `<base>_created` lines → the created timestamp as the stt
+    * of every matching series of the family (counter `_total`,
+    * summary/histogram `_count`/`_sum`/`_bucket` and bare quantile samples —
+    * matched on labels minus le/quantile). The `_created` series themselves
+    * are consumed, not ingested (the reference's
+    * WithOMParserSTSeriesSkipped). Consumption is gated on the family's
+    * parsed TYPE — only counter/summary/histogram families carry created
+    * timestamps in OM, so a genuine metric that merely ends in _created
+    * (unknown/gauge TYPE) stays an ordinary series (ref: the OM parser's
+    * CreatedTimestamp resolves created lines against typed families). */
+  private def withCreated(recs: Seq[OpenMetrics.OMRow], meta: Meta)
+      : Seq[(OpenMetrics.OMRow, Long)] = {
+    val createdTyped = Set("counter", "summary", "histogram", "gaugehistogram")
+    def name(r: OpenMetrics.OMRow) = r.labels.getOrElse("__name__", "")
+    val (created, rest) = recs.partition(r => name(r).endsWith("_created") &&
+      meta.get(name(r).stripSuffix("_created")).exists(m => createdTyped(m._1)))
+    def key(base: String, r: OpenMetrics.OMRow) =
+      (base, r.labels - "__name__" - "le" - "quantile")
+    // OM created values are unix SECONDS (possibly fractional)
+    val ctByKey = created.map(r =>
+      key(name(r).stripSuffix("_created"), r) -> math.round(r.v * 1000.0)).toMap
+    def baseOf(n: String): String =
+      Seq("_total", "_count", "_sum", "_bucket").find(n.endsWith).fold(n)(n.stripSuffix)
+    rest.map(r => (r, ctByKey.getOrElse(key(baseOf(name(r)), r), 0L)))
+  }
+
+  /** One scrape's append (ref: scrape.go scrapeLoop.append and report), in
+    * this order: target decoration and honor_timestamps, ST zeros,
+    * st-synthesis, metric relabeling, NHCB conversion, the limits, the
+    * staleness diff, the report series, the store append, metadata and
+    * exemplars. A failed or limit-violating scrape appends only its report
+    * series and staleness markers. Returns (appended rows, exemplar rows). */
+  private def append(tgt: ScrapeTarget, t0: Long, batch: ProtoExposition.Parsed,
+      bodyLen: Long, ok: Boolean): (Long, Seq[Row]) = {
     val dur = (nowMs() - t0) / 1000.0
+    val tgtKey = seriesKey(tgt.job, tgt.url)
     // target labels (ref: scrape.go:700 target label decoration)
     def decorate(labels: Map[String, String]): Map[String, String] =
       ScrapeManager.decorate(tgt, labels)
-    def toDf(rows: Seq[(Map[String, String], Long, Double, Long)]) =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          rows.map { case (l, t, v, stt) => Row(l, t, v, false, null, stt) },
-          math.max(1, rows.size / 10000)),
-        Engine.samplesSchema)
-    val stampedReal0 = samples.map { case (l, t, v, stt) =>
-      (decorate(l), if (honorTimestamps) t else t0, v, stt)
-    }
-    // st-synthesis rewrites cumulative rows lacking an ST: first-seen rows
-    // anchor and drop, later rows append rebased with the synthesized ST
-    val stampedReal =
-      if (stSynthesis && stampedReal0.nonEmpty)
-        synthesizeSt(seriesKey(tgt.job, tgt.url), stampedReal0, famTypesForSynth)
-      else stampedReal0
-    // ST zeros keep the created timestamp (it IS a timestamp by definition,
-    // honor_timestamps notwithstanding); relabeled like scraped samples but
-    // EXCLUDED from sample_limit accounting — the reference's
-    // AppendSTZeroSample bypasses the added/seriesAdded counters
-    val stampedZeros = stZeros.map { case (l, ct, v) => (decorate(l), ct, v, 0L) }
-    val stamped = stampedReal ++ stampedZeros
+    val stamped0 = batch.samples.map(s =>
+      s.copy(labels = decorate(s.labels), t = if (honorTimestamps) s.t else t0))
+    // created-timestamp-zero-ingestion (ref: scrape.go AppendSTZeroSample):
+    // a zero at each float sample's start timestamp when 0 < stt < t, so
+    // rate/increase see the counter's birth. A zero keeps that timestamp
+    // (honor_timestamps notwithstanding), is relabeled like a scraped sample
+    // but EXCLUDED from sample_limit accounting — the reference's
+    // AppendSTZeroSample bypasses the added counters
+    val zeros =
+      if (!stZeroIngestion) Nil
+      else stamped0.collect { case s if s.h.isEmpty && s.stt > 0L && s.stt < s.t =>
+        Sample(s.labels, s.stt, 0.0) }.distinct
+    // st-synthesis rewrites cumulative samples lacking an ST; a failed
+    // scrape has none, so its anchors survive the outage
+    val stamped =
+      if (!stSynthesis || stamped0.isEmpty) stamped0
+      else synthesizeSt(tgtKey, stamped0, batch.meta.map { case (n, (t, _, _)) => n -> t })
     // metric_relabel_configs apply to scraped samples only; the report
     // series bypass them (ref: scrape.go append vs report)
-    val scrapedReal =
-      if (stampedReal.isEmpty) None
-      else Some(Relabel(toDf(stampedReal), metricRelabel))
-    val zerosDf =
-      if (stampedZeros.isEmpty) None
-      else Some(Relabel(toDf(stampedZeros), metricRelabel))
-    val scraped0 = (scrapedReal, zerosDf) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
+    def relabeled(rows: Seq[Sample]) =
+      if (rows.isEmpty) None
+      else Some(Relabel(spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map(_.toRow), math.max(1, rows.size / 10000)), Engine.samplesSchema), metricRelabel))
+    val scrapedReal = relabeled(stamped)
+    val scraped0 = (scrapedReal ++ relabeled(zeros)).reduceOption(_ unionByName _)
+    // convert_classic_histograms_to_nhcb (ref: textparse wraps every parser
+    // in its NHCB parser)
     val scraped =
-      if (tgt.convertNhcbOverride.getOrElse(convertNhcb))
-        scraped0.map(Ingest.classicToNhcb)
+      if (tgt.convertNhcbOverride.getOrElse(convertNhcb)) scraped0.map(Ingest.classicToNhcb)
       else scraped0
-    // post-relabel label sets (see scrapeProto: append-time
-    // verifyLabelLimits); limits count the SCRAPED series — synthesized
-    // NHCB natives don't count against sample_limit
+    // limits run on the POST-metric-relabel label sets (ref: append-time
+    // verifyLabelLimits — a relabel rule that drops the offending label must
+    // let the scrape pass) and count the SCRAPED series only: ST zeros and
+    // synthesized NHCB natives don't count against sample_limit
     val postPairs = scrapedReal.map(_.select("labels", "t").collect()
       .map(r => (r.getAs[scala.collection.Map[String, String]](0).toMap,
         r.getLong(1) != t0))).getOrElse(Array.empty)
-    val postLabels = postPairs.map(_._1)
-    val postN = postLabels.length.toLong
-    val violation = if (!ok) None else limitViolation(postLabels.iterator, postN)
+    val postN = postPairs.length.toLong
+    val violation = if (!ok) None else limitViolation(postPairs.iterator.map(_._1), postN)
     val effOk = ok && violation.isEmpty
     if (!effOk) logFailure(tgt, violation.getOrElse("scrape failed"))
     // scrape_series_added + staleness diff: post-relabel series vs this
     // target's previous scrape (ref: scrape.go seriesAdded via the
     // per-target scrape cache; see staleDiff for the failure semantics)
-    val tgtKey = seriesKey(tgt.job, tgt.url)
-    val nowMap: Map[Long, (Map[String, String], Boolean)] =
-      postPairs.iterator.map { case (ls, explicit) =>
-        series64(ls.toSeq.sorted.mkString("\u0001")) -> ((ls, explicit)) }.toMap
-    val (seriesAdded, staleLabels) = staleDiff(tgtKey, nowMap, effOk)
+    val (seriesAdded, staleLabels) = staleDiff(tgtKey, postPairs.iterator.map {
+      case (ls, explicit) => series64(ls.toSeq.sorted.mkString("\u0001")) -> ((ls, explicit))
+    }.toMap, effOk)
     val report = (Seq(
       ("up", if (effOk) 1.0 else 0.0),
       ("scrape_duration_seconds", dur),
-      ("scrape_samples_scraped", samples.size.toDouble),
+      ("scrape_samples_scraped", batch.samples.size.toDouble),
       ("scrape_samples_post_metric_relabeling", postN.toDouble),
       ("scrape_series_added", seriesAdded.toDouble)) ++
       // --enable-feature=extra-scrape-metrics (ref: scrape.go
@@ -802,20 +635,21 @@ final class ScrapeManager(
         ("scrape_body_size_bytes", bodyLen.toDouble)) else Nil))
       .map { case (n, v) => Row(decorate(Map("__name__" -> n)), t0, v, false, null, 0L) }
     // a violated limit drops the WHOLE scraped batch (append rollback)
-    scraped.filter(_ => violation.isEmpty).foreach(store.append)
+    if (effOk) scraped.foreach(store.append)
     store.appendRows(report ++ staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L)))
+    if (effOk && batch.meta.nonEmpty) store.mergeMetadata(batch.meta)
     // exemplars ride the accepted scrape only, attached to the decorated,
     // POST-metric-relabel series — an exemplar of a relabel-dropped series
     // is dropped with it (ref: scrape.go exemplars append after the sample's
     // series ref resolves); the append itself is batched per pool cycle in
     // scrapeOnce
     val exRows =
-      if (violation.nonEmpty) Nil
-      else exemplars.flatMap { case (l, e) =>
+      if (!effOk) Nil
+      else batch.exemplars.flatMap { case (l, e) =>
         Relabel.applyToMap(decorate(l), metricRelabel)
           .map(sl => Row(sl, Row(e.labels, e.v, e.t)))
       }
-    ((if (violation.isEmpty) stamped.size.toLong else 0L) + report.size, exRows)
+    ((if (effOk) (stamped.size + zeros.size).toLong else 0L) + report.size, exRows)
   }
 
   def start(): Unit = synchronized {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.promql.{Engine, QueryLimits}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import scala.util.{Failure, Success, Try}
 
 /** Whole-server assembly (ref: cmd/prometheus/main.go component wiring +
@@ -75,6 +75,8 @@ final class PromServer(
   @volatile private var ruleGroups: Seq[Rules.Group] = Nil
   // per group (its file and name), each rule's state, aligned with its rules
   @volatile private var ruleStates: Map[Rules.Group, Vector[Rules.RuleState]] = Map.empty
+  // series written by rules a reload removed; stale-marked at the next tick
+  @volatile private var orphanedSeries: Set[Map[String, String]] = Set.empty
   @volatile private var notifier: Option[graft.web.Notifier] = None
   // (write_relabel rules, sender) per remote_write entry — the rules run on
   // every outgoing batch before the send (ref: queue_manager.go)
@@ -112,12 +114,18 @@ final class PromServer(
       // ---- commit point: swap components ----
       configOpt = Some(cfg)
       // a reloaded group's rules keep the state of the rules they match in
-      // the running group of the same file and name
-      ruleStates = groups.map { g =>
+      // the running group of the same file and name; the series of rules
+      // left unmatched (removed, renamed, or in a removed group) go stale at
+      // the next tick (ref: rules/group.go CopyState → staleSeries)
+      val carried = groups.map { g =>
         g -> ruleGroups.find(o => o.file == g.file && o.name == g.name)
           .fold(Vector.empty[Rules.RuleState])(old =>
             Rules.carryState(old, ruleStates.getOrElse(old, Vector.empty), g))
       }.toMap
+      def written(states: Map[Rules.Group, Vector[Rules.RuleState]]) =
+        states.valuesIterator.flatten.flatMap(_.series).toSet
+      orphanedSeries ++= written(ruleStates) -- written(carried)
+      ruleStates = carried
       ruleGroups = groups
       api.ruleGroups = ruleGroups
       api.ruleStates = ruleStates
@@ -311,7 +319,7 @@ final class PromServer(
       val ets = tsMs - g.queryOffsetMs
       val next = Rules.tick(spark, g, ets, ruleStates.getOrElse(g, Vector.empty),
         () => store.samples, external, externalUrl) { (i, result) =>
-        val key = (g.name, g.rules(i).name)
+        val key = (g, i)
         val appended = result.flatMap { case (rows, _) => Try(store.appendRows(rows)) }
         appended.flatMap(_ => result).flatMap { case (rows, st) => Try {
           g.rules(i) match {
@@ -339,6 +347,11 @@ final class PromServer(
         .updated(g, (tsMs, (System.nanoTime() - g0) / 1e9))
     }
     api.ruleStates = ruleStates
+    // a series a removed rule wrote and no rule wrote this tick ends here
+    val orphans = orphanedSeries -- ruleStates.valuesIterator.flatten.flatMap(_.series)
+    if (orphans.nonEmpty)
+      store.appendRows(orphans.toSeq.map(l => Row(l, tsMs, Double.NaN, true, null, 0L)))
+    orphanedSeries = Set.empty
   }
 
   /** one synchronous scrape pass (agent and server modes share the path);

@@ -125,9 +125,10 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
     * the rule-eval loop; rendered by /api/v1/rules */
   @volatile var ruleEvalStats: Map[graft.streaming.Rules.Group, (Long, Double)] = Map.empty
 
-  /** (group, rule) → last evaluation error (group-limit violations etc.),
-    * set by the rule-eval loop; renders health=err + lastError */
-  @volatile var ruleErrors: Map[(String, String), String] = Map.empty
+  /** (group, rule's position in it) → last evaluation error (group-limit
+    * violations etc.), set by the rule-eval loop; renders health=err +
+    * lastError */
+  @volatile var ruleErrors: Map[(graft.streaming.Rules.Group, Int), String] = Map.empty
 
   /** scrape pool name → its relabel_configs, set by the server assembly on
     * (re)load; serves /scrape_pools and /targets/relabel_steps */
@@ -160,13 +161,13 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
   /** rendered by /api/v1/status/config (ref: api.go serveConfig) */
   @volatile var configYaml: String = "# graft-spark serving configuration"
 
-  /** a group's alerting rules, each with its alerts as (rendered alert
-    * JSON, state string) */
+  /** a group's alerting rules, each with its position in the group and its
+    * alerts as (rendered alert JSON, state string) */
   private def alertingRulesOf(g: graft.streaming.Rules.Group)
-      : Seq[(graft.streaming.Rules.AlertingRule, Seq[(String, String)])] = {
+      : Seq[(Int, graft.streaming.Rules.AlertingRule, Seq[(String, String)])] = {
     val states = ruleStates.getOrElse(g, Vector.empty)
     g.rules.zipWithIndex.collect { case (a: graft.streaming.Rules.AlertingRule, i) =>
-      a -> states.lift(i).toSeq.flatMap(_.alerts.values).map { st =>
+      (i, a, states.lift(i).toSeq.flatMap(_.alerts.values).map { st =>
         val state = if (st.firingSinceMs >= 0) "firing" else "pending"
         (Json.obj(
           "labels" -> Json.metric(st.labels),
@@ -175,7 +176,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
           "state" -> Json.str(state),
           "activeAt" -> Json.str(java.time.Instant.ofEpochMilli(st.activeSinceMs).toString),
           "value" -> Json.value(st.value)), state)
-      }.sortBy(_._1)
+      }.sortBy(_._1))
     }
   }
 
@@ -1196,27 +1197,27 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
                 java.time.Instant.ofEpochMilli(lastMs).toString))
             // health/lastError per rule (ref: rules.RuleHealth — ok/err;
             // lastError is omitempty)
-            def healthFields(rule: String): Seq[(String, String)] =
-              ruleErrors.get((g.name, rule)) match {
+            def healthFields(rule: Int): Seq[(String, String)] =
+              ruleErrors.get((g, rule)) match {
                 case Some(err) => Seq("health" -> Json.str("err"),
                   "lastError" -> Json.str(err))
                 case None => Seq("health" -> Json.str("ok"))
               }
             val rec =
               if (typeFilter == "alert") Nil
-              else g.recording
-                .filter(r => (rnSet.isEmpty || rnSet.contains(r.record)) &&
-                  labelsMatch(r.labels))
-                .map(r => Json.obj(Seq(
-                  "type" -> Json.str("recording"), "name" -> Json.str(r.record),
-                  "query" -> Json.str(r.expr), "labels" -> Json.metric(r.labels)) ++
-                  healthFields(r.record) ++ evalFields: _*))
+              else g.rules.zipWithIndex
+                .collect { case (r: graft.streaming.Rules.RecordingRule, i)
+                  if (rnSet.isEmpty || rnSet.contains(r.record)) && labelsMatch(r.labels) =>
+                  Json.obj(Seq(
+                    "type" -> Json.str("recording"), "name" -> Json.str(r.record),
+                    "query" -> Json.str(r.expr), "labels" -> Json.metric(r.labels)) ++
+                    healthFields(i) ++ evalFields: _*) }
             val alr =
               if (typeFilter == "record") Nil
               else alertingRulesOf(g)
-                .filter { case (a, _) => (rnSet.isEmpty || rnSet.contains(a.alert)) &&
+                .filter { case (_, a, _) => (rnSet.isEmpty || rnSet.contains(a.alert)) &&
                   labelsMatch(a.labels) }
-                .map { case (a, alerts) =>
+                .map { case (i, a, alerts) =>
                   Json.obj(Seq(
                     "type" -> Json.str("alerting"), "name" -> Json.str(a.alert),
                     "query" -> Json.str(a.expr),
@@ -1229,7 +1230,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
                       else if (alerts.nonEmpty) "pending" else "inactive"),
                     "alerts" ->
                       (if (excludeAlerts) "[]" else Json.arr(alerts.map(_._1)))) ++
-                    healthFields(a.alert) ++ evalFields: _*)
+                    healthFields(i) ++ evalFields: _*)
                 }
             // a group whose rules all filtered away is skipped (ref comment)
             if ((rec ++ alr).nonEmpty) {
@@ -1257,7 +1258,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
     })
 
     server.createContext("/api/v1/alerts", qHandler { ex =>
-      val all = ruleGroups.flatMap(alertingRulesOf(_).flatMap(_._2))
+      val all = ruleGroups.flatMap(alertingRulesOf(_).flatMap(_._3))
       ok(ex, Json.obj("alerts" -> Json.arr(all.map(_._1))))
     })
 
@@ -1392,15 +1393,8 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         val exRows = dec.exemplars.map { case (sl, el, t, v) =>
           Row(sl, Row(el, v, t))
         }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("labels",
-            org.apache.spark.sql.types.MapType(
-              org.apache.spark.sql.types.StringType,
-              org.apache.spark.sql.types.StringType, valueContainsNull = false)),
-          org.apache.spark.sql.types.StructField("exemplar",
-            graft.streaming.OpenMetrics.exemplarType)))
         store.appendExemplars(spark.createDataFrame(
-          spark.sparkContext.parallelize(exRows, 1), schema))
+          spark.sparkContext.parallelize(exRows, 1), graft.streaming.OpenMetrics.exemplarBatchSchema))
       }
       // empty ExportMetricsServiceResponse
       ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")

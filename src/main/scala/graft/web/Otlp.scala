@@ -25,66 +25,21 @@ import scala.collection.mutable
   * ConvertDelta / otlp-deltatocumulative); without one they are dropped
   * (the reference's default).
   *
-  * Same hand-rolled wire reader as [[RemoteWrite]]; no protobuf runtime.
+  * Decoded with the shared [[ProtoWire]] reader; no protobuf runtime.
   */
 object Otlp {
 
   import RemoteWrite.Sample
+  import ProtoWire.{Reader, zigzag}
 
   private val defaultZeroThreshold = math.pow(2.0, -128)
 
-  // ---------- wire reader ----------
+  // ---------- wire helpers over the shared reader ----------
 
-  private final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def varint(): Long = {
-      var shift = 0; var res = 0L
-      while (true) {
-        val b = buf(pos); pos += 1
-        res |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return res
-        shift += 7
-        if (shift > 63) throw new IllegalArgumentException("varint too long")
-      }
-      res
-    }
-    def fixed64(): Long = {
-      var res = 0L; var i = 0
-      while (i < 8) { res |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8; res
-    }
-    def fixed32(): Int = {
-      var res = 0; var i = 0
-      while (i < 4) { res |= (buf(pos + i) & 0xff) << (8 * i); i += 1 }
-      pos += 4; res
-    }
-    def double(): Double = java.lang.Double.longBitsToDouble(fixed64())
-    def str(): String = {
-      val len = varint().toInt; val s = pos; pos += len
-      new String(buf, s, len, java.nio.charset.StandardCharsets.UTF_8)
-    }
-    /** length-delimited raw bytes as lowercase hex (trace/span ids) */
-    def hex(): String = {
-      val len = varint().toInt; val s = pos; pos += len
-      val sb = new StringBuilder(len * 2)
-      var i = s
-      while (i < s + len) { sb.append(f"${buf(i) & 0xff}%02x"); i += 1 }
-      sb.toString
-    }
-    def sub(): Reader = {
-      val len = varint().toInt; val s = pos; pos += len
-      new Reader(buf, s, s + len)
-    }
-    def skip(wireType: Int): Unit = wireType match {
-      case 0 => varint()
-      case 1 => pos += 8
-      case 2 => val len = varint().toInt; pos += len
-      case 5 => pos += 4
-      case wt => throw new IllegalArgumentException(s"unsupported wire type $wt")
-    }
-  }
+  private def double(r: Reader): Double = java.lang.Double.longBitsToDouble(r.fixed64())
 
-  private def zigzag(v: Long): Long = (v >>> 1) ^ -(v & 1L)
+  /** length-delimited raw bytes as lowercase hex (trace/span ids) */
+  private def hex(r: Reader): String = r.byteArray().map(b => f"${b & 0xff}%02x").mkString
 
   // ---------- attribute / name translation ----------
 
@@ -112,7 +67,7 @@ object Otlp {
               case (1, 2) => v = ar.str()
               case (2, 0) => v = if (ar.varint() != 0L) "true" else "false"
               case (3, 0) => v = ar.varint().toString
-              case (4, 1) => v = graft.web.Json.goFloat(ar.double())
+              case (4, 1) => v = graft.web.Json.goFloat(double(ar))
               case (_, wt) => ar.skip(wt)
             }
           }
@@ -137,10 +92,10 @@ object Otlp {
       (tag >> 3, (tag & 7).toInt) match {
         case (7, 2) => val (k, s) = decodeKeyValue(r.sub()); attrs(sanitize(k)) = s
         case (2, 1) => t = r.fixed64()
-        case (3, 1) => v = r.double()
+        case (3, 1) => v = double(r)
         case (6, 1) => v = r.fixed64().toDouble // as_int
-        case (4, 2) => spanId = r.hex()
-        case (5, 2) => traceId = r.hex()
+        case (4, 2) => spanId = hex(r)
+        case (5, 2) => traceId = hex(r)
         case (_, wt) => r.skip(wt)
       }
     }
@@ -172,7 +127,7 @@ object Otlp {
         case (7, 2) => val (k, s) = decodeKeyValue(r.sub()); attrs(k) = s
         case (2, 1) => st = r.fixed64()
         case (3, 1) => t = r.fixed64()
-        case (4, 1) => v = r.double()
+        case (4, 1) => v = double(r)
         case (6, 1) => v = r.fixed64().toDouble // as_int (sfixed64)
         case (5, 2) => exs += decodeExemplar(r.sub())
         case (_, wt) => r.skip(wt)
@@ -194,11 +149,11 @@ object Otlp {
         case (2, 1) => st = r.fixed64()
         case (3, 1) => t = r.fixed64()
         case (4, 1) => count = r.fixed64().toDouble
-        case (5, 1) => sum = r.double(); hasSum = true
+        case (5, 1) => sum = double(r); hasSum = true
         case (6, 2) => val br = r.sub(); while (br.hasMore) bucketCounts += br.fixed64()
         case (6, 1) => bucketCounts += r.fixed64()
-        case (7, 2) => val br = r.sub(); while (br.hasMore) bounds += br.double()
-        case (7, 1) => bounds += r.double()
+        case (7, 2) => val br = r.sub(); while (br.hasMore) bounds += double(br)
+        case (7, 1) => bounds += double(r)
         case (8, 2) => exs += decodeExemplar(r.sub())
         case (_, wt) => r.skip(wt)
       }
@@ -236,12 +191,12 @@ object Otlp {
         case (2, 1) => st = r.fixed64()
         case (3, 1) => t = r.fixed64()
         case (4, 1) => count = r.fixed64().toDouble
-        case (5, 1) => sum = r.double()
+        case (5, 1) => sum = double(r)
         case (6, 0) => scale = zigzag(r.varint()).toInt
         case (7, 1) => zeroCount = r.fixed64().toDouble
         case (8, 2) => val (o, cs) = decodeBuckets(r.sub()); posOff = o; posCounts.clear(); posCounts ++= cs
         case (9, 2) => val (o, cs) = decodeBuckets(r.sub()); negOff = o; negCounts.clear(); negCounts ++= cs
-        case (14, 1) => zeroTh = r.double()
+        case (14, 1) => zeroTh = double(r)
         case (11, 2) => exs += decodeExemplar(r.sub())
         case (_, wt) => r.skip(wt)
       }
@@ -261,15 +216,15 @@ object Otlp {
         case (2, 1) => st = r.fixed64()
         case (3, 1) => t = r.fixed64()
         case (4, 1) => count = r.fixed64().toDouble
-        case (5, 1) => sum = r.double()
+        case (5, 1) => sum = double(r)
         case (6, 2) =>
           val qr = r.sub()
           var q = 0.0; var v = 0.0
           while (qr.hasMore) {
             val t2 = qr.varint()
             (t2 >> 3, (t2 & 7).toInt) match {
-              case (1, 1) => q = qr.double()
-              case (2, 1) => v = qr.double()
+              case (1, 1) => q = double(qr)
+              case (2, 1) => v = double(qr)
               case (_, wt) => qr.skip(wt)
             }
           }

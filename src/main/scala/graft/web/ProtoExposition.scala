@@ -19,7 +19,8 @@ import scala.collection.mutable
   */
 object ProtoExposition {
 
-  import RemoteWrite.{Reader, Sample}
+  import ProtoWire.{Reader, zigzag}
+  import RemoteWrite.Sample
 
   /** exemplars are (parent-series labels → exemplar); an exemplar with no
     * proto timestamp carries t = NoTs and the scrape stamps it with the
@@ -30,8 +31,6 @@ object ProtoExposition {
 
   /** sentinel for "exemplar had no timestamp field" */
   val NoTs: Long = Long.MinValue
-
-  private def zigzag(v: Long): Long = (v >>> 1) ^ -(v & 1L)
 
   private val typeNames = Map(0 -> "counter", 1 -> "gauge", 2 -> "summary",
     3 -> "unknown", 4 -> "histogram", 5 -> "gaugehistogram")

@@ -5,9 +5,8 @@ import scala.collection.mutable
 
 /** Prometheus remote-read protocol: snappy-compressed protobuf
   * `prompb.ReadRequest` / `ReadResponse` (SAMPLES response type; ref:
-  * storage/remote/read_handler.go + prompb/remote.proto). Same hand-rolled
-  * wire codec approach as [[RemoteWrite]] — varint/fixed64/length-delimited
-  * over the handful of message shapes, no protobuf runtime.
+  * storage/remote/read_handler.go + prompb/remote.proto), over the shared
+  * [[ProtoWire]] reader and writer.
   *
   * Server side: [[decodeRequest]] → evaluate each query over the store →
   * [[encodeResponse]]. Client side: [[RemoteReadClient]] issues the same
@@ -16,58 +15,10 @@ import scala.collection.mutable
   */
 object RemoteRead {
 
+  import ProtoWire.{Reader, delim, f64, labelFields, message, vint}
+
   final case class Query(startMs: Long, endMs: Long, matchers: List[LabelMatcher])
   final case class Series(labels: Map[String, String], samples: Seq[(Long, Double)])
-
-  // ---------- wire helpers (shared shape with RemoteWrite) ----------
-
-  private final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def varint(): Long = {
-      var shift = 0; var res = 0L
-      while (true) {
-        val b = buf(pos); pos += 1
-        res |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return res
-        shift += 7
-        if (shift > 63) throw new IllegalArgumentException("varint too long")
-      }
-      res
-    }
-    def fixed64(): Long = {
-      var res = 0L; var i = 0
-      while (i < 8) { res |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8; res
-    }
-    def str(): String = {
-      val len = varint().toInt; val s = pos; pos += len
-      new String(buf, s, len, java.nio.charset.StandardCharsets.UTF_8)
-    }
-    def bytes(): Array[Byte] = {
-      val len = varint().toInt; val s = pos; pos += len
-      java.util.Arrays.copyOfRange(buf, s, s + len)
-    }
-    def sub(): Reader = {
-      val len = varint().toInt; val s = pos; pos += len
-      new Reader(buf, s, s + len)
-    }
-    def skip(wireType: Int): Unit = wireType match {
-      case 0 => varint()
-      case 1 => pos += 8
-      case 2 => val len = varint().toInt; pos += len
-      case 5 => pos += 4
-      case wt => throw new IllegalArgumentException(s"unsupported wire type $wt")
-    }
-  }
-
-  private def vint(o: java.io.ByteArrayOutputStream, x0: Long): Unit = {
-    var x = x0
-    while ((x & ~0x7fL) != 0) { o.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-    o.write(x.toInt)
-  }
-  private def delim(o: java.io.ByteArrayOutputStream, tag: Int, body: Array[Byte]): Unit = {
-    vint(o, (tag << 3) | 2); vint(o, body.length); o.write(body)
-  }
 
   // ---------- request ----------
 
@@ -146,19 +97,15 @@ object RemoteRead {
   def encodeRequest(queries: Seq[Query], acceptedTypes: Seq[Int] = Nil): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()
     acceptedTypes.foreach { t => vint(bo, 2 << 3); vint(bo, t.toLong) }
-    queries.foreach { q =>
-      val qo = new java.io.ByteArrayOutputStream()
+    queries.foreach(q => delim(bo, 1, message { qo =>
       vint(qo, 1 << 3); vint(qo, q.startMs)
       vint(qo, 2 << 3); vint(qo, q.endMs)
-      q.matchers.foreach { m =>
-        val mo = new java.io.ByteArrayOutputStream()
+      q.matchers.foreach(m => delim(qo, 3, message { mo =>
         vint(mo, 1 << 3); vint(mo, matchOpCode(m.op).toLong)
         delim(mo, 2, m.name.getBytes("UTF-8"))
         delim(mo, 3, m.value.getBytes("UTF-8"))
-        delim(qo, 3, mo.toByteArray)
-      }
-      delim(bo, 1, qo.toByteArray)
-    }
+      }))
+    }))
     org.xerial.snappy.Snappy.compress(bo.toByteArray)
   }
 
@@ -168,27 +115,14 @@ object RemoteRead {
     * repeated Label=1; repeated Sample{value=1,timestamp=2}=2 } = 1 } = 1 } */
   def encodeResponse(results: Seq[Seq[Series]]): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()
-    results.foreach { series =>
-      val qr = new java.io.ByteArrayOutputStream()
-      series.foreach { s =>
-        val tso = new java.io.ByteArrayOutputStream()
-        s.labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
-          val lo = new java.io.ByteArrayOutputStream()
-          delim(lo, 1, n.getBytes("UTF-8")); delim(lo, 2, v.getBytes("UTF-8"))
-          delim(tso, 1, lo.toByteArray)
-        }
+    results.foreach(series => delim(bo, 1, message { qr =>
+      series.foreach(s => delim(qr, 1, message { tso =>
+        labelFields(tso, s.labels)
         s.samples.sortBy(_._1).foreach { case (t, v) =>
-          val so = new java.io.ByteArrayOutputStream()
-          vint(so, (1 << 3) | 1)
-          val bits = java.lang.Double.doubleToLongBits(v)
-          (0 until 8).foreach(i => so.write(((bits >> (8 * i)) & 0xff).toInt))
-          vint(so, 2 << 3); vint(so, t)
-          delim(tso, 2, so.toByteArray)
+          delim(tso, 2, message { so => f64(so, 1, v); vint(so, 2 << 3); vint(so, t) })
         }
-        delim(qr, 1, tso.toByteArray)
-      }
-      delim(bo, 1, qr.toByteArray)
-    }
+      }))
+    }))
     org.xerial.snappy.Snappy.compress(bo.toByteArray)
   }
 
@@ -264,23 +198,15 @@ object RemoteRead {
   def encodeChunkedBody(queryIndex: Long,
       series: Seq[(Map[String, String], Seq[Chunk])]): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()
-    series.foreach { case (labels, chunks) =>
-      val so = new java.io.ByteArrayOutputStream()
-      labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
-        val lo = new java.io.ByteArrayOutputStream()
-        delim(lo, 1, n.getBytes("UTF-8")); delim(lo, 2, v.getBytes("UTF-8"))
-        delim(so, 1, lo.toByteArray)
-      }
-      chunks.foreach { c =>
-        val co = new java.io.ByteArrayOutputStream()
+    series.foreach { case (labels, chunks) => delim(bo, 1, message { so =>
+      labelFields(so, labels)
+      chunks.foreach(c => delim(so, 2, message { co =>
         vint(co, 1 << 3); vint(co, c.minTimeMs)
         vint(co, 2 << 3); vint(co, c.maxTimeMs)
         vint(co, 3 << 3); vint(co, c.encoding.toLong)
         delim(co, 4, c.data)
-        delim(so, 2, co.toByteArray)
-      }
-      delim(bo, 1, so.toByteArray)
-    }
+      }))
+    }) }
     vint(bo, 2 << 3); vint(bo, queryIndex)
     bo.toByteArray
   }
@@ -321,7 +247,7 @@ object RemoteRead {
                     case (1, 0) => minT = cr.varint()
                     case (2, 0) => maxT = cr.varint()
                     case (3, 0) => enc = cr.varint().toInt
-                    case (4, 2) => data = cr.bytes()
+                    case (4, 2) => data = cr.byteArray()
                     case (_, wt) => cr.skip(wt)
                   }
                 }

@@ -21,6 +21,7 @@ import scala.collection.mutable
 object RemoteWrite {
 
   import graft.promql.FHist
+  import ProtoWire.{Reader, delim, f64, labelFields, message, vint, zigzag}
 
   final case class Sample(labels: Map[String, String], t: Long, v: Double,
       stt: Long = 0L, h: Option[FHist] = None) {
@@ -31,49 +32,6 @@ object RemoteWrite {
 
   /** family → (type, unit, help), from PRW 2.0 per-series metadata */
   type Meta = Map[String, (String, String, String)]
-
-  /** protobuf wire reader over a byte array slice */
-  private[web] final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def varint(): Long = {
-      var shift = 0; var res = 0L
-      while (true) {
-        val b = buf(pos); pos += 1
-        res |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return res
-        shift += 7
-        if (shift > 63) throw new IllegalArgumentException("varint too long")
-      }
-      res
-    }
-    def fixed64(): Long = {
-      var res = 0L
-      var i = 0
-      while (i < 8) { res |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8
-      res
-    }
-    def bytes(): (Int, Int) = {
-      val len = varint().toInt
-      val s = pos
-      pos += len
-      (s, pos)
-    }
-    def str(): String = {
-      val (s, e) = bytes()
-      new String(buf, s, e - s, java.nio.charset.StandardCharsets.UTF_8)
-    }
-    def sub(): Reader = { val (s, e) = bytes(); new Reader(buf, s, e) }
-    def skip(wireType: Int): Unit = wireType match {
-      case 0 => varint()
-      case 1 => pos += 8
-      case 2 => val (_, _) = bytes()
-      case 5 => pos += 4
-      case wt => throw new IllegalArgumentException(s"unsupported wire type $wt")
-    }
-  }
-
-  private def zigzag(v: Long): Long = (v >>> 1) ^ -(v & 1L)
 
   /** prompb.Histogram (ref: prompb/types.proto:71-116 — span-RLE buckets
     * with delta- or absolute-count encodings) → the engine's sparse-index
@@ -303,30 +261,11 @@ object RemoteWrite {
     * producers exercise the receiver without a protobuf runtime */
   def encodeV1(samples: Seq[Sample]): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()
-    def vint(o: java.io.ByteArrayOutputStream, x0: Long): Unit = {
-      var x = x0
-      while ((x & ~0x7fL) != 0) { o.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      o.write(x.toInt)
-    }
-    def delim(o: java.io.ByteArrayOutputStream, tag: Int, body: Array[Byte]): Unit = {
-      vint(o, (tag << 3) | 2); vint(o, body.length); o.write(body)
-    }
     samples.groupBy(_.labels).foreach { case (labels, ss) =>
-      val tso = new java.io.ByteArrayOutputStream()
-      labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
-        val lo = new java.io.ByteArrayOutputStream()
-        delim(lo, 1, n.getBytes("UTF-8")); delim(lo, 2, v.getBytes("UTF-8"))
-        delim(tso, 1, lo.toByteArray)
-      }
-      ss.foreach { s =>
-        val so = new java.io.ByteArrayOutputStream()
-        vint(so, (1 << 3) | 1)
-        val bits = java.lang.Double.doubleToLongBits(s.v)
-        (0 until 8).foreach(i => so.write(((bits >> (8 * i)) & 0xff).toInt))
-        vint(so, 2 << 3); vint(so, s.t)
-        delim(tso, 2, so.toByteArray)
-      }
-      delim(bo, 1, tso.toByteArray)
+      delim(bo, 1, message { tso =>
+        labelFields(tso, labels)
+        ss.foreach(s => delim(tso, 2, message { so => f64(so, 1, s.v); vint(so, 2 << 3); vint(so, s.t) }))
+      })
     }
     org.xerial.snappy.Snappy.compress(bo.toByteArray)
   }
@@ -347,29 +286,9 @@ object RemoteWrite {
     * decode mirror above). `meta` is keyed by metric family name. */
   def encodeV2(samples: Seq[Sample], meta: Meta): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()
-    def vint(o: java.io.ByteArrayOutputStream, x0: Long): Unit = {
-      var x = x0
-      while ((x & ~0x7fL) != 0) { o.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      o.write(x.toInt)
-    }
     def zig(v: Long): Long = (v << 1) ^ (v >> 63)
-    def delim(o: java.io.ByteArrayOutputStream, tag: Int, body: Array[Byte]): Unit = {
-      vint(o, (tag << 3) | 2); vint(o, body.length); o.write(body)
-    }
-    def f64(o: java.io.ByteArrayOutputStream, tag: Int, v: Double): Unit = {
-      vint(o, (tag << 3) | 1)
-      val bits = java.lang.Double.doubleToLongBits(v)
-      (0 until 8).foreach(i => o.write(((bits >> (8 * i)) & 0xff).toInt))
-    }
     def packedF64(o: java.io.ByteArrayOutputStream, tag: Int, vs: Seq[Double]): Unit =
-      if (vs.nonEmpty) {
-        val p = new java.io.ByteArrayOutputStream()
-        vs.foreach { v =>
-          val bits = java.lang.Double.doubleToLongBits(v)
-          (0 until 8).foreach(i => p.write(((bits >> (8 * i)) & 0xff).toInt))
-        }
-        delim(o, tag, p.toByteArray)
-      }
+      if (vs.nonEmpty) delim(o, tag, message(p => vs.foreach(ProtoWire.double(p, _))))
     /** sparse indexes → span-RLE (offset deltas between runs) */
     def spansOf(o: java.io.ByteArrayOutputStream, tag: Int, idx: Seq[Int]): Unit = {
       var prevEnd = 0
@@ -378,16 +297,15 @@ object RemoteWrite {
         val start = idx(i)
         var j = i
         while (j + 1 < idx.length && idx(j + 1) == idx(j) + 1) j += 1
-        val so = new java.io.ByteArrayOutputStream()
-        vint(so, 1 << 3); vint(so, zig((start - prevEnd).toLong)) // offset
-        vint(so, 2 << 3); vint(so, (j - i + 1).toLong) // length
-        delim(o, tag, so.toByteArray)
+        delim(o, tag, message { so =>
+          vint(so, 1 << 3); vint(so, zig((start - prevEnd).toLong)) // offset
+          vint(so, 2 << 3); vint(so, (j - i + 1).toLong) // length
+        })
         prevEnd = idx(j) + 1
         i = j + 1
       }
     }
-    def histMsg(h: graft.promql.FHist, t: Long): Array[Byte] = {
-      val ho = new java.io.ByteArrayOutputStream()
+    def histMsg(h: graft.promql.FHist, t: Long): Array[Byte] = message { ho =>
       f64(ho, 2, h.cnt) // count_float
       f64(ho, 3, h.sum)
       vint(ho, 4 << 3); vint(ho, zig(h.schema.toLong))
@@ -400,26 +318,18 @@ object RemoteWrite {
       if (h.crh != 0) { vint(ho, 14 << 3); vint(ho, h.crh.toLong) }
       vint(ho, 15 << 3); vint(ho, t)
       packedF64(ho, 16, h.cv)
-      ho.toByteArray
     }
     // symbol table: index 0 is the empty string per spec
     val symIdx = mutable.LinkedHashMap[String, Int]("" -> 0)
     def sym(s: String): Int = symIdx.getOrElseUpdate(s, symIdx.size)
-    val seriesBodies = samples.groupBy(_.labels).toSeq.map { case (labels, ss) =>
-      val tso = new java.io.ByteArrayOutputStream()
-      val refs = new java.io.ByteArrayOutputStream()
-      labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
+    val seriesBodies = samples.groupBy(_.labels).toSeq.map { case (labels, ss) => message { tso =>
+      delim(tso, 1, message(refs => labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
         vint(refs, sym(n).toLong); vint(refs, sym(v).toLong)
-      }
-      delim(tso, 1, refs.toByteArray)
+      }))
       ss.foreach { s =>
         s.h match {
           case Some(h) => delim(tso, 3, histMsg(h, s.t))
-          case None =>
-            val so = new java.io.ByteArrayOutputStream()
-            f64(so, 1, s.v)
-            vint(so, 2 << 3); vint(so, s.t)
-            delim(tso, 2, so.toByteArray)
+          case None => delim(tso, 2, message { so => f64(so, 1, s.v); vint(so, 2 << 3); vint(so, s.t) })
         }
       }
       ss.map(_.stt).find(_ != 0L).foreach { ct =>
@@ -428,15 +338,14 @@ object RemoteWrite {
       labels.get("__name__").flatMap(meta.get).foreach { case (typ, unit, help) =>
         val typeIds = Map("counter" -> 1, "gauge" -> 2, "histogram" -> 3,
           "gaugehistogram" -> 4, "summary" -> 5, "info" -> 6, "stateset" -> 7)
-        val mo = new java.io.ByteArrayOutputStream()
-        typeIds.get(typ.toLowerCase).foreach { id =>
-          vint(mo, 1 << 3); vint(mo, id.toLong) }
-        if (help.nonEmpty) { vint(mo, 3 << 3); vint(mo, sym(help).toLong) }
-        if (unit.nonEmpty) { vint(mo, 4 << 3); vint(mo, sym(unit).toLong) }
-        delim(tso, 5, mo.toByteArray)
+        delim(tso, 5, message { mo =>
+          typeIds.get(typ.toLowerCase).foreach { id =>
+            vint(mo, 1 << 3); vint(mo, id.toLong) }
+          if (help.nonEmpty) { vint(mo, 3 << 3); vint(mo, sym(help).toLong) }
+          if (unit.nonEmpty) { vint(mo, 4 << 3); vint(mo, sym(unit).toLong) }
+        })
       }
-      tso.toByteArray
-    }
+    } }
     symIdx.keys.foreach(s => delim(bo, 4, s.getBytes("UTF-8")))
     seriesBodies.foreach(delim(bo, 5, _))
     org.xerial.snappy.Snappy.compress(bo.toByteArray)

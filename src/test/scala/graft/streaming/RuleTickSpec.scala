@@ -101,7 +101,8 @@ class RuleTickSpec extends AnyFunSuite with BeforeAndAfterAll {
       val before = srv.store.samples.count()
       srv.evalRulesOnce(15000L)
       val errs = srv.api.ruleErrors
-      assert(errs.keySet == Set(("g", "dup"), ("g", "Bad")), errs)
+      assert(errs.keySet.map { case (g, i) => (g.name, g.rules(i).name) } ==
+        Set(("g", "dup"), ("g", "Bad")), errs)
       assert(errs.values.forall(_.contains("same labelset")), errs)
       val names = srv.store.samples.collect()
         .map(_.getMap[String, String](0)("__name__")).toSeq
@@ -242,10 +243,58 @@ class RuleTickSpec extends AnyFunSuite with BeforeAndAfterAll {
         Row(Map("__name__" -> "b", "i" -> "0"), 10000L, 2.0, false, null, 0L)))
       val before = srv.store.samples.count()
       srv.evalRulesOnce(15000L)
-      assert(srv.api.ruleErrors == Map(
+      assert(srv.api.ruleErrors.map { case ((g, i), e) => (g.name, g.rules(i).name) -> e } == Map(
         ("g", "ab") -> "vector contains metrics with the same labelset after applying rule labels",
         ("g", "AB") -> "vector contains metrics with the same labelset after applying alert labels"))
       assert(srv.store.samples.count() == before)
+    } finally srv.stop()
+  }
+
+  test("rule health is kept per rule: of two rules with one name only the failing one is err") {
+    // ceil drops the metric name, so m1 and m2 collide when it evaluates
+    val srv = server(
+      """groups:
+        |  - name: g
+        |    rules:
+        |      - alert: HighLatency
+        |        expr: ceil({__name__=~"m1|m2"}) > 0
+        |        labels:
+        |          severity: warning
+        |      - alert: HighLatency
+        |        expr: m1 > 0
+        |        labels:
+        |          severity: critical
+        |""".stripMargin)
+    try {
+      append(srv, Seq(
+        Row(Map("__name__" -> "m1", "i" -> "0"), 10000L, 1.0, false, null, 0L),
+        Row(Map("__name__" -> "m2", "i" -> "0"), 10000L, 2.0, false, null, 0L)))
+      srv.evalRulesOnce(15000L)
+      val body = new String(java.net.URI.create(
+        s"http://127.0.0.1:${srv.api.boundPort}/api/v1/rules").toURL.openStream()
+        .readAllBytes(), "UTF-8")
+      val rules = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        .path("data").path("groups").get(0).path("rules")
+      val health = (0 until rules.size).map(rules.get).map(r =>
+        (r.path("labels").path("severity").asText(), r.path("health").asText()))
+      assert(health == Seq(("warning", "err"), ("critical", "ok")), body)
+    } finally srv.stop()
+  }
+
+  test("a reload stale-marks the series of the rules and groups it removes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ticks")
+    val keep = "  - name: g\n    rules:\n      - record: a:sum\n        expr: sum(m)\n"
+    val srv = server("groups:\n" + keep + "      - record: b:sum\n        expr: sum(m)\n" +
+      "  - name: h\n    rules:\n      - record: c:sum\n        expr: sum(m)\n", dir)
+    try {
+      append(srv, Seq(Row(Map("__name__" -> "m"), 10000L, 1.0, false, null, 0L)))
+      srv.evalRulesOnce(15000L)
+      assert(Seq("a:sum", "b:sum", "c:sum").map(count(srv, _, 15000L)) == Seq(1L, 1L, 1L))
+      java.nio.file.Files.write(dir.resolve("rules.yml"), ("groups:\n" + keep).getBytes("UTF-8"))
+      assert(srv.reload().isRight)
+      srv.evalRulesOnce(30000L)
+      // without the markers the 15s samples would ride the 5m lookback
+      assert(Seq("a:sum", "b:sum", "c:sum").map(count(srv, _, 30000L)) == Seq(1L, 0L, 0L))
     } finally srv.stop()
   }
 

@@ -855,4 +855,246 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
       assert(run(frontUrl, follow = true) == 0.0)
     } finally { front.stop(0); target.stop(0) }
   }
+
+  // ---------- one scrape path: the same families in every exposition format
+
+  /** minimal protobuf writer for the exposition fixtures */
+  private object Pb {
+    type Out = java.io.ByteArrayOutputStream
+    def vint(o: Out, x0: Long): Unit = {
+      var x = x0
+      while ((x & ~0x7fL) != 0) { o.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
+      o.write(x.toInt)
+    }
+    def msg(f: Out => Unit): Array[Byte] = { val o = new Out(); f(o); o.toByteArray }
+    def bytes(o: Out, field: Int, b: Array[Byte]): Unit = {
+      vint(o, (field << 3) | 2); vint(o, b.length); o.write(b)
+    }
+    def str(o: Out, field: Int, v: String): Unit = bytes(o, field, v.getBytes("UTF-8"))
+    def uint(o: Out, field: Int, v: Long): Unit = { vint(o, field << 3); vint(o, v) }
+    def dbl(o: Out, field: Int, v: Double): Unit = {
+      vint(o, (field << 3) | 1)
+      val bits = java.lang.Double.doubleToLongBits(v)
+      (0 until 8).foreach(i => o.write(((bits >> (8 * i)) & 0xff).toInt))
+    }
+  }
+
+  /** one family set — a counter with a created timestamp and an exemplar, a
+    * gauge, a classic histogram with a ts-less bucket exemplar, and
+    * TYPE/HELP/UNIT metadata — as Prometheus text (which has no created
+    * timestamp, exemplar or unit), OpenMetrics and delimited protobuf */
+  private val familiesText =
+    """# HELP req_total Requests.
+      |# TYPE req_total counter
+      |req_total{path="/a"} 7
+      |# HELP temp Temperature.
+      |# TYPE temp gauge
+      |temp 21.5
+      |# HELP lat_seconds Latency.
+      |# TYPE lat_seconds histogram
+      |lat_seconds_bucket{le="0.5"} 1
+      |lat_seconds_bucket{le="1"} 3
+      |lat_seconds_bucket{le="+Inf"} 4
+      |lat_seconds_count 4
+      |lat_seconds_sum 2.5
+      |""".stripMargin
+  private val familiesOm =
+    """# HELP req Requests.
+      |# TYPE req counter
+      |req_total{path="/a"} 7 # {trace_id="t1"} 1 55
+      |req_created{path="/a"} 50.5
+      |# HELP temp Temperature.
+      |# TYPE temp gauge
+      |temp 21.5
+      |# HELP lat_seconds Latency.
+      |# TYPE lat_seconds histogram
+      |# UNIT lat_seconds seconds
+      |lat_seconds_bucket{le="0.5"} 1
+      |lat_seconds_bucket{le="1"} 3 # {trace_id="t2"} 0.7
+      |lat_seconds_bucket{le="+Inf"} 4
+      |lat_seconds_count 4
+      |lat_seconds_sum 2.5
+      |# EOF
+      |""".stripMargin
+  private lazy val familiesProto: Array[Byte] = {
+    import Pb._
+    def label(n: String, v: String) = msg { l => str(l, 1, n); str(l, 2, v) }
+    def ts(ms: Long) = msg { t => uint(t, 1, ms / 1000); if (ms % 1000 != 0) uint(t, 2, ms % 1000 * 1000000) }
+    def exemplar(trace: String, v: Double, tMs: Option[Long]) = msg { e =>
+      bytes(e, 1, label("trace_id", trace)); dbl(e, 2, v); tMs.foreach(t => bytes(e, 3, ts(t))) }
+    def bucket(cc: Long, le: Double, ex: Option[Array[Byte]]) = msg { b =>
+      uint(b, 1, cc); dbl(b, 2, le); ex.foreach(bytes(b, 3, _)) }
+    val req = msg { f =>
+      str(f, 1, "req_total"); str(f, 2, "Requests."); uint(f, 3, 0) // COUNTER
+      bytes(f, 4, msg { m =>
+        bytes(m, 1, label("path", "/a"))
+        bytes(m, 3, msg { c =>
+          dbl(c, 1, 7.0); bytes(c, 2, exemplar("t1", 1.0, Some(55000L))); bytes(c, 3, ts(50500L)) })
+      })
+    }
+    val temp = msg { f =>
+      str(f, 1, "temp"); str(f, 2, "Temperature."); uint(f, 3, 1) // GAUGE
+      bytes(f, 4, msg(m => bytes(m, 2, msg(g => dbl(g, 1, 21.5)))))
+    }
+    val lat = msg { f =>
+      str(f, 1, "lat_seconds"); str(f, 2, "Latency."); uint(f, 3, 4); str(f, 5, "seconds")
+      bytes(f, 4, msg(m => bytes(m, 7, msg { h =>
+        uint(h, 1, 4); dbl(h, 2, 2.5)
+        bytes(h, 3, bucket(1, 0.5, None))
+        bytes(h, 3, bucket(3, 1.0, Some(exemplar("t2", 0.7, None))))
+        bytes(h, 3, bucket(4, Double.PositiveInfinity, None))
+      })))
+    }
+    msg(o => Seq(req, temp, lat).foreach { fam => vint(o, fam.length); o.write(fam) })
+  }
+
+  /** serves the families at /text, /om and /proto, each with its content
+    * type; /plain serves the text body as text/plain. `f` gets the base URL
+    * and the Accept header of the last request */
+  private def withFamilies(f: (String, () => String) => Unit): Unit = {
+    @volatile var accept = ""
+    val server = com.sun.net.httpserver.HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    def serve(path: String, contentType: String, body: Array[Byte]): Unit =
+      server.createContext(path, (ex: com.sun.net.httpserver.HttpExchange) => {
+        accept = ex.getRequestHeaders.getFirst("Accept")
+        ex.getResponseHeaders.set("Content-Type", contentType)
+        ex.sendResponseHeaders(200, body.length); ex.getResponseBody.write(body); ex.close()
+      })
+    serve("/text", "text/plain; version=0.0.4; charset=utf-8", familiesText.getBytes("UTF-8"))
+    serve("/om", "application/openmetrics-text; version=1.0.0; charset=utf-8",
+      familiesOm.getBytes("UTF-8"))
+    serve("/proto", "application/vnd.google.protobuf; " +
+      "proto=io.prometheus.client.MetricFamily; encoding=delimited", familiesProto)
+    server.start()
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}", () => accept)
+    finally server.stop(0)
+  }
+
+  /** what one scrape stored: samples as (labels, t, v, stt, native
+    * histogram), family metadata, exemplars and the report series */
+  private final case class Stored(samples: Set[(String, Long, String, Long, String)],
+      meta: Map[String, (String, String, String)],
+      exemplars: Set[(String, Map[String, String], Double, Long)],
+      report: Map[String, Double])
+
+  private val reportNames = Set("up", "scrape_duration_seconds", "scrape_samples_scraped",
+    "scrape_samples_post_metric_relabeling", "scrape_series_added")
+
+  private def scrapeStored(url: String, nhcb: Boolean = false, zero: Boolean = false,
+      protocols: Seq[String] = Nil): Stored = {
+    val store = emptyStoreS()
+    new ScrapeManager(spark, store, Seq(ScrapeManager.ScrapeTarget(url, "t", "i1")),
+      nowMs = () => 60000L, convertNhcb = nhcb, stZeroIngestion = zero,
+      scrapeProtocols = protocols).scrapeOnce()
+    def key(l: Map[String, String]) = l.toSeq.sorted.mkString(",")
+    val rows = store.samples.collect().toSeq.map(r => (r.getMap[String, String](0).toMap, r))
+    Stored(
+      rows.collect { case (l, r) if !reportNames(l("__name__")) =>
+        (key(l), r.getLong(1), r.getDouble(2).toString, r.getLong(5),
+          if (r.isNullAt(4)) "" else graft.promql.FHist.fromRow(r.getStruct(4)).toString)
+      }.toSet,
+      store.metadata,
+      store.exemplars.toSeq.flatMap(_.collect()).map { r =>
+        val e = r.getStruct(1)
+        (key(r.getMap[String, String](0).toMap), e.getMap[String, String](0).toMap,
+          e.getDouble(1), e.getLong(2))
+      }.toSet,
+      rows.collect { case (l, r) if reportNames(l("__name__")) => l("__name__") -> r.getDouble(2) }
+        .toMap)
+  }
+
+  /** OpenMetrics names a counter family without its _total */
+  private def omFamilies(meta: Map[String, (String, String, String)]) =
+    meta.map { case (f, m) => (if (m._1 == "counter") f + "_total" else f) -> m }
+
+  test("text, OpenMetrics and protobuf scrapes of one family set store the same batch") {
+    withFamilies { (base, _) =>
+      for (nhcb <- Seq(false, true); zero <- Seq(false, true)) withClue(s"nhcb=$nhcb zero=$zero: ") {
+        val p = scrapeStored(s"$base/proto", nhcb, zero)
+        val o = scrapeStored(s"$base/om", nhcb, zero)
+        val t = scrapeStored(s"$base/text", nhcb, zero)
+        assert(p.report("up") == 1.0 && p.report("scrape_samples_scraped") == 7.0, p.report)
+        assert(p.samples.exists(_._4 == 50500L), p.samples) // created_timestamp → stt
+        assert(p.samples.exists(_._5.nonEmpty) == nhcb, p.samples)
+        assert(p.samples.exists(s => s._2 == 50500L && s._3 == "0.0") == zero, p.samples)
+        assert(p.meta == Map("req_total" -> (("counter", "", "Requests.")),
+          "temp" -> (("gauge", "", "Temperature.")),
+          "lat_seconds" -> (("histogram", "seconds", "Latency."))))
+        assert(p.exemplars.map(e => (e._2("trace_id"), e._4)) == Set(("t1", 55000L), ("t2", 60000L)))
+        assert(omFamilies(o.meta) == p.meta)
+        assert(o.exemplars == p.exemplars)
+        // the samples a created timestamp did not shape
+        def uncreated(ss: Set[(String, Long, String, Long, String)]) =
+          ss.filter(_._2 != 50500L).map(_.copy(_4 = 0L))
+        if (zero) {
+          // zero ingestion reads OpenMetrics `_created` lines: one batch
+          assert(o.samples == p.samples)
+          assert(o.report == p.report)
+        } else {
+          // without it the `_created` line is a series of its own, and only
+          // protobuf's created_timestamp sets stt
+          assert(o.samples.filterNot(_._1.contains("req_created")) == uncreated(p.samples))
+          assert(o.report == p.report.map { case (k, v) =>
+            k -> (if (k == "up" || k == "scrape_duration_seconds") v else v + 1) })
+        }
+        // the text format has no created timestamp, exemplar or unit
+        assert(t.samples == uncreated(p.samples))
+        assert(t.meta == p.meta.map { case (f, (ty, _, help)) => f -> ((ty, "", help)) })
+        assert(t.exemplars.isEmpty)
+        assert(t.report == p.report)
+      }
+    }
+  }
+
+  test("a text or OpenMetrics scrape records its family metadata") {
+    withFamilies { (base, _) =>
+      assert(scrapeStored(s"$base/text").meta("req_total") == (("counter", "", "Requests.")))
+      assert(scrapeStored(s"$base/om").meta("lat_seconds") == (("histogram", "seconds", "Latency.")))
+    }
+  }
+
+  test("a protobuf scrape converts classic histograms to NHCB") {
+    withFamilies { (base, _) =>
+      val nhcb = scrapeStored(s"$base/proto", nhcb = true).samples
+        .filter(s => s._1.contains("__name__,lat_seconds)") && s._5.nonEmpty)
+      assert(nhcb.size == 1, nhcb)
+    }
+  }
+
+  test("created-timestamp zero ingestion injects a zero at a protobuf created_timestamp") {
+    withFamilies { (base, _) =>
+      val req = scrapeStored(s"$base/proto", zero = true).samples
+        .filter(_._1.contains("__name__,req_total")).map(s => (s._2, s._3))
+      assert(req == Set((50500L, "0.0"), (60000L, "7.0")))
+    }
+  }
+
+  test("a PrometheusProto-first pool scrapes a text/plain target as text") {
+    withFamilies { (base, accept) =>
+      val t = scrapeStored(s"$base/text",
+        protocols = Seq("PrometheusProto", "PrometheusText0.0.4"))
+      assert(t.report("up") == 1.0)
+      assert(t.samples.exists(s => s._1.contains("__name__,req_total") && s._3 == "7.0"))
+      assert(accept().startsWith("application/vnd.google.protobuf;"), accept())
+    }
+  }
+
+  test("the Accept header lists protobuf wherever scrape_protocols puts it") {
+    withFamilies { (base, accept) =>
+      scrapeStored(s"$base/text", protocols = Seq("PrometheusText0.0.4", "PrometheusProto"))
+      assert(accept() == "text/plain;version=0.0.4;q=0.6,application/vnd.google.protobuf;" +
+        "proto=io.prometheus.client.MetricFamily;encoding=delimited;q=0.5,*/*;q=0.4")
+    }
+  }
+
+  test("one scrape path: Scrape.scala stale-diffs, limits and stores a batch in one place") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/Scrape.scala")), "UTF-8")
+    // a call or a method value: the name followed by a parenthesis
+    def calls(name: String): Int =
+      ("""(?<!def )\b""" + java.util.regex.Pattern.quote(name) + "[()]").r.findAllIn(src).size
+    assert(calls("staleDiff") == 1)
+    assert(calls("limitViolation") == 1)
+    assert(calls("store.append") == 1)
+  }
 }
