@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.promql.Engine
+import graft.promql.{Engine, FHist}
+import graft.web.RemoteWrite.Sample
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -89,57 +90,40 @@ object Ingest {
   /** Convert classic-histogram series (`x_bucket{le=…}`/`x_count`/`x_sum`)
     * into native custom-bounds histograms `x` (NHCB), keeping the classic
     * series alongside — the scrape option convert_classic_histograms_to_nhcb
-    * (ref: util/convertnhcb/convertnhcb.go TempHistogram.Convert), here as a
-    * distributed transform: one shuffle keyed on (series-sig, t), group
-    * sizes = bucket counts. */
-  def classicToNhcb(samples: DataFrame): DataFrame = {
-    import graft.promql.FHist
-    val name = element_at(col("labels"), "__name__")
-    val floats = samples.filter(col("h").isNull && !col("stale") && name.isNotNull)
-    def strip(suffix: String) = map_concat(
-      map_filter(col("labels"), (k, _) => k =!= "__name__" && k =!= "le"),
-      map(lit("__name__"), expr(s"substring(labels['__name__'], 1, " +
-        s"length(labels['__name__']) - ${suffix.length})")))
-    val leVal = {
-      val l = element_at(col("labels"), "le")
-      when(l === "+Inf" || l === "Inf", lit(Double.PositiveInfinity))
-        .when(l === "-Inf", lit(Double.NegativeInfinity))
-        .otherwise(l.cast("double"))
+    * (ref: util/convertnhcb/convertnhcb.go TempHistogram.Convert): one
+    * native sample per (base series, t) that has buckets. */
+  def classicToNhcb(samples: Seq[Sample]): Seq[Sample] = {
+    def base(s: Sample, suffix: String) = {
+      val name = s.labels("__name__")
+      (s.labels - "le").updated("__name__", name.substring(0, name.length - suffix.length))
     }
-    def sig(c: org.apache.spark.sql.Column) =
-      xxhash64(to_json(map_from_entries(Engine.sortedLabels(c))))
-    val b = floats.filter(name.endsWith("_bucket") && map_contains_key(col("labels"), "le"))
-      .withColumn("le", leVal).filter(col("le").isNotNull)
-      .withColumn("base", strip("_bucket"))
-      .select(sig(col("base")).as("__sg"), col("base"), col("t"), col("le"), col("v"))
-      .groupBy(col("__sg"), col("t"))
-      .agg(first(col("base")).as("labels"),
-        sort_array(collect_list(struct(col("le"), col("v")))).as("bs"))
-    val c = floats.filter(name.endsWith("_count"))
-      .withColumn("base", strip("_count"))
-      .select(sig(col("base")).as("__sg"), col("t"), col("v").as("cnt"))
-    val s = floats.filter(name.endsWith("_sum"))
-      .withColumn("base", strip("_sum"))
-      .select(sig(col("base")).as("__sg"), col("t"), col("v").as("sum"))
-    val toNhcb = udf { (bs: Seq[org.apache.spark.sql.Row], cnt: java.lang.Double,
-        sum: java.lang.Double) =>
-      var pts = bs.map(r => (r.getDouble(0), r.getDouble(1)))
-      val count = if (cnt != null) cnt.doubleValue
-                  else pts.lastOption.map(_._2).getOrElse(0.0)
-      if (pts.isEmpty || !pts.last._1.isPosInfinity)
-        pts = pts :+ (Double.PositiveInfinity, count)
-      val cv = pts.init.map(_._1)
+    val floats = samples.filter(s => s.h.isEmpty && s.labels.contains("__name__"))
+    def of(suffix: String) = floats.filter(_.labels("__name__").endsWith(suffix))
+    def byKey(suffix: String) = of(suffix).map(s => (base(s, suffix), s.t) -> s.v).toMap
+    val counts = byKey("_count")
+    val sums = byKey("_sum")
+    val buckets = of("_bucket").flatMap { s =>
+      s.labels.get("le").flatMap(parseLe).map(le => (base(s, "_bucket"), s.t) -> ((le, s.v)))
+    }
+    val native = buckets.groupMap(_._1)(_._2).toSeq.map { case (key @ (labels, t), bs) =>
+      var pts = bs.sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering,
+        Ordering.Double.TotalOrdering))
+      val count = counts.getOrElse(key, pts.last._2)
+      if (!pts.last._1.isPosInfinity) pts = pts :+ ((Double.PositiveInfinity, count))
       val cum = pts.map(_._2)
       val diffs = cum.zip(0.0 +: cum.init).map { case (x, p) => x - p }
-      FHist(FHist.CustomSchema, 0.0, 0.0, count, if (sum != null) sum.doubleValue else 0.0,
-        diffs.indices, diffs, Nil, Nil, cv, FHist.HintUnknown).compact
+      Sample(labels, t, Double.NaN, 0L, Some(FHist(FHist.CustomSchema, 0.0, 0.0, count,
+        sums.getOrElse(key, 0.0), diffs.indices, diffs, Nil, Nil, pts.init.map(_._1),
+        FHist.HintUnknown).compact))
     }
-    val native = b
-      .join(c, Seq("__sg", "t"), "left")
-      .join(s, Seq("__sg", "t"), "left")
-      .select(col("labels"), col("t"), lit(Double.NaN).as("v"), lit(false).as("stale"),
-        toNhcb(col("bs"), col("cnt"), col("sum")).as("h"), lit(0L).as("stt"))
-    samples.unionByName(native.select(samples.columns.map(col): _*))
+    samples ++ native
+  }
+
+  /** an `le` label value as a bound; None when it is not a number */
+  private def parseLe(le: String): Option[Double] = le match {
+    case "+Inf" | "Inf" => Some(Double.PositiveInfinity)
+    case "-Inf" => Some(Double.NegativeInfinity)
+    case _ => le.trim.toDoubleOption
   }
 
   /** retention maintenance: drop 2h block partitions older than the cutoff

@@ -1,15 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 
 /** Relabeling DSL — the ingest-time label-set transform applied at target
   * discovery and scrape time (ref: model/relabel/relabel.go:44-68).
   *
-  * Each rule compiles to a pure column transform / filter over the
-  * `labels MAP<STRING,STRING>` column, so a rule chain is one narrow
-  * projection — no shuffle at any scale. Regexes are fully anchored like the
-  * reference's.
+  * One evaluator, [[applyToMap]], runs a rule chain over one label set: the
+  * scrape path, target and alertmanager discovery, the notifier, remote-write
+  * forwarding and the relabel endpoint call it on the driver, and the
+  * streaming source runs it as a UDF ([[apply]]). Regexes are fully anchored
+  * like the reference's; each rule compiles its pattern and its expanded
+  * replacement and target once.
   */
 object Relabel {
 
@@ -35,7 +38,14 @@ object Relabel {
       regex: String = "(.*)",
       targetLabel: String = "",
       replacement: String = "$1",
-      modulus: Long = 0L)
+      modulus: Long = 0L) {
+    // compiled once per rule, and again where a UDF deserializes the rules
+    @transient private[Relabel] lazy val pattern: java.util.regex.Pattern =
+      java.util.regex.Pattern.compile(anchored(regex))
+    @transient private[Relabel] lazy val javaReplacement: String =
+      goExpandToJava(replacement, pattern)
+    @transient private[Relabel] lazy val javaTarget: String = goExpandToJava(targetLabel, pattern)
+  }
 
   private def anchored(re: String): String =
     "^(?:" + re.replace("(?P<", "(?<") + ")$" // Go RE2 named-group syntax → Java
@@ -86,64 +96,27 @@ object Relabel {
     sb.toString
   }
 
-  /** concatenated source label values (absent → empty string) */
-  private def srcVal(labels: Column, r: Rule): Column =
-    concat_ws(r.separator, r.sourceLabels.map(l => coalesce(element_at(labels, l), lit(""))): _*)
-
-  private def setLabel(labels: Column, name: Column, value: Column): Column =
-    when(length(value) === 0, map_filter(labels, (k, _) => k =!= name))
-      .otherwise(map_concat(map_filter(labels, (k, _) => k =!= name), map(name, value)))
-
-  /** apply one rule; returns (newLabels, keepRow) */
-  def compile(labels: Column, r: Rule): (Column, Column) = {
-    val v = srcVal(labels, r)
-    val re = anchored(r.regex)
-    r.action match {
-      case Keep => (labels, v.rlike(re))
-      case Drop => (labels, !v.rlike(re))
-      case KeepEqual => (labels, v === coalesce(element_at(labels, r.targetLabel), lit("")))
-      case DropEqual => (labels, v =!= coalesce(element_at(labels, r.targetLabel), lit("")))
-      case Replace =>
-        val pat = java.util.regex.Pattern.compile(re)
-        val expanded = regexp_replace(v, re, goExpandToJava(r.replacement, pat))
-        val tgt = regexp_replace(v, re, goExpandToJava(r.targetLabel, pat)) // target may use $1 too
-        (when(v.rlike(re), setLabel(labels, tgt, expanded)).otherwise(labels), lit(true))
-      case Lowercase => (setLabel(labels, lit(r.targetLabel), lower(v)), lit(true))
-      case Uppercase => (setLabel(labels, lit(r.targetLabel), upper(v)), lit(true))
-      case HashMod =>
-        // ref: relabel.go hashmod — md5(val), lower 8 bytes as uint64 % modulus
-        val h64 = conv(substring(md5(v), 17, 16), 16, 10).cast("decimal(20,0)")
-        val m = (h64 % r.modulus).cast("long").cast("string")
-        (setLabel(labels, lit(r.targetLabel), m), lit(true))
-      case LabelMap =>
-        // add label `expand(name)` = value for every label NAME matching regex
-        val mapped = map_filter(labels, (k, _) => k.rlike(re))
-        val renamed = transform_keys(mapped, (k, _) =>
-          regexp_replace(k, re, goExpandToJava(r.replacement, java.util.regex.Pattern.compile(re))))
-        (map_concat(map_filter(labels, (k, _) => !map_contains_key(renamed, k)), renamed), lit(true))
-      case LabelDrop => (map_filter(labels, (k, _) => !k.rlike(re)), lit(true))
-      case LabelKeep => (map_filter(labels, (k, _) => k.rlike(re)), lit(true))
-    }
+  /** apply a rule chain to a samples DataFrame (column `labels`): one UDF
+    * over [[applyToMap]] per row; a dropped row's labels are null, and the
+    * row is filtered out */
+  def apply(df: DataFrame, rules: Seq[Rule]): DataFrame = {
+    val labelsType = df.schema("labels").dataType
+    val relabel = udf(new UDF1[scala.collection.Map[String, String], Map[String, String]] {
+      def call(labels: scala.collection.Map[String, String]) =
+        applyToMap(labels.toMap, rules).orNull
+    }, labelsType)
+    df.withColumn("labels", relabel(col("labels"))).filter(col("labels").isNotNull)
   }
 
-  /** apply a rule chain to a samples DataFrame (column `labels`) */
-  def apply(df: DataFrame, rules: Seq[Rule]): DataFrame =
-    rules.foldLeft(df) { (d, r) =>
-      val (nl, keep) = compile(col("labels"), r)
-      d.filter(keep).withColumn("labels", nl)
-    }
-
-  /** Driver-side single-label-set relabeling for TARGET relabel_configs
-    * (ref: model/relabel/relabel.go:206 Process — target cardinality is
-    * driver-scale, so this is a plain Scala mirror of [[compile]]'s column
-    * semantics). None = the target is dropped. */
+  /** relabel one label set (ref: model/relabel/relabel.go:206 Process).
+    * None = the label set is dropped. */
   def applyToMap(labels0: Map[String, String], rules: Seq[Rule]): Option[Map[String, String]] = {
     var labels = labels0
     def setLbl(m: Map[String, String], name: String, value: String): Map[String, String] =
       if (value.isEmpty) m - name else m.updated(name, value)
     for (r <- rules) {
       val v = r.sourceLabels.map(l => labels.getOrElse(l, "")).mkString(r.separator)
-      val re = anchored(r.regex).r.pattern
+      val re = r.pattern
       val matches = re.matcher(v).matches()
       r.action match {
         case Keep => if (!matches) return None
@@ -152,8 +125,8 @@ object Relabel {
         case DropEqual => if (v == labels.getOrElse(r.targetLabel, "")) return None
         case Replace =>
           if (matches) {
-            val expanded = re.matcher(v).replaceAll(goExpandToJava(r.replacement, re))
-            val tgt = re.matcher(v).replaceAll(goExpandToJava(r.targetLabel, re))
+            val expanded = re.matcher(v).replaceAll(r.javaReplacement)
+            val tgt = re.matcher(v).replaceAll(r.javaTarget)
             labels = setLbl(labels, tgt, expanded)
           }
         case Lowercase => labels = setLbl(labels, r.targetLabel, v.toLowerCase)
@@ -168,7 +141,7 @@ object Relabel {
         case LabelMap =>
           val add = labels.collect {
             case (k, value) if re.matcher(k).matches() =>
-              re.matcher(k).replaceAll(goExpandToJava(r.replacement, re)) -> value
+              re.matcher(k).replaceAll(r.javaReplacement) -> value
           }
           labels = labels ++ add
         case LabelDrop => labels = labels.filter { case (k, _) => !re.matcher(k).matches() }

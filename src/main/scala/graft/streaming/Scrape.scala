@@ -1,10 +1,9 @@
 package graft.streaming
 
-import graft.promql.{Engine, FHist}
+import graft.promql.FHist
 import graft.web.{ProtoExposition, SampleStore}
 import graft.web.RemoteWrite.{Meta, Sample}
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Pull-model scrape manager: HTTP-poll a target set on an interval, parse
   * the exposition body (Prometheus text, OpenMetrics or protobuf) into one
@@ -17,8 +16,9 @@ import org.apache.spark.sql.functions._
   * The poller is a driver-side edge by design — the same shape as the
   * reference's scrape manager (one process polls its shard of targets). At
   * 100 TB scale the target set shards across many ingest bridges and the
-  * Spark side only sees their appended micro-batches; the parse itself is
-  * the distributed [[Exposition]]/[[OpenMetrics]] map either way.
+  * Spark side only sees their appended batches. A scrape's parse,
+  * relabeling, NHCB conversion and append all run on the driver, with no
+  * Spark job, like the reference's appender inside the scrape loop.
   */
 final class ScrapeManager(
     spark: SparkSession,
@@ -353,10 +353,8 @@ final class ScrapeManager(
   }
 
   /** one synchronous scrape pass over every target; returns appended rows.
-    * Exemplars are batched across the pool's targets into ONE append per
-    * cycle (mirroring the sample batch path) — a per-target append would
-    * schedule one tiny Spark job per target per cycle at thousands-of-
-    * targets scale. */
+    * Every append runs on the driver, with no Spark job. Exemplars are
+    * batched across the pool's targets into ONE append per cycle. */
   def scrapeOnce(): Long = {
     val tgts = targetProvider()
     // target_limit: exceeding fails EVERY target of the pool this cycle —
@@ -392,10 +390,7 @@ final class ScrapeManager(
     anchors.keys.filterNot(liveKeys).foreach(anchors.remove)
     val results = tgts.map(scrapeTarget)
     val exRows = results.flatMap(_._2)
-    if (exRows.nonEmpty)
-      store.appendExemplars(spark.createDataFrame(
-        spark.sparkContext.parallelize(exRows, 1),
-        OpenMetrics.exemplarBatchSchema))
+    if (exRows.nonEmpty) store.appendExemplars(exRows)
     results.map(_._1).sum
   }
 
@@ -575,16 +570,20 @@ final class ScrapeManager(
       ScrapeManager.decorate(tgt, labels)
     val stamped0 = batch.samples.map(s =>
       s.copy(labels = decorate(s.labels), t = if (honorTimestamps) s.t else t0))
-    // created-timestamp-zero-ingestion (ref: scrape.go AppendSTZeroSample):
-    // a zero at each float sample's start timestamp when 0 < stt < t, so
-    // rate/increase see the counter's birth. A zero keeps that timestamp
+    // created-timestamp-zero-ingestion (ref: scrape.go AppendSTZeroSample
+    // and AppendHistogramSTZeroSample): a zero at each sample's start
+    // timestamp when 0 < stt < t, so rate/increase see the counter's birth;
+    // a native histogram's zero is a counter reset that keeps its schema,
+    // zero threshold and custom bounds. A zero keeps that timestamp
     // (honor_timestamps notwithstanding), is relabeled like a scraped sample
     // but EXCLUDED from sample_limit accounting — the reference's
     // AppendSTZeroSample bypasses the added counters
     val zeros =
       if (!stZeroIngestion) Nil
-      else stamped0.collect { case s if s.h.isEmpty && s.stt > 0L && s.stt < s.t =>
-        Sample(s.labels, s.stt, 0.0) }.distinct
+      else stamped0.collect { case s if s.stt > 0L && s.stt < s.t =>
+        Sample(s.labels, s.stt, if (s.h.isEmpty) 0.0 else Double.NaN, h = s.h.map(h =>
+          FHist(h.schema, h.zt, 0.0, 0.0, 0.0, Nil, Nil, Nil, Nil, h.cv, FHist.HintReset)))
+      }.distinct
     // st-synthesis rewrites cumulative samples lacking an ST; a failed
     // scrape has none, so its anchors survive the outage
     val stamped =
@@ -593,24 +592,20 @@ final class ScrapeManager(
     // metric_relabel_configs apply to scraped samples only; the report
     // series bypass them (ref: scrape.go append vs report)
     def relabeled(rows: Seq[Sample]) =
-      if (rows.isEmpty) None
-      else Some(Relabel(spark.createDataFrame(spark.sparkContext.parallelize(
-        rows.map(_.toRow), math.max(1, rows.size / 10000)), Engine.samplesSchema), metricRelabel))
+      rows.flatMap(s => Relabel.applyToMap(s.labels, metricRelabel).map(l => s.copy(labels = l)))
     val scrapedReal = relabeled(stamped)
-    val scraped0 = (scrapedReal ++ relabeled(zeros)).reduceOption(_ unionByName _)
+    val scraped0 = scrapedReal ++ relabeled(zeros)
     // convert_classic_histograms_to_nhcb (ref: textparse wraps every parser
     // in its NHCB parser)
     val scraped =
-      if (tgt.convertNhcbOverride.getOrElse(convertNhcb)) scraped0.map(Ingest.classicToNhcb)
+      if (tgt.convertNhcbOverride.getOrElse(convertNhcb)) Ingest.classicToNhcb(scraped0)
       else scraped0
     // limits run on the POST-metric-relabel label sets (ref: append-time
     // verifyLabelLimits — a relabel rule that drops the offending label must
     // let the scrape pass) and count the SCRAPED series only: ST zeros and
     // synthesized NHCB natives don't count against sample_limit
-    val postPairs = scrapedReal.map(_.select("labels", "t").collect()
-      .map(r => (r.getAs[scala.collection.Map[String, String]](0).toMap,
-        r.getLong(1) != t0))).getOrElse(Array.empty)
-    val postN = postPairs.length.toLong
+    val postPairs = scrapedReal.map(s => (s.labels, s.t != t0))
+    val postN = postPairs.size.toLong
     val violation = if (!ok) None else limitViolation(postPairs.iterator.map(_._1), postN)
     val effOk = ok && violation.isEmpty
     if (!effOk) logFailure(tgt, violation.getOrElse("scrape failed"))
@@ -635,8 +630,8 @@ final class ScrapeManager(
         ("scrape_body_size_bytes", bodyLen.toDouble)) else Nil))
       .map { case (n, v) => Row(decorate(Map("__name__" -> n)), t0, v, false, null, 0L) }
     // a violated limit drops the WHOLE scraped batch (append rollback)
-    if (effOk) scraped.foreach(store.append)
-    store.appendRows(report ++ staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L)))
+    store.appendRows((if (effOk) scraped.map(_.toRow) else Nil) ++ report ++
+      staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L)))
     if (effOk && batch.meta.nonEmpty) store.mergeMetadata(batch.meta)
     // exemplars ride the accepted scrape only, attached to the decorated,
     // POST-metric-relabel series — an exemplar of a relabel-dropped series

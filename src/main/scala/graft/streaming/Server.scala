@@ -327,10 +327,12 @@ final class PromServer(
               // a failing sink must not abort the evaluation tick: the
               // reference's queue manager is async — send failures
               // drop/retry on their own clock and never stall rule evaluation
-              lazy val out = spark.createDataFrame(rows.asJava, Engine.samplesSchema)
               forwarders.foreach { case (rules, f) =>
-                try f.forward(if (rules.isEmpty) out else Relabel(out, rules))
-                catch { case e: Exception =>
+                try {
+                  val kept = rows.flatMap(r => Relabel.applyToMap(
+                    r.getMap[String, String](0).toMap, rules).map(l => Row.fromSeq(l +: r.toSeq.tail)))
+                  f.forward(spark.createDataFrame(kept.asJava, Engine.samplesSchema))
+                } catch { case e: Exception =>
                   System.err.println(s"[remote-write] forward failed: ${e.getMessage}") }
               }
             case a: Rules.AlertingRule =>

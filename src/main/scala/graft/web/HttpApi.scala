@@ -1393,8 +1393,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         val exRows = dec.exemplars.map { case (sl, el, t, v) =>
           Row(sl, Row(el, v, t))
         }
-        store.appendExemplars(spark.createDataFrame(
-          spark.sparkContext.parallelize(exRows, 1), graft.streaming.OpenMetrics.exemplarBatchSchema))
+        store.appendExemplars(exRows)
       }
       // empty ExportMetricsServiceResponse
       ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")

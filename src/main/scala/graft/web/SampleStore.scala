@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, Metadata, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import scala.collection.{immutable, mutable}
+import scala.jdk.CollectionConverters._
 
 /** Mutable sample store backing the serving layer (HTTP API, remote write,
   * federation).
@@ -25,15 +26,16 @@ import scala.collection.{immutable, mutable}
   * reference's head block: `memSeries` in `stripeSeries`, and the chunks
   * that refer to a series by its ref, tsdb/head.go:71). Appended data is
   * SEALED once: an append encodes its rows into `UnsafeRow` bytes exactly
-  * once and keeps them as an immutable chunk. Rows that originate on the
-  * driver ([[appendRows]]: remote-write/OTLP decode, scrape reports and
-  * staleness markers) are encoded without a Spark job, each label set
-  * interned on the driver; a DataFrame ([[append]]: rule output, scraped
-  * frames) is evaluated by one job at append time, which also returns the
-  * series the dictionary lacks, so a failure throws from `append` and
-  * leaves the store as it was, and no later read re-runs the batch's plan.
-  * A batch's new series and its chunks are committed in one swap, so no
-  * read sees a chunk whose series is missing.
+  * once and keeps them as an immutable chunk. Every ingest path (scrape,
+  * remote write, OTLP, rule output and staleness markers) holds its rows on
+  * the driver, and [[appendRows]] encodes them without a Spark job, each
+  * label set interned on the driver. A DataFrame ([[append]]) is evaluated
+  * by one job at append time, which also returns the series the dictionary
+  * lacks, so a failure throws from `append` and leaves the store as it was,
+  * and no later read re-runs the batch's plan. A batch's new series and its
+  * chunks are committed in one swap, so no read sees a chunk whose series
+  * is missing. Exemplars are kept beside the samples, on the driver, in
+  * per-series rings ([[appendExemplars]]).
   *
   * [[samples]] is the constructor's frame ∪ ONE scan over a snapshot of the
   * chunk vector joined to the series dictionary by broadcast, with
@@ -147,9 +149,11 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
         chunks = state.chunks ++ batch.chunks)
     }
 
-  /** append a batch in canonical schema (e.g. rule output or a scraped
-    * frame): one job evaluates it and seals its rows; if that job fails,
-    * the exception propagates and the store is unchanged */
+  /** append a batch in canonical schema: one job evaluates it and seals its
+    * rows; if that job fails, the exception propagates and the store is
+    * unchanged. No ingest path of the server calls it (they all append
+    * driver-side rows through [[appendRows]]); it serves frames built
+    * elsewhere, such as a replayed trace. */
   def append(batch: DataFrame): Unit = commit(seal(batch, state.series.rows.keySet))
 
   /** append driver-side rows in [[Engine.samplesSchema]] (e.g. a decoded
@@ -193,15 +197,6 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
 
   // ---------- exemplars (ref: model/exemplar/exemplar.go:25) --------------
 
-  /** exemplar rows: (labels MAP — the parent series, exemplar STRUCT
-    * (labels, v, t)); sample-path volume stays untouched — exemplars ride a
-    * side table exactly like the reference's exemplar storage */
-  @volatile private var exemplarDf: Option[DataFrame] = None
-  // driver-side running count + insertion sequence: the circular-buffer
-  // bound (below) needs arrival order, which a DataFrame doesn't carry
-  private var exemplarCount: Long = 0L
-  private var exemplarSeqBase: Long = 0L
-
   /** bounded exemplar storage (ref: tsdb/exemplar.go:38
     * CircularExemplarStorage; config storage.exemplars.max_exemplars,
     * default config.go DefaultExemplarsConfig = 100000): appending past the
@@ -217,69 +212,63 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
     * batching contract (one append per scrape pool cycle, not per target) */
   @volatile private[graft] var exemplarAppendCalls: Long = 0L
 
-  def appendExemplars(batch: DataFrame): Unit = synchronized {
+  /** the stored exemplars, on the driver: each series' ring of keys in
+    * arrival order, and the rows in arrival order across series. An
+    * eviction takes an exemplar from the front of its series' ring. */
+  private val exemplarRings = mutable.HashMap.empty[AnyRef, ExemplarRing]
+  private val exemplarOrder = mutable.ArrayDeque.empty[StoredExemplar]
+
+  /** append (series labels, exemplar) rows in
+    * [[graft.streaming.OpenMetrics.exemplarBatchSchema]], on the driver. A
+    * row is admitted only if its exemplar orders STRICTLY after its series'
+    * newest stored one by (t, v, exemplar-label hash) (ref:
+    * tsdb/exemplar.go:231 validateExemplar): re-appending the same exemplar
+    * every scrape cycle is a no-op, and older arrivals are out-of-order
+    * drops. Every row of a batch is checked against what was stored before
+    * it. */
+  def appendExemplars(batch: Iterable[Row]): Unit = synchronized {
     exemplarAppendCalls += 1
-    if (maxExemplars <= 0L) { exemplarDf = None; exemplarCount = 0L; return }
-    import org.apache.spark.sql.functions.{desc, lit, monotonically_increasing_id, struct,
-      max => smax}
-    val cleaned0 = batch.filter(col("exemplar").isNotNull)
-      .select(col("labels"), col("exemplar"))
-    // per-series OOO/duplicate rejection (ref: tsdb/exemplar.go:231
-    // validateExemplar): an exemplar is admitted only if it orders STRICTLY
-    // after the series' newest stored one by (ts, value, exemplar-label
-    // hash) — re-appending the same exemplar every scrape cycle is a no-op
-    // (the exporter exposes it unchanged until new events), older arrivals
-    // are out-of-order drops. Spark struct comparison is lexicographic, so
-    // the reference's three-way ordering is one column comparison.
-    def ordKey(ex: org.apache.spark.sql.Column) = struct(ex.getField("t"), ex.getField("v"),
-      Engine.seriesSig(ex.getField("labels")))
-    val cleaned = exemplarDf match {
-      case Some(df) =>
-        val newest = df
-          .select(Engine.seriesSig(col("labels")).as("__sk"), ordKey(col("exemplar")).as("__n"))
-          .groupBy(col("__sk")).agg(smax(col("__n")).as("__n"))
-        cleaned0.withColumn("__sk", Engine.seriesSig(col("labels")))
-          .withColumn("__c", ordKey(col("exemplar")))
-          .join(newest, Seq("__sk"), "left")
-          .filter(col("__n").isNull || col("__c") > col("__n"))
-          .select(col("labels"), col("exemplar"))
-      case None => cleaned0
-    }
-    val stamped = cleaned
-      // per-batch arrival stamp: batches are driver-origin single-partition,
-      // so monotonically_increasing_id orders within the batch and the
-      // stepped base orders across batches
-      .withColumn("__seq", monotonically_increasing_id() + lit(exemplarSeqBase))
-    exemplarSeqBase += (1L << 33) // > any single batch's id range
-    val n = stamped.count()
-    if (n == 0L) return
-    val merged = exemplarDf match {
-      case Some(df) => df.unionByName(stamped)
-      case None => stamped
-    }
-    exemplarCount += n
-    val bounded =
-      if (exemplarCount <= maxExemplars) merged
-      else { // evict past the cap: protect each series' newest exemplar
-        // first (per-series fairness), then newest-by-arrival — a burst on
-        // one series evicts its OWN older exemplars before touching another
-        // series' last one (ref exemplar.go per-series circular index)
-        import org.apache.spark.sql.functions.{row_number, when}
-        import org.apache.spark.sql.expressions.Window
-        exemplarCount = maxExemplars
-        val w = Window.partitionBy(Engine.seriesSig(col("labels"))).orderBy(desc("__seq"))
-        merged.withColumn("__rk", row_number().over(w))
-          .orderBy(when(col("__rk") === 1, 1).otherwise(0).desc, col("__seq").desc)
-          .limit(math.min(maxExemplars, Int.MaxValue).toInt)
-          .drop("__rk")
-      }
-    // sealed like the samples: one job, and the next append reads the
-    // chunks rather than re-running this append's plan
-    exemplarDf = Some(GraftBridge.internalCreateDataFrame(spark,
-      new ChunkRDD(spark.sparkContext, sealRows(bounded).toVector), bounded.schema))
+    if (maxExemplars <= 0L) { exemplarRings.clear(); exemplarOrder.clear(); return }
+    val before = mutable.HashMap.empty[AnyRef, Option[ExemplarKey]]
+    val admitted = batch.iterator.filter(!_.isNullAt(1)).flatMap { r =>
+      val series = r.getAs[AnyRef](0)
+      val key = exemplarKey(r.getStruct(1))
+      val newest = before.getOrElseUpdate(series, exemplarRings.get(series).map(_.newest))
+      if (newest.exists(ExemplarOrdering.lteq(key, _))) None
+      else Some(StoredExemplar(r, key, exemplarRings.getOrElseUpdate(series, new ExemplarRing)))
+    }.toSeq
+    admitted.foreach { e => e.ring.add(e.key); exemplarOrder += e }
+    evictExemplars()
   }
 
-  def exemplars: Option[DataFrame] = exemplarDf.map(_.drop("__seq"))
+  /** past the cap: evict the oldest exemplars that are not their series'
+    * newest, then, while still past it, the oldest of the rest */
+  private def evictExemplars(): Unit = {
+    var excess = exemplarOrder.size - maxExemplars
+    if (excess <= 0) return
+    val protectedFront = mutable.ArrayBuffer.empty[StoredExemplar]
+    while (excess > 0 && exemplarOrder.nonEmpty) {
+      val e = exemplarOrder.removeHead()
+      if (e.ring.size > 1) { e.ring.evictOldest(); excess -= 1 }
+      else protectedFront += e
+    }
+    exemplarOrder.prependAll(protectedFront)
+    while (excess > 0) {
+      val e = exemplarOrder.removeHead()
+      e.ring.evictOldest()
+      exemplarRings.remove(e.row.getAs[AnyRef](0))
+      excess -= 1
+    }
+  }
+
+  /** the stored exemplars as a local frame in
+    * [[graft.streaming.OpenMetrics.exemplarBatchSchema]]; None when there
+    * are none */
+  def exemplars: Option[DataFrame] = synchronized {
+    if (exemplarOrder.isEmpty) None
+    else Some(spark.createDataFrame(exemplarOrder.map(_.row).asJava,
+      graft.streaming.OpenMetrics.exemplarBatchSchema))
+  }
 
   /** /api/v1/admin/tsdb/clean_tombstones — materialize deletions: the
     * tombstone-applied view is sealed into chunks that replace the store's
@@ -386,20 +375,38 @@ object SampleStore {
     Sealed(parts.flatMap(_._1).toSeq, parts.flatMap(_._2).toSeq)
   }
 
-  /** one job: each of the frame's partitions sealed into one chunk of its
-    * schema's rows */
-  private def sealRows(df: DataFrame): Seq[Chunk] = {
-    val schema = df.schema
-    val nullable = schema.filter(_.nullable).map(_.name).toSet
-    df.queryExecution.toRdd.mapPartitions { it =>
-      lazy val toUnsafe = UnsafeProjection.create(schema)
-      val w = new ChunkWriter(schema.size, nullable)
-      it.foreach {
-        case u: UnsafeRow => w.add(u)
-        case r => w.add(toUnsafe(r))
-      }
-      w.result().iterator
-    }.collect().toSeq
+  /** an exemplar's admission order: (t, v, exemplar-label hash), doubles
+    * compared as Spark SQL compares them (NaN largest, -0.0 = 0.0) */
+  private type ExemplarKey = (Long, Double, Long)
+  private val ExemplarOrdering: Ordering[ExemplarKey] = Ordering.Tuple3(Ordering.Long,
+    (x: Double, y: Double) => if (x == y) 0 else java.lang.Double.compare(x, y), Ordering.Long)
+
+  /** the key of an exemplar row (labels, v, t); the hash is
+    * [[Engine.seriesSig]] of the exemplar's labels */
+  private def exemplarKey(ex: Row): ExemplarKey =
+    (ex.getLong(2), ex.getDouble(1), seriesRow(ex.get(0)).getLong(0))
+
+  /** one stored exemplar row and its series' ring */
+  private final case class StoredExemplar(row: Row, key: ExemplarKey, ring: ExemplarRing)
+
+  /** one series' exemplar keys in arrival order, and the largest of them */
+  private final class ExemplarRing {
+    private val keys = mutable.ArrayDeque.empty[ExemplarKey]
+    private var max: ExemplarKey = _
+
+    def size: Int = keys.size
+
+    def newest: ExemplarKey = max
+
+    def add(k: ExemplarKey): Unit = {
+      if (keys.isEmpty || ExemplarOrdering.gt(k, max)) max = k
+      keys += k
+    }
+
+    def evictOldest(): Unit = {
+      val k = keys.removeHead()
+      if (keys.nonEmpty && ExemplarOrdering.equiv(k, max)) max = keys.max(ExemplarOrdering)
+    }
   }
 
   /** sealed rows of one schema in `UnsafeRow` layout, packed back to back

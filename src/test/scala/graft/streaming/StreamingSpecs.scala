@@ -80,6 +80,50 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getString(0)).toSet == Set("apix", "dbx"))
   }
 
+  test("relabel: all eleven actions over a fixed table of label sets") {
+    import Relabel._
+    val a = Map("__name__" -> "m", "job" -> "api", "instance" -> "Host-A:9090", "team" -> "API")
+    val b = Map("__name__" -> "m", "job" -> "db", "instance" -> "host-b:9100", "team" -> "db",
+      "__tmp_job" -> "override")
+    val c = Map("__name__" -> "n", "job" -> "web", "instance" -> "host-c:80", "team" -> "Web")
+    val df = samplesOf(Seq(a, b, c).map(l => (l, 0L, 1.0)))
+    def run(rules: Rule*): Set[Map[String, String]] =
+      Relabel(df, rules).select("labels").collect().map(_.getMap[String, String](0).toMap).toSet
+    val hostPort = "([^:]+):(\\d+)"
+    assert(run(Rule(Replace, Seq("instance"), regex = hostPort, targetLabel = "host",
+      replacement = "${1}-x")) == Set(a + ("host" -> "Host-A-x"), b + ("host" -> "host-b-x"),
+      c + ("host" -> "host-c-x")))
+    // the target name expands too
+    assert(run(Rule(Replace, Seq("instance"), regex = hostPort, targetLabel = "p_${2}",
+      replacement = "$1")) == Set(a + ("p_9090" -> "Host-A"), b + ("p_9100" -> "host-b"),
+      c + ("p_80" -> "host-c")))
+    // an empty replacement deletes the target; a non-matching value leaves it
+    assert(run(Rule(Replace, Seq("team"), regex = "db", targetLabel = "team",
+      replacement = "")) == Set(a, b - "team", c))
+    assert(run(Rule(Keep, Seq("job"), regex = "api|web")) == Set(a, c))
+    assert(run(Rule(Drop, Seq("__name__", "job"), regex = "m;db")) == Set(a, c))
+    assert(run(Rule(KeepEqual, Seq("team"), targetLabel = "job")) == Set(b))
+    assert(run(Rule(DropEqual, Seq("team"), targetLabel = "job")) == Set(a, c))
+    assert(run(Rule(HashMod, Seq("instance"), targetLabel = "shard", modulus = 1000)) ==
+      Set(a + ("shard" -> "382"), b + ("shard" -> "620"), c + ("shard" -> "359")))
+    // a mapped name that collides with an existing label replaces its value
+    assert(run(Rule(LabelMap, regex = "__tmp_(.+)", replacement = "$1")) ==
+      Set(a, b + ("job" -> "override"), c))
+    assert(run(Rule(LabelDrop, regex = "team|__tmp_.*")) ==
+      Set(a - "team", b - "team" - "__tmp_job", c - "team"))
+    assert(run(Rule(LabelKeep, regex = "__name__|job")) ==
+      Set(Map("__name__" -> "m", "job" -> "api"), Map("__name__" -> "m", "job" -> "db"),
+        Map("__name__" -> "n", "job" -> "web")))
+    assert(run(Rule(Lowercase, Seq("team"), targetLabel = "team_lc")) ==
+      Set(a + ("team_lc" -> "api"), b + ("team_lc" -> "db"), c + ("team_lc" -> "web")))
+    assert(run(Rule(Uppercase, Seq("job", "team"), separator = "-", targetLabel = "key")) ==
+      Set(a + ("key" -> "API-API"), b + ("key" -> "DB-DB"), c + ("key" -> "WEB-WEB")))
+    // a chain applies its rules in order
+    assert(run(Rule(LabelMap, regex = "__tmp_(.+)", replacement = "$1"),
+      Rule(Keep, Seq("job"), regex = "override|web"), Rule(LabelDrop, regex = "__tmp_job")) ==
+      Set(b - "__tmp_job" + ("job" -> "override"), c))
+  }
+
   test("recording rule rewrites __name__ and feeds later rules") {
     val df = samplesOf(Seq(
       (Map("__name__" -> "reqs", "job" -> "a"), 0L, 10.0),
@@ -514,9 +558,10 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
       (Map("__name__" -> "h_count", "job" -> "j"), 1000L, 7.0),
       (Map("__name__" -> "h_sum", "job" -> "j"), 1000L, 11.5),
       (Map("__name__" -> "other", "job" -> "j"), 1000L, 3.0))
-    val out = Ingest.classicToNhcb(samplesOf(rows))
-    assert(out.count() == 7) // 6 classic + 1 synthesized
-    val nh = out.filter(col("h").isNotNull).collect()
+    val out = Ingest.classicToNhcb(rows.map { case (l, t, v) =>
+      graft.web.RemoteWrite.Sample(l, t, v) }).map(_.toRow)
+    assert(out.size == 7) // 6 classic + 1 synthesized
+    val nh = out.filter(!_.isNullAt(4))
     assert(nh.length == 1)
     val r = nh.head
     assert(r.getMap[String, String](0).toMap == Map("__name__" -> "h", "job" -> "j"))
@@ -526,7 +571,8 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(h.getSeq[Double](6) == Seq(2.0, 3.0, 2.0))    // de-cumulated buckets
     assert(h.getSeq[Double](9) == Seq(1.0, 2.5))          // custom bounds
     // engine sees it: histogram_count over the synthesized series
-    val q = Engine.instantQuery(spark, out, "histogram_count(h)", 1000L)
+    val q = Engine.instantQuery(spark, spark.createDataFrame(
+      java.util.Arrays.asList(out: _*), Engine.samplesSchema), "histogram_count(h)", 1000L)
     val got = q.asInstanceOf[graft.promql.VectorVal].df.collect()
     assert(got.length == 1 && got.head.getDouble(got.head.fieldIndex("v")) == 7.0)
   }
@@ -1069,6 +1115,49 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("created-timestamp zero ingestion injects a zero histogram at a native histogram's created_timestamp") {
+    import Pb._
+    // schema 0, zero threshold 0.001, count 4, sum 10, buckets [3, 1],
+    // created at 50 s
+    val fam = msg { f =>
+      str(f, 1, "nh"); uint(f, 3, 4) // HISTOGRAM
+      bytes(f, 4, msg(m => bytes(m, 7, msg { h =>
+        uint(h, 1, 4); dbl(h, 2, 10.0); uint(h, 5, 0); dbl(h, 6, 0.001)
+        bytes(h, 12, msg { s => uint(s, 1, 0); uint(s, 2, 2) })
+        bytes(h, 13, msg { d => vint(d, 6); vint(d, 3) }) // packed sint64 [3, -2]
+        bytes(h, 15, msg(t => uint(t, 1, 50)))
+      })))
+    }
+    val body = msg { o => vint(o, fam.length); o.write(fam) }
+    val server = com.sun.net.httpserver.HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/nh", (ex: com.sun.net.httpserver.HttpExchange) => {
+      ex.getResponseHeaders.set("Content-Type", "application/vnd.google.protobuf; " +
+        "proto=io.prometheus.client.MetricFamily; encoding=delimited")
+      ex.sendResponseHeaders(200, body.length); ex.getResponseBody.write(body); ex.close()
+    })
+    server.start()
+    try {
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}/nh"
+      for (zero <- Seq(false, true)) {
+        val store = emptyStoreS()
+        new ScrapeManager(spark, store, Seq(ScrapeManager.ScrapeTarget(url, "t", "i1")),
+          nowMs = () => 60000L, stZeroIngestion = zero).scrapeOnce()
+        val nh = store.samples.filter(element_at(col("labels"), "__name__") === "nh").collect()
+          .map(r => r.getLong(1) -> graft.promql.FHist.fromRow(r.getStruct(4))).toMap
+        assert(nh(60000L).cnt == 4.0 && nh(60000L).pcnt == Seq(3.0, 1.0))
+        if (!zero) assert(nh.keySet == Set(60000L))
+        else {
+          // the reference's AppendHistogramSTZeroSample: a counter reset
+          // that keeps the schema, zero threshold and custom bounds
+          assert(nh.keySet == Set(50000L, 60000L))
+          val z = nh(50000L)
+          assert(z.schema == 0 && z.zt == 0.001 && z.crh == graft.promql.FHist.HintReset)
+          assert(z.cnt == 0.0 && z.sum == 0.0 && z.zc == 0.0 && z.pcnt.isEmpty && z.ncnt.isEmpty)
+        }
+      }
+    } finally server.stop(0)
+  }
+
   test("a PrometheusProto-first pool scrapes a text/plain target as text") {
     withFamilies { (base, accept) =>
       val t = scrapeStored(s"$base/text",
@@ -1091,10 +1180,82 @@ class StreamingSpecs extends AnyFunSuite with BeforeAndAfterAll {
     val src = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/streaming/Scrape.scala")), "UTF-8")
     // a call or a method value: the name followed by a parenthesis
-    def calls(name: String): Int =
-      ("""(?<!def )\b""" + java.util.regex.Pattern.quote(name) + "[()]").r.findAllIn(src).size
+    def calls(name: String, in: String = src): Int =
+      ("""(?<!def )\b""" + java.util.regex.Pattern.quote(name) + "[()]").r.findAllIn(in).size
     assert(calls("staleDiff") == 1)
     assert(calls("limitViolation") == 1)
-    assert(calls("store.append") == 1)
+    // a scrape's accepted batch, its report series and its staleness
+    // markers go to the store together, in one driver-side append
+    val append = src.substring(src.indexOf("private def append("), src.indexOf("def start()"))
+    assert(calls("store.appendRows", append) == 1)
+    assert(calls("store.append") == 0)
+  }
+
+  test("driver-side ingest: Scrape.scala builds no Spark job, Relabel.scala has one rule evaluator") {
+    def src(file: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"src/main/scala/graft/streaming/$file")), "UTF-8")
+    val scrape = src("Scrape.scala")
+    Seq("parallelize", "createDataFrame", "collect()").foreach(w => assert(!scrape.contains(w), w))
+    val relabel = src("Relabel.scala")
+    Seq("map_filter", "rlike").foreach(w => assert(!relabel.contains(w), w))
+  }
+
+  test("a scrape of text, OpenMetrics and protobuf targets and an OTLP request with exemplars run no Spark job") {
+    import Pb._
+    withFamilies { (base, _) =>
+      val store = emptyStoreS()
+      val scrape = new ScrapeManager(spark, store,
+        Seq("text", "om", "proto").map(p => ScrapeManager.ScrapeTarget(s"$base/$p", "t", p)),
+        nowMs = () => 60000L, convertNhcb = true,
+        metricRelabel = Seq(Relabel.Rule(Relabel.Replace, Seq("path"), targetLabel = "route")),
+        limits = ScrapeManager.ScrapeLimits(sampleLimit = 100))
+      // one OTLP cumulative sum point with one exemplar (trace_id 0102)
+      def fixed64(o: Out, field: Int, v: Long): Unit = {
+        vint(o, (field << 3) | 1); (0 until 8).foreach(i => o.write(((v >> (8 * i)) & 0xff).toInt))
+      }
+      val exemplar = msg { e => fixed64(e, 2, 59000000000L); dbl(e, 3, 41.5)
+        bytes(e, 5, Array[Byte](1, 2)) }
+      val point = msg { d => fixed64(d, 3, 60000000000L); dbl(d, 4, 42.0); bytes(d, 5, exemplar) }
+      val metric = msg { m => str(m, 1, "req.count")
+        bytes(m, 7, msg { s => bytes(s, 1, point); uint(s, 2, 2); uint(s, 3, 1) }) }
+      val otlp = msg(o => bytes(o, 1, msg(rm => bytes(rm, 2, msg(sm => bytes(sm, 2, metric))))))
+      val api = new graft.web.HttpApi(spark, store, 0, () => 60000L)
+      api.start()
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        scrape.scrapeOnce()
+        val resp = java.net.http.HttpClient.newHttpClient().send(
+          java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+              s"http://127.0.0.1:${api.boundPort}/api/v1/otlp/v1/metrics"))
+            .header("Content-Type", "application/x-protobuf")
+            .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(otlp)).build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 200)
+        // the listener bus delivers in order: once this job's start is seen,
+        // every earlier one has been
+        spark.sparkContext.setJobDescription("marker")
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        spark.sparkContext.setJobDescription(null)
+        val deadline = System.nanoTime() + 10000000000L
+        while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(jobs.contains("marker"))
+        assert(jobs.size == 1, jobs)
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        api.stop()
+      }
+      val up = store.samples.filter(element_at(col("labels"), "__name__") === "up")
+        .select("v").collect().map(_.getDouble(0))
+      assert(up.toSeq == Seq(1.0, 1.0, 1.0))
+      val traces = store.exemplars.get.collect()
+        .map(_.getStruct(1).getMap[String, String](0)("trace_id")).toSet
+      assert(traces == Set("t1", "t2", "0102"))
+      assert(store.samples.filter(col("h").isNotNull).count() == 3) // one NHCB per target
+    }
   }
 }

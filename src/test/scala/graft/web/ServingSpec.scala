@@ -75,7 +75,7 @@ class ServingSpec extends AnyFunSuite {
     // exemplar rows land in the store and serve via /api/v1/query_exemplars
     val store = emptyStore()
     store.append(OpenMetrics.samplesOf(parsed).drop("exemplar"))
-    store.appendExemplars(OpenMetrics.samplesOf(parsed))
+    store.appendExemplars(OpenMetrics.samplesOf(parsed).select("labels", "exemplar").collect())
     store.mergeMetadata(OpenMetrics.metadataOf(parsed))
     val api = new HttpApi(spark, store, 0, () => 10000L)
     api.start()
@@ -1082,11 +1082,9 @@ class ServingSpec extends AnyFunSuite {
     import org.apache.spark.sql.Row
     val store = emptyStore()
     store.maxExemplars = 3L
-    def batch(ids: Long*) = spark.createDataFrame(
-      spark.sparkContext.parallelize(ids.map(i =>
-        Row(Map("__name__" -> "m", "i" -> i.toString),
-          Row(Map("trace_id" -> s"t$i"), i.toDouble, i * 1000L))), 1),
-      OpenMetrics.exemplarBatchSchema)
+    def batch(ids: Long*) = ids.map(i =>
+      Row(Map("__name__" -> "m", "i" -> i.toString),
+        Row(Map("trace_id" -> s"t$i"), i.toDouble, i * 1000L)))
     store.appendExemplars(batch(1L, 2L))
     assert(store.exemplars.get.count() == 2L)
     store.appendExemplars(batch(3L, 4L, 5L))
@@ -1111,10 +1109,8 @@ class ServingSpec extends AnyFunSuite {
   test("exemplar OOO/duplicate rejection: re-appends are no-ops, older arrivals drop, same-ts advances by (value, hash)") {
     import org.apache.spark.sql.Row
     val store = emptyStore()
-    def one(trace: String, v: Double, t: Long) = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(Map("__name__" -> "m"), Row(Map("trace_id" -> trace), v, t))), 1),
-      OpenMetrics.exemplarBatchSchema)
+    def one(trace: String, v: Double, t: Long) =
+      Seq(Row(Map("__name__" -> "m"), Row(Map("trace_id" -> trace), v, t)))
     def traces() = store.exemplars.get.collect()
       .map(_.getStruct(1).getMap[String, String](0)("trace_id")).sorted.toSeq
     store.appendExemplars(one("t1", 1.0, 1000L))
@@ -1135,10 +1131,8 @@ class ServingSpec extends AnyFunSuite {
     // newer ts always admitted; a DIFFERENT series is independent
     store.appendExemplars(one("t4", 0.1, 2000L))
     assert(traces() == Seq("t1", "t2", "t4"))
-    store.appendExemplars(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(Map("__name__" -> "other"), Row(Map("trace_id" -> "o1"), 1.0, 100L))), 1),
-      OpenMetrics.exemplarBatchSchema))
+    store.appendExemplars(Seq(
+      Row(Map("__name__" -> "other"), Row(Map("trace_id" -> "o1"), 1.0, 100L))))
     assert(traces() == Seq("o1", "t1", "t2", "t4"))
   }
 
@@ -1146,11 +1140,9 @@ class ServingSpec extends AnyFunSuite {
     import org.apache.spark.sql.Row
     val store = emptyStore()
     store.maxExemplars = 10L
-    def batchFor(series: String, ids: Seq[Long]) = spark.createDataFrame(
-      spark.sparkContext.parallelize(ids.map(i =>
-        Row(Map("__name__" -> series),
-          Row(Map("trace_id" -> s"$series-$i"), i.toDouble, i * 1000L))), 1),
-      OpenMetrics.exemplarBatchSchema)
+    def batchFor(series: String, ids: Seq[Long]) = ids.map(i =>
+      Row(Map("__name__" -> series),
+        Row(Map("trace_id" -> s"$series-$i"), i.toDouble, i * 1000L)))
     // series B writes one exemplar, then series A bursts 1000 (ref
     // exemplar.go per-series index semantics: each live series keeps its
     // newest exemplar while the series count fits the cap)
