@@ -1513,25 +1513,16 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         .getOrElse(throw new IllegalArgumentException("missing parameter query"))
       val start = p.get("start").flatMap(_.headOption).map(parseTimeMs).getOrElse(Long.MinValue / 2)
       val end = p.get("end").flatMap(_.headOption).map(parseTimeMs).getOrElse(Long.MaxValue / 2)
-      val data = store.exemplars match {
-        case None => Nil
-        case Some(df) =>
-          matcherFilter(df.filter(col("exemplar.t") >= start && col("exemplar.t") <= end),
-              parseMatch(q))
-            .groupBy(Engine.seriesSig(col("labels")).as("__sg"))
-            // sort_array can't order structs containing MAPs — sort driver-side
-            .agg(first(col("labels")).as("labels"),
-              collect_list(struct(col("exemplar.t").as("t"),
-                col("exemplar.v").as("v"), col("exemplar.labels").as("el"))).as("exs"))
-            .select(col("labels"), col("exs")).collect().toSeq
-      }
-      val items = data.sortBy(r => labelsOf(r, 0).toSeq.sorted.mkString(" ")).map { r =>
+      val ms = parseMatch(q)
+      val data = store.exemplarsOf(l => ms.forall(m => m.matches(l.getOrElse(m.name, ""))),
+        start, end)
+      val items = data.sortBy(_._1.toSeq.sorted.mkString(" ")).map { case (labels, exs) =>
         Json.obj(
-          "seriesLabels" -> Json.metric(labelsOf(r, 0)),
-          "exemplars" -> Json.arr(r.getSeq[Row](1).sortBy(_.getLong(0)).map { e =>
-            Json.obj("labels" -> Json.metric(e.getMap[String, String](2).toMap),
+          "seriesLabels" -> Json.metric(labels),
+          "exemplars" -> Json.arr(exs.sortBy(_.getLong(2)).map { e =>
+            Json.obj("labels" -> Json.metric(e.getMap[String, String](0).toMap),
               "value" -> Json.str(Json.goFloat(e.getDouble(1))),
-              "timestamp" -> Json.ts(e.getLong(0)))
+              "timestamp" -> Json.ts(e.getLong(2)))
           }))
       }
       ok(ex, Json.arr(items))

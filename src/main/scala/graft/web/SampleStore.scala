@@ -1,6 +1,6 @@
 package graft.web
 
-import graft.promql.{Engine, LabelMatcher}
+import graft.promql.{Engine, FHist, LabelMatcher}
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression,
   UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -22,15 +23,21 @@ import scala.jdk.CollectionConverters._
   *
   * The store keeps each series' labels ONCE, in a series dictionary keyed
   * by the series signature `__sg` ([[Engine.seriesSig]]), and the samples
-  * in narrow chunks of `(__sg, t, v, stale, h, stt)` rows (the analog of the
-  * reference's head block: `memSeries` in `stripeSeries`, and the chunks
-  * that refer to a series by its ref, tsdb/head.go:71). Appended data is
-  * SEALED once: an append encodes its rows into `UnsafeRow` bytes exactly
-  * once and keeps them as an immutable chunk. Every ingest path (scrape,
-  * remote write, OTLP, rule output and staleness markers) holds its rows on
-  * the driver, and [[appendRows]] encodes them without a Spark job, each
-  * label set interned on the driver. A DataFrame ([[append]]) is evaluated
-  * by one job at append time, which also returns the series the dictionary
+  * in immutable chunks (the analog of the reference's head block:
+  * `memSeries` in `stripeSeries`, and the chunks that refer to a series by
+  * its ref, tsdb/head.go:71). Appended data is SEALED once into one chunk
+  * layout, column by column: the `__sg` column as an array of longs, `t` as
+  * one long when every row shares it, `v` as an array of doubles, and
+  * `stale`, `stt` and `h` only when some row uses them (`h` only for the
+  * rows that carry a histogram). The `__sg` column is interned per store by
+  * content, so every batch with the same series in the same order (each
+  * scrape of a target, each remote-write batch of a sender) shares one
+  * array, and a float sample of such a batch costs its 8-byte value. Every
+  * ingest path (scrape, remote write, OTLP, rule output and staleness
+  * markers) holds its rows on the driver, and [[appendRows]] writes their
+  * columns without a Spark job, each label set interned on the driver. A
+  * DataFrame ([[append]]) is evaluated by one job at append time, whose
+  * tasks build the same columns and return the series the dictionary
   * lacks, so a failure throws from `append` and leaves the store as it was,
   * and no later read re-runs the batch's plan. A batch's new series and its
   * chunks are committed in one swap, so no read sees a chunk whose series
@@ -139,14 +146,25 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
     * [[cleanTombstones]] seals it) */
   def numSeries: Int = state.series.rows.size
 
-  /** bytes the sealed chunks hold: rows and row ends */
-  private[web] def chunkBytes: Long =
-    state.chunks.iterator.map(c => c.bytes.length + 4L * c.rows).sum
+  /** bytes the sealed chunks hold, a series column shared by several
+    * chunks counted once */
+  private[web] def chunkBytes: Long = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[Array[Long], java.lang.Boolean])
+    state.chunks.iterator.map(c => c.bytes + (if (seen.add(c.sg)) 8L * c.rows else 0L)).sum
+  }
+
+  /** the chunks' series columns by content; guarded by the store's lock */
+  private val seriesColumns = mutable.HashMap.empty[immutable.ArraySeq[Long], Array[Long]]
+
+  /** the chunk with the stored series column of the same content, if any */
+  private def interned(c: Chunk): Chunk =
+    c.withSeries(seriesColumns.getOrElseUpdate(immutable.ArraySeq.unsafeWrapArray(c.sg), c.sg))
 
   private def commit(batch: Sealed): Unit =
     if (batch.chunks.nonEmpty) synchronized {
       state = state.copy(series = state.series ++ batch.series,
-        chunks = state.chunks ++ batch.chunks)
+        chunks = state.chunks ++ batch.chunks.map(interned))
     }
 
   /** append a batch in canonical schema: one job evaluates it and seals its
@@ -157,19 +175,21 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   def append(batch: DataFrame): Unit = commit(seal(batch, state.series.rows.keySet))
 
   /** append driver-side rows in [[Engine.samplesSchema]] (e.g. a decoded
-    * remote-write request): encoded on the driver, no Spark job. A label
-    * set seen before costs one hash-map lookup. */
+    * remote-write request): their columns written on the driver, no Spark
+    * job. A label set seen before costs one hash-map lookup. */
   def appendRows(rows: Iterable[Row]): Unit = {
-    val toRow = rowSerializer.get()
+    val toHist = histSerializer.get()
     val known = state.series.rows
     val fresh = mutable.LongMap.empty[InternalRow]
-    val w = new ChunkWriter(ChunkSchema.size, Set.empty)
+    val w = new ChunkWriter(Set.empty)
     rows.foreach { r =>
       val labels = r.getAs[AnyRef](0)
       val sg: Long = sigs.computeIfAbsent(labels, l => seriesRow(l).getLong(0))
       if (!known.contains(sg) && !fresh.contains(sg)) fresh(sg) = seriesRow(labels)
-      w.addSample(toRow(Row(sg, r.get(1), r.get(2), r.get(3), r.get(4), r.get(5)))
-        .asInstanceOf[UnsafeRow])
+      val h = if (r.isNullAt(H)) null
+        else toHist(Row(r.get(H))).getStruct(0, HistFields).asInstanceOf[UnsafeRow]
+      w.add(sg, r.getLong(T), r.getDouble(V), r.getBoolean(Stale), h,
+        if (r.isNullAt(Stt)) 0L else r.getLong(Stt))
     }
     commit(Sealed(fresh.values.toSeq, w.result().toSeq))
   }
@@ -263,11 +283,27 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
 
   /** the stored exemplars as a local frame in
     * [[graft.streaming.OpenMetrics.exemplarBatchSchema]]; None when there
-    * are none */
+    * are none. `/api/v1/query_exemplars` reads [[exemplarsOf]] instead. */
   def exemplars: Option[DataFrame] = synchronized {
     if (exemplarOrder.isEmpty) None
     else Some(spark.createDataFrame(exemplarOrder.map(_.row).asJava,
       graft.streaming.OpenMetrics.exemplarBatchSchema))
+  }
+
+  /** the stored exemplars of the series whose labels `keep` accepts, with a
+    * timestamp in [start, end], on the driver: each such series' labels and
+    * its exemplar structs (labels, v, t) in arrival order */
+  def exemplarsOf(keep: Map[String, String] => Boolean, start: Long,
+      end: Long): Seq[(Map[String, String], Seq[Row])] = synchronized {
+    def labels(series: AnyRef) = series.asInstanceOf[collection.Map[String, String]].toMap
+    val matched = exemplarRings.keysIterator.filter(s => keep(labels(s))).toSet
+    exemplarOrder.iterator.map(_.row)
+      .filter(r => matched(r.getAs[AnyRef](0)) && {
+        val t = r.getStruct(1).getLong(2)
+        t >= start && t <= end
+      })
+      .toSeq.groupBy(_.getAs[AnyRef](0)).toSeq
+      .map { case (series, rows) => labels(series) -> rows.map(_.getStruct(1)) }
   }
 
   /** /api/v1/admin/tsdb/clean_tombstones — materialize deletions: the
@@ -275,7 +311,8 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
     * contents */
   def cleanTombstones(): Unit = synchronized {
     val all = seal(samples, state.series.rows.keySet)
-    state = State(None, state.series ++ all.series, all.chunks.toVector, Nil)
+    seriesColumns.clear()
+    state = State(None, state.series ++ all.series, all.chunks.map(interned).toVector, Nil)
   }
 
   /** /api/v1/admin/tsdb/snapshot — persist the current (tombstone-applied)
@@ -300,13 +337,19 @@ object SampleStore {
   private val LabelsType = Engine.samplesSchema("labels").dataType
   /** the canonical columns a store may lack (see `Engine.canonical`) */
   private val Optional = Set("h", "stt")
+  private val T = ChunkSchema.fieldIndex("t")
+  private val V = ChunkSchema.fieldIndex("v")
+  private val Stale = ChunkSchema.fieldIndex("stale")
   private val H = ChunkSchema.fieldIndex("h")
   private val Stt = ChunkSchema.fieldIndex("stt")
+  private val HistFields = FHist.schemaType.size
 
-  private lazy val chunkEncoder = ExpressionEncoder(ChunkSchema)
+  /** encodes a native histogram, the one column kept in `UnsafeRow` layout */
+  private lazy val histEncoder =
+    ExpressionEncoder(StructType(Seq(ChunkSchema("h").copy(nullable = false))))
   // one per thread: a serializer is not thread-safe, and making one
-  // generates code (about 6 ms, ten times the encoding of 1000 rows)
-  private val rowSerializer = ThreadLocal.withInitial(() => chunkEncoder.createSerializer())
+  // generates code
+  private val histSerializer = ThreadLocal.withInitial(() => histEncoder.createSerializer())
   private val toCatalystLabels = CatalystTypeConverters.createToCatalystConverter(LabelsType)
   /** [[Engine.seriesSig]] over a row of one column, `labels` */
   private lazy val sigOfLabels: Expression = {
@@ -341,7 +384,8 @@ object SampleStore {
   private final case class Sealed(series: Seq[InternalRow], chunks: Seq[Chunk])
 
   /** one job: each of the batch's partitions sealed into one chunk, with
-    * the series in it that are not `known` */
+    * the series in it that are not `known`; the chunks' series columns are
+    * interned when they are committed */
   private def seal(batch: DataFrame, known: collection.Set[Long]): Sealed = {
     val canon = Engine.canonical(batch)
     val sg = if (canon.columns.contains("__sg")) col("__sg") else Engine.seriesSig(col("labels"))
@@ -363,12 +407,12 @@ object SampleStore {
     val parts = df.queryExecution.toRdd.mapPartitions { it =>
       val toChunk = UnsafeProjection.create(chunkCols)
       val toSeries = UnsafeProjection.create(seriesCols)
-      val w = new ChunkWriter(ChunkSchema.size, nullable)
+      val w = new ChunkWriter(nullable)
       val fresh = mutable.LongMap.empty[InternalRow]
       it.foreach { r =>
         val sg = r.getLong(0)
         if (!known0(sg) && !fresh.contains(sg)) fresh(sg) = toSeries(r).copy()
-        w.addSample(toChunk(r))
+        w.addRow(toChunk(r))
       }
       Iterator((fresh.values.toSeq, w.result()))
     }.collect()
@@ -409,62 +453,115 @@ object SampleStore {
     }
   }
 
-  /** sealed rows of one schema in `UnsafeRow` layout, packed back to back
-    * in one array; `ends(i)` is where row i ends. Also kept: the columns
-    * that were nullable in the rows' source, and whether any sample row
-    * has a native histogram or a start timestamp. */
-  private final class Chunk(val bytes: Array[Byte], val ends: Array[Int], numFields: Int,
-      val nullable: Set[String], hasH: Boolean, hasStt: Boolean) extends Serializable {
-    def rows: Int = ends.length
+  /** one batch's samples, column by column in [[ChunkSchema]]'s order:
+    *  - `sg`: the series column, shared by every chunk of the store with
+    *    the same series in the same order;
+    *  - `ts`: one timestamp when every row has it, else one per row;
+    *  - `vs`: the values;
+    *  - `stale`: the rows that are staleness markers, null when none is;
+    *  - `stt`: the start timestamps, null when every one is 0;
+    *  - `hRows`: the rows that carry a native histogram, ascending, whose
+    *    structs lie back to back in `hBytes` in `UnsafeRow` layout, the
+    *    k-th ending at `hEnds(k)`;
+    *  - `nulls`: for `t`, `v` or `stale`, the rows where it is null, when
+    *    the source column was nullable and held a null.
+    * Also kept: the columns that were nullable in the rows' source. */
+  private final class Chunk(val sg: Array[Long], ts: Array[Long], vs: Array[Double],
+      stale: java.util.BitSet, stt: Array[Long], hRows: Array[Int], hBytes: Array[Byte],
+      hEnds: Array[Int], nulls: Map[Int, java.util.BitSet], val nullable: Set[String])
+      extends Serializable {
+    def rows: Int = sg.length
 
     def has(column: String): Boolean = column match {
-      case "h" => hasH
-      case "stt" => hasStt
+      case "h" => hRows.nonEmpty
+      case "stt" => stt != null
     }
 
-    /** the rows through one reused `UnsafeRow` */
+    /** the bytes of every column but the series column */
+    def bytes: Long = 8L * (ts.length + vs.length) + hBytes.length + 4L * (hRows.length +
+      hEnds.length) + (if (stale == null) 0 else stale.size / 8) +
+      (if (stt == null) 0 else 8L * stt.length) + nulls.valuesIterator.map(_.size / 8).sum
+
+    def withSeries(shared: Array[Long]): Chunk =
+      if (shared eq sg) this
+      else new Chunk(shared, ts, vs, stale, stt, hRows, hBytes, hEnds, nulls, nullable)
+
+    /** the rows as [[ChunkSchema]] `UnsafeRow`s, through one reused row */
     def iterator: Iterator[InternalRow] = new Iterator[InternalRow] {
-      private val row = new UnsafeRow(numFields)
+      private val w = new UnsafeRowWriter(ChunkSchema.size)
+      private val hist = new UnsafeRow(HistFields)
       private var i = 0
-      def hasNext: Boolean = i < ends.length
+      private var k = 0
+      private def isNull(f: Int) = nulls.nonEmpty && nulls.get(f).exists(_.get(i))
+      def hasNext: Boolean = i < sg.length
       def next(): InternalRow = {
-        val start = if (i == 0) 0 else ends(i - 1)
-        row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + start, ends(i) - start)
+        w.reset()
+        w.zeroOutNullBytes()
+        w.write(0, sg(i))
+        if (isNull(T)) w.setNullAt(T) else w.write(T, if (ts.length == 1) ts(0) else ts(i))
+        if (isNull(V)) w.setNullAt(V) else w.write(V, vs(i))
+        if (isNull(Stale)) w.setNullAt(Stale) else w.write(Stale, stale != null && stale.get(i))
+        if (k < hRows.length && hRows(k) == i) {
+          val start = if (k == 0) 0 else hEnds(k - 1)
+          hist.pointTo(hBytes, Platform.BYTE_ARRAY_OFFSET + start, hEnds(k) - start)
+          w.write(H, hist)
+          k += 1
+        } else w.setNullAt(H)
+        w.write(Stt, if (stt == null) 0L else stt(i))
         i += 1
-        row
+        w.getRow
       }
     }
   }
 
-  private final class ChunkWriter(numFields: Int, nullable: Set[String]) {
-    private var buf = new Array[Byte](1 << 12)
+  /** builds one [[Chunk]] row by row */
+  private final class ChunkWriter(nullable: Set[String]) {
     private var n = 0
-    private val ends = Array.newBuilder[Int]
-    private var hasH = false
+    private val sg = new mutable.ArrayBuilder.ofLong
+    private val ts = new mutable.ArrayBuilder.ofLong
+    private val vs = new mutable.ArrayBuilder.ofDouble
+    private val stale = new java.util.BitSet
+    private val stt = new mutable.ArrayBuilder.ofLong
     private var hasStt = false
+    private val hRows = new mutable.ArrayBuilder.ofInt
+    private var hBytes = Array.emptyByteArray
+    private var hLen = 0
+    private val hEnds = new mutable.ArrayBuilder.ofInt
+    private val nulls = mutable.HashMap.empty[Int, java.util.BitSet]
 
-    def add(r: UnsafeRow): Unit = {
-      val len = r.getSizeInBytes
-      if (n + len > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, n + len))
-      Platform.copyMemory(r.getBaseObject, r.getBaseOffset, buf, Platform.BYTE_ARRAY_OFFSET + n, len)
-      n += len
-      ends += n
+    /** a row; `h` is null for a float sample */
+    def add(series: Long, t: Long, v: Double, isStale: Boolean, h: UnsafeRow, st: Long): Unit = {
+      sg += series; ts += t; vs += v; stt += st
+      if (isStale) stale.set(n)
+      hasStt ||= st != 0L
+      if (h != null) {
+        val len = h.getSizeInBytes
+        if (hLen + len > hBytes.length)
+          hBytes = java.util.Arrays.copyOf(hBytes, math.max(hBytes.length * 2, hLen + len))
+        Platform.copyMemory(h.getBaseObject, h.getBaseOffset, hBytes,
+          Platform.BYTE_ARRAY_OFFSET + hLen, len)
+        hLen += len
+        hRows += n
+        hEnds += hLen
+      }
+      n += 1
     }
 
-    /** a row in [[ChunkSchema]] */
-    def addSample(r: UnsafeRow): Unit = {
-      // the canonical form of an absent start timestamp is 0
-      if (r.isNullAt(Stt)) r.setLong(Stt, 0L)
-      add(r)
-      hasH ||= !r.isNullAt(H)
-      hasStt ||= r.getLong(Stt) != 0L
+    /** a row in [[ChunkSchema]] layout; the canonical form of an absent
+      * start timestamp is 0 */
+    def addRow(r: UnsafeRow): Unit = {
+      for (f <- T to Stale if r.isNullAt(f)) nulls.getOrElseUpdate(f, new java.util.BitSet).set(n)
+      add(r.getLong(0), r.getLong(T), r.getDouble(V), r.getBoolean(Stale),
+        if (r.isNullAt(H)) null else r.getStruct(H, HistFields),
+        if (r.isNullAt(Stt)) 0L else r.getLong(Stt))
     }
 
     /** the chunk, or nothing when no row was added */
-    def result(): Option[Chunk] = {
-      val e = ends.result()
-      if (e.isEmpty) None
-      else Some(new Chunk(java.util.Arrays.copyOf(buf, n), e, numFields, nullable, hasH, hasStt))
+    def result(): Option[Chunk] = if (n == 0) None else {
+      val t = ts.result()
+      Some(new Chunk(sg.result(), if (t.forall(_ == t(0))) Array(t(0)) else t, vs.result(),
+        if (stale.isEmpty) null else stale, if (hasStt) stt.result() else null, hRows.result(),
+        java.util.Arrays.copyOf(hBytes, hLen), hEnds.result(), nulls.toMap, nullable))
     }
   }
 

@@ -217,11 +217,72 @@ class SampleStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       recomputed)
   }
 
-  test("a sealed float sample takes at most 64 bytes") {
+  test("a float sample of a repeated series takes at most 10 bytes, of a new series at most 20") {
     val store = emptyStore
-    store.appendRows(rows.take(300))
-    store.append(frame(rows.drop(300)))
-    assert(store.chunkBytes.toDouble / rows.size <= 64.0, store.chunkBytes)
+    val series = (0 until 500).map(i => Map("__name__" -> "w", "i" -> i.toString))
+    def batch(k: Int) = series.map(l => Row(l, k * 15000L, k * 0.5, false, null, 0L))
+    store.appendRows(batch(0))
+    val first = store.chunkBytes
+    assert(first.toDouble / series.size <= 20.0, first)
+    // later batches of the same series in the same order, through both paths
+    (1 until 40).foreach(k =>
+      if (k % 4 == 0) store.append(frame(batch(k))) else store.appendRows(batch(k)))
+    assert((store.chunkBytes - first).toDouble / (39 * series.size) <= 10.0, store.chunkBytes)
+    assert(store.samples.count() == 40 * series.size)
+  }
+
+  private val nh1 = FHist(0, 0.0, 0.0, 4.0, 10.0, Seq(0, 1), Seq(1.0, 3.0), Nil, Nil, Nil, 0)
+  private val nh2 = FHist(3, 0.001, 1.0, 7.0, -2.5, Seq(-2, 4), Seq(2.0, 1.0), Seq(1), Seq(3.0),
+    Nil, FHist.HintGauge)
+  private val staleNaN = java.lang.Double.longBitsToDouble(0x7ff0000000000002L)
+
+  /** batch b: twelve rows over five series, floats, stale markers, start
+    * timestamps and native histograms, all at one timestamp when `sameT` */
+  private def mixedBatch(b: Int, sameT: Boolean): Seq[Row] = (0 until 12).map { j =>
+    val labels = Map("__name__" -> "mix", "s" -> (j % 5).toString)
+    val t = b * 60000L + (if (sameT) 0L else j)
+    j % 4 match {
+      case 0 => Row(labels, t, j * 1.5, false, null, 0L)
+      case 1 => Row(labels, t, staleNaN, true, null, 0L)
+      case 2 => Row(labels, t, -j.toDouble, false, null, t - 5000L)
+      case _ => Row(labels, t, 0.0, false, FHist.toRow(if (j == 3) nh1 else nh2),
+        if (j == 11) t - 1L else 0L)
+    }
+  }
+
+  test("appendRows and append(DataFrame) give back exactly the rows appended") {
+    val nullableV = org.apache.spark.sql.types.StructType(Engine.samplesSchema.map(f =>
+      if (f.name == "v") f.copy(nullable = true) else f))
+    val store = emptyStore
+    val appended = (0 until 6).flatMap { b =>
+      val batch = mixedBatch(b, sameT = b % 2 == 0)
+      b % 3 match {
+        case 0 => store.appendRows(batch); batch
+        case 1 => store.append(frame(batch)); batch
+        case _ =>
+          // a nullable source column, with a null in it
+          val withNull = batch :+ Row(Map("__name__" -> "mix", "s" -> "n"), b * 60000L, null,
+            false, null, 0L)
+          store.append(spark.createDataFrame(spark.sparkContext.parallelize(withNull, 2), nullableV))
+          withNull
+      }
+    }
+    // a batch stored twice shares its series column and still reads back twice
+    store.appendRows(mixedBatch(0, sameT = true))
+    val expect = appended ++ mixedBatch(0, sameT = true)
+    def key(r: Row) = (r.getMap[String, String](0).toSeq.sorted.toString, r.getLong(1),
+      r.getBoolean(3), r.getLong(5), String.valueOf(r.get(2)), r.isNullAt(4))
+    val got = store.samples.select("labels", "t", "v", "stale", "h", "stt").collect().toSeq
+    assert(got.sortBy(key) == expect.sortBy(key))
+    assert(store.samples.schema("v").nullable)
+    assert(got.filter(_.getBoolean(3)).forall(_.getDouble(2).isNaN))
+    assert(got.filter(!_.isNullAt(4)).map(r => FHist.fromRow(r.getStruct(4))).toSet == Set(nh1, nh2))
+  }
+
+  test("SampleStore.scala has one chunk class") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/web/SampleStore.scala")), "UTF-8")
+    assert("""class\s+\w*Chunk\b""".r.findAllIn(src).size == 1)
   }
 
   test("a reader between appends never sees fewer rows than were committed before it began") {

@@ -1078,6 +1078,46 @@ class ServingSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("query_exemplars matches, filters and groups the stored exemplars with no Spark job") {
+    val store = emptyStore()
+    store.appendExemplars((1 to 6).map(i =>
+      Row(Map("__name__" -> (if (i == 6) "other" else "m"), "i" -> (i % 2).toString),
+        Row(Map("trace_id" -> s"t$i"), i.toDouble, i * 1000L))))
+    val api = new HttpApi(spark, store, 0, () => 100000L)
+    api.start()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def query(sel: String, start: Int, end: Int) = get(api.boundPort,
+        s"/api/v1/query_exemplars?query=${java.net.URLEncoder.encode(sel, "UTF-8")}" +
+          s"&start=$start&end=$end")
+      val (c1, b1) = query("""m{i=~"0|1"}""", 2, 5)
+      assert(c1 == 200, b1)
+      // two series, each with the exemplars inside [2 s, 5 s], by time
+      assert(b1.indexOf("\"i\":\"0\"") < b1.indexOf("\"i\":\"1\""), b1)
+      assert("t\\d".r.findAllIn(b1).toSeq == Seq("t2", "t4", "t3", "t5"), b1)
+      val (c2, b2) = query("""{i="0"}""", 0, 100)
+      assert(c2 == 200 && "t\\d".r.findAllIn(b2).toSeq == Seq("t2", "t4", "t6"), b2)
+      val (c3, b3) = query("""m{i="2"}""", 0, 100)
+      assert(c3 == 200 && b3.contains("\"data\":[]"), b3)
+      // the listener bus delivers in order: once this job's start is seen,
+      // every earlier one has been
+      spark.sparkContext.setJobDescription("marker")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 10000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.toArray.toSeq == Seq("marker"))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      api.stop()
+    }
+  }
+
   test("bounded exemplar storage: appends past max_exemplars evict oldest") {
     import org.apache.spark.sql.Row
     val store = emptyStore()
