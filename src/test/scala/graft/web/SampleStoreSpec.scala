@@ -217,7 +217,7 @@ class SampleStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       recomputed)
   }
 
-  test("a float sample of a repeated series takes at most 10 bytes, of a new series at most 20") {
+  test("a sealed float sample takes at most 10 B, 20 B if new") {
     val store = emptyStore
     val series = (0 until 500).map(i => Map("__name__" -> "w", "i" -> i.toString))
     def batch(k: Int) = series.map(l => Row(l, k * 15000L, k * 0.5, false, null, 0L))
