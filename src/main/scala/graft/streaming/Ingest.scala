@@ -2,14 +2,16 @@ package graft.streaming
 
 import graft.promql.{Engine, FHist}
 import graft.web.RemoteWrite.Sample
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Streaming ingest path (SURVEY §2.1 / M6): exposition text stream →
   * relabel pipeline → watermarked append to the time-partitioned samples
-  * store, plus staleness-marker synthesis when a series disappears
-  * (ref: scrape/scrape.go:1575 staleness append; model/value/value.go:28).
+  * store; classic→NHCB conversion and block retention. Staleness markers
+  * are written where the server appends: `ScrapeManager.staleDiff` for a
+  * series gone from a scrape and `Rules.step` for rule output (ref:
+  * scrape/scrape.go:1575 staleness append; model/value/value.go:28).
   *
   * 100 TB notes:
   *  - the sink partitions by a 2h time bucket (mirroring the reference's
@@ -17,11 +19,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    every scan;
   *  - the watermark IS the out-of-order window (tsdb/db.go:192
   *    OutOfOrderTimeWindow) — late rows beyond it are dropped exactly like
-  *    the reference's OOO cutoff;
-  *  - staleness state is per-series keyed state (flatMapGroupsWithState),
-  *    sharded by series hash — write parallelism is partition parallelism,
-  *    the same lock-striping role as the reference's stripeSeries
-  *    (tsdb/head.go:2253).
+  *    the reference's OOO cutoff.
   */
 object Ingest {
 
@@ -53,39 +51,6 @@ object Ingest {
       .partitionBy("block")
       .outputMode(OutputMode.Append)
       .start()
-
-  final case class SeriesEvent(sig: String, labels: Map[String, String], t: Long, v: Double)
-  final case class SeriesState(lastSeenMs: Long, labels: Map[String, String])
-  final case class StaleOut(labels: Map[String, String], t: Long, v: Double, stale: Boolean)
-
-  /** Synthesize staleness markers: when a series key stops appearing for
-    * `staleAfterMs`, emit one marker row `staleAfter` past its last sample
-    * (the reference appends StaleNaN when a target/series vanishes from a
-    * scrape). Keyed per-series state with a processing-time timeout. */
-  def withStaleness(samples: DataFrame, staleAfterMs: Long): Dataset[StaleOut] = {
-    val spark = samples.sparkSession
-    import spark.implicits._
-    val keyed = samples
-      .select(to_json(map_from_entries(Engine.sortedLabels(col("labels")))).as("sig"),
-        col("labels"), col("t"), col("v"))
-      .as[SeriesEvent]
-      .groupByKey(_.sig)
-    keyed.flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-      (_: String, events: Iterator[SeriesEvent], state: GroupState[SeriesState]) => {
-        if (state.hasTimedOut) {
-          val s = state.get
-          state.remove()
-          Iterator(StaleOut(s.labels, s.lastSeenMs + staleAfterMs, Double.NaN, stale = true))
-        } else {
-          val evs = events.toSeq
-          val latest = evs.maxBy(_.t)
-          state.update(SeriesState(latest.t, latest.labels))
-          state.setTimeoutDuration(staleAfterMs)
-          evs.iterator.map(e => StaleOut(e.labels, e.t, e.v, stale = false))
-        }
-      })
-  }
 
   /** Convert classic-histogram series (`x_bucket{le=…}`/`x_count`/`x_sum`)
     * into native custom-bounds histograms `x` (NHCB), keeping the classic

@@ -181,8 +181,8 @@ final class PromServer(
             .map[() => String](tp => () => "Bearer " + tp.token())
             .orElse(e.googleIam.map(new graft.web.GoogleIam.TokenProvider(_))
               .map(tp => () => tp.header()))
-        // sigv4: the driver resolves the credential chain once per
-        // forward() call; executors sign each batch body (ref
+        // sigv4: the credential chain is resolved once per forward()
+        // call, and each batch body is signed (ref
         // storage/remote/client.go:199)
         val signerProvider = e.sigv4.map { s4 =>
           val sup = PromServer.sigv4CredsSupplier(s4)
@@ -309,7 +309,6 @@ final class PromServer(
     * the group's other rules (ref: rules/group.go Eval). A failed send to
     * remote write or the notifier leaves the appended rows and the state. */
   def evalRulesOnce(tsMs: Long): Unit = synchronized {
-    import scala.jdk.CollectionConverters._
     val external = configOpt.map(_.externalLabels).getOrElse(Map.empty)
     ruleGroups.foreach { g =>
       val g0 = System.nanoTime()
@@ -329,9 +328,8 @@ final class PromServer(
               // drop/retry on their own clock and never stall rule evaluation
               forwarders.foreach { case (rules, f) =>
                 try {
-                  val kept = rows.flatMap(r => Relabel.applyToMap(
-                    r.getMap[String, String](0).toMap, rules).map(l => Row.fromSeq(l +: r.toSeq.tail)))
-                  f.forward(spark.createDataFrame(kept.asJava, Engine.samplesSchema))
+                  f.forward(rows.flatMap(r => Relabel.applyToMap(
+                    r.getMap[String, String](0).toMap, rules).map(l => Row.fromSeq(l +: r.toSeq.tail))))
                 } catch { case e: Exception =>
                   System.err.println(s"[remote-write] forward failed: ${e.getMessage}") }
               }
@@ -357,7 +355,7 @@ final class PromServer(
   }
 
   /** one synchronous scrape pass (agent and server modes share the path);
-    * appended samples also ship to every remote-write endpoint */
+    * remote write forwards recording-rule output only, not these samples */
   def scrapeOnce(): Long = {
     val n = scrapers.map(_.scrapeOnce()).sum
     if (scrapers.nonEmpty) api.scrapeTargets = scrapers.flatMap(_.currentTargets())

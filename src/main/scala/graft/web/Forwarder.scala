@@ -1,38 +1,18 @@
 package graft.web
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
-/** Remote-write FORWARDING: ship a samples frame to a downstream PRW 1.0
-  * receiver (ref: storage/remote/queue_manager.go — the sending half of
-  * remote storage).
-  *
-  * Spark-shaped sharding: `foreachPartition` makes every executor its own
-  * send queue (the reference's shards ↔ partitions), batching `maxBatch`
-  * samples per request with bounded retry/backoff. Repartitioning by series
-  * hash upstream gives per-shard series affinity exactly like the
-  * reference's shard assignment; at 100 TB the edge scales with executors,
-  * not with the driver. Float samples only (encodeV1 carries no histogram
-  * payload) — histogram rows are filtered out.
-  *
-  * queue_config mapping (ref config.go:1612 QueueConfig):
-  * `max_samples_per_send` → maxBatch; `min_backoff`/`max_backoff` → the
-  * retry backoff ramp; `retry_on_http_429` → whether 429 is recoverable
-  * (ref client.go:322 — default NOT retried, like the reference);
-  * `sample_age_limit` → a predicate dropping too-old rows before send
-  * (ref queue_manager.go isSampleOld filtering); `max_shards` → a cap on
-  * send partitions (shards ↔ partitions here). `capacity`, `min_shards`
-  * and `batch_send_deadline` are queue-manager pacing knobs with no
-  * foreachBatch analog — parsed and validated, intentionally inert. */
 /** retryable HTTP status (5xx or 429); `retryAfterMs` carries the server's
-  * Retry-After hint (capped at 10 s so a hostile header can't wedge a task) */
+  * Retry-After hint (capped at 10 s so a hostile header can't wedge a send) */
 private final class RetryableStatus(status: Int, val retryAfterMs: Long)
   extends RuntimeException(s"HTTP $status")
 
 object RemoteWriteForwarder {
-  /** per-request signer evaluated on EXECUTORS (the signature covers the
-    * per-batch body and a fresh timestamp, so it cannot be a fixed header) */
-  trait Signer extends Serializable {
+  /** per-request signer (the signature covers the per-batch body and a
+    * fresh timestamp, so it cannot be a fixed header) */
+  trait Signer {
     def headers(body: Array[Byte], contentType: String): Map[String, String]
   }
 
@@ -40,7 +20,7 @@ object RemoteWriteForwarder {
     * storage/remote/client.go:199 NewSigV4RoundTripper). Credentials are a
     * RESOLVED triple — the driver runs the static/profile/STS-AssumeRole
     * chain once per forward() call (tokens outlive a batch by construction,
-    * same contract as the azuread provider) and executors only sign. */
+    * same contract as the azuread provider), and each batch is signed. */
   final case class SigV4Signer(creds: graft.streaming.AwsSd.Creds,
       region: String, host: String, path: String,
       service: String = "aps") extends Signer {
@@ -56,6 +36,24 @@ object RemoteWriteForwarder {
   }
 }
 
+/** Remote-write FORWARDING: ship samples the driver holds to a downstream
+  * PRW receiver (ref: storage/remote/queue_manager.go — the sending half of
+  * remote storage, which sends from the process that appended).
+  *
+  * The rows are cut into batches of `maxBatch` samples, sent from the
+  * driver with at most `maxShards` requests in flight (the reference's
+  * shards), each with bounded retry/backoff. PRW 1.0 carries floats only
+  * (encodeV1 has no histogram payload), so histogram rows are left out.
+  *
+  * queue_config mapping (ref config.go:1612 QueueConfig):
+  * `max_samples_per_send` → maxBatch; `min_backoff`/`max_backoff` → the
+  * retry backoff ramp; `retry_on_http_429` → whether 429 is recoverable
+  * (ref client.go:322 — default NOT retried, like the reference);
+  * `sample_age_limit` → a predicate dropping too-old rows before send
+  * (ref queue_manager.go isSampleOld filtering); `max_shards` → the cap on
+  * requests in flight (default 50, as in the reference). `capacity`,
+  * `min_shards` and `batch_send_deadline` are queue-manager pacing knobs
+  * with no analog here — parsed and validated, intentionally inert. */
 final class RemoteWriteForwarder(
     endpoint: String,
     maxBatch: Int = 5000,
@@ -64,21 +62,20 @@ final class RemoteWriteForwarder(
     protoVersion: Int = 1,
     // remote-write-only dynamic auth (azuread / google_iam bearer tokens);
     // wins over the client config's oauth2 / rendered header. Auth is
-    // resolved ONCE per forward() call on the driver — tokens outlive a
-    // batch by construction (providers refresh inside their 5-minute
-    // expiry window), so executors see a plain string, never a provider
+    // resolved ONCE per forward() call — tokens outlive a batch by
+    // construction (providers refresh inside their 5-minute expiry window)
     authProvider: Option[() => String] = None,
-    // per-request body signer (sigv4): built ONCE per forward() call on
-    // the driver (resolving the credential chain), applied per batch on
-    // executors. Mutually exclusive with the auth shapes above (checker).
+    // per-request body signer (sigv4): built ONCE per forward() call
+    // (resolving the credential chain), applied per batch. Mutually
+    // exclusive with the auth shapes above (checker).
     signerProvider: Option[() => RemoteWriteForwarder.Signer] = None,
     // queue_config knobs — see class scaladoc for the mapping
     maxBackoffMs: Long = 5000L,
     retryOn429: Boolean = false,
     sampleAgeLimitMs: Long = 0L,
-    maxShards: Int = 0,
+    maxShards: Int = 50,
     // remote_timeout (ref config.go DefaultRemoteWriteConfig 30s): a
-    // wedged sink fails the request instead of hanging the send task
+    // wedged sink fails the request instead of hanging the send
     remoteTimeoutMs: Long = 30000L,
     // send_native_histograms (ref config.go RemoteWriteConfig — upstream
     // default FALSE; Config passes the parsed value, direct constructor
@@ -86,130 +83,107 @@ final class RemoteWriteForwarder(
     sendNativeHistograms: Boolean = true,
     // metadata_config.send: PRW 2.0 carries metadata INLINE on each
     // TimeSeries (type/help/unit refs into the symbol table), so the
-    // supplier — family-cardinality, evaluated once per forward() on the
-    // driver — rides the batch encode; the 1.0 separate-RPC metadata path
+    // supplier — family-cardinality, evaluated once per forward() — rides
+    // the batch encode; the 1.0 separate-RPC metadata path
     // is not implemented (documented divergence)
     metadataProvider: Option[() => RemoteWrite.Meta] = None,
     // the remote_write HTTP client config (ref config.go:221
     // DefaultRemoteWriteHTTPClientConfig: redirects followed, HTTP/2 OFF).
-    // Executors build their per-partition client from this serializable
-    // value; its custom headers go first and the PROTOCOL headers last, so
-    // those always win a same-name collision (the reference rejects
-    // reserved names at config load — see Config — and this ordering
-    // is the runtime backstop)
+    // Its custom headers go first and the PROTOCOL headers last, so those
+    // always win a same-name collision (the reference rejects reserved
+    // names at config load — see Config — and this ordering is the
+    // runtime backstop)
     clientCfg: graft.streaming.Config.HttpClientCfg =
       graft.streaming.Config.HttpClientCfg(enableHttp2 = false),
-    nowMs: () => Long = () => System.currentTimeMillis()) extends Serializable {
+    nowMs: () => Long = () => System.currentTimeMillis()) {
 
-  // driver-side Authorization source (never shipped to executors)
-  @transient private lazy val authorization = OutboundHttp.authorization(clientCfg)
+  private lazy val client = OutboundHttp.client(clientCfg)
+  private lazy val authorization = OutboundHttp.authorization(clientCfg)
 
-  /** forward samples; v2 endpoints also carry NATIVE HISTOGRAMS (PRW 1.0
-    * send stays float-only — encodeV1 has no histogram payload). Returns
-    * the count shipped. */
-  def forward(samples: DataFrame): Long = {
-    val url = endpoint
-    val mb = maxBatch; val mr = maxRetries; val bo = backoffMs
-    val timeoutMs = remoteTimeoutMs
-    val maxBo = math.max(maxBackoffMs, backoffMs)
-    val retry429 = retryOn429
+  /** forward rows in [[graft.promql.Engine.samplesSchema]]'s column order
+    * (later columns are not read), staleness markers left out; v2
+    * endpoints also carry NATIVE HISTOGRAMS (PRW 1.0 send stays
+    * float-only). Returns the count shipped; a batch that still fails after
+    * its retries throws from here. */
+  def forward(rows: Iterable[Row]): Long = {
     val v2 = protoVersion >= 2
+    val withHist = v2 && sendNativeHistograms
+    // sample_age_limit: rows older than the limit are dropped before the
+    // send, never retried into a dead sink (ref queue_manager.go
+    // sample_age_limit filtering, #13002)
+    val minT = if (sampleAgeLimitMs > 0) nowMs() - sampleAgeLimitMs else Long.MinValue
+    val samples = rows.iterator
+      .filter(r => !r.isNullAt(3) && !r.getBoolean(3) && r.getLong(1) >= minT &&
+        (withHist || r.isNullAt(4)))
+      .map(r => RemoteWrite.Sample(r.getMap[String, String](0).toMap, r.getLong(1),
+        r.getDouble(2), h = Option(r.getStruct(4)).map(graft.promql.FHist.fromRow)))
+      .grouped(maxBatch).toVector
     val auth = authProvider.map(p => p()).orElse(authorization())
     val signer = signerProvider.map(p => p())
     val meta: RemoteWrite.Meta =
       if (v2) metadataProvider.map(p => p()).getOrElse(Map.empty) else Map.empty
-    val shipped = samples.sparkSession.sparkContext.longAccumulator("rw_forwarded")
-    val base0 = samples.filter(!col("stale"))
-    // sample_age_limit: rows older than the limit are dropped before the
-    // send, never retried into a dead sink (ref queue_manager.go
-    // sample_age_limit filtering, #13002)
-    val base =
-      if (sampleAgeLimitMs > 0) base0.filter(col("t") >= lit(nowMs() - sampleAgeLimitMs))
-      else base0
-    val projected0 =
-      if (v2 && sendNativeHistograms && samples.columns.contains("h"))
-        base.select(col("labels"), col("t"), col("v"), col("h"))
-      else
-        base.filter(if (samples.columns.contains("h")) col("h").isNull else lit(true))
-          .select(col("labels"), col("t"), col("v"), lit(null).cast("string").as("h"))
-    // max_shards: shards ↔ partitions — coalesce (no shuffle) caps the
-    // concurrent senders hammering one endpoint exactly like the
-    // reference's shard ceiling
-    val projected =
-      if (maxShards > 0 && projected0.rdd.getNumPartitions > maxShards)
-        projected0.coalesce(maxShards)
-      else projected0
-    val cc = clientCfg
-    projected
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val client = OutboundHttp.client(cc)
-        def send(batch: Seq[RemoteWrite.Sample]): Unit = {
-          if (batch.isEmpty) return
-          val body =
-            if (v2) RemoteWrite.encodeV2(batch, meta) else RemoteWrite.encodeV1(batch)
-          val contentType =
-            if (v2) "application/x-protobuf;proto=io.prometheus.write.v2.Request"
-            else "application/x-protobuf"
-          var attempt = 0
-          var done = false
-          while (!done && attempt <= mr) {
-            try {
-              // sigv4: signature over THIS body at THIS instant (host and
-              // content-type join the signed set)
-              val rb = OutboundHttp.decorate(
-                java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-                  .timeout(java.time.Duration.ofMillis(timeoutMs)),
-                cc.headers, auth,
-                signer.fold(Map.empty[String, String])(_.headers(body, contentType)))
-              // protocol headers after the decoration: setHeader wins
-              val resp = client.send(
-                rb.setHeader("Content-Encoding", "snappy")
-                  .setHeader("Content-Type", contentType)
-                  .setHeader("X-Prometheus-Remote-Write-Version", if (v2) "2.0.0" else "0.1.0")
-                  .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body))
-                  .build(),
-                java.net.http.HttpResponse.BodyHandlers.discarding())
-              // 2xx done; ONLY 5xx (and 429 when retry_on_http_429 is set,
-              // honoring Retry-After) is recoverable — 3xx/4xx drop the
-              // batch like the reference's unrecoverable errors (ref:
-              // storage/remote/client.go:322)
-              val sc = resp.statusCode()
-              if (sc / 100 == 2 || !(sc / 100 == 5 || (sc == 429 && retry429)))
-                done = true
-              else {
-                val retryAfterMs = resp.headers().firstValue("Retry-After")
-                  .map[Long](v => try math.min(v.trim.toLong, 10L) * 1000L
-                    catch { case _: NumberFormatException => 0L })
-                  .orElse(0L)
-                throw new RetryableStatus(sc, retryAfterMs)
-              }
-            } catch {
-              case e: Exception =>
-                attempt += 1
-                if (attempt > mr) throw new RuntimeException(
-                  s"remote write forward failed after $mr retries: ${e.getMessage}")
-                val hinted = e match {
-                  case rs: RetryableStatus => rs.retryAfterMs
-                  case _ => 0L
-                }
-                // min_backoff · attempt, capped at max_backoff (the
-                // reference ramps exponentially toward the same cap)
-                Thread.sleep(math.max(math.min(bo * attempt, maxBo), hinted))
-            }
+    val contentType =
+      if (v2) "application/x-protobuf;proto=io.prometheus.write.v2.Request"
+      else "application/x-protobuf"
+    val maxBo = math.max(maxBackoffMs, backoffMs)
+    def send(batch: Seq[RemoteWrite.Sample]): Unit = {
+      val body = if (v2) RemoteWrite.encodeV2(batch, meta) else RemoteWrite.encodeV1(batch)
+      var attempt = 0
+      var done = false
+      while (!done && attempt <= maxRetries) {
+        try {
+          // sigv4: signature over THIS body at THIS instant (host and
+          // content-type join the signed set)
+          val rb = OutboundHttp.decorate(
+            java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
+              .timeout(java.time.Duration.ofMillis(remoteTimeoutMs)),
+            clientCfg.headers, auth,
+            signer.fold(Map.empty[String, String])(_.headers(body, contentType)))
+          // protocol headers after the decoration: setHeader wins
+          val resp = client.send(
+            rb.setHeader("Content-Encoding", "snappy")
+              .setHeader("Content-Type", contentType)
+              .setHeader("X-Prometheus-Remote-Write-Version", if (v2) "2.0.0" else "0.1.0")
+              .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body))
+              .build(),
+            java.net.http.HttpResponse.BodyHandlers.discarding())
+          // 2xx done; ONLY 5xx (and 429 when retry_on_http_429 is set,
+          // honoring Retry-After) is recoverable — 3xx/4xx drop the
+          // batch like the reference's unrecoverable errors (ref:
+          // storage/remote/client.go:322)
+          val sc = resp.statusCode()
+          if (sc / 100 == 2 || !(sc / 100 == 5 || (sc == 429 && retryOn429)))
+            done = true
+          else {
+            val retryAfterMs = resp.headers().firstValue("Retry-After")
+              .map[Long](v => try math.min(v.trim.toLong, 10L) * 1000L
+                catch { case _: NumberFormatException => 0L })
+              .orElse(0L)
+            throw new RetryableStatus(sc, retryAfterMs)
           }
-          shipped.add(batch.size.toLong)
+        } catch {
+          case e: Exception =>
+            attempt += 1
+            if (attempt > maxRetries) throw new RuntimeException(
+              s"remote write forward failed after $maxRetries retries: ${e.getMessage}")
+            val hinted = e match {
+              case rs: RetryableStatus => rs.retryAfterMs
+              case _ => 0L
+            }
+            // min_backoff · attempt, capped at max_backoff (the
+            // reference ramps exponentially toward the same cap)
+            Thread.sleep(math.max(math.min(backoffMs * attempt, maxBo), hinted))
         }
-        val buf = scala.collection.mutable.ArrayBuffer[RemoteWrite.Sample]()
-        rows.foreach { r =>
-          val h =
-            if (!v2 || r.isNullAt(3)) None
-            else Some(graft.promql.FHist.fromRow(r.getStruct(3)))
-          buf += RemoteWrite.Sample(r.getMap[String, String](0).toMap,
-            r.getLong(1), r.getDouble(2), h = h)
-          if (buf.size >= mb) { send(buf.toSeq); buf.clear() }
-        }
-        send(buf.toSeq)
       }
-    shipped.value
+    }
+    val shards = math.min(samples.size, maxShards)
+    if (shards <= 1) samples.foreach(send)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(shards)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try Await.result(Future.traverse(samples)(b => Future(send(b))), Duration.Inf)
+      finally pool.shutdownNow()
+    }
+    samples.iterator.map(_.size.toLong).sum
   }
 }

@@ -7,8 +7,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression,
-  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -35,14 +34,15 @@ import scala.jdk.CollectionConverters._
   * array, and a float sample of such a batch costs its 8-byte value. Every
   * ingest path (scrape, remote write, OTLP, rule output and staleness
   * markers) holds its rows on the driver, and [[appendRows]] writes their
-  * columns without a Spark job, each label set interned on the driver. A
-  * DataFrame ([[append]]) is evaluated by one job at append time, whose
-  * tasks build the same columns and return the series the dictionary
-  * lacks, so a failure throws from `append` and leaves the store as it was,
-  * and no later read re-runs the batch's plan. A batch's new series and its
-  * chunks are committed in one swap, so no read sees a chunk whose series
-  * is missing. Exemplars are kept beside the samples, on the driver, in
-  * per-series rings ([[appendExemplars]]).
+  * columns without a Spark job, each label set interned on the driver. Every
+  * write goes through one chunk writer: a DataFrame ([[append]]) is
+  * collected once and written like driver rows, so a failure throws from
+  * `append` and leaves the store as it was, and no later read re-runs the
+  * batch's plan; [[cleanTombstones]] writes chunks again without their
+  * deleted rows. A batch's new series and its chunk are committed in one
+  * swap, so no read sees a chunk whose series is missing. Exemplars are kept
+  * beside the samples, on the driver, in per-series rings
+  * ([[appendExemplars]]).
   *
   * [[samples]] is the constructor's frame ∪ ONE scan over a snapshot of the
   * chunk vector joined to the series dictionary by broadcast, with
@@ -65,7 +65,7 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   final case class Tombstone(matchers: List[LabelMatcher], minT: Long, maxT: Long)
 
   /** what a read sees: the constructor's frame (unless it is provably
-    * empty, and until [[cleanTombstones]] seals it), the series dictionary,
+    * empty, and until [[cleanTombstones]] writes it), the series dictionary,
     * the sealed chunks in append order, and the tombstones */
   private case class State(head: Option[DataFrame], series: Series, chunks: Vector[Chunk],
       tombs: List[Tombstone])
@@ -106,14 +106,14 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   private val sigs = new ConcurrentHashMap[AnyRef, java.lang.Long]()
 
   /** the chunk scan joined to the series: the canonical columns, `__sg`
-    * and, over a block-sink base, `metric`. A column is nullable if it was
-    * in any chunk's source; `h`/`stt` stay marked store-absent while
+    * and, over a block-sink base, `metric`. A column is nullable if any
+    * chunk holds a null in it; `h`/`stt` stay marked store-absent while
     * neither the constructor's frame nor any chunk has one (the union below
     * keeps its first child's metadata, so the head drops the mark once a
     * chunk brings the column) */
   private def scan(s: State, absent: Set[String]): DataFrame = {
-    val schema = StructType(ChunkSchema.fields.map { f =>
-      f.copy(nullable = f.nullable || s.chunks.exists(_.nullable(f.name)),
+    val schema = StructType(ChunkSchema.fields.zipWithIndex.map { case (f, i) =>
+      f.copy(nullable = f.nullable || s.chunks.exists(_.nulls.contains(i)),
         metadata = if (absent(f.name)) Engine.storeAbsent else Metadata.empty)
     })
     GraftBridge.internalCreateDataFrame(spark, new ChunkRDD(spark.sparkContext, s.chunks), schema)
@@ -143,7 +143,7 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
 
   /** the number of series in the dictionary: every series appended since
     * the store was made (the constructor's frame is not counted until
-    * [[cleanTombstones]] seals it) */
+    * [[cleanTombstones]] writes it) */
   def numSeries: Int = state.series.rows.size
 
   /** bytes the sealed chunks hold, a series column shared by several
@@ -161,37 +161,36 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   private def interned(c: Chunk): Chunk =
     c.withSeries(seriesColumns.getOrElseUpdate(immutable.ArraySeq.unsafeWrapArray(c.sg), c.sg))
 
-  private def commit(batch: Sealed): Unit =
-    if (batch.chunks.nonEmpty) synchronized {
-      state = state.copy(series = state.series ++ batch.series,
-        chunks = state.chunks ++ batch.chunks.map(interned))
-    }
+  private def commit(batch: Batch): Unit =
+    batch.chunk.foreach(c => synchronized {
+      state = state.copy(series = state.series ++ batch.series, chunks = state.chunks :+ interned(c))
+    })
 
-  /** append a batch in canonical schema: one job evaluates it and seals its
-    * rows; if that job fails, the exception propagates and the store is
-    * unchanged. No ingest path of the server calls it (they all append
-    * driver-side rows through [[appendRows]]); it serves frames built
+  /** append a batch in canonical schema: collected once and written like
+    * [[appendRows]]; if the collect fails, the exception propagates and the
+    * store is unchanged. No ingest path of the server calls it (they all
+    * append driver-side rows through [[appendRows]]); it serves frames built
     * elsewhere, such as a replayed trace. */
-  def append(batch: DataFrame): Unit = commit(seal(batch, state.series.rows.keySet))
+  def append(batch: DataFrame): Unit = commit(written(collectCanonical(batch)))
 
   /** append driver-side rows in [[Engine.samplesSchema]] (e.g. a decoded
     * remote-write request): their columns written on the driver, no Spark
     * job. A label set seen before costs one hash-map lookup. */
-  def appendRows(rows: Iterable[Row]): Unit = {
-    val toHist = histSerializer.get()
+  def appendRows(rows: Iterable[Row]): Unit = commit(written(rows))
+
+  /** rows in [[Engine.samplesSchema]] order as one chunk, with the series
+    * the dictionary lacks */
+  private def written(rows: Iterable[Row]): Batch = {
     val known = state.series.rows
     val fresh = mutable.LongMap.empty[InternalRow]
-    val w = new ChunkWriter(Set.empty)
+    val w = new ChunkWriter
     rows.foreach { r =>
       val labels = r.getAs[AnyRef](0)
       val sg: Long = sigs.computeIfAbsent(labels, l => seriesRow(l).getLong(0))
       if (!known.contains(sg) && !fresh.contains(sg)) fresh(sg) = seriesRow(labels)
-      val h = if (r.isNullAt(H)) null
-        else toHist(Row(r.get(H))).getStruct(0, HistFields).asInstanceOf[UnsafeRow]
-      w.add(sg, r.getLong(T), r.getDouble(V), r.getBoolean(Stale), h,
-        if (r.isNullAt(Stt)) 0L else r.getLong(Stt))
+      w.add(sg, r)
     }
-    commit(Sealed(fresh.values.toSeq, w.result().toSeq))
+    Batch(fresh.values, w.result())
   }
 
   /** /api/v1/admin/tsdb/delete_series (ref: web/api/v1/api.go:498) */
@@ -306,13 +305,42 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
       .map { case (series, rows) => labels(series) -> rows.map(_.getStruct(1)) }
   }
 
-  /** /api/v1/admin/tsdb/clean_tombstones — materialize deletions: the
-    * tombstone-applied view is sealed into chunks that replace the store's
-    * contents */
+  /** /api/v1/admin/tsdb/clean_tombstones — materialize deletions on the
+    * driver: each chunk with a deleted row is written again without it (a
+    * chunk left empty is dropped), and the constructor's frame, if any, is
+    * collected and written as one chunk without its deleted rows. A
+    * tombstone's matchers are tested once per series. */
   def cleanTombstones(): Unit = synchronized {
-    val all = seal(samples, state.series.rows.keySet)
+    val s = state
+    // per label set: the tombstones whose matchers it matches
+    def hitting(labels: collection.Map[String, String]) =
+      s.tombs.filter(_.matchers.forall(m => m.matches(labels.getOrElse(m.name, ""))))
+    // a null `t` is deleted too: the read-time filter's `!hit` is null there
+    def deleted(hits: List[Tombstone], r: Row) = hits.exists(ts =>
+      r.isNullAt(T) || r.getLong(T) >= ts.minT && r.getLong(T) <= ts.maxT)
+    val toLabels = CatalystTypeConverters.createToScalaConverter(LabelsType)
+    val seriesHits = s.series.rows.iterator.map { case (sg, r) =>
+      sg -> hitting(toLabels(r.getMap(1)).asInstanceOf[collection.Map[String, String]])
+    }.filter(_._2.nonEmpty).toMap
+    val toRow = CatalystTypeConverters.createToScalaConverter(ChunkSchema)
+    val chunks = s.chunks.flatMap { c =>
+      if (!c.sg.exists(seriesHits.contains)) Some(c)
+      else {
+        val w = new ChunkWriter
+        c.iterator.map(toRow(_).asInstanceOf[Row])
+          .filterNot(r => seriesHits.get(r.getLong(0)).exists(deleted(_, r)))
+          .foreach(r => w.add(r.getLong(0), r))
+        w.result()
+      }
+    }
+    val head = s.head.map { h =>
+      val hits = mutable.HashMap.empty[AnyRef, List[Tombstone]]
+      written(collectCanonical(h).filterNot(r => deleted(hits.getOrElseUpdate(r.getAs[AnyRef](0),
+        hitting(r.getMap[String, String](0))), r)))
+    }
     seriesColumns.clear()
-    state = State(None, state.series ++ all.series, all.chunks.map(interned).toVector, Nil)
+    state = State(None, s.series ++ head.toList.flatMap(_.series),
+      (chunks ++ head.flatMap(_.chunk)).map(interned), Nil)
   }
 
   /** /api/v1/admin/tsdb/snapshot — persist the current (tombstone-applied)
@@ -380,43 +408,18 @@ object SampleStore {
   }
 
   /** what an append commits: the series the dictionary lacked, and the
-    * chunks */
-  private final case class Sealed(series: Seq[InternalRow], chunks: Seq[Chunk])
+    * chunk, none when there were no rows */
+  private final case class Batch(series: Iterable[InternalRow], chunk: Option[Chunk])
 
-  /** one job: each of the batch's partitions sealed into one chunk, with
-    * the series in it that are not `known`; the chunks' series columns are
-    * interned when they are committed */
-  private def seal(batch: DataFrame, known: collection.Set[Long]): Sealed = {
-    val canon = Engine.canonical(batch)
-    val sg = if (canon.columns.contains("__sg")) col("__sg") else Engine.seriesSig(col("labels"))
-    // a column already of the canonical type (nullability aside) has the
-    // canonical row layout; a cast could not narrow its nullability anyway
-    val df = canon.select(sg.as("__sg") +: (ChunkSchema.fields.tail :+ SeriesSchema("labels"))
-      .toIndexedSeq.map { f =>
-        if (canon.schema(f.name).dataType.catalogString == f.dataType.catalogString) col(f.name)
-        else col(f.name).cast(f.dataType)
-      }: _*)
-    val nullable = df.schema.filter(_.nullable).map(_.name).toSet
-    val schema = df.schema
-    val labels = schema.size - 1
-    val chunkCols = ChunkSchema.fields.indices
-      .map(i => BoundReference(i, schema(i).dataType, schema(i).nullable))
-    val seriesCols = Seq(BoundReference(0, LongType, nullable = false),
-      BoundReference(labels, schema(labels).dataType, nullable = false))
-    val known0 = immutable.HashSet.from(known)
-    val parts = df.queryExecution.toRdd.mapPartitions { it =>
-      val toChunk = UnsafeProjection.create(chunkCols)
-      val toSeries = UnsafeProjection.create(seriesCols)
-      val w = new ChunkWriter(nullable)
-      val fresh = mutable.LongMap.empty[InternalRow]
-      it.foreach { r =>
-        val sg = r.getLong(0)
-        if (!known0(sg) && !fresh.contains(sg)) fresh(sg) = toSeries(r).copy()
-        w.addRow(toChunk(r))
-      }
-      Iterator((fresh.values.toSeq, w.result()))
-    }.collect()
-    Sealed(parts.flatMap(_._1).toSeq, parts.flatMap(_._2).toSeq)
+  /** a frame's rows in [[Engine.samplesSchema]] order, by one collect */
+  private def collectCanonical(df: DataFrame): Array[Row] = {
+    val canon = Engine.canonical(df)
+    // a column already of the canonical type (nullability aside) is read as
+    // it is; a cast could not narrow its nullability anyway
+    canon.select(Engine.samplesSchema.fields.toIndexedSeq.map { f =>
+      if (canon.schema(f.name).dataType.catalogString == f.dataType.catalogString) col(f.name)
+      else col(f.name).cast(f.dataType)
+    }: _*).collect()
   }
 
   /** an exemplar's admission order: (t, v, exemplar-label hash), doubles
@@ -464,11 +467,10 @@ object SampleStore {
     *    structs lie back to back in `hBytes` in `UnsafeRow` layout, the
     *    k-th ending at `hEnds(k)`;
     *  - `nulls`: for `t`, `v` or `stale`, the rows where it is null, when
-    *    the source column was nullable and held a null.
-    * Also kept: the columns that were nullable in the rows' source. */
+    *    it holds a null. */
   private final class Chunk(val sg: Array[Long], ts: Array[Long], vs: Array[Double],
       stale: java.util.BitSet, stt: Array[Long], hRows: Array[Int], hBytes: Array[Byte],
-      hEnds: Array[Int], nulls: Map[Int, java.util.BitSet], val nullable: Set[String])
+      hEnds: Array[Int], val nulls: Map[Int, java.util.BitSet])
       extends Serializable {
     def rows: Int = sg.length
 
@@ -484,7 +486,7 @@ object SampleStore {
 
     def withSeries(shared: Array[Long]): Chunk =
       if (shared eq sg) this
-      else new Chunk(shared, ts, vs, stale, stt, hRows, hBytes, hEnds, nulls, nullable)
+      else new Chunk(shared, ts, vs, stale, stt, hRows, hBytes, hEnds, nulls)
 
     /** the rows as [[ChunkSchema]] `UnsafeRow`s, through one reused row */
     def iterator: Iterator[InternalRow] = new Iterator[InternalRow] {
@@ -514,8 +516,10 @@ object SampleStore {
     }
   }
 
-  /** builds one [[Chunk]] row by row */
-  private final class ChunkWriter(nullable: Set[String]) {
+  /** builds one [[Chunk]] row by row: every write of the store goes
+    * through one */
+  private final class ChunkWriter {
+    private val toHist = histSerializer.get()
     private var n = 0
     private val sg = new mutable.ArrayBuilder.ofLong
     private val ts = new mutable.ArrayBuilder.ofLong
@@ -529,12 +533,21 @@ object SampleStore {
     private val hEnds = new mutable.ArrayBuilder.ofInt
     private val nulls = mutable.HashMap.empty[Int, java.util.BitSet]
 
-    /** a row; `h` is null for a float sample */
-    def add(series: Long, t: Long, v: Double, isStale: Boolean, h: UnsafeRow, st: Long): Unit = {
-      sg += series; ts += t; vs += v; stt += st
-      if (isStale) stale.set(n)
+    /** a row whose `t` to `stt` are in [[Engine.samplesSchema]]'s places
+      * (the first column is not read), of the series `series`. A null `t`,
+      * `v` or `stale` is kept as a null; the canonical form of an absent
+      * start timestamp is 0. */
+    def add(series: Long, r: Row): Unit = {
+      def isNull(f: Int) =
+        r.isNullAt(f) && { nulls.getOrElseUpdate(f, new java.util.BitSet).set(n); true }
+      val st = if (r.isNullAt(Stt)) 0L else r.getLong(Stt)
+      sg += series; stt += st
+      ts += (if (isNull(T)) 0L else r.getLong(T))
+      vs += (if (isNull(V)) 0.0 else r.getDouble(V))
+      if (!isNull(Stale) && r.getBoolean(Stale)) stale.set(n)
       hasStt ||= st != 0L
-      if (h != null) {
+      if (!r.isNullAt(H)) {
+        val h = toHist(Row(r.get(H))).getStruct(0, HistFields).asInstanceOf[UnsafeRow]
         val len = h.getSizeInBytes
         if (hLen + len > hBytes.length)
           hBytes = java.util.Arrays.copyOf(hBytes, math.max(hBytes.length * 2, hLen + len))
@@ -547,21 +560,12 @@ object SampleStore {
       n += 1
     }
 
-    /** a row in [[ChunkSchema]] layout; the canonical form of an absent
-      * start timestamp is 0 */
-    def addRow(r: UnsafeRow): Unit = {
-      for (f <- T to Stale if r.isNullAt(f)) nulls.getOrElseUpdate(f, new java.util.BitSet).set(n)
-      add(r.getLong(0), r.getLong(T), r.getDouble(V), r.getBoolean(Stale),
-        if (r.isNullAt(H)) null else r.getStruct(H, HistFields),
-        if (r.isNullAt(Stt)) 0L else r.getLong(Stt))
-    }
-
     /** the chunk, or nothing when no row was added */
     def result(): Option[Chunk] = if (n == 0) None else {
       val t = ts.result()
       Some(new Chunk(sg.result(), if (t.forall(_ == t(0))) Array(t(0)) else t, vs.result(),
         if (stale.isEmpty) null else stale, if (hasStt) stt.result() else null, hRows.result(),
-        java.util.Arrays.copyOf(hBytes, hLen), hEnds.result(), nulls.toMap, nullable))
+        java.util.Arrays.copyOf(hBytes, hLen), hEnds.result(), nulls.toMap))
     }
   }
 

@@ -26,6 +26,12 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(entries >= 942, entries)
   }
 
+  test("the status store keeps one job, stage, task and SQL execution") {
+    val c = GraftSession.conf()
+    Seq("spark.ui.retainedJobs", "spark.ui.retainedStages", "spark.ui.retainedTasks",
+      "spark.sql.ui.retainedExecutions").foreach(k => assert(c.get(k) == "1", k))
+  }
+
   test("a deployment's master string keeps every other setting") {
     val c = GraftSession.conf("spark://host:7077")
     assert(c.get("spark.master") == "spark://host:7077")

@@ -610,7 +610,7 @@ class PromServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       // then query it THROUGH the downstream server
       new graft.web.RemoteWriteForwarder(
         s"http://127.0.0.1:${down.boundPort}/api/v1/write")
-        .forward(agent.store.samples)
+        .forward(agent.store.samples.collect())
       val (cq, bq) = get(down.boundPort, "/api/v1/query?query=m&time=10")
       assert(cq == 200 && bq.contains("\"2.5\""), bq)
     } finally { agent.stop(); down.stop() }

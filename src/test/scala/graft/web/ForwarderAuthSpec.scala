@@ -61,7 +61,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
         signerProvider = Some(() => RemoteWriteForwarder.SigV4Signer(
           creds, "us-east-1", s"127.0.0.1:${srv.getAddress.getPort}",
           "/api/v1/write")))
-      assert(fwd.forward(sampleDf(10, 1)) == 10L)
+      assert(fwd.forward(sampleDf(10, 1).collect()) == 10L)
       assert(captured.size() == 1)
       val req = captured.get(0)
       val auth = req.headers("authorization")
@@ -109,8 +109,8 @@ class ForwarderAuthSpec extends AnyFunSuite {
         s"http://127.0.0.1:${srv.getAddress.getPort}/w",
         signerProvider = Some(() => RemoteWriteForwarder.SigV4Signer(
           cp.creds(), "eu-west-1", s"127.0.0.1:${srv.getAddress.getPort}", "/w")))
-      fwd.forward(sampleDf(4, 1))
-      fwd.forward(sampleDf(4, 1))
+      fwd.forward(sampleDf(4, 1).collect())
+      fwd.forward(sampleDf(4, 1).collect())
       assert(captured.size() == 2)
       captured.forEach { r =>
         assert(r.headers("x-amz-security-token") == "STSTOK")
@@ -127,7 +127,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
     try {
       val fwd = new RemoteWriteForwarder(
         s"http://127.0.0.1:${srv1.getAddress.getPort}/w", maxRetries = 3)
-      fwd.forward(sampleDf(5, 1))
+      fwd.forward(sampleDf(5, 1).collect())
       assert(cap1.size() == 1, s"expected no retry, got ${cap1.size()} requests")
     } finally srv1.stop(0)
     // retry_on_http_429: 429 then 200 → two requests, batch shipped
@@ -136,7 +136,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
       val fwd = new RemoteWriteForwarder(
         s"http://127.0.0.1:${srv2.getAddress.getPort}/w",
         maxRetries = 3, backoffMs = 1L, retryOn429 = true)
-      assert(fwd.forward(sampleDf(5, 1)) == 5L)
+      assert(fwd.forward(sampleDf(5, 1).collect()) == 5L)
       assert(cap2.size() == 2)
     } finally srv2.stop(0)
   }
@@ -166,7 +166,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
       // default transport (ref DefaultRemoteWriteHTTPClientConfig):
       // follow_redirects=true → the 307 replays the POST at /w2
       val fwd = new RemoteWriteForwarder(url, maxRetries = 1, backoffMs = 1L)
-      assert(fwd.forward(sampleDf(4, 1)) == 4L)
+      assert(fwd.forward(sampleDf(4, 1).collect()) == 4L)
       assert(captured.size() == 1)
       assert(RemoteWrite.decode(captured.get(0).body, isV2 = false).size == 4)
       captured.clear()
@@ -175,7 +175,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
       val fwd2 = new RemoteWriteForwarder(url, maxRetries = 3, backoffMs = 1L,
         clientCfg = graft.streaming.Config.HttpClientCfg(
           followRedirects = false, enableHttp2 = false))
-      fwd2.forward(sampleDf(4, 1))
+      fwd2.forward(sampleDf(4, 1).collect())
       assert(captured.size() == 0)
     } finally s.stop(0)
   }
@@ -187,7 +187,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
         s"http://127.0.0.1:${srv.getAddress.getPort}/w", protoVersion = 2,
         metadataProvider = Some(() => Map(
           "fwd" -> (("counter", "seconds", "the help text")))))
-      assert(fwd.forward(sampleDf(3, 1)) == 3L)
+      assert(fwd.forward(sampleDf(3, 1).collect()) == 3L)
       val (samples, meta) = RemoteWrite.decodeFull(captured.get(0).body, isV2 = true)
       assert(samples.size == 3)
       assert(meta == Map("fwd" -> (("counter", "seconds", "the help text"))), meta.toString)
@@ -195,7 +195,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
       // metadata_config.send=false (no provider): no metadata on the wire
       val fwd2 = new RemoteWriteForwarder(
         s"http://127.0.0.1:${srv.getAddress.getPort}/w", protoVersion = 2)
-      fwd2.forward(sampleDf(3, 1))
+      fwd2.forward(sampleDf(3, 1).collect())
       assert(RemoteWrite.decodeFull(captured.get(0).body, isV2 = true)._2.isEmpty)
     } finally srv.stop(0)
   }
@@ -252,7 +252,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
       val fwd = new RemoteWriteForwarder(
         s"http://127.0.0.1:${srv.getAddress.getPort}/w",
         sampleAgeLimitMs = 1000L, nowMs = () => now)
-      assert(fwd.forward(old.union(fresh)) == 10L)
+      assert(fwd.forward(old.union(fresh).collect()) == 10L)
       val total = {
         var n = 0
         captured.forEach(r => n += RemoteWrite.decode(r.body, isV2 = false).size)
@@ -264,7 +264,7 @@ class ForwarderAuthSpec extends AnyFunSuite {
       // request (shards ↔ partitions)
       val fwd2 = new RemoteWriteForwarder(
         s"http://127.0.0.1:${srv.getAddress.getPort}/w", maxShards = 1)
-      assert(fwd2.forward(sampleDf(40, 8)) == 40L)
+      assert(fwd2.forward(sampleDf(40, 8).collect()) == 40L)
       assert(captured.size() == 1, s"expected 1 coalesced request, got ${captured.size()}")
     } finally srv.stop(0)
   }

@@ -193,7 +193,7 @@ class HttpApiSpec extends AnyFunSuite {
         Engine.samplesSchema)
       val n = new RemoteWriteForwarder(
         s"http://127.0.0.1:${api.boundPort}/api/v1/write", protoVersion = 2)
-        .forward(src)
+        .forward(src.collect())
       assert(n == 2L) // histogram row INCLUDED (v1 would drop it)
       val (c, b) = get(api.boundPort, "/api/v1/query?query=fwd_h&time=3")
       assert(c == 200 && b.contains("\"histogram\""), b)
@@ -225,7 +225,7 @@ class HttpApiSpec extends AnyFunSuite {
             // a reserved name slipping past config validation must NOT
             // shadow the protocol value at runtime
             "Content-Type" -> Seq("text/evil"))))
-        .forward(src)
+        .forward(src.collect())
       assert(n == 1L)
       val h = seen.get()
       assert(h("authorization") == "Basic dXNlcjpwdw==")
@@ -538,7 +538,7 @@ class HttpApiSpec extends AnyFunSuite {
         Engine.samplesSchema)
       val n = new RemoteWriteForwarder(
         s"http://127.0.0.1:${server.getAddress.getPort}/write",
-        retryOn429 = true).forward(src)
+        retryOn429 = true).forward(src.collect())
       assert(n == 1L) // shipped after the retry, not dropped
       assert(posts.get() == 2)
       // the Retry-After hint (1s) outranks the base backoff (100ms)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.functions.{col, element_at, lit, raise_error}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The sealed-chunk store's invariants: a fixed plan size under appends,
   * answers identical to one DataFrame of the same rows (block-sink-shaped
@@ -89,21 +90,74 @@ class SampleStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("deleteSeries, cleanTombstones, further appends: same as the surviving rows") {
     val (r1, r2) = rows.splitAt(rows.size / 2)
-    val store = new SampleStore(spark, frame(r1.take(100)))
-    store.appendRows(r1.drop(100))
+    // series with a label the others lack
+    def zoned(zone: String, ks: Range) = ks.map(k => Row(Map("__name__" -> "m", "job" -> "b",
+      "inst" -> "1", "zone" -> zone), k * 15000L, k.toDouble, false, null, 0L))
+    val z = zoned("z1", 0 until 80) ++ zoned("z2", 0 until 80)
+    val store = new SampleStore(spark, frame(r1.take(130) ++ z))
+    store.appendRows(r1.drop(130) ++ r2.take(200))
     val gone = (r: Row) => {
       val l = r.getMap[String, String](0)
-      l("job") == "a" && l("inst") == "1" && r.getLong(1) >= 300000L && r.getLong(1) <= 600000L
+      val t = r.getLong(1)
+      l("job") == "a" && l("inst") == "1" && t >= 300000L && t <= 600000L ||
+        l("job") != "a" && l("inst") != "0" && l("inst") != "2" &&
+          l.getOrElse("zone", "") != "z1" && t >= 600000L && t <= 900000L
     }
     store.deleteSeries(List(LabelMatcher("job", MatchOp.Eq, "a"),
       LabelMatcher("inst", MatchOp.Re, "1|7")), 300000L, 600000L)
-    sameAnswers(store, r1.filterNot(gone))
+    store.deleteSeries(List(LabelMatcher("job", MatchOp.Neq, "a"),
+      LabelMatcher("inst", MatchOp.NotRe, "0|2"), LabelMatcher("zone", MatchOp.Neq, "z1")),
+      600000L, 900000L)
+    val kept = (r1 ++ z ++ r2.take(200)).filterNot(gone)
+    sameAnswers(store, kept)
     store.cleanTombstones()
-    sameAnswers(store, r1.filterNot(gone))
-    store.appendRows(r2.take(50))
-    store.append(frame(r2.drop(50)))
-    // the cleaned tombstone no longer hides rows appended after the clean
-    sameAnswers(store, r1.filterNot(gone) ++ r2)
+    sameAnswers(store, kept)
+    store.appendRows(r2.slice(200, 220) ++ zoned("z3", 40 until 80))
+    store.append(frame(r2.drop(220)))
+    // the cleaned tombstones no longer hide rows appended after the clean
+    sameAnswers(store, kept ++ r2.drop(200) ++ zoned("z3", 40 until 80))
+  }
+
+  test("cleanTombstones and remote-write forwarding start no Spark job") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    val store = new SampleStore(spark,
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Engine.samplesSchema))
+    store.appendRows(rows)
+    store.deleteSeries(List(LabelMatcher("inst", MatchOp.Eq, "2")), 0L, 450000L)
+    val received = new java.util.concurrent.atomic.AtomicInteger()
+    val receiver = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    receiver.createContext("/", (ex: HttpExchange) => {
+      received.addAndGet(RemoteWrite.decode(ex.getRequestBody.readAllBytes(), isV2 = false).size)
+      ex.sendResponseHeaders(200, -1)
+      ex.close()
+    })
+    receiver.start()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      store.cleanTombstones()
+      val fwd = new RemoteWriteForwarder(s"http://127.0.0.1:${receiver.getAddress.getPort}/w",
+        maxBatch = 100, maxShards = 2)
+      assert(fwd.forward(rows) == rows.size)
+      assert(received.get == rows.size)
+      // the listener bus delivers in order: once this job's start is seen,
+      // every earlier one has been
+      spark.sparkContext.setJobDescription("marker")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 10000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.asScala.toSeq == Seq("marker"))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      receiver.stop(0)
+    }
+    sameAnswers(store, rows.filterNot(r =>
+      r.getMap[String, String](0)("inst") == "2" && r.getLong(1) <= 450000L))
   }
 
   test("snapshot writes exactly the tombstone-applied rows") {
@@ -277,6 +331,18 @@ class SampleStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.samples.schema("v").nullable)
     assert(got.filter(_.getBoolean(3)).forall(_.getDouble(2).isNaN))
     assert(got.filter(!_.isNullAt(4)).map(r => FHist.fromRow(r.getStruct(4))).toSet == Set(nh1, nh2))
+  }
+
+  test("store writes and remote-write forwarding have no Spark-job twin") {
+    def source(f: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"src/main/scala/graft/$f")), "UTF-8")
+    val store = source("web/SampleStore.scala")
+    Seq("def seal", "mapPartitions", "toRdd", "UnsafeProjection")
+      .foreach(w => assert(!store.contains(w), w))
+    val forwarder = source("web/Forwarder.scala")
+    Seq("foreachPartition", "DataFrame").foreach(w => assert(!forwarder.contains(w), w))
+    assert(!forwarder.toLowerCase.contains("accumulator"))
+    assert("""forward\([^)]*createDataFrame""".r.findFirstIn(source("streaming/Server.scala")).isEmpty)
   }
 
   test("SampleStore.scala has one chunk class") {

@@ -1792,7 +1792,7 @@ class ServingSpec extends AnyFunSuite {
         spark.sparkContext.parallelize(rows, 3), Engine.samplesSchema)
       val fwd = new RemoteWriteForwarder(
         s"http://127.0.0.1:${api.boundPort}/api/v1/write", maxBatch = 16)
-      assert(fwd.forward(df) == 50L)
+      assert(fwd.forward(df.collect()) == 50L)
       assert(downstream.samples.count() == 50L)
       val (c1, b1) = get(api.boundPort, "/api/v1/query?query=count(fwd)&time=10")
       assert(c1 == 200 && b1.contains("\"5\""))
